@@ -1,8 +1,10 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
+import graft.functions.F
 import graft.text.TextAnalysis
 
 /** Deduplication operators for training-data pipelines over a documents
@@ -43,27 +45,58 @@ object Dedup {
       math.abs(math.pow(1.0 / b, 1.0 / r) - threshold)
     }
 
-  /** MinHash + LSH near-dup pairs: signatures banded into `bands`
-    * buckets (bands <= 0 -> auto-picked from the threshold S-curve);
-    * same-bucket docs become candidates; candidates verified by
-    * estimated Jaccard (matching minhash fraction) >= threshold.
-    * Returns (id_a, id_b, jaccard_est) with id_a < id_b.
+  /** Candidate pairs of the LSH dedup family, from ONE capped bucket
+    * aggregation — never a bucket self-join. `keyed` holds a member
+    * column `m`; every other column is the bucket key. Each bucket's
+    * sorted member list expands to its i<j pairs in place, returned as
+    * (a, b) with a before b in sort order. Members are bare ids or
+    * structs whose first field is `id` (sort_array orders structs by
+    * their first field, so the expansion stays on id order).
     *
-    * Degenerate mega-buckets (empty/boilerplate docs hashing to one
-    * bucket) would make the self-join quadratic: buckets larger than
-    * `maxBucket` are EXCLUDED from candidate generation — their members
-    * are near-identical boilerplate that exact dedup already collapses.
-    * This is a documented recall cap, not a silent one: pairs inside a
-    * dropped bucket are only missed if they share no other bucket.
+    * Degenerate mega-buckets (empty/boilerplate docs, coincident
+    * embeddings) would make the expansion quadratic: buckets larger than
+    * `maxBucket` generate NO pairs. The capped collect bounds the
+    * aggregation buffer at maxBucket + 1 members per bucket at any skew,
+    * so such a bucket arrives as exactly maxBucket + 1 members and the
+    * size filter drops it — same semantics as an uncapped collect +
+    * filter. This is a documented recall cap, not a silent one: the
+    * members are near-identical boilerplate that exact dedup already
+    * collapses, and a pair inside a dropped bucket is only missed if
+    * all its other shared buckets are over the cap too.
     *
     * maxBucket bounds the aggregation BUFFER, not the pair OUTPUT: a
-    * bucket just under the cap still expands ~maxBucket^2/2 candidate
-    * pairs inside one task. The default (1e5 -> ~5e9 pairs worst case)
+    * bucket just under the cap still expands ~maxBucket^2/2 pairs inside
+    * one task. The callers' default (1e5 -> ~5e9 pairs worst case)
     * favors recall; pipelines that need a bounded per-task pair count
     * should pass a smaller cap (1000 -> <=0.5M pairs per bucket).
-    * Ids must be unique — duplicate ids in the input would pair with
-    * themselves inside a shared bucket (guarded by an id_a != id_b
-    * filter, which also hides one real pair per duplicated id). */
+    *
+    * Ids must be unique: duplicate ids sort adjacent and would pair with
+    * themselves inside a shared bucket. Pairs with equal ids are
+    * dropped, which also hides one real pair per duplicated id. A pair
+    * sharing several buckets comes out once per bucket; callers
+    * deduplicate where it is cheapest. */
+  private[graft] def bucketPairs(keyed: DataFrame, maxBucket: Int): DataFrame = {
+    require(maxBucket >= 2, s"maxBucket must be >= 2 (got $maxBucket)")
+    val key = keyed.columns.filter(_ != "m").map(col)
+    val id: Column => Column = keyed.schema("m").dataType match {
+      case _: StructType => _.getField("id")
+      case _ => identity
+    }
+    keyed.groupBy(key.toIndexedSeq: _*)
+      .agg(sort_array(F.cappedCollectList(col("m"), maxBucket)).as("ms"))
+      .filter(size(col("ms")) >= 2 && size(col("ms")) <= maxBucket)
+      .select(col("ms"), posexplode(col("ms")).as(Seq("i", "a")))
+      .select(col("a"),
+        explode(slice(col("ms"), col("i") + lit(2), size(col("ms")))).as("b"))
+      .filter(id(col("a")) =!= id(col("b")))
+  }
+
+  /** MinHash + LSH near-dup pairs: signatures banded into `bands`
+    * buckets (bands <= 0 -> auto-picked from the threshold S-curve);
+    * same-bucket docs become candidates (bucketPairs over the (band,
+    * bucket) key, with its maxBucket recall cap); candidates verified by
+    * estimated Jaccard (matching minhash fraction) >= threshold.
+    * Returns (id_a, id_b, jaccard_est) with id_a < id_b. */
   def minhashLsh(df: DataFrame, threshold: Double = 0.7, numHashes: Int = 64,
       bands: Int = 0, idCol: String = "doc_id", textCol: String = "text",
       maxBucket: Int = 100000): DataFrame = {
@@ -79,42 +112,24 @@ object Dedup {
     // it is equivalence-tested against. No intermediate shingle table is
     // materialized at all.
     val sig = df.select(col(idCol).as("id"),
-        graft.functions.F.minhashSig(col(textCol), numHashes, 3).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // ONE materialization of the signature cache before the downstream
-    // plan scans it at three points (banding + the two verify joins) —
-    // concurrent first-scans would each re-hash the shingles.
-    sig.count()
+      F.minhashSig(col(textCol), numHashes, 3).as("sig"))
     val banded = sig.withColumn("band", explode(sequence(lit(0), lit(b - 1))))
       .withColumn("bucket", xxhash64(col("band"),
         slice(col("sig"), col("band") * rows + 1, lit(rows))))
-      .select("id", "band", "bucket")
-    // Candidate pairs straight from ONE (band, bucket) aggregation: the
-    // sorted member list of each bucket expands to its i<j pairs in
-    // place. Replaces the round-2 shape (hot-bucket count + collect +
-    // broadcast anti-join + two-sided self-join shuffle, ~6 fixed jobs
-    // per call) with a single shuffle; the mega-bucket cap becomes a
-    // plain size filter with identical semantics (members of a bucket
-    // larger than maxBucket generate no pairs from that bucket).
-    // cappedCollectList bounds the aggregation buffer at maxBucket + 1
-    // elements per group, so a degenerate bucket holding a large slice
-    // of the corpus never materializes an unbounded list on an executor
-    // — it arrives as exactly maxBucket + 1 ids and the size filter
-    // drops it, same semantics as an uncapped collect + filter.
-    val cand = banded.groupBy("band", "bucket")
-      .agg(sort_array(graft.functions.F.cappedCollectList(
-        col("id"), maxBucket)).as("ids"))
-      .filter(size(col("ids")) >= 2 && size(col("ids")) <= maxBucket)
-      .select(col("ids"), posexplode(col("ids")).as(Seq("i", "id_a")))
-      .select(col("id_a"),
-        explode(slice(col("ids"), col("i") + lit(2), size(col("ids")))).as("id_b"))
-      // duplicate input ids sort adjacent and would self-pair here (the
-      // old self-join's a.id < b.id excluded them); keep that contract
-      .filter(col("id_a") =!= col("id_b"))
+    // one (band, bucket) aggregation, a single shuffle; candidate ids are
+    // deduplicated before the signatures are re-attached
+    val cand = bucketPairs(
+        banded.select(col("band"), col("bucket"), col("id").as("m")), maxBucket)
+      .select(col("a").as("id_a"), col("b").as("id_b"))
       .distinct()
     val withSigs = cand
       .join(sig.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
       .join(sig.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
+    // ONE materialization of the signature cache before the plan above
+    // scans it at three points (banding + the two verify joins) —
+    // concurrent first-scans would each re-hash the shingles. Cached
+    // only now, so a bad maxBucket has already failed and left no cache.
+    sig.persist(StorageLevel.MEMORY_AND_DISK).count()
     // materialize the (small) verified pair set, then release the
     // signature cache — returning it lazily would pin the cached blocks
     // for the session (the caller has no handle to free them)
@@ -191,140 +206,64 @@ object Dedup {
            (v, i) -> IF(v > 0, shiftleft(1L, CAST(i AS INT)), 0L)),
          0L, (acc, b) -> acc | b)""")
 
-  /** SimHash near-dup pairs: fingerprints bucketed by maxHamming+1
-    * disjoint bit chunks — pigeonhole guarantees any pair within hamming
-    * distance <= maxHamming shares at least one untouched chunk, so
-    * candidate recall is 1.0 AT the requested radius. Verified with
-    * bit_count(xor) <= maxHamming.
-    *
-    * maxHamming is capped at 7 (8 chunks of >= 8 bits): beyond that the
-    * chunks get so narrow that bucket collision volume goes quadratic —
-    * larger radii need multi-probe or multi-table indexes, not narrower
-    * chunks. */
+  /** SimHash near-dup pairs: 64-bit fingerprints probed by chunk keys
+    * (simhashPairsFromFp), verified with bit_count(xor) <= maxHamming.
+    * Candidate recall is 1.0 AT the requested radius, 0 to 23. */
   def simhashPairs(df: DataFrame, maxHamming: Int = 3,
       idCol: String = "doc_id", textCol: String = "text",
       maxBucket: Int = 100000): DataFrame = {
     // codegen'd fingerprint (one tight loop per row); bit-identical to
     // simhashSql, which stays as the executable spec it is tested against
     val fp = graft.core.Mat(
-      df.select(col(idCol).as("id"),
-        graft.functions.F.simhash64(col(textCol)).as("fp")))
+      df.select(col(idCol).as("id"), F.simhash64(col(textCol)).as("fp")))
     simhashPairsFromFp(fp, maxHamming, maxBucket)
   }
 
   /** Pair generation over precomputed (id, fp) fingerprints — split out
     * so bucket recall is testable on crafted fingerprints.
     *
-    * Candidates come from ONE capped (chunk-key) aggregation — the same
-    * shape minhashLsh uses — never a chunk-key self-join: a degenerate
-    * corpus slice (empty/boilerplate docs all fingerprinting to 0L) puts
-    * millions of ids in one bucket, and a self-join would materialize
-    * all O(n^2) pairs. cappedCollectList bounds the aggregation buffer at
-    * maxBucket + 1 ids per bucket at ANY skew; buckets over the cap
-    * generate no pairs (documented recall cap — their members are
-    * near-identical boilerplate that exact dedup already collapses; a
-    * pair inside a dropped bucket is only missed if all its other
-    * chunk buckets are also over the cap). */
+    * The 64 bits are split into c chunks (widths differ by at most one
+    * bit). By pigeonhole, a pair within hamming distance h has some
+    * chunk carrying <= floor(h/c) of the flips, so the probing below is
+    * derived from maxHamming to make candidate recall 1.0 AT the radius:
+    *  - maxHamming <= 7: maxHamming+1 chunks keyed on their exact value
+    *    (floor(h/c) = 0 — the pair shares an untouched chunk);
+    *  - maxHamming 8 to 23: maxHamming/3+1 chunks, each also probed with
+    *    every 1-bit flip of itself. Two fingerprints share a probe key
+    *    for a chunk iff their distance within it is <= 2, and
+    *    floor(h/c) <= 2 holds for c = h/3+1. Cost: 64 + c probe keys per
+    *    doc instead of c.
+    * Beyond 23 the chunks would fall under 8 bits, whose bucket
+    * populations go quadratic; larger radii need multi-table indexes.
+    *
+    * Members carry (id, fp) structs through bucketPairs, so the hamming
+    * verification needs NO re-attach join: the 16-byte payload rides the
+    * one shuffle this path has. */
   def simhashPairsFromFp(fp: DataFrame, maxHamming: Int,
       maxBucket: Int = 100000): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 7,
-      s"chunk-bucket recall guarantee needs maxHamming+1 <= 8 chunks of >= 8 bits " +
-        s"(got $maxHamming); use simhashPairsMultiProbe for larger radii")
-    require(maxBucket >= 2, s"maxBucket must be >= 2 (got $maxBucket)")
-    val c = maxHamming + 1
-    val base = 64 / c
-    val rem = 64 % c
-    val widths = Array.tabulate(c)(i => if (i < rem) base + 1 else base)
-    val shifts = widths.scanLeft(0)(_ + _).take(c)
-    val chunkDefs = array(shifts.indices.map { i =>
-      val mask = if (widths(i) == 64) -1L else (1L << widths(i)) - 1
-      struct(lit(i).as("i"), lit(shifts(i)).as("sh"), lit(mask).as("mask"))
-    }: _*)
-    val chunked = fp.withColumn("__c", explode(chunkDefs))
-      .withColumn("key", struct(col("__c.i"),
-        expr("shiftrightunsigned(fp, CAST(__c.sh AS INT))").bitwiseAND(col("__c.mask"))))
-      .select(struct(col("id"), col("fp")).as("m"), col("key"))
-    // sorted member list per bucket expands to its i<j pairs in place;
-    // members carry (id, fp) structs through the aggregation, so the
-    // hamming verification needs NO re-attach join (the 16-byte payload
-    // rides the one shuffle this path has) — sort_array orders structs
-    // by their first field, which keeps the i<j expansion on id order
-    val cand = chunked.groupBy("key")
-      .agg(sort_array(graft.functions.F.cappedCollectList(
-        col("m"), maxBucket)).as("ms"))
-      .filter(size(col("ms")) >= 2 && size(col("ms")) <= maxBucket)
-      .select(col("ms"), posexplode(col("ms")).as(Seq("i", "a")))
-      .select(col("a"),
-        explode(slice(col("ms"), col("i") + lit(2), size(col("ms")))).as("b"))
-    cand
+    require(maxHamming >= 0 && maxHamming <= 23,
+      s"maxHamming must be in 0..23 (got $maxHamming): a larger radius " +
+        "needs chunks narrower than 8 bits")
+    val flips = maxHamming > 7
+    val c = if (flips) maxHamming / 3 + 1 else maxHamming + 1
+    val widths = Array.tabulate(c)(i => 64 / c + (if (i < 64 % c) 1 else 0))
+    val shifts = widths.scanLeft(0)(_ + _)
+    // one probe per (chunk, flip); flip 0 is the exact chunk value
+    val probes = for {
+      i <- 0 until c
+      mask = if (widths(i) == 64) -1L else (1L << widths(i)) - 1
+      flip <- 0L +: (if (flips) (0 until widths(i)).map(1L << _) else Nil)
+    } yield struct(lit(i).as("i"), lit(shifts(i)).as("sh"),
+      lit(mask).as("mask"), lit(flip).as("flip"))
+    val keyed = fp.withColumn("__p", explode(array(probes: _*)))
+      .select(struct(col("id"), col("fp")).as("m"),
+        struct(col("__p.i"), expr("shiftrightunsigned(fp, __p.sh)")
+          .bitwiseAND(col("__p.mask")).bitwiseXOR(col("__p.flip"))).as("key"))
+    bucketPairs(keyed, maxBucket)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         bit_count(col("a.fp").bitwiseXOR(col("b.fp"))).as("hamming"))
-      // duplicate input ids sort adjacent and would self-pair at
-      // hamming 0 (the pre-r4 self-join's a.id < b.id excluded them)
-      .filter(col("id_a") =!= col("id_b"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
-      .select("id_a", "id_b", "hamming")
-  }
-
-  /** Multi-probe SimHash pair generation for radii the chunk pigeonhole
-    * cannot reach (maxHamming > 7 would need chunks narrower than 8
-    * bits, whose bucket collision volume goes quadratic). Instead of
-    * narrower chunks, each of `chunks` WIDE chunks is probed with every
-    * 0- and 1-bit flip of itself — symmetric probing, so two
-    * fingerprints share a probe key for a chunk iff their distance
-    * WITHIN that chunk is <= 2 (a's variant set and b's variant set
-    * intersect exactly when d(a_c, b_c) <= 2e with e = 1).
-    *
-    * Recall: hamming(a, b) <= maxHamming means some chunk carries
-    * <= floor(maxHamming/chunks) of the flips (pigeonhole), so
-    * requiring floor(maxHamming/chunks) <= 2 makes candidate recall 1.0
-    * AT the radius — chunks=4 covers radii up to 11, chunks=8 up to 23.
-    * Cost: (width+1) probe keys per chunk per doc (e.g. 68 for
-    * chunks=4), all through the same capped aggregation as the exact
-    * path, so degenerate buckets stay bounded at any skew; the wider
-    * radius also widens bucket population (a 16-bit chunk has 2^16
-    * buckets), which maxBucket caps with the documented recall trade. */
-  def simhashPairsMultiProbe(fp: DataFrame, maxHamming: Int,
-      chunks: Int = 4, maxBucket: Int = 100000): DataFrame = {
-    require(chunks >= 2 && chunks <= 16 && 64 % chunks == 0,
-      s"chunks must divide 64 (got $chunks)")
-    require(maxHamming >= 0 && maxHamming / chunks <= 2,
-      s"1-bit symmetric probing covers per-chunk distance <= 2, so " +
-        s"maxHamming/chunks must be <= 2 (got $maxHamming/$chunks = " +
-        s"${maxHamming / chunks}); raise chunks")
-    require(maxBucket >= 2, s"maxBucket must be >= 2 (got $maxBucket)")
-    val width = 64 / chunks
-    val shifts = Array.tabulate(chunks)(_ * width)
-    val mask = if (width == 64) -1L else (1L << width) - 1
-    val chunkDefs = array(shifts.indices.map { i =>
-      struct(lit(i).as("i"), lit(shifts(i)).as("sh"))
-    }: _*)
-    // flip position -1 = the exact chunk value; 0..width-1 = 1-bit flips
-    val flips = array((-1 until width).map(b => lit(b)): _*)
-    val probed = fp.withColumn("__c", explode(chunkDefs))
-      .withColumn("__v",
-        expr("shiftrightunsigned(fp, CAST(__c.sh AS INT))")
-          .bitwiseAND(lit(mask)))
-      .withColumn("__b", explode(flips))
-      .withColumn("key", struct(col("__c.i"),
-        when(col("__b") < 0, col("__v")).otherwise(
-          col("__v").bitwiseXOR(expr("shiftleft(1L, CAST(__b AS INT))")))))
-      .select(struct(col("id"), col("fp")).as("m"), col("key"))
-    val cand = probed.groupBy("key")
-      .agg(sort_array(graft.functions.F.cappedCollectList(
-        col("m"), maxBucket)).as("ms"))
-      .filter(size(col("ms")) >= 2 && size(col("ms")) <= maxBucket)
-      .select(col("ms"), posexplode(col("ms")).as(Seq("i", "a")))
-      .select(col("a"),
-        explode(slice(col("ms"), col("i") + lit(2), size(col("ms")))).as("b"))
-    cand
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        bit_count(col("a.fp").bitwiseXOR(col("b.fp"))).as("hamming"))
-      .filter(col("id_a") =!= col("id_b"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-      .select("id_a", "id_b", "hamming")
   }
 
   /** Exact n-gram Jaccard for candidate pairs from LSH (verification
@@ -351,23 +290,14 @@ object Dedup {
     * 0.95 — the single-band version's ~0.28 recall hole. Candidate
     * volume stays linear: per band, same-bucket pairs only.
     *
-    * Candidate ids come from the SAME capped (band, bucket) aggregation
-    * minhashLsh and simhashPairsFromFp use — never a bucket self-join: a
-    * degenerate corpus slice whose embeddings coincide (zero vectors from
-    * empty docs, boilerplate embeddings) puts millions of ids in one
-    * bucket across every band, and a self-join would materialize all
-    * O(n^2) pairs 6 times over. cappedCollectList bounds the buffer at
-    * maxBucket + 1 ids at ANY skew; over-cap buckets generate no pairs
-    * (documented recall cap — coincident embeddings are exact dups that
-    * exact/minhash dedup already collapses; a real near pair is only
-    * missed if ALL its shared buckets are over the cap). As with
-    * minhashLsh, the cap bounds the buffer, not the pair output — pass a
-    * smaller cap when the per-task pair count must be bounded too. */
+    * Candidate ids come from bucketPairs over the (band, bucket) key, so
+    * a degenerate slice of coincident embeddings (zero vectors from empty
+    * docs, boilerplate embeddings) is dropped by its maxBucket recall cap
+    * in every band instead of expanding O(n^2) pairs 6 times over. */
   def embeddingNearDup(df: DataFrame, threshold: Double = 0.95,
       planesPerBand: Int = 8, bands: Int = 6,
       idCol: String = "vec_id", vecCol: String = "embedding",
       maxBucket: Int = 100000): DataFrame = {
-    require(maxBucket >= 2, s"maxBucket must be >= 2 (got $maxBucket)")
     val spark = df.sparkSession
     import spark.implicits._
     val v = transform(col(vecCol), x => x.cast("double"))
@@ -408,32 +338,19 @@ object Dedup {
           }
         }
       }.toDF("id", "band", "h")
-      .select(col("id"), struct(col("band"), col("h")).as("bucket"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("id").as("m"), struct(col("band"), col("h")).as("bucket"))
     // dedup candidate IDS before re-attaching vectors: the distinct
-    // shuffles 16-byte pairs, not embedding payloads. One capped
-    // aggregation per bucket -> sorted members -> i<j expansion (the
-    // shared dedup-family candidate shape; bounded at any skew).
-    val candIds = sig.groupBy("bucket")
-      .agg(sort_array(graft.functions.F.cappedCollectList(
-        col("id"), maxBucket)).as("ids"))
-      .filter(size(col("ids")) >= 2 && size(col("ids")) <= maxBucket)
-      .select(col("ids"), posexplode(col("ids")).as(Seq("i", "id_a")))
-      .select(col("id_a"),
-        explode(slice(col("ids"), col("i") + lit(2), size(col("ids")))).as("id_b"))
-      // duplicate input ids sort adjacent and would self-pair here
-      .filter(col("id_a") =!= col("id_b"))
+    // shuffles 16-byte pairs, not embedding payloads
+    val candIds = bucketPairs(sig, maxBucket)
+      .select(col("a").as("id_a"), col("b").as("id_b"))
       .distinct()
     val cand = candIds
       .join(prep.select(col("id").as("id_a"), col("u").as("u_a")), Seq("id_a"))
       .join(prep.select(col("id").as("id_b"), col("u").as("u_b")), Seq("id_b"))
-    // materialized verified pairs, then the bucket cache is released
-    val out = graft.core.Mat(cand.withColumn("cosine",
+    graft.core.Mat(cand.withColumn("cosine",
         aggregate(zip_with(col("u_a"), col("u_b"), (x, y) => x * y),
           lit(0.0), (a, x) => a + x))
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine"))
-    sig.unpersist(false)
-    out
   }
 }

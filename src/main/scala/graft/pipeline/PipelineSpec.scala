@@ -198,9 +198,13 @@ object PipelineBuilder {
         // JDBC driver jar ships in this sandbox, so executing the
         // stage surfaces the driver's own loud error here; the option
         // mapping itself is the complete production surface.
-        val url = optStr(o, "connection").orElse(optStr(o, "url")).get
+        val url = optStr(o, "connection").orElse(optStr(o, "url"))
+          .getOrElse(throw new IllegalArgumentException(
+            "readers.jdbc: 'connection' (or 'url') is required"))
         val table = optStr(o, "table")
-          .orElse(optStr(o, "query").map(q => s"($q) pushed")).get
+          .orElse(optStr(o, "query").map(q => s"($q) pushed"))
+          .getOrElse(throw new IllegalArgumentException(
+            "readers.jdbc: 'table' (or 'query') is required"))
         val r0 = spark.read.format("jdbc")
           .option("url", url).option("dbtable", table)
         val r1 = optStr(o, "driver")
@@ -211,7 +215,9 @@ object PipelineBuilder {
             r1.option("partitionColumn", pc)
               .option("lowerBound",
                 optLong(o, "lower_bound").getOrElse(0L).toString)
-              .option("upperBound", optLong(o, "upper_bound").get.toString)
+              .option("upperBound", optLong(o, "upper_bound").getOrElse(
+                throw new IllegalArgumentException("readers.jdbc: " +
+                  "'upper_bound' is required with partition_column")).toString)
               .option("numPartitions", np.toString)
           case (None, None) => r1
           case _ => throw new IllegalArgumentException(

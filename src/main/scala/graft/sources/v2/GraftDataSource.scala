@@ -201,25 +201,24 @@ private[v2] object GraftFilterPush {
     * stat-covered column tighten the interval; null stats fail the
     * predicate, which is exact (the commit lacked the column, so no row
     * of the file satisfies a comparison on it). Columns without footer
-    * stats never prune. */
+    * stats never prune. Values stay typed literals, so key stats compare
+    * as longs (a double would round keys above 2^53). */
   def manifestPredicate(pushed: Array[Filter])
       : org.apache.spark.sql.Column = {
     def pred(f: Filter): Option[org.apache.spark.sql.Column] = f match {
       case EqualTo(a, v: Number) => statCols.get(a).map { case (lo, hi) =>
-        col(lo) <= v.doubleValue() && col(hi) >= v.doubleValue() }
+        col(lo) <= lit(v) && col(hi) >= lit(v) }
       case GreaterThan(a, v: Number) => statCols.get(a).map { case (_, hi) =>
-        col(hi) > v.doubleValue() }
+        col(hi) > lit(v) }
       case GreaterThanOrEqual(a, v: Number) => statCols.get(a).map {
-        case (_, hi) => col(hi) >= v.doubleValue() }
+        case (_, hi) => col(hi) >= lit(v) }
       case LessThan(a, v: Number) => statCols.get(a).map { case (lo, _) =>
-        col(lo) < v.doubleValue() }
+        col(lo) < lit(v) }
       case LessThanOrEqual(a, v: Number) => statCols.get(a).map {
-        case (lo, _) => col(lo) <= v.doubleValue() }
+        case (lo, _) => col(lo) <= lit(v) }
       case In(a, vs) if vs.forall(_.isInstanceOf[Number]) =>
         statCols.get(a).map { case (lo, hi) =>
-          vs.map(v => col(lo) <= v.asInstanceOf[Number].doubleValue() &&
-            col(hi) >= v.asInstanceOf[Number].doubleValue())
-            .reduce(_ || _) }
+          vs.map(v => col(lo) <= lit(v) && col(hi) >= lit(v)).reduce(_ || _) }
       case And(l, r) => (pred(l), pred(r)) match {
         case (Some(a), Some(b)) => Some(a && b)
         case (a, b) => a.orElse(b)

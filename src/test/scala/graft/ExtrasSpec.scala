@@ -140,6 +140,10 @@ class ExtrasSpec extends AnyFunSuite {
     val cp = capped.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cp.contains((1L, 2L)))
     assert(!cp.exists(p => p._1 >= 100L && p._2 >= 100L), "mega-bucket must be dropped")
+    // a cap below 2 could never emit a pair: rejected, not silently empty
+    val e = intercept[IllegalArgumentException](
+      Dedup.minhashLsh(mixed, threshold = 0.4, maxBucket = 1))
+    assert(e.getMessage.contains("maxBucket"), e.getMessage)
   }
 
   test("resolveComponents: transitive dup groups, star collapse, local==distributed") {
@@ -514,7 +518,9 @@ class ExtrasSpec extends AnyFunSuite {
     val p4 = Dedup.simhashPairsFromFp(fp, maxHamming = 4)
       .select("id_a", "id_b").collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(p4.contains(("a", "c"))) // found once the radius covers it
-    intercept[IllegalArgumentException](Dedup.simhashPairsFromFp(fp, maxHamming = 16))
+    val e = intercept[IllegalArgumentException](
+      Dedup.simhashPairsFromFp(fp, maxHamming = 24))
+    assert(e.getMessage.contains("maxHamming"), e.getMessage)
   }
 
   test("simhash degenerate mega-bucket is capped, not quadratic") {
@@ -539,6 +545,9 @@ class ExtrasSpec extends AnyFunSuite {
     val tiny = spark.range(5).select(col("id"), lit(0L).as("fp"))
     val all = Dedup.simhashPairsFromFp(tiny, maxHamming = 1, maxBucket = 100)
     assert(all.count() == 10) // C(5,2)
+    val e = intercept[IllegalArgumentException](
+      Dedup.simhashPairsFromFp(tiny, maxHamming = 1, maxBucket = 1))
+    assert(e.getMessage.contains("maxBucket"), e.getMessage)
   }
 
   test("elm flags stacked low outliers, breaks at first sub-threshold gap") {
@@ -728,6 +737,9 @@ class ExtrasSpec extends AnyFunSuite {
     val all = Dedup.embeddingNearDup(tiny, threshold = 0.999,
       idCol = "id", maxBucket = 100)
     assert(all.count() == 10) // C(5,2)
+    val e = intercept[IllegalArgumentException](Dedup.embeddingNearDup(tiny,
+      threshold = 0.999, idCol = "id", maxBucket = 1))
+    assert(e.getMessage.contains("maxBucket"), e.getMessage)
   }
 
   test("multi-probe simhash: recall 1.0 at radii 8-10 vs brute force; " +
@@ -736,13 +748,11 @@ class ExtrasSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(31)
     // background noise: random fingerprints (overwhelmingly far apart)
     val noise = (0 until 200).map(i => (i.toLong, rnd.nextLong()))
-    // planted pairs at hamming 8, 9, 10 with flips spread ADVERSARIALLY
-    // across all 4 chunks (no chunk stays exact, so the plain
-    // chunk-pigeonhole path could never find them at any chunks=4 split;
-    // every chunk carries <= 3 flips only when h=10 -> wait: spread 10 as
-    // 3/3/2/2 so the best chunk has 2 flips — exactly the 2e boundary)
+    // planted pairs at hamming 8, 9, 10 with flips spread round-robin
+    // over four 16-bit quarters (radius 10 probes 4 chunks of 16 bits:
+    // h=10 lands 3/3/2/2, so the best chunk has exactly 2 flips — the
+    // 1-bit symmetric probing boundary)
     def spread(h: Int): Long = {
-      // place flips round-robin across the 4 16-bit chunks
       var m = 0L
       for (f <- 0 until h) {
         val chunk = f % 4
@@ -751,34 +761,46 @@ class ExtrasSpec extends AnyFunSuite {
       }
       m
     }
-    val planted = Seq(8, 9, 10).zipWithIndex.flatMap { case (h, i) =>
-      val base = rnd.nextLong()
-      Seq((1000L + 2 * i, base), (1001L + 2 * i, base ^ spread(h)))
-    }
+    // radius 8 probes 3 uneven chunks (bits 0-21, 22-42, 43-63): flips
+    // 3/3/2 against the chunk edges, so only the 1-bit probe of the last
+    // chunk can find the pair
+    val uneven = Seq(0, 10, 21, 22, 32, 42, 43, 63).map(1L << _).reduce(_ | _)
+    val planted = Seq(spread(8), spread(9), spread(10), uneven)
+      .zipWithIndex.flatMap { case (d, i) =>
+        val base = rnd.nextLong()
+        Seq((1000L + 2 * i, base), (1001L + 2 * i, base ^ d))
+      }
     val fp = (noise ++ planted).toDF("id", "fp")
-    val got = Dedup.simhashPairsMultiProbe(fp, maxHamming = 10, chunks = 4)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    // brute force over the same fingerprints
-    val exp = fp.as("a").join(fp.as("b"), col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        bit_count(col("a.fp").bitwiseXOR(col("b.fp"))).as("h"))
-      .filter(col("h") <= 10)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(exp.subsetOf(got) && got == exp,
-      s"multi-probe recall: got ${got.size}, brute force ${exp.size}")
-    assert(Set((1000L, 1001L), (1002L, 1003L), (1004L, 1005L))
-      .subsetOf(got))
+    // brute force over the same fingerprints, at every radius the probing
+    // derivation changes shape: 3 uneven chunks (8), 4 chunks (10) and
+    // the widest radius, 8 chunks of 8 bits (23)
+    val got = Seq(8, 10, 23).map { radius =>
+      val pairs = Dedup.simhashPairsFromFp(fp, maxHamming = radius)
+        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      val exp = fp.as("a").join(fp.as("b"), col("a.id") < col("b.id"))
+        .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+          bit_count(col("a.fp").bitwiseXOR(col("b.fp"))).as("h"))
+        .filter(col("h") <= radius)
+        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      assert(pairs == exp,
+        s"radius $radius recall: got ${pairs.size}, brute force ${exp.size}")
+      radius -> pairs
+    }.toMap
+    val hamming8 = Set((1000L, 1001L), (1006L, 1007L))
+    assert(hamming8.subsetOf(got(8)) && !got(8).contains((1002L, 1003L)))
+    assert((hamming8 ++ Set((1002L, 1003L), (1004L, 1005L))).subsetOf(got(10)))
     // degenerate mega-bucket stays capped like the exact path
     val degenerate = spark.range(50000).select(col("id"), lit(0L).as("fp"))
-    val capped = Dedup.simhashPairsMultiProbe(
+    val capped = Dedup.simhashPairsFromFp(
       degenerate.unionByName(planted.toDF("id", "fp")),
-      maxHamming = 8, chunks = 4, maxBucket = 1000)
+      maxHamming = 8, maxBucket = 1000)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(capped == Set((1000L, 1001L)),
-      s"expected only the hamming-8 planted pair, got ${capped.size}")
-    // the radius guard: 1-bit probing cannot certify floor(h/c) > 2
-    intercept[IllegalArgumentException](
-      Dedup.simhashPairsMultiProbe(fp, maxHamming = 12, chunks = 4))
+    assert(capped == hamming8,
+      s"expected only the hamming-8 planted pairs, got ${capped.size}")
+    // the radius guard: past 23 the probed chunks fall under 8 bits
+    val e = intercept[IllegalArgumentException](
+      Dedup.simhashPairsFromFp(fp, maxHamming = 24))
+    assert(e.getMessage.contains("maxHamming"), e.getMessage)
   }
 
   test("duplicate input ids never self-pair in the dedup family") {
@@ -787,9 +809,11 @@ class ExtrasSpec extends AnyFunSuite {
     // unique-id precondition is violated; the id_a != id_b guard keeps
     // the old self-join's contract (a.id < b.id excluded them)
     val fpDup = Seq(("a", 7L), ("a", 7L), ("b", 7L)).toDF("id", "fp")
-    val sp = Dedup.simhashPairsFromFp(fpDup, maxHamming = 1)
-      .select("id_a", "id_b").as[(String, String)].collect().toSet
-    assert(sp == Set(("a", "b")), s"got $sp")
+    for (radius <- Seq(1, 8)) { // exact chunks and 1-bit probes
+      val sp = Dedup.simhashPairsFromFp(fpDup, maxHamming = radius)
+        .select("id_a", "id_b").as[(String, String)].collect().toSet
+      assert(sp == Set(("a", "b")), s"radius $radius: got $sp")
+    }
     val docsDup = Seq((1L, "alpha beta gamma delta epsilon"),
         (1L, "alpha beta gamma delta epsilon"),
         (2L, "alpha beta gamma delta epsilon"))

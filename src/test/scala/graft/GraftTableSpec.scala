@@ -629,5 +629,14 @@ class GraftTableSpec extends AnyFunSuite {
     val exp = GraftTable.read(spark, kroot)
       .filter(col("order_key") >= 3000L).orderBy("order_key").collect().toSeq
     assert(kdf.orderBy("order_key").collect().toSeq == exp)
+    // key stats compare as longs: a double would round max_key 2^53+1
+    // down to 2^53 and prune the only file holding the matching row
+    val broot = freshRoot()
+    GraftTable.commit(cloud(10).withColumn("order_key",
+      col("order_key") + ((1L << 53) - 8)), broot)
+    val big = spark.read.format("graft").load(broot)
+      .filter(col("order_key") > (1L << 53)).select("order_key")
+      .collect().map(_.getLong(0)).toSeq
+    assert(big == Seq((1L << 53) + 1), s"got $big")
   }
 }

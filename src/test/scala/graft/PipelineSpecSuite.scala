@@ -557,6 +557,18 @@ class PipelineSpecSuite extends AnyFunSuite {
          {"type":"filters.stats"}]}"""))
     assert(e1.getMessage.contains("partition_column and num_partitions"),
       s"got: ${e1.getMessage}")
+    // a missing connection, table or upper bound is named before load()
+    for ((stage, option) <- Seq(
+        """"table":"events"""" -> "'connection'",
+        """"url":"jdbc:postgresql://db/x"""" -> "'table'",
+        """"url":"jdbc:postgresql://db/x","table":"events",
+          "partition_column":"event_id","num_partitions":8""" ->
+          "'upper_bound'")) {
+      val e = intercept[IllegalArgumentException](PipelineBuilder.run(spark,
+        s"""{"pipeline":[{"type":"readers.jdbc",$stage},
+           {"type":"filters.stats"}]}"""))
+      assert(e.getMessage.contains(option), s"got: ${e.getMessage}")
+    }
     // fully-specified parallel read reaches Spark's JDBC source, which
     // fails loudly here because no driver jar ships in this sandbox
     val e2 = intercept[Throwable](PipelineBuilder.run(spark,

@@ -85,6 +85,29 @@ class PlanSpec extends AnyFunSuite {
       s"nested-loop join in flagship plan:\n$plan")
   }
 
+  test("crop -> splitter -> per-tile count: Filter, grid_cell_id Project " +
+      "and partial HashAggregate fuse into codegen stage 1; one Exchange") {
+    val docs = graft.core.Synth.docs(spark, 1000)
+    val tiles = graft.operators.Splitter(
+      graft.operators.Crop.box2d(docs, 635500, 848500, 638500, 853500),
+      1000.0, origin = Some((635000.0, 848000.0)))
+    val finalOnly = finalPlan(tiles.groupBy("tile_id").count())
+      .split("== Initial Plan ==").head
+    val stage1 = finalOnly.linesIterator.filter(_.contains("*(1) ")).toSeq
+    assert(stage1.exists(_.contains("Filter")),
+      s"crop filter outside codegen stage 1:\n$finalOnly")
+    assert(stage1.exists(l => l.contains("Project") &&
+      l.contains("grid_cell_id")),
+      s"splitter cell-id project outside codegen stage 1:\n$finalOnly")
+    assert(stage1.exists(l => l.contains("HashAggregate") &&
+      l.contains("partial_count")),
+      s"partial aggregate outside codegen stage 1:\n$finalOnly")
+    val exchanges = finalOnly.linesIterator.count(_.contains("Exchange"))
+    assert(exchanges == 1, s"expected exactly one Exchange:\n$finalOnly")
+    assert(!finalOnly.contains("spans"),
+      s"unused spans payload not pruned:\n$finalOnly")
+  }
+
   test("crop bounds over a cell-partitioned store prune partitions AND " +
       "push residual x/y filters to the scan") {
     val dir = java.nio.file.Files.createTempDirectory("planstore").toString

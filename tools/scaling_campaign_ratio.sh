@@ -2,7 +2,7 @@
 # Ratio-gated scaling campaign (2 vs 8 cores, 16M docs) on the packaged
 # final-HEAD jar.
 #
-# The absolute-gate campaign (scaling_campaign.sh, entry probe >= 620
+# An absolute-gate campaign (8-core entry probe >= 620
 # Mrows/s) certifies "host at historic full capacity" — but the host
 # has long phases where per-core speed is uniformly ~30% down while
 # cores still scale proportionally (measured: probe8/probe2 = 3.6
