@@ -215,8 +215,6 @@ object KnnJoin {
       if math.max(math.abs(dx), math.max(math.abs(dy), math.abs(dz))) == r
     } yield (dx, dy, dz)
 
-  /** Supercell (incl. one-cell halo shell) candidate row set at cell
-    * size h — what one first-binning cogroup task receives. */
   /** Density-targeted cell size from an extent row — ONE implementation
     * shared by the broadcast and distributed paths: the two must stay
     * bit-identical for the broadcast==distributed differential guarantee
@@ -237,6 +235,8 @@ object KnnJoin {
     if (h0raw.isNaN || h0raw <= 1e-12) fallback / 16 else h0raw
   }
 
+  /** Supercell (incl. one-cell halo shell) candidate row set at cell
+    * size h — what one first-binning cogroup task receives. */
   private def superRows(cand: DataFrame, h: Double, valueCol: String): DataFrame = {
     val withCells = cand.select(col("x"), col("y"), col("z"),
       col("order_key").as("cid"), col(valueCol).cast("double").as("v"),
@@ -444,7 +444,10 @@ object KnnJoin {
       * stage). Each task builds a local per-cell chain index and answers
       * every query's exact 27-cell cube, so per-query results are
       * IDENTICAL to the per-cell design. Hot supercells are salted on
-      * the candidate side with queries replicated across salt groups. */
+      * the candidate side with queries replicated across salt groups.
+      * Every query row comes out once per salt group, with its
+      * coordinates (an empty `hits` when the group holds no candidates),
+      * so the ring loop never re-joins the query side. */
     def superPartials(q: DataFrame, h: Double, hotDf: Option[DataFrame]): DataFrame = {
       val q1 = q.select(col("qid"), col("qx"), col("qy"), col("qz"),
         superPack(superC(col("ccx"), 0), superC(col("ccy"), 0),
@@ -471,72 +474,69 @@ object KnnJoin {
       qS.groupByKey(t => (t._5, t._6)).cogroup(cS.groupByKey(t => (t._1, t._7))) {
         (_, qs, cs) =>
           val cBuf = cs.toArray
-          if (cBuf.isEmpty) Iterator.empty
-          else {
-            val n = cBuf.length
-            val cxA = new Array[Double](n); val cyA = new Array[Double](n)
-            val czA = new Array[Double](n); val cidA = new Array[Long](n)
-            val cvA = new Array[Double](n)
-            // per-cell chains: head(cellKey) -> last idx, next(idx) -> prev
-            val head = new java.util.HashMap[java.lang.Long, Integer](n * 2)
-            val nxt = new Array[Int](n)
-            var j = 0
-            while (j < n) {
-              val c = cBuf(j)
-              cxA(j) = c._2; cyA(j) = c._3; czA(j) = c._4
-              cidA(j) = c._5; cvA(j) = c._6
-              val ck = packS(math.floor(c._2 / hL).toLong,
-                math.floor(c._3 / hL).toLong, math.floor(c._4 / hL).toLong)
-              val prev = head.put(ck, j)
-              nxt(j) = if (prev == null) -1 else prev.intValue()
-              j += 1
-            }
-            qs.map { case (qid, qx, qy, qz, _, _) =>
-              val qcx = math.floor(qx / hL).toLong
-              val qcy = math.floor(qy / hL).toLong
-              val qcz = math.floor(qz / hL).toLong
-              val bd = new Array[Double](k); val bc = new Array[Long](k)
-              val bv = new Array[Double](k)
-              var cnt = 0
-              var dx = -1
-              while (dx <= 1) {
-                var dy = -1
-                while (dy <= 1) {
-                  var dz = -1
-                  while (dz <= 1) {
-                    val start = head.get(packS(qcx + dx, qcy + dy, qcz + dz))
-                    var i = if (start == null) -1 else start.intValue()
-                    while (i != -1) {
-                      val ddx = cxA(i) - qx; val ddy = cyA(i) - qy
-                      val ddz = czA(i) - qz
-                      val d2 = ddx * ddx + ddy * ddy + ddz * ddz
-                      val cid = cidA(i)
-                      if (cnt < k || d2 < bd(cnt - 1) ||
-                          (d2 == bd(cnt - 1) && cid < bc(cnt - 1))) {
-                        var p = if (cnt < k) cnt else k - 1
-                        while (p > 0 && (bd(p - 1) > d2 ||
-                            (bd(p - 1) == d2 && bc(p - 1) > cid))) {
-                          bd(p) = bd(p - 1); bc(p) = bc(p - 1); bv(p) = bv(p - 1)
-                          p -= 1
-                        }
-                        bd(p) = d2; bc(p) = cid; bv(p) = cvA(i)
-                        if (cnt < k) cnt += 1
-                      }
-                      i = nxt(i)
-                    }
-                    dz += 1
-                  }
-                  dy += 1
-                }
-                dx += 1
-              }
-              val out = new Array[Hit](cnt)
-              var q2 = 0
-              while (q2 < cnt) { out(q2) = Hit(bd(q2), bc(q2), bv(q2)); q2 += 1 }
-              (qid, out)
-            }
+          val n = cBuf.length
+          val cxA = new Array[Double](n); val cyA = new Array[Double](n)
+          val czA = new Array[Double](n); val cidA = new Array[Long](n)
+          val cvA = new Array[Double](n)
+          // per-cell chains: head(cellKey) -> last idx, next(idx) -> prev
+          val head = new java.util.HashMap[java.lang.Long, Integer](n * 2)
+          val nxt = new Array[Int](n)
+          var j = 0
+          while (j < n) {
+            val c = cBuf(j)
+            cxA(j) = c._2; cyA(j) = c._3; czA(j) = c._4
+            cidA(j) = c._5; cvA(j) = c._6
+            val ck = packS(math.floor(c._2 / hL).toLong,
+              math.floor(c._3 / hL).toLong, math.floor(c._4 / hL).toLong)
+            val prev = head.put(ck, j)
+            nxt(j) = if (prev == null) -1 else prev.intValue()
+            j += 1
           }
-      }.toDF("qid", "hits")
+          qs.map { case (qid, qx, qy, qz, _, _) =>
+            val qcx = math.floor(qx / hL).toLong
+            val qcy = math.floor(qy / hL).toLong
+            val qcz = math.floor(qz / hL).toLong
+            val bd = new Array[Double](k); val bc = new Array[Long](k)
+            val bv = new Array[Double](k)
+            var cnt = 0
+            var dx = -1
+            while (dx <= 1) {
+              var dy = -1
+              while (dy <= 1) {
+                var dz = -1
+                while (dz <= 1) {
+                  val start = head.get(packS(qcx + dx, qcy + dy, qcz + dz))
+                  var i = if (start == null) -1 else start.intValue()
+                  while (i != -1) {
+                    val ddx = cxA(i) - qx; val ddy = cyA(i) - qy
+                    val ddz = czA(i) - qz
+                    val d2 = ddx * ddx + ddy * ddy + ddz * ddz
+                    val cid = cidA(i)
+                    if (cnt < k || d2 < bd(cnt - 1) ||
+                        (d2 == bd(cnt - 1) && cid < bc(cnt - 1))) {
+                      var p = if (cnt < k) cnt else k - 1
+                      while (p > 0 && (bd(p - 1) > d2 ||
+                          (bd(p - 1) == d2 && bc(p - 1) > cid))) {
+                        bd(p) = bd(p - 1); bc(p) = bc(p - 1); bv(p) = bv(p - 1)
+                        p -= 1
+                      }
+                      bd(p) = d2; bc(p) = cid; bv(p) = cvA(i)
+                      if (cnt < k) cnt += 1
+                    }
+                    i = nxt(i)
+                  }
+                  dz += 1
+                }
+                dy += 1
+              }
+              dx += 1
+            }
+            val out = new Array[Hit](cnt)
+            var q2 = 0
+            while (q2 < cnt) { out(q2) = Hit(bd(q2), bc(q2), bv(q2)); q2 += 1 }
+            (qid, qx, qy, qz, out)
+          }
+      }.toDF("qid", "qx", "qy", "qz", "hits")
     }
 
     def ringPartials(q: DataFrame, shell: Seq[(Int, Int, Int)],
@@ -608,16 +608,18 @@ object KnnJoin {
               while (q2 < cnt(qi)) {
                 out(q2) = Hit(bd(base + q2), bc(base + q2), bv(base + q2)); q2 += 1
               }
-              (qBuf(qi)._1, out)
+              val q0 = qBuf(qi)
+              (q0._1, q0._2, q0._3, q0._4, out)
             }
           }
-      }.toDF("qid", "hits")
+      }.toDF("qid", "qx", "qy", "qz", "hits")
     }
 
     // across cell-size escalations the same candidate can be re-found, so
-    // merge dedups exact-equal hit structs before slicing top-k
+    // merge dedups exact-equal hit structs before slicing top-k; the
+    // coordinates are a function of qid, so they ride along as group keys
     def mergeTopK(partials: DataFrame): DataFrame =
-      partials.groupBy("qid").agg(
+      partials.groupBy("qid", "qx", "qy", "qz").agg(
         slice(array_distinct(array_sort(flatten(collect_list(col("hits"))))), 1, k)
           .as("knn"))
 
@@ -626,10 +628,11 @@ object KnnJoin {
     var resolvedParts = List.empty[DataFrame]
     var pending = queriesM.select(col("order_key").as("qid"), col("x").as("qx"),
       col("y").as("qy"), col("z").as("qz"))
-    var carried: Option[DataFrame] = None // (qid, knn) partials from finer binnings
+    // (qid, qx, qy, qz, knn) partials from finer binnings; None while
+    // the first binning runs
+    var carried: Option[DataFrame] = None
     var h = h0
     var done = false
-    var firstBinning = true
 
     // each binning runs rings 1..3; unresolved points escalate to cells 8x
     // coarser (geometric — total work is log(maxExtent/h0) bounded, the
@@ -641,8 +644,8 @@ object KnnJoin {
       // per-query cube-1 top-k lands in a single cogroup, no merge
       // shuffle. Later binnings: explode the (small) pending query set
       // and shrink candidates to probed cells.
-      var accumulated =
-        if (firstBinning) {
+      var accumulated = carried match {
+        case None =>
           // n <= cap means no supercell can exceed the cap — detection free
           val hot =
             if (ext.getLong(0) <= maxCellCandidates) Map.empty[Long, Int]
@@ -657,12 +660,9 @@ object KnnJoin {
           // skew-free fast path keeps the single-cogroup result as-is
           if (hotDf.isDefined) mergeTopK(partials)
           else partials.withColumnRenamed("hits", "knn")
-        } else mergeTopK(carried match {
-          case Some(c) => ringPartials(q, r1cube, cands, filterCells = true)
-            .unionByName(c.select(col("qid"), col("knn").as("hits")))
-          case None => ringPartials(q, r1cube, cands, filterCells = true)
-        })
-      firstBinning = false
+        case Some(c) => mergeTopK(ringPartials(q, r1cube, cands, filterCells = true)
+          .unionByName(c.withColumnRenamed("knn", "hits")))
+      }
       var ring = 1
       var escalate = false
       while (!done && !escalate) {
@@ -676,18 +676,19 @@ object KnnJoin {
         // materializing action — a single job checkpoints the ring AND
         // answers "is anything unresolved", replacing the old eager-
         // checkpoint job + isEmpty probe pair (two driver barriers per
-        // ring -> one; the serial-floor item of BENCH/BASELINE.md)
-        val joined = bin(pending, h).join(accumulated, Seq("qid"), "left")
-          .withColumn("knn", coalesce(col("knn"),
-            typedLit(Seq.empty[(Double, Long, Double)]).cast(hitType)))
-          .withColumn("__final", isFinal)
+        // ring -> one; the serial-floor item of BENCH/BASELINE.md).
+        // Every pending query is already a row of `accumulated`, with
+        // its coordinates, so the ring re-joins nothing: the cogroup (and
+        // the top-k merge of salted or later rings) is its only shuffle.
+        val joined = accumulated.withColumn("__final", isFinal)
           .transform(d => graft.core.Mat(d, eager = false))
         val pendingCount = joined.agg(
           count(when(!col("__final"), lit(1)))).head().getLong(0)
         dbg(s"ring=$ring h=$h pending=$pendingCount")
         resolvedParts = joined.filter(col("__final")).select(col("qid"), col("knn")) :: resolvedParts
         val nextPending = joined.filter(!col("__final"))
-        pending = nextPending.select("qid", "qx", "qy", "qz")
+          .select("qid", "qx", "qy", "qz", "knn")
+        pending = nextPending.drop("knn")
         if (pendingCount == 0L) done = true
         else if (ring < ringsPerBinning) {
           // jump both remaining shells in one round: pending is already the
@@ -698,10 +699,9 @@ object KnnJoin {
           val shellPart = ringPartials(bin(pending, h), shells, cands,
             filterCells = true)
           accumulated = mergeTopK(
-            nextPending.select(col("qid"), col("knn").as("hits"))
-              .unionByName(shellPart))
+            nextPending.withColumnRenamed("knn", "hits").unionByName(shellPart))
         } else {
-          carried = Some(nextPending.select("qid", "knn"))
+          carried = Some(nextPending)
           h *= 8
           escalate = true
         }

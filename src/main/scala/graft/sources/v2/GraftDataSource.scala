@@ -122,8 +122,11 @@ private[v2] class GraftScanBuilder(root: String, asof: Option[Int],
     filters
   }
   override def pushedFilters(): Array[Filter] = pushed
+  // nested schema pruning can ask for part of a struct (s{b} of s{a, b}),
+  // but buildScan emits whole top-level columns: keep the full type of
+  // every requested top-level field so readSchema describes those rows
   override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
+    required = StructType(requiredSchema.fieldNames.map(full(_)))
   override def build(): Scan = new GraftScan(root, asof, required, pushed)
 }
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{Fixtures, Synth}
@@ -7,6 +8,51 @@ import graft.operators.{KnnJoin, NeighborClassifier, NNDistance}
 
 class KnnSpec extends AnyFunSuite {
   import TestSpark._
+
+  /** Shuffle writes of the Spark jobs `body` runs: total bytes, total
+    * records and the records of the stage that wrote the most. */
+  private final case class Shuffled(bytes: Long, records: Long, maxStageRecords: Long)
+
+  /** Runs `body` under its own job group and sums `shuffleWriteMetrics`
+    * over the tasks of that group's stages only. */
+  private def shuffled(body: => Unit): Shuffled = {
+    val sc = spark.sparkContext
+    val group = s"knn-shuffle-${System.nanoTime()}"
+    val stages = collection.mutable.Set.empty[Int]
+    val perStage = collection.mutable.Map.empty[Int, (Long, Long)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = stages.synchronized {
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          stages ++= e.stageIds
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = stages.synchronized {
+        if (stages.contains(e.stageId) && e.taskMetrics != null) {
+          val w = e.taskMetrics.shuffleWriteMetrics
+          val (b, r) = perStage.getOrElse(e.stageId, (0L, 0L))
+          perStage(e.stageId) = (b + w.bytesWritten, r + w.recordsWritten)
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "shuffle metrics", interruptOnCancel = false)
+    try body
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.TestListenerBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    stages.synchronized {
+      val rs = perStage.values.map(_._2)
+      Shuffled(perStage.values.map(_._1).sum, rs.sum, if (rs.isEmpty) 0L else rs.max)
+    }
+  }
+
+  /** Self-kNN at k=5 over `docs` on the pinned distributed path; at the
+    * estimated cell size ring 1 resolves every query. */
+  private def selfKnnShuffle(docs: org.apache.spark.sql.DataFrame): Shuffled =
+    shuffled {
+      KnnJoin.knn(docs, docs, 5, selfJoin = true, broadcastLimit = 0).collect()
+    }
 
   test("grid kNN == brute force on 800 synthetic docs (broadcast AND " +
       "distributed paths, full-struct differential)") {
@@ -158,5 +204,39 @@ class KnnSpec extends AnyFunSuite {
       .toDF("order_key", "x", "y", "z")
     val h = graft.pipeline.CloudMetrics.hausdorff(a, b)
     assert(math.abs(h - 1000.0) < 1e-9, s"hausdorff $h")
+  }
+
+  test("kNN shuffle: the supercell cogroup is the only data shuffle " +
+      "(records <= 5.5x candidates; halo stage <= 4.2x)") {
+    val docs = Synth.docs(spark, 20000).cache()
+    val n = docs.count()
+    val s = selfKnnShuffle(docs)
+    info(f"records/cand ${s.records.toDouble / n}%.3f, " +
+      f"largest stage ${s.maxStageRecords.toDouble / n}%.3f, bytes ${s.bytes}")
+    // The halo stage writes each candidate once per supercell its
+    // one-cell shell touches: 1.5x per axis in the interior, (1+2/S)^3
+    // = 3.4x. Here z in [0, 400) spans two ~313 m cells, and cell 0's
+    // shell also reaches the empty supercell below, so z contributes
+    // ~1.78x and the stage measures 4.05x. Each query is written once
+    // more (~5.05x in all). A per-ring re-join of the query side onto
+    // the partials shuffles both sides again (~7.05x).
+    assert(s.records <= 5.5 * n, s"kNN shuffled ${s.records} records for $n candidates")
+    assert(s.maxStageRecords <= 4.2 * n,
+      s"halo stage wrote ${s.maxStageRecords} records for $n candidates")
+    docs.unpersist()
+  }
+
+  test("kNN shuffle bytes do not depend on the spans payload (1x vs 8x)") {
+    val docs = Synth.docs(spark, 20000).cache()
+    val wide = docs.withColumn("spans", concat(Seq.fill(8)(col("spans")): _*)).cache()
+    assert(docs.count() == wide.count())
+    val b1 = selfKnnShuffle(docs).bytes
+    val b8 = selfKnnShuffle(wide).bytes
+    info(s"kNN shuffle bytes: 1x $b1, 8x $b8")
+    assert(b1 > 0)
+    assert(math.abs(b8 - b1) <= 0.05 * b1,
+      s"kNN shuffle bytes moved with the spans payload: 1x $b1 B, 8x $b8 B")
+    wide.unpersist()
+    docs.unpersist()
   }
 }
