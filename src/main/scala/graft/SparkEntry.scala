@@ -1610,9 +1610,11 @@ object SparkEntry {
         delay = "2000 seconds")
       val qn = s"q116_sink_$h"
       s.catalog.dropTempView(qn)
-      val q = out.writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
+      graft.streaming.StreamDedup.withUncheckedStatefulChain(s) {
+        val q = out.writeStream.format("memory").queryName(qn)
+          .outputMode("append").start()
+        try q.processAllAvailable() finally q.stop()
+      }
       // verify candidates with exact set jaccard like the batch gate does
       val cand = s.table(qn).select("id_a", "id_b")
       val all = docs.unionByName(dups)

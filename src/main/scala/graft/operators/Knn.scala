@@ -9,43 +9,53 @@ import graft.expr.DimRange
   * Ordering (d2, cid) makes top-k deterministic at any parallelism. */
 case class Hit(d2: Double, cid: Long, v: Double)
 
-/** Driver-collected per-cell chain index over a SMALL candidate side
-  * (broadcast fast path of [[KnnJoin.knn]]): answers the exact
-  * (d2, cid)-ordered top-k per query by expanding Chebyshev cell shells
-  * clamped to the candidate cell bbox — identical arithmetic and
-  * tie-break to the distributed cogroup path, so results are
-  * bit-identical. Built once on the driver, broadcast, queried from a
-  * single mapPartitions pass over the (arbitrarily large) query side. */
-private[operators] final class KnnLocalIndex(
-    cx: Array[Double], cy: Array[Double], cz: Array[Double],
-    cid: Array[Long], cv: Array[Double], h0: Double) extends Serializable {
-  private val n = cx.length
-  // h is an internal accelerator only (results are exact for ANY h):
-  // coarsen until every axis spans <= ~4*cbrt(n) cells. Two reasons —
-  // (a) the shell walk costs O(ring^2) per ring even over EMPTY cells,
-  // so a caller-passed h far below the point spacing (fine cellSize on a
-  // sparse extent) would walk millions of empty rings; the density cap
-  // bounds the whole walk at ~(4*cbrt(n))^3 cell probes; (b) it keeps
-  // every axis far under the 2^21 packing field, so the rebased packing
-  // below is injective — an aliased bucket would double-count `seen`
-  // and could fire finality early.
-  private val h = {
-    var loX = Double.MaxValue; var hiX = Double.MinValue
-    var loY = Double.MaxValue; var hiY = Double.MinValue
-    var loZ = Double.MaxValue; var hiZ = Double.MinValue
-    var j = 0
-    while (j < n) {
-      if (cx(j) < loX) loX = cx(j); if (cx(j) > hiX) hiX = cx(j)
-      if (cy(j) < loY) loY = cy(j); if (cy(j) > hiY) hiY = cy(j)
-      if (cz(j) < loZ) loZ = cz(j); if (cz(j) > hiZ) hiZ = cz(j)
-      j += 1
+/** The one insertion top-k of every kNN path: the k best candidates
+  * offered so far, ascending by (d2, cid). (d2, cid) is a total order
+  * over distinct cids, so the result does not depend on the order the
+  * candidates are offered in. */
+private[operators] final class TopK(k: Int) {
+  private val bd = new Array[Double](k); private val bc = new Array[Long](k)
+  private val bv = new Array[Double](k)
+  private var cnt = 0
+  private var kth = 0.0 // bd(k - 1) once full
+
+  /** A small rejection test that inlines into hot loops; insertion is a call. */
+  def offer(d2: Double, c: Long, v: Double): Unit =
+    if (cnt < k || d2 < kth || (d2 == kth && c < bc(k - 1))) insert(d2, c, v)
+
+  private def insert(d2: Double, c: Long, v: Double): Unit = {
+    var p = if (cnt < k) cnt else k - 1
+    while (p > 0 && (bd(p - 1) > d2 || (bd(p - 1) == d2 && bc(p - 1) > c))) {
+      bd(p) = bd(p - 1); bc(p) = bc(p - 1); bv(p) = bv(p - 1)
+      p -= 1
     }
-    val span = math.max(hiX - loX, math.max(hiY - loY, hiZ - loZ))
-    val cellCap = math.max(16.0, 4.0 * math.cbrt(n.toDouble))
-    var hh = h0
-    while (span / hh > cellCap) hh *= 2
-    hh
+    bd(p) = d2; bc(p) = c; bv(p) = v
+    if (cnt < k) cnt += 1
+    kth = bd(cnt - 1)
   }
+
+  /** Full, with the kth distance within r: no candidate farther than r
+    * can change the result. */
+  def finalWithin(r: Double): Boolean = cnt == k && math.sqrt(kth) <= r
+
+  def hits: Array[Hit] = {
+    val out = new Array[Hit](cnt)
+    var i = 0
+    while (i < cnt) { out(i) = Hit(bd(i), bc(i), bv(i)); i += 1 }
+    out
+  }
+}
+
+/** Per-cell chain index over a candidate set at cell size h, the one
+  * index of every buffered kNN path: the driver-built broadcast index
+  * and each supercell cogroup task. Cell keys are rebased to the
+  * candidates' per-axis minimum cell, so the packing is injective while
+  * every axis spans fewer than 2^21 cells (the broadcast path coarsens
+  * h to guarantee it; a supercell task spans S+2 cells). */
+private[operators] final class CellIndex(
+    cx: Array[Double], cy: Array[Double], cz: Array[Double],
+    cid: Array[Long], cv: Array[Double], h: Double) extends Serializable {
+  private val n = cx.length
   private val head = new java.util.HashMap[java.lang.Long, Integer](n * 2)
   private val nxt = new Array[Int](n)
   private var minCx = Long.MaxValue; private var maxCx = Long.MinValue
@@ -70,87 +80,88 @@ private[operators] final class KnnLocalIndex(
       j += 1
     }
   }
-  /** Injective within the occupied box: coords rebased to the per-axis
-    * min cell, and h above guarantees each range < 2^20 < 2^21 (field
-    * width). query() only visits cells clamped into this box. */
   @inline private def pk(a: Long, b: Long, c: Long): Long =
     ((a - minCx) << 42) | ((b - minCy) << 21) | (c - minCz)
 
-  /** Exact top-k by (d2, cid) over all n candidates. A candidate within
-    * distance ring*h of the query has cell coordinates within +-ring of
-    * the query cell (|x-qx| <= ring*h => floor(x/h) <= floor(qx/h)+ring),
-    * so once the kth distance is <= ring*h after examining shells
-    * 0..ring the result is final — the same finality rule as the
-    * distributed ring loop. Shells clamp to the candidate cell bbox and
-    * the scan stops when every candidate has been seen. */
-  def query(qx: Double, qy: Double, qz: Double, k: Int): Array[Hit] = {
-    val qcx = math.floor(qx / h).toLong
-    val qcy = math.floor(qy / h).toLong
-    val qcz = math.floor(qz / h).toLong
-    val bd = new Array[Double](k); val bc = new Array[Long](k)
-    val bv = new Array[Double](k)
-    var cnt = 0
-    var seen = 0
-    @inline def visit(ccx: Long, ccy: Long, ccz: Long): Unit = {
-      val start = head.get(pk(ccx, ccy, ccz))
-      var i = if (start == null) -1 else start.intValue()
-      while (i != -1) {
-        seen += 1
-        val dx = cx(i) - qx; val dy = cy(i) - qy; val dz = cz(i) - qz
-        val d2 = dx * dx + dy * dy + dz * dz
-        val c = cid(i)
-        if (cnt < k || d2 < bd(cnt - 1) ||
-            (d2 == bd(cnt - 1) && c < bc(cnt - 1))) {
-          var p = if (cnt < k) cnt else k - 1
-          while (p > 0 && (bd(p - 1) > d2 ||
-              (bd(p - 1) == d2 && bc(p - 1) > c))) {
-            bd(p) = bd(p - 1); bc(p) = bc(p - 1); bv(p) = bv(p - 1)
-            p -= 1
-          }
-          bd(p) = d2; bc(p) = c; bv(p) = cv(i)
-          if (cnt < k) cnt += 1
-        }
-        i = nxt(i)
-      }
-    }
-    // start at the Chebyshev cell distance from the query cell to the
-    // candidate bbox — every earlier shell is provably empty
-    val d0x = math.max(0L, math.max(minCx - qcx, qcx - maxCx))
-    val d0y = math.max(0L, math.max(minCy - qcy, qcy - maxCy))
-    val d0z = math.max(0L, math.max(minCz - qcz, qcz - maxCz))
-    var ring = math.max(d0x, math.max(d0y, d0z))
-    var done = false
-    while (!done) {
-      val x0 = math.max(qcx - ring, minCx); val x1 = math.min(qcx + ring, maxCx)
-      val y0 = math.max(qcy - ring, minCy); val y1 = math.min(qcy + ring, maxCy)
-      val z0 = math.max(qcz - ring, minCz); val z1 = math.min(qcz + ring, maxCz)
-      if (x0 <= x1 && y0 <= y1 && z0 <= z1) {
+  /** Exact top-k by (d2, cid) over the candidates in Chebyshev cell
+    * shells 0..maxRing around the query cell. A candidate outside shell
+    * `ring` is farther than ring*h (|x-qx| <= ring*h implies
+    * floor(x/h) <= floor(qx/h)+ring), so the walk stops once the kth
+    * distance is within ring*h, or once every candidate has been seen.
+    * Shells start at the query cell's Chebyshev distance to the
+    * candidate cell bbox and clamp to it: the cells outside are empty. */
+  def query(qx: Double, qy: Double, qz: Double, k: Int, maxRing: Long): Array[Hit] = {
+    val top = new TopK(k)
+    if (n > 0) {
+      val qcx = math.floor(qx / h).toLong
+      val qcy = math.floor(qy / h).toLong
+      val qcz = math.floor(qz / h).toLong
+      // fields copied to locals, which the JIT keeps in registers
+      val cx = this.cx; val cy = this.cy; val cz = this.cz
+      val cid = this.cid; val cv = this.cv; val head = this.head; val nxt = this.nxt
+      var seen = 0
+      var ring = math.max(math.max(0L, math.max(minCx - qcx, qcx - maxCx)),
+        math.max(math.max(0L, math.max(minCy - qcy, qcy - maxCy)),
+          math.max(0L, math.max(minCz - qcz, qcz - maxCz))))
+      var done = ring > maxRing
+      while (!done) {
+        val x0 = math.max(qcx - ring, minCx); val x1 = math.min(qcx + ring, maxCx)
+        val y0 = math.max(qcy - ring, minCy); val y1 = math.min(qcy + ring, maxCy)
+        val z0 = math.max(qcz - ring, minCz); val z1 = math.min(qcz + ring, maxCz)
         var ccx = x0
         while (ccx <= x1) {
           val fx = math.abs(ccx - qcx) == ring
           var ccy = y0
           while (ccy <= y1) {
-            if (fx || math.abs(ccy - qcy) == ring) {
-              var ccz = z0
-              while (ccz <= z1) { visit(ccx, ccy, ccz); ccz += 1 }
-            } else {
-              val zm = qcz - ring; val zp = qcz + ring
-              if (zm >= z0 && zm <= z1) visit(ccx, ccy, zm)
-              if (zp >= z0 && zp <= z1 && zp != zm) visit(ccx, ccy, zp)
+            // a column on an x or y face is all shell, any other only its z caps
+            val face = fx || math.abs(ccy - qcy) == ring
+            val zStep = if (face) 1L else 2 * ring
+            var ccz = if (face) z0 else qcz - ring
+            val zEnd = if (face) z1 else qcz + ring
+            while (ccz <= zEnd) {
+              if (ccz >= z0 && ccz <= z1) {
+                val start = head.get(pk(ccx, ccy, ccz))
+                var i = if (start == null) -1 else start.intValue()
+                while (i != -1) {
+                  val dx = cx(i) - qx; val dy = cy(i) - qy; val dz = cz(i) - qz
+                  top.offer(dx * dx + dy * dy + dz * dz, cid(i), cv(i))
+                  seen += 1
+                  i = nxt(i)
+                }
+              }
+              ccz += zStep
             }
             ccy += 1
           }
           ccx += 1
         }
+        if (seen >= n || ring >= maxRing || top.finalWithin(ring * h)) done = true
+        else ring += 1
       }
-      if (seen >= n) done = true
-      else if (cnt == k && math.sqrt(bd(k - 1)) <= ring * h) done = true
-      else ring += 1
     }
-    val out = new Array[Hit](cnt)
-    var q2 = 0
-    while (q2 < cnt) { out(q2) = Hit(bd(q2), bc(q2), bv(q2)); q2 += 1 }
-    out
+    top.hits
+  }
+}
+
+private[operators] object CellIndex {
+  /** Coarsens h until every axis spans <= ~4*cbrt(n) cells. Results are
+    * exact at any h, but the shell walk costs O(ring^2) per ring even
+    * over empty cells, so an h far below the point spacing would walk
+    * millions of empty rings; the cap bounds the walk at ~(4*cbrt(n))^3
+    * cell probes and keeps every axis far under the 2^21 packing field
+    * (an aliased bucket would double-count `seen` and end the walk early). */
+  def coarsen(cx: Array[Double], cy: Array[Double], cz: Array[Double],
+      h0: Double): Double = {
+    def span(a: Array[Double]) = {
+      var lo = Double.MaxValue; var hi = Double.MinValue
+      a.foreach { v => if (v < lo) lo = v; if (v > hi) hi = v }
+      hi - lo
+    }
+    val cellCap = math.max(16.0, 4.0 * math.cbrt(cx.length.toDouble))
+    val s = math.max(span(cx), math.max(span(cy), span(cz)))
+    var h = h0
+    while (s / h > cellCap) h *= 2
+    h
   }
 }
 
@@ -162,12 +173,16 @@ private[operators] final class KnnLocalIndex(
   * phase 1 cogroups queries with the candidates of SUPERCELL regions
   * (SxSxS cells + a one-cell halo shell — ~3.4x candidate duplication
   * instead of 27x per-cell haloing) and answers each query's exact
-  * 3x3x3-cell cube from a task-local per-cell index; phase 2 re-joins
+  * 3x3x3-cell cube from a task-local [[CellIndex]]; phase 2 re-joins
   * ONLY the points whose kth-distance ball escapes the examined cube
   * (sqrt(d2_k) <= R*h proves the local result final — the halo-exchange
   * correctness property of SURVEY §7.4.3) against the next Chebyshev
   * shell, iterating until resolved. The shuffled payload is only
   * (qid, x, y, z[, hits]) — spans and other wide columns never move.
+  * A candidate side at or below `broadcastLimit` skips all of this: one
+  * driver-built [[CellIndex]] is broadcast and walks its shells until
+  * each query is final. Every path ranks through the same [[TopK]], so
+  * the broadcast and distributed results are bit-identical.
   *
   * Skew: cell size targets ~4k candidates per cell from the extent row;
   * supercells whose task input exceeds `maxCellCandidates` are salted —
@@ -194,10 +209,6 @@ object KnnJoin {
 
   private def pack3(cx: Column, cy: Column, cz: Column): Column =
     shiftleft(cx + B, 42).bitwiseOR(shiftleft(cy + B, 21)).bitwiseOR(cz + B)
-
-  /** JVM-side cell key identical to pack3 (used inside cogroup tasks). */
-  @inline private def packS(cx: Long, cy: Long, cz: Long): Long =
-    ((cx + B) << 42) | ((cy + B) << 21) | (cz + B)
 
   /** Supercell coordinate of a cell coordinate (bias-shifted so the
     * floor-division operates on non-negatives; exact in doubles). */
@@ -295,6 +306,7 @@ object KnnJoin {
       valueCol: String = "classification", cellSize: Double = 0.0,
       selfJoin: Boolean = false, maxCellCandidates: Int = 100000,
       broadcastLimit: Int = defaultBroadcastLimit): DataFrame = {
+    require(k >= 1, s"knn: k must be >= 1, got k = $k")
     val spark = queries.sparkSession
     import spark.implicits._
     val debug = sys.env.contains("GRAFT_KNN_DEBUG")
@@ -334,6 +346,8 @@ object KnnJoin {
       !ext.getDouble(6).isNaN,
       "knn: candidate side contains NaN coordinates — filter or repair " +
         "them upstream (a NaN point can never match any distance predicate)")
+    val (ex, ey, ez) = (ext.getDouble(2) - ext.getDouble(1),
+      ext.getDouble(4) - ext.getDouble(3), ext.getDouble(6) - ext.getDouble(5))
 
     // ---- BROADCAST FAST PATH: a candidate side that fits one task's
     // memory is collected once, indexed on the driver, and broadcast —
@@ -342,31 +356,19 @@ object KnnJoin {
     // barriers. This is the broadcast-hash-join analog for kNN, and the
     // common case at scale: ground-raster inpaint (area/cell^2 cells),
     // ICP/colorization reference sets, per-tile goldens. Results are
-    // bit-identical to the distributed path (same d2 arithmetic, same
-    // (d2, cid) tie-break — pinned by KnnSpec's differential).
+    // bit-identical to the distributed path: both rank through the same
+    // CellIndex + TopK (pinned by KnnSpec's differential).
     if (broadcastLimit > 0 && ext.getLong(0) <= broadcastLimit) {
       val rows = candM.select(col("x"), col("y"), col("z"), col("order_key"),
         col(valueCol).cast("double").as("v")).collect()
       val n = rows.length
-      val lcx = new Array[Double](n); val lcy = new Array[Double](n)
-      val lcz = new Array[Double](n); val lcid = new Array[Long](n)
-      val lcv = new Array[Double](n)
-      var i = 0
-      while (i < n) {
-        val r = rows(i)
-        lcx(i) = r.getDouble(0); lcy(i) = r.getDouble(1); lcz(i) = r.getDouble(2)
-        lcid(i) = r.getLong(3); lcv(i) = r.getDouble(4)
-        i += 1
-      }
-      val hB = estimateCellSize(cellSize, k, n,
-        ext.getDouble(2) - ext.getDouble(1),
-        ext.getDouble(4) - ext.getDouble(3),
-        ext.getDouble(6) - ext.getDouble(5),
-        math.max(1e-9, math.max(ext.getDouble(2) - ext.getDouble(1),
-          math.max(ext.getDouble(4) - ext.getDouble(3),
-            ext.getDouble(6) - ext.getDouble(5)))))
+      val (lcx, lcy, lcz) = (rows.map(_.getDouble(0)), rows.map(_.getDouble(1)),
+        rows.map(_.getDouble(2)))
+      val (lcid, lcv) = (rows.map(_.getLong(3)), rows.map(_.getDouble(4)))
+      val hB = CellIndex.coarsen(lcx, lcy, lcz, estimateCellSize(cellSize, k, n,
+        ex, ey, ez, math.max(1e-9, math.max(ex, math.max(ey, ez)))))
       val idx = spark.sparkContext.broadcast(
-        new KnnLocalIndex(lcx, lcy, lcz, lcid, lcv, hB))
+        new CellIndex(lcx, lcy, lcz, lcid, lcv, hB))
       dbg(s"broadcast fast path: n=$n h=$hB")
       // self-kNN: rebuild the (small) query side from the collected rows
       // so the output has no lineage into the cached candM
@@ -381,7 +383,7 @@ object KnnJoin {
           // same loud-NaN contract as the distributed path's extent check
           if (qx.isNaN || qy.isNaN || qz.isNaN) throw new IllegalArgumentException(
             s"knn: query $qid has NaN coordinates — filter or repair upstream")
-          (qid, ix.query(qx, qy, qz, k))
+          (qid, ix.query(qx, qy, qz, k, Long.MaxValue))
         }
       }.toDF("order_key", "knn")
       candM.unpersist(false)
@@ -422,9 +424,7 @@ object KnnJoin {
     // cell-size estimate straight from the already-collected extent row
     // (a separate estimator aggregate would be a second identical job)
     val h0 = estimateCellSize(cellSize, k, math.max(ext.getLong(0), 1L),
-      ext.getDouble(2) - ext.getDouble(1),
-      ext.getDouble(4) - ext.getDouble(3),
-      ext.getDouble(6) - ext.getDouble(5), maxExtent)
+      ex, ey, ez, maxExtent)
 
     def candPrep(h: Double) = candM.select(
       pack3(cellCoord(col("x"), h), cellCoord(col("y"), h), cellCoord(col("z"), h)).as("cell"),
@@ -441,10 +441,11 @@ object KnnJoin {
       * with candidates duplicated only into the one-cell halo shell of
       * adjacent supercells (~(1+2/S)^3 = 3.4x fan-out instead of the 27x
       * of per-cell haloing — an 8x shuffle-volume cut on the dominant
-      * stage). Each task builds a local per-cell chain index and answers
-      * every query's exact 27-cell cube, so per-query results are
-      * IDENTICAL to the per-cell design. Hot supercells are salted on
-      * the candidate side with queries replicated across salt groups.
+      * stage). Each task builds a [[CellIndex]] over its candidates and
+      * answers every query's exact 27-cell cube (shells 0..1), so
+      * per-query results are IDENTICAL to the per-cell design. Hot
+      * supercells are salted on the candidate side with queries
+      * replicated across salt groups.
       * Every query row comes out once per salt group, with its
       * coordinates (an empty `hits` when the group holds no candidates),
       * so the ring loop never re-joins the query side. */
@@ -470,7 +471,6 @@ object KnnJoin {
         case None => c1.withColumn("__salt", lit(0))
       }).select("skey", "x", "y", "z", "cid", "v", "__salt")
         .as[(Long, Double, Double, Double, Long, Double, Int)]
-      val hL = h
       qS.groupByKey(t => (t._5, t._6)).cogroup(cS.groupByKey(t => (t._1, t._7))) {
         (_, qs, cs) =>
           val cBuf = cs.toArray
@@ -478,63 +478,15 @@ object KnnJoin {
           val cxA = new Array[Double](n); val cyA = new Array[Double](n)
           val czA = new Array[Double](n); val cidA = new Array[Long](n)
           val cvA = new Array[Double](n)
-          // per-cell chains: head(cellKey) -> last idx, next(idx) -> prev
-          val head = new java.util.HashMap[java.lang.Long, Integer](n * 2)
-          val nxt = new Array[Int](n)
           var j = 0
           while (j < n) {
             val c = cBuf(j)
-            cxA(j) = c._2; cyA(j) = c._3; czA(j) = c._4
-            cidA(j) = c._5; cvA(j) = c._6
-            val ck = packS(math.floor(c._2 / hL).toLong,
-              math.floor(c._3 / hL).toLong, math.floor(c._4 / hL).toLong)
-            val prev = head.put(ck, j)
-            nxt(j) = if (prev == null) -1 else prev.intValue()
+            cxA(j) = c._2; cyA(j) = c._3; czA(j) = c._4; cidA(j) = c._5; cvA(j) = c._6
             j += 1
           }
+          val ix = new CellIndex(cxA, cyA, czA, cidA, cvA, h)
           qs.map { case (qid, qx, qy, qz, _, _) =>
-            val qcx = math.floor(qx / hL).toLong
-            val qcy = math.floor(qy / hL).toLong
-            val qcz = math.floor(qz / hL).toLong
-            val bd = new Array[Double](k); val bc = new Array[Long](k)
-            val bv = new Array[Double](k)
-            var cnt = 0
-            var dx = -1
-            while (dx <= 1) {
-              var dy = -1
-              while (dy <= 1) {
-                var dz = -1
-                while (dz <= 1) {
-                  val start = head.get(packS(qcx + dx, qcy + dy, qcz + dz))
-                  var i = if (start == null) -1 else start.intValue()
-                  while (i != -1) {
-                    val ddx = cxA(i) - qx; val ddy = cyA(i) - qy
-                    val ddz = czA(i) - qz
-                    val d2 = ddx * ddx + ddy * ddy + ddz * ddz
-                    val cid = cidA(i)
-                    if (cnt < k || d2 < bd(cnt - 1) ||
-                        (d2 == bd(cnt - 1) && cid < bc(cnt - 1))) {
-                      var p = if (cnt < k) cnt else k - 1
-                      while (p > 0 && (bd(p - 1) > d2 ||
-                          (bd(p - 1) == d2 && bc(p - 1) > cid))) {
-                        bd(p) = bd(p - 1); bc(p) = bc(p - 1); bv(p) = bv(p - 1)
-                        p -= 1
-                      }
-                      bd(p) = d2; bc(p) = cid; bv(p) = cvA(i)
-                      if (cnt < k) cnt += 1
-                    }
-                    i = nxt(i)
-                  }
-                  dz += 1
-                }
-                dy += 1
-              }
-              dx += 1
-            }
-            val out = new Array[Hit](cnt)
-            var q2 = 0
-            while (q2 < cnt) { out(q2) = Hit(bd(q2), bc(q2), bv(q2)); q2 += 1 }
-            (qid, qx, qy, qz, out)
+            (qid, qx, qy, qz, ix.query(qx, qy, qz, k, 1))
           }
       }.toDF("qid", "qx", "qy", "qz", "hits")
     }
@@ -562,54 +514,25 @@ object KnnJoin {
         (_, qs, cs) =>
           // STREAM the candidates (one pass, never materialized): ring
           // cells have no salting, so a dense cell at a coarse escalated
-          // h could hold millions of candidates — buffering them (the
-          // old cs.toArray) was the one path around the maxCellCandidates
-          // bound. Buffer the QUERIES instead (pending-set fragments,
-          // O(queries*k) memory) and push each streamed candidate through
-          // every query's insertion top-k. Candidate order per query is
-          // the same stream order as before -> bit-identical results.
+          // h could hold millions of candidates, past the
+          // maxCellCandidates bound. Buffer the QUERIES instead (pending-
+          // set fragments, O(queries*k) memory) and offer each streamed
+          // candidate to every query's TopK.
           val qBuf = qs.toArray
           if (qBuf.isEmpty || !cs.hasNext) Iterator.empty
           else {
-            val m = qBuf.length
-            val bd = new Array[Double](m * k); val bc = new Array[Long](m * k)
-            val bv = new Array[Double](m * k)
-            val cnt = new Array[Int](m)
-            while (cs.hasNext) {
-              val c = cs.next()
-              val cx = c._2; val cy = c._3; val cz = c._4
-              val cid = c._5; val cv = c._6
+            val tops = Array.fill(qBuf.length)(new TopK(k))
+            cs.foreach { c =>
               var qi = 0
-              while (qi < m) {
+              while (qi < qBuf.length) {
                 val q0 = qBuf(qi)
-                val dx = cx - q0._2; val dy = cy - q0._3; val dz = cz - q0._4
-                val d2 = dx * dx + dy * dy + dz * dz
-                val base = qi * k
-                val c0 = cnt(qi)
-                if (c0 < k || d2 < bd(base + c0 - 1) ||
-                    (d2 == bd(base + c0 - 1) && cid < bc(base + c0 - 1))) {
-                  var p = if (c0 < k) c0 else k - 1
-                  while (p > 0 && (bd(base + p - 1) > d2 ||
-                      (bd(base + p - 1) == d2 && bc(base + p - 1) > cid))) {
-                    bd(base + p) = bd(base + p - 1); bc(base + p) = bc(base + p - 1)
-                    bv(base + p) = bv(base + p - 1)
-                    p -= 1
-                  }
-                  bd(base + p) = d2; bc(base + p) = cid; bv(base + p) = cv
-                  if (c0 < k) cnt(qi) = c0 + 1
-                }
+                val dx = c._2 - q0._2; val dy = c._3 - q0._3; val dz = c._4 - q0._4
+                tops(qi).offer(dx * dx + dy * dy + dz * dz, c._5, c._6)
                 qi += 1
               }
             }
-            qBuf.indices.iterator.map { qi =>
-              val base = qi * k
-              val out = new Array[Hit](cnt(qi))
-              var q2 = 0
-              while (q2 < cnt(qi)) {
-                out(q2) = Hit(bd(base + q2), bc(base + q2), bv(base + q2)); q2 += 1
-              }
-              val q0 = qBuf(qi)
-              (q0._1, q0._2, q0._3, q0._4, out)
+            qBuf.iterator.zip(tops.iterator).map { case (q0, top) =>
+              (q0._1, q0._2, q0._3, q0._4, top.hits)
             }
           }
       }.toDF("qid", "qx", "qy", "qz", "hits")

@@ -85,24 +85,37 @@ object StreamDedup {
     * that member passed the `ts >= watermark` gate in the bucket stage,
     * and the pair's event time IS that member's ts — so every emitted
     * row sits at or above the global watermark by construction. The
-    * check is a heuristic with exactly this escape hatch, so this
-    * builder disables `statefulOperator.checkCorrectness` on the
-    * session (Spark's documented setting for proven-safe chains) and
-    * the exactly-once behavior is regression-tested across microbatch
-    * boundaries in StreamingSpec. */
+    * check is a heuristic with exactly this escape hatch (Spark's
+    * documented `statefulOperator.checkCorrectness` setting for
+    * proven-safe chains): start the query inside
+    * [[withUncheckedStatefulChain]], which turns the check off only
+    * while its body runs. The exactly-once behavior is regression-tested
+    * across microbatch boundaries in StreamingSpec. */
   def minhashPairsDistinct(spark: SparkSession, stream: DataFrame,
       threshold: Double = 0.7, numHashes: Int = 64, bands: Int = 8,
       maxBucket: Int = 1000, delay: String = "30 minutes",
       idCol: String = "doc_id", textCol: String = "text",
-      tsCol: String = "ts"): DataFrame = {
-    spark.conf.set(
-      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled",
-      "false")
+      tsCol: String = "ts"): DataFrame =
     minhashPairsWithTs(spark, stream, threshold, numHashes, bands,
       maxBucket, delay, idCol, textCol, tsCol)
       .withWatermark("ts", delay)
       .dropDuplicatesWithinWatermark("id_a", "id_b")
       .drop("ts")
+
+  /** Runs `body` with `statefulOperator.checkCorrectness` off on the
+    * session and restores the prior setting afterwards (unsets the key if
+    * it had none), so only the proven-safe chain that `body` starts,
+    * drives and stops skips the check; every other query on the session
+    * keeps it. */
+  def withUncheckedStatefulChain[T](spark: SparkSession)(body: => T): T = {
+    val key = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try body
+    finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   /** minhashPairs with the pair's event time attached: ts = the later

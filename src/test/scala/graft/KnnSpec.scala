@@ -47,6 +47,16 @@ class KnnSpec extends AnyFunSuite {
     }
   }
 
+  /** Self-kNN of `df` as qid -> its (d2, cid, v) hits. */
+  private def selfKnnHits(df: org.apache.spark.sql.DataFrame, k: Int,
+      broadcastLimit: Int, cellSize: Double = 0.0) =
+    KnnJoin.knn(df.select("order_key", "x", "y", "z"), df, k,
+        cellSize = cellSize, broadcastLimit = broadcastLimit)
+      .collect().map { r =>
+        r.getLong(0) -> r.getSeq[org.apache.spark.sql.Row](1)
+          .map(h => (h.getDouble(0), h.getLong(1), h.getDouble(2))).toVector
+      }.toMap
+
   /** Self-kNN at k=5 over `docs` on the pinned distributed path; at the
     * estimated cell size ring 1 resolves every query. */
   private def selfKnnShuffle(docs: org.apache.spark.sql.DataFrame): Shuffled =
@@ -56,17 +66,12 @@ class KnnSpec extends AnyFunSuite {
 
   test("grid kNN == brute force on 800 synthetic docs (broadcast AND " +
       "distributed paths, full-struct differential)") {
+    import spark.implicits._
     val docs = Synth.docs(spark, 800, seed = 7).cache()
     val pts = docs.select("order_key", "x", "y", "z", "classification").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getInt(4)))
     val k = 5
-    def run(bl: Int) =
-      KnnJoin.knn(docs.select("order_key", "x", "y", "z"), docs, k,
-          broadcastLimit = bl)
-        .collect().map { r =>
-          r.getLong(0) -> r.getSeq[org.apache.spark.sql.Row](1)
-            .map(h => (h.getDouble(0), h.getLong(1), h.getDouble(2))).toVector
-        }.toMap
+    def run(bl: Int) = selfKnnHits(docs, k, bl)
     val gotB = run(KnnJoin.defaultBroadcastLimit) // 800 <= limit: fast path
     val gotD = run(0)                             // pinned distributed path
     assert(gotB == gotD, "broadcast fast path must be bit-identical to the cogroup path")
@@ -78,6 +83,32 @@ class KnnSpec extends AnyFunSuite {
       }.sorted.take(k).map(_._2).toVector
       assert(gotB(qid).map(_._2) == exp, s"qid=$qid")
     }
+    // exact ties: on an integer lattice many candidates share each d2, so
+    // the cid tie-break orders them. cids are a seeded permutation of the
+    // lattice positions. cellSize 0.3 leaves every query open after rings
+    // 1-3 and escalates the cell size once.
+    val ids = new scala.util.Random(5).shuffle((0 until 216).toVector)
+    val lat = (for (x <- 0 until 6; y <- 0 until 6; z <- 0 until 6)
+      yield (x.toDouble, y.toDouble, z.toDouble)).zip(ids).map {
+        case ((x, y, z), id) => (id.toLong, x, y, z, id % 3) }
+    val latDf = lat.toDF("order_key", "x", "y", "z", "classification")
+    val kL = 10
+    val expL = lat.map { case (qid, qx, qy, qz, _) =>
+      qid -> lat.map { case (cid, x, y, z, c) =>
+        ((x - qx) * (x - qx) + (y - qy) * (y - qy) + (z - qz) * (z - qz), cid, c.toDouble)
+      }.sortBy(t => (t._1, t._2)).take(kL).toVector
+    }.toMap
+    for ((bl, cs) <- Seq((KnnJoin.defaultBroadcastLimit, 0.0), (0, 0.0), (0, 0.3)))
+      assert(selfKnnHits(latDf, kL, bl, cs) == expL, s"broadcastLimit=$bl cellSize=$cs")
+    // k = 0 is rejected by name before any Spark job runs
+    val sc = spark.sparkContext
+    sc.setJobGroup("knn-k0", "k = 0", interruptOnCancel = false)
+    try for (bl <- Seq(KnnJoin.defaultBroadcastLimit, 0)) {
+      val e = intercept[IllegalArgumentException](selfKnnHits(docs, 0, bl))
+      assert(e.getMessage.contains("k must be >= 1"), e.getMessage)
+    } finally sc.clearJobGroup()
+    org.apache.spark.TestListenerBus.drain(sc)
+    assert(sc.statusTracker.getJobIdsForGroup("knn-k0").isEmpty)
   }
 
   test("broadcast path: pathological cellSize over a huge extent coarsens " +

@@ -557,15 +557,18 @@ class PipelineSpecSuite extends AnyFunSuite {
          {"type":"filters.stats"}]}"""))
     assert(e1.getMessage.contains("partition_column and num_partitions"),
       s"got: ${e1.getMessage}")
-    // a missing connection, table or upper bound is named before load()
-    for ((stage, option) <- Seq(
-        """"table":"events"""" -> "'connection'",
-        """"url":"jdbc:postgresql://db/x"""" -> "'table'",
-        """"url":"jdbc:postgresql://db/x","table":"events",
-          "partition_column":"event_id","num_partitions":8""" ->
-          "'upper_bound'")) {
+    // a missing connection, table or upper bound is named before load(),
+    // and so is a kNN stage's k below 1
+    for ((stages, option) <- Seq(
+        """{"type":"readers.jdbc","table":"events"}""" -> "'connection'",
+        """{"type":"readers.jdbc","url":"jdbc:postgresql://db/x"}""" -> "'table'",
+        """{"type":"readers.jdbc","url":"jdbc:postgresql://db/x","table":"events",
+          "partition_column":"event_id","num_partitions":8}""" ->
+          "'upper_bound'",
+        """{"type":"readers.faux","mode":"uniform","count":60,"seed":13},
+          {"type":"filters.neighborclassifier","k":0}""" -> "k must be >= 1")) {
       val e = intercept[IllegalArgumentException](PipelineBuilder.run(spark,
-        s"""{"pipeline":[{"type":"readers.jdbc",$stage},
+        s"""{"pipeline":[$stages,
            {"type":"filters.stats"}]}"""))
       assert(e.getMessage.contains(option), s"got: ${e.getMessage}")
     }

@@ -265,20 +265,51 @@ class StreamingSpec extends AnyFunSuite {
     val pairs = graft.streaming.StreamDedup.minhashPairsDistinct(spark,
       in.toDF().toDF("doc_id", "ts", "text"),
       threshold = 0.9, bands = 8, delay = "5 seconds")
-    val q = pairs.writeStream.outputMode("append")
-      .format("memory").queryName("dpairs").start()
-    try {
-      in.addData((1L, 10L, tA))
-      q.processAllAvailable()
-      in.addData((2L, 11L, tA)) // cross-microbatch pair (1,2)
-      q.processAllAvailable()
-      in.addData((3L, 12L, tA)) // pairs with BOTH 1 and 2 in one batch
-      q.processAllAvailable()
-      val rows = spark.table("dpairs").select("id_a", "id_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      assert(rows.length == 3,
-        s"expected exactly-once rows (1,2),(1,3),(2,3); got ${rows.toSeq}")
-      assert(rows.toSet == Set((1L, 2L), (1L, 3L), (2L, 3L)))
-    } finally q.stop()
+    graft.streaming.StreamDedup.withUncheckedStatefulChain(spark) {
+      val q = pairs.writeStream.outputMode("append")
+        .format("memory").queryName("dpairs").start()
+      try {
+        in.addData((1L, 10L, tA))
+        q.processAllAvailable()
+        in.addData((2L, 11L, tA)) // cross-microbatch pair (1,2)
+        q.processAllAvailable()
+        in.addData((3L, 12L, tA)) // pairs with BOTH 1 and 2 in one batch
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    val rows = spark.table("dpairs").select("id_a", "id_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(rows.length == 3,
+      s"expected exactly-once rows (1,2),(1,3),(2,3); got ${rows.toSeq}")
+    assert(rows.toSet == Set((1L, 2L), (1L, 3L), (2L, 3L)))
+  }
+
+  test("minhashPairsDistinct leaves checkCorrectness as it found it: an " +
+      "unsafe stateful chain started afterwards still fails analysis") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.streaming.StreamDedup
+    implicit val sq = spark.sqlContext
+    val key = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
+    val prior = spark.conf.getOption(key)
+    val in = MemoryStream[(Long, Long, String)]
+    def pairs(name: String) = StreamDedup.minhashPairsDistinct(spark,
+        in.toDF().toDF("doc_id", "ts", "text"), threshold = 0.9,
+        delay = "5 seconds")
+      .writeStream.outputMode("append").format("memory").queryName(name)
+    StreamDedup.withUncheckedStatefulChain(spark) {
+      val q = pairs("scoped_pairs").start()
+      try {
+        in.addData((1L, 10L, "a b c d e f g h i j"), (2L, 11L, "a b c d e f g h i j"))
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    assert(spark.table("scoped_pairs").count() == 1)
+    assert(spark.conf.getOption(key) == prior)
+    // fMGWS followed by a second stateful stage, started outside the
+    // helper: Spark's global-watermark guard rejects it
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      pairs("unscoped_pairs").start().stop())
+    assert(e.getMessage.contains("correctness"), e.getMessage)
   }
 }
