@@ -80,8 +80,8 @@ object Bench {
     }
 
     val results = scala.collection.mutable.LinkedHashMap[String, (Double, Double, Boolean)]()
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      results(name) = probeGated(fn(spark, sfDir).count())
+    SparkEntry.gates.sortBy(_.name).foreach { g =>
+      results(g.name) = probeGated(g.build(spark, sfDir).count())
       clearLeftovers()
     }
     results("flagship_pipeline") = probeGated(SparkEntry.entry(spark).count())

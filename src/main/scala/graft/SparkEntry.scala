@@ -10,9 +10,11 @@ import graft.dedup.Dedup
 import graft.ann.Ann
 import graft.text.TextAnalysis
 
-/** Driver contract — one `queries` entry per implemented operator family
-  * (SURVEY.md §2), each with a DuckDB-runnable oracle where the semantics
-  * are ANSI-SQL-expressible. Coordinates for the spatial operators are
+/** Driver contract — `gates` is the one list of driver gates, one per
+  * implemented operator family (SURVEY.md §2). Each gate holds its Spark
+  * query and, where the semantics are ANSI-SQL-expressible, the
+  * DuckDB-runnable oracle that must reproduce its rows; Verify, Bench and
+  * the plan tests all read it. Coordinates for the spatial operators are
   * derived deterministically from `events` integer columns so Spark and
   * DuckDB compute bit-identical doubles. */
 object SparkEntry {
@@ -187,17 +189,23 @@ object SparkEntry {
       sum("classification").as("cls_sum"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val gates: Seq[Gate] = Gate.registry(
     // ---- relational core --------------------------------------------
-    "q01_agg_pricing" -> ((s, d) => {
+    Gate("q01_agg_pricing", (s, d) => {
       t(s, d, "lineitem")
         .filter(col("l_shipdate") <= lit("1998-09-01").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"),
           sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double").as("sum_base_price"),
           count(lit(1)).as("count_order"))
-    }),
-    "q02_join_revenue_by_nation" -> ((s, d) => {
+    }, Some(
+      """SELECT l_returnflag, l_linestatus,
+         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+         COUNT(*) AS count_order
+         FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-01'
+         GROUP BY l_returnflag, l_linestatus""")),
+    Gate("q02_join_revenue_by_nation", (s, d) => {
       val li = t(s, d, "lineitem"); val o = t(s, d, "orders")
       val c = t(s, d, "customer"); val n = t(s, d, "nation")
       li.join(o, li("l_orderkey") === o("o_orderkey"))
@@ -207,30 +215,51 @@ object SparkEntry {
         .agg(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
           .cast("decimal(18,4)")).cast("double").as("revenue"),
           count(lit(1)).as("n_items"))
-    }),
-    "q03_topk_parts" -> ((s, d) => {
+    }, Some(
+      """SELECT n_name,
+         CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+         COUNT(*) AS n_items
+         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+         JOIN customer ON o_custkey = c_custkey
+         JOIN nation ON c_nationkey = n_nationkey
+         GROUP BY n_name""")),
+    Gate("q03_topk_parts", (s, d) => {
       t(s, d, "lineitem").groupBy("l_partkey")
         .agg(sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("total_qty"))
         .orderBy(col("total_qty").desc, col("l_partkey").asc).limit(10)
-    }),
-    "q04_window_nth_shipment" -> ((s, d) => {
+    }, Some(
+      """SELECT l_partkey, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty
+         FROM lineitem GROUP BY l_partkey
+         ORDER BY total_qty DESC, l_partkey ASC LIMIT 10""")),
+    Gate("q04_window_nth_shipment", (s, d) => {
       val w = Window.partitionBy("l_suppkey")
         .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"))
       t(s, d, "lineitem").withColumn("rn", row_number().over(w))
         .filter(col("rn") === 3)
         .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"))
-    }),
-    "q05_anti_join" -> ((s, d) => {
+    }, Some(
+      """SELECT l_suppkey, l_orderkey, l_linenumber FROM (
+           SELECT l_suppkey, l_orderkey, l_linenumber,
+             ROW_NUMBER() OVER (PARTITION BY l_suppkey
+               ORDER BY l_shipdate, l_orderkey, l_linenumber) AS rn
+           FROM lineitem) WHERE rn = 3""")),
+    Gate("q05_anti_join", (s, d) => {
       val c = t(s, d, "customer"); val o = t(s, d, "orders")
       c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
         .groupBy("c_mktsegment").agg(count(lit(1)).as("n_inactive"))
-    }),
-    "q06_events_daily" -> ((s, d) => {
+    }, Some(
+      """SELECT c_mktsegment, COUNT(*) AS n_inactive FROM customer
+         WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
+         GROUP BY c_mktsegment""")),
+    Gate("q06_events_daily", (s, d) => {
       t(s, d, "events").groupBy(to_date(col("ts")).as("day"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(round(col("value") * 1000000).cast("long")).as("value_micros"))
-    }),
-    "q07_sessionize" -> ((s, d) => {
+    }, Some(
+      """SELECT CAST(ts AS DATE) AS day, event_type, COUNT(*) AS n,
+         CAST(SUM(CAST(ROUND(value * 1000000) AS BIGINT)) AS BIGINT) AS value_micros
+         FROM events GROUP BY 1, 2""")),
+    Gate("q07_sessionize", (s, d) => {
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
       t(s, d, "events")
         .withColumn("prev", lag(col("ts"), 1).over(w))
@@ -240,1425 +269,7 @@ object SparkEntry {
             .otherwise(0))
         .groupBy("user_id").agg(sum("new_sess").as("n_sessions"),
           count(lit(1)).as("n_events"))
-    }),
-    // ---- spatial core (filters.crop / splitter / voxel / range) ------
-    "q08_crop_box" -> ((s, d) =>
-      Crop.box2d(pts(s, d), 2000, 1000, 5000, 8000).select("order_key")),
-    "q09_splitter_tiles" -> ((s, d) =>
-      Splitter(pts(s, d), length = 500.0, origin = Some((0.0, 0.0)))
-        .groupBy(col("tile_id")).agg(count(lit(1)).as("n"))
-        .select(graft.functions.F.cellX(col("tile_id")).as("tx"),
-          graft.functions.F.cellY(col("tile_id")).as("ty"), col("n"))),
-    "q10_voxel_first" -> ((s, d) =>
-      Voxel.downsize(pts(s, d), cell = 250.0, origin = Some((0.0, 0.0, 0.0)))
-        .select(floor(col("x") / 250).cast("long").as("vx"),
-          floor(col("y") / 250).cast("long").as("vy"),
-          col("order_key").as("kept_id"))),
-    "q11_range_filter" -> ((s, d) =>
-      RangeFilter(pts(s, d), "x[2000:8000), y!(3000:7000)").select("order_key")),
-    "q12_knn" -> ((s, d) => {
-      val p = pts(s, d)
-      val cand = p.filter(col("order_key") % 3 === 0)
-      val q = p.filter(col("order_key") % 97 === 0)
-      KnnJoin.knn(q.select("order_key", "x", "y", "z"), cand, 3,
-          valueCol = "order_key", cellSize = 500.0)
-        .select(col("order_key").as("qid"), posexplode(col("knn")).as(Seq("pos", "h")))
-        .select(col("qid"), col("h.cid").as("cid"), (col("pos") + 1).cast("long").as("rnk"))
-    }),
-    "q13_crop_polygon" -> ((s, d) => {
-      val wkt = "POLYGON ((5000.3 500.7, 9500.1 5000.2, 5000.4 9499.8, 500.2 5000.1, 5000.3 500.7))"
-      Crop.polygon(pts(s, d), wkt).select("order_key")
-    }),
-    "q14_chipper" -> ((s, d) => {
-      // rank-recursive equal-count tiling. Chip ids are partition-array
-      // indices and chip sizes are fully determined by the
-      // cumulate-and-round partition array (ChipperFilter.cpp:161-181)
-      // regardless of geometry — so (chip_id, n) IS oracle-checkable.
-      Chipper(pts(s, d), capacity = 500).groupBy("chip_id")
-        .agg(count(lit(1)).as("n"))
-    }),
-    "q15_geomdistance" -> ((s, d) => {
-      val wkt = "POLYGON ((2000 2000, 7000 2000, 7000 6000, 2000 6000, 2000 2000))"
-      GeomDistance(pts(s, d), wkt)
-        .select(col("order_key"), round(col("distance"), 4).as("dist"))
-    }),
-    // ---- order-dependent ops ---------------------------------------
-    "q16_head" -> ((s, d) =>
-      HeadTail.head(pts(s, d), 100).select("order_key")),
-    "q17_decimation" -> ((s, d) =>
-      Decimation(pts(s, d), step = 7).select("order_key")),
-    "q18_sort_stable" -> ((s, d) =>
-      Sort(pts(s, d), "event_type")
-        .select(col("order_key").as("new_order"), col("event_type"),
-          col("x").as("px"))),
-    // ---- stats ------------------------------------------------------
-    "q19_stats_summary" -> ((s, d) =>
-      t(s, d, "lineitem").groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"),
-          min("l_quantity").as("min_qty"), max("l_quantity").as("max_qty"),
-          sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"),
-          round(stddev_samp(col("l_quantity")), 3).as("sd_qty"))),
-    "q20_value_counts" -> ((s, d) =>
-      t(s, d, "lineitem").groupBy("l_returnflag", "l_linestatus")
-        .agg(count(lit(1)).as("n"))),
-    // ---- documents: text analysis + dedup ---------------------------
-    "q21_token_stats" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val tokenCount = length(col("text")) - length(regexp_replace(col("text"), " ", "")) + 1
-      docs.groupBy("lang").agg(count(lit(1)).as("n_docs"),
-        sum(tokenCount.cast("long")).as("total_tokens"),
-        sum(col("n_chars")).as("total_chars"))
-    }),
-    "q22_exact_dedup" -> ((s, d) => {
-      // group on the 8-byte hash of the normalized text (what Dedup.exact
-      // shuffles at scale), not the full text; the oracle groups by the
-      // text itself — same partition of doc ids absent hash collisions
-      val docs = t(s, d, "documents")
-        .withColumn("fp", xxhash64(regexp_replace(trim(lower(col("text"))), "\\s+", " ")))
-      docs.groupBy("fp").agg(min("doc_id").as("kept_id"))
-        .select(col("kept_id"))
-    }),
-    "q23_quality_bands" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val nWords = (length(col("text")) - length(regexp_replace(col("text"), " ", "")) + 1)
-        .cast("double")
-      val alpha = length(regexp_replace(lower(col("text")), "[^a-z ]", ""))
-        .cast("double") / greatest(length(col("text")).cast("double"), lit(1.0))
-      docs.withColumn("band",
-          when(nWords >= 50 && alpha > 0.9, "high")
-            .when(nWords >= 20, "mid").otherwise("low"))
-        .groupBy("band", "lang").agg(count(lit(1)).as("n"))
-    }),
-    "q24_minhash_dedup" -> ((s, d) => {
-      // hash functions are engine-specific -> rows-only oracle
-      val docs = t(s, d, "documents").withColumn("doc_id", col("doc_id").cast("string"))
-      // 8-row bands: (1/8)^(1/8) ~ 0.77 collision threshold — tight bands
-      // keep candidate volume linear on shared-vocabulary corpora
-      Dedup.minhashLsh(docs, threshold = 0.7, numHashes = 64, bands = 8)
-        .select(col("id_a"), col("id_b"), round(col("jaccard_est"), 4).as("j"))
-    }),
-    "q25_embedding_topk" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") % 100 === 0)
-      Ann.bruteForceTopK(emb, q, k = 5)
-        .select(col("query_id"), col("vec_id"), col("rank").cast("long").as("rnk"))
-    }),
-    "q26_simhash" -> ((s, d) => {
-      // engine-specific hash -> rows-only oracle; maxHamming=3 is inside
-      // the chunk-bucket recall guarantee (4 chunks, pigeonhole)
-      val docs = t(s, d, "documents").withColumn("doc_id", col("doc_id").cast("string"))
-      Dedup.simhashPairs(docs, maxHamming = 3)
-        .select(col("id_a"), col("id_b"), col("hamming"))
-    }),
-    "q27_langid" -> ((s, d) =>
-      t(s, d, "documents")
-        .select(col("doc_id"), TextAnalysis.langId(col("text")).as("lang_pred"))),
-    // ---- raster + hexbin + cluster (engine-specific -> selected SQL) -
-    "q28_rasterize" -> ((s, d) =>
-      // raw min/max: both engines read the same parquet doubles, so the
-      // comparison is exact without rounding
-      Rasterize(pts(s, d), resolution = 1000.0, valueCol = "value",
-          radius = 0.1, origin = Some((0.0, 0.0)))
-        .select(col("cell_x"), col("cell_y"), col("count"),
-          col("min").as("vmin"), col("max").as("vmax"))),
-    "q29_hexbin" -> ((s, d) =>
-      // axial hex coords unpacked so the oracle can replicate the
-      // cube-rounding assignment in plain SQL
-      HexBin(pts(s, d), edge = 400.0)
-        .select(graft.functions.F.cellX(col("hex_id")).as("hq"),
-          graft.functions.F.cellY(col("hex_id")).as("hr"), col("density"))),
-    "q30_cluster" -> ((s, d) =>
-      Cluster(pts(s, d).filter(col("order_key") < 2000), tolerance = 120.0)
-        .groupBy("cluster_id").agg(count(lit(1)).as("n"))),
-    "q31_returns_groups" -> ((s, d) => {
-      val p = pts(s, d)
-        .withColumn("return_number", (col("order_key") % 3 + 1).cast("int"))
-        .withColumn("number_of_returns", lit(3).cast("int"))
-      Returns(p, Seq(Returns.First, Returns.Intermediate, Returns.Last))
-        .groupBy("view_id").agg(count(lit(1)).as("n"))
-    }),
-    "q32_assign_where" -> ((s, d) => {
-      val p = pts(s, d).withColumn("classification", lit(0))
-      Assign(p, "classification", lit(5), Some(col("x") > 5000))
-        .groupBy("classification").agg(count(lit(1)).as("n"))
-    }),
-    "q33_divider" -> ((s, d) =>
-      Divider(pts(s, d), roundRobin = true, count = Some(5))
-        .groupBy("part_id").agg(count(lit(1)).as("n"))),
-    "q34_transformation" -> ((s, d) =>
-      Transformation(pts(s, d), Seq(
-        2, 0, 0, 100,
-        0, 0.5, 0, -50,
-        0, 0, 1, 0,
-        0, 0, 0, 1))
-        .select(col("order_key"), col("x").as("tx"), col("y").as("ty"))),
-    "q35_mad_filter" -> ((s, d) =>
-      Mad(pts(s, d), "x", k = 2.0).select("order_key")),
-    "q36_eigen_features" -> ((s, d) => {
-      // neighborhood covariance features (filters.normal family) on a
-      // deterministic subset; the oracle replicates the closed-form
-      // Smith eigensolver operation-for-operation in SQL. `+ 0.0`
-      // normalizes IEEE -0.0 on both sides.
-      val p = pts(s, d).filter(col("order_key") < 2000)
-        .withColumn("classification", lit(0))
-      EigenFeatures(p, k = 8)
-        .select(col("order_key"), (round(col("planarity"), 3) + lit(0.0)).as("pl"),
-          (round(col("sphericity"), 3) + lit(0.0)).as("sp"))
-    }),
-    "q37_density_boundary" -> ((s, d) => {
-      // hexbin boundary polygon (kernels.density primary output). The
-      // tracing is driver-side over the occupied-hex set, but its
-      // metadata is SQL-checkable: every ring of n vertices has n edges,
-      // so total vertices == boundary-edge count == sum over occupied
-      // hexes of (6 - occupied neighbors); area == occupied * hex area.
-      // (Ring count stays ScalaTest-only — component counting isn't
-      // expressible without recursion over the engine-traced rings.)
-      val r = HexBoundary.densityReport(pts(s, d), edge = 400.0)
-      import s.implicits._
-      Seq((r.vertices, r.occupiedHexes,
-        math.round(r.area))).toDF("vertices", "occupied", "area_rnd")
-    }),
-    "q38_optimal_neighborhood" -> ((s, d) => {
-      // eigenentropy-minimizing neighborhood size (optimal_radius is
-      // bit-identical across engines: same d2 arithmetic, IEEE sqrt)
-      val p = pts3(s, d).filter(col("order_key") < 2000)
-      OptimalNeighborhood(p, kMin = 6, kMax = 12)
-        .select(col("order_key"), col("optimal_knn"), col("optimal_radius"))
-    }),
-    "q39_planefit" -> ((s, d) => {
-      // plane-fit criterion needs 3D structure: derive z like x/y
-      val p = pts3(s, d).filter(col("order_key") < 2000)
-      PlaneFit(p, knn = 8)
-        .select(col("order_key"), (round(col("plane_fit"), 3) + lit(0.0)).as("pf"))
-    }),
-    "q40_miniball" -> ((s, d) => {
-      val p = pts3(s, d).filter(col("order_key") < 2000)
-      MiniballFilter(p, knn = 8)
-        .select(col("order_key"), (round(col("miniball"), 3) + lit(0.0)).as("mb"))
-    }),
-    "q41_ngram_jaccard" -> ((s, d) => {
-      // exact n-gram Jaccard verification over a deterministic pair set
-      // (doc rank 2k vs 2k+1 — range-partitioned rank, no global window);
-      // the oracle rebuilds shingle sets and set-jaccard in SQL
-      val docs = t(s, d, "documents").select("doc_id", "text")
-      val ranked = Order.globalRankBy(docs, Seq(col("doc_id").asc), "__rn")
-      val a = ranked.filter(col("__rn") % 2 === 0)
-        .select(floor(col("__rn") / 2).as("g"), col("doc_id").as("id_a"))
-      val b = ranked.filter(col("__rn") % 2 === 1)
-        .select(floor(col("__rn") / 2).as("g"), col("doc_id").as("id_b"))
-      val pairs = a.join(b, "g").select("id_a", "id_b")
-      Dedup.ngramJaccard(t(s, d, "documents"), pairs, n = 3)
-        .select(col("id_a"), col("id_b"),
-          (round(col("jaccard"), 3) + lit(0.0)).as("j"))
-    }),
-    "q42_embedding_neardup" -> ((s, d) => {
-      // embedding-cosine near-dup over the embeddings table with
-      // deterministic planted duplicates (same direction, 2x scale ->
-      // cosine 1.0). At threshold 0.999 the verified pair set is exactly
-      // {pairs at cosine ~1.0}: 2x scaling is a binary-exponent shift, so
-      // the unit vectors are bit-identical and collide in EVERY LSH band
-      // (recall deterministically 1), while the max random-pair cosine in
-      // this data is ~0.51 — so a brute-force DuckDB oracle hash-matches.
-      val emb = t(s, d, "embeddings")
-        .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-      val dups = emb.filter(col("vec_id") < 20)
-        .select((col("vec_id") + 1000000L).as("vec_id"),
-          transform(col("embedding"), x => (x * 2.0).cast("float")).as("embedding"))
-      Dedup.embeddingNearDup(emb.unionByName(dups), threshold = 0.999)
-        .select(col("id_a"), col("id_b"),
-          (round(col("cosine"), 3) + lit(0.0)).as("cos"))
-    }),
-    "q43_ann_ivf_exact" -> ((s, d) => {
-      // IVF with nprobe = nlist probes every cell: the bucketed rerank
-      // machinery must reproduce the exact brute-force top-k, so the
-      // same list_cosine oracle hash-verifies the whole IVF path
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") % 100 === 0)
-      Ann.ivfTopK(emb, q, k = 5, nlist = 16, nprobe = 16, iters = 1)
-        .select(col("query_id"), col("vec_id"), col("rank").cast("long").as("rnk"))
-    }),
-    "q44_ann_ivfpq_exact" -> ((s, d) => {
-      // IVF-PQ exact path: every cell probed AND the ADC top-rerank
-      // covers every candidate, so codebook training, byte-code encode,
-      // per-cell LUT scan, and the exact float rerank must together
-      // reproduce brute force — hash-verified by the same oracle as q43
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") % 100 === 0)
-      Ann.ivfPqTopK(emb, q, k = 5, nlist = 16, nprobe = 16, m = 8,
-        ksub = 16, rerank = 1000000, iters = 1)
-        .select(col("query_id"), col("vec_id"), col("rank").cast("long").as("rnk"))
-    }),
-    "q45_minhash_lsh_exact" -> ((s, d) => {
-      // MinHash-LSH end-to-end in the deterministic regime (the q42
-      // trick): planted exact duplicates have identical shingle sets ->
-      // identical 64-hash signatures -> they collide in EVERY band
-      // (recall deterministically 1). Candidates from the banded LSH
-      // machinery are verified with TRUE set-jaccard and kept only at
-      // jaccard = 1.0, so the output pair set is exactly {pairs with
-      // identical shingle sets} — brute-force SQL-expressible. Any pair
-      // the signature/band/bucket machinery dropped would hash-mismatch.
-      val docs = t(s, d, "documents")
-        .select(col("doc_id").cast("string").as("doc_id"), col("text"))
-      val dups = docs.filter(col("doc_id").cast("long") % 50 === 0)
-        .select(concat(col("doc_id"), lit("_d")).as("doc_id"), col("text"))
-      val all = docs.unionByName(dups)
-      val cand = Dedup.minhashLsh(all, threshold = 1.0, numHashes = 64,
-          bands = 8).select("id_a", "id_b")
-      Dedup.ngramJaccard(all, cand, n = 3)
-        .filter(col("jaccard") >= 1.0)
-        .select("id_a", "id_b")
-    }),
-    "q46_simhash_exact" -> ((s, d) => {
-      // simhash chunk-bucket machinery in the deterministic regime:
-      // identical normalized token streams -> identical 64-bit
-      // fingerprints -> hamming 0 -> same key in every chunk bucket.
-      // Candidates verified with exact normalized-text equality, so the
-      // output pair set is exactly {normalized-equal pairs} — SQL-
-      // expressible; a candidate dropped by the fingerprint or bucket
-      // join would hash-mismatch.
-      val docs = t(s, d, "documents")
-        .select(col("doc_id").cast("string").as("doc_id"), col("text"))
-      val dups = docs.filter(col("doc_id").cast("long") % 50 === 0)
-        .select(concat(col("doc_id"), lit("_d")).as("doc_id"), col("text"))
-      val all = docs.unionByName(dups)
-      val pairs = Dedup.simhashPairs(all, maxHamming = 0)
-        .select("id_a", "id_b")
-      val nrm = all.select(col("doc_id"),
-        regexp_replace(trim(lower(col("text"))), "\\s+", " ").as("nt"))
-      pairs
-        .join(nrm.select(col("doc_id").as("id_a"), col("nt").as("na")), Seq("id_a"))
-        .join(nrm.select(col("doc_id").as("id_b"), col("nt").as("nb")), Seq("id_b"))
-        .filter(col("na") === col("nb"))
-        .select("id_a", "id_b")
-    }),
-    "q47_hag_nn" -> ((s, d) => {
-      // filters.hag_nn: every 5th point is ground; IDW over the 3
-      // nearest ground points in 2D (ties pinned on (d2, order_key))
-      val p = pts3(s, d).withColumn("classification",
-        when(col("order_key") % 5 === 0, lit(2)).otherwise(lit(1)))
-      HagNn(p, count = 3)
-        .select(col("order_key"),
-          (round(col("height_above_ground"), 6) + lit(0.0)).as("hag"))
-    }),
-    "q48_zsmooth" -> ((s, d) =>
-      Zsmooth(pts3(s, d), radius = 300.0, medianPercent = 50.0)
-        .select(col("order_key"),
-          (round(col("z_smooth"), 6) + lit(0.0)).as("zsm"))),
-    "q49_pmf" -> ((s, d) => {
-      // filters.pmf in its one-window regime (max_window_size = 3 stops
-      // the schedule after the first opening): min-surface -> nearest
-      // inpaint -> 1-step diamond erode+dilate -> height threshold, all
-      // SQL-expressible. Coordinates scaled to a ~21x21-cell grid.
-      val p = pts3(s, d).select(col("order_key"),
-        (col("x") / 500.0).as("x"), (col("y") / 500.0).as("y"), col("z"))
-      Pmf(p, cellSize = 1.0, initialDistance = 50.0, maxDistance = 50.0,
-          maxWindowSize = 3.0, slope = 1.0, returns = Seq.empty)
-        .select(col("order_key"), col("classification"))
-    }),
-    "q50_skewness" -> ((s, d) => {
-      // filters.skewnessbalancing: integer-valued z keeps the centered
-      // power sums FP-exact in any summation order, so the engine's
-      // range-partitioned prefix sums and the oracle's window sums
-      // produce bit-identical running skewness
-      val p = t(s, d, "events").select(col("event_id").as("order_key"),
-        ((col("event_id") * 13) % 1000).cast("double").as("z"))
-      SkewnessBalancing(p).select(col("order_key"), col("classification"))
-    }),
-    "q51_hag_dem" -> ((s, d) => {
-      // filters.hag_dem: DEM raster built as the per-cell min-z table;
-      // integer-valued z makes z - dem exact, no rounding needed
-      val p = pts3(s, d).withColumn("classification",
-        when(col("order_key") % 7 === 0, lit(2)).otherwise(lit(1)))
-      val raster = p.groupBy(floor(col("x") / 500.0).cast("long").as("cell_x"),
-          floor(col("y") / 500.0).cast("long").as("cell_y"))
-        .agg(min("z").as("band1"))
-      HagDem(p, raster, RasterGrid(0, 0, 500.0))
-        .select(col("order_key"), col("height_above_ground").as("hag"))
-    }),
-    "q53_icp" -> ((s, d) => {
-      // filters.icp: moving = fixed under a small rigid motion chosen
-      // INSIDE the NN-correspondence basin (0.1 deg about z + (8, -5,
-      // 4): max displacement ~25 units, well under the ~140-unit point
-      // spacing, so nearest-neighbor correspondences are exact from
-      // iteration 1 and ICP converges to the identity registration to
-      // ~1e-6). Fixed coords are integers, so round(*, 1) makes the
-      // registered output EQUAL the fixed coordinates — a plain SQL
-      // oracle. (Transform recovery at tight tolerances is further
-      // asserted in IcpSpec.)
-      val fixed = pts3(s, d).filter(col("order_key") % 20 === 0)
-      val th = math.toRadians(0.1)
-      val (c0, s0) = (math.cos(th), math.sin(th))
-      val movingAway = fixed.select(col("order_key"),
-        (lit(c0) * col("x") - lit(s0) * col("y") + 8.0).as("x"),
-        (lit(s0) * col("x") + lit(c0) * col("y") - 5.0).as("y"),
-        (col("z") + 4.0).as("z"))
-      val res = Icp(fixed, movingAway, maxIter = 10, cellSize = 500.0)
-      res.df.select(col("order_key"),
-        (round(col("x"), 1) + lit(0.0)).as("rx"),
-        (round(col("y"), 1) + lit(0.0)).as("ry"))
-    }),
-    "q54_hag_delaunay" -> ((s, d) => {
-      // filters.hag_delaunay in a deterministic regime: ground is a
-      // complete 21x21 grid (spacing 100) on the exact plane
-      // z = 100 + 0.25x - 0.125y; queries sit >= 100 inside the grid
-      // with +0.25 lattice offset (no coincident-xy path), and with
-      // count=16 the containing cell's 4 corners are always among the
-      // neighbors, so the query is inside its local triangulation and
-      // ANY Delaunay triangle of plane samples interpolates the plane
-      // -> hag = z - plane(x, y), plain SQL. Plane values have <= 5
-      // fractional decimal digits, so round(6) absorbs barycentric FP.
-      val ev = t(s, d, "events").select(col("event_id"))
-      val g = ev.filter(col("event_id").between(1, 441)).select(
-          col("event_id").as("order_key"),
-          (((col("event_id") - 1) % 21) * 100).cast("double").as("x"),
-          (floor((col("event_id") - 1) / 21) * 100).cast("double").as("y"))
-        .withColumn("z", lit(100.0) + col("x") * 0.25 - col("y") * 0.125)
-        .withColumn("classification", lit(2))
-      val q = ev.filter(col("event_id") > 441).select(
-          col("event_id").as("order_key"),
-          (((col("event_id") * 7919) % 1700).cast("double") + 100.25).as("x"),
-          (((col("event_id") * 104729) % 1700).cast("double") + 100.25).as("y"),
-          ((col("event_id") * 131) % 1000).cast("double").as("z"))
-        .withColumn("classification", lit(1))
-      HagDelaunay(g.unionByName(q), count = 16)
-        .select(col("order_key"),
-          (round(col("height_above_ground"), 6) + lit(0.0)).as("hag"))
-    }),
-    "q55_delaunay" -> ((s, d) => {
-      // filters.delaunay in a deterministic regime: two rows y=0/y=1,
-      // the top row shifted +0.5 (sheared lattice). The Delaunay
-      // triangulation is UNIQUE (no cocircular empty-circle quads: the
-      // only concyclic 4-subsets have a 5th point strictly inside), so
-      // the face table is enumerable in SQL: up (b_i, b_{i+1}, t_i) and
-      // down (b_{i+1}, t_{i+1}, t_i) triangles, canonically rotated.
-      DelaunayMesh(latticePts(s, d))
-    }),
-    "q56_faceraster" -> ((s, d) => {
-      // filters.faceraster over the q55 lattice TIN: every quantity in
-      // the bbox-loop + barycentric chain is a dyadic rational (grid
-      // positions are multiples of 0.25, detT = 1, l's are multiples of
-      // 0.125, z integer), so engine and DuckDB agree bit-for-bit
-      val pts = latticePts(s, d)
-        .withColumn("z", ((col("order_key") * 131) % 7).cast("double"))
-      FaceRaster(pts, DelaunayMesh(pts), edgeLength = 0.5,
-          origin = Some((0.0, 0.0)), widthHeight = Some((1000L, 2L)))
-        .select(col("cell_x"), col("cell_y"),
-          (round(col("band1"), 6) + lit(0.0)).as("band1"))
-    }),
-    "q57_csf" -> ((s, d) => {
-      // filters.csf in a margin-robust regime: flat ground covering a
-      // complete 21x21 cell grid except 16 isolated single-cell "roof"
-      // returns 50 up. Ground clamps the cloth at the surface in 2
-      // iterations; each roof particle hovers within ~0.04 of ground
-      // level held by its 16 clamped neighbors, so the classification
-      // is exactly roof -> 1 (|cloth - (-50)| ~ 50 >> 0.5) and ground
-      // -> 2 (|0 - 0| = 0), independent of exact cloth positions.
-      Csf(roofScene(s, d), iterations = 200)
-        .select(col("order_key"), col("classification"))
-    }),
-    "q58_litree" -> ((s, d) => {
-      // filters.litree in a provable regime: 16 collinear "crowns" 150
-      // apart (> the 130 dominance radius -> one round, contexts pure),
-      // each 21 points at increasing gaps p_k = 0.02k^2 with strictly
-      // decreasing hag. In key order every interior point's nearest-Pi
-      // gap (0.02(2k-1)) stays below its distance to the dummy point
-      // n0 = the outermost point (0.02(400-k^2)), so Pi = the first 20
-      // points exactly; n0 itself stays unsegmented. cluster_id = tree
-      // rank by height = t + 1.
-      val ev = t(s, d, "events").filter(col("event_id").between(1, 336))
-      val p = ev.select(col("event_id").as("order_key"),
-        (floor((col("event_id") - 1) / 21) * 150.0 +
-          pow((col("event_id") - 1) % 21, 2) * 0.02).as("x"),
-        lit(0.0).as("y"),
-        (lit(20.0) - floor((col("event_id") - 1) / 21) * 0.5 -
-          ((col("event_id") - 1) % 21) * 0.1).as("height_above_ground"))
-      LiTree(p).select(col("order_key"), col("cluster_id"))
-    }),
-    "q52_smrf" -> ((s, d) => {
-      // filters.smrf end-to-end (low mask, progressive opening 1..2,
-      // provisional DEM inpaint, slope-adaptive threshold) in a provable
-      // regime: flat ground over a complete 21x21 cell grid with 16
-      // isolated 50-high roof cells. The opening removes each isolated
-      // peak at window 1 (50 >> slope*cell) so roof cells are voided;
-      // the 8-NN inpaint then averages SURVIVING cells which are all
-      // exactly 0 — the mean is 0 whichever 8 the tie order picks — so
-      // ZIpro == 0 everywhere, the gradient is 0, and classification is
-      // exactly roof -> 1, ground -> 2 (margins 50 vs threshold 0.5).
-      // Realistic-terrain behavior is covered by GroundSpec's planted
-      // scenes.
-      Smrf(roofScene(s, d), cell = 1.0, slope = 1.0, scalar = 1.25, threshold = 0.5,
-          window = 2.0, returns = Seq.empty)
-        .select(col("order_key"), col("classification"))
-    }),
-    "q59_poisson" -> ((s, d) => {
-      import s.implicits._
-      // filters.poisson on a Fibonacci sphere (R=30) with exact outward
-      // normals. The oracle checks provable invariants of the extracted
-      // level set rather than FP-dependent coordinates: marching
-      // tetrahedra on a generic grid field yields a CLOSED ORIENTED
-      // 2-manifold (every undirected edge on exactly 2 faces, every
-      // directed edge used exactly once), sphere topology gives Euler
-      // characteristic V - E + F = 2, and a well-sampled sphere keeps
-      // every vertex within 1.5 grid cells of the true radius
-      // (PoissonSpec proves the same invariants with margin).
-      val n = 1000
-      val ga = math.Pi * (3.0 - math.sqrt(5.0))
-      val ev = t(s, d, "events").filter(col("event_id").between(0, n - 1))
-      val zu = lit(1.0) - (col("event_id") * 2.0 + 1.0) / n
-      val ru = sqrt(greatest(lit(0.0), lit(1.0) - zu * zu))
-      val th = col("event_id") * ga
-      val pts = ev.select(col("event_id").as("order_key"),
-        (lit(100.0) + lit(30.0) * ru * cos(th)).as("x"),
-        (lit(200.0) + lit(30.0) * ru * sin(th)).as("y"),
-        (lit(50.0) + lit(30.0) * zu).as("z"),
-        (ru * cos(th)).as("normal_x"), (ru * sin(th)).as("normal_y"),
-        zu.as("normal_z"))
-      val res = Poisson(pts, depth = 5, outputNormals = false)
-      val faces = res.faces.persist()
-      val dirEdges = faces.select(explode(array(
-          struct(col("a").as("u"), col("b").as("v")),
-          struct(col("b").as("u"), col("c").as("v")),
-          struct(col("c").as("u"), col("a").as("v")))).as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v"))
-      // one aggregate per table instead of one count per invariant: the
-      // depth-5 mesh is tiny, so the invariant chain is job-overhead-bound
-      val undAgg = dirEdges.select(least(col("u"), col("v")).as("p"),
-          greatest(col("u"), col("v")).as("q"))
-        .groupBy("p", "q").agg(count(lit(1)).as("cnt"))
-        .agg(count(lit(1)).as("e"), coalesce(sum(
-          when(col("cnt") =!= 2, 1L).otherwise(0L)), lit(0L)).as("nonman"))
-        .head()
-      val (e, nonman) = (undAgg.getLong(0), undAgg.getLong(1))
-      val dirAgg = dirEdges.groupBy("u", "v").agg(count(lit(1)).as("cnt"))
-        .agg(coalesce(sum(col("cnt")), lit(0L)).as("tot"), coalesce(sum(
-          when(col("cnt") =!= 1, 1L).otherwise(0L)), lit(0L)).as("dup"))
-        .head()
-      val (f, dirDup) = (dirAgg.getLong(0) / 3, dirAgg.getLong(1))
-      val hs = 1.25 * 60.0 / 32.0
-      val vAgg = res.vertices.agg(count(lit(1)).as("v"), coalesce(sum(
-          when(abs(sqrt(pow(col("x") - 100.0, 2) + pow(col("y") - 200.0, 2) +
-            pow(col("z") - 50.0, 2)) - 30.0) >= 1.5 * hs, 1L)
-            .otherwise(0L)), lit(0L)).as("outTol")).head()
-      val (v, outTol) = (vAgg.getLong(0), vAgg.getLong(1))
-      faces.unpersist(false)
-      Seq((v - e + f, nonman, dirDup, outTol)).toDF("euler",
-        "nonmanifold_edges", "orientation_violations", "out_of_tolerance")
-    }),
-    "q60_greedyprojection" -> ((s, d) => {
-      // filters.greedyprojection on the q55 sheared lattice with explicit
-      // +z normals: every gate passes (corner angles 53.1/63.4 deg in
-      // [min,max], all edges <= 1.118 < radius, coplanar normals), the
-      // local projections are the identity on xy, and the lattice's DT is
-      // unique — so the Gopi consensus mesh equals the q55 face
-      // enumeration exactly, orientation CCW from the +z normals.
-      // num_neighbors=8 suffices: every point has exactly <= 4 neighbors
-      // inside the 1.2 gate radius (next nearest are at 1.8+), and the
-      // consensus mesh depends only on the gate-surviving set — k merely
-      // has to cover it, and a small k avoids wide kNN ring escalation
-      // over the 500x1 anisotropic extent.
-      GreedyProjection(latticePts(s, d).withColumn("z", lit(0.0))
-          .withColumn("normal_x", lit(0.0)).withColumn("normal_y", lit(0.0))
-          .withColumn("normal_z", lit(1.0)),
-        radius = 1.2, multiplier = 1.2, numNeighbors = 8, cellSize = 1.2)
-    }),
-    "q61_projpipeline" -> ((s, d) =>
-      // filters.projpipeline in a pure-arithmetic regime (axisswap +
-      // unitconvert + affine compile to the same IEEE ops DuckDB runs);
-      // the utm/cart/helmert steps are covered by ProjPipelineSpec
-      // roundtrips — their series aren't ANSI-SQL-expressible.
-      ProjPipeline(pts(s, d),
-        "+proj=pipeline +step +proj=axisswap +order=2,1 " +
-        "+step +proj=unitconvert +xy_in=m +xy_out=km " +
-        "+step +proj=affine +s11=2 +xoff=10 +s22=0.5 +yoff=-5")
-        .select(col("order_key"), col("x").as("px"), col("y").as("py"))),
-    // ---- round 3: spans invariant + formerly-ScalaTest-only ops ------
-    "q62_spans_pipeline" -> ((s, d) => {
-      // the BASELINE north-rule invariant end-to-end: crop -> splitter ->
-      // kNN-classify over a spans-bearing doc table; the serialized span
-      // sequence (kind, text, media_ref, offset in order) must survive
-      // every stage byte-for-byte. Spans are pure integer functions of
-      // order_key so the DuckDB oracle rebuilds them exactly.
-      spansFlagship(spansDocs(s, d))
-    }),
-    "q104_table_pipeline" -> ((s, d) => {
-      // The same north-rule flagship, but THROUGH the snapshot-table
-      // layer: the spans-bearing doc table is committed to a GraftTable
-      // in four x-banded snapshots, read back at head with
-      // manifest-level file pruning (the crop bbox never opens the
-      // x>=7500 band's files — required below), then crop -> splitter
-      // -> kNN runs over the table read. Emits exactly q62's rows: the
-      // span-sequence invariant survives the table layer
-      // byte-for-byte, so the two queries share one oracle.
-      val root = freshTmp("graft-table-pipe", d)
-      val docs = spansDocs(s, d)
-      for (b <- 0 until 4)
-        graft.sources.GraftTable.commit(
-          docs.filter(col("x") >= b * 2500.0 && col("x") < (b + 1) * 2500.0), root)
-      val (tbl, filesRead, filesTotal) = graft.sources.GraftTable.readBox(
-        s, root, 2000.5, 2000.5, 7000.5, 7000.5)
-      require(filesRead < filesTotal,
-        s"manifest pruning expected: read $filesRead of $filesTotal files")
-      spansFlagship(tbl)
-    }),
-    "q63_overlay" -> ((s, d) => {
-      // first-match-wins polygon dim assignment; .5 bounds vs integer
-      // coords -> no boundary ties, so plain SQL half-plane tests match
-      val p = pts(s, d).withColumn("classification", lit(0))
-      Overlay(p, Seq(
-        ("POLYGON ((1000.5 1000.5, 6000.5 1000.5, 6000.5 6000.5, 1000.5 6000.5, 1000.5 1000.5))", 10),
-        ("POLYGON ((4000.5 4000.5, 9000.5 4000.5, 9000.5 9000.5, 4000.5 9000.5, 4000.5 4000.5))", 20)),
-        "classification")
-        .select(col("order_key"), col("classification").cast("long").as("cls"))
-    }),
-    "q64_colorization" -> ((s, d) => {
-      // raster = per-1000-cell min(value) built from the same points ->
-      // both engines derive identical band values; join + scale is exact
-      val p = pts(s, d)
-      val g = RasterGrid(0.0, 0.0, 1000.0)
-      val raster = p.groupBy(g.cellX(col("x")).as("cell_x"),
-        g.cellY(col("y")).as("cell_y")).agg(min("value").as("band1"))
-      Colorization(p, raster, g, Seq(("band1", "red", 2.0)))
-        .select(col("order_key"), round(col("red"), 6).as("red"))
-    }),
-    "q65_dem" -> ((s, d) => {
-      // filters.dem: keep points with z within [dem-50, dem+300] of the
-      // per-cell min-z surface (integer-exact on both engines)
-      val p = pts3(s, d)
-      val g = RasterGrid(0.0, 0.0, 1000.0)
-      val raster = p.groupBy(g.cellX(col("x")).as("cell_x"),
-        g.cellY(col("y")).as("cell_y")).agg(min("z").as("band1"))
-      DemFilter(p, raster, g, loOffset = -50.0, hiOffset = 300.0)
-        .select("order_key")
-    }),
-    "q66_locate" -> ((s, d) =>
-      // argmin of z with (z, order_key) tie-break — single-row result
-      Locate(pts3(s, d), "z", minimum = true).select("order_key", "z")),
-    "q67_voxel_center_nn" -> ((s, d) =>
-      // voxelcenternearestneighbor: integer coords + 125-offset centers
-      // keep d2 integer-exact, ties break on order_key in both engines
-      Voxel.centerNearestNeighbor(pts3(s, d), cell = 250.0,
-          origin = Some((0.0, 0.0, 0.0)))
-        .select(col("order_key").as("kept_id"))),
-    "q68_voxel_centroid_nn" -> ((s, d) =>
-      // centroid = exact-integer-sum / count -> same double either engine
-      Voxel.centroidNearestNeighbor(pts3(s, d), cell = 250.0,
-          origin = Some((0.0, 0.0, 0.0)))
-        .select(col("order_key").as("kept_id"))),
-    "q69_sample_fixpoint" -> ((s, d) => {
-      // filters.sample in the clique regime: coords snapped to a 1000-grid
-      // make the conflict graph a disjoint union of same-cell cliques
-      // (cell diameter 0 < radius 400 < cell spacing 1000), so sequential
-      // greedy == min order_key per occupied cell — SQL-provable while the
-      // full pair-join + fixpoint machinery runs for real.
-      // capped at 1000 points (~5 per clique): the fixpoint's round count
-      // is the dependency-chain depth == clique size in this regime
-      val p = pts3(s, d).filter(col("order_key") < 1000)
-        .withColumn("x", floor(col("x") / 1000) * 1000.0)
-        .withColumn("y", floor(col("y") / 1000) * 1000.0)
-        .withColumn("z", floor(col("z") / 500) * 500.0)
-      Sample(p, radius = 400.0).select("order_key")
-    }),
-    "q70_outlier_stat" -> ((s, d) => {
-      // statistical outlier: mean distance to 4 nearest, global
-      // mean + 2*stddev threshold. Threshold comparisons are robust to
-      // the engines' sum-order ulps (md spacing >> 1e-12).
-      val p = pts3(s, d).filter(col("order_key") < 2000)
-        .withColumn("classification", lit(0))
-      Outlier.statistical(p, meanK = 4, multiplier = 2.0)
-        .select(col("order_key"), col("classification").cast("long").as("cls"))
-    }),
-    "q71_lof" -> ((s, d) => {
-      // local outlier factor, brute-force-checkable subset; rounded to
-      // absorb sum-order ulps in lrd/lof ratios
-      val p = pts3(s, d).filter(col("order_key") < 2000)
-      Lof(p, minPts = 4)
-        .select(col("order_key"), (round(col("lof"), 5) + lit(0.0)).as("lof_r"),
-          (round(col("nn_distance"), 5) + lit(0.0)).as("nnd_r"))
-    }),
-    "q72_gpstime" -> ((s, d) => {
-      // gpstimeconvert gws->gt with wrapped week-seconds: planted wraps
-      // every ~605 keys; the distributed unwrap (partition offsets +
-      // boundary comparisons) must reproduce the integer cumulative-bump
-      // prefix sum exactly
-      val p = pts(s, d).withColumn("gps_time",
-        ((col("order_key") * 1000) % 604800).cast("double"))
-      GpsTimeConvert.gws2gt(p, startDateWeekSeconds = 1000000.0, wrapped = true)
-        .select(col("order_key"), col("gps_time").cast("long").as("gt"))
-    }),
-    "q73_mongo" -> ((s, d) =>
-      graft.expr.MongoFilter(t(s, d, "events"),
-        """{"$and":[{"value":{"$gte":10.0}},{"event_type":{"$in":["click","view"]}}]}""")
-        .select(col("event_id"))),
-    "q74_expression" -> ((s, d) =>
-      // PDAL expression grammar -> Catalyst; integer-exact arithmetic
-      graft.expr.ExpressionFilter(pts(s, d),
-        "(x > 1000 && x <= 8000 && !(y >= 6000)) || x + y * 2 < 1500")
-        .select("order_key")),
-    "q75_reprojection" -> ((s, d) => {
-      // wgs84 -> web mercator; floor to integer meters absorbs libm
-      // last-ulp differences between JVM and DuckDB (~1e-8 m here)
-      val ll = t(s, d, "events").select(
-        col("event_id").as("order_key"),
-        ((col("event_id") * 7) % 350 - 175 + 0.5).cast("double").as("x"),
-        ((col("event_id") * 13) % 160 - 80 + 0.25).cast("double").as("y"),
-        lit(0.0).as("z"))
-      Reprojection.wgs84ToWebMercator(ll)
-        .select(col("order_key"), floor(col("x")).cast("long").as("mx"),
-          floor(col("y")).cast("long").as("my"))
-    }),
-    "q76_dbscan" -> ((s, d) => {
-      // 20 planted clusters (diameter ~14 << eps 50, gap 2000): all
-      // points core, cluster id = dense rank of min order_key; capped at
-      // 20k points so the radius self-join stays bounded at any sf
-      val p = t(s, d, "events").filter(col("event_id") < 20000).select(
-        col("event_id").as("order_key"),
-        ((col("event_id") % 20) * 2000 + (col("event_id") * 7) % 11).cast("double").as("x"),
-        ((col("event_id") * 13) % 11).cast("double").as("y"),
-        lit(0.0).as("z"))
-      Dbscan(p, eps = 50.0, minPoints = 3)
-        .select(col("order_key"), col("cluster_id"))
-    }),
-    "q77_kmeans" -> ((s, d) => {
-      // deterministic init = 8 lowest order_keys (event_id 0..7), planted
-      // exactly at the 8 cluster centers -> assignment == membership
-      val p = t(s, d, "events").select(
-        col("event_id").as("order_key"),
-        ((col("event_id") % 8) * 1000 +
-          when(col("event_id") < 8, 0).otherwise((col("event_id") * 7) % 10))
-          .cast("double").as("x"),
-        when(col("event_id") < 8, 0.0)
-          .otherwise(((col("event_id") * 13) % 10).cast("double")).as("y"),
-        lit(0.0).as("z"))
-      KMeans(p, k = 8).select(col("order_key"), col("cluster_id"))
-    }),
-    "q78_colorinterp" -> ((s, d) =>
-      // linear ramp over [0, 1000): identical IEEE divide/multiply/floor
-      ColorInterp(pts3(s, d), "z", minValue = Some(0.0), maxValue = Some(1000.0))
-        .select(col("order_key"), col("red").cast("long").as("r"),
-          col("green").cast("long").as("g"), col("blue").cast("long").as("b"))),
-    "q79_merge_scanline" -> ((s, d) => {
-      // merge (UNION ALL) of two disjoint halves, then separatescanline:
-      // view = exclusive prefix sum of planted edge flags / groupsOf 2
-      val p = pts(s, d).withColumn("edge_of_flight_line",
-        when(col("order_key") % 50 === 0, 1).otherwise(0))
-      val merged = Merge(Seq(p.filter(col("order_key") % 2 === 0),
-        p.filter(col("order_key") % 2 === 1)))
-      SeparateScanLine(merged, groupsOf = 2)
-        .select(col("order_key"), col("view_id"))
-    }),
-    "q80_nndistance" -> ((s, d) =>
-      // kth-neighbor distance: sqrt of integer-exact d2, bit-identical
-      NNDistance(pts3(s, d).filter(col("order_key") < 2000), k = 4)
-        .select(col("order_key"), col("nn_distance"))),
-    "q81_elm" -> ((s, d) => {
-      // extended local minimum: z-gap walk per 500-cell, integer z
-      val p = pts3(s, d).withColumn("classification", lit(0))
-      Elm(p, cell = 500.0, threshold = 40.0)
-        .select(col("order_key"), col("classification").cast("long").as("cls"))
-    }),
-    "q82_iqr" -> ((s, d) =>
-      // interpolated quartiles over integer values: Spark percentile and
-      // DuckDB quantile_cont share the linear-interpolation definition
-      Iqr(pts(s, d), "x", k = 0.5).select("order_key")),
-    "q83_stac_union" -> ((s, d) => {
-      // readers.stac end-to-end through the oracle gate: a 3-item catalog
-      // whose items are slices of pts (A: order_key<5000, C: >=5000, both
-      // bbox [0,10000]^2) plus item B whose bbox is disjoint from the
-      // query bounds AND whose asset file does not exist — bounds-pruning
-      // B before I/O is what lets the read succeed at all. Result =
-      // pts clipped to the bounds, which DuckDB rebuilds directly.
-      val dir = java.nio.file.Paths.get(
-        s"/tmp/graft-stac-${Integer.toHexString(d.hashCode)}")
-      java.nio.file.Files.createDirectories(dir)
-      val p = pts(s, d).select("order_key", "x", "y")
-      p.filter(col("order_key") < 5000)
-        .write.mode("overwrite").parquet(s"$dir/itemA.parquet")
-      p.filter(col("order_key") >= 5000)
-        .write.mode("overwrite").parquet(s"$dir/itemC.parquet")
-      def item(id: String, bbox: String, asset: String) =
-        s"""{"type":"Feature","id":"$id","bbox":$bbox,"properties":{},
-            "assets":{"data":{"href":"$asset"}}}"""
-      java.nio.file.Files.writeString(dir.resolve("A.json"),
-        item("a", "[0,0,10000,10000]", "itemA.parquet"))
-      java.nio.file.Files.writeString(dir.resolve("B.json"),
-        item("b", "[50000,50000,60000,60000]", "missing.parquet"))
-      java.nio.file.Files.writeString(dir.resolve("C.json"),
-        item("c", "[0,0,10000,10000]", "itemC.parquet"))
-      java.nio.file.Files.writeString(dir.resolve("catalog.json"),
-        """{"type":"Catalog","id":"root","links":[
-            {"rel":"item","href":"A.json"},{"rel":"item","href":"B.json"},
-            {"rel":"item","href":"C.json"}]}""")
-      graft.sources.StacReader.read(s, s"$dir/catalog.json",
-        bounds = Some((0.0, 0.0, 8000.0, 8000.0)))
-    }),
-    "q84_ply_roundtrip" -> ((s, d) => {
-      // writers.ply -> readers.ply round trip through the oracle gate:
-      // integral coords print exactly at any fixed precision, event_ids
-      // are dense from 1, so the read-back face indices (vertex ranks)
-      // are (k-1, k, k+1) — pure SQL. Faces join back to their corner-a
-      // coordinates to exercise both PLY elements in one hashed result.
-      val p = pts(s, d).filter(col("order_key").between(1, 1500))
-        .select("order_key", "x", "y", "z")
-      val faces = p.filter(col("order_key") % 3 === 1 &&
-          col("order_key") <= 1498)
-        .select(col("order_key").as("a"), (col("order_key") + 1).as("b"),
-          (col("order_key") + 2).as("c"))
-      val f = s"/tmp/graft-ply-${Integer.toHexString(d.hashCode)}.ply"
-      graft.sources.MeshWriters.writePly(p, faces, f)
-      val (v, fi) = graft.sources.PlyReader.readAscii(s, f)
-      val va = v.select(col("order_key").as("ia"),
-        col("x").as("xa"), col("y").as("ya"))
-      fi.join(va, fi("a") === va("ia"))
-        .select(col("a").as("ia"), col("b").as("ib"), col("c").as("ic"),
-          col("xa"), col("ya"))
-    }),
-    "q85_ferry_tail" -> ((s, d) => {
-      // filters.ferry + filters.tail: copy dims, then keep the last 1000
-      // points in insertion order (distributed global rank, no sort of
-      // the ride-along columns)
-      val p = Ferry(pts(s, d), Seq("value" -> "value_copy", "x" -> "x_orig"))
-      HeadTail.tail(p, 1000)
-        .select(col("order_key"), col("x"), col("value_copy"), col("x_orig"))
-    }),
-    "q86_mortonorder" -> ((s, d) =>
-      // filters.mortonorder at cell size 1.0 over integer coords: the
-      // quantization is exact, and the biased+sign-flipped Z-code orders
-      // identically to the raw bit-interleave the oracle computes (the
-      // bias adds a constant 2^62 for non-negative cell coords)
-      MortonOrder(pts(s, d), reverse = false, cellSize = 1.0)
-        .select(col("x"), col("y"), col("order_key").as("morton_rank"))),
-    "q87_radialdensity" -> ((s, d) =>
-      // filters.radialdensity: neighbor count (self included, d2 <= r^2
-      // exact over integer-derived coords) / sphere volume — the divide
-      // is the same IEEE sequence in both engines
-      RadialDensity(pts3(s, d).filter(col("order_key") < 2000), radius = 800.0)
-        .select(col("order_key"), col("radial_density"))),
-    "q88_reciprocity" -> ((s, d) =>
-      // filters.reciprocity: % of a point's k=4 neighbors that don't
-      // count it among their own k; kNN rank mirrors the (d2, cid)
-      // tie-break over exact-integer d2
-      Reciprocity(pts3(s, d).filter(col("order_key") < 1500), k = 4)
-        .select(col("order_key"), col("reciprocity"))),
-    "q89_checkpoint_resume" -> ((s, d) => {
-      // north-rule resumability through the oracle gate: a 3-stage
-      // checkpointed pipeline (crop -> assign -> tile agg) runs once,
-      // then runs AGAIN with every stage function replaced by one that
-      // throws — the second run can only succeed by resuming from the
-      // persisted stage data + lineage sidecars, never recomputing.
-      // The returned result is the RESUMED final stage.
-      val dir = s"/tmp/graft-ckpt-${Integer.toHexString(d.hashCode)}"
-      val hp = new org.apache.hadoop.fs.Path(dir)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      val stages = Seq[(String, DataFrame => DataFrame)](
-        "crop" -> (df => Crop.box2d(df, 1000.5, 1000.5, 9000.5, 9000.5)),
-        "assign" -> (df => Assign(df, "z", (col("order_key") % 97).cast("double"),
-          Some(col("x") < 5000.0))),
-        "tile_agg" -> (df => df.groupBy(
-          floor(col("x") / 1000).cast("long").as("cell_x"),
-          floor(col("y") / 1000).cast("long").as("cell_y"))
-          .agg(count(lit(1)).as("n"), sum(col("z").cast("long")).as("v"))))
-      val runner = new graft.pipeline.CheckpointRunner(s, dir)
-      runner.run(pts(s, d), stages) // populates every stage checkpoint
-      val poisoned = stages.map { case (n, _) =>
-        n -> ((_: DataFrame) => throw new IllegalStateException(
-          s"resume recomputed stage $n")): (String, DataFrame => DataFrame)
-      }
-      runner.run(pts(s, d), poisoned) // must resume, not recompute
-        .select("cell_x", "cell_y", "n", "v")
-    }),
-    "q90_media_plumbing" -> ((s, d) => {
-      // multimodal plumbing end-to-end: spans' media refs -> deterministic
-      // fake blobs (seed = Java String.hashCode, which the oracle
-      // recomputes arithmetically from the ref's digits) -> header decode
-      // + feature-extraction batch pass; meta and decoded dims must agree
-      val refs = spansDocs(s, d).select(explode(col("spans")).as("sp"))
-        .filter(col("sp.kind") =!= "text")
-        .groupBy(col("sp.media_ref").as("media_ref"))
-        .agg(min(col("sp.kind")).as("kind"))
-      val media = graft.media.Multimodal.synthMedia(s, refs)
-      val feats = graft.media.Multimodal.extractFeatures(media)
-      media.join(feats.select(col("media_ref"), col("width").as("dec_w"),
-          col("height").as("dec_h")), Seq("media_ref"))
-        .select(col("media_ref"), col("kind"),
-          col("meta.width").as("w"), col("meta.height").as("h"),
-          col("meta.sample_rate").as("rate"), col("meta.n_frames").as("frames"),
-          length(col("content")).as("blen"), col("dec_w"), col("dec_h"))
-    }),
-    "q91_fps" -> ((s, d) =>
-      // farthest-point sampling k=8 over the exact-integer subset; the
-      // oracle replays the greedy via a recursive CTE with the same
-      // (min-dist DESC, id ASC) argmax tie-break
-      Fps(pts3(s, d).filter(col("order_key") < 500), 8)
-        .select("order_key")),
-    "q92_voxel_center" -> ((s, d) =>
-      // voxeldownsize center mode: kept coords snap to voxel centers —
-      // (floor + 0.5) * cell is exact dyadic arithmetic in both engines
-      Voxel.downsize(pts3(s, d), cell = 250.0, mode = "center",
-          origin = Some((0.0, 0.0, 0.0)))
-        .select(col("order_key"), col("x"), col("y"), col("z"))),
-    "q93_dartthrowing" -> ((s, d) => {
-      // relaxationdartthrowing in a provable regime: 300 cells spaced
-      // 1000 apart, each holding A(0,0) < B(+300,0) < C(0,+600) in
-      // insertion order; min cross-cell distance 700. r0=700 keeps only
-      // the A's (300 < 600 target), the decayed r1=490 keeps A+C (600 >=
-      // target, stop) — so the full two-round shrink loop runs and the
-      // surviving set has the closed form {A, C}.
-      val p = t(s, d, "events").filter(col("event_id") < 900).select(
-        col("event_id").as("order_key"),
-        ((col("event_id") % 300) * 1000 +
-          when(floor(col("event_id") / 300) === 1, 300.0).otherwise(0.0))
-          .cast("double").as("x"),
-        when(floor(col("event_id") / 300) === 2, 600.0).otherwise(0.0)
-          .cast("double").as("y"),
-        lit(0.0).as("z"))
-      RelaxationDartThrowing(p, targetCount = 600, startRadius = 700.0,
-        decay = 0.7).select("order_key")
-    }),
-    "q94_delta" -> ((s, d) => {
-      // kernels.delta (DeltaKernel.cpp:45): per-point nearest-neighbor
-      // distance between two disjoint clouds, both directions. d2 values
-      // are exact integer-valued doubles, sqrt is IEEE-correctly-rounded
-      // in any engine, so the hash gate is exact.
-      val p = pts3(s, d)
-      val a = p.filter(col("order_key").between(1, 1500))
-        .select("order_key", "x", "y", "z")
-      val b = p.filter(col("order_key").between(1501, 3000))
-        .select("order_key", "x", "y", "z")
-      graft.pipeline.CloudMetrics.delta(a, b).withColumn("dir", lit("ab"))
-        .unionByName(
-          graft.pipeline.CloudMetrics.delta(b, a).withColumn("dir", lit("ba")))
-        .select(col("dir"), col("order_key"), col("nn_dist"))
-    }),
-    "q95_hausdorff_chamfer" -> ((s, d) => {
-      // kernels.hausdorff / kernels.chamfer (HausdorffKernel.cpp:48,
-      // ChamferKernel.cpp:46): both aggregates run on raw squared
-      // distances (exact integers -> order-independent sums), so the
-      // one-row result is bit-exact against any engine.
-      val p = pts3(s, d)
-      val a = p.filter(col("order_key").between(1, 1500))
-        .select("order_key", "x", "y", "z")
-      val b = p.filter(col("order_key").between(1501, 3000))
-        .select("order_key", "x", "y", "z")
-      val h = graft.pipeline.CloudMetrics.hausdorff(a, b)
-      val c = graft.pipeline.CloudMetrics.chamfer(a, b)
-      s.range(1).select(lit(h).as("hausdorff"), lit(c).as("chamfer"))
-    }),
-    "q96_randomize" -> ((s, d) => {
-      // filters.randomize: seeded deterministic shuffle — the splitmix64
-      // finalizer is pure 64-bit arithmetic the oracle replays in HUGEINT
-      // mod-2^64 SQL; x identifies the source row (7919 coprime to 1e4).
-      Randomize(pts(s, d).select("order_key", "x"), seed = 12345L)
-        .select(col("x"), col("order_key").as("shuffle_rank"))
-    }),
-    "q97_eval_metrics" -> ((s, d) => {
-      // kernels.eval (EvalKernel.cpp:48): per-class support/correct/recall
-      // of a deterministically perturbed prediction vs truth.
-      val base = t(s, d, "events").select(col("event_id").as("order_key"),
-        (col("event_id") % 5 + 1).cast("int").as("classification"))
-      val pred = base.withColumn("classification",
-        when(col("order_key") % 7 === 0, (col("classification") % 5) + 1)
-          .otherwise(col("classification")))
-      graft.pipeline.EvalKernel.metrics(pred, base)
-    }),
-    "q98_tindex_merge" -> ((s, d) => {
-      // kernels.tindex create+merge through the gate: four spatially
-      // banded files, an index over them, then a bounds merge that prunes
-      // two files by bbox before any data read (pruning itself is
-      // asserted in PipelineSpecSuite; the gate hashes the merged rows).
-      val p = pts(s, d).select("order_key", "x", "y")
-      val base = s"/tmp/graft-tidx-${Integer.toHexString(d.hashCode)}"
-      val files = (0 until 4).map { i =>
-        val f = s"$base/f$i"
-        p.filter(col("x") >= i * 2500 && col("x") < (i + 1) * 2500)
-          .write.mode("overwrite").parquet(f)
-        f
-      }
-      graft.pipeline.TIndexKernel.create(s, s"$base/index", files)
-      graft.pipeline.TIndexKernel.merge(s, s"$base/index",
-        0.0, 0.0, 4000.0, 10000.0)
-    }),
-    "q99_stream_density" -> ((s, d) => {
-      // Structured Streaming through the oracle gate: the watermarked
-      // windowed tile-density aggregation (streaming/DocStream.scala) over
-      // a file-arrival source, Trigger.AvailableNow to completion, memory
-      // sink in complete mode — the finite-input result equals the batch
-      // group-by the oracle computes.
-      val in = t(s, d, "events").select(
-        ((col("event_id") * 7919) % 10000).cast("double").as("x"),
-        ((col("event_id") * 104729) % 10000).cast("double").as("y"),
-        ((col("event_id") * 131) % 1000).cast("double").as("z"),
-        ((col("event_id") % 5000) * 7).cast("double").as("gps_time"))
-      val dir = s"/tmp/graft-stream-${Integer.toHexString(d.hashCode)}"
-      in.write.mode("overwrite").parquet(dir)
-      val stream = s.readStream.schema(in.schema).parquet(dir)
-      val agg = graft.streaming.DocStream.tileDensity(
-        stream, length = 1000.0, ox = 0.0, oy = 0.0)
-      val qn = s"q99_sink_${Integer.toHexString(d.hashCode)}"
-      s.catalog.dropTempView(qn) // repeat runs: don't reuse a stale sink
-      agg.writeStream.format("memory").queryName(qn)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start().awaitTermination()
-      s.table(qn).select(col("window.start").cast("long").as("win_start"),
-        col("tile_id"), col("n"), col("mean_z"))
-    }),
-    "q100_ogr_roundtrip" -> ((s, d) => {
-      // writers.ogr GeoJSONSeq round trip: distributed to_json emit, read
-      // back as newline JSON; Jackson's shortest-round-trip double
-      // formatting makes the coordinates exact through the text hop.
-      val p = pts(s, d).filter(col("order_key") < 4000)
-        .select(col("order_key"), col("x"), col("y"),
-          lit(0.0).as("z"), col("value"))
-      val path = s"/tmp/graft-ogr-${Integer.toHexString(d.hashCode)}"
-      graft.sources.OgrWriter.writeGeoJson(p, path, attrDims = Seq("value"))
-      s.read.json(path).select(
-        element_at(col("geometry.coordinates"), 1).as("x"),
-        element_at(col("geometry.coordinates"), 2).as("y"),
-        col("properties.value").as("value"))
-    }),
-    "q102_asof_media_join" -> ((s, d) => {
-      // Streaming AS-OF media join (flatMapGroupsWithState + event-time
-      // timeout) through the gate. Single-batch regime (one file per
-      // side): matched docs emit in the data batch; the trailing no-data
-      // batch advances the watermark to max_ts - 600s, flushing older
-      // unmatched docs left-outer. Docs unmatched AND inside the last
-      // 600s stay in state by design — the oracle reproduces exactly
-      // that emit set. The ref count scales with the table (n/100+1, odd
-      // so every residue class mod 4 carries media) keeping versions/ref
-      // ~25 at any sf — under the state cap, so no as-of match is ever
-      // evicted and the emit set is exactly the declarative as-of.
-      // Event times are shifted +1000 off epoch 0: a row whose event
-      // time EQUALS the current watermark is late by Spark's stateful
-      // late-row filter, and the initial watermark is epoch 0 — an
-      // unshifted ts=0 media row is silently dropped in batch 1.
-      val h = Integer.toHexString(d.hashCode)
-      val ev = t(s, d, "events")
-      val refs = ev.agg(max("event_id")).head.getLong(0) / 100L + 2L
-      val media = ev.filter(col("event_id") % 4 === 0).select(
-        concat(lit("m/"), col("event_id") % refs).as("media_ref"),
-        (col("event_id") + 1000L).as("ts"),
-        concat(lit("v"), col("event_id") + 1000L).as("meta"))
-      val docs = ev.filter(col("event_id") % 4 =!= 0).select(
-        concat(lit("m/"), col("event_id") % refs).as("media_ref"),
-        (col("event_id") + 1000L).as("ts"),
-        col("event_id").as("doc_id"))
-      val (mDir, dDir) = (s"/tmp/graft-asof-m-$h", s"/tmp/graft-asof-d-$h")
-      media.coalesce(1).write.mode("overwrite").parquet(mDir)
-      docs.coalesce(1).write.mode("overwrite").parquet(dDir)
-      val out = graft.streaming.DocStream.asOfJoinMedia(s,
-        s.readStream.schema(docs.schema).parquet(dDir),
-        s.readStream.schema(media.schema).parquet(mDir),
-        maxMediaHistory = 64) // ~25 versions/ref by construction; margin
-      val qn = s"q102_sink_$h"
-      s.catalog.dropTempView(qn) // repeat runs: don't append to a stale sink
-      val q = out.writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try {
-        q.processAllAvailable() // data batch: matched docs emit
-        q.processAllAvailable() // no-data batch: timeout flush past the wm
-      } finally q.stop()
-      s.table(qn).select(col("doc_id"), col("media_ref"), col("doc_ts"),
-        coalesce(col("media_ts"), lit(-1L)).as("media_ts"),
-        coalesce(col("meta"), lit("")).as("meta"))
-    }),
-    "q103_snapshot_table" -> ((s, d) => {
-      // GraftTable (Iceberg-style snapshot/manifest layer): two appended
-      // commits, a bbox read of each VERSION (time travel), tagged and
-      // unioned; the v1 read must NOT see the v2 rows. File-level
-      // manifest pruning is asserted in GraftTableSpec; the gate hashes
-      // the row-visibility semantics.
-      val root = freshTmp("graft-table", d)
-      val p = pts(s, d).select("order_key", "x", "y")
-      val v1 = graft.sources.GraftTable.commit(
-        p.filter(col("order_key") < 5000), root)
-      val v2 = graft.sources.GraftTable.commit(
-        p.filter(col("order_key") >= 5000), root)
-      val (r1, _, _) = graft.sources.GraftTable.readBox(
-        s, root, 0, 0, 3000, 10000, asOf = Some(v1))
-      val (r2, _, _) = graft.sources.GraftTable.readBox(
-        s, root, 0, 0, 3000, 10000, asOf = Some(v2))
-      r1.withColumn("snap", lit(1)).unionByName(r2.withColumn("snap", lit(2)))
-        .select("snap", "order_key", "x", "y")
-    }),
-    "q105_table_delete" -> ((s, d) => {
-      // GraftTable copy-on-write row-level delete: four x-banded commits,
-      // deleteBox removes the rows inside [2000,4000]x[0,10000] by
-      // rewriting ONLY the stats-intersecting files (require below — the
-      // outer bands' files carry their manifest rows forward untouched);
-      // the head read must show exactly the surviving rows, and the
-      // pre-delete snapshot must still read ALL rows (time travel
-      // across a delete). Emits both, tagged by snapshot.
-      val root = freshTmp("graft-table-del", d)
-      val p = pts(s, d).select("order_key", "x", "y")
-      for (b <- 0 until 4)
-        graft.sources.GraftTable.commit(
-          p.filter(col("x") >= b * 2500.0 && col("x") < (b + 1) * 2500.0), root)
-      val preDelete = graft.sources.GraftTable.currentVersion(root)
-      val (_, rewritten, total) =
-        graft.sources.GraftTable.deleteBox(s, root, 2000, 0, 4000, 10000)
-      require(rewritten < total,
-        s"copy-on-write expected: rewrote $rewritten of $total files")
-      val head = graft.sources.GraftTable.read(s, root)
-      val past = graft.sources.GraftTable.read(s, root, asOf = Some(preDelete))
-      head.withColumn("snap", lit(2))
-        .unionByName(past.withColumn("snap", lit(1)))
-        .select("snap", "order_key", "x", "y")
-    }),
-    "q106_table_zorder" -> ((s, d) => {
-      // commitClustered: the SAME scattered rows committed once plain and
-      // once z-order-clustered; the clustered table's footer bboxes must
-      // prune files the scattered layout cannot (require below — this is
-      // the write-side half of the pruning story: q104 proves banded
-      // commits prune, this proves the ENGINE can CREATE the prunable
-      // layout from scattered input). Rows must be identical either way,
-      // so the emit is the clustered bbox read — clustering must be
-      // row-invisible.
-      val root = freshTmp("graft-table-zo", d)
-      // scattered input needs no explicit pre-shuffle: commitClustered
-      // range-repartitions on the Morton key regardless of incoming
-      // partitioning, so an extra repartition here is a wasted shuffle
-      val p = pts(s, d).select("order_key", "x", "y")
-      graft.sources.GraftTable.commitClustered(p, root,
-        cellSize = 500.0, numFiles = 16)
-      val (df, filesRead, filesTotal) = graft.sources.GraftTable.readBox(
-        s, root, 2000.5, 2000.5, 4000.5, 4000.5)
-      require(filesRead < filesTotal,
-        s"z-order pruning expected: read $filesRead of $filesTotal files")
-      df.select("order_key", "x", "y")
-    }),
-    "q107_dedup_resolve" -> ((s, d) => {
-      // Transitive dup-group resolution (Dedup.resolveComponents over the
-      // shared Components CC): pairs are CHAINS — consecutive doc_ids
-      // within each normalized-text-equal group — so the engine must walk
-      // real multi-hop components (it cannot shortcut to a groupBy); the
-      // oracle knows the closed form (equality groups) and labels each
-      // doc with the group min. Engine-independent pair regime, same
-      // hash-collision caveat as q22 (green there).
-      val docs = t(s, d, "documents")
-      val fp = docs.withColumn("__fp",
-        xxhash64(regexp_replace(trim(lower(col("text"))), "\\s+", " ")))
-      val w = Window.partitionBy("__fp").orderBy("doc_id")
-      val pairs = fp.select(col("doc_id"), lag("doc_id", 1).over(w).as("prev"))
-        .filter(col("prev").isNotNull)
-        .select(col("prev").as("id_a"), col("doc_id").as("id_b"))
-      Dedup.resolveComponents(docs, pairs)
-        .select(col("doc_id"), col("dup_group"),
-          when(col("dup_group") === col("doc_id"), 1L).otherwise(0L)
-            .as("canonical"))
-    }),
-    "q108_table_incremental" -> ((s, d) => {
-      // GraftTable incremental read (Iceberg incremental scan): three
-      // banded commits; the delta v1 -> head must be exactly the rows of
-      // commits 2+3 — the downstream-consumer contract at 10^12 rows
-      // (process the delta since the last checkpointed version, never a
-      // full re-read). The non-append loud failure is spec-covered.
-      val root = freshTmp("graft-table-inc", d)
-      val p = pts(s, d).select("order_key", "x", "y")
-      val v1 = graft.sources.GraftTable.commit(
-        p.filter(col("order_key") < 3000), root)
-      graft.sources.GraftTable.commit(
-        p.filter(col("order_key") >= 3000 && col("order_key") < 6000), root)
-      graft.sources.GraftTable.commit(
-        p.filter(col("order_key") >= 6000), root)
-      graft.sources.GraftTable.readIncremental(s, root, fromVersion = v1)
-        .select("order_key", "x", "y")
-    }),
-    "q109_table_meta_agg" -> ((s, d) => {
-      // GraftTable metadata-only aggregates (Iceberg manifest-stats
-      // pushdown): four x-banded commits; countRows and extent answer
-      // from manifests with ZERO data files opened, and countBox counts
-      // the two interior bands from manifest rows alone, scanning only
-      // the straddling shell (require below). At 10^12 rows this is
-      // count(*) from kilobytes of metadata. The y-range of the box
-      // exceeds the data extent so x alone decides containment.
-      val root = freshTmp("graft-table-agg", d)
-      val p = pts(s, d).select("order_key", "x", "y")
-      for (b <- 0 until 4)
-        graft.sources.GraftTable.commit(
-          p.filter(col("x") >= b * 2500.0 && col("x") < (b + 1) * 2500.0), root)
-      val totalRows = graft.sources.GraftTable.countRows(s, root)
-      val (boxRows, scanned, total) = graft.sources.GraftTable.countBox(
-        s, root, 1250, -1, 8750, 10001)
-      require(scanned < total,
-        s"metadata fast path expected: scanned $scanned of $total files")
-      val (mnx, mxx, mny, mxy) = graft.sources.GraftTable.extent(s, root)
-      s.range(1).select(lit(totalRows).as("total_rows"),
-        lit(boxRows).as("box_rows"), lit(mnx).as("ext_minx"),
-        lit(mxx).as("ext_maxx"), lit(mny).as("ext_miny"),
-        lit(mxy).as("ext_maxy"))
-    }),
-    "q110_table_upsert" -> ((s, d) => {
-      // GraftTable copy-on-write upsert (the CDC write path): four
-      // key-banded commits give disjoint manifest key intervals; the
-      // delta updates 25 keys inside band 0 and inserts 10 new keys, so
-      // only band-0 files may be rewritten (require below). The head
-      // read must show updated values, inserted rows, and every other
-      // row untouched — DuckDB reconstructs the same merge declaratively.
-      val root = freshTmp("graft-table-ups", d)
-      val p = pts(s, d).select("order_key", "x", "y", "value")
-      for (b <- 0 until 4)
-        graft.sources.GraftTable.commit(
-          p.filter(col("order_key") >= b * 2500 &&
-            col("order_key") < (b + 1) * 2500), root)
-      val delta = p.filter(col("order_key") % 100 === 7 &&
-          col("order_key") < 2500)
-        .withColumn("value", col("value") * 2 + lit(1.0))
-        .unionByName(p.filter(col("order_key") < 10)
-          .select((col("order_key") + 20000).as("order_key"),
-            col("x"), col("y"), lit(-1.0).as("value")))
-      val (_, rewritten, total) =
-        graft.sources.GraftTable.upsert(s, root, delta)
-      require(rewritten < total,
-        s"key-interval pruning expected: rewrote $rewritten of $total files")
-      graft.sources.GraftTable.read(s, root)
-        .select("order_key", "x", "y", "value")
-    }),
-    "q111_table_evolution" -> ((s, d) => {
-      // Schema evolution through the driver gate: commit 1 lacks `value`
-      // (pre-evolution files read it as null), commit 2 adds it, commit 3
-      // appends NARROW rows after the evolution — the head schema must be
-      // the union (the narrowing-append hole this round fixed: a narrow
-      // append must not drop `value` from head reads). DuckDB rebuilds
-      // the same union with typed nulls.
-      val root = freshTmp("graft-table-evo", d)
-      val p = pts(s, d).select("order_key", "x", "y", "value")
-      graft.sources.GraftTable.commit(
-        p.filter(col("order_key") < 5000).select("order_key", "x", "y"), root)
-      graft.sources.GraftTable.commit(
-        p.filter(col("order_key") >= 5000), root)
-      graft.sources.GraftTable.commit(
-        p.filter(col("order_key") < 1000)
-          .select((col("order_key") + 10000).as("order_key"),
-            col("x"), col("y")), root)
-      graft.sources.GraftTable.read(s, root)
-        .select("order_key", "x", "y", "value")
-    }),
-    "q112_salted_count" -> ((s, d) => {
-      // Skew.saltedCount (two-level skew-proof aggregation) through the
-      // gate: 70% of rows share tile 0 (a hot key), the rest spread over
-      // ~30 tiles; the per-(key, salt) partial + per-key final must be
-      // EXACTLY a plain grouped count — salting is a physical rewrite,
-      // never a semantic one.
-      val keyed = pts(s, d).withColumn("tile_id",
-        when(col("order_key") % 10 < 7, lit(0L))
-          .otherwise(col("order_key") % 100))
-      graft.operators.Skew.saltedCount(keyed, "tile_id")
-        .select(col("tile_id"), col("n"))
-    }),
-    "q113_cellstore_box" -> ((s, d) => {
-      // CellStore (EPT/COPC-style cell-partitioned layout): write the
-      // point table partitioned by grid cell, read a box back through
-      // the partition-pruned path — the scan must open fewer partitions
-      // than the table holds (require below, from the executed plan),
-      // and the rows must be exactly the residual box predicate.
-      // cellLen sized so cells hold file-sized row groups at this SF —
-      // 100 cells, one file each (a 400-cell store spends its 5s on 400
-      // directory commits, overhead the layout should not pay)
-      val store = freshTmp("graft-cellstore", d)
-      val p = pts(s, d).select("order_key", "x", "y")
-      graft.sources.CellStore.write(p, store, 0.0, 0.0, 1000.0)
-      val out = graft.sources.CellStore.readBox(
-        s, store, 2000.5, 2000.5, 4000.5, 4000.5, 0.0, 0.0, 1000.0)
-      val (read, total) = graft.sources.CellStore.scanPartitionCounts(out)
-      require(read < total,
-        s"cell pruning expected: read $read of $total partitions")
-      out.select("order_key", "x", "y")
-    }),
-    "q101_text_roundtrip" -> ((s, d) => {
-      // readers.text + writers.text via the PIPELINE dialect itself
-      // (PipelineBuilder runs both JSON specs): CSV doubles round-trip
-      // exactly (shortest-repr write, full-precision parse).
-      val h = Integer.toHexString(d.hashCode)
-      pts(s, d).select("order_key", "x", "y", "value")
-        .createOrReplaceTempView(s"q101_in_$h")
-      val csv = s"/tmp/graft-text-$h"
-      graft.pipeline.PipelineBuilder.run(s, s"""{"pipeline":[
-        {"type":"readers.view","view":"q101_in_$h"},
-        {"type":"filters.range","limits":"order_key[0:4999]"},
-        {"type":"writers.text","filename":"$csv"}]}""")
-      graft.pipeline.PipelineBuilder.run(s, s"""{"pipeline":[
-        {"type":"readers.text","filename":"$csv"}]}""")
-        .select(col("order_key").cast("long").as("order_key"),
-          col("x").cast("double").as("x"), col("y").cast("double").as("y"),
-          col("value").cast("double").as("value"))
-    }),
-    "q114_media_codecs" -> ((s, d) => {
-      // REAL pure-JVM codec round trip, end-to-end: ids -> encoded blobs
-      // (PPM for even image ids, BMP for odd; WAV PCM16; GFV1 video of
-      // PPM frames) -> decode-side sums. Every output number is computed
-      // by PARSING the bytes (position-weighted wsum catches row-order /
-      // padding / endianness defects; rsum is a resize + re-encode +
-      // re-decode round trip; video sums its LAST frame so the demuxer
-      // walks all prior frames). The oracle recomputes the same sums
-      // from the payload arithmetic alone — a codec defect anywhere in
-      // encode OR decode breaks the hash.
-      val ids = t(s, d, "events")
-        .select((col("event_id") % 701).as("n")).distinct()
-        .withColumn("kind", when(col("n") % 3 === 0, "image")
-          .when(col("n") % 3 === 1, "audio").otherwise("video"))
-      val media = graft.media.Multimodal.synthRealMedia(s, ids)
-      graft.media.Multimodal.decodeFeatures(media)
-        .select("media_ref", "kind", "w", "h", "pcnt", "psum", "wsum", "rsum")
-    }),
-    "q115_glb_roundtrip" -> ((s, d) => {
-      // writers.gltf -> readers.gltf round trip, mirroring q84's PLY
-      // gate: integral coords stay exact through the float32 position
-      // block (< 2^24), and positions come back OFFSET-RELATIVE (the GLB
-      // drops the absolute mesh minimum, as the reference writer does),
-      // so the oracle subtracts the same per-axis minima. Read-back face
-      // indices are the 0-based vertex ranks (k-1, k, k+1).
-      val p = pts(s, d).filter(col("order_key").between(1, 1500))
-        .select("order_key", "x", "y", "z")
-      val faces = p.filter(col("order_key") % 3 === 1 &&
-          col("order_key") <= 1498)
-        .select(col("order_key").as("a"), (col("order_key") + 1).as("b"),
-          (col("order_key") + 2).as("c"))
-      val root = freshTmp("graft-glb", d)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-      val f = s"$root/mesh.glb"
-      graft.sources.MeshWriters.writeGlb(p, faces, f)
-      val (v, fi) = graft.sources.GlbReader.read(s, f)
-      val va = v.select(col("order_key").as("ia"),
-        col("x").as("xa"), col("y").as("ya"))
-      fi.join(va, fi("a") === va("ia"))
-        .select(col("a").as("ia"), col("b").as("ib"), col("c").as("ic"),
-          col("xa"), col("ya"))
-    }),
-    "q117_imageio_codecs" -> ((s, d) => {
-      // The JDK's own javax.imageio codecs (pure-JVM, no native libs)
-      // through the same decode-side gate as q114: ids -> really-encoded
-      // PNG / JPEG / TIFF / GIF blobs -> magic-byte dispatch ->
-      // decoded sums. PNG and TIFF round-trip RGB losslessly, so their
-      // psum/wsum/rsum are oracle-exact; JPEG (lossy DCT) and GIF
-      // (palettized) keep dims + element count exact and NULL out the
-      // value sums (their decode fidelity is bounded in MediaCodecsSpec
-      // instead — an exact-hash oracle cannot admit codec-version-
-      // dependent pixel values).
-      val ids = t(s, d, "events")
-        .select((col("event_id") % 311).as("n")).distinct()
-        .withColumn("fmt", when(col("n") % 4 === 0, "png")
-          .when(col("n") % 4 === 1, "jpg")
-          .when(col("n") % 4 === 2, "tiff").otherwise("gif"))
-      val media = graft.media.Multimodal.synthImageIOMedia(s, ids)
-      val lossless = col("fmt").isin("png", "tiff")
-      graft.media.Multimodal.decodeFeatures(media)
-        .withColumn("fmt", element_at(split(col("media_ref"), "/"), 2))
-        .select(col("media_ref"), col("fmt"), col("w"), col("h"), col("pcnt"),
-          when(lossless, col("psum")).as("psum"),
-          when(lossless, col("wsum")).as("wsum"),
-          when(lossless, col("rsum")).as("rsum"))
-    }),
-    "q118_v2_table" -> ((s, d) => {
-      // DataSource V2 read path: q103's snapshot semantics driven through
-      // spark.read.format("graft") — time travel via the asof option,
-      // bbox selection via ordinary Catalyst predicates that arrive
-      // through SupportsPushDownFilters and prune DATA FILES from the
-      // manifest footer stats (the require asserts files were actually
-      // skipped; the filters are ALSO re-applied above the scan, so the
-      // hash gate checks values, not just plumbing).
-      val root = freshTmp("graft-v2-table", d)
-      val p = pts(s, d).select("order_key", "x", "y")
-      // four x-banded commits -> disjoint file stats -> provable pruning
-      for (b <- 0 until 4)
-        graft.sources.GraftTable.commit(
-          p.filter(col("x") >= b * 2500.0 && col("x") < (b + 1) * 2500.0),
-          root)
-      val head = s.read.format("graft").load(root)
-        .filter(col("x") >= 0 && col("x") <= 3000)
-      head.count() // force one scan so the prune counters are set
-      val (read, total) = graft.sources.v2.GraftDataSource.lastPrune
-      require(read < total,
-        s"V2 manifest pruning expected: read $read of $total files")
-      val past = s.read.format("graft").option("asof", 1).load(root)
-        .filter(col("x") >= 0 && col("x") <= 3000)
-      head.withColumn("snap", lit(2))
-        .unionByName(past.withColumn("snap", lit(1)))
-        .select("snap", "order_key", "x", "y")
-    }),
-    "q116_stream_neardup" -> ((s, d) => {
-      // Streaming stateful MinHash-LSH (flatMapGroupsWithState band
-      // buckets) through the gate, in the q45 deterministic regime:
-      // planted exact duplicates have identical signatures, collide in
-      // every band, and emit at jaccard_est = 1.0. Base docs and the
-      // planted dups land in SEPARATE files processed one per microbatch
-      // (maxFilesPerTrigger), so the emitted pairs cross the
-      // microbatch/state boundary — a state-eviction or watermark defect
-      // drops them. The streamed candidate set is then verified with
-      // TRUE n-gram jaccard (the q45 shape), making the final set
-      // exactly {identical-shingle-set pairs} — SQL-expressible. Event
-      // times sit far above the initial epoch-0 watermark and the delay
-      // horizon covers the whole regime, so nothing is late or evicted.
-      val h = Integer.toHexString(d.hashCode)
-      val docs = t(s, d, "documents")
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      val dups = docs.filter(col("doc_id") % 50 === 0)
-        .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
-      val withTs = (df: DataFrame) => df.withColumn("ts",
-        col("doc_id") % 1000 + 1000L)
-      val dir = freshTmp("graft-sdedup", d)
-      withTs(docs).coalesce(1).write.mode("overwrite").parquet(dir)
-      withTs(dups).coalesce(1).write.mode("append").parquet(dir)
-      val stream = s.readStream.schema(withTs(docs).schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir)
-      // exactly-once pair emission: the second stateful stage (pair-keyed
-      // dropDuplicatesWithinWatermark) absorbs the per-shared-bucket
-      // at-least-once copies INSIDE the streaming query — the gate runs
-      // with NO batch-side distinct, so a duplicate leaking through the
-      // distinct stage duplicates oracle rows and breaks the hash
-      val out = graft.streaming.StreamDedup.minhashPairsDistinct(s, stream,
-        threshold = 1.0, numHashes = 64, bands = 8, maxBucket = 100000,
-        delay = "2000 seconds")
-      val qn = s"q116_sink_$h"
-      s.catalog.dropTempView(qn)
-      graft.streaming.StreamDedup.withUncheckedStatefulChain(s) {
-        val q = out.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      // verify candidates with exact set jaccard like the batch gate does
-      val cand = s.table(qn).select("id_a", "id_b")
-      val all = docs.unionByName(dups)
-      graft.dedup.Dedup.ngramJaccard(all, cand, n = 3)
-        .filter(col("jaccard") >= 1.0)
-        .select("id_a", "id_b")
-    })
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q01_agg_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-         COUNT(*) AS count_order
-         FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-01'
-         GROUP BY l_returnflag, l_linestatus""",
-    "q02_join_revenue_by_nation" ->
-      """SELECT n_name,
-         CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-         COUNT(*) AS n_items
-         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         JOIN nation ON c_nationkey = n_nationkey
-         GROUP BY n_name""",
-    "q03_topk_parts" ->
-      """SELECT l_partkey, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty
-         FROM lineitem GROUP BY l_partkey
-         ORDER BY total_qty DESC, l_partkey ASC LIMIT 10""",
-    "q04_window_nth_shipment" ->
-      """SELECT l_suppkey, l_orderkey, l_linenumber FROM (
-           SELECT l_suppkey, l_orderkey, l_linenumber,
-             ROW_NUMBER() OVER (PARTITION BY l_suppkey
-               ORDER BY l_shipdate, l_orderkey, l_linenumber) AS rn
-           FROM lineitem) WHERE rn = 3""",
-    "q05_anti_join" ->
-      """SELECT c_mktsegment, COUNT(*) AS n_inactive FROM customer
-         WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
-         GROUP BY c_mktsegment""",
-    "q06_events_daily" ->
-      """SELECT CAST(ts AS DATE) AS day, event_type, COUNT(*) AS n,
-         CAST(SUM(CAST(ROUND(value * 1000000) AS BIGINT)) AS BIGINT) AS value_micros
-         FROM events GROUP BY 1, 2""",
-    "q07_sessionize" ->
+    }, Some(
       """SELECT user_id, CAST(SUM(new_sess) AS BIGINT) AS n_sessions,
            COUNT(*) AS n_events FROM (
            SELECT user_id,
@@ -1667,23 +278,42 @@ object SparkEntry {
            FROM (SELECT user_id, ts,
                    LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
                  FROM events))
-         GROUP BY user_id""",
-    "q08_crop_box" ->
+         GROUP BY user_id""")),
+    // ---- spatial core (filters.crop / splitter / voxel / range) ------
+    Gate("q08_crop_box", (s, d) =>
+      Crop.box2d(pts(s, d), 2000, 1000, 5000, 8000).select("order_key"), Some(
       s"""SELECT order_key FROM ($ptsSql)
-          WHERE x >= 2000 AND x <= 5000 AND y >= 1000 AND y <= 8000""",
-    "q09_splitter_tiles" ->
+          WHERE x >= 2000 AND x <= 5000 AND y >= 1000 AND y <= 8000""")),
+    Gate("q09_splitter_tiles", (s, d) =>
+      Splitter(pts(s, d), length = 500.0, origin = Some((0.0, 0.0)))
+        .groupBy(col("tile_id")).agg(count(lit(1)).as("n"))
+        .select(graft.functions.F.cellX(col("tile_id")).as("tx"),
+          graft.functions.F.cellY(col("tile_id")).as("ty"), col("n")), Some(
       s"""SELECT CAST(FLOOR(x / 500) AS BIGINT) AS tx,
           CAST(FLOOR(y / 500) AS BIGINT) AS ty, COUNT(*) AS n
-          FROM ($ptsSql) GROUP BY 1, 2""",
-    "q10_voxel_first" ->
+          FROM ($ptsSql) GROUP BY 1, 2""")),
+    Gate("q10_voxel_first", (s, d) =>
+      Voxel.downsize(pts(s, d), cell = 250.0, origin = Some((0.0, 0.0, 0.0)))
+        .select(floor(col("x") / 250).cast("long").as("vx"),
+          floor(col("y") / 250).cast("long").as("vy"),
+          col("order_key").as("kept_id")), Some(
       s"""SELECT CAST(FLOOR(x / 250) AS BIGINT) AS vx,
           CAST(FLOOR(y / 250) AS BIGINT) AS vy,
           MIN(order_key) AS kept_id
-          FROM ($ptsSql) GROUP BY 1, 2""",
-    "q11_range_filter" ->
+          FROM ($ptsSql) GROUP BY 1, 2""")),
+    Gate("q11_range_filter", (s, d) =>
+      RangeFilter(pts(s, d), "x[2000:8000), y!(3000:7000)").select("order_key"), Some(
       s"""SELECT order_key FROM ($ptsSql)
-          WHERE (x >= 2000 AND x < 8000) AND NOT (y > 3000 AND y < 7000)""",
-    "q12_knn" ->
+          WHERE (x >= 2000 AND x < 8000) AND NOT (y > 3000 AND y < 7000)""")),
+    Gate("q12_knn", (s, d) => {
+      val p = pts(s, d)
+      val cand = p.filter(col("order_key") % 3 === 0)
+      val q = p.filter(col("order_key") % 97 === 0)
+      KnnJoin.knn(q.select("order_key", "x", "y", "z"), cand, 3,
+          valueCol = "order_key", cellSize = 500.0)
+        .select(col("order_key").as("qid"), posexplode(col("knn")).as(Seq("pos", "h")))
+        .select(col("qid"), col("h.cid").as("cid"), (col("pos") + 1).cast("long").as("rnk"))
+    }, Some(
       s"""WITH p AS ($ptsSql),
           cand AS (SELECT * FROM p WHERE order_key % 3 = 0),
           q AS (SELECT * FROM p WHERE order_key % 97 = 0),
@@ -1693,8 +323,11 @@ object SparkEntry {
           ranked AS (SELECT qid, cid,
             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY d2, cid) AS rnk
             FROM pairs)
-          SELECT qid, cid, rnk FROM ranked WHERE rnk <= 3""",
-    "q13_crop_polygon" ->
+          SELECT qid, cid, rnk FROM ranked WHERE rnk <= 3""")),
+    Gate("q13_crop_polygon", (s, d) => {
+      val wkt = "POLYGON ((5000.3 500.7, 9500.1 5000.2, 5000.4 9499.8, 500.2 5000.1, 5000.3 500.7))"
+      Crop.polygon(pts(s, d), wkt).select("order_key")
+    }, Some(
       s"""WITH p AS ($ptsSql),
           v(x1, y1, x2, y2) AS (VALUES
             (5000.3, 500.7, 9500.1, 5000.2),
@@ -1703,87 +336,19 @@ object SparkEntry {
             (500.2, 5000.1, 5000.3, 500.7))
           SELECT order_key FROM p WHERE NOT EXISTS (
             SELECT 1 FROM v
-            WHERE (x2 - x1) * (p.y - y1) - (y2 - y1) * (p.x - x1) < 0)""",
-    "q15_geomdistance" ->
-      s"""SELECT order_key, ROUND(SQRT(
-            GREATEST(2000 - x, 0, x - 7000) * GREATEST(2000 - x, 0, x - 7000) +
-            GREATEST(2000 - y, 0, y - 6000) * GREATEST(2000 - y, 0, y - 6000)), 4) AS dist
-          FROM ($ptsSql)""",
-    "q16_head" ->
-      s"SELECT order_key FROM ($ptsSql) ORDER BY order_key LIMIT 100",
-    "q17_decimation" ->
-      s"""SELECT order_key FROM (
-            SELECT order_key, ROW_NUMBER() OVER (ORDER BY order_key) - 1 AS rn
-            FROM ($ptsSql)) WHERE rn % 7 = 0""",
-    "q18_sort_stable" ->
-      s"""SELECT ROW_NUMBER() OVER (ORDER BY event_type, order_key) - 1 AS new_order,
-          event_type, x AS px FROM ($ptsSql)""",
-    "q19_stats_summary" ->
-      """SELECT l_returnflag, COUNT(*) AS n, MIN(l_quantity) AS min_qty,
-         MAX(l_quantity) AS max_qty,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-         ROUND(STDDEV_SAMP(l_quantity), 3) AS sd_qty
-         FROM lineitem GROUP BY l_returnflag""",
-    "q20_value_counts" ->
-      """SELECT l_returnflag, l_linestatus, COUNT(*) AS n
-         FROM lineitem GROUP BY 1, 2""",
-    "q21_token_stats" ->
-      """SELECT lang, COUNT(*) AS n_docs,
-         CAST(SUM(CAST(LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) + 1 AS BIGINT)) AS BIGINT)
-           AS total_tokens,
-         CAST(SUM(n_chars) AS BIGINT) AS total_chars
-         FROM documents GROUP BY lang""",
-    "q22_exact_dedup" ->
-      """SELECT MIN(doc_id) AS kept_id FROM (
-           SELECT doc_id, REGEXP_REPLACE(TRIM(LOWER(text)), '\s+', ' ', 'g') AS norm
-           FROM documents) GROUP BY norm""",
-    "q23_quality_bands" ->
-      """SELECT band, lang, COUNT(*) AS n FROM (
-           SELECT lang,
-             CASE WHEN CAST(LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) + 1 AS DOUBLE) >= 50
-                   AND CAST(LENGTH(REGEXP_REPLACE(LOWER(text), '[^a-z ]', '', 'g')) AS DOUBLE)
-                     / GREATEST(CAST(LENGTH(text) AS DOUBLE), 1.0) > 0.9
-                  THEN 'high'
-                  WHEN CAST(LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) + 1 AS DOUBLE) >= 20
-                  THEN 'mid' ELSE 'low' END AS band
-           FROM documents) GROUP BY 1, 2""",
-    "q25_embedding_topk" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-                    WHERE vec_id % 100 = 0),
-          pairs AS (SELECT q.query_id, e.vec_id,
-            list_cosine_similarity(q.qv, e.embedding) AS cos
-            FROM q CROSS JOIN embeddings e WHERE e.vec_id <> q.query_id),
-          ranked AS (SELECT query_id, vec_id,
-            ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rnk
-            FROM pairs)
-          SELECT query_id, vec_id, rnk FROM ranked WHERE rnk <= 5""",
-    "q31_returns_groups" ->
-      s"""WITH p AS (SELECT order_key, (order_key % 3 + 1) AS rn, 3 AS nr FROM ($ptsSql))
-          SELECT view_id, COUNT(*) AS n FROM (
-            SELECT CASE WHEN rn = 1 THEN 'first' END AS view_id FROM p WHERE rn = 1
-            UNION ALL
-            SELECT 'intermediate' FROM p WHERE rn > 1 AND rn < nr
-            UNION ALL
-            SELECT 'last' FROM p WHERE rn = nr) GROUP BY view_id""",
-    "q32_assign_where" ->
-      s"""SELECT CASE WHEN x > 5000 THEN 5 ELSE 0 END AS classification,
-          COUNT(*) AS n FROM ($ptsSql) GROUP BY 1""",
-    "q33_divider" ->
-      s"""SELECT part_id, COUNT(*) AS n FROM (
-            SELECT CAST((ROW_NUMBER() OVER (ORDER BY order_key) - 1) % 5 AS INT)
-              AS part_id FROM ($ptsSql)) GROUP BY part_id""",
-    "q34_transformation" ->
-      s"""SELECT order_key, x * 2 + 100 AS tx, y * 0.5 - 50 AS ty FROM ($ptsSql)""",
-    "q35_mad_filter" ->
-      s"""WITH p AS ($ptsSql),
-          m AS (SELECT MEDIAN(x) AS med FROM p),
-          d AS (SELECT MEDIAN(ABS(x - med)) * 1.4862 AS mad FROM p, m)
-          SELECT order_key FROM p, m, d WHERE ABS(x - med) < 2.0 * mad""",
-    // chip sizes are a pure function of the cumulate-and-round partition
-    // array (ChipperCore.partitions); chip ids are its indices. psize is
-    // exactly representable at this (n, capacity) so the accumulated
-    // boundary equals the multiplied one.
-    "q14_chipper" ->
+            WHERE (x2 - x1) * (p.y - y1) - (y2 - y1) * (p.x - x1) < 0)""")),
+    Gate("q14_chipper", (s, d) => {
+      // rank-recursive equal-count tiling. Chip ids are partition-array
+      // indices and chip sizes are fully determined by the
+      // cumulate-and-round partition array (ChipperFilter.cpp:161-181)
+      // regardless of geometry — so (chip_id, n) IS oracle-checkable.
+      Chipper(pts(s, d), capacity = 500).groupBy("chip_id")
+        .agg(count(lit(1)).as("n"))
+    }, Some(
+      // chip sizes are a pure function of the cumulate-and-round partition
+      // array (ChipperCore.partitions); chip ids are its indices. psize is
+      // exactly representable at this (n, capacity) so the accumulated
+      // boundary equals the multiplied one.
       s"""WITH t AS (SELECT COUNT(*) AS cnt FROM ($ptsSql)),
           m AS (SELECT cnt,
             CAST(cnt / 500 + CASE WHEN cnt % 500 <> 0 THEN 1 ELSE 0 END AS BIGINT) AS np
@@ -1792,8 +357,126 @@ object SparkEntry {
           SELECT chip AS chip_id,
             CAST(FLOOR((chip + 1) * (cnt * 1.0 / np) + 0.5)
                - FLOOR(chip * (cnt * 1.0 / np) + 0.5) AS BIGINT) AS n
-          FROM i""",
-    "q27_langid" ->
+          FROM i""")),
+    Gate("q15_geomdistance", (s, d) => {
+      val wkt = "POLYGON ((2000 2000, 7000 2000, 7000 6000, 2000 6000, 2000 2000))"
+      GeomDistance(pts(s, d), wkt)
+        .select(col("order_key"), round(col("distance"), 4).as("dist"))
+    }, Some(
+      s"""SELECT order_key, ROUND(SQRT(
+            GREATEST(2000 - x, 0, x - 7000) * GREATEST(2000 - x, 0, x - 7000) +
+            GREATEST(2000 - y, 0, y - 6000) * GREATEST(2000 - y, 0, y - 6000)), 4) AS dist
+          FROM ($ptsSql)""")),
+    // ---- order-dependent ops ---------------------------------------
+    Gate("q16_head", (s, d) =>
+      HeadTail.head(pts(s, d), 100).select("order_key"), Some(
+      s"SELECT order_key FROM ($ptsSql) ORDER BY order_key LIMIT 100")),
+    Gate("q17_decimation", (s, d) =>
+      Decimation(pts(s, d), step = 7).select("order_key"), Some(
+      s"""SELECT order_key FROM (
+            SELECT order_key, ROW_NUMBER() OVER (ORDER BY order_key) - 1 AS rn
+            FROM ($ptsSql)) WHERE rn % 7 = 0""")),
+    Gate("q18_sort_stable", (s, d) =>
+      Sort(pts(s, d), "event_type")
+        .select(col("order_key").as("new_order"), col("event_type"),
+          col("x").as("px")), Some(
+      s"""SELECT ROW_NUMBER() OVER (ORDER BY event_type, order_key) - 1 AS new_order,
+          event_type, x AS px FROM ($ptsSql)""")),
+    // ---- stats ------------------------------------------------------
+    Gate("q19_stats_summary", (s, d) =>
+      t(s, d, "lineitem").groupBy("l_returnflag")
+        .agg(count(lit(1)).as("n"),
+          min("l_quantity").as("min_qty"), max("l_quantity").as("max_qty"),
+          sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"),
+          round(stddev_samp(col("l_quantity")), 3).as("sd_qty")), Some(
+      """SELECT l_returnflag, COUNT(*) AS n, MIN(l_quantity) AS min_qty,
+         MAX(l_quantity) AS max_qty,
+         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+         ROUND(STDDEV_SAMP(l_quantity), 3) AS sd_qty
+         FROM lineitem GROUP BY l_returnflag""")),
+    Gate("q20_value_counts", (s, d) =>
+      t(s, d, "lineitem").groupBy("l_returnflag", "l_linestatus")
+        .agg(count(lit(1)).as("n")), Some(
+      """SELECT l_returnflag, l_linestatus, COUNT(*) AS n
+         FROM lineitem GROUP BY 1, 2""")),
+    // ---- documents: text analysis + dedup ---------------------------
+    Gate("q21_token_stats", (s, d) => {
+      val docs = t(s, d, "documents")
+      val tokenCount = length(col("text")) - length(regexp_replace(col("text"), " ", "")) + 1
+      docs.groupBy("lang").agg(count(lit(1)).as("n_docs"),
+        sum(tokenCount.cast("long")).as("total_tokens"),
+        sum(col("n_chars")).as("total_chars"))
+    }, Some(
+      """SELECT lang, COUNT(*) AS n_docs,
+         CAST(SUM(CAST(LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) + 1 AS BIGINT)) AS BIGINT)
+           AS total_tokens,
+         CAST(SUM(n_chars) AS BIGINT) AS total_chars
+         FROM documents GROUP BY lang""")),
+    Gate("q22_exact_dedup", (s, d) => {
+      // group on the 8-byte hash of the normalized text (what Dedup.exact
+      // shuffles at scale), not the full text; the oracle groups by the
+      // text itself — same partition of doc ids absent hash collisions
+      val docs = t(s, d, "documents")
+        .withColumn("fp", xxhash64(regexp_replace(trim(lower(col("text"))), "\\s+", " ")))
+      docs.groupBy("fp").agg(min("doc_id").as("kept_id"))
+        .select(col("kept_id"))
+    }, Some(
+      """SELECT MIN(doc_id) AS kept_id FROM (
+           SELECT doc_id, REGEXP_REPLACE(TRIM(LOWER(text)), '\s+', ' ', 'g') AS norm
+           FROM documents) GROUP BY norm""")),
+    Gate("q23_quality_bands", (s, d) => {
+      val docs = t(s, d, "documents")
+      val nWords = (length(col("text")) - length(regexp_replace(col("text"), " ", "")) + 1)
+        .cast("double")
+      val alpha = length(regexp_replace(lower(col("text")), "[^a-z ]", ""))
+        .cast("double") / greatest(length(col("text")).cast("double"), lit(1.0))
+      docs.withColumn("band",
+          when(nWords >= 50 && alpha > 0.9, "high")
+            .when(nWords >= 20, "mid").otherwise("low"))
+        .groupBy("band", "lang").agg(count(lit(1)).as("n"))
+    }, Some(
+      """SELECT band, lang, COUNT(*) AS n FROM (
+           SELECT lang,
+             CASE WHEN CAST(LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) + 1 AS DOUBLE) >= 50
+                   AND CAST(LENGTH(REGEXP_REPLACE(LOWER(text), '[^a-z ]', '', 'g')) AS DOUBLE)
+                     / GREATEST(CAST(LENGTH(text) AS DOUBLE), 1.0) > 0.9
+                  THEN 'high'
+                  WHEN CAST(LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) + 1 AS DOUBLE) >= 20
+                  THEN 'mid' ELSE 'low' END AS band
+           FROM documents) GROUP BY 1, 2""")),
+    Gate("q24_minhash_dedup", (s, d) => {
+      // hash functions are engine-specific -> rows-only oracle
+      val docs = t(s, d, "documents").withColumn("doc_id", col("doc_id").cast("string"))
+      // 8-row bands: (1/8)^(1/8) ~ 0.77 collision threshold — tight bands
+      // keep candidate volume linear on shared-vocabulary corpora
+      Dedup.minhashLsh(docs, threshold = 0.7, numHashes = 64, bands = 8)
+        .select(col("id_a"), col("id_b"), round(col("jaccard_est"), 4).as("j"))
+    }, None),
+    Gate("q25_embedding_topk", (s, d) => {
+      val emb = t(s, d, "embeddings")
+      val q = emb.filter(col("vec_id") % 100 === 0)
+      Ann.bruteForceTopK(emb, q, k = 5)
+        .select(col("query_id"), col("vec_id"), col("rank").cast("long").as("rnk"))
+    }, Some(
+      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
+                    WHERE vec_id % 100 = 0),
+          pairs AS (SELECT q.query_id, e.vec_id,
+            list_cosine_similarity(q.qv, e.embedding) AS cos
+            FROM q CROSS JOIN embeddings e WHERE e.vec_id <> q.query_id),
+          ranked AS (SELECT query_id, vec_id,
+            ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rnk
+            FROM pairs)
+          SELECT query_id, vec_id, rnk FROM ranked WHERE rnk <= 5""")),
+    Gate("q26_simhash", (s, d) => {
+      // engine-specific hash -> rows-only oracle; maxHamming=3 is inside
+      // the chunk-bucket recall guarantee (4 chunks, pigeonhole)
+      val docs = t(s, d, "documents").withColumn("doc_id", col("doc_id").cast("string"))
+      Dedup.simhashPairs(docs, maxHamming = 3)
+        .select(col("id_a"), col("id_b"), col("hamming"))
+    }, None),
+    Gate("q27_langid", (s, d) =>
+      t(s, d, "documents")
+        .select(col("doc_id"), TextAnalysis.langId(col("text")).as("lang_pred")), Some(
       """WITH t AS (SELECT doc_id,
            string_split_regex(trim(lower(text)), '\s+') AS toks FROM documents),
          s AS (SELECT doc_id,
@@ -1808,21 +491,33 @@ object SparkEntry {
                 WHEN es = GREATEST(en, de, fr, es) THEN 'es'
                 WHEN en = GREATEST(en, de, fr, es) THEN 'en'
                 ELSE 'de' END AS lang_pred
-         FROM s""",
-    // every point sits on integer coords, so a cell center is within
-    // radius 0.1 only for points exactly at the center — the same float
-    // predicate the engine evaluates
-    "q28_rasterize" ->
+         FROM s""")),
+    // ---- raster + hexbin + cluster (engine-specific -> selected SQL) -
+    Gate("q28_rasterize", (s, d) =>
+      // raw min/max: both engines read the same parquet doubles, so the
+      // comparison is exact without rounding
+      Rasterize(pts(s, d), resolution = 1000.0, valueCol = "value",
+          radius = 0.1, origin = Some((0.0, 0.0)))
+        .select(col("cell_x"), col("cell_y"), col("count"),
+          col("min").as("vmin"), col("max").as("vmax")), Some(
+      // every point sits on integer coords, so a cell center is within
+      // radius 0.1 only for points exactly at the center — the same float
+      // predicate the engine evaluates
       s"""SELECT CAST(FLOOR(x / 1000) AS BIGINT) AS cell_x,
             CAST(FLOOR(y / 1000) AS BIGINT) AS cell_y,
             COUNT(*) AS "count", MIN(value) AS vmin, MAX(value) AS vmax
           FROM ($ptsSql)
           WHERE SQRT(POWER(x - (FLOOR(x / 1000) + 0.5) * 1000, 2)
                    + POWER(y - (FLOOR(y / 1000) + 0.5) * 1000, 2)) <= 0.1
-          GROUP BY 1, 2""",
-    // axial hex assignment with cube rounding, replicated operation-for-
-    // operation (FLOOR(v+0.5) = Java Math.round); edge 400
-    "q29_hexbin" ->
+          GROUP BY 1, 2""")),
+    Gate("q29_hexbin", (s, d) =>
+      // axial hex coords unpacked so the oracle can replicate the
+      // cube-rounding assignment in plain SQL
+      HexBin(pts(s, d), edge = 400.0)
+        .select(graft.functions.F.cellX(col("hex_id")).as("hq"),
+          graft.functions.F.cellY(col("hex_id")).as("hr"), col("density")), Some(
+      // axial hex assignment with cube rounding, replicated operation-for-
+      // operation (FLOOR(v+0.5) = Java Math.round); edge 400
       s"""WITH h AS (SELECT
             (sqrt(3.0) / 3.0 * x - 1.0 / 3.0 * y) / 400.0 AS q,
             (2.0 / 3.0 * y) / 400.0 AS r FROM ($ptsSql)),
@@ -1837,10 +532,12 @@ object SparkEntry {
                  THEN -rq - rs ELSE rr END AS fr
             FROM c)
           SELECT CAST(fq AS BIGINT) AS hq, CAST(fr AS BIGINT) AS hr,
-            COUNT(*) AS density FROM f GROUP BY 1, 2""",
-    // connected components via transitive label closure (recursive CTE),
-    // roots densified by rank — mirrors min-label propagation + densify
-    "q30_cluster" ->
+            COUNT(*) AS density FROM f GROUP BY 1, 2""")),
+    Gate("q30_cluster", (s, d) =>
+      Cluster(pts(s, d).filter(col("order_key") < 2000), tolerance = 120.0)
+        .groupBy("cluster_id").agg(count(lit(1)).as("n")), Some(
+      // connected components via transitive label closure (recursive CTE),
+      // roots densified by rank — mirrors min-label propagation + densify
       s"""WITH RECURSIVE p AS (
             SELECT order_key AS k, x, y FROM ($ptsSql) WHERE order_key < 2000),
           e AS (SELECT a.k AS pk, b.k AS qk FROM p a JOIN p b
@@ -1854,12 +551,63 @@ object SparkEntry {
           d AS (SELECT root, DENSE_RANK() OVER (ORDER BY root) AS cid
             FROM (SELECT DISTINCT root FROM r) t)
           SELECT CAST(cid AS BIGINT) AS cluster_id, COUNT(*) AS n
-          FROM r JOIN d USING (root) GROUP BY cid""",
-    // exact 9-NN (self included) per query, query-centered covariance,
-    // Smith's closed-form symmetric eigensolver replicated operation-
-    // for-operation (Eigen3.decompose); z == 0 so the diagonal fallback
-    // never fires. `+ 0.0` folds IEEE -0.0 into 0.0 on both engines.
-    "q36_eigen_features" ->
+          FROM r JOIN d USING (root) GROUP BY cid""")),
+    Gate("q31_returns_groups", (s, d) => {
+      val p = pts(s, d)
+        .withColumn("return_number", (col("order_key") % 3 + 1).cast("int"))
+        .withColumn("number_of_returns", lit(3).cast("int"))
+      Returns(p, Seq(Returns.First, Returns.Intermediate, Returns.Last))
+        .groupBy("view_id").agg(count(lit(1)).as("n"))
+    }, Some(
+      s"""WITH p AS (SELECT order_key, (order_key % 3 + 1) AS rn, 3 AS nr FROM ($ptsSql))
+          SELECT view_id, COUNT(*) AS n FROM (
+            SELECT CASE WHEN rn = 1 THEN 'first' END AS view_id FROM p WHERE rn = 1
+            UNION ALL
+            SELECT 'intermediate' FROM p WHERE rn > 1 AND rn < nr
+            UNION ALL
+            SELECT 'last' FROM p WHERE rn = nr) GROUP BY view_id""")),
+    Gate("q32_assign_where", (s, d) => {
+      val p = pts(s, d).withColumn("classification", lit(0))
+      Assign(p, "classification", lit(5), Some(col("x") > 5000))
+        .groupBy("classification").agg(count(lit(1)).as("n"))
+    }, Some(
+      s"""SELECT CASE WHEN x > 5000 THEN 5 ELSE 0 END AS classification,
+          COUNT(*) AS n FROM ($ptsSql) GROUP BY 1""")),
+    Gate("q33_divider", (s, d) =>
+      Divider(pts(s, d), roundRobin = true, count = Some(5))
+        .groupBy("part_id").agg(count(lit(1)).as("n")), Some(
+      s"""SELECT part_id, COUNT(*) AS n FROM (
+            SELECT CAST((ROW_NUMBER() OVER (ORDER BY order_key) - 1) % 5 AS INT)
+              AS part_id FROM ($ptsSql)) GROUP BY part_id""")),
+    Gate("q34_transformation", (s, d) =>
+      Transformation(pts(s, d), Seq(
+        2, 0, 0, 100,
+        0, 0.5, 0, -50,
+        0, 0, 1, 0,
+        0, 0, 0, 1))
+        .select(col("order_key"), col("x").as("tx"), col("y").as("ty")), Some(
+      s"""SELECT order_key, x * 2 + 100 AS tx, y * 0.5 - 50 AS ty FROM ($ptsSql)""")),
+    Gate("q35_mad_filter", (s, d) =>
+      Mad(pts(s, d), "x", k = 2.0).select("order_key"), Some(
+      s"""WITH p AS ($ptsSql),
+          m AS (SELECT MEDIAN(x) AS med FROM p),
+          d AS (SELECT MEDIAN(ABS(x - med)) * 1.4862 AS mad FROM p, m)
+          SELECT order_key FROM p, m, d WHERE ABS(x - med) < 2.0 * mad""")),
+    Gate("q36_eigen_features", (s, d) => {
+      // neighborhood covariance features (filters.normal family) on a
+      // deterministic subset; the oracle replicates the closed-form
+      // Smith eigensolver operation-for-operation in SQL. `+ 0.0`
+      // normalizes IEEE -0.0 on both sides.
+      val p = pts(s, d).filter(col("order_key") < 2000)
+        .withColumn("classification", lit(0))
+      EigenFeatures(p, k = 8)
+        .select(col("order_key"), (round(col("planarity"), 3) + lit(0.0)).as("pl"),
+          (round(col("sphericity"), 3) + lit(0.0)).as("sp"))
+    }, Some(
+      // exact 9-NN (self included) per query, query-centered covariance,
+      // Smith's closed-form symmetric eigensolver replicated operation-
+      // for-operation (Eigen3.decompose); z == 0 so the diagonal fallback
+      // never fires. `+ 0.0` folds IEEE -0.0 into 0.0 on both engines.
       s"""WITH p AS ($ptsSql),
           q AS (SELECT order_key, x, y, z FROM p WHERE order_key < 2000),
           pairs AS (SELECT a.order_key AS qid, b.order_key AS cid,
@@ -1894,13 +642,25 @@ object SparkEntry {
           SELECT qid AS order_key,
             ROUND((l2 - l3) / GREATEST(l1, 1e-300), 3) + 0.0 AS pl,
             ROUND(l3 / GREATEST(l1, 1e-300), 3) + 0.0 AS sp
-          FROM lam2""",
-    // boundary metadata without tracing: vertices == boundary-edge count
-    // (each traced ring of n vertices has n edges; rings consume every
-    // boundary edge exactly once, pinch vertices included) == sum over
-    // occupied hexes of (6 - occupied axial neighbors); area is
-    // occupied * hex area with the same left-assoc IEEE multiply chain.
-    "q37_density_boundary" ->
+          FROM lam2""")),
+    Gate("q37_density_boundary", (s, d) => {
+      // hexbin boundary polygon (kernels.density primary output). The
+      // tracing is driver-side over the occupied-hex set, but its
+      // metadata is SQL-checkable: every ring of n vertices has n edges,
+      // so total vertices == boundary-edge count == sum over occupied
+      // hexes of (6 - occupied neighbors); area == occupied * hex area.
+      // (Ring count stays ScalaTest-only — component counting isn't
+      // expressible without recursion over the engine-traced rings.)
+      val r = HexBoundary.densityReport(pts(s, d), edge = 400.0)
+      import s.implicits._
+      Seq((r.vertices, r.occupiedHexes,
+        math.round(r.area))).toDF("vertices", "occupied", "area_rnd")
+    }, Some(
+      // boundary metadata without tracing: vertices == boundary-edge count
+      // (each traced ring of n vertices has n edges; rings consume every
+      // boundary edge exactly once, pinch vertices included) == sum over
+      // occupied hexes of (6 - occupied axial neighbors); area is
+      // occupied * hex area with the same left-assoc IEEE multiply chain.
       s"""WITH h AS (SELECT
             (sqrt(3.0) / 3.0 * x - 1.0 / 3.0 * y) / 400.0 AS q,
             (2.0 / 3.0 * y) / 400.0 AS r FROM ($ptsSql)),
@@ -1929,11 +689,17 @@ object SparkEntry {
             COUNT(*) AS occupied,
             CAST(ROUND(COUNT(*) * 3.0 * SQRT(3.0) / 2.0 * 400.0 * 400.0)
               AS BIGINT) AS area_rnd
-          FROM nbr""",
-    // per-k prefix covariances via an expanding window, Smith eigen,
-    // eigenentropy argmin (ties -> smallest k). optimal_radius compares
-    // exactly: same d2 arithmetic and IEEE sqrt on both engines.
-    "q38_optimal_neighborhood" ->
+          FROM nbr""")),
+    Gate("q38_optimal_neighborhood", (s, d) => {
+      // eigenentropy-minimizing neighborhood size (optimal_radius is
+      // bit-identical across engines: same d2 arithmetic, IEEE sqrt)
+      val p = pts3(s, d).filter(col("order_key") < 2000)
+      OptimalNeighborhood(p, kMin = 6, kMax = 12)
+        .select(col("order_key"), col("optimal_knn"), col("optimal_radius"))
+    }, Some(
+      // per-k prefix covariances via an expanding window, Smith eigen,
+      // eigenentropy argmin (ties -> smallest k). optimal_radius compares
+      // exactly: same d2 arithmetic and IEEE sqrt on both engines.
       s"""WITH p AS ($pts3Sql),
           q AS (SELECT * FROM p WHERE order_key < 2000),
           pairs AS (SELECT a.order_key AS qid, b.order_key AS cid,
@@ -1994,15 +760,20 @@ object SparkEntry {
           sel AS (SELECT qid, k, d2,
             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY e, k) AS r FROM ent)
           SELECT qid AS order_key, CAST(k AS INT) AS optimal_knn,
-            SQRT(d2) AS optimal_radius FROM sel WHERE r = 1""",
-    // PlaneFit replicated operation-for-operation: k=8 neighborhood
-    // (self excluded: rnk 2..9 under the same (d2, cid) order the knn
-    // array uses), query-centered covariance, Smith eigenvalues, normal
-    // = largest-norm cross product of rows of (A - l3*I) — first-wins
-    // on ties like the sequential argmax — then the distance ratio
-    // d(query)/(d(query)+mean |d(nbr)|). The orientation flip (nz<0) is
-    // skipped: IEEE negation is exact, so ABS() cancels it bit-for-bit.
-    "q39_planefit" ->
+            SQRT(d2) AS optimal_radius FROM sel WHERE r = 1""")),
+    Gate("q39_planefit", (s, d) => {
+      // plane-fit criterion needs 3D structure: derive z like x/y
+      val p = pts3(s, d).filter(col("order_key") < 2000)
+      PlaneFit(p, knn = 8)
+        .select(col("order_key"), (round(col("plane_fit"), 3) + lit(0.0)).as("pf"))
+    }, Some(
+      // PlaneFit replicated operation-for-operation: k=8 neighborhood
+      // (self excluded: rnk 2..9 under the same (d2, cid) order the knn
+      // array uses), query-centered covariance, Smith eigenvalues, normal
+      // = largest-norm cross product of rows of (A - l3*I) — first-wins
+      // on ties like the sequential argmax — then the distance ratio
+      // d(query)/(d(query)+mean |d(nbr)|). The orientation flip (nz<0) is
+      // skipped: IEEE negation is exact, so ABS() cancels it bit-for-bit.
       s"""WITH p AS ($pts3Sql),
           q AS (SELECT order_key, x, y, z FROM p WHERE order_key < 2000),
           pairs AS (SELECT a.order_key AS qid, b.order_key AS cid,
@@ -2068,17 +839,21 @@ object SparkEntry {
             AS db FROM nbr n JOIN nrm ON n.qid = nrm.qid GROUP BY n.qid)
           SELECT dq.qid AS order_key,
             ROUND(dquery / GREATEST(dquery + db, 1e-300), 3) + 0.0 AS pf
-          FROM dq JOIN dbar ON dq.qid = dbar.qid""",
-    // Welzl's recursion isn't SQL-expressible, but its RESULT is: the
-    // minimal enclosing ball of a finite set is determined by an
-    // affinely independent support of <= 4 boundary points, so brute
-    // force enumerates every 2/3/4-subset's boundary ball (midpoint /
-    // circumcircle-in-plane / circumsphere via Cramer — the engine's own
-    // constructions, Miniball.scala), keeps balls containing all 8
-    // neighbors (relative 1e-9 slack ≫ float noise, ≪ the 3-decimal
-    // rounding), and takes the min radius. Same k=8 (d2, cid)-ordered
-    // neighborhood as q39.
-    "q40_miniball" ->
+          FROM dq JOIN dbar ON dq.qid = dbar.qid""")),
+    Gate("q40_miniball", (s, d) => {
+      val p = pts3(s, d).filter(col("order_key") < 2000)
+      MiniballFilter(p, knn = 8)
+        .select(col("order_key"), (round(col("miniball"), 3) + lit(0.0)).as("mb"))
+    }, Some(
+      // Welzl's recursion isn't SQL-expressible, but its RESULT is: the
+      // minimal enclosing ball of a finite set is determined by an
+      // affinely independent support of <= 4 boundary points, so brute
+      // force enumerates every 2/3/4-subset's boundary ball (midpoint /
+      // circumcircle-in-plane / circumsphere via Cramer — the engine's own
+      // constructions, Miniball.scala), keeps balls containing all 8
+      // neighbors (relative 1e-9 slack ≫ float noise, ≪ the 3-decimal
+      // rounding), and takes the min radius. Same k=8 (d2, cid)-ordered
+      // neighborhood as q39.
       s"""WITH p AS ($pts3Sql),
           q AS (SELECT order_key, x, y, z FROM p WHERE order_key < 2000),
           prs AS (SELECT a.order_key AS qid, b.order_key AS cid,
@@ -2149,11 +924,25 @@ object SparkEntry {
           SELECT order_key,
             ROUND(CASE WHEN dq + 2*r/SQRT(3.0) <= 0 THEN 0.0
               ELSE dq / (dq + 2*r/SQRT(3.0)) END, 3) + 0.0 AS mb
-          FROM dd""",
-    // shingle construction parity: Spark slice(tokens, i+1, 3) for
-    // i in 0..max(len-3,0)  ==  DuckDB words[i:least(i+2,len)] for
-    // i in 1..greatest(len-3,0)+1 (whole list when len < 3)
-    "q41_ngram_jaccard" ->
+          FROM dd""")),
+    Gate("q41_ngram_jaccard", (s, d) => {
+      // exact n-gram Jaccard verification over a deterministic pair set
+      // (doc rank 2k vs 2k+1 — range-partitioned rank, no global window);
+      // the oracle rebuilds shingle sets and set-jaccard in SQL
+      val docs = t(s, d, "documents").select("doc_id", "text")
+      val ranked = Order.globalRankBy(docs, Seq(col("doc_id").asc), "__rn")
+      val a = ranked.filter(col("__rn") % 2 === 0)
+        .select(floor(col("__rn") / 2).as("g"), col("doc_id").as("id_a"))
+      val b = ranked.filter(col("__rn") % 2 === 1)
+        .select(floor(col("__rn") / 2).as("g"), col("doc_id").as("id_b"))
+      val pairs = a.join(b, "g").select("id_a", "id_b")
+      Dedup.ngramJaccard(t(s, d, "documents"), pairs, n = 3)
+        .select(col("id_a"), col("id_b"),
+          (round(col("jaccard"), 3) + lit(0.0)).as("j"))
+    }, Some(
+      // shingle construction parity: Spark slice(tokens, i+1, 3) for
+      // i in 0..max(len-3,0)  ==  DuckDB words[i:least(i+2,len)] for
+      // i in 1..greatest(len-3,0)+1 (whole list when len < 3)
       """WITH r AS (SELECT doc_id, text,
             ROW_NUMBER() OVER (ORDER BY doc_id) - 1 AS rn FROM documents),
           a AS (SELECT rn // 2 AS g, doc_id AS id_a, text AS ta FROM r WHERE rn % 2 = 0),
@@ -2170,8 +959,24 @@ object SparkEntry {
           SELECT id_a, id_b,
             ROUND(CAST(len(list_intersect(sa, sb)) AS DOUBLE) /
               GREATEST(len(list_distinct(list_concat(sa, sb))), 1), 3) + 0.0 AS j
-          FROM sh""",
-    "q42_embedding_neardup" ->
+          FROM sh""")),
+    Gate("q42_embedding_neardup", (s, d) => {
+      // embedding-cosine near-dup over the embeddings table with
+      // deterministic planted duplicates (same direction, 2x scale ->
+      // cosine 1.0). At threshold 0.999 the verified pair set is exactly
+      // {pairs at cosine ~1.0}: 2x scaling is a binary-exponent shift, so
+      // the unit vectors are bit-identical and collide in EVERY LSH band
+      // (recall deterministically 1), while the max random-pair cosine in
+      // this data is ~0.51 — so a brute-force DuckDB oracle hash-matches.
+      val emb = t(s, d, "embeddings")
+        .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
+      val dups = emb.filter(col("vec_id") < 20)
+        .select((col("vec_id") + 1000000L).as("vec_id"),
+          transform(col("embedding"), x => (x * 2.0).cast("float")).as("embedding"))
+      Dedup.embeddingNearDup(emb.unionByName(dups), threshold = 0.999)
+        .select(col("id_a"), col("id_b"),
+          (round(col("cosine"), 3) + lit(0.0)).as("cos"))
+    }, Some(
       """WITH base AS (SELECT CAST(vec_id AS BIGINT) AS vec_id, embedding
                        FROM embeddings),
           dups AS (SELECT vec_id + 1000000 AS vec_id,
@@ -2181,8 +986,16 @@ object SparkEntry {
           SELECT a.vec_id AS id_a, b.vec_id AS id_b,
             ROUND(list_cosine_similarity(a.embedding, b.embedding), 3) + 0.0 AS cos
           FROM allv a JOIN allv b ON a.vec_id < b.vec_id
-          WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.999""",
-    "q43_ann_ivf_exact" ->
+          WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.999""")),
+    Gate("q43_ann_ivf_exact", (s, d) => {
+      // IVF with nprobe = nlist probes every cell: the bucketed rerank
+      // machinery must reproduce the exact brute-force top-k, so the
+      // same list_cosine oracle hash-verifies the whole IVF path
+      val emb = t(s, d, "embeddings")
+      val q = emb.filter(col("vec_id") % 100 === 0)
+      Ann.ivfTopK(emb, q, k = 5, nlist = 16, nprobe = 16, iters = 1)
+        .select(col("query_id"), col("vec_id"), col("rank").cast("long").as("rnk"))
+    }, Some(
       """WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
                     WHERE vec_id % 100 = 0),
           pairs AS (SELECT q.query_id, e.vec_id,
@@ -2191,8 +1004,18 @@ object SparkEntry {
           ranked AS (SELECT query_id, vec_id,
             ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rnk
             FROM pairs)
-          SELECT query_id, vec_id, rnk FROM ranked WHERE rnk <= 5""",
-    "q44_ann_ivfpq_exact" ->
+          SELECT query_id, vec_id, rnk FROM ranked WHERE rnk <= 5""")),
+    Gate("q44_ann_ivfpq_exact", (s, d) => {
+      // IVF-PQ exact path: every cell probed AND the ADC top-rerank
+      // covers every candidate, so codebook training, byte-code encode,
+      // per-cell LUT scan, and the exact float rerank must together
+      // reproduce brute force — hash-verified by the same oracle as q43
+      val emb = t(s, d, "embeddings")
+      val q = emb.filter(col("vec_id") % 100 === 0)
+      Ann.ivfPqTopK(emb, q, k = 5, nlist = 16, nprobe = 16, m = 8,
+        ksub = 16, rerank = 1000000, iters = 1)
+        .select(col("query_id"), col("vec_id"), col("rank").cast("long").as("rnk"))
+    }, Some(
       """WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
                     WHERE vec_id % 100 = 0),
           pairs AS (SELECT q.query_id, e.vec_id,
@@ -2201,12 +1024,31 @@ object SparkEntry {
           ranked AS (SELECT query_id, vec_id,
             ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rnk
             FROM pairs)
-          SELECT query_id, vec_id, rnk FROM ranked WHERE rnk <= 5""",
-    // deterministic-regime LSH oracles: output = {identical-shingle-set /
-    // normalized-equal pairs}, which the LSH paths are GUARANTEED to
-    // surface (identical keys collide in every band/chunk); DuckDB
-    // groups by the canonical key instead of running the LSH
-    "q45_minhash_lsh_exact" ->
+          SELECT query_id, vec_id, rnk FROM ranked WHERE rnk <= 5""")),
+    Gate("q45_minhash_lsh_exact", (s, d) => {
+      // MinHash-LSH end-to-end in the deterministic regime (the q42
+      // trick): planted exact duplicates have identical shingle sets ->
+      // identical 64-hash signatures -> they collide in EVERY band
+      // (recall deterministically 1). Candidates from the banded LSH
+      // machinery are verified with TRUE set-jaccard and kept only at
+      // jaccard = 1.0, so the output pair set is exactly {pairs with
+      // identical shingle sets} — brute-force SQL-expressible. Any pair
+      // the signature/band/bucket machinery dropped would hash-mismatch.
+      val docs = t(s, d, "documents")
+        .select(col("doc_id").cast("string").as("doc_id"), col("text"))
+      val dups = docs.filter(col("doc_id").cast("long") % 50 === 0)
+        .select(concat(col("doc_id"), lit("_d")).as("doc_id"), col("text"))
+      val all = docs.unionByName(dups)
+      val cand = Dedup.minhashLsh(all, threshold = 1.0, numHashes = 64,
+          bands = 8).select("id_a", "id_b")
+      Dedup.ngramJaccard(all, cand, n = 3)
+        .filter(col("jaccard") >= 1.0)
+        .select("id_a", "id_b")
+    }, Some(
+      // deterministic-regime LSH oracles: output = {identical-shingle-set /
+      // normalized-equal pairs}, which the LSH paths are GUARANTEED to
+      // surface (identical keys collide in every band/chunk); DuckDB
+      // groups by the canonical key instead of running the LSH
       """WITH base AS (SELECT CAST(doc_id AS VARCHAR) AS doc_id, text
                        FROM documents),
           dups AS (SELECT CAST(doc_id AS VARCHAR) || '_d' AS doc_id, text
@@ -2219,8 +1061,30 @@ object SparkEntry {
               i -> array_to_string(wa[i:least(i+2, len(wa))], ' ')))) AS key
             FROM w)
           SELECT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM sh a JOIN sh b ON a.key = b.key AND a.doc_id < b.doc_id""",
-    "q46_simhash_exact" ->
+          FROM sh a JOIN sh b ON a.key = b.key AND a.doc_id < b.doc_id""")),
+    Gate("q46_simhash_exact", (s, d) => {
+      // simhash chunk-bucket machinery in the deterministic regime:
+      // identical normalized token streams -> identical 64-bit
+      // fingerprints -> hamming 0 -> same key in every chunk bucket.
+      // Candidates verified with exact normalized-text equality, so the
+      // output pair set is exactly {normalized-equal pairs} — SQL-
+      // expressible; a candidate dropped by the fingerprint or bucket
+      // join would hash-mismatch.
+      val docs = t(s, d, "documents")
+        .select(col("doc_id").cast("string").as("doc_id"), col("text"))
+      val dups = docs.filter(col("doc_id").cast("long") % 50 === 0)
+        .select(concat(col("doc_id"), lit("_d")).as("doc_id"), col("text"))
+      val all = docs.unionByName(dups)
+      val pairs = Dedup.simhashPairs(all, maxHamming = 0)
+        .select("id_a", "id_b")
+      val nrm = all.select(col("doc_id"),
+        regexp_replace(trim(lower(col("text"))), "\\s+", " ").as("nt"))
+      pairs
+        .join(nrm.select(col("doc_id").as("id_a"), col("nt").as("na")), Seq("id_a"))
+        .join(nrm.select(col("doc_id").as("id_b"), col("nt").as("nb")), Seq("id_b"))
+        .filter(col("na") === col("nb"))
+        .select("id_a", "id_b")
+    }, Some(
       """WITH base AS (SELECT CAST(doc_id AS VARCHAR) AS doc_id, text
                        FROM documents),
           dups AS (SELECT CAST(doc_id AS VARCHAR) || '_d' AS doc_id, text
@@ -2230,8 +1094,16 @@ object SparkEntry {
             regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS nt
             FROM allv)
           SELECT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM n a JOIN n b ON a.nt = b.nt AND a.doc_id < b.doc_id""",
-    "q47_hag_nn" ->
+          FROM n a JOIN n b ON a.nt = b.nt AND a.doc_id < b.doc_id""")),
+    Gate("q47_hag_nn", (s, d) => {
+      // filters.hag_nn: every 5th point is ground; IDW over the 3
+      // nearest ground points in 2D (ties pinned on (d2, order_key))
+      val p = pts3(s, d).withColumn("classification",
+        when(col("order_key") % 5 === 0, lit(2)).otherwise(lit(1)))
+      HagNn(p, count = 3)
+        .select(col("order_key"),
+          (round(col("height_above_ground"), 6) + lit(0.0)).as("hag"))
+    }, Some(
       s"""WITH p AS ($pts3Sql),
           pc AS (SELECT *, CASE WHEN order_key % 5 = 0 THEN 2 ELSE 1 END AS cls
                  FROM p),
@@ -2253,8 +1125,11 @@ object SparkEntry {
             ROUND(z0 - (CASE WHEN d2_1 = 0 OR k = 1 THEN gz_1
               WHEN wsum > 0 THEN zsum / wsum ELSE z0 END), 6) + 0.0 AS hag
           FROM agg
-          UNION ALL SELECT order_key, 0.0 AS hag FROM g""",
-    "q48_zsmooth" ->
+          UNION ALL SELECT order_key, 0.0 AS hag FROM g""")),
+    Gate("q48_zsmooth", (s, d) =>
+      Zsmooth(pts3(s, d), radius = 300.0, medianPercent = 50.0)
+        .select(col("order_key"),
+          (round(col("z_smooth"), 6) + lit(0.0)).as("zsm")), Some(
       s"""WITH p AS ($pts3Sql),
           n AS (SELECT a.order_key AS k2, list(b.z ORDER BY b.z) AS zs
             FROM p a JOIN p b ON b.order_key <> a.order_key
@@ -2270,8 +1145,18 @@ object SparkEntry {
                  + zs[CAST(FLOOR(0.5 * (len(zs) - 1)) AS INT) + 2]
                      * (0.5 * (len(zs) - 1) - FLOOR(0.5 * (len(zs) - 1)))
               END, 6) + 0.0 AS zsm
-          FROM p LEFT JOIN n ON n.k2 = p.order_key""",
-    "q49_pmf" ->
+          FROM p LEFT JOIN n ON n.k2 = p.order_key""")),
+    Gate("q49_pmf", (s, d) => {
+      // filters.pmf in its one-window regime (max_window_size = 3 stops
+      // the schedule after the first opening): min-surface -> nearest
+      // inpaint -> 1-step diamond erode+dilate -> height threshold, all
+      // SQL-expressible. Coordinates scaled to a ~21x21-cell grid.
+      val p = pts3(s, d).select(col("order_key"),
+        (col("x") / 500.0).as("x"), (col("y") / 500.0).as("y"), col("z"))
+      Pmf(p, cellSize = 1.0, initialDistance = 50.0, maxDistance = 50.0,
+          maxWindowSize = 3.0, slope = 1.0, returns = Seq.empty)
+        .select(col("order_key"), col("classification"))
+    }, Some(
       s"""WITH p AS (SELECT order_key, x / 500.0 AS x, y / 500.0 AS y, z
             FROM ($pts3Sql)),
           ext AS (SELECT MIN(x) AS mnx, MIN(y) AS mny,
@@ -2316,8 +1201,16 @@ object SparkEntry {
           SELECT pc.order_key,
             CASE WHEN d.z IS NULL THEN 1
                  WHEN pc.z - d.z < 50.0 THEN 2 ELSE 1 END AS classification
-          FROM pc LEFT JOIN di d USING (c, r)""",
-    "q50_skewness" ->
+          FROM pc LEFT JOIN di d USING (c, r)""")),
+    Gate("q50_skewness", (s, d) => {
+      // filters.skewnessbalancing: integer-valued z keeps the centered
+      // power sums FP-exact in any summation order, so the engine's
+      // range-partitioned prefix sums and the oracle's window sums
+      // produce bit-identical running skewness
+      val p = t(s, d, "events").select(col("event_id").as("order_key"),
+        ((col("event_id") * 13) % 1000).cast("double").as("z"))
+      SkewnessBalancing(p).select(col("order_key"), col("classification"))
+    }, Some(
       """WITH p AS (SELECT event_id AS order_key,
             CAST((event_id * 13) % 1000 AS DOUBLE) AS z FROM events),
           ctr AS (SELECT (MIN(z) + MAX(z)) / 2 AS ctr FROM p),
@@ -2348,8 +1241,18 @@ object SparkEntry {
             WHEN (SELECT lastT FROM m) IS NULL THEN
               (CASE WHEN (SELECT finalSkew FROM m) <= 0 THEN 2 ELSE 1 END)
             WHEN n < (SELECT lastT FROM m) THEN 2 ELSE 1 END AS classification
-          FROM sk""",
-    "q51_hag_dem" ->
+          FROM sk""")),
+    Gate("q51_hag_dem", (s, d) => {
+      // filters.hag_dem: DEM raster built as the per-cell min-z table;
+      // integer-valued z makes z - dem exact, no rounding needed
+      val p = pts3(s, d).withColumn("classification",
+        when(col("order_key") % 7 === 0, lit(2)).otherwise(lit(1)))
+      val raster = p.groupBy(floor(col("x") / 500.0).cast("long").as("cell_x"),
+          floor(col("y") / 500.0).cast("long").as("cell_y"))
+        .agg(min("z").as("band1"))
+      HagDem(p, raster, RasterGrid(0, 0, 500.0))
+        .select(col("order_key"), col("height_above_ground").as("hag"))
+    }, Some(
       s"""WITH p AS (SELECT *, CASE WHEN order_key % 7 = 0 THEN 2 ELSE 1 END
             AS cls FROM ($pts3Sql)),
           r AS (SELECT CAST(FLOOR(x / 500.0) AS BIGINT) AS cx,
@@ -2359,10 +1262,63 @@ object SparkEntry {
             CASE WHEN p.cls = 2 THEN 0.0
                  ELSE COALESCE(p.z - r.dem, 0.0) END AS hag
           FROM p LEFT JOIN r ON CAST(FLOOR(p.x / 500.0) AS BIGINT) = r.cx
-            AND CAST(FLOOR(p.y / 500.0) AS BIGINT) = r.cy""",
-    // planar-ground regime: any Delaunay triangle of exact plane samples
-    // interpolates the plane, so hag = z - (100 + 0.25x - 0.125y)
-    "q54_hag_delaunay" ->
+            AND CAST(FLOOR(p.y / 500.0) AS BIGINT) = r.cy""")),
+    Gate("q53_icp", (s, d) => {
+      // filters.icp: moving = fixed under a small rigid motion chosen
+      // INSIDE the NN-correspondence basin (0.1 deg about z + (8, -5,
+      // 4): max displacement ~25 units, well under the ~140-unit point
+      // spacing, so nearest-neighbor correspondences are exact from
+      // iteration 1 and ICP converges to the identity registration to
+      // ~1e-6). Fixed coords are integers, so round(*, 1) makes the
+      // registered output EQUAL the fixed coordinates — a plain SQL
+      // oracle. (Transform recovery at tight tolerances is further
+      // asserted in IcpSpec.)
+      val fixed = pts3(s, d).filter(col("order_key") % 20 === 0)
+      val th = math.toRadians(0.1)
+      val (c0, s0) = (math.cos(th), math.sin(th))
+      val movingAway = fixed.select(col("order_key"),
+        (lit(c0) * col("x") - lit(s0) * col("y") + 8.0).as("x"),
+        (lit(s0) * col("x") + lit(c0) * col("y") - 5.0).as("y"),
+        (col("z") + 4.0).as("z"))
+      val res = Icp(fixed, movingAway, maxIter = 10, cellSize = 500.0)
+      res.df.select(col("order_key"),
+        (round(col("x"), 1) + lit(0.0)).as("rx"),
+        (round(col("y"), 1) + lit(0.0)).as("ry"))
+    }, Some(
+      // icp convergent regime: exact NN correspondences from iteration 1,
+      // registration recovers the integer fixed coordinates within round(1)
+      s"""WITH p AS ($pts3Sql)
+          SELECT order_key, ROUND(x, 1) + 0.0 AS rx, ROUND(y, 1) + 0.0 AS ry
+          FROM p WHERE order_key % 20 = 0""")),
+    Gate("q54_hag_delaunay", (s, d) => {
+      // filters.hag_delaunay in a deterministic regime: ground is a
+      // complete 21x21 grid (spacing 100) on the exact plane
+      // z = 100 + 0.25x - 0.125y; queries sit >= 100 inside the grid
+      // with +0.25 lattice offset (no coincident-xy path), and with
+      // count=16 the containing cell's 4 corners are always among the
+      // neighbors, so the query is inside its local triangulation and
+      // ANY Delaunay triangle of plane samples interpolates the plane
+      // -> hag = z - plane(x, y), plain SQL. Plane values have <= 5
+      // fractional decimal digits, so round(6) absorbs barycentric FP.
+      val ev = t(s, d, "events").select(col("event_id"))
+      val g = ev.filter(col("event_id").between(1, 441)).select(
+          col("event_id").as("order_key"),
+          (((col("event_id") - 1) % 21) * 100).cast("double").as("x"),
+          (floor((col("event_id") - 1) / 21) * 100).cast("double").as("y"))
+        .withColumn("z", lit(100.0) + col("x") * 0.25 - col("y") * 0.125)
+        .withColumn("classification", lit(2))
+      val q = ev.filter(col("event_id") > 441).select(
+          col("event_id").as("order_key"),
+          (((col("event_id") * 7919) % 1700).cast("double") + 100.25).as("x"),
+          (((col("event_id") * 104729) % 1700).cast("double") + 100.25).as("y"),
+          ((col("event_id") * 131) % 1000).cast("double").as("z"))
+        .withColumn("classification", lit(1))
+      HagDelaunay(g.unionByName(q), count = 16)
+        .select(col("order_key"),
+          (round(col("height_above_ground"), 6) + lit(0.0)).as("hag"))
+    }, Some(
+      // planar-ground regime: any Delaunay triangle of exact plane samples
+      // interpolates the plane, so hag = z - (100 + 0.25x - 0.125y)
       """WITH g AS (SELECT event_id AS order_key FROM events
             WHERE event_id BETWEEN 1 AND 441),
           q AS (SELECT event_id AS order_key,
@@ -2372,20 +1328,39 @@ object SparkEntry {
             FROM events WHERE event_id > 441)
           SELECT order_key,
             ROUND(z - (100.0 + 0.25 * x - 0.125 * y), 6) + 0.0 AS hag FROM q
-          UNION ALL SELECT order_key, 0.0 AS hag FROM g""",
-    // sheared two-row lattice: the unique Delaunay face set is the
-    // up/down triangle enumeration, canonically rotated (min key first,
-    // CCW preserved): up (2i+1, 2i+3, 2i+2), down (2i+2, 2i+3, 2i+4)
-    "q55_delaunay" ->
+          UNION ALL SELECT order_key, 0.0 AS hag FROM g""")),
+    Gate("q55_delaunay", (s, d) => {
+      // filters.delaunay in a deterministic regime: two rows y=0/y=1,
+      // the top row shifted +0.5 (sheared lattice). The Delaunay
+      // triangulation is UNIQUE (no cocircular empty-circle quads: the
+      // only concyclic 4-subsets have a 5th point strictly inside), so
+      // the face table is enumerable in SQL: up (b_i, b_{i+1}, t_i) and
+      // down (b_{i+1}, t_{i+1}, t_i) triangles, canonically rotated.
+      DelaunayMesh(latticePts(s, d))
+    }, Some(
+      // sheared two-row lattice: the unique Delaunay face set is the
+      // up/down triangle enumeration, canonically rotated (min key first,
+      // CCW preserved): up (2i+1, 2i+3, 2i+2), down (2i+2, 2i+3, 2i+4)
       """WITH i AS (SELECT (event_id - 1) // 2 AS i FROM events
             WHERE event_id BETWEEN 1 AND 998 AND (event_id - 1) % 2 = 0)
           SELECT 2 * i + 1 AS a, 2 * i + 3 AS b, 2 * i + 2 AS c FROM i
           UNION ALL
-          SELECT 2 * i + 2 AS a, 2 * i + 3 AS b, 2 * i + 4 AS c FROM i""",
-    // faceraster over the lattice TIN: the reference's clamped bbox loop
-    // + barycentric interp replicated in SQL; every value is dyadic so
-    // the comparison is bit-exact
-    "q56_faceraster" ->
+          SELECT 2 * i + 2 AS a, 2 * i + 3 AS b, 2 * i + 4 AS c FROM i""")),
+    Gate("q56_faceraster", (s, d) => {
+      // filters.faceraster over the q55 lattice TIN: every quantity in
+      // the bbox-loop + barycentric chain is a dyadic rational (grid
+      // positions are multiples of 0.25, detT = 1, l's are multiples of
+      // 0.125, z integer), so engine and DuckDB agree bit-for-bit
+      val pts = latticePts(s, d)
+        .withColumn("z", ((col("order_key") * 131) % 7).cast("double"))
+      FaceRaster(pts, DelaunayMesh(pts), edgeLength = 0.5,
+          origin = Some((0.0, 0.0)), widthHeight = Some((1000L, 2L)))
+        .select(col("cell_x"), col("cell_y"),
+          (round(col("band1"), 6) + lit(0.0)).as("band1"))
+    }, Some(
+      // faceraster over the lattice TIN: the reference's clamped bbox loop
+      // + barycentric interp replicated in SQL; every value is dyadic so
+      // the comparison is bit-exact
       """WITH p AS (SELECT event_id AS k,
             CAST((event_id - 1) // 2 AS DOUBLE)
               + CASE WHEN (event_id - 1) % 2 = 1 THEN 0.5 ELSE 0.0 END AS x,
@@ -2426,77 +1401,248 @@ object SparkEntry {
           SELECT xi AS cell_x, yi AS cell_y,
             ROUND(l1 * za + l2 * zb + (1 - l1 - l2) * zc, 6) + 0.0 AS band1
           FROM l WHERE l1 >= 0 AND l1 <= 1 AND l2 >= 0 AND l2 <= 1
-            AND l1 + l2 <= 1""",
-    // csf margin-robust regime: classification is determined by scene
-    // construction (roof cells 1, ground 2), not by exact cloth FP
-    "q57_csf" -> roofSceneOracle,
-    // smrf provable regime: same scene as q57 (ZIpro == 0 everywhere by
-    // the all-zero-survivors inpaint argument)
-    "q52_smrf" -> roofSceneOracle,
-    // icp convergent regime: exact NN correspondences from iteration 1,
-    // registration recovers the integer fixed coordinates within round(1)
-    "q53_icp" ->
-      s"""WITH p AS ($pts3Sql)
-          SELECT order_key, ROUND(x, 1) + 0.0 AS rx, ROUND(y, 1) + 0.0 AS ry
-          FROM p WHERE order_key % 20 = 0""",
-    // litree provable regime: Pi = first 20 points of each crown, the
-    // outermost point is the Ni dummy; ids rank trees by height
-    "q58_litree" ->
+            AND l1 + l2 <= 1""")),
+    Gate("q57_csf", (s, d) => {
+      // filters.csf in a margin-robust regime: flat ground covering a
+      // complete 21x21 cell grid except 16 isolated single-cell "roof"
+      // returns 50 up. Ground clamps the cloth at the surface in 2
+      // iterations; each roof particle hovers within ~0.04 of ground
+      // level held by its 16 clamped neighbors, so the classification
+      // is exactly roof -> 1 (|cloth - (-50)| ~ 50 >> 0.5) and ground
+      // -> 2 (|0 - 0| = 0), independent of exact cloth positions.
+      Csf(roofScene(s, d), iterations = 200)
+        .select(col("order_key"), col("classification"))
+    }, Some(
+      // csf margin-robust regime: classification is determined by scene
+      // construction (roof cells 1, ground 2), not by exact cloth FP
+      roofSceneOracle)),
+    Gate("q58_litree", (s, d) => {
+      // filters.litree in a provable regime: 16 collinear "crowns" 150
+      // apart (> the 130 dominance radius -> one round, contexts pure),
+      // each 21 points at increasing gaps p_k = 0.02k^2 with strictly
+      // decreasing hag. In key order every interior point's nearest-Pi
+      // gap (0.02(2k-1)) stays below its distance to the dummy point
+      // n0 = the outermost point (0.02(400-k^2)), so Pi = the first 20
+      // points exactly; n0 itself stays unsegmented. cluster_id = tree
+      // rank by height = t + 1.
+      val ev = t(s, d, "events").filter(col("event_id").between(1, 336))
+      val p = ev.select(col("event_id").as("order_key"),
+        (floor((col("event_id") - 1) / 21) * 150.0 +
+          pow((col("event_id") - 1) % 21, 2) * 0.02).as("x"),
+        lit(0.0).as("y"),
+        (lit(20.0) - floor((col("event_id") - 1) / 21) * 0.5 -
+          ((col("event_id") - 1) % 21) * 0.1).as("height_above_ground"))
+      LiTree(p).select(col("order_key"), col("cluster_id"))
+    }, Some(
+      // litree provable regime: Pi = first 20 points of each crown, the
+      // outermost point is the Ni dummy; ids rank trees by height
       """SELECT event_id AS order_key,
             CASE WHEN (event_id - 1) % 21 = 20 THEN 0
                  ELSE (event_id - 1) // 21 + 1 END AS cluster_id
-          FROM events WHERE event_id BETWEEN 1 AND 336""",
-    // poisson provable-invariant regime: marching tetrahedra over a
-    // generic grid field is a closed oriented 2-manifold; the
-    // reconstructed sphere has Euler characteristic 2 and every vertex
-    // within 1.5 cells of the true radius (see q59 comment + PoissonSpec)
-    "q59_poisson" ->
+          FROM events WHERE event_id BETWEEN 1 AND 336""")),
+    Gate("q52_smrf", (s, d) => {
+      // filters.smrf end-to-end (low mask, progressive opening 1..2,
+      // provisional DEM inpaint, slope-adaptive threshold) in a provable
+      // regime: flat ground over a complete 21x21 cell grid with 16
+      // isolated 50-high roof cells. The opening removes each isolated
+      // peak at window 1 (50 >> slope*cell) so roof cells are voided;
+      // the 8-NN inpaint then averages SURVIVING cells which are all
+      // exactly 0 — the mean is 0 whichever 8 the tie order picks — so
+      // ZIpro == 0 everywhere, the gradient is 0, and classification is
+      // exactly roof -> 1, ground -> 2 (margins 50 vs threshold 0.5).
+      // Realistic-terrain behavior is covered by GroundSpec's planted
+      // scenes.
+      Smrf(roofScene(s, d), cell = 1.0, slope = 1.0, scalar = 1.25, threshold = 0.5,
+          window = 2.0, returns = Seq.empty)
+        .select(col("order_key"), col("classification"))
+    }, Some(
+      // smrf provable regime: same scene as q57 (ZIpro == 0 everywhere by
+      // the all-zero-survivors inpaint argument)
+      roofSceneOracle)),
+    Gate("q59_poisson", (s, d) => {
+      import s.implicits._
+      // filters.poisson on a Fibonacci sphere (R=30) with exact outward
+      // normals. The oracle checks provable invariants of the extracted
+      // level set rather than FP-dependent coordinates: marching
+      // tetrahedra on a generic grid field yields a CLOSED ORIENTED
+      // 2-manifold (every undirected edge on exactly 2 faces, every
+      // directed edge used exactly once), sphere topology gives Euler
+      // characteristic V - E + F = 2, and a well-sampled sphere keeps
+      // every vertex within 1.5 grid cells of the true radius
+      // (PoissonSpec proves the same invariants with margin).
+      val n = 1000
+      val ga = math.Pi * (3.0 - math.sqrt(5.0))
+      val ev = t(s, d, "events").filter(col("event_id").between(0, n - 1))
+      val zu = lit(1.0) - (col("event_id") * 2.0 + 1.0) / n
+      val ru = sqrt(greatest(lit(0.0), lit(1.0) - zu * zu))
+      val th = col("event_id") * ga
+      val pts = ev.select(col("event_id").as("order_key"),
+        (lit(100.0) + lit(30.0) * ru * cos(th)).as("x"),
+        (lit(200.0) + lit(30.0) * ru * sin(th)).as("y"),
+        (lit(50.0) + lit(30.0) * zu).as("z"),
+        (ru * cos(th)).as("normal_x"), (ru * sin(th)).as("normal_y"),
+        zu.as("normal_z"))
+      val res = Poisson(pts, depth = 5, outputNormals = false)
+      val faces = res.faces.persist()
+      val dirEdges = faces.select(explode(array(
+          struct(col("a").as("u"), col("b").as("v")),
+          struct(col("b").as("u"), col("c").as("v")),
+          struct(col("c").as("u"), col("a").as("v")))).as("e"))
+        .select(col("e.u").as("u"), col("e.v").as("v"))
+      // one aggregate per table instead of one count per invariant: the
+      // depth-5 mesh is tiny, so the invariant chain is job-overhead-bound
+      val undAgg = dirEdges.select(least(col("u"), col("v")).as("p"),
+          greatest(col("u"), col("v")).as("q"))
+        .groupBy("p", "q").agg(count(lit(1)).as("cnt"))
+        .agg(count(lit(1)).as("e"), coalesce(sum(
+          when(col("cnt") =!= 2, 1L).otherwise(0L)), lit(0L)).as("nonman"))
+        .head()
+      val (e, nonman) = (undAgg.getLong(0), undAgg.getLong(1))
+      val dirAgg = dirEdges.groupBy("u", "v").agg(count(lit(1)).as("cnt"))
+        .agg(coalesce(sum(col("cnt")), lit(0L)).as("tot"), coalesce(sum(
+          when(col("cnt") =!= 1, 1L).otherwise(0L)), lit(0L)).as("dup"))
+        .head()
+      val (f, dirDup) = (dirAgg.getLong(0) / 3, dirAgg.getLong(1))
+      val hs = 1.25 * 60.0 / 32.0
+      val vAgg = res.vertices.agg(count(lit(1)).as("v"), coalesce(sum(
+          when(abs(sqrt(pow(col("x") - 100.0, 2) + pow(col("y") - 200.0, 2) +
+            pow(col("z") - 50.0, 2)) - 30.0) >= 1.5 * hs, 1L)
+            .otherwise(0L)), lit(0L)).as("outTol")).head()
+      val (v, outTol) = (vAgg.getLong(0), vAgg.getLong(1))
+      faces.unpersist(false)
+      Seq((v - e + f, nonman, dirDup, outTol)).toDF("euler",
+        "nonmanifold_edges", "orientation_violations", "out_of_tolerance")
+    }, Some(
+      // poisson provable-invariant regime: marching tetrahedra over a
+      // generic grid field is a closed oriented 2-manifold; the
+      // reconstructed sphere has Euler characteristic 2 and every vertex
+      // within 1.5 cells of the true radius (see q59 comment + PoissonSpec)
       """SELECT CAST(2 AS BIGINT) AS euler,
             CAST(0 AS BIGINT) AS nonmanifold_edges,
             CAST(0 AS BIGINT) AS orientation_violations,
-            CAST(0 AS BIGINT) AS out_of_tolerance""",
-    // greedyprojection in the q55 unique-DT regime: the consensus mesh
-    // equals the global Delaunay enumeration, same canonical rotation
-    // (min key first, CCW under the +z normals)
-    "q60_greedyprojection" ->
+            CAST(0 AS BIGINT) AS out_of_tolerance""")),
+    Gate("q60_greedyprojection", (s, d) => {
+      // filters.greedyprojection on the q55 sheared lattice with explicit
+      // +z normals: every gate passes (corner angles 53.1/63.4 deg in
+      // [min,max], all edges <= 1.118 < radius, coplanar normals), the
+      // local projections are the identity on xy, and the lattice's DT is
+      // unique — so the Gopi consensus mesh equals the q55 face
+      // enumeration exactly, orientation CCW from the +z normals.
+      // num_neighbors=8 suffices: every point has exactly <= 4 neighbors
+      // inside the 1.2 gate radius (next nearest are at 1.8+), and the
+      // consensus mesh depends only on the gate-surviving set — k merely
+      // has to cover it, and a small k avoids wide kNN ring escalation
+      // over the 500x1 anisotropic extent.
+      GreedyProjection(latticePts(s, d).withColumn("z", lit(0.0))
+          .withColumn("normal_x", lit(0.0)).withColumn("normal_y", lit(0.0))
+          .withColumn("normal_z", lit(1.0)),
+        radius = 1.2, multiplier = 1.2, numNeighbors = 8, cellSize = 1.2)
+    }, Some(
+      // greedyprojection in the q55 unique-DT regime: the consensus mesh
+      // equals the global Delaunay enumeration, same canonical rotation
+      // (min key first, CCW under the +z normals)
       """WITH i AS (SELECT (event_id - 1) // 2 AS i FROM events
             WHERE event_id BETWEEN 1 AND 998 AND (event_id - 1) % 2 = 0)
           SELECT 2 * i + 1 AS a, 2 * i + 3 AS b, 2 * i + 2 AS c FROM i
           UNION ALL
-          SELECT 2 * i + 2 AS a, 2 * i + 3 AS b, 2 * i + 4 AS c FROM i""",
-    // projpipeline arithmetic steps replicated op-for-op (axisswap swaps
-    // x/y, unitconvert multiplies by 0.001, affine is k*v + off with the
-    // same association order as the built columns)
-    "q61_projpipeline" ->
+          SELECT 2 * i + 2 AS a, 2 * i + 3 AS b, 2 * i + 4 AS c FROM i""")),
+    Gate("q61_projpipeline", (s, d) =>
+      // filters.projpipeline in a pure-arithmetic regime (axisswap +
+      // unitconvert + affine compile to the same IEEE ops DuckDB runs);
+      // the utm/cart/helmert steps are covered by ProjPipelineSpec
+      // roundtrips — their series aren't ANSI-SQL-expressible.
+      ProjPipeline(pts(s, d),
+        "+proj=pipeline +step +proj=axisswap +order=2,1 " +
+        "+step +proj=unitconvert +xy_in=m +xy_out=km " +
+        "+step +proj=affine +s11=2 +xoff=10 +s22=0.5 +yoff=-5")
+        .select(col("order_key"), col("x").as("px"), col("y").as("py")), Some(
+      // projpipeline arithmetic steps replicated op-for-op (axisswap swaps
+      // x/y, unitconvert multiplies by 0.001, affine is k*v + off with the
+      // same association order as the built columns)
       s"""SELECT order_key,
           (CAST(2.0 AS DOUBLE) * (y * CAST(0.001 AS DOUBLE))) + CAST(10.0 AS DOUBLE) AS px,
           (CAST(0.5 AS DOUBLE) * (x * CAST(0.001 AS DOUBLE))) + CAST(-5.0 AS DOUBLE) AS py
-          FROM ($ptsSql)""",
+          FROM ($ptsSql)""")),
     // ---- round 3: spans invariant + formerly-ScalaTest-only ops ------
-    // crop -> splitter -> kNN-vote replicated relationally; spans rebuilt
-    // from the same integer recurrence (kind cycle, tok/media payloads,
-    // offset affine) and serialized with the same ':'/'|' separators
-    "q62_spans_pipeline" -> spansFlagshipSql,
-    // q104 = q62 through the GraftTable snapshot layer: same emit set,
-    // same oracle — the table round trip must be invisible to the rows
-    "q104_table_pipeline" -> spansFlagshipSql,
-    // .5 polygon bounds vs integer coords: no boundary ties, so the
-    // first-match-wins cascade is two half-plane CASE arms
-    "q63_overlay" ->
+    Gate("q62_spans_pipeline", (s, d) => {
+      // the BASELINE north-rule invariant end-to-end: crop -> splitter ->
+      // kNN-classify over a spans-bearing doc table; the serialized span
+      // sequence (kind, text, media_ref, offset in order) must survive
+      // every stage byte-for-byte. Spans are pure integer functions of
+      // order_key so the DuckDB oracle rebuilds them exactly.
+      spansFlagship(spansDocs(s, d))
+    }, Some(
+      // crop -> splitter -> kNN-vote replicated relationally; spans rebuilt
+      // from the same integer recurrence (kind cycle, tok/media payloads,
+      // offset affine) and serialized with the same ':'/'|' separators
+      spansFlagshipSql)),
+    Gate("q104_table_pipeline", (s, d) => {
+      // The same north-rule flagship, but THROUGH the snapshot-table
+      // layer: the spans-bearing doc table is committed to a GraftTable
+      // in four x-banded snapshots, read back at head with
+      // manifest-level file pruning (the crop bbox never opens the
+      // x>=7500 band's files — required below), then crop -> splitter
+      // -> kNN runs over the table read. Emits exactly q62's rows: the
+      // span-sequence invariant survives the table layer
+      // byte-for-byte, so the two queries share one oracle.
+      val root = freshTmp("graft-table-pipe", d)
+      val docs = spansDocs(s, d)
+      for (b <- 0 until 4)
+        graft.sources.GraftTable.commit(
+          docs.filter(col("x") >= b * 2500.0 && col("x") < (b + 1) * 2500.0), root)
+      val (tbl, filesRead, filesTotal) = graft.sources.GraftTable.readBox(
+        s, root, 2000.5, 2000.5, 7000.5, 7000.5)
+      require(filesRead < filesTotal,
+        s"manifest pruning expected: read $filesRead of $filesTotal files")
+      spansFlagship(tbl)
+    }, Some(
+      // q104 = q62 through the GraftTable snapshot layer: same emit set,
+      // same oracle — the table round trip must be invisible to the rows
+      spansFlagshipSql)),
+    Gate("q63_overlay", (s, d) => {
+      // first-match-wins polygon dim assignment; .5 bounds vs integer
+      // coords -> no boundary ties, so plain SQL half-plane tests match
+      val p = pts(s, d).withColumn("classification", lit(0))
+      Overlay(p, Seq(
+        ("POLYGON ((1000.5 1000.5, 6000.5 1000.5, 6000.5 6000.5, 1000.5 6000.5, 1000.5 1000.5))", 10),
+        ("POLYGON ((4000.5 4000.5, 9000.5 4000.5, 9000.5 9000.5, 4000.5 9000.5, 4000.5 4000.5))", 20)),
+        "classification")
+        .select(col("order_key"), col("classification").cast("long").as("cls"))
+    }, Some(
+      // .5 polygon bounds vs integer coords: no boundary ties, so the
+      // first-match-wins cascade is two half-plane CASE arms
       s"""SELECT order_key, CAST(CASE
             WHEN x > 1000.5 AND x < 6000.5 AND y > 1000.5 AND y < 6000.5 THEN 10
             WHEN x > 4000.5 AND x < 9000.5 AND y > 4000.5 AND y < 9000.5 THEN 20
             ELSE 0 END AS BIGINT) AS cls
-          FROM ($ptsSql)""",
-    "q64_colorization" ->
+          FROM ($ptsSql)""")),
+    Gate("q64_colorization", (s, d) => {
+      // raster = per-1000-cell min(value) built from the same points ->
+      // both engines derive identical band values; join + scale is exact
+      val p = pts(s, d)
+      val g = RasterGrid(0.0, 0.0, 1000.0)
+      val raster = p.groupBy(g.cellX(col("x")).as("cell_x"),
+        g.cellY(col("y")).as("cell_y")).agg(min("value").as("band1"))
+      Colorization(p, raster, g, Seq(("band1", "red", 2.0)))
+        .select(col("order_key"), round(col("red"), 6).as("red"))
+    }, Some(
       s"""WITH p AS ($ptsSql),
           r AS (SELECT CAST(FLOOR(x / 1000) AS BIGINT) AS cx,
             CAST(FLOOR(y / 1000) AS BIGINT) AS cy, MIN(value) AS b
             FROM p GROUP BY 1, 2)
           SELECT p.order_key, ROUND(r.b * 2.0, 6) + 0.0 AS red
           FROM p JOIN r ON CAST(FLOOR(p.x / 1000) AS BIGINT) = r.cx
-            AND CAST(FLOOR(p.y / 1000) AS BIGINT) = r.cy""",
-    "q65_dem" ->
+            AND CAST(FLOOR(p.y / 1000) AS BIGINT) = r.cy""")),
+    Gate("q65_dem", (s, d) => {
+      // filters.dem: keep points with z within [dem-50, dem+300] of the
+      // per-cell min-z surface (integer-exact on both engines)
+      val p = pts3(s, d)
+      val g = RasterGrid(0.0, 0.0, 1000.0)
+      val raster = p.groupBy(g.cellX(col("x")).as("cell_x"),
+        g.cellY(col("y")).as("cell_y")).agg(min("z").as("band1"))
+      DemFilter(p, raster, g, loOffset = -50.0, hiOffset = 300.0)
+        .select("order_key")
+    }, Some(
       s"""WITH p AS ($pts3Sql),
           r AS (SELECT CAST(FLOOR(x / 1000) AS BIGINT) AS cx,
             CAST(FLOOR(y / 1000) AS BIGINT) AS cy, MIN(z) AS dem
@@ -2504,12 +1650,19 @@ object SparkEntry {
           SELECT p.order_key FROM p
           JOIN r ON CAST(FLOOR(p.x / 1000) AS BIGINT) = r.cx
             AND CAST(FLOOR(p.y / 1000) AS BIGINT) = r.cy
-          WHERE p.z >= r.dem + (-50.0) AND p.z <= r.dem + 300.0""",
-    "q66_locate" ->
-      s"SELECT order_key, z FROM ($pts3Sql) ORDER BY z, order_key LIMIT 1",
-    // voxel centers at 125 + 250k: d2 terms are exact dyadic squares, so
-    // the (d2, order_key) argmin is engine-independent
-    "q67_voxel_center_nn" ->
+          WHERE p.z >= r.dem + (-50.0) AND p.z <= r.dem + 300.0""")),
+    Gate("q66_locate", (s, d) =>
+      // argmin of z with (z, order_key) tie-break — single-row result
+      Locate(pts3(s, d), "z", minimum = true).select("order_key", "z"), Some(
+      s"SELECT order_key, z FROM ($pts3Sql) ORDER BY z, order_key LIMIT 1")),
+    Gate("q67_voxel_center_nn", (s, d) =>
+      // voxelcenternearestneighbor: integer coords + 125-offset centers
+      // keep d2 integer-exact, ties break on order_key in both engines
+      Voxel.centerNearestNeighbor(pts3(s, d), cell = 250.0,
+          origin = Some((0.0, 0.0, 0.0)))
+        .select(col("order_key").as("kept_id")), Some(
+      // voxel centers at 125 + 250k: d2 terms are exact dyadic squares, so
+      // the (d2, order_key) argmin is engine-independent
       s"""WITH p AS ($pts3Sql),
           k AS (SELECT order_key,
             FLOOR(x / 250.0) AS vx, FLOOR(y / 250.0) AS vy, FLOOR(z / 250.0) AS vz,
@@ -2519,9 +1672,13 @@ object SparkEntry {
               AS d2 FROM p)
           SELECT order_key AS kept_id FROM (
             SELECT order_key, ROW_NUMBER() OVER (PARTITION BY vx, vy, vz
-              ORDER BY d2, order_key) AS rn FROM k) WHERE rn = 1""",
-    // centroid = exact integer sum / count: identical double either engine
-    "q68_voxel_centroid_nn" ->
+              ORDER BY d2, order_key) AS rn FROM k) WHERE rn = 1""")),
+    Gate("q68_voxel_centroid_nn", (s, d) =>
+      // centroid = exact-integer-sum / count -> same double either engine
+      Voxel.centroidNearestNeighbor(pts3(s, d), cell = 250.0,
+          origin = Some((0.0, 0.0, 0.0)))
+        .select(col("order_key").as("kept_id")), Some(
+      // centroid = exact integer sum / count: identical double either engine
       s"""WITH p AS ($pts3Sql),
           k AS (SELECT order_key, x, y, z,
             FLOOR(x / 250.0) AS vx, FLOOR(y / 250.0) AS vy, FLOOR(z / 250.0) AS vz
@@ -2534,19 +1691,40 @@ object SparkEntry {
             FROM k JOIN c USING (vx, vy, vz))
           SELECT order_key AS kept_id FROM (
             SELECT order_key, ROW_NUMBER() OVER (PARTITION BY vx, vy, vz
-              ORDER BY d2, order_key) AS rn FROM d) WHERE rn = 1""",
-    // clique regime (cell diameter 0 < radius < cell spacing): greedy
-    // sequential sampling == min order_key per occupied snapped cell
-    "q69_sample_fixpoint" ->
+              ORDER BY d2, order_key) AS rn FROM d) WHERE rn = 1""")),
+    Gate("q69_sample_fixpoint", (s, d) => {
+      // filters.sample in the clique regime: coords snapped to a 1000-grid
+      // make the conflict graph a disjoint union of same-cell cliques
+      // (cell diameter 0 < radius 400 < cell spacing 1000), so sequential
+      // greedy == min order_key per occupied cell — SQL-provable while the
+      // full pair-join + fixpoint machinery runs for real.
+      // capped at 1000 points (~5 per clique): the fixpoint's round count
+      // is the dependency-chain depth == clique size in this regime
+      val p = pts3(s, d).filter(col("order_key") < 1000)
+        .withColumn("x", floor(col("x") / 1000) * 1000.0)
+        .withColumn("y", floor(col("y") / 1000) * 1000.0)
+        .withColumn("z", floor(col("z") / 500) * 500.0)
+      Sample(p, radius = 400.0).select("order_key")
+    }, Some(
+      // clique regime (cell diameter 0 < radius < cell spacing): greedy
+      // sequential sampling == min order_key per occupied snapped cell
       s"""WITH p AS (SELECT order_key,
             FLOOR(x / 1000) * 1000.0 AS sx, FLOOR(y / 1000) * 1000.0 AS sy,
             FLOOR(z / 500) * 500.0 AS sz
             FROM ($pts3Sql) WHERE order_key < 1000)
-          SELECT MIN(order_key) AS order_key FROM p GROUP BY sx, sy, sz""",
-    // per-point md accumulated in the engine's (d2, cid) order — the SQL
-    // sum is the same explicit left-assoc 4-term chain; the global
-    // mean+2*sd threshold tolerates cross-engine last-ulp aggregation
-    "q70_outlier_stat" ->
+          SELECT MIN(order_key) AS order_key FROM p GROUP BY sx, sy, sz""")),
+    Gate("q70_outlier_stat", (s, d) => {
+      // statistical outlier: mean distance to 4 nearest, global
+      // mean + 2*stddev threshold. Threshold comparisons are robust to
+      // the engines' sum-order ulps (md spacing >> 1e-12).
+      val p = pts3(s, d).filter(col("order_key") < 2000)
+        .withColumn("classification", lit(0))
+      Outlier.statistical(p, meanK = 4, multiplier = 2.0)
+        .select(col("order_key"), col("classification").cast("long").as("cls"))
+    }, Some(
+      // per-point md accumulated in the engine's (d2, cid) order — the SQL
+      // sum is the same explicit left-assoc 4-term chain; the global
+      // mean+2*sd threshold tolerates cross-engine last-ulp aggregation
       s"""WITH p AS (SELECT * FROM ($pts3Sql) WHERE order_key < 2000),
           pairs AS (SELECT a.order_key AS qid, b.order_key AS cid,
             (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y) + (a.z-b.z)*(a.z-b.z) AS d2
@@ -2563,11 +1741,18 @@ object SparkEntry {
           SELECT qid AS order_key,
             CAST(CASE WHEN md >= (SELECT thr FROM t) THEN 7 ELSE 0 END AS BIGINT)
               AS cls
-          FROM md""",
-    // LOF brute force: kdist/reachability/lrd/lof per the standard
-    // definitions the engine implements; 5-decimal rounding absorbs
-    // aggregation-order ulps in the 4-term sums
-    "q71_lof" ->
+          FROM md""")),
+    Gate("q71_lof", (s, d) => {
+      // local outlier factor, brute-force-checkable subset; rounded to
+      // absorb sum-order ulps in lrd/lof ratios
+      val p = pts3(s, d).filter(col("order_key") < 2000)
+      Lof(p, minPts = 4)
+        .select(col("order_key"), (round(col("lof"), 5) + lit(0.0)).as("lof_r"),
+          (round(col("nn_distance"), 5) + lit(0.0)).as("nnd_r"))
+    }, Some(
+      // LOF brute force: kdist/reachability/lrd/lof per the standard
+      // definitions the engine implements; 5-decimal rounding absorbs
+      // aggregation-order ulps in the 4-term sums
       s"""WITH p AS (SELECT * FROM ($pts3Sql) WHERE order_key < 2000),
           pairs AS (SELECT a.order_key AS qid, b.order_key AS cid,
             (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y) + (a.z-b.z)*(a.z-b.z) AS d2
@@ -2586,10 +1771,19 @@ object SparkEntry {
           SELECT lof.qid AS order_key,
             ROUND(lof.avg_nbr_lrd / lrd.lrd, 5) + 0.0 AS lof_r,
             ROUND(kd.kdist, 5) + 0.0 AS nnd_r
-          FROM lof JOIN lrd ON lrd.qid = lof.qid JOIN kd ON kd.qid = lof.qid""",
-    // integer cumulative-bump prefix sum: every decrease in week-seconds
-    // over order_key order bumps the week count
-    "q72_gpstime" ->
+          FROM lof JOIN lrd ON lrd.qid = lof.qid JOIN kd ON kd.qid = lof.qid""")),
+    Gate("q72_gpstime", (s, d) => {
+      // gpstimeconvert gws->gt with wrapped week-seconds: planted wraps
+      // every ~605 keys; the distributed unwrap (partition offsets +
+      // boundary comparisons) must reproduce the integer cumulative-bump
+      // prefix sum exactly
+      val p = pts(s, d).withColumn("gps_time",
+        ((col("order_key") * 1000) % 604800).cast("double"))
+      GpsTimeConvert.gws2gt(p, startDateWeekSeconds = 1000000.0, wrapped = true)
+        .select(col("order_key"), col("gps_time").cast("long").as("gt"))
+    }, Some(
+      // integer cumulative-bump prefix sum: every decrease in week-seconds
+      // over order_key order bumps the week count
       """WITH p AS (SELECT event_id AS order_key,
             CAST((event_id * 1000) % 604800 AS DOUBLE) AS ws FROM events),
           b AS (SELECT order_key, ws,
@@ -2599,17 +1793,35 @@ object SparkEntry {
           c AS (SELECT order_key, ws, SUM(bump) OVER (ORDER BY order_key
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS nb FROM b)
           SELECT order_key,
-            CAST(1000000.0 + ws + nb * 604800.0 AS BIGINT) AS gt FROM c""",
-    "q73_mongo" ->
+            CAST(1000000.0 + ws + nb * 604800.0 AS BIGINT) AS gt FROM c""")),
+    Gate("q73_mongo", (s, d) =>
+      graft.expr.MongoFilter(t(s, d, "events"),
+        """{"$and":[{"value":{"$gte":10.0}},{"event_type":{"$in":["click","view"]}}]}""")
+        .select(col("event_id")), Some(
       """SELECT event_id FROM events
-         WHERE value >= 10.0 AND event_type IN ('click', 'view')""",
-    "q74_expression" ->
+         WHERE value >= 10.0 AND event_type IN ('click', 'view')""")),
+    Gate("q74_expression", (s, d) =>
+      // PDAL expression grammar -> Catalyst; integer-exact arithmetic
+      graft.expr.ExpressionFilter(pts(s, d),
+        "(x > 1000 && x <= 8000 && !(y >= 6000)) || x + y * 2 < 1500")
+        .select("order_key"), Some(
       s"""SELECT order_key FROM ($ptsSql)
           WHERE (x > 1000 AND x <= 8000 AND NOT (y >= 6000))
-             OR x + y * 2 < 1500""",
-    // toRadians replicated as x/180*pi (the JVM's op order); floor to
-    // integer meters absorbs libm tan/ln last-ulp differences
-    "q75_reprojection" ->
+             OR x + y * 2 < 1500""")),
+    Gate("q75_reprojection", (s, d) => {
+      // wgs84 -> web mercator; floor to integer meters absorbs libm
+      // last-ulp differences between JVM and DuckDB (~1e-8 m here)
+      val ll = t(s, d, "events").select(
+        col("event_id").as("order_key"),
+        ((col("event_id") * 7) % 350 - 175 + 0.5).cast("double").as("x"),
+        ((col("event_id") * 13) % 160 - 80 + 0.25).cast("double").as("y"),
+        lit(0.0).as("z"))
+      Reprojection.wgs84ToWebMercator(ll)
+        .select(col("order_key"), floor(col("x")).cast("long").as("mx"),
+          floor(col("y")).cast("long").as("my"))
+    }, Some(
+      // toRadians replicated as x/180*pi (the JVM's op order); floor to
+      // integer meters absorbs libm tan/ln last-ulp differences
       """WITH ll AS (SELECT event_id AS order_key,
             CAST((event_id * 7) % 350 - 175 + 0.5 AS DOUBLE) AS x,
             CAST((event_id * 13) % 160 - 80 + 0.25 AS DOUBLE) AS y
@@ -2618,25 +1830,52 @@ object SparkEntry {
             CAST(FLOOR(6378137.0 * (x / 180.0 * PI())) AS BIGINT) AS mx,
             CAST(FLOOR(6378137.0 * LN(TAN(PI() / 4 + (y / 180.0 * PI()) / 2)))
               AS BIGINT) AS my
-          FROM ll""",
-    // planted-cluster regime: every point is core, components = the 20
-    // planted groups, ids densified over each group's min order_key
-    "q76_dbscan" ->
+          FROM ll""")),
+    Gate("q76_dbscan", (s, d) => {
+      // 20 planted clusters (diameter ~14 << eps 50, gap 2000): all
+      // points core, cluster id = dense rank of min order_key; capped at
+      // 20k points so the radius self-join stays bounded at any sf
+      val p = t(s, d, "events").filter(col("event_id") < 20000).select(
+        col("event_id").as("order_key"),
+        ((col("event_id") % 20) * 2000 + (col("event_id") * 7) % 11).cast("double").as("x"),
+        ((col("event_id") * 13) % 11).cast("double").as("y"),
+        lit(0.0).as("z"))
+      Dbscan(p, eps = 50.0, minPoints = 3)
+        .select(col("order_key"), col("cluster_id"))
+    }, Some(
+      // planted-cluster regime: every point is core, components = the 20
+      // planted groups, ids densified over each group's min order_key
       """WITH p AS (SELECT event_id AS order_key, event_id % 20 AS g
             FROM events WHERE event_id < 20000),
           r AS (SELECT g, MIN(order_key) AS root FROM p GROUP BY g),
           d AS (SELECT g, DENSE_RANK() OVER (ORDER BY root) AS cid FROM r)
           SELECT p.order_key, CAST(d.cid AS BIGINT) AS cluster_id
-          FROM p JOIN d USING (g)""",
-    // init = 8 lowest order_keys, one per planted group; assignment is
-    // group membership at every Lloyd iteration, id = init index
-    "q77_kmeans" ->
+          FROM p JOIN d USING (g)""")),
+    Gate("q77_kmeans", (s, d) => {
+      // deterministic init = 8 lowest order_keys (event_id 0..7), planted
+      // exactly at the 8 cluster centers -> assignment == membership
+      val p = t(s, d, "events").select(
+        col("event_id").as("order_key"),
+        ((col("event_id") % 8) * 1000 +
+          when(col("event_id") < 8, 0).otherwise((col("event_id") * 7) % 10))
+          .cast("double").as("x"),
+        when(col("event_id") < 8, 0.0)
+          .otherwise(((col("event_id") * 13) % 10).cast("double")).as("y"),
+        lit(0.0).as("z"))
+      KMeans(p, k = 8).select(col("order_key"), col("cluster_id"))
+    }, Some(
+      // init = 8 lowest order_keys, one per planted group; assignment is
+      // group membership at every Lloyd iteration, id = init index
       """WITH p AS (SELECT event_id AS order_key, event_id % 8 AS g FROM events),
           init AS (SELECT g, ROW_NUMBER() OVER (ORDER BY order_key) - 1 AS idx
             FROM (SELECT order_key, g FROM p ORDER BY order_key LIMIT 8))
           SELECT p.order_key, CAST(init.idx AS BIGINT) AS cluster_id
-          FROM p JOIN init USING (g)""",
-    "q78_colorinterp" ->
+          FROM p JOIN init USING (g)""")),
+    Gate("q78_colorinterp", (s, d) =>
+      // linear ramp over [0, 1000): identical IEEE divide/multiply/floor
+      ColorInterp(pts3(s, d), "z", minValue = Some(0.0), maxValue = Some(1000.0))
+        .select(col("order_key"), col("red").cast("long").as("r"),
+          col("green").cast("long").as("g"), col("blue").cast("long").as("b")), Some(
       s"""WITH p AS ($pts3Sql),
           i AS (SELECT order_key,
             LEAST(GREATEST(CAST(FLOOR((z - 0.0) / 1000.0 * 5) AS INT), 0), 4)
@@ -2648,17 +1887,29 @@ object SparkEntry {
               WHEN 3 THEN 200 ELSE 60 END AS BIGINT) AS g,
             CAST(CASE idx WHEN 0 THEN 115 WHEN 1 THEN 180 WHEN 2 THEN 150
               WHEN 3 THEN 100 ELSE 40 END AS BIGINT) AS b
-          FROM i""",
-    // view = exclusive prefix sum of edge flags over order_key // 2
-    "q79_merge_scanline" ->
+          FROM i""")),
+    Gate("q79_merge_scanline", (s, d) => {
+      // merge (UNION ALL) of two disjoint halves, then separatescanline:
+      // view = exclusive prefix sum of planted edge flags / groupsOf 2
+      val p = pts(s, d).withColumn("edge_of_flight_line",
+        when(col("order_key") % 50 === 0, 1).otherwise(0))
+      val merged = Merge(Seq(p.filter(col("order_key") % 2 === 0),
+        p.filter(col("order_key") % 2 === 1)))
+      SeparateScanLine(merged, groupsOf = 2)
+        .select(col("order_key"), col("view_id"))
+    }, Some(
+      // view = exclusive prefix sum of edge flags over order_key // 2
       s"""WITH p AS (SELECT order_key,
             CASE WHEN order_key % 50 = 0 THEN 1 ELSE 0 END AS e FROM ($ptsSql)),
           c AS (SELECT order_key, SUM(e) OVER (ORDER BY order_key
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - e AS pex FROM p)
-          SELECT order_key, CAST(pex // 2 AS BIGINT) AS view_id FROM c""",
-    // kth (k=4, self excluded) neighbor distance: sqrt of exact-integer
-    // d2, bit-identical across engines
-    "q80_nndistance" ->
+          SELECT order_key, CAST(pex // 2 AS BIGINT) AS view_id FROM c""")),
+    Gate("q80_nndistance", (s, d) =>
+      // kth-neighbor distance: sqrt of integer-exact d2, bit-identical
+      NNDistance(pts3(s, d).filter(col("order_key") < 2000), k = 4)
+        .select(col("order_key"), col("nn_distance")), Some(
+      // kth (k=4, self excluded) neighbor distance: sqrt of exact-integer
+      // d2, bit-identical across engines
       s"""WITH p AS (SELECT * FROM ($pts3Sql) WHERE order_key < 2000),
           pairs AS (SELECT a.order_key AS qid, b.order_key AS cid,
             (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y) + (a.z-b.z)*(a.z-b.z) AS d2
@@ -2666,10 +1917,15 @@ object SparkEntry {
           ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
             ORDER BY d2, cid) AS rnk FROM pairs)
           SELECT qid AS order_key, SQRT(d2) AS nn_distance
-          FROM ranked WHERE rnk = 5""",
-    // z-ascending gap walk per 500-cell: noise while every gap so far
-    // (including own) >= threshold; integer z makes comparisons exact
-    "q81_elm" ->
+          FROM ranked WHERE rnk = 5""")),
+    Gate("q81_elm", (s, d) => {
+      // extended local minimum: z-gap walk per 500-cell, integer z
+      val p = pts3(s, d).withColumn("classification", lit(0))
+      Elm(p, cell = 500.0, threshold = 40.0)
+        .select(col("order_key"), col("classification").cast("long").as("cls"))
+    }, Some(
+      // z-ascending gap walk per 500-cell: noise while every gap so far
+      // (including own) >= threshold; integer z makes comparisons exact
       s"""WITH p AS ($pts3Sql),
           k AS (SELECT order_key, z,
             FLOOR(x / 500) AS cx, FLOOR(y / 500) AS cy FROM p),
@@ -2683,39 +1939,105 @@ object SparkEntry {
               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS allok FROM g)
           SELECT order_key,
             CAST(CASE WHEN allok = 1 THEN 7 ELSE 0 END AS BIGINT) AS cls
-          FROM a""",
-    // interpolated quartiles over integers are exact dyadics in both
-    // engines (same lower + frac*(upper-lower) definition)
-    "q82_iqr" ->
+          FROM a""")),
+    Gate("q82_iqr", (s, d) =>
+      // interpolated quartiles over integer values: Spark percentile and
+      // DuckDB quantile_cont share the linear-interpolation definition
+      Iqr(pts(s, d), "x", k = 0.5).select("order_key"), Some(
+      // interpolated quartiles over integers are exact dyadics in both
+      // engines (same lower + frac*(upper-lower) definition)
       s"""WITH p AS ($ptsSql),
           q AS (SELECT quantile_cont(x, 0.25) AS q1, quantile_cont(x, 0.75) AS q3
             FROM p)
           SELECT order_key FROM p, q
-          WHERE x >= q1 - 0.5 * (q3 - q1) AND x <= q3 + 0.5 * (q3 - q1)""",
-    // the catalog machinery (walk, bbox prune, asset resolve, union) is
-    // the engine side; the oracle rebuilds the surviving rows directly
-    "q83_stac_union" ->
+          WHERE x >= q1 - 0.5 * (q3 - q1) AND x <= q3 + 0.5 * (q3 - q1)""")),
+    Gate("q83_stac_union", (s, d) => {
+      // readers.stac end-to-end through the oracle gate: a 3-item catalog
+      // whose items are slices of pts (A: order_key<5000, C: >=5000, both
+      // bbox [0,10000]^2) plus item B whose bbox is disjoint from the
+      // query bounds AND whose asset file does not exist — bounds-pruning
+      // B before I/O is what lets the read succeed at all. Result =
+      // pts clipped to the bounds, which DuckDB rebuilds directly.
+      val dir = java.nio.file.Paths.get(
+        s"/tmp/graft-stac-${Integer.toHexString(d.hashCode)}")
+      java.nio.file.Files.createDirectories(dir)
+      val p = pts(s, d).select("order_key", "x", "y")
+      p.filter(col("order_key") < 5000)
+        .write.mode("overwrite").parquet(s"$dir/itemA.parquet")
+      p.filter(col("order_key") >= 5000)
+        .write.mode("overwrite").parquet(s"$dir/itemC.parquet")
+      def item(id: String, bbox: String, asset: String) =
+        s"""{"type":"Feature","id":"$id","bbox":$bbox,"properties":{},
+            "assets":{"data":{"href":"$asset"}}}"""
+      java.nio.file.Files.writeString(dir.resolve("A.json"),
+        item("a", "[0,0,10000,10000]", "itemA.parquet"))
+      java.nio.file.Files.writeString(dir.resolve("B.json"),
+        item("b", "[50000,50000,60000,60000]", "missing.parquet"))
+      java.nio.file.Files.writeString(dir.resolve("C.json"),
+        item("c", "[0,0,10000,10000]", "itemC.parquet"))
+      java.nio.file.Files.writeString(dir.resolve("catalog.json"),
+        """{"type":"Catalog","id":"root","links":[
+            {"rel":"item","href":"A.json"},{"rel":"item","href":"B.json"},
+            {"rel":"item","href":"C.json"}]}""")
+      graft.sources.StacReader.read(s, s"$dir/catalog.json",
+        bounds = Some((0.0, 0.0, 8000.0, 8000.0)))
+    }, Some(
+      // the catalog machinery (walk, bbox prune, asset resolve, union) is
+      // the engine side; the oracle rebuilds the surviving rows directly
       s"""SELECT order_key, x, y FROM ($ptsSql)
-          WHERE x BETWEEN 0 AND 8000 AND y BETWEEN 0 AND 8000""",
-    // dense event_ids 1..1500 make the read-back vertex index of
-    // order_key k exactly k-1; corner-a coords are the pts recurrence
-    "q84_ply_roundtrip" ->
+          WHERE x BETWEEN 0 AND 8000 AND y BETWEEN 0 AND 8000""")),
+    Gate("q84_ply_roundtrip", (s, d) => {
+      // writers.ply -> readers.ply round trip through the oracle gate:
+      // integral coords print exactly at any fixed precision, event_ids
+      // are dense from 1, so the read-back face indices (vertex ranks)
+      // are (k-1, k, k+1) — pure SQL. Faces join back to their corner-a
+      // coordinates to exercise both PLY elements in one hashed result.
+      val p = pts(s, d).filter(col("order_key").between(1, 1500))
+        .select("order_key", "x", "y", "z")
+      val faces = p.filter(col("order_key") % 3 === 1 &&
+          col("order_key") <= 1498)
+        .select(col("order_key").as("a"), (col("order_key") + 1).as("b"),
+          (col("order_key") + 2).as("c"))
+      val f = s"/tmp/graft-ply-${Integer.toHexString(d.hashCode)}.ply"
+      graft.sources.MeshWriters.writePly(p, faces, f)
+      val (v, fi) = graft.sources.PlyReader.readAscii(s, f)
+      val va = v.select(col("order_key").as("ia"),
+        col("x").as("xa"), col("y").as("ya"))
+      fi.join(va, fi("a") === va("ia"))
+        .select(col("a").as("ia"), col("b").as("ib"), col("c").as("ic"),
+          col("xa"), col("ya"))
+    }, Some(
+      // dense event_ids 1..1500 make the read-back vertex index of
+      // order_key k exactly k-1; corner-a coords are the pts recurrence
       """SELECT event_id - 1 AS ia, event_id AS ib, event_id + 1 AS ic,
           CAST((event_id * 7919) % 10000 AS DOUBLE) AS xa,
           CAST((event_id * 104729) % 10000 AS DOUBLE) AS ya
           FROM events
-          WHERE event_id BETWEEN 1 AND 1498 AND event_id % 3 = 1""",
-    // tail = rank by order_key, keep the last 1000; ferried copies ride
-    "q85_ferry_tail" ->
+          WHERE event_id BETWEEN 1 AND 1498 AND event_id % 3 = 1""")),
+    Gate("q85_ferry_tail", (s, d) => {
+      // filters.ferry + filters.tail: copy dims, then keep the last 1000
+      // points in insertion order (distributed global rank, no sort of
+      // the ride-along columns)
+      val p = Ferry(pts(s, d), Seq("value" -> "value_copy", "x" -> "x_orig"))
+      HeadTail.tail(p, 1000)
+        .select(col("order_key"), col("x"), col("value_copy"), col("x_orig"))
+    }, Some(
+      // tail = rank by order_key, keep the last 1000; ferried copies ride
       s"""WITH p AS (SELECT *, value AS value_copy, x AS x_orig FROM ($ptsSql)),
           n AS (SELECT COUNT(*) AS cnt FROM p),
           r AS (SELECT p.*, ROW_NUMBER() OVER (ORDER BY order_key) - 1 AS rnk
             FROM p)
           SELECT order_key, x, value_copy, x_orig FROM r, n
-          WHERE rnk >= cnt - 1000""",
-    // raw 32->64 bit-interleave via the same spread cascade the engine
-    // codegens; rank ties break on the old insertion key
-    "q86_mortonorder" ->
+          WHERE rnk >= cnt - 1000""")),
+    Gate("q86_mortonorder", (s, d) =>
+      // filters.mortonorder at cell size 1.0 over integer coords: the
+      // quantization is exact, and the biased+sign-flipped Z-code orders
+      // identically to the raw bit-interleave the oracle computes (the
+      // bias adds a constant 2^62 for non-negative cell coords)
+      MortonOrder(pts(s, d), reverse = false, cellSize = 1.0)
+        .select(col("x"), col("y"), col("order_key").as("morton_rank")), Some(
+      // raw 32->64 bit-interleave via the same spread cascade the engine
+      // codegens; rank ties break on the old insertion key
       s"""WITH p AS (SELECT order_key AS ok0, x, y FROM ($ptsSql)),
           mm AS (SELECT MIN(x) AS mnx, MIN(y) AS mny FROM p),
           c AS (SELECT ok0, x, y,
@@ -2738,9 +2060,14 @@ object SparkEntry {
             ((b | (b << 1)) & 6148914691236517205) AS b FROM s4)
           SELECT x, y,
             ROW_NUMBER() OVER (ORDER BY ((a << 1) | b), ok0) - 1 AS morton_rank
-          FROM s5""",
-    // self-inclusive radius count / sphere volume, identical IEEE ops
-    "q87_radialdensity" ->
+          FROM s5""")),
+    Gate("q87_radialdensity", (s, d) =>
+      // filters.radialdensity: neighbor count (self included, d2 <= r^2
+      // exact over integer-derived coords) / sphere volume — the divide
+      // is the same IEEE sequence in both engines
+      RadialDensity(pts3(s, d).filter(col("order_key") < 2000), radius = 800.0)
+        .select(col("order_key"), col("radial_density")), Some(
+      // self-inclusive radius count / sphere volume, identical IEEE ops
       s"""WITH p AS (SELECT * FROM ($pts3Sql) WHERE order_key < 2000),
           cnt AS (SELECT a.order_key, COUNT(*) AS c FROM p a JOIN p b
             ON (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y) + (a.z-b.z)*(a.z-b.z)
@@ -2748,9 +2075,14 @@ object SparkEntry {
             GROUP BY a.order_key)
           SELECT order_key, CAST(c AS DOUBLE) /
             (CAST(4 AS DOUBLE) / CAST(3 AS DOUBLE) * pi() * 800.0 * 800.0 * 800.0)
-            AS radial_density FROM cnt""",
-    // kNN rank 2..k+1 over (d2, cid); % of edges with no reverse edge
-    "q88_reciprocity" ->
+            AS radial_density FROM cnt""")),
+    Gate("q88_reciprocity", (s, d) =>
+      // filters.reciprocity: % of a point's k=4 neighbors that don't
+      // count it among their own k; kNN rank mirrors the (d2, cid)
+      // tie-break over exact-integer d2
+      Reciprocity(pts3(s, d).filter(col("order_key") < 1500), k = 4)
+        .select(col("order_key"), col("reciprocity")), Some(
+      // kNN rank 2..k+1 over (d2, cid); % of edges with no reverse edge
       s"""WITH p AS (SELECT * FROM ($pts3Sql) WHERE order_key < 1500),
           pairs AS (SELECT a.order_key AS src, b.order_key AS dst,
             (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y) + (a.z-b.z)*(a.z-b.z) AS d2
@@ -2762,10 +2094,36 @@ object SparkEntry {
             FROM edges e LEFT JOIN edges b ON b.src = e.dst AND b.dst = e.src)
           SELECT src AS order_key,
             CAST(100 AS DOUBLE) * SUM(miss) / COUNT(*) AS reciprocity
-          FROM rec GROUP BY src""",
-    // the checkpoint/resume machinery is engine-side (the poisoned second
-    // run proves it); the oracle rebuilds the 3-stage result directly
-    "q89_checkpoint_resume" ->
+          FROM rec GROUP BY src""")),
+    Gate("q89_checkpoint_resume", (s, d) => {
+      // north-rule resumability through the oracle gate: a 3-stage
+      // checkpointed pipeline (crop -> assign -> tile agg) runs once,
+      // then runs AGAIN with every stage function replaced by one that
+      // throws — the second run can only succeed by resuming from the
+      // persisted stage data + lineage sidecars, never recomputing.
+      // The returned result is the RESUMED final stage.
+      val dir = s"/tmp/graft-ckpt-${Integer.toHexString(d.hashCode)}"
+      val hp = new org.apache.hadoop.fs.Path(dir)
+      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+      val stages = Seq[(String, DataFrame => DataFrame)](
+        "crop" -> (df => Crop.box2d(df, 1000.5, 1000.5, 9000.5, 9000.5)),
+        "assign" -> (df => Assign(df, "z", (col("order_key") % 97).cast("double"),
+          Some(col("x") < 5000.0))),
+        "tile_agg" -> (df => df.groupBy(
+          floor(col("x") / 1000).cast("long").as("cell_x"),
+          floor(col("y") / 1000).cast("long").as("cell_y"))
+          .agg(count(lit(1)).as("n"), sum(col("z").cast("long")).as("v"))))
+      val runner = new graft.pipeline.CheckpointRunner(s, dir)
+      runner.run(pts(s, d), stages) // populates every stage checkpoint
+      val poisoned = stages.map { case (n, _) =>
+        n -> ((_: DataFrame) => throw new IllegalStateException(
+          s"resume recomputed stage $n")): (String, DataFrame => DataFrame)
+      }
+      runner.run(pts(s, d), poisoned) // must resume, not recompute
+        .select("cell_x", "cell_y", "n", "v")
+    }, Some(
+      // the checkpoint/resume machinery is engine-side (the poisoned second
+      // run proves it); the oracle rebuilds the 3-stage result directly
       s"""WITH p AS (SELECT * FROM ($ptsSql)
             WHERE x >= 1000.5 AND x <= 9000.5 AND y >= 1000.5 AND y <= 9000.5),
           a AS (SELECT x, y,
@@ -2773,11 +2131,28 @@ object SparkEntry {
           SELECT CAST(FLOOR(x / 1000) AS BIGINT) AS cell_x,
             CAST(FLOOR(y / 1000) AS BIGINT) AS cell_y,
             COUNT(*) AS n, CAST(SUM(zv) AS BIGINT) AS v
-          FROM a GROUP BY 1, 2""",
-    // seed = Java String.hashCode('m/' || n), recomputed from digits
-    // (max |h| ~1.02e8 so the 32-bit wraparound never engages); meta and
-    // the decoded header must agree with the engine's synthesis
-    "q90_media_plumbing" ->
+          FROM a GROUP BY 1, 2""")),
+    Gate("q90_media_plumbing", (s, d) => {
+      // multimodal plumbing end-to-end: spans' media refs -> deterministic
+      // fake blobs (seed = Java String.hashCode, which the oracle
+      // recomputes arithmetically from the ref's digits) -> header decode
+      // + feature-extraction batch pass; meta and decoded dims must agree
+      val refs = spansDocs(s, d).select(explode(col("spans")).as("sp"))
+        .filter(col("sp.kind") =!= "text")
+        .groupBy(col("sp.media_ref").as("media_ref"))
+        .agg(min(col("sp.kind")).as("kind"))
+      val media = graft.media.Multimodal.synthMedia(s, refs)
+      val feats = graft.media.Multimodal.extractFeatures(media)
+      media.join(feats.select(col("media_ref"), col("width").as("dec_w"),
+          col("height").as("dec_h")), Seq("media_ref"))
+        .select(col("media_ref"), col("kind"),
+          col("meta.width").as("w"), col("meta.height").as("h"),
+          col("meta.sample_rate").as("rate"), col("meta.n_frames").as("frames"),
+          length(col("content")).as("blen"), col("dec_w"), col("dec_h"))
+    }, Some(
+      // seed = Java String.hashCode('m/' || n), recomputed from digits
+      // (max |h| ~1.02e8 so the 32-bit wraparound never engages); meta and
+      // the decoded header must agree with the engine's synthesis
       """WITH e AS (SELECT unnest(list_transform(
             generate_series(0, event_id % 5), i -> event_id * 31 + i * 7)) AS h
             FROM events),
@@ -2797,10 +2172,15 @@ object SparkEntry {
             CAST(1 AS INT) AS frames, CAST(272 AS INT) AS blen,
             CAST(64 + seed % 192 AS INT) AS dec_w,
             CAST(64 + (seed >> 3) % 192 AS INT) AS dec_h
-          FROM hh""",
-    // sequential farthest-point greedy as a recursive CTE: each level's
-    // window argmax is the next pick; mind folds via the same LEAST
-    "q91_fps" ->
+          FROM hh""")),
+    Gate("q91_fps", (s, d) =>
+      // farthest-point sampling k=8 over the exact-integer subset; the
+      // oracle replays the greedy via a recursive CTE with the same
+      // (min-dist DESC, id ASC) argmax tie-break
+      Fps(pts3(s, d).filter(col("order_key") < 500), 8)
+        .select("order_key"), Some(
+      // sequential farthest-point greedy as a recursive CTE: each level's
+      // window argmax is the next pick; mind folds via the same LEAST
       s"""WITH RECURSIVE p AS (SELECT order_key AS id, x, y, z
             FROM ($pts3Sql) WHERE order_key < 500),
           f AS (SELECT * FROM p ORDER BY id LIMIT 1),
@@ -2823,26 +2203,62 @@ object SparkEntry {
               FROM r)
             WHERE id <> bid AND it < 8
           )
-          SELECT DISTINCT picked AS order_key FROM r""",
-    // first point per voxel, coords snapped to (floor + 0.5) * cell
-    "q92_voxel_center" ->
+          SELECT DISTINCT picked AS order_key FROM r""")),
+    Gate("q92_voxel_center", (s, d) =>
+      // voxeldownsize center mode: kept coords snap to voxel centers —
+      // (floor + 0.5) * cell is exact dyadic arithmetic in both engines
+      Voxel.downsize(pts3(s, d), cell = 250.0, mode = "center",
+          origin = Some((0.0, 0.0, 0.0)))
+        .select(col("order_key"), col("x"), col("y"), col("z")), Some(
+      // first point per voxel, coords snapped to (floor + 0.5) * cell
       s"""WITH p AS ($pts3Sql),
           k AS (SELECT MIN(order_key) AS order_key,
             FLOOR(x / 250) AS vx, FLOOR(y / 250) AS vy, FLOOR(z / 250) AS vz
             FROM p GROUP BY 2, 3, 4)
           SELECT order_key, (vx + 0.5) * 250.0 + 0.0 AS x,
             (vy + 0.5) * 250.0 + 0.0 AS y, (vz + 0.5) * 250.0 + 0.0 AS z
-          FROM k""",
-    // the shrink loop's surviving set in the planted regime: every A
-    // (ids 0-299, kept first) and every C (600-899, 600 >= 490 from A);
-    // the B's (300-599) conflict with their kept A at distance 300
-    "q93_dartthrowing" ->
+          FROM k""")),
+    Gate("q93_dartthrowing", (s, d) => {
+      // relaxationdartthrowing in a provable regime: 300 cells spaced
+      // 1000 apart, each holding A(0,0) < B(+300,0) < C(0,+600) in
+      // insertion order; min cross-cell distance 700. r0=700 keeps only
+      // the A's (300 < 600 target), the decayed r1=490 keeps A+C (600 >=
+      // target, stop) — so the full two-round shrink loop runs and the
+      // surviving set has the closed form {A, C}.
+      val p = t(s, d, "events").filter(col("event_id") < 900).select(
+        col("event_id").as("order_key"),
+        ((col("event_id") % 300) * 1000 +
+          when(floor(col("event_id") / 300) === 1, 300.0).otherwise(0.0))
+          .cast("double").as("x"),
+        when(floor(col("event_id") / 300) === 2, 600.0).otherwise(0.0)
+          .cast("double").as("y"),
+        lit(0.0).as("z"))
+      RelaxationDartThrowing(p, targetCount = 600, startRadius = 700.0,
+        decay = 0.7).select("order_key")
+    }, Some(
+      // the shrink loop's surviving set in the planted regime: every A
+      // (ids 0-299, kept first) and every C (600-899, 600 >= 490 from A);
+      // the B's (300-599) conflict with their kept A at distance 300
       """SELECT event_id AS order_key FROM events
-          WHERE event_id < 900 AND NOT (event_id >= 300 AND event_id < 600)""",
-    // d2 is an exact integer in double, min/max/avg over it are exact and
-    // order-independent, sqrt is correctly rounded — both kernels' math
-    // reduces to the same bits in any engine
-    "q94_delta" ->
+          WHERE event_id < 900 AND NOT (event_id >= 300 AND event_id < 600)""")),
+    Gate("q94_delta", (s, d) => {
+      // kernels.delta (DeltaKernel.cpp:45): per-point nearest-neighbor
+      // distance between two disjoint clouds, both directions. d2 values
+      // are exact integer-valued doubles, sqrt is IEEE-correctly-rounded
+      // in any engine, so the hash gate is exact.
+      val p = pts3(s, d)
+      val a = p.filter(col("order_key").between(1, 1500))
+        .select("order_key", "x", "y", "z")
+      val b = p.filter(col("order_key").between(1501, 3000))
+        .select("order_key", "x", "y", "z")
+      graft.pipeline.CloudMetrics.delta(a, b).withColumn("dir", lit("ab"))
+        .unionByName(
+          graft.pipeline.CloudMetrics.delta(b, a).withColumn("dir", lit("ba")))
+        .select(col("dir"), col("order_key"), col("nn_dist"))
+    }, Some(
+      // d2 is an exact integer in double, min/max/avg over it are exact and
+      // order-independent, sqrt is correctly rounded — both kernels' math
+      // reduces to the same bits in any engine
       s"""WITH p AS ($pts3Sql),
           a AS (SELECT * FROM p WHERE order_key BETWEEN 1 AND 1500),
           b AS (SELECT * FROM p WHERE order_key BETWEEN 1501 AND 3000),
@@ -2854,8 +2270,21 @@ object SparkEntry {
             FROM b, a GROUP BY 1)
           SELECT 'ab' AS dir, order_key, sqrt(md) AS nn_dist FROM dab
           UNION ALL
-          SELECT 'ba' AS dir, order_key, sqrt(md) AS nn_dist FROM dba""",
-    "q95_hausdorff_chamfer" ->
+          SELECT 'ba' AS dir, order_key, sqrt(md) AS nn_dist FROM dba""")),
+    Gate("q95_hausdorff_chamfer", (s, d) => {
+      // kernels.hausdorff / kernels.chamfer (HausdorffKernel.cpp:48,
+      // ChamferKernel.cpp:46): both aggregates run on raw squared
+      // distances (exact integers -> order-independent sums), so the
+      // one-row result is bit-exact against any engine.
+      val p = pts3(s, d)
+      val a = p.filter(col("order_key").between(1, 1500))
+        .select("order_key", "x", "y", "z")
+      val b = p.filter(col("order_key").between(1501, 3000))
+        .select("order_key", "x", "y", "z")
+      val h = graft.pipeline.CloudMetrics.hausdorff(a, b)
+      val c = graft.pipeline.CloudMetrics.chamfer(a, b)
+      s.range(1).select(lit(h).as("hausdorff"), lit(c).as("chamfer"))
+    }, Some(
       s"""WITH p AS ($pts3Sql),
           a AS (SELECT * FROM p WHERE order_key BETWEEN 1 AND 1500),
           b AS (SELECT * FROM p WHERE order_key BETWEEN 1501 AND 3000),
@@ -2867,11 +2296,17 @@ object SparkEntry {
             FROM b, a GROUP BY 1)
           SELECT sqrt(GREATEST((SELECT MAX(md) FROM dab),
                                (SELECT MAX(md) FROM dba))) AS hausdorff,
-            (SELECT AVG(md) FROM dab) + (SELECT AVG(md) FROM dba) AS chamfer""",
-    // splitmix64 replayed in HUGEINT mod-2^64 arithmetic: 64x64-bit
-    // multiply split hi/lo 32 to stay under the 128-bit ceiling; the rank
-    // orders on the SIGNED reinterpretation (Spark longs), key tiebreak
-    "q96_randomize" ->
+            (SELECT AVG(md) FROM dab) + (SELECT AVG(md) FROM dba) AS chamfer""")),
+    Gate("q96_randomize", (s, d) => {
+      // filters.randomize: seeded deterministic shuffle — the splitmix64
+      // finalizer is pure 64-bit arithmetic the oracle replays in HUGEINT
+      // mod-2^64 SQL; x identifies the source row (7919 coprime to 1e4).
+      Randomize(pts(s, d).select("order_key", "x"), seed = 12345L)
+        .select(col("x"), col("order_key").as("shuffle_rank"))
+    }, Some(
+      // splitmix64 replayed in HUGEINT mod-2^64 arithmetic: 64x64-bit
+      // multiply split hi/lo 32 to stay under the 128-bit ceiling; the rank
+      // orders on the SIGNED reinterpretation (Spark longs), key tiebreak
       """WITH p AS (SELECT event_id AS k,
             CAST((event_id * 7919) % 10000 AS DOUBLE) AS x FROM events),
           s0 AS (SELECT k, x, (CAST(k + 12345 AS HUGEINT)
@@ -2888,8 +2323,17 @@ object SparkEntry {
           g AS (SELECT k, x, CASE WHEN u >= 9223372036854775808
               THEN u - 18446744073709551616 ELSE u END AS sgn FROM f)
           SELECT x, ROW_NUMBER() OVER (ORDER BY sgn, k) - 1 AS shuffle_rank
-          FROM g""",
-    "q97_eval_metrics" ->
+          FROM g""")),
+    Gate("q97_eval_metrics", (s, d) => {
+      // kernels.eval (EvalKernel.cpp:48): per-class support/correct/recall
+      // of a deterministically perturbed prediction vs truth.
+      val base = t(s, d, "events").select(col("event_id").as("order_key"),
+        (col("event_id") % 5 + 1).cast("int").as("classification"))
+      val pred = base.withColumn("classification",
+        when(col("order_key") % 7 === 0, (col("classification") % 5) + 1)
+          .otherwise(col("classification")))
+      graft.pipeline.EvalKernel.metrics(pred, base)
+    }, Some(
       """WITH b AS (SELECT event_id AS k,
             CAST(event_id % 5 + 1 AS INT) AS truth FROM events),
           p AS (SELECT k, truth, CASE WHEN k % 7 = 0
@@ -2899,13 +2343,53 @@ object SparkEntry {
               AS correct,
             CAST(SUM(CASE WHEN pred = truth THEN 1 ELSE 0 END) AS DOUBLE)
               / COUNT(*) AS recall
-          FROM p GROUP BY truth""",
-    "q98_tindex_merge" ->
+          FROM p GROUP BY truth""")),
+    Gate("q98_tindex_merge", (s, d) => {
+      // kernels.tindex create+merge through the gate: four spatially
+      // banded files, an index over them, then a bounds merge that prunes
+      // two files by bbox before any data read (pruning itself is
+      // asserted in PipelineSpecSuite; the gate hashes the merged rows).
+      val p = pts(s, d).select("order_key", "x", "y")
+      val base = s"/tmp/graft-tidx-${Integer.toHexString(d.hashCode)}"
+      val files = (0 until 4).map { i =>
+        val f = s"$base/f$i"
+        p.filter(col("x") >= i * 2500 && col("x") < (i + 1) * 2500)
+          .write.mode("overwrite").parquet(f)
+        f
+      }
+      graft.pipeline.TIndexKernel.create(s, s"$base/index", files)
+      graft.pipeline.TIndexKernel.merge(s, s"$base/index",
+        0.0, 0.0, 4000.0, 10000.0)
+    }, Some(
       s"""SELECT order_key, x, y FROM ($ptsSql)
-          WHERE x >= 0 AND x <= 4000""",
-    // batch equivalent of the finite stream: epoch-aligned 600s windows,
-    // packed (cx<<32|cy) tile id over non-negative integer-valued coords
-    "q99_stream_density" ->
+          WHERE x >= 0 AND x <= 4000""")),
+    Gate("q99_stream_density", (s, d) => {
+      // Structured Streaming through the oracle gate: the watermarked
+      // windowed tile-density aggregation (streaming/DocStream.scala) over
+      // a file-arrival source, Trigger.AvailableNow to completion, memory
+      // sink in complete mode — the finite-input result equals the batch
+      // group-by the oracle computes.
+      val in = t(s, d, "events").select(
+        ((col("event_id") * 7919) % 10000).cast("double").as("x"),
+        ((col("event_id") * 104729) % 10000).cast("double").as("y"),
+        ((col("event_id") * 131) % 1000).cast("double").as("z"),
+        ((col("event_id") % 5000) * 7).cast("double").as("gps_time"))
+      val dir = s"/tmp/graft-stream-${Integer.toHexString(d.hashCode)}"
+      in.write.mode("overwrite").parquet(dir)
+      val stream = s.readStream.schema(in.schema).parquet(dir)
+      val agg = graft.streaming.DocStream.tileDensity(
+        stream, length = 1000.0, ox = 0.0, oy = 0.0)
+      val qn = s"q99_sink_${Integer.toHexString(d.hashCode)}"
+      s.catalog.dropTempView(qn) // repeat runs: don't reuse a stale sink
+      agg.writeStream.format("memory").queryName(qn)
+        .outputMode("complete")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+      s.table(qn).select(col("window.start").cast("long").as("win_start"),
+        col("tile_id"), col("n"), col("mean_z"))
+    }, Some(
+      // batch equivalent of the finite stream: epoch-aligned 600s windows,
+      // packed (cx<<32|cy) tile id over non-negative integer-valued coords
       """WITH p AS (SELECT (event_id % 5000) * 7 AS gt,
             (event_id * 7919) % 10000 AS xi,
             (event_id * 104729) % 10000 AS yi,
@@ -2913,20 +2397,72 @@ object SparkEntry {
           SELECT (gt // 600) * 600 AS win_start,
             (xi // 1000) * 4294967296 + (yi // 1000) AS tile_id,
             COUNT(*) AS n, AVG(z) AS mean_z
-          FROM p GROUP BY 1, 2""",
-    "q100_ogr_roundtrip" ->
+          FROM p GROUP BY 1, 2""")),
+    Gate("q100_ogr_roundtrip", (s, d) => {
+      // writers.ogr GeoJSONSeq round trip: distributed to_json emit, read
+      // back as newline JSON; Jackson's shortest-round-trip double
+      // formatting makes the coordinates exact through the text hop.
+      val p = pts(s, d).filter(col("order_key") < 4000)
+        .select(col("order_key"), col("x"), col("y"),
+          lit(0.0).as("z"), col("value"))
+      val path = s"/tmp/graft-ogr-${Integer.toHexString(d.hashCode)}"
+      graft.sources.OgrWriter.writeGeoJson(p, path, attrDims = Seq("value"))
+      s.read.json(path).select(
+        element_at(col("geometry.coordinates"), 1).as("x"),
+        element_at(col("geometry.coordinates"), 2).as("y"),
+        col("properties.value").as("value"))
+    }, Some(
       """SELECT CAST((event_id * 7919) % 10000 AS DOUBLE) AS x,
           CAST((event_id * 104729) % 10000 AS DOUBLE) AS y, value
-          FROM events WHERE event_id < 4000""",
-    "q101_text_roundtrip" ->
-      """SELECT event_id AS order_key,
-          CAST((event_id * 7919) % 10000 AS DOUBLE) AS x,
-          CAST((event_id * 104729) % 10000 AS DOUBLE) AS y, value
-          FROM events WHERE event_id BETWEEN 0 AND 4999""",
-    // the as-of emit set of the finite stream: matched docs pair with the
-    // LATEST media at-or-before their ts; unmatched docs emit left-outer
-    // only once the final watermark (max event time - 600s) passes them
-    "q102_asof_media_join" ->
+          FROM events WHERE event_id < 4000""")),
+    Gate("q102_asof_media_join", (s, d) => {
+      // Streaming AS-OF media join (flatMapGroupsWithState + event-time
+      // timeout) through the gate. Single-batch regime (one file per
+      // side): matched docs emit in the data batch; the trailing no-data
+      // batch advances the watermark to max_ts - 600s, flushing older
+      // unmatched docs left-outer. Docs unmatched AND inside the last
+      // 600s stay in state by design — the oracle reproduces exactly
+      // that emit set. The ref count scales with the table (n/100+1, odd
+      // so every residue class mod 4 carries media) keeping versions/ref
+      // ~25 at any sf — under the state cap, so no as-of match is ever
+      // evicted and the emit set is exactly the declarative as-of.
+      // Event times are shifted +1000 off epoch 0: a row whose event
+      // time EQUALS the current watermark is late by Spark's stateful
+      // late-row filter, and the initial watermark is epoch 0 — an
+      // unshifted ts=0 media row is silently dropped in batch 1.
+      val h = Integer.toHexString(d.hashCode)
+      val ev = t(s, d, "events")
+      val refs = ev.agg(max("event_id")).head.getLong(0) / 100L + 2L
+      val media = ev.filter(col("event_id") % 4 === 0).select(
+        concat(lit("m/"), col("event_id") % refs).as("media_ref"),
+        (col("event_id") + 1000L).as("ts"),
+        concat(lit("v"), col("event_id") + 1000L).as("meta"))
+      val docs = ev.filter(col("event_id") % 4 =!= 0).select(
+        concat(lit("m/"), col("event_id") % refs).as("media_ref"),
+        (col("event_id") + 1000L).as("ts"),
+        col("event_id").as("doc_id"))
+      val (mDir, dDir) = (s"/tmp/graft-asof-m-$h", s"/tmp/graft-asof-d-$h")
+      media.coalesce(1).write.mode("overwrite").parquet(mDir)
+      docs.coalesce(1).write.mode("overwrite").parquet(dDir)
+      val out = graft.streaming.DocStream.asOfJoinMedia(s,
+        s.readStream.schema(docs.schema).parquet(dDir),
+        s.readStream.schema(media.schema).parquet(mDir),
+        maxMediaHistory = 64) // ~25 versions/ref by construction; margin
+      val qn = s"q102_sink_$h"
+      s.catalog.dropTempView(qn) // repeat runs: don't append to a stale sink
+      val q = out.writeStream.format("memory").queryName(qn)
+        .outputMode("append").start()
+      try {
+        q.processAllAvailable() // data batch: matched docs emit
+        q.processAllAvailable() // no-data batch: timeout flush past the wm
+      } finally q.stop()
+      s.table(qn).select(col("doc_id"), col("media_ref"), col("doc_ts"),
+        coalesce(col("media_ts"), lit(-1L)).as("media_ts"),
+        coalesce(col("meta"), lit("")).as("meta"))
+    }, Some(
+      // the as-of emit set of the finite stream: matched docs pair with the
+      // LATEST media at-or-before their ts; unmatched docs emit left-outer
+      // only once the final watermark (max event time - 600s) passes them
       """WITH r AS (SELECT MAX(event_id) // 100 + 2 AS refs FROM events),
           media AS (SELECT 'm/' || CAST(event_id % (SELECT refs FROM r) AS VARCHAR) AS ref,
             event_id + 1000 AS ts FROM events WHERE event_id % 4 = 0),
@@ -2942,51 +2478,171 @@ object SparkEntry {
                  ELSE 'v' || CAST(mts AS VARCHAR) END AS meta
           FROM m
           WHERE mts IS NOT NULL
-             OR ts < (SELECT MAX(event_id) + 1000 FROM events) - 600""",
-    "q103_snapshot_table" ->
+             OR ts < (SELECT MAX(event_id) + 1000 FROM events) - 600""")),
+    Gate("q103_snapshot_table", (s, d) => {
+      // GraftTable (Iceberg-style snapshot/manifest layer): two appended
+      // commits, a bbox read of each VERSION (time travel), tagged and
+      // unioned; the v1 read must NOT see the v2 rows. File-level
+      // manifest pruning is asserted in GraftTableSpec; the gate hashes
+      // the row-visibility semantics.
+      val root = freshTmp("graft-table", d)
+      val p = pts(s, d).select("order_key", "x", "y")
+      val v1 = graft.sources.GraftTable.commit(
+        p.filter(col("order_key") < 5000), root)
+      val v2 = graft.sources.GraftTable.commit(
+        p.filter(col("order_key") >= 5000), root)
+      val (r1, _, _) = graft.sources.GraftTable.readBox(
+        s, root, 0, 0, 3000, 10000, asOf = Some(v1))
+      val (r2, _, _) = graft.sources.GraftTable.readBox(
+        s, root, 0, 0, 3000, 10000, asOf = Some(v2))
+      r1.withColumn("snap", lit(1)).unionByName(r2.withColumn("snap", lit(2)))
+        .select("snap", "order_key", "x", "y")
+    }, Some(
       """WITH p AS (SELECT event_id AS order_key,
             CAST((event_id * 7919) % 10000 AS DOUBLE) AS x,
             CAST((event_id * 104729) % 10000 AS DOUBLE) AS y FROM events)
           SELECT 1 AS snap, order_key, x, y FROM p
             WHERE order_key < 5000 AND x <= 3000
           UNION ALL
-          SELECT 2 AS snap, order_key, x, y FROM p WHERE x <= 3000""",
-    // copy-on-write delete: head (snap 2) = survivors of the closed box;
-    // the pre-delete snapshot (snap 1) still reads every row
-    "q105_table_delete" ->
+          SELECT 2 AS snap, order_key, x, y FROM p WHERE x <= 3000""")),
+    Gate("q105_table_delete", (s, d) => {
+      // GraftTable copy-on-write row-level delete: four x-banded commits,
+      // deleteBox removes the rows inside [2000,4000]x[0,10000] by
+      // rewriting ONLY the stats-intersecting files (require below — the
+      // outer bands' files carry their manifest rows forward untouched);
+      // the head read must show exactly the surviving rows, and the
+      // pre-delete snapshot must still read ALL rows (time travel
+      // across a delete). Emits both, tagged by snapshot.
+      val root = freshTmp("graft-table-del", d)
+      val p = pts(s, d).select("order_key", "x", "y")
+      for (b <- 0 until 4)
+        graft.sources.GraftTable.commit(
+          p.filter(col("x") >= b * 2500.0 && col("x") < (b + 1) * 2500.0), root)
+      val preDelete = graft.sources.GraftTable.currentVersion(root)
+      val (_, rewritten, total) =
+        graft.sources.GraftTable.deleteBox(s, root, 2000, 0, 4000, 10000)
+      require(rewritten < total,
+        s"copy-on-write expected: rewrote $rewritten of $total files")
+      val head = graft.sources.GraftTable.read(s, root)
+      val past = graft.sources.GraftTable.read(s, root, asOf = Some(preDelete))
+      head.withColumn("snap", lit(2))
+        .unionByName(past.withColumn("snap", lit(1)))
+        .select("snap", "order_key", "x", "y")
+    }, Some(
+      // copy-on-write delete: head (snap 2) = survivors of the closed box;
+      // the pre-delete snapshot (snap 1) still reads every row
       """WITH p AS (SELECT event_id AS order_key,
             CAST((event_id * 7919) % 10000 AS DOUBLE) AS x,
             CAST((event_id * 104729) % 10000 AS DOUBLE) AS y FROM events)
           SELECT 2 AS snap, order_key, x, y FROM p
             WHERE NOT (x >= 2000 AND x <= 4000)
           UNION ALL
-          SELECT 1 AS snap, order_key, x, y FROM p""",
-    // z-order clustering is row-invisible: the bbox read of the clustered
-    // table is exactly the residual predicate
-    "q106_table_zorder" ->
+          SELECT 1 AS snap, order_key, x, y FROM p""")),
+    Gate("q106_table_zorder", (s, d) => {
+      // commitClustered: the SAME scattered rows committed once plain and
+      // once z-order-clustered; the clustered table's footer bboxes must
+      // prune files the scattered layout cannot (require below — this is
+      // the write-side half of the pruning story: q104 proves banded
+      // commits prune, this proves the ENGINE can CREATE the prunable
+      // layout from scattered input). Rows must be identical either way,
+      // so the emit is the clustered bbox read — clustering must be
+      // row-invisible.
+      val root = freshTmp("graft-table-zo", d)
+      // scattered input needs no explicit pre-shuffle: commitClustered
+      // range-repartitions on the Morton key regardless of incoming
+      // partitioning, so an extra repartition here is a wasted shuffle
+      val p = pts(s, d).select("order_key", "x", "y")
+      graft.sources.GraftTable.commitClustered(p, root,
+        cellSize = 500.0, numFiles = 16)
+      val (df, filesRead, filesTotal) = graft.sources.GraftTable.readBox(
+        s, root, 2000.5, 2000.5, 4000.5, 4000.5)
+      require(filesRead < filesTotal,
+        s"z-order pruning expected: read $filesRead of $filesTotal files")
+      df.select("order_key", "x", "y")
+    }, Some(
+      // z-order clustering is row-invisible: the bbox read of the clustered
+      // table is exactly the residual predicate
       """WITH p AS (SELECT event_id AS order_key,
             CAST((event_id * 7919) % 10000 AS DOUBLE) AS x,
             CAST((event_id * 104729) % 10000 AS DOUBLE) AS y FROM events)
           SELECT order_key, x, y FROM p
-          WHERE x >= 2000.5 AND x <= 4000.5 AND y >= 2000.5 AND y <= 4000.5""",
-    // transitive dup-group resolution: the engine walks chain pairs with
-    // real CC; the oracle knows the closed form (equality groups)
-    "q107_dedup_resolve" ->
+          WHERE x >= 2000.5 AND x <= 4000.5 AND y >= 2000.5 AND y <= 4000.5""")),
+    Gate("q107_dedup_resolve", (s, d) => {
+      // Transitive dup-group resolution (Dedup.resolveComponents over the
+      // shared Components CC): pairs are CHAINS — consecutive doc_ids
+      // within each normalized-text-equal group — so the engine must walk
+      // real multi-hop components (it cannot shortcut to a groupBy); the
+      // oracle knows the closed form (equality groups) and labels each
+      // doc with the group min. Engine-independent pair regime, same
+      // hash-collision caveat as q22 (green there).
+      val docs = t(s, d, "documents")
+      val fp = docs.withColumn("__fp",
+        xxhash64(regexp_replace(trim(lower(col("text"))), "\\s+", " ")))
+      val w = Window.partitionBy("__fp").orderBy("doc_id")
+      val pairs = fp.select(col("doc_id"), lag("doc_id", 1).over(w).as("prev"))
+        .filter(col("prev").isNotNull)
+        .select(col("prev").as("id_a"), col("doc_id").as("id_b"))
+      Dedup.resolveComponents(docs, pairs)
+        .select(col("doc_id"), col("dup_group"),
+          when(col("dup_group") === col("doc_id"), 1L).otherwise(0L)
+            .as("canonical"))
+    }, Some(
+      // transitive dup-group resolution: the engine walks chain pairs with
+      // real CC; the oracle knows the closed form (equality groups)
       """SELECT doc_id,
             MIN(doc_id) OVER (PARTITION BY norm) AS dup_group,
             CAST(CASE WHEN doc_id = MIN(doc_id) OVER (PARTITION BY norm)
                  THEN 1 ELSE 0 END AS BIGINT) AS canonical
          FROM (SELECT doc_id, REGEXP_REPLACE(TRIM(LOWER(text)), '\s+', ' ', 'g')
-                 AS norm FROM documents)""",
-    // incremental scan v1 -> head == exactly the rows of commits 2+3
-    "q108_table_incremental" ->
+                 AS norm FROM documents)""")),
+    Gate("q108_table_incremental", (s, d) => {
+      // GraftTable incremental read (Iceberg incremental scan): three
+      // banded commits; the delta v1 -> head must be exactly the rows of
+      // commits 2+3 — the downstream-consumer contract at 10^12 rows
+      // (process the delta since the last checkpointed version, never a
+      // full re-read). The non-append loud failure is spec-covered.
+      val root = freshTmp("graft-table-inc", d)
+      val p = pts(s, d).select("order_key", "x", "y")
+      val v1 = graft.sources.GraftTable.commit(
+        p.filter(col("order_key") < 3000), root)
+      graft.sources.GraftTable.commit(
+        p.filter(col("order_key") >= 3000 && col("order_key") < 6000), root)
+      graft.sources.GraftTable.commit(
+        p.filter(col("order_key") >= 6000), root)
+      graft.sources.GraftTable.readIncremental(s, root, fromVersion = v1)
+        .select("order_key", "x", "y")
+    }, Some(
+      // incremental scan v1 -> head == exactly the rows of commits 2+3
       """SELECT event_id AS order_key,
             CAST((event_id * 7919) % 10000 AS DOUBLE) AS x,
             CAST((event_id * 104729) % 10000 AS DOUBLE) AS y
-         FROM events WHERE event_id >= 3000""",
-    // manifest-stats aggregates: exact count/extent with no data I/O,
-    // box count = metadata for contained files + scan of the shell
-    "q109_table_meta_agg" ->
+         FROM events WHERE event_id >= 3000""")),
+    Gate("q109_table_meta_agg", (s, d) => {
+      // GraftTable metadata-only aggregates (Iceberg manifest-stats
+      // pushdown): four x-banded commits; countRows and extent answer
+      // from manifests with ZERO data files opened, and countBox counts
+      // the two interior bands from manifest rows alone, scanning only
+      // the straddling shell (require below). At 10^12 rows this is
+      // count(*) from kilobytes of metadata. The y-range of the box
+      // exceeds the data extent so x alone decides containment.
+      val root = freshTmp("graft-table-agg", d)
+      val p = pts(s, d).select("order_key", "x", "y")
+      for (b <- 0 until 4)
+        graft.sources.GraftTable.commit(
+          p.filter(col("x") >= b * 2500.0 && col("x") < (b + 1) * 2500.0), root)
+      val totalRows = graft.sources.GraftTable.countRows(s, root)
+      val (boxRows, scanned, total) = graft.sources.GraftTable.countBox(
+        s, root, 1250, -1, 8750, 10001)
+      require(scanned < total,
+        s"metadata fast path expected: scanned $scanned of $total files")
+      val (mnx, mxx, mny, mxy) = graft.sources.GraftTable.extent(s, root)
+      s.range(1).select(lit(totalRows).as("total_rows"),
+        lit(boxRows).as("box_rows"), lit(mnx).as("ext_minx"),
+        lit(mxx).as("ext_maxx"), lit(mny).as("ext_miny"),
+        lit(mxy).as("ext_maxy"))
+    }, Some(
+      // manifest-stats aggregates: exact count/extent with no data I/O,
+      // box count = metadata for contained files + scan of the shell
       """WITH p AS (SELECT CAST((event_id * 7919) % 10000 AS DOUBLE) AS x,
             CAST((event_id * 104729) % 10000 AS DOUBLE) AS y FROM events)
          SELECT (SELECT COUNT(*) FROM p) AS total_rows,
@@ -2994,10 +2650,35 @@ object SparkEntry {
                    WHERE x >= 1250 AND x <= 8750) AS box_rows,
                 MIN(x) AS ext_minx, MAX(x) AS ext_maxx,
                 MIN(y) AS ext_miny, MAX(y) AS ext_maxy
-         FROM p""",
-    // copy-on-write upsert: survivors of the keyed merge + updated rows
-    // + inserted rows == the declarative merge
-    "q110_table_upsert" ->
+         FROM p""")),
+    Gate("q110_table_upsert", (s, d) => {
+      // GraftTable copy-on-write upsert (the CDC write path): four
+      // key-banded commits give disjoint manifest key intervals; the
+      // delta updates 25 keys inside band 0 and inserts 10 new keys, so
+      // only band-0 files may be rewritten (require below). The head
+      // read must show updated values, inserted rows, and every other
+      // row untouched — DuckDB reconstructs the same merge declaratively.
+      val root = freshTmp("graft-table-ups", d)
+      val p = pts(s, d).select("order_key", "x", "y", "value")
+      for (b <- 0 until 4)
+        graft.sources.GraftTable.commit(
+          p.filter(col("order_key") >= b * 2500 &&
+            col("order_key") < (b + 1) * 2500), root)
+      val delta = p.filter(col("order_key") % 100 === 7 &&
+          col("order_key") < 2500)
+        .withColumn("value", col("value") * 2 + lit(1.0))
+        .unionByName(p.filter(col("order_key") < 10)
+          .select((col("order_key") + 20000).as("order_key"),
+            col("x"), col("y"), lit(-1.0).as("value")))
+      val (_, rewritten, total) =
+        graft.sources.GraftTable.upsert(s, root, delta)
+      require(rewritten < total,
+        s"key-interval pruning expected: rewrote $rewritten of $total files")
+      graft.sources.GraftTable.read(s, root)
+        .select("order_key", "x", "y", "value")
+    }, Some(
+      // copy-on-write upsert: survivors of the keyed merge + updated rows
+      // + inserted rows == the declarative merge
       """WITH p AS (SELECT event_id AS order_key,
             CAST((event_id * 7919) % 10000 AS DOUBLE) AS x,
             CAST((event_id * 104729) % 10000 AS DOUBLE) AS y,
@@ -3010,10 +2691,29 @@ object SparkEntry {
          UNION ALL
          SELECT order_key + 20000 AS order_key, x, y,
                 CAST(-1.0 AS DOUBLE) AS value FROM p
-           WHERE order_key < 10""",
-    // schema evolution: pre-evolution and post-evolution-narrow files
-    // surface the evolved column as typed nulls; the union is the head
-    "q111_table_evolution" ->
+           WHERE order_key < 10""")),
+    Gate("q111_table_evolution", (s, d) => {
+      // Schema evolution through the driver gate: commit 1 lacks `value`
+      // (pre-evolution files read it as null), commit 2 adds it, commit 3
+      // appends NARROW rows after the evolution — the head schema must be
+      // the union (the narrowing-append hole this round fixed: a narrow
+      // append must not drop `value` from head reads). DuckDB rebuilds
+      // the same union with typed nulls.
+      val root = freshTmp("graft-table-evo", d)
+      val p = pts(s, d).select("order_key", "x", "y", "value")
+      graft.sources.GraftTable.commit(
+        p.filter(col("order_key") < 5000).select("order_key", "x", "y"), root)
+      graft.sources.GraftTable.commit(
+        p.filter(col("order_key") >= 5000), root)
+      graft.sources.GraftTable.commit(
+        p.filter(col("order_key") < 1000)
+          .select((col("order_key") + 10000).as("order_key"),
+            col("x"), col("y")), root)
+      graft.sources.GraftTable.read(s, root)
+        .select("order_key", "x", "y", "value")
+    }, Some(
+      // schema evolution: pre-evolution and post-evolution-narrow files
+      // surface the evolved column as typed nulls; the union is the head
       """WITH p AS (SELECT event_id AS order_key,
             CAST((event_id * 7919) % 10000 AS DOUBLE) AS x,
             CAST((event_id * 104729) % 10000 AS DOUBLE) AS y,
@@ -3025,27 +2725,94 @@ object SparkEntry {
          UNION ALL
          SELECT order_key + 10000 AS order_key, x, y,
                 CAST(NULL AS DOUBLE) AS value FROM p
-           WHERE order_key < 1000""",
-    // salted two-level aggregation == plain grouped count
-    "q112_salted_count" ->
+           WHERE order_key < 1000""")),
+    Gate("q112_salted_count", (s, d) => {
+      // Skew.saltedCount (two-level skew-proof aggregation) through the
+      // gate: 70% of rows share tile 0 (a hot key), the rest spread over
+      // ~30 tiles; the per-(key, salt) partial + per-key final must be
+      // EXACTLY a plain grouped count — salting is a physical rewrite,
+      // never a semantic one.
+      val keyed = pts(s, d).withColumn("tile_id",
+        when(col("order_key") % 10 < 7, lit(0L))
+          .otherwise(col("order_key") % 100))
+      graft.operators.Skew.saltedCount(keyed, "tile_id")
+        .select(col("tile_id"), col("n"))
+    }, Some(
+      // salted two-level aggregation == plain grouped count
       """SELECT tile_id, COUNT(*) AS n FROM
            (SELECT CASE WHEN event_id % 10 < 7 THEN 0
                         ELSE event_id % 100 END AS tile_id FROM events)
-         GROUP BY tile_id""",
-    // cell-partitioned box read == the residual predicate (pruning is a
-    // physical property, asserted engine-side from the executed plan)
-    "q113_cellstore_box" ->
+         GROUP BY tile_id""")),
+    Gate("q113_cellstore_box", (s, d) => {
+      // CellStore (EPT/COPC-style cell-partitioned layout): write the
+      // point table partitioned by grid cell, read a box back through
+      // the partition-pruned path — the scan must open fewer partitions
+      // than the table holds (require below, from the executed plan),
+      // and the rows must be exactly the residual box predicate.
+      // cellLen sized so cells hold file-sized row groups at this SF —
+      // 100 cells, one file each (a 400-cell store spends its 5s on 400
+      // directory commits, overhead the layout should not pay)
+      val store = freshTmp("graft-cellstore", d)
+      val p = pts(s, d).select("order_key", "x", "y")
+      graft.sources.CellStore.write(p, store, 0.0, 0.0, 1000.0)
+      val out = graft.sources.CellStore.readBox(
+        s, store, 2000.5, 2000.5, 4000.5, 4000.5, 0.0, 0.0, 1000.0)
+      val (read, total) = graft.sources.CellStore.scanPartitionCounts(out)
+      require(read < total,
+        s"cell pruning expected: read $read of $total partitions")
+      out.select("order_key", "x", "y")
+    }, Some(
+      // cell-partitioned box read == the residual predicate (pruning is a
+      // physical property, asserted engine-side from the executed plan)
       """WITH p AS (SELECT event_id AS order_key,
             CAST((event_id * 7919) % 10000 AS DOUBLE) AS x,
             CAST((event_id * 104729) % 10000 AS DOUBLE) AS y FROM events)
          SELECT order_key, x, y FROM p
-         WHERE x >= 2000.5 AND x <= 4000.5 AND y >= 2000.5 AND y <= 4000.5"""
-  ,
-    // recomputes the decode-side sums from the payload arithmetic alone:
-    // pixel i of frame k = (n*7 + k*101 + i) mod 256; audio sample i =
-    // (n*13 + i*17) mod 4096 - 2048; resize source index is the same
-    // floor mapping resizeNearest uses (integer division)
-    "q114_media_codecs" ->
+         WHERE x >= 2000.5 AND x <= 4000.5 AND y >= 2000.5 AND y <= 4000.5""")),
+    Gate("q101_text_roundtrip", (s, d) => {
+      // readers.text + writers.text via the PIPELINE dialect itself
+      // (PipelineBuilder runs both JSON specs): CSV doubles round-trip
+      // exactly (shortest-repr write, full-precision parse).
+      val h = Integer.toHexString(d.hashCode)
+      pts(s, d).select("order_key", "x", "y", "value")
+        .createOrReplaceTempView(s"q101_in_$h")
+      val csv = s"/tmp/graft-text-$h"
+      graft.pipeline.PipelineBuilder.run(s, s"""{"pipeline":[
+        {"type":"readers.view","view":"q101_in_$h"},
+        {"type":"filters.range","limits":"order_key[0:4999]"},
+        {"type":"writers.text","filename":"$csv"}]}""")
+      graft.pipeline.PipelineBuilder.run(s, s"""{"pipeline":[
+        {"type":"readers.text","filename":"$csv"}]}""")
+        .select(col("order_key").cast("long").as("order_key"),
+          col("x").cast("double").as("x"), col("y").cast("double").as("y"),
+          col("value").cast("double").as("value"))
+    }, Some(
+      """SELECT event_id AS order_key,
+          CAST((event_id * 7919) % 10000 AS DOUBLE) AS x,
+          CAST((event_id * 104729) % 10000 AS DOUBLE) AS y, value
+          FROM events WHERE event_id BETWEEN 0 AND 4999""")),
+    Gate("q114_media_codecs", (s, d) => {
+      // REAL pure-JVM codec round trip, end-to-end: ids -> encoded blobs
+      // (PPM for even image ids, BMP for odd; WAV PCM16; GFV1 video of
+      // PPM frames) -> decode-side sums. Every output number is computed
+      // by PARSING the bytes (position-weighted wsum catches row-order /
+      // padding / endianness defects; rsum is a resize + re-encode +
+      // re-decode round trip; video sums its LAST frame so the demuxer
+      // walks all prior frames). The oracle recomputes the same sums
+      // from the payload arithmetic alone — a codec defect anywhere in
+      // encode OR decode breaks the hash.
+      val ids = t(s, d, "events")
+        .select((col("event_id") % 701).as("n")).distinct()
+        .withColumn("kind", when(col("n") % 3 === 0, "image")
+          .when(col("n") % 3 === 1, "audio").otherwise("video"))
+      val media = graft.media.Multimodal.synthRealMedia(s, ids)
+      graft.media.Multimodal.decodeFeatures(media)
+        .select("media_ref", "kind", "w", "h", "pcnt", "psum", "wsum", "rsum")
+    }, Some(
+      // recomputes the decode-side sums from the payload arithmetic alone:
+      // pixel i of frame k = (n*7 + k*101 + i) mod 256; audio sample i =
+      // (n*13 + i*17) mod 4096 - 2048; resize source index is the same
+      // floor mapping resizeNearest uses (integer division)
       """WITH ids AS (SELECT DISTINCT event_id % 701 AS n FROM events),
          k AS (SELECT n,
              CASE n % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
@@ -3079,11 +2846,33 @@ object SparkEntry {
            CAST(COALESCE(img.wsum, aud.wsum, vid.wsum) AS BIGINT) AS wsum,
            CAST(rs.rsum AS BIGINT) AS rsum
          FROM k LEFT JOIN img ON k.n = img.n LEFT JOIN rs ON k.n = rs.n
-           LEFT JOIN aud ON k.n = aud.n LEFT JOIN vid ON k.n = vid.n"""
-  ,
-    // GLB positions are offset-relative (float32-exact for these
-    // integral coords), indices are 0-based vertex ranks
-    "q115_glb_roundtrip" ->
+           LEFT JOIN aud ON k.n = aud.n LEFT JOIN vid ON k.n = vid.n""")),
+    Gate("q115_glb_roundtrip", (s, d) => {
+      // writers.gltf -> readers.gltf round trip, mirroring q84's PLY
+      // gate: integral coords stay exact through the float32 position
+      // block (< 2^24), and positions come back OFFSET-RELATIVE (the GLB
+      // drops the absolute mesh minimum, as the reference writer does),
+      // so the oracle subtracts the same per-axis minima. Read-back face
+      // indices are the 0-based vertex ranks (k-1, k, k+1).
+      val p = pts(s, d).filter(col("order_key").between(1, 1500))
+        .select("order_key", "x", "y", "z")
+      val faces = p.filter(col("order_key") % 3 === 1 &&
+          col("order_key") <= 1498)
+        .select(col("order_key").as("a"), (col("order_key") + 1).as("b"),
+          (col("order_key") + 2).as("c"))
+      val root = freshTmp("graft-glb", d)
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
+      val f = s"$root/mesh.glb"
+      graft.sources.MeshWriters.writeGlb(p, faces, f)
+      val (v, fi) = graft.sources.GlbReader.read(s, f)
+      val va = v.select(col("order_key").as("ia"),
+        col("x").as("xa"), col("y").as("ya"))
+      fi.join(va, fi("a") === va("ia"))
+        .select(col("a").as("ia"), col("b").as("ib"), col("c").as("ic"),
+          col("xa"), col("ya"))
+    }, Some(
+      // GLB positions are offset-relative (float32-exact for these
+      // integral coords), indices are 0-based vertex ranks
       """WITH v AS (SELECT event_id,
             CAST((event_id * 7919) % 10000 AS DOUBLE) AS x,
             CAST((event_id * 104729) % 10000 AS DOUBLE) AS y
@@ -3091,12 +2880,34 @@ object SparkEntry {
          mm AS (SELECT MIN(x) AS mnx, MIN(y) AS mny FROM v)
          SELECT event_id - 1 AS ia, event_id AS ib, event_id + 1 AS ic,
            x - mnx AS xa, y - mny AS ya
-         FROM v, mm WHERE event_id <= 1498 AND event_id % 3 = 1"""
-  ,
-    // ImageIO tier: lossless members (png/tiff) recomputed exactly from
-    // the payload arithmetic; lossy members (jpg/gif) keep dims + count
-    // exact with NULL value sums (fidelity bounded in MediaCodecsSpec)
-    "q117_imageio_codecs" ->
+         FROM v, mm WHERE event_id <= 1498 AND event_id % 3 = 1""")),
+    Gate("q117_imageio_codecs", (s, d) => {
+      // The JDK's own javax.imageio codecs (pure-JVM, no native libs)
+      // through the same decode-side gate as q114: ids -> really-encoded
+      // PNG / JPEG / TIFF / GIF blobs -> magic-byte dispatch ->
+      // decoded sums. PNG and TIFF round-trip RGB losslessly, so their
+      // psum/wsum/rsum are oracle-exact; JPEG (lossy DCT) and GIF
+      // (palettized) keep dims + element count exact and NULL out the
+      // value sums (their decode fidelity is bounded in MediaCodecsSpec
+      // instead — an exact-hash oracle cannot admit codec-version-
+      // dependent pixel values).
+      val ids = t(s, d, "events")
+        .select((col("event_id") % 311).as("n")).distinct()
+        .withColumn("fmt", when(col("n") % 4 === 0, "png")
+          .when(col("n") % 4 === 1, "jpg")
+          .when(col("n") % 4 === 2, "tiff").otherwise("gif"))
+      val media = graft.media.Multimodal.synthImageIOMedia(s, ids)
+      val lossless = col("fmt").isin("png", "tiff")
+      graft.media.Multimodal.decodeFeatures(media)
+        .withColumn("fmt", element_at(split(col("media_ref"), "/"), 2))
+        .select(col("media_ref"), col("fmt"), col("w"), col("h"), col("pcnt"),
+          when(lossless, col("psum")).as("psum"),
+          when(lossless, col("wsum")).as("wsum"),
+          when(lossless, col("rsum")).as("rsum"))
+    }, Some(
+      // ImageIO tier: lossless members (png/tiff) recomputed exactly from
+      // the payload arithmetic; lossy members (jpg/gif) keep dims + count
+      // exact with NULL value sums (fidelity bounded in MediaCodecsSpec)
       """WITH ids AS (SELECT DISTINCT event_id % 311 AS n FROM events),
          k AS (SELECT n,
              CASE n % 4 WHEN 0 THEN 'png' WHEN 1 THEN 'jpg'
@@ -3119,24 +2930,94 @@ object SparkEntry {
            CAST(CASE WHEN k.fmt IN ('png','tiff') THEN img.psum END AS BIGINT) AS psum,
            CAST(CASE WHEN k.fmt IN ('png','tiff') THEN img.wsum END AS BIGINT) AS wsum,
            CAST(CASE WHEN k.fmt IN ('png','tiff') THEN rs.rsum END AS BIGINT) AS rsum
-         FROM k JOIN img ON k.n = img.n JOIN rs ON k.n = rs.n"""
-  ,
-    // V2 read path: snap 1 = the asof-1 snapshot (first x band), snap 2 =
-    // head under the pushed bbox; both recomputed from the coordinate
-    // arithmetic
-    "q118_v2_table" ->
+         FROM k JOIN img ON k.n = img.n JOIN rs ON k.n = rs.n""")),
+    Gate("q118_v2_table", (s, d) => {
+      // DataSource V2 read path: q103's snapshot semantics driven through
+      // spark.read.format("graft") — time travel via the asof option,
+      // bbox selection via ordinary Catalyst predicates that arrive
+      // through SupportsPushDownFilters and prune DATA FILES from the
+      // manifest footer stats (the require asserts files were actually
+      // skipped; the filters are ALSO re-applied above the scan, so the
+      // hash gate checks values, not just plumbing).
+      val root = freshTmp("graft-v2-table", d)
+      val p = pts(s, d).select("order_key", "x", "y")
+      // four x-banded commits -> disjoint file stats -> provable pruning
+      for (b <- 0 until 4)
+        graft.sources.GraftTable.commit(
+          p.filter(col("x") >= b * 2500.0 && col("x") < (b + 1) * 2500.0),
+          root)
+      val head = s.read.format("graft").load(root)
+        .filter(col("x") >= 0 && col("x") <= 3000)
+      head.count() // force one scan so the prune counters are set
+      val (read, total) = graft.sources.v2.GraftDataSource.lastPrune
+      require(read < total,
+        s"V2 manifest pruning expected: read $read of $total files")
+      val past = s.read.format("graft").option("asof", 1).load(root)
+        .filter(col("x") >= 0 && col("x") <= 3000)
+      head.withColumn("snap", lit(2))
+        .unionByName(past.withColumn("snap", lit(1)))
+        .select("snap", "order_key", "x", "y")
+    }, Some(
+      // V2 read path: snap 1 = the asof-1 snapshot (first x band), snap 2 =
+      // head under the pushed bbox; both recomputed from the coordinate
+      // arithmetic
       """WITH p AS (SELECT event_id AS order_key,
             CAST((event_id * 7919) % 10000 AS DOUBLE) AS x,
             CAST((event_id * 104729) % 10000 AS DOUBLE) AS y FROM events)
           SELECT 1 AS snap, order_key, x, y FROM p WHERE x < 2500
           UNION ALL
           SELECT 2 AS snap, order_key, x, y FROM p
-            WHERE x >= 0 AND x <= 3000"""
-  ,
-    // identical-shingle-set pairs (the deterministic-regime emit set of
-    // the streaming LSH after true-jaccard verification) — numeric-id
-    // variant of the q45 oracle
-    "q116_stream_neardup" ->
+            WHERE x >= 0 AND x <= 3000""")),
+    Gate("q116_stream_neardup", (s, d) => {
+      // Streaming stateful MinHash-LSH (flatMapGroupsWithState band
+      // buckets) through the gate, in the q45 deterministic regime:
+      // planted exact duplicates have identical signatures, collide in
+      // every band, and emit at jaccard_est = 1.0. Base docs and the
+      // planted dups land in SEPARATE files processed one per microbatch
+      // (maxFilesPerTrigger), so the emitted pairs cross the
+      // microbatch/state boundary — a state-eviction or watermark defect
+      // drops them. The streamed candidate set is then verified with
+      // TRUE n-gram jaccard (the q45 shape), making the final set
+      // exactly {identical-shingle-set pairs} — SQL-expressible. Event
+      // times sit far above the initial epoch-0 watermark and the delay
+      // horizon covers the whole regime, so nothing is late or evicted.
+      val h = Integer.toHexString(d.hashCode)
+      val docs = t(s, d, "documents")
+        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+      val dups = docs.filter(col("doc_id") % 50 === 0)
+        .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
+      val withTs = (df: DataFrame) => df.withColumn("ts",
+        col("doc_id") % 1000 + 1000L)
+      val dir = freshTmp("graft-sdedup", d)
+      withTs(docs).coalesce(1).write.mode("overwrite").parquet(dir)
+      withTs(dups).coalesce(1).write.mode("append").parquet(dir)
+      val stream = s.readStream.schema(withTs(docs).schema)
+        .option("maxFilesPerTrigger", "1").parquet(dir)
+      // exactly-once pair emission: the second stateful stage (pair-keyed
+      // dropDuplicatesWithinWatermark) absorbs the per-shared-bucket
+      // at-least-once copies INSIDE the streaming query — the gate runs
+      // with NO batch-side distinct, so a duplicate leaking through the
+      // distinct stage duplicates oracle rows and breaks the hash
+      val out = graft.streaming.StreamDedup.minhashPairsDistinct(s, stream,
+        threshold = 1.0, numHashes = 64, bands = 8, maxBucket = 100000,
+        delay = "2000 seconds")
+      val qn = s"q116_sink_$h"
+      s.catalog.dropTempView(qn)
+      graft.streaming.StreamDedup.withUncheckedStatefulChain(s) {
+        val q = out.writeStream.format("memory").queryName(qn)
+          .outputMode("append").start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      // verify candidates with exact set jaccard like the batch gate does
+      val cand = s.table(qn).select("id_a", "id_b")
+      val all = docs.unionByName(dups)
+      graft.dedup.Dedup.ngramJaccard(all, cand, n = 3)
+        .filter(col("jaccard") >= 1.0)
+        .select("id_a", "id_b")
+    }, Some(
+      // identical-shingle-set pairs (the deterministic-regime emit set of
+      // the streaming LSH after true-jaccard verification) — numeric-id
+      // variant of the q45 oracle
       """WITH base AS (SELECT doc_id, text FROM documents),
           dups AS (SELECT doc_id + 10000000 AS doc_id, text
                    FROM documents WHERE doc_id % 50 = 0),
@@ -3148,6 +3029,6 @@ object SparkEntry {
               i -> array_to_string(wa[i:least(i+2, len(wa))], ' ')))) AS key
             FROM w)
           SELECT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM sh a JOIN sh b ON a.key = b.key AND a.doc_id < b.doc_id"""
+          FROM sh a JOIN sh b ON a.key = b.key AND a.doc_id < b.doc_id"""))
   )
 }

@@ -23,13 +23,6 @@ object Synth {
     (shiftrightunsigned(mix64(seq * lit(1000003L) + lit(seed * 31 + stream)), 11)
       .cast("double")) / lit((1L << 53).toDouble)
 
-  /** Standard normal via Box-Muller from two deterministic uniforms. */
-  def gauss(seq: Column, seed: Long, stream: Int): Column = {
-    val u1 = unif(seq, seed, stream * 2 + 101)
-    val u2 = unif(seq, seed, stream * 2 + 102)
-    sqrt(lit(-2.0) * log(u1 + lit(1e-300))) * cos(lit(2.0 * math.Pi) * u2)
-  }
-
   /** Interleaved spans payload: 1..8 spans per doc, kinds cycling over
     * {text, image, audio, table}, strictly increasing offsets — pure
     * columns (`transform` over `sequence`), no UDFs. */

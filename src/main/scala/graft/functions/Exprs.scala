@@ -104,13 +104,6 @@ object CellMath {
     else if (dr > ds) rr = -rq - rs
     pack(rq.toInt, rr.toInt)
   }
-
-  def hexCenterX(cell: Long, edge: Double): Double = {
-    val q = unpackX(cell); val r = unpackY(cell)
-    edge * math.sqrt(3.0) * (q + r / 2.0)
-  }
-  def hexCenterY(cell: Long, edge: Double): Double =
-    edge * 1.5 * unpackY(cell)
 }
 
 /** splitmix64 finalizer over a long column — wraparound multiply needs JVM

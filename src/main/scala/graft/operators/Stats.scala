@@ -61,10 +61,6 @@ object Stats {
     }
   }
 
-  /** Value counts (StatsFilter `count` dims mode). */
-  def valueCounts(df: DataFrame, dim: String): DataFrame =
-    df.groupBy(dim).agg(count(lit(1)).as("count")).orderBy(dim)
-
   /** Distinct values (enumerate mode). */
   def enumerate(df: DataFrame, dim: String): DataFrame =
     df.select(dim).distinct().orderBy(dim)

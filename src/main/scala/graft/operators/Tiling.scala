@@ -59,12 +59,6 @@ object Splitter {
       df.withColumn(tileCol, explode(filter(candidates, _.isNotNull)))
     }
   }
-
-  /** Tile bounds for asserts/pruning: tile -> [minx, maxx) x [miny, maxy). */
-  def tileBounds(tile: Long, ox: Double, oy: Double, length: Double): (Double, Double, Double, Double) = {
-    val cx = CellMath.unpackX(tile); val cy = CellMath.unpackY(tile)
-    (ox + cx * length, oy + cy * length, ox + (cx + 1) * length, oy + (cy + 1) * length)
-  }
 }
 
 /** The exact chipper recursion (filters/ChipperFilter.cpp:39-267) on local

@@ -115,22 +115,4 @@ object DocStream {
           }
       }.toDF("doc_id", "media_ref", "doc_ts", "media_ts", "meta")
   }
-
-  /** Stateful per-tile running counts via mapGroupsWithState — the
-    * KeyValueGroupedDataset custom-state path. */
-  def runningTileCounts(spark: SparkSession, stream: DataFrame,
-      length: Double, ox: Double, oy: Double): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    tile(stream, length, ox, oy)
-      .select(col("tile_id"), col("order_key"))
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (tile: Long, rows: Iterator[(Long, Long)], state: GroupState[Long]) =>
-          val total = state.getOption.getOrElse(0L) + rows.size
-          state.update(total)
-          (tile, total)
-      }.toDF("tile_id", "running_count")
-  }
 }

@@ -24,13 +24,6 @@ object TextAnalysis {
       (acc, w) => acc + lit(1L) + floor(length(w) / 4).cast("long"))
   }
 
-  /** Character n-gram shingles of the lowercased text. */
-  def charShingles(c: Column, n: Int = 5): Column = {
-    val s = lower(c)
-    transform(sequence(lit(1), greatest(length(s) - (n - 1), lit(1))),
-      i => s.substr(i, lit(n)))
-  }
-
   /** Word n-gram shingles. */
   def wordShingles(c: Column, n: Int = 3): Column = {
     val t = tokens(c)
@@ -87,10 +80,4 @@ object TextAnalysis {
     * lowercased text (exact-dup key). */
   def fingerprint(c: Column): Column =
     xxhash64(regexp_replace(trim(lower(c)), "\\s+", " "))
-
-  /** Winnowing-style robust fingerprint: min-w hashes over word shingles
-    * (document sketch; equal docs -> equal sketch, near-dups share most
-    * elements). */
-  def minKSketch(c: Column, n: Int = 3, w: Int = 8): Column =
-    slice(array_sort(transform(wordShingles(c, n), s => xxhash64(s))), 1, w)
 }

@@ -24,6 +24,9 @@ class PlanSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString
   }
 
+  private def gate(name: String): DataFrame =
+    SparkEntry.gates.find(_.name == name).get.build(spark, sf)
+
   private def fileScans(df: DataFrame) = {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -32,6 +35,17 @@ class PlanSpec extends AnyFunSuite {
       case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
     }.flatten
     scans(df.queryExecution.executedPlan)
+  }
+
+  test("gate registry: repeated names fail naming each one, and only the " +
+      "two hash-dependent dedup gates lack a DuckDB oracle") {
+    val Seq(a, b, c) = SparkEntry.gates.take(3)
+    val e = intercept[IllegalArgumentException](
+      Gate.registry(a, b, c, a.copy(oracle = None), b))
+    assert(e.getMessage.contains(a.name) && e.getMessage.contains(b.name) &&
+      !e.getMessage.contains(c.name), e.getMessage)
+    assert(SparkEntry.gates.filter(_.oracle.isEmpty).map(_.name).toSet ==
+      Set("q24_minhash_dedup", "q26_simhash"))
   }
 
   test("filters.range bounds reach the parquet scan as PushedFilters and " +
@@ -55,8 +69,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("q02 joins: small dimensions (customer, nation) broadcast — no " +
       "shuffle of the fact side for dim joins") {
-    val plan = finalPlan(
-      SparkEntry.queries("q02_join_revenue_by_nation")(spark, sf))
+    val plan = finalPlan(gate("q02_join_revenue_by_nation"))
     val bhj = "BroadcastHashJoin".r.findAllIn(plan).size
     assert(bhj >= 2, s"expected >=2 broadcast joins, got $bhj in:\n$plan")
     assert(!plan.contains("CartesianProduct"), "cartesian join in q02 plan")
@@ -64,7 +77,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("q01 aggregation: map-side partial + final HashAggregate pair, " +
       "inside whole-stage codegen") {
-    val plan = finalPlan(SparkEntry.queries("q01_agg_pricing")(spark, sf))
+    val plan = finalPlan(gate("q01_agg_pricing"))
     // count only the executed (final) adaptive plan, not the rendered
     // "Initial Plan" echo beneath it
     val finalOnly = plan.split("== Initial Plan ==").head

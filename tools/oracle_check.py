@@ -6,7 +6,8 @@ Usage: python3 tools/oracle_check.py <verify_out_dir> <sf_dir>
 For each query in <verify_out_dir>/oracle_sql.json, runs the SQL in DuckDB
 over the parquet tables of <sf_dir> and compares with the Spark result
 parquet using the driver's canon: sort columns by name, cast to str,
-sort rows, md5. Queries without oracle SQL report rows-only.
+sort rows, md5. Queries without oracle SQL report rows-only. An oracle key
+without a Spark output directory (its gate failed) is a failure.
 """
 import json
 import sys
@@ -61,11 +62,15 @@ def main(out_dir: str, sf_dir: str) -> int:
                          "oracle_rows": len(odf)}
         if not (rows_match and schema_match and hash_match):
             fails += 1
+    for name in sorted(set(oracle_sql) - set(results)):
+        results[name] = {"err": "no_output"}
+        fails += 1
     green = sum(1 for v in results.values() if v.get("hash_match"))
     rows_only = sum(1 for v in results.values() if v.get("err") == "no_oracle")
     for name, v in sorted(results.items()):
         status = ("PASS" if v.get("hash_match") else
-                  "rows-only" if v.get("err") == "no_oracle" else f"FAIL {v}")
+                  "rows-only" if v.get("err") == "no_oracle" else
+                  "FAIL (no Spark output)" if v.get("err") == "no_output" else f"FAIL {v}")
         print(f"{name}: {status}")
     print(f"\n{green} green / {rows_only} rows-only / {fails} FAILED "
           f"of {len(results)}")
