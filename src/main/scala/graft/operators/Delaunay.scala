@@ -339,8 +339,8 @@ private[operators] final class Triangulator(px: Array[Double], py: Array[Double]
   * coincident-x/y nearest neighbor (or a single ground point) is used
   * directly.
   *
-  * Scale: ONE grid-kNN join (supercell-halo shuffle, slim columns),
-  * one equi-join for neighbor coordinates, one per-row local
+  * Scale: ONE grid-kNN join (supercell-halo shuffle, slim columns)
+  * whose hits carry the ground points' coordinates, one per-row local
   * triangulation over <= `count` points — no global structure, no
   * driver loop. Neighbor order (and so cocircular tie-breaks) is
   * pinned to (d2, cid); a fully collinear neighborhood falls back to
@@ -359,28 +359,21 @@ object HagDelaunay {
     val (mnx, mxx, mny, mxy) =
       (b.getDouble(0), b.getDouble(1), b.getDouble(2), b.getDouble(3))
 
-    val gpts = ground.select(col("order_key"), col("x"), col("y"), col("z"))
     val q = nonGround.select(col("order_key"), col("x"), col("y"),
       lit(0.0).as("z"))
-    val cand = gpts.select(col("order_key"), col("x"), col("y"),
+    val cand = ground.select(col("order_key"), col("x"), col("y"),
       lit(0.0).as("z"), col("z").as("gz"))
+    // each hit is a ground neighbor: its x, y and v = ground z, already
+    // in (d2, cid) order — the reference's kNN result order
     val hits = KnnJoin.knn(q, cand, count, valueCol = "gz")
-    // neighbor coordinates: explode the hit list, join ground coords,
-    // re-collect sorted by (d2, cid) — the reference's kNN result order
-    val nbrs = hits.select(col("order_key"), explode(col("knn")).as("h"))
-      .join(gpts.select(col("order_key").as("__gid"), col("x").as("gx"),
-        col("y").as("gy"), col("z").as("gzz")), col("h.cid") === col("__gid"))
-      .groupBy("order_key")
-      .agg(sort_array(collect_list(struct(col("h.d2").as("d2"),
-        col("h.cid").as("cid"), col("gx").as("gx"), col("gy").as("gy"),
-        col("gzz").as("gz")))).as("__nb"))
+      .select(col("order_key"), col("knn").as("__nb"))
 
     val interp = udf { (x0: Double, y0: Double, z0: Double, nb: Seq[Row]) =>
       if (nb == null || nb.isEmpty) z0
       else {
-        val gx = nb.map(_.getAs[Double]("gx")).toArray
-        val gy = nb.map(_.getAs[Double]("gy")).toArray
-        val gz = nb.map(_.getAs[Double]("gz")).toArray
+        val gx = nb.map(_.getAs[Double]("x")).toArray
+        val gy = nb.map(_.getAs[Double]("y")).toArray
+        val gz = nb.map(_.getAs[Double]("v")).toArray
         val inBounds = x0 >= mnx && x0 <= mxx && y0 >= mny && y0 <= mxy
         if ((gx(0) == x0 && gy(0) == y0) || nb.size == 1) gz(0)
         else if (!inBounds && !allowExtrapolation) z0
@@ -399,7 +392,7 @@ object HagDelaunay {
       }
     }
     val ngOut = nonGround.join(
-        nbrs.withColumnRenamed("order_key", "__qid"),
+        hits.withColumnRenamed("order_key", "__qid"),
         col("order_key") === col("__qid"), "left")
       .withColumn(outDim,
         col("z") - interp(col("x"), col("y"), col("z"), col("__nb")))

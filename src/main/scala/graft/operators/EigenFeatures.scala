@@ -104,16 +104,38 @@ case class Eigen3Expr(children: Seq[Expression]) extends Expression
       newChildren: IndexedSeq[Expression]): Expression = copy(children = newChildren)
 }
 
-/** Per-point neighborhood covariance/eigen features — the
-  * filters.normal / filters.eigenvalues / filters.covariancefeatures /
-  * filters.approximatecoplanar / filters.estimaterank family
-  * (filters/NormalFilter.cpp:62, CovarianceFeaturesFilter.cpp:58,
-  * EigenvaluesFilter.cpp:53, ApproximateCoplanarFilter.cpp:53).
-  *
-  * One kNN join for neighbor ids, one re-join for neighbor coords, one
-  * groupBy for the moment sums, then the closed-form eigensolver as a
-  * codegen'd expression — no per-row JVM matrix library.
-  */
+/** Query-centred moments of a kNN row's neighbourhood, as array
+  * expressions over its hits: n, the means mx, my, mz of (hit - query)
+  * and the raw second moments sxx..szz, each summed in the hits'
+  * (d2, cid) order. Centring on the query keeps the sums
+  * O(neighbourhood extent): with UTM-scale raw coordinates (~6e5) the
+  * uncentred E[xy]-E[x]E[y] cancels ~11 significant digits, and the
+  * covariance is shift-invariant. `hits` must be non-empty. */
+private[operators] object NbrMoments {
+  def apply(hits: Column): Seq[Column] = {
+    val n = size(hits)
+    def mean(f: Column => Column): Column =
+      aggregate(hits, lit(0.0), (a, h) => a + f(h)) / n.cast("double")
+    def dx(h: Column) = h.getField("x") - col("qx")
+    def dy(h: Column) = h.getField("y") - col("qy")
+    def dz(h: Column) = h.getField("z") - col("qz")
+    Seq(n.as("n"), mean(dx).as("mx"), mean(dy).as("my"), mean(dz).as("mz"),
+      mean(h => dx(h) * dx(h)).as("sxx"), mean(h => dx(h) * dy(h)).as("sxy"),
+      mean(h => dx(h) * dz(h)).as("sxz"), mean(h => dy(h) * dy(h)).as("syy"),
+      mean(h => dy(h) * dz(h)).as("syz"), mean(h => dz(h) * dz(h)).as("szz"))
+  }
+
+  /** The six central covariance entries from the moment columns. */
+  def covariance: Seq[Column] = Seq(
+    col("sxx") - col("mx") * col("mx"), col("sxy") - col("mx") * col("my"),
+    col("sxz") - col("mx") * col("mz"), col("syy") - col("my") * col("my"),
+    col("syz") - col("my") * col("mz"), col("szz") - col("mz") * col("mz"))
+
+  /** struct(l1, l2, l3, nx, ny, nz) of a covariance's six entries. */
+  def eigen(cov: Seq[Column] = covariance): Column =
+    GraftBridge.column(Eigen3Expr(cov.map(GraftBridge.expression)))
+}
+
 /** Shared normals-acquisition step for the surface-reconstruction stages
   * (Poisson, GreedyProjection): use provided Normal[XYZ] analogs when
   * present, else estimate them (the reference runs NormalFilter
@@ -138,38 +160,25 @@ private[operators] object Normals {
   }
 }
 
+/** Per-point neighborhood covariance/eigen features — the
+  * filters.normal / filters.eigenvalues / filters.covariancefeatures /
+  * filters.approximatecoplanar / filters.estimaterank family
+  * (filters/NormalFilter.cpp:62, CovarianceFeaturesFilter.cpp:58,
+  * EigenvaluesFilter.cpp:53, ApproximateCoplanarFilter.cpp:53).
+  *
+  * One kNN join (self included in the neighbourhood), the moment sums
+  * as array expressions over each kNN row (its hits carry their
+  * coordinates, the row its query's), then the closed-form eigensolver
+  * as an expression — no re-join, no groupBy, no per-row JVM matrix
+  * library.
+  */
 object EigenFeatures {
   def apply(df: DataFrame, k: Int = 8, cellSize: Double = 0.0): DataFrame = {
-    val pts = df.select("order_key", "x", "y", "z")
-    val knn = KnnJoin.knn(pts, df, k + 1, valueCol = "order_key",
-      cellSize = cellSize, selfJoin = true)
-    val edges = knn.join(pts.select(col("order_key"), col("x").as("qx"),
-        col("y").as("qy"), col("z").as("qz")), Seq("order_key"))
-      .select(col("order_key"), col("qx"), col("qy"), col("qz"),
-        explode(col("knn")).as("h"))
-      .select(col("order_key"), col("qx"), col("qy"), col("qz"),
-        col("h.cid").as("cid")) // includes self
-    // center neighbor coords on the QUERY point before the moment sums:
-    // covariance is shift-invariant, and with UTM-scale raw coordinates
-    // (~6e5) the uncentered E[xy]-E[x]E[y] cancels ~11 significant digits
-    // — centered sums stay O(neighborhood extent)
-    val nbr = edges.join(
-        pts.select(col("order_key").as("cid"), col("x").as("ax"),
-          col("y").as("ay"), col("z").as("az")), Seq("cid"))
-      .select(col("order_key"), (col("ax") - col("qx")).as("nx0"),
-        (col("ay") - col("qy")).as("ny0"), (col("az") - col("qz")).as("nz0"))
-    val mom = nbr.groupBy("order_key").agg(
-      count(lit(1)).as("n"),
-      avg("nx0").as("mx"), avg("ny0").as("my"), avg("nz0").as("mz"),
-      avg(col("nx0") * col("nx0")).as("sxx"), avg(col("nx0") * col("ny0")).as("sxy"),
-      avg(col("nx0") * col("nz0")).as("sxz"), avg(col("ny0") * col("ny0")).as("syy"),
-      avg(col("ny0") * col("nz0")).as("syz"), avg(col("nz0") * col("nz0")).as("szz"))
-    val eig = GraftBridge.column(Eigen3Expr(Seq(
-      col("sxx") - col("mx") * col("mx"), col("sxy") - col("mx") * col("my"),
-      col("sxz") - col("mx") * col("mz"), col("syy") - col("my") * col("my"),
-      col("syz") - col("my") * col("mz"), col("szz") - col("mz") * col("mz"))
-      .map(GraftBridge.expression)))
-    val withEig = mom.withColumn("__e", eig)
+    val knn = KnnJoin.knn(df.select("order_key", "x", "y", "z"), df, k + 1,
+      valueCol = "order_key", cellSize = cellSize, selfJoin = true)
+    val mom = knn.filter(size(col("knn")) > 0)
+      .select(col("order_key") +: NbrMoments(col("knn")): _*)
+    val withEig = mom.withColumn("__e", NbrMoments.eigen())
     val l1 = col("__e.l1"); val l2 = col("__e.l2"); val l3 = col("__e.l3")
     val sum3 = greatest(l1 + l2 + l3, lit(1e-300))
     // reference parity for the raw eigenvalue outputs: computeCovariance
@@ -207,31 +216,23 @@ object EigenFeatures {
   * -sum(lambda_i ln lambda_i) of the sample covariance of the k nearest
   * (self included), and keep the k (and its radius) minimizing it.
   *
-  * Spark shape: one kNN join at kMax, explode neighbors with their rank,
-  * per-point prefix moments via a window over the (<= kMax)-row
-  * neighborhood — partitions are tiny by construction, so the window is
-  * skew-free — then the closed-form eigensolver per (point, k) row and a
+  * Spark shape: one kNN join at kMax, explode each kNN row's hits (with
+  * their coordinates) and rank, per-point prefix moments via a window
+  * over the (<= kMax)-row neighborhood — partitions are tiny by
+  * construction, so the window is skew-free — then the closed-form eigensolver per (point, k) row and a
   * min_by. Ties pick the smallest k (reference: strict '<' keeps the
   * first minimum). */
 object OptimalNeighborhood {
   def apply(df: DataFrame, kMin: Int = 10, kMax: Int = 14,
       cellSize: Double = 0.0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val pts = df.select("order_key", "x", "y", "z")
-    val knn = KnnJoin.knn(pts, df, kMax, valueCol = "order_key",
-      cellSize = cellSize, selfJoin = true)
-    val edges = knn.join(pts.select(col("order_key"), col("x").as("qx"),
-        col("y").as("qy"), col("z").as("qz")), Seq("order_key"))
-      .select(col("order_key"), col("qx"), col("qy"), col("qz"),
+    val knn = KnnJoin.knn(df.select("order_key", "x", "y", "z"), df, kMax,
+      valueCol = "order_key", cellSize = cellSize, selfJoin = true)
+    val nbr = knn.select(col("order_key"), col("qx"), col("qy"), col("qz"),
         posexplode(col("knn")).as(Seq("pos", "h")))
-      .select(col("order_key"), (col("pos") + 1).as("k"),
-        col("h.d2").as("d2"), col("h.cid").as("cid"),
-        col("qx"), col("qy"), col("qz"))
-    val nbr = edges.join(df.select(col("order_key").as("cid"),
-        col("x").as("ax"), col("y").as("ay"), col("z").as("az")), Seq("cid"))
-      .select(col("order_key"), col("k"), col("d2"),
-        (col("ax") - col("qx")).as("nx"), (col("ay") - col("qy")).as("ny"),
-        (col("az") - col("qz")).as("nz"))
+      .select(col("order_key"), (col("pos") + 1).as("k"), col("h.d2").as("d2"),
+        (col("h.x") - col("qx")).as("nx"), (col("h.y") - col("qy")).as("ny"),
+        (col("h.z") - col("qz")).as("nz"))
     val w = Window.partitionBy("order_key").orderBy("k")
       .rowsBetween(Window.unboundedPreceding, 0)
     def pm(c: Column) = avg(c).over(w) // prefix mean over first k neighbors
@@ -248,15 +249,8 @@ object OptimalNeighborhood {
     // sample covariance: population moments * n/(n-1)
     val n = col("k").cast("double")
     val f = n / (n - 1)
-    val eig = org.apache.spark.sql.GraftBridge.column(Eigen3Expr(Seq(
-      (col("sxx") - col("mx") * col("mx")) * f,
-      (col("sxy") - col("mx") * col("my")) * f,
-      (col("sxz") - col("mx") * col("mz")) * f,
-      (col("syy") - col("my") * col("my")) * f,
-      (col("syz") - col("my") * col("mz")) * f,
-      (col("szz") - col("mz") * col("mz")) * f)
-      .map(org.apache.spark.sql.GraftBridge.expression)))
-    val withE = prefixed.withColumn("__e", eig)
+    val withE = prefixed.withColumn("__e",
+      NbrMoments.eigen(NbrMoments.covariance.map(_ * f)))
     val l1 = greatest(col("__e.l1"), lit(0.0))
     val l2 = greatest(col("__e.l2"), lit(0.0))
     val l3 = greatest(col("__e.l3"), lit(0.0))
@@ -278,52 +272,30 @@ object OptimalNeighborhood {
 /** filters.planefit analog (filters/PlaneFitFilter.cpp:115-152, Kutz et
   * al. 2003): fit a plane to the k neighbors (self EXCLUDED), criterion
   * = d / (d + d_bar) where d is the query's absolute plane distance and
-  * d_bar the neighbors' mean. Two aggregations over one exploded
-  * neighbor join: moments -> normal+centroid, then neighbor distances. */
+  * d_bar the neighbors' mean. Both are array expressions over each kNN
+  * row: moments -> normal+centroid, then the neighbors' plane distances;
+  * a point with no neighbors gets no criterion. */
 object PlaneFit {
   def apply(df: DataFrame, knn: Int = 8, cellSize: Double = 0.0): DataFrame = {
-    val pts = df.select("order_key", "x", "y", "z")
-    val nn = KnnJoin.knn(pts, df, knn + 1, valueCol = "order_key",
-      cellSize = cellSize, selfJoin = true)
-    val edges = nn.join(pts.select(col("order_key"), col("x").as("qx"),
-        col("y").as("qy"), col("z").as("qz")), Seq("order_key"))
-      .select(col("order_key"), col("qx"), col("qy"), col("qz"),
-        explode(slice(col("knn"), lit(2),
-          greatest(size(col("knn")) - 1, lit(0)))).as("h"))
-      .select(col("order_key"), col("qx"), col("qy"), col("qz"),
-        col("h.cid").as("cid"))
-      .join(df.select(col("order_key").as("cid"), col("x").as("ax"),
-        col("y").as("ay"), col("z").as("az")), Seq("cid"))
-      // center on the query point for numerical stability (shift-
-      // invariant; plane distance computed in the same frame)
-      .select(col("order_key"),
-        (col("ax") - col("qx")).as("nx"), (col("ay") - col("qy")).as("ny"),
-        (col("az") - col("qz")).as("nz"))
-      .transform(d => graft.core.Mat(d, eager = false))
-    val mom = edges.groupBy("order_key").agg(
-      count(lit(1)).as("n"),
-      avg("nx").as("mx"), avg("ny").as("my"), avg("nz").as("mz"),
-      avg(col("nx") * col("nx")).as("sxx"), avg(col("nx") * col("ny")).as("sxy"),
-      avg(col("nx") * col("nz")).as("sxz"), avg(col("ny") * col("ny")).as("syy"),
-      avg(col("ny") * col("nz")).as("syz"), avg(col("nz") * col("nz")).as("szz"))
-    val eig = org.apache.spark.sql.GraftBridge.column(Eigen3Expr(Seq(
-      col("sxx") - col("mx") * col("mx"), col("sxy") - col("mx") * col("my"),
-      col("sxz") - col("mx") * col("mz"), col("syy") - col("my") * col("my"),
-      col("syz") - col("my") * col("mz"), col("szz") - col("mz") * col("mz"))
-      .map(org.apache.spark.sql.GraftBridge.expression)))
-    val plane = mom.withColumn("__e", eig)
-      .select(col("order_key"), col("n"), col("mx"), col("my"), col("mz"),
-        col("__e.nx").as("px"), col("__e.ny").as("py"), col("__e.nz").as("pz"))
+    val nn = KnnJoin.knn(df.select("order_key", "x", "y", "z"), df, knn + 1,
+      valueCol = "order_key", cellSize = cellSize, selfJoin = true)
+    // centred on the query point for numerical stability (shift-
+    // invariant; plane distances computed in the same frame)
+    val mom = nn.select(col("order_key"), col("qx"), col("qy"), col("qz"),
+        slice(col("knn"), lit(2), greatest(size(col("knn")) - 1, lit(0))).as("nbrs"))
+      .filter(size(col("nbrs")) > 0)
+      .select(Seq("order_key", "qx", "qy", "qz", "nbrs").map(col) ++
+        NbrMoments(col("nbrs")): _*)
+    val plane = mom.withColumn("__e", NbrMoments.eigen())
+    val (px, py, pz) = (col("__e.nx"), col("__e.ny"), col("__e.nz"))
     // query sits at the frame origin: d = |n . (0 - centroid)|
-    val dQuery = abs(col("px") * col("mx") + col("py") * col("my") +
-      col("pz") * col("mz"))
-    val nbrD = edges.join(plane, Seq("order_key"))
-      .withColumn("__dn", abs(col("px") * (col("nx") - col("mx")) +
-        col("py") * (col("ny") - col("my")) + col("pz") * (col("nz") - col("mz"))))
-      .groupBy("order_key").agg((sum("__dn") / lit(knn)).as("__dbar"))
-    val crit = plane.join(nbrD, Seq("order_key"))
-      .withColumn("plane_fit", dQuery / greatest(dQuery + col("__dbar"), lit(1e-300)))
-      .select("order_key", "plane_fit")
+    val dQuery = abs(px * col("mx") + py * col("my") + pz * col("mz"))
+    val dbar = aggregate(col("nbrs"), lit(0.0), (a, h) => a +
+      abs(px * (h.getField("x") - col("qx") - col("mx")) +
+        py * (h.getField("y") - col("qy") - col("my")) +
+        pz * (h.getField("z") - col("qz") - col("mz")))) / lit(knn)
+    val crit = plane.select(col("order_key"),
+      (dQuery / greatest(dQuery + dbar, lit(1e-300))).as("plane_fit"))
     df.join(crit, Seq("order_key"), "left")
   }
 }

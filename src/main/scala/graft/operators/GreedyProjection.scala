@@ -76,7 +76,8 @@ object GreedyProjection extends Serializable {
     val hits = KnnJoin.knn(ptsN.select("order_key", "x", "y", "z"), ptsN,
       numNeighbors, valueCol = "order_key", cellSize = cellSize,
       selfJoin = true)
-    // neighbor coords + normals (EigenFeatures join pattern)
+    // neighbor normals: a hit carries coordinates but no normal, so the
+    // neighbors join back by cid
     val edges = hits.select(col("order_key"), explode(col("knn")).as("h"))
       .select(col("order_key"), col("h.cid").as("cid"), col("h.d2").as("d2"))
       .join(ptsN.select(col("order_key").as("cid"), col("x").as("ax"),

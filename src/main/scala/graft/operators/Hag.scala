@@ -37,6 +37,7 @@ object HagNn {
     val q = nonGround.select(col("order_key"), col("x"), col("y"),
       lit(0.0).as("z"))
     val hits = KnnJoin.knn(q, cand, count, valueCol = "gz")
+      .select("order_key", "knn")
 
     val nearest = element_at(col("knn"), 1)
     val inBounds = col("x") >= mnx && col("x") <= mxx &&

@@ -24,10 +24,11 @@ import org.apache.spark.sql.functions._
   * reflection correction only bites for degenerate, near-planar
   * correspondence sets).
   *
-  * Scale shape: one grid-kNN join (k=1, slim columns) + one equi-join
-  * to fetch matched fixed coordinates + ONE map-side-combined aggregate
-  * per iteration; the only driver-side state is the 4x4 matrix. The
-  * fixed cloud is persisted once across all iterations.
+  * Scale shape: one grid-kNN join (k=1, slim columns) + ONE
+  * map-side-combined aggregate per iteration, straight over the kNN
+  * rows: each carries its moving point's coordinates and its hit the
+  * matched fixed point's. The only driver-side state is the 4x4
+  * matrix. The fixed cloud is persisted once across all iterations.
   */
 object Icp {
   case class Result(df: DataFrame, transform: Array[Double],
@@ -131,8 +132,6 @@ object Icp {
       (col("x") - cx).as("x"), (col("y") - cy).as("y"), (col("z") - cz).as("z"))
     val fixedC = demean(fixed.select("order_key", "x", "y", "z"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val fixedKeyed = fixedC.select(col("order_key").as("__fid"),
-      col("x").as("__fx"), col("y").as("__fy"), col("z").as("__fz"))
     val movingC = demean(moving.select("order_key", "x", "y", "z"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     movingC.count() // materialize both once
@@ -147,23 +146,24 @@ object Icp {
                  else Double.MaxValue
     while (iter < maxIter && !converged) {
       val movingT = applyT(movingC, tFinal)
-      val hits = KnnJoin.knn(movingT, fixedC, 1, valueCol = "order_key",
+      // each correspondence is one kNN row: the moving point (x, y, z)
+      // and its matched fixed point (fx, fy, fz); ONE aggregate for n,
+      // means, cross sums and MSE
+      val pairs = KnnJoin.knn(movingT, fixedC, 1, valueCol = "order_key",
           cellSize = cellSize)
-        .select(col("order_key"), element_at(col("knn"), 1).as("h"))
-        .filter(col("h").isNotNull && col("h").getField("d2") < sqrMax)
-        .select(col("order_key"), col("h").getField("d2").as("__d2"),
-          col("h").getField("cid").as("__fid"))
-      // fetch matched fixed coords + the moving point's own coords, then
-      // ONE aggregate for n, means, cross sums and MSE
-      val pairs = movingT.join(hits, "order_key").join(fixedKeyed, "__fid")
+        .select(col("qx").as("x"), col("qy").as("y"), col("qz").as("z"),
+          element_at(col("knn"), 1).as("h"))
+        .filter(col("h").isNotNull && col("h.d2") < sqrMax)
+        .select(col("x"), col("y"), col("z"), col("h.x").as("fx"),
+          col("h.y").as("fy"), col("h.z").as("fz"), col("h.d2").as("d2"))
       val a = pairs.agg(
         count(lit(1)).cast("double"),
         sum("x"), sum("y"), sum("z"),
-        sum("__fx"), sum("__fy"), sum("__fz"),
-        sum(col("x") * col("__fx")), sum(col("x") * col("__fy")), sum(col("x") * col("__fz")),
-        sum(col("y") * col("__fx")), sum(col("y") * col("__fy")), sum(col("y") * col("__fz")),
-        sum(col("z") * col("__fx")), sum(col("z") * col("__fy")), sum(col("z") * col("__fz")),
-        sum(sqrt(col("__d2")))).head()
+        sum("fx"), sum("fy"), sum("fz"),
+        sum(col("x") * col("fx")), sum(col("x") * col("fy")), sum(col("x") * col("fz")),
+        sum(col("y") * col("fx")), sum(col("y") * col("fy")), sum(col("y") * col("fz")),
+        sum(col("z") * col("fx")), sum(col("z") * col("fy")), sum(col("z") * col("fz")),
+        sum(sqrt(col("d2")))).head()
       val n = a.getDouble(0)
       if (n == 0) { converged = false; iter = maxIter }
       else {

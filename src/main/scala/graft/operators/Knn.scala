@@ -5,9 +5,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.expr.DimRange
 
-/** One kNN hit: squared distance, candidate order_key, carried value.
-  * Ordering (d2, cid) makes top-k deterministic at any parallelism. */
-case class Hit(d2: Double, cid: Long, v: Double)
+/** One kNN hit: squared distance, candidate order_key, carried value and
+  * the candidate's coordinates. Ordering (d2, cid) makes top-k
+  * deterministic at any parallelism. */
+case class Hit(d2: Double, cid: Long, v: Double, x: Double, y: Double, z: Double)
 
 /** The one insertion top-k of every kNN path: the k best candidates
   * offered so far, ascending by (d2, cid). (d2, cid) is a total order
@@ -16,20 +17,24 @@ case class Hit(d2: Double, cid: Long, v: Double)
 private[operators] final class TopK(k: Int) {
   private val bd = new Array[Double](k); private val bc = new Array[Long](k)
   private val bv = new Array[Double](k)
+  private val bx = new Array[Double](k); private val by = new Array[Double](k)
+  private val bz = new Array[Double](k)
   private var cnt = 0
   private var kth = 0.0 // bd(k - 1) once full
 
   /** A small rejection test that inlines into hot loops; insertion is a call. */
-  def offer(d2: Double, c: Long, v: Double): Unit =
-    if (cnt < k || d2 < kth || (d2 == kth && c < bc(k - 1))) insert(d2, c, v)
+  def offer(d2: Double, c: Long, v: Double, x: Double, y: Double, z: Double): Unit =
+    if (cnt < k || d2 < kth || (d2 == kth && c < bc(k - 1))) insert(d2, c, v, x, y, z)
 
-  private def insert(d2: Double, c: Long, v: Double): Unit = {
+  private def insert(d2: Double, c: Long, v: Double,
+      x: Double, y: Double, z: Double): Unit = {
     var p = if (cnt < k) cnt else k - 1
     while (p > 0 && (bd(p - 1) > d2 || (bd(p - 1) == d2 && bc(p - 1) > c))) {
       bd(p) = bd(p - 1); bc(p) = bc(p - 1); bv(p) = bv(p - 1)
+      bx(p) = bx(p - 1); by(p) = by(p - 1); bz(p) = bz(p - 1)
       p -= 1
     }
-    bd(p) = d2; bc(p) = c; bv(p) = v
+    bd(p) = d2; bc(p) = c; bv(p) = v; bx(p) = x; by(p) = y; bz(p) = z
     if (cnt < k) cnt += 1
     kth = bd(cnt - 1)
   }
@@ -41,7 +46,7 @@ private[operators] final class TopK(k: Int) {
   def hits: Array[Hit] = {
     val out = new Array[Hit](cnt)
     var i = 0
-    while (i < cnt) { out(i) = Hit(bd(i), bc(i), bv(i)); i += 1 }
+    while (i < cnt) { out(i) = Hit(bd(i), bc(i), bv(i), bx(i), by(i), bz(i)); i += 1 }
     out
   }
 }
@@ -123,8 +128,9 @@ private[operators] final class CellIndex(
                 val start = head.get(pk(ccx, ccy, ccz))
                 var i = if (start == null) -1 else start.intValue()
                 while (i != -1) {
-                  val dx = cx(i) - qx; val dy = cy(i) - qy; val dz = cz(i) - qz
-                  top.offer(dx * dx + dy * dy + dz * dz, cid(i), cv(i))
+                  val x = cx(i); val y = cy(i); val z = cz(i)
+                  val dx = x - qx; val dy = y - qy; val dz = z - qz
+                  top.offer(dx * dx + dy * dy + dz * dz, cid(i), cv(i), x, y, z)
                   seen += 1
                   i = nxt(i)
                 }
@@ -183,6 +189,11 @@ private[operators] object CellIndex {
   * driver-built [[CellIndex]] is broadcast and walks its shells until
   * each query is final. Every path ranks through the same [[TopK]], so
   * the broadcast and distributed results are bit-identical.
+  *
+  * A neighbourhood is one row: each result row carries its query's
+  * coordinates and each [[Hit]] its candidate's, both already in hand
+  * in the kernel, so geometry consumers read the neighbourhood from
+  * the row instead of joining coordinates back by order_key.
   *
   * Skew: cell size targets ~4k candidates per cell from the extent row;
   * supercells whose task input exceeds `maxCellCandidates` are salted —
@@ -299,8 +310,10 @@ object KnnJoin {
     *        partial top-k merged — so no single cogroup task ever
     *        receives an unbounded dense cell (AQE skew splitting does
     *        not apply to Dataset.cogroup)
-    * @return (order_key, knn: array<struct<d2,cid,v>>) sorted by (d2, cid),
-    *         length min(k, |cand reachable|); empty array if none
+    * @return (order_key, knn: array<struct<d2,cid,v,x,y,z>>, qx, qy, qz):
+    *         `knn` sorted by (d2, cid), length min(k, |cand reachable|),
+    *         empty if none, each hit with its candidate's x, y, z; qx, qy,
+    *         qz are the query's own coordinates
     */
   def knn(queries: DataFrame, cand: DataFrame, k: Int,
       valueCol: String = "classification", cellSize: Double = 0.0,
@@ -330,11 +343,10 @@ object KnnJoin {
     val ext = candM.agg(count(lit(1)), min("x"), max("x"), min("y"), max("y"),
       min("z"), max("z")).head()
     dbg(s"candM materialized n=${ext.getLong(0)}")
-    val hitType = "array<struct<d2:double,cid:bigint,v:double>>"
     if (ext.getLong(0) == 0L) { // no candidates at all
       candM.unpersist(false)
-      return queries.select(col("order_key"),
-        typedLit(Seq.empty[(Double, Long, Double)]).cast(hitType).as("knn"))
+      return queries.select(col("order_key"), typedLit(Seq.empty[Hit]).as("knn"),
+        col("x").as("qx"), col("y").as("qy"), col("z").as("qz"))
     }
     // NaN coordinates are malformed input and MUST fail loudly here: a
     // NaN poisons maxExtent, so the ring loop's coverAll exit can never
@@ -383,9 +395,9 @@ object KnnJoin {
           // same loud-NaN contract as the distributed path's extent check
           if (qx.isNaN || qy.isNaN || qz.isNaN) throw new IllegalArgumentException(
             s"knn: query $qid has NaN coordinates — filter or repair upstream")
-          (qid, ix.query(qx, qy, qz, k, Long.MaxValue))
+          (qid, ix.query(qx, qy, qz, k, Long.MaxValue), qx, qy, qz)
         }
-      }.toDF("order_key", "knn")
+      }.toDF("order_key", "knn", "qx", "qy", "qz")
       candM.unpersist(false)
       return out
     }
@@ -527,7 +539,8 @@ object KnnJoin {
               while (qi < qBuf.length) {
                 val q0 = qBuf(qi)
                 val dx = c._2 - q0._2; val dy = c._3 - q0._3; val dz = c._4 - q0._4
-                tops(qi).offer(dx * dx + dy * dy + dz * dz, c._5, c._6)
+                tops(qi).offer(dx * dx + dy * dy + dz * dz, c._5, c._6,
+                  c._2, c._3, c._4)
                 qi += 1
               }
             }
@@ -608,7 +621,8 @@ object KnnJoin {
         val pendingCount = joined.agg(
           count(when(!col("__final"), lit(1)))).head().getLong(0)
         dbg(s"ring=$ring h=$h pending=$pendingCount")
-        resolvedParts = joined.filter(col("__final")).select(col("qid"), col("knn")) :: resolvedParts
+        resolvedParts = joined.filter(col("__final"))
+          .select("qid", "knn", "qx", "qy", "qz") :: resolvedParts
         val nextPending = joined.filter(!col("__final"))
           .select("qid", "qx", "qy", "qz", "knn")
         pending = nextPending.drop("knn")
@@ -685,6 +699,8 @@ object NeighborClassifier {
 object NNDistance {
   def apply(df: DataFrame, k: Int, mode: String = "kth",
       outCol: String = "nn_distance", cellSize: Double = 0.0): DataFrame = {
+    require(mode == "kth" || mode == "avg",
+      s"nndistance: mode must be kth or avg, got mode = $mode")
     val knn = KnnJoin.knn(df.select("order_key", "x", "y", "z"), df, k + 1,
       valueCol = "order_key", cellSize = cellSize, selfJoin = true)
     val dists = knn.select(col("order_key"),

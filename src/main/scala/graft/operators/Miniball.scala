@@ -105,28 +105,21 @@ object Seb3 {
   * distance to the center of its neighbors' (self excluded) smallest
   * enclosing ball of radius r.
   *
-  * Spark shape: kNN join -> neighbor coords collected per point (arrays
-  * of k structs — bounded, no skew) -> Welzl per row in a typed map. */
+  * Spark shape: kNN join -> Welzl per kNN row in a typed map over the
+  * row's hits (<= k structs carrying their coordinates, in (d2, cid)
+  * order); a point with no neighbors gets no criterion. */
 object MiniballFilter {
   def apply(df: DataFrame, knn: Int = 8, cellSize: Double = 0.0): DataFrame = {
     val spark = df.sparkSession
-    val pts = df.select("order_key", "x", "y", "z")
-    val nn = KnnJoin.knn(pts, df, knn + 1, valueCol = "order_key",
-      cellSize = cellSize, selfJoin = true)
-    val edges = nn.select(col("order_key"),
-        explode(slice(col("knn"), lit(2),
-          greatest(size(col("knn")) - 1, lit(0)))).as("h"))
-      .select(col("order_key"), col("h.cid").as("cid"))
-      .join(df.select(col("order_key").as("cid"), col("x").as("ax"),
-        col("y").as("ay"), col("z").as("az")), Seq("cid"))
-    val grouped = edges.groupBy("order_key").agg(
-      collect_list(array(col("ax"), col("ay"), col("az"))).as("nbrs"))
-      .join(pts, Seq("order_key"))
+    val nn = KnnJoin.knn(df.select("order_key", "x", "y", "z"), df, knn + 1,
+      valueCol = "order_key", cellSize = cellSize, selfJoin = true)
     import spark.implicits._
-    val out = grouped.select(col("order_key"), col("x"), col("y"), col("z"), col("nbrs"))
-      .as[(Long, Double, Double, Double, Seq[Seq[Double]])]
+    val out = nn.select(col("order_key"), col("qx"), col("qy"), col("qz"),
+        slice(col("knn"), lit(2), greatest(size(col("knn")) - 1, lit(0))).as("nbrs"))
+      .filter(size(col("nbrs")) > 0)
+      .as[(Long, Double, Double, Double, Seq[Hit])]
       .map { case (k, x, y, z, nbrs) =>
-        val (cx, cy, cz, r) = Seb3.ball(nbrs.map(_.toArray).toArray)
+        val (cx, cy, cz, r) = Seb3.ball(nbrs.map(h => Array(h.x, h.y, h.z)).toArray)
         val d = math.sqrt((x - cx) * (x - cx) + (y - cy) * (y - cy) + (z - cz) * (z - cz))
         val denom = d + 2 * r / math.sqrt(3.0)
         (k, if (denom <= 0) 0.0 else d / denom)

@@ -139,7 +139,10 @@ object Lof {
       valueCol = "order_key", cellSize = cellSize, selfJoin = true)
     val nbrs = knn.select(col("order_key"),
       slice(col("knn"), lit(2), greatest(size(col("knn")) - 1, lit(0))).as("nbrs"))
-      .withColumn("kdist", sqrt(try_element_at(col("nbrs"), size(col("nbrs"))).getField("d2")))
+      // greatest(..., 1): a point with no neighbors (single-row input)
+      // probes index 1 for a null k-distance — index 0 throws
+      .withColumn("kdist", sqrt(try_element_at(col("nbrs"),
+        greatest(size(col("nbrs")), lit(1))).getField("d2")))
     val edges = nbrs.select(col("order_key"), col("kdist"), explode(col("nbrs")).as("h"))
       .select(col("order_key"), col("kdist"),
         col("h.cid").as("nbr"), sqrt(col("h.d2")).as("dist"))

@@ -653,6 +653,9 @@ class ExtrasSpec extends AnyFunSuite {
     val one = Seq((0L, 1.0, 1.0, 1.0)).toDF("order_key", "x", "y", "z")
       .withColumn("classification", lit(0))
     assert(Outlier.statistical(one, meanK = 4).count() == 1)
+    // a lone point has no k-distance: one row, null nn_distance
+    val lof = Lof(one, minPts = 4).select("nn_distance").collect()
+    assert(lof.length == 1 && lof.head.isNullAt(0), lof.mkString(","))
   }
 
   test("ANN index maintenance over table deltas: benign appends stay " +

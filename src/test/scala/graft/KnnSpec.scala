@@ -47,14 +47,17 @@ class KnnSpec extends AnyFunSuite {
     }
   }
 
-  /** Self-kNN of `df` as qid -> its (d2, cid, v) hits. */
+  /** Self-kNN of `df` as qid -> (its (qx, qy, qz), its
+    * (d2, cid, v, x, y, z) hits). */
   private def selfKnnHits(df: org.apache.spark.sql.DataFrame, k: Int,
       broadcastLimit: Int, cellSize: Double = 0.0) =
     KnnJoin.knn(df.select("order_key", "x", "y", "z"), df, k,
         cellSize = cellSize, broadcastLimit = broadcastLimit)
       .collect().map { r =>
-        r.getLong(0) -> r.getSeq[org.apache.spark.sql.Row](1)
-          .map(h => (h.getDouble(0), h.getLong(1), h.getDouble(2))).toVector
+        r.getLong(0) -> ((r.getDouble(2), r.getDouble(3), r.getDouble(4)),
+          r.getSeq[org.apache.spark.sql.Row](1).map(h => (h.getDouble(0),
+            h.getLong(1), h.getDouble(2), h.getDouble(3), h.getDouble(4),
+            h.getDouble(5))).toVector)
       }.toMap
 
   /** Self-kNN at k=5 over `docs` on the pinned distributed path; at the
@@ -81,12 +84,13 @@ class KnnSpec extends AnyFunSuite {
         val d2 = (x - qx) * (x - qx) + (y - qy) * (y - qy) + (z - qz) * (z - qz)
         (d2, cid)
       }.sorted.take(k).map(_._2).toVector
-      assert(gotB(qid).map(_._2) == exp, s"qid=$qid")
+      assert(gotB(qid)._2.map(_._2) == exp, s"qid=$qid")
     }
     // exact ties: on an integer lattice many candidates share each d2, so
     // the cid tie-break orders them. cids are a seeded permutation of the
     // lattice positions. cellSize 0.3 leaves every query open after rings
-    // 1-3 and escalates the cell size once.
+    // 1-3 and escalates the cell size once. Each hit carries its cid's
+    // lattice point and each row its query's.
     val ids = new scala.util.Random(5).shuffle((0 until 216).toVector)
     val lat = (for (x <- 0 until 6; y <- 0 until 6; z <- 0 until 6)
       yield (x.toDouble, y.toDouble, z.toDouble)).zip(ids).map {
@@ -94,9 +98,10 @@ class KnnSpec extends AnyFunSuite {
     val latDf = lat.toDF("order_key", "x", "y", "z", "classification")
     val kL = 10
     val expL = lat.map { case (qid, qx, qy, qz, _) =>
-      qid -> lat.map { case (cid, x, y, z, c) =>
-        ((x - qx) * (x - qx) + (y - qy) * (y - qy) + (z - qz) * (z - qz), cid, c.toDouble)
-      }.sortBy(t => (t._1, t._2)).take(kL).toVector
+      qid -> ((qx, qy, qz), lat.map { case (cid, x, y, z, c) =>
+        ((x - qx) * (x - qx) + (y - qy) * (y - qy) + (z - qz) * (z - qz), cid,
+          c.toDouble, x, y, z)
+      }.sortBy(t => (t._1, t._2)).take(kL).toVector)
     }.toMap
     for ((bl, cs) <- Seq((KnnJoin.defaultBroadcastLimit, 0.0), (0, 0.0), (0, 0.3)))
       assert(selfKnnHits(latDf, kL, bl, cs) == expL, s"broadcastLimit=$bl cellSize=$cs")
@@ -205,6 +210,15 @@ class KnnSpec extends AnyFunSuite {
     assert(kth.filter(col("nn_distance") <= 0).count() == 0)
     val avg = NNDistance(docs, k = 3, mode = "avg")
     assert(avg.filter(col("nn_distance") <= 0).count() == 0)
+    // an unknown mode is rejected by name before any Spark job runs
+    val sc = spark.sparkContext
+    sc.setJobGroup("nnd-mode", "unknown mode", interruptOnCancel = false)
+    try {
+      val e = intercept[IllegalArgumentException](NNDistance(docs, k = 3, mode = "kht"))
+      assert(e.getMessage.contains("mode") && e.getMessage.contains("kht"), e.getMessage)
+    } finally sc.clearJobGroup()
+    org.apache.spark.TestListenerBus.drain(sc)
+    assert(sc.statusTracker.getJobIdsForGroup("nnd-mode").isEmpty)
   }
 
   test("queries OFFSET from the candidate cloud still get full exact kNN " +
@@ -228,6 +242,14 @@ class KnnSpec extends AnyFunSuite {
       // nearest candidate to (500+i, 500) is the corner (9, 9) = order_key 99
       assert(out.values.forall(_.head == 99L))
     }
+    // no candidates at all: each query row keeps its coordinates, with an
+    // empty knn of the same hit type as a non-empty result
+    val none = KnnJoin.knn(q, cand.filter(lit(false)), k = 3)
+    assert(none.schema("knn").dataType.simpleString ==
+      KnnJoin.knn(q, cand, k = 3).schema("knn").dataType.simpleString)
+    assert(none.collect().map(r => (r.getLong(0), r.getSeq[Any](1).size,
+        r.getDouble(2), r.getDouble(3), r.getDouble(4))).sortBy(_._1).toSeq ==
+      (0 until 5).map(i => (1000L + i, 0, 500.0 + i, 500.0, 0.0)))
     // end-to-end: hausdorff between offset clouds is finite and exact
     val a = (0 until 50).map(i => (i.toLong, i.toDouble, 0.0, 0.0))
       .toDF("order_key", "x", "y", "z")

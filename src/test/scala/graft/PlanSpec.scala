@@ -98,6 +98,22 @@ class PlanSpec extends AnyFunSuite {
       s"nested-loop join in flagship plan:\n$plan")
   }
 
+  test("a kNN neighbourhood is one row: each geometry consumer's only " +
+      "Join attaches its result to the input") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import graft.operators._
+    val docs = graft.core.Synth.docs(spark, 400, seed = 5)
+    def joins(df: DataFrame) =
+      df.queryExecution.optimizedPlan.collect { case j: Join => j }.size
+    val counts = Seq(
+      "EigenFeatures" -> EigenFeatures(docs),
+      "OptimalNeighborhood" -> OptimalNeighborhood(docs),
+      "PlaneFit" -> PlaneFit(docs),
+      "MiniballFilter" -> MiniballFilter(docs),
+      "HagDelaunay" -> HagDelaunay(docs)).map { case (n, df) => n -> joins(df) }
+    assert(counts.forall(_._2 == 1), counts.mkString(", "))
+  }
+
   test("crop -> splitter -> per-tile count: Filter, grid_cell_id Project " +
       "and partial HashAggregate fuse into codegen stage 1; one Exchange") {
     val docs = graft.core.Synth.docs(spark, 1000)

@@ -69,15 +69,20 @@ class SkewSpec extends AnyFunSuite {
       cellSize = h, maxCellCandidates = cap, broadcastLimit = 0)
     val all = pts.collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
+    // each row carries its query's coordinates and each hit its cid's
+    val byId = all.map(t => t._1 -> (t._2, t._3, t._4)).toMap
     val gotS = knnSalted.filter(col("order_key") < 30).collect()
-      .map(r => r.getLong(0) ->
-        r.getSeq[org.apache.spark.sql.Row](1).map(_.getLong(1)).toVector).toMap
-    gotS.foreach { case (qid, ids) =>
-      val (_, qx, qy, qz) = all.find(_._1 == qid).get
+      .map(r => r.getLong(0) -> ((r.getDouble(2), r.getDouble(3), r.getDouble(4)),
+        r.getSeq[org.apache.spark.sql.Row](1)
+          .map(h => (h.getLong(1), (h.getDouble(3), h.getDouble(4), h.getDouble(5))))
+          .toVector)).toMap
+    gotS.foreach { case (qid, (q, hits)) =>
+      val (qx, qy, qz) = byId(qid)
+      assert(q == ((qx, qy, qz)), s"salted qid=$qid query coordinates")
       val exp = all.map { case (cid, x, y, z) =>
         ((x - qx) * (x - qx) + (y - qy) * (y - qy) + (z - qz) * (z - qz), cid)
-      }.sorted.take(3).map(_._2).toVector
-      assert(ids == exp, s"salted qid=$qid")
+      }.sorted.take(3).map(t => (t._2, byId(t._2))).toVector
+      assert(hits == exp, s"salted qid=$qid")
     }
   }
 
