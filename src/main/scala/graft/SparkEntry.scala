@@ -310,7 +310,7 @@ object SparkEntry {
       val cand = p.filter(col("order_key") % 3 === 0)
       val q = p.filter(col("order_key") % 97 === 0)
       KnnJoin.knn(q.select("order_key", "x", "y", "z"), cand, 3,
-          valueCol = "order_key", cellSize = 500.0)
+          valueCol = "order_key", cellSize = 500.0).rows
         .select(col("order_key").as("qid"), posexplode(col("knn")).as(Seq("pos", "h")))
         .select(col("qid"), col("h.cid").as("cid"), (col("pos") + 1).cast("long").as("rnk"))
     }, Some(

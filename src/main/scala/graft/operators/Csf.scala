@@ -126,7 +126,7 @@ object Csf {
         val cand = occ.select((col("gy").cast("long") * w + col("gx")).as("order_key"),
           col("gx").cast("double").as("x"), col("gy").cast("double").as("y"),
           lit(0.0).as("z"), col("hv0").as("v"))
-        val nn = KnnJoin.knn(empty, cand, 1, valueCol = "v")
+        val nn = KnnJoin.knn(empty, cand, 1, valueCol = "v").rows
           .select(col("order_key"), element_at(col("knn"), 1).getField("v").as("hvn"))
         gridScan
           .join(nn.withColumnRenamed("order_key", "__ck"),

@@ -341,10 +341,11 @@ private[operators] final class Triangulator(px: Array[Double], py: Array[Double]
   *
   * Scale: ONE grid-kNN join (supercell-halo shuffle, slim columns)
   * whose hits carry the ground points' coordinates, one per-row local
-  * triangulation over <= `count` points — no global structure, no
-  * driver loop. Neighbor order (and so cocircular tie-breaks) is
-  * pinned to (d2, cid); a fully collinear neighborhood falls back to
-  * the nearest-z rule (the reference's delaunator would throw there).
+  * triangulation over <= `count` points on the kNN row, then one
+  * (order_key, z1) attach — no global structure, no driver loop.
+  * Neighbor order (and so cocircular tie-breaks) is pinned to (d2, cid);
+  * a fully collinear neighborhood falls back to the nearest-z rule (the
+  * reference's delaunator would throw there).
   */
 object HagDelaunay {
   def apply(df: DataFrame, count: Int = 10,
@@ -366,17 +367,17 @@ object HagDelaunay {
     // each hit is a ground neighbor: its x, y and v = ground z, already
     // in (d2, cid) order — the reference's kNN result order
     val hits = KnnJoin.knn(q, cand, count, valueCol = "gz")
-      .select(col("order_key"), col("knn").as("__nb"))
 
-    val interp = udf { (x0: Double, y0: Double, z0: Double, nb: Seq[Row]) =>
-      if (nb == null || nb.isEmpty) z0
+    // None = the point keeps its own z
+    val interp = udf { (x0: Double, y0: Double, nb: Seq[Row]) =>
+      if (nb == null || nb.isEmpty) None
       else {
         val gx = nb.map(_.getAs[Double]("x")).toArray
         val gy = nb.map(_.getAs[Double]("y")).toArray
         val gz = nb.map(_.getAs[Double]("v")).toArray
         val inBounds = x0 >= mnx && x0 <= mxx && y0 >= mny && y0 <= mxy
-        if ((gx(0) == x0 && gy(0) == y0) || nb.size == 1) gz(0)
-        else if (!inBounds && !allowExtrapolation) z0
+        if ((gx(0) == x0 && gy(0) == y0) || nb.size == 1) Some(gz(0))
+        else if (!inBounds && !allowExtrapolation) None
         else {
           val tris = DelaunayCore.triangulate(gx, gy)
           var z1 = Double.PositiveInfinity
@@ -387,16 +388,14 @@ object HagDelaunay {
               gx(bb), gy(bb), gz(bb), gx(c), gy(c), gz(c), x0, y0)
             i += 3
           }
-          if (z1.isInfinity) gz(0) else z1 // outside triangulation -> nearest
+          Some(if (z1.isInfinity) gz(0) else z1) // outside triangulation -> nearest
         }
       }
     }
-    val ngOut = nonGround.join(
-        hits.withColumnRenamed("order_key", "__qid"),
-        col("order_key") === col("__qid"), "left")
-      .withColumn(outDim,
-        col("z") - interp(col("x"), col("y"), col("z"), col("__nb")))
-      .drop("__qid", "__nb")
+    val ngOut = KnnJoin.attach(nonGround, hits.rows.select(col("order_key"),
+        interp(col("qx"), col("qy"), col("knn")).as("__z1")), hits.queryRows)
+      .withColumn(outDim, col("z") - coalesce(col("__z1"), col("z")))
+      .select((nonGround.columns :+ outDim).distinct.map(col): _*)
     ngOut.unionByName(ground.withColumn(outDim, lit(0.0)))
   }
 }

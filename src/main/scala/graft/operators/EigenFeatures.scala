@@ -176,7 +176,7 @@ object EigenFeatures {
   def apply(df: DataFrame, k: Int = 8, cellSize: Double = 0.0): DataFrame = {
     val knn = KnnJoin.knn(df.select("order_key", "x", "y", "z"), df, k + 1,
       valueCol = "order_key", cellSize = cellSize, selfJoin = true)
-    val mom = knn.filter(size(col("knn")) > 0)
+    val mom = knn.rows.filter(size(col("knn")) > 0)
       .select(col("order_key") +: NbrMoments(col("knn")): _*)
     val withEig = mom.withColumn("__e", NbrMoments.eigen())
     val l1 = col("__e.l1"); val l2 = col("__e.l2"); val l3 = col("__e.l3")
@@ -206,7 +206,7 @@ object EigenFeatures {
       (when(l1 > 1e-9, 1).otherwise(0) +
         when(l2 > l1 * 1e-3, 1).otherwise(0) +
         when(l3 > l1 * 1e-3, 1).otherwise(0)).as("rank"))
-    df.join(features, Seq("order_key"), "left")
+    KnnJoin.attach(df, features, knn.queryRows)
   }
 }
 
@@ -228,7 +228,7 @@ object OptimalNeighborhood {
     import org.apache.spark.sql.expressions.Window
     val knn = KnnJoin.knn(df.select("order_key", "x", "y", "z"), df, kMax,
       valueCol = "order_key", cellSize = cellSize, selfJoin = true)
-    val nbr = knn.select(col("order_key"), col("qx"), col("qy"), col("qz"),
+    val nbr = knn.rows.select(col("order_key"), col("qx"), col("qy"), col("qz"),
         posexplode(col("knn")).as(Seq("pos", "h")))
       .select(col("order_key"), (col("pos") + 1).as("k"), col("h.d2").as("d2"),
         (col("h.x") - col("qx")).as("nx"), (col("h.y") - col("qy")).as("ny"),
@@ -265,7 +265,7 @@ object OptimalNeighborhood {
         struct(col("__ent"), col("k"))).as("b"))
       .select(col("order_key"), col("b.k").as("optimal_knn"),
         col("b.r").as("optimal_radius"))
-    df.join(best, Seq("order_key"), "left")
+    KnnJoin.attach(df, best, knn.queryRows)
   }
 }
 
@@ -281,7 +281,7 @@ object PlaneFit {
       valueCol = "order_key", cellSize = cellSize, selfJoin = true)
     // centred on the query point for numerical stability (shift-
     // invariant; plane distances computed in the same frame)
-    val mom = nn.select(col("order_key"), col("qx"), col("qy"), col("qz"),
+    val mom = nn.rows.select(col("order_key"), col("qx"), col("qy"), col("qz"),
         slice(col("knn"), lit(2), greatest(size(col("knn")) - 1, lit(0))).as("nbrs"))
       .filter(size(col("nbrs")) > 0)
       .select(Seq("order_key", "qx", "qy", "qz", "nbrs").map(col) ++
@@ -296,6 +296,6 @@ object PlaneFit {
         pz * (h.getField("z") - col("qz") - col("mz")))) / lit(knn)
     val crit = plane.select(col("order_key"),
       (dQuery / greatest(dQuery + dbar, lit(1e-300))).as("plane_fit"))
-    df.join(crit, Seq("order_key"), "left")
+    KnnJoin.attach(df, crit, nn.queryRows)
   }
 }

@@ -75,7 +75,7 @@ object GreedyProjection extends Serializable {
 
     val hits = KnnJoin.knn(ptsN.select("order_key", "x", "y", "z"), ptsN,
       numNeighbors, valueCol = "order_key", cellSize = cellSize,
-      selfJoin = true)
+      selfJoin = true).rows
     // neighbor normals: a hit carries coordinates but no normal, so the
     // neighbors join back by cid
     val edges = hits.select(col("order_key"), explode(col("knn")).as("h"))

@@ -95,7 +95,7 @@ object GridSurface {
       g.centerX(col("c")).as("x"), g.centerY(col("r")).as("y"),
       lit(0.0).as("z"))
     val hits = KnnJoin.knn(q, cand, k, valueCol = "gz",
-      cellSize = math.max(g.cell * 8, 1e-9))
+      cellSize = math.max(g.cell * 8, 1e-9)).rows
     // incremental mean in (d2, cid) order mirrors the reference's
     // running M1 over neighbors sorted by distance
     val zfill = expr(

@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions._
   * reference's nanoflann tie order is unspecified; ours is pinned, so
   * results are deterministic at any parallelism.
   *
-  * Scale: one grid-kNN join (supercell-halo shuffle of slim columns) +
-  * one equi-join back to the full rows; no driver-side loops. */
+  * Scale: one grid-kNN join (supercell-halo shuffle of slim columns),
+  * z1 computed on each kNN row, and one (order_key, z1) attach back to
+  * the full rows; no driver-side loops. */
 object HagNn {
   def apply(df: DataFrame, count: Int = 1, maxDistance: Double = 0.0,
       allowExtrapolation: Boolean = true,
@@ -37,11 +38,10 @@ object HagNn {
     val q = nonGround.select(col("order_key"), col("x"), col("y"),
       lit(0.0).as("z"))
     val hits = KnnJoin.knn(q, cand, count, valueCol = "gz")
-      .select("order_key", "knn")
 
     val nearest = element_at(col("knn"), 1)
-    val inBounds = col("x") >= mnx && col("x") <= mxx &&
-      col("y") >= mny && col("y") <= mxy
+    val inBounds = col("qx") >= mnx && col("qx") <= mxx &&
+      col("qy") >= mny && col("qy") <= mxy
     val filtered =
       if (maxDistance > 0)
         expr(s"filter(knn, h -> h.d2 <= ${maxDistance * maxDistance}D)")
@@ -51,19 +51,20 @@ object HagNn {
     val wsum = aggregate(filtered, lit(0.0), (a, h) => a + lit(1.0) / h.getField("d2"))
     val zsum = aggregate(filtered, lit(0.0),
       (a, h) => a + h.getField("v") / h.getField("d2"))
-    val z1 = when(size(col("knn")) === 0, col("z"))
+    // null = the point keeps its own z (a hit's v is never null)
+    val ownZ = lit(null).cast("double")
+    val z1 = when(size(col("knn")) === 0, ownZ)
       .when(nearest.getField("d2") === 0.0 || size(col("knn")) === 1,
         nearest.getField("v"))
       .otherwise(if (allowExtrapolation)
-          when(wsum > 0, zsum / wsum).otherwise(col("z"))
-        else when(!inBounds, col("z"))
-          .when(wsum > 0, zsum / wsum).otherwise(col("z")))
+          when(wsum > 0, zsum / wsum).otherwise(ownZ)
+        else when(!inBounds, ownZ)
+          .when(wsum > 0, zsum / wsum).otherwise(ownZ))
 
-    val ngOut = nonGround.join(
-        hits.withColumnRenamed("order_key", "__qid"),
-        col("order_key") === col("__qid"), "left")
-      .withColumn(outDim, col("z") - z1)
-      .drop("__qid", "knn")
+    val ngOut = KnnJoin.attach(nonGround,
+        hits.rows.select(col("order_key"), z1.as("__z1")), hits.queryRows)
+      .withColumn(outDim, col("z") - coalesce(col("__z1"), col("z")))
+      .select((nonGround.columns :+ outDim).distinct.map(col): _*)
     ngOut.unionByName(ground.withColumn(outDim, lit(0.0)))
   }
 }

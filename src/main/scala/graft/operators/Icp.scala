@@ -150,7 +150,7 @@ object Icp {
       // and its matched fixed point (fx, fy, fz); ONE aggregate for n,
       // means, cross sums and MSE
       val pairs = KnnJoin.knn(movingT, fixedC, 1, valueCol = "order_key",
-          cellSize = cellSize)
+          cellSize = cellSize).rows
         .select(col("qx").as("x"), col("qy").as("y"), col("qz").as("z"),
           element_at(col("knn"), 1).as("h"))
         .filter(col("h").isNotNull && col("h.d2") < sqrMax)

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.expr.DimRange
 
@@ -9,6 +8,10 @@ import graft.expr.DimRange
   * the candidate's coordinates. Ordering (d2, cid) makes top-k
   * deterministic at any parallelism. */
 case class Hit(d2: Double, cid: Long, v: Double, x: Double, y: Double, z: Double)
+
+/** A kNN result and its query-row count when the join already held one
+  * (see [[KnnJoin.knn]]): what [[KnnJoin.attach]] sizes its broadcast by. */
+final case class KnnResult(rows: DataFrame, queryRows: Option[Long])
 
 /** The one insertion top-k of every kNN path: the k best candidates
   * offered so far, ascending by (d2, cid). (d2, cid) is a total order
@@ -177,8 +180,9 @@ private[operators] object CellIndex {
   *
   * Two-phase cell-neighborhood shuffle (SURVEY §2.7 north-star):
   * phase 1 cogroups queries with the candidates of SUPERCELL regions
-  * (SxSxS cells + a one-cell halo shell — ~3.4x candidate duplication
-  * instead of 27x per-cell haloing) and answers each query's exact
+  * (SxSxS cells + a one-cell halo shell clamped to the union bbox —
+  * at most ~3.4x candidate duplication instead of 27x per-cell
+  * haloing) and answers each query's exact
   * 3x3x3-cell cube from a task-local [[CellIndex]]; phase 2 re-joins
   * ONLY the points whose kth-distance ball escapes the examined cube
   * (sqrt(d2_k) <= R*h proves the local result final — the halo-exchange
@@ -194,6 +198,10 @@ private[operators] object CellIndex {
   * coordinates and each [[Hit]] its candidate's, both already in hand
   * in the kernel, so geometry consumers read the neighbourhood from
   * the row instead of joining coordinates back by order_key.
+  *
+  * A consumer's per-point result reaches its input through [[attach]],
+  * a broadcast while the kNN's own query-row count says it fits Spark's
+  * broadcast threshold: the span-bearing input never shuffles for it.
   *
   * Skew: cell size targets ~4k candidates per cell from the extent row;
   * supercells whose task input exceeds `maxCellCandidates` are salted —
@@ -257,17 +265,28 @@ object KnnJoin {
     if (h0raw.isNaN || h0raw <= 1e-12) fallback / 16 else h0raw
   }
 
+  /** (count, min x, max x, min y, max y, min z, max z) of `df`: one job. */
+  private[graft] def extent(df: DataFrame): Row =
+    df.agg(count(lit(1)), min("x"), max("x"), min("y"), max("y"),
+      min("z"), max("z")).head()
+
   /** Supercell (incl. one-cell halo shell) candidate row set at cell
-    * size h — what one first-binning cogroup task receives. */
-  private def superRows(cand: DataFrame, h: Double, valueCol: String): DataFrame = {
+    * size h — what one first-binning cogroup task receives. The halo is
+    * clamped to the supercells of `box`, the union [[extent]] row: every
+    * query's supercell lies inside it, so a copy outside emits nothing. */
+  private def superRows(cand: DataFrame, h: Double, valueCol: String,
+      box: Row): DataFrame = {
     val withCells = cand.select(col("x"), col("y"), col("z"),
       col("order_key").as("cid"), col(valueCol).cast("double").as("v"),
       cellCoord(col("x"), h).as("ccx"), cellCoord(col("y"), h).as("ccy"),
       cellCoord(col("z"), h).as("ccz"))
+    def halo(cc: String, i: Int) = explode(sequence(
+      greatest(superC(col(cc), -1), superC(cellCoord(lit(box.getDouble(i)), h), 0)),
+      least(superC(col(cc), 1), superC(cellCoord(lit(box.getDouble(i + 1)), h), 0))))
     withCells
-      .withColumn("sx", explode(sequence(superC(col("ccx"), -1), superC(col("ccx"), 1))))
-      .withColumn("sy", explode(sequence(superC(col("ccy"), -1), superC(col("ccy"), 1))))
-      .withColumn("sz", explode(sequence(superC(col("ccz"), -1), superC(col("ccz"), 1))))
+      .withColumn("sx", halo("ccx", 1))
+      .withColumn("sy", halo("ccy", 3))
+      .withColumn("sz", halo("ccz", 5))
       .select(superPack(col("sx"), col("sy"), col("sz")).as("skey"),
         col("x"), col("y"), col("z"), col("cid"), col("v"))
   }
@@ -284,16 +303,16 @@ object KnnJoin {
     * uniform data pays one slim map-side-combined aggregate and stops.
     * (cap/8 here was unsound: 27 contributors at just over cap/27 each
     * — all below cap/8 — could assemble a ~3x-over-cap task that
-    * escaped detection entirely.) */
+    * escaped detection entirely.) `box` clamps the halo as in [[superRows]]. */
   private[graft] def detectHotSupercells(cand: DataFrame, h: Double,
-      cap: Int): Map[Long, Int] = {
+      cap: Int, box: Row): Map[Long, Int] = {
     val basePre = cand.select(superPack(
         superC(cellCoord(col("x"), h), 0), superC(cellCoord(col("y"), h), 0),
         superC(cellCoord(col("z"), h), 0)).as("skey"))
       .groupBy("skey").count().filter(col("count") > cap / 27)
       .limit(1).count()
     if (basePre == 0L) return Map.empty
-    superRows(cand, h, "order_key").groupBy("skey").count()
+    superRows(cand, h, "order_key", box).groupBy("skey").count()
       .filter(col("count") > cap).collect()
       .map(r => r.getLong(0) ->
         math.min(math.ceil(r.getLong(1).toDouble / cap), 64.0).toInt).toMap
@@ -310,15 +329,17 @@ object KnnJoin {
     *        partial top-k merged — so no single cogroup task ever
     *        receives an unbounded dense cell (AQE skew splitting does
     *        not apply to Dataset.cogroup)
-    * @return (order_key, knn: array<struct<d2,cid,v,x,y,z>>, qx, qy, qz):
-    *         `knn` sorted by (d2, cid), length min(k, |cand reachable|),
-    *         empty if none, each hit with its candidate's x, y, z; qx, qy,
-    *         qz are the query's own coordinates
+    * @return rows (order_key, knn: array<struct<d2,cid,v,x,y,z>>, qx, qy,
+    *         qz): `knn` sorted by (d2, cid), length min(k, |cand
+    *         reachable|), empty if none, each hit with its candidate's x,
+    *         y, z; qx, qy, qz are the query's own coordinates. queryRows:
+    *         the candidate count for self-kNN, the query extent's count on
+    *         the distributed path, else None (it would cost a job)
     */
   def knn(queries: DataFrame, cand: DataFrame, k: Int,
       valueCol: String = "classification", cellSize: Double = 0.0,
       selfJoin: Boolean = false, maxCellCandidates: Int = 100000,
-      broadcastLimit: Int = defaultBroadcastLimit): DataFrame = {
+      broadcastLimit: Int = defaultBroadcastLimit): KnnResult = {
     require(k >= 1, s"knn: k must be >= 1, got k = $k")
     val spark = queries.sparkSession
     import spark.implicits._
@@ -340,13 +361,13 @@ object KnnJoin {
     val candM = cand.select(candCols: _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    val ext = candM.agg(count(lit(1)), min("x"), max("x"), min("y"), max("y"),
-      min("z"), max("z")).head()
+    val ext = extent(candM)
     dbg(s"candM materialized n=${ext.getLong(0)}")
+    val selfRows = if (selfJoin) Some(ext.getLong(0)) else None
     if (ext.getLong(0) == 0L) { // no candidates at all
       candM.unpersist(false)
-      return queries.select(col("order_key"), typedLit(Seq.empty[Hit]).as("knn"),
-        col("x").as("qx"), col("y").as("qy"), col("z").as("qz"))
+      return KnnResult(queries.select(col("order_key"), typedLit(Seq.empty[Hit]).as("knn"),
+        col("x").as("qx"), col("y").as("qy"), col("z").as("qz")), selfRows)
     }
     // NaN coordinates are malformed input and MUST fail loudly here: a
     // NaN poisons maxExtent, so the ring loop's coverAll exit can never
@@ -399,7 +420,7 @@ object KnnJoin {
         }
       }.toDF("order_key", "knn", "qx", "qy", "qz")
       candM.unpersist(false)
-      return out
+      return KnnResult(out, selfRows)
     }
 
     val queriesM =
@@ -415,21 +436,17 @@ object KnnJoin {
     // query to the farthest candidate — bounded by the UNION bbox extent
     // (a query offset from the candidate cloud otherwise gets truncated
     // results once ring*h passes the candidate-only extent)
+    val qe = if (selfJoin) ext else extent(queriesM)
+    require(qe.getLong(0) == 0L || (!qe.getDouble(2).isNaN &&
+      !qe.getDouble(4).isNaN && !qe.getDouble(6).isNaN),
+      "knn: query side contains NaN coordinates — filter or repair " +
+        "them upstream (a NaN query can never resolve)")
     val uext =
-      if (selfJoin) ext
-      else {
-        val qe = queriesM.agg(count(lit(1)), min("x"), max("x"), min("y"), max("y"),
-          min("z"), max("z")).head()
-        require(qe.getLong(0) == 0L || (!qe.getDouble(2).isNaN &&
-          !qe.getDouble(4).isNaN && !qe.getDouble(6).isNaN),
-          "knn: query side contains NaN coordinates — filter or repair " +
-            "them upstream (a NaN query can never resolve)")
-        if (qe.getLong(0) == 0L) ext
-        else org.apache.spark.sql.Row(ext.getLong(0),
-          math.min(ext.getDouble(1), qe.getDouble(1)), math.max(ext.getDouble(2), qe.getDouble(2)),
-          math.min(ext.getDouble(3), qe.getDouble(3)), math.max(ext.getDouble(4), qe.getDouble(4)),
-          math.min(ext.getDouble(5), qe.getDouble(5)), math.max(ext.getDouble(6), qe.getDouble(6)))
-      }
+      if (selfJoin || qe.getLong(0) == 0L) ext
+      else Row(ext.getLong(0),
+        math.min(ext.getDouble(1), qe.getDouble(1)), math.max(ext.getDouble(2), qe.getDouble(2)),
+        math.min(ext.getDouble(3), qe.getDouble(3)), math.max(ext.getDouble(4), qe.getDouble(4)),
+        math.min(ext.getDouble(5), qe.getDouble(5)), math.max(ext.getDouble(6), qe.getDouble(6)))
     val maxExtent = math.max(1e-9, math.max(uext.getDouble(2) - uext.getDouble(1),
       math.max(uext.getDouble(4) - uext.getDouble(3), uext.getDouble(6) - uext.getDouble(5))))
 
@@ -473,7 +490,7 @@ object KnnJoin {
         case None => q1.withColumn("__salt", lit(0))
       }).select("qid", "qx", "qy", "qz", "skey", "__salt")
         .as[(Long, Double, Double, Double, Long, Int)]
-      val c1 = superRows(candM, h, valueCol)
+      val c1 = superRows(candM, h, valueCol, uext)
       val cS = (hotDf match {
         case Some(hd) => c1.join(hd, Seq("skey"), "left")
           .withColumn("__salt", when(col("__s").isNotNull,
@@ -585,7 +602,7 @@ object KnnJoin {
           // n <= cap means no supercell can exceed the cap — detection free
           val hot =
             if (ext.getLong(0) <= maxCellCandidates) Map.empty[Long, Int]
-            else detectHotSupercells(candM, h, maxCellCandidates)
+            else detectHotSupercells(candM, h, maxCellCandidates, uext)
           dbg(s"hot detection done: ${hot.size} hot supercells at h=$h")
           val hotDf =
             if (hot.isEmpty) None
@@ -649,8 +666,20 @@ object KnnJoin {
     // by its ring's pending-count action) frame — the result no longer
     // reads the cached inputs, so their blocks can be dropped now
     release()
-    resolvedParts.reduce(_.unionByName(_))
-      .withColumnRenamed("qid", "order_key")
+    KnnResult(resolvedParts.reduce(_.unionByName(_))
+      .withColumnRenamed("qid", "order_key"), Some(qe.getLong(0)))
+  }
+
+  /** Left-joins `perQuery`, a kNN consumer's result with at most one row
+    * per query, to `df` on order_key. It is broadcast (so `df`, spans and
+    * all, never shuffles) when `queryRows` rows of its schema fit Spark's
+    * spark.sql.autoBroadcastJoinThreshold; past it, at <= 0 or with no
+    * count, it is the shuffle join. The count is the kNN's: no job. */
+  def attach(df: DataFrame, perQuery: DataFrame, queryRows: Option[Long]): DataFrame = {
+    val limit = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val fits = queryRows.exists(n => limit > 0 &&
+      n.toDouble * perQuery.schema.defaultSize <= limit)
+    df.join(if (fits) broadcast(perQuery) else perQuery, Seq("order_key"), "left")
   }
 }
 
@@ -680,13 +709,13 @@ object NeighborClassifier {
     val counted = transform(array_distinct(vs), v => struct(
       size(filter(vs, x => x === v)).as("cnt"), (-v).as("negv")))
     val best = array_max(counted)
-    val winners = knn
+    val winners = knn.rows
       .withColumn("__cnt", best.getField("cnt"))
       .withColumn("__newcls", -best.getField("negv"))
       .filter(size(col("knn")) > 0 &&
         col("__cnt").cast("double") > size(col("knn")).cast("double") / 2.0)
       .select(col("order_key"), col("__newcls"))
-    df.join(winners, Seq("order_key"), "left")
+    KnnJoin.attach(df, winners, knn.queryRows)
       .withColumn(dim,
         when(col("__newcls").isNotNull && inDomain,
           col("__newcls").cast(df.schema(dim).dataType)).otherwise(col(dim)))
@@ -703,7 +732,7 @@ object NNDistance {
       s"nndistance: mode must be kth or avg, got mode = $mode")
     val knn = KnnJoin.knn(df.select("order_key", "x", "y", "z"), df, k + 1,
       valueCol = "order_key", cellSize = cellSize, selfJoin = true)
-    val dists = knn.select(col("order_key"),
+    val dists = knn.rows.select(col("order_key"),
       slice(col("knn"), lit(2), greatest(size(col("knn")) - 1, lit(0))).as("nbrs"))
     val v = mode match {
       // greatest(..., 1): ordinal 0 makes (try_)element_at THROW
@@ -714,7 +743,7 @@ object NNDistance {
       case "avg" => aggregate(col("nbrs"), lit(0.0),
         (acc, x) => acc + sqrt(x.getField("d2"))) / greatest(size(col("nbrs")), lit(1))
     }
-    df.join(dists.withColumn(outCol, v).select("order_key", outCol),
-      Seq("order_key"), "left")
+    KnnJoin.attach(df, dists.withColumn(outCol, v).select("order_key", outCol),
+      knn.queryRows)
   }
 }

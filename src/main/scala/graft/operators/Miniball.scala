@@ -114,7 +114,7 @@ object MiniballFilter {
     val nn = KnnJoin.knn(df.select("order_key", "x", "y", "z"), df, knn + 1,
       valueCol = "order_key", cellSize = cellSize, selfJoin = true)
     import spark.implicits._
-    val out = nn.select(col("order_key"), col("qx"), col("qy"), col("qz"),
+    val out = nn.rows.select(col("order_key"), col("qx"), col("qy"), col("qz"),
         slice(col("knn"), lit(2), greatest(size(col("knn")) - 1, lit(0))).as("nbrs"))
       .filter(size(col("nbrs")) > 0)
       .as[(Long, Double, Double, Double, Seq[Hit])]
@@ -125,6 +125,6 @@ object MiniballFilter {
         (k, if (denom <= 0) 0.0 else d / denom)
       }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble))
       .toDF("order_key", "miniball")
-    df.join(out, Seq("order_key"), "left")
+    KnnJoin.attach(df, out, nn.queryRows)
   }
 }

@@ -17,13 +17,13 @@ object Outlier {
     val knn = KnnJoin.knn(df.select("order_key", "x", "y", "z"), df, meanK + 1,
       valueCol = "order_key", cellSize = cellSize, selfJoin = true)
     val nbrs = slice(col("knn"), lit(2), greatest(size(col("knn")) - 1, lit(0)))
-    val meanDist = knn.select(col("order_key"),
+    val meanDist = knn.rows.select(col("order_key"),
       (aggregate(nbrs, lit(0.0), (acc, h) => acc + sqrt(h.getField("d2"))) /
         greatest(size(nbrs), lit(1))).as("__md"))
     val t = meanDist.agg(coalesce(avg("__md"), lit(0.0)),
       coalesce(stddev_samp(col("__md")), lit(0.0))).head() // null stddev at n=1
     val threshold = t.getDouble(0) + multiplier * t.getDouble(1)
-    val flagged = df.join(meanDist, Seq("order_key"), "left")
+    val flagged = KnnJoin.attach(df, meanDist, knn.queryRows)
     if (remove) flagged.filter(col("__md") < threshold).drop("__md")
     else flagged.withColumn("classification",
       when(col("__md") >= threshold, lit(noiseClass)).otherwise(col("classification")))
@@ -137,7 +137,7 @@ object Lof {
   def apply(df: DataFrame, minPts: Int = 10, cellSize: Double = 0.0): DataFrame = {
     val knn = KnnJoin.knn(df.select("order_key", "x", "y", "z"), df, minPts + 1,
       valueCol = "order_key", cellSize = cellSize, selfJoin = true)
-    val nbrs = knn.select(col("order_key"),
+    val nbrs = knn.rows.select(col("order_key"),
       slice(col("knn"), lit(2), greatest(size(col("knn")) - 1, lit(0))).as("nbrs"))
       // greatest(..., 1): a point with no neighbors (single-row input)
       // probes index 1 for a null k-distance — index 0 throws
@@ -156,11 +156,11 @@ object Lof {
       .groupBy("order_key").agg(avg("nbr_lrd").as("avg_nbr_lrd"))
       .join(lrd, Seq("order_key"))
       .select(col("order_key"), (col("avg_nbr_lrd") / col("lrd")).as("lof"))
-    df.join(nbrs.select(col("order_key"), col("kdist").as("nn_distance")),
-        Seq("order_key"), "left")
+    // the three dims meet on the slim order_key side, then attach once
+    KnnJoin.attach(df, nbrs.select(col("order_key"), col("kdist").as("nn_distance"))
       .join(lrd.select(col("order_key"),
         col("lrd").as("local_reachability_distance")), Seq("order_key"), "left")
-      .join(lof, Seq("order_key"), "left")
+      .join(lof, Seq("order_key"), "left"), knn.queryRows)
   }
 }
 
@@ -170,7 +170,7 @@ object Reciprocity {
   def apply(df: DataFrame, k: Int = 8, cellSize: Double = 0.0): DataFrame = {
     val knn = KnnJoin.knn(df.select("order_key", "x", "y", "z"), df, k + 1,
       valueCol = "order_key", cellSize = cellSize, selfJoin = true)
-    val edges = knn.select(col("order_key").as("src"),
+    val edges = knn.rows.select(col("order_key").as("src"),
         explode(slice(col("knn"), lit(2), greatest(size(col("knn")) - 1, lit(0)))).as("h"))
       .select(col("src"), col("h.cid").as("dst"))
     val back = edges.select(col("dst").as("src"), col("src").as("dst"))
@@ -179,7 +179,7 @@ object Reciprocity {
       .groupBy(col("src").as("order_key"))
       .agg((lit(100.0) * sum(when(col("__rec").isNull, 1).otherwise(0)) /
         count(lit(1))).as("reciprocity"))
-    df.join(rec, Seq("order_key"), "left")
+    KnnJoin.attach(df, rec, knn.queryRows)
   }
 }
 

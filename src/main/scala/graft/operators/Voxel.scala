@@ -18,6 +18,12 @@ object Voxel {
      floor((col("z") - oz) / cell).cast("long"))
   }
 
+  /** Voxel keys as the aggregate side of a voxel self-join names them,
+    * and the predicate pairing them with a row's own. */
+  private val aggKeys = Seq(col("__vx").as("__bx"), col("__vy").as("__by"), col("__vz").as("__bz"))
+  private val sameVoxel =
+    col("__vx") === col("__bx") && col("__vy") === col("__by") && col("__vz") === col("__bz")
+
   /** Origin from the minimum-order_key row: first-point coords - cell/2
     * (VoxelDownsizeFilter.cpp:131-136). */
   def firstPointOrigin(df: DataFrame, cell: Double): (Double, Double, Double) = {
@@ -37,11 +43,8 @@ object Voxel {
     val o = origin.getOrElse(firstPointOrigin(df, cell))
     val (vx, vy, vz) = voxelCols(df, cell, o)
     val keyed = df.withColumn("__vx", vx).withColumn("__vy", vy).withColumn("__vz", vz)
-    val firsts = keyed.groupBy("__vx", "__vy", "__vz")
-      .agg(min("order_key").as("__keep"))
-    val kept = keyed.join(firsts,
-      keyed("__vx") === firsts("__vx") && keyed("__vy") === firsts("__vy") &&
-        keyed("__vz") === firsts("__vz") && col("order_key") === col("__keep"),
+    val firsts = keyed.groupBy(aggKeys: _*).agg(min("order_key").as("__keep"))
+    val kept = keyed.join(firsts, sameVoxel && col("order_key") === col("__keep"),
       "left_semi")
     val out =
       if (mode == "center") kept
@@ -64,12 +67,10 @@ object Voxel {
     val dz = col("z") - ((col("__vz") + 0.5) * cell + o._3)
     val keyed = df.withColumn("__vx", vx).withColumn("__vy", vy).withColumn("__vz", vz)
       .withColumn("__d2", dx * dx + dy * dy + dz * dz)
-    val best = keyed.groupBy("__vx", "__vy", "__vz")
+    val best = keyed.groupBy(aggKeys: _*)
       .agg(min_by(col("order_key"), struct(col("__d2"), col("order_key"))).as("__keep"))
-    keyed.join(best,
-      keyed("__vx") === best("__vx") && keyed("__vy") === best("__vy") &&
-        keyed("__vz") === best("__vz") && col("order_key") === col("__keep"),
-      "left_semi").drop("__vx", "__vy", "__vz", "__d2")
+    keyed.join(best, sameVoxel && col("order_key") === col("__keep"), "left_semi")
+      .drop("__vx", "__vy", "__vz", "__d2")
   }
 
   /** filters.voxelcentroidnearestneighbor
@@ -87,13 +88,10 @@ object Voxel {
       (col("z") - col("__cz")) * (col("z") - col("__cz"))
     val withC = keyed.join(cent, Seq("__vx", "__vy", "__vz"))
       .withColumn("__d2", d2)
-    val best = withC.groupBy("__vx", "__vy", "__vz")
+    val best = withC.groupBy(aggKeys: _*)
       .agg(min_by(col("order_key"), struct(col("__d2"), col("order_key"))).as("__keep"))
-    withC.join(best.select(col("__vx").as("bx"), col("__vy").as("by"),
-        col("__vz").as("bz"), col("__keep")),
-      col("__vx") === col("bx") && col("__vy") === col("by") &&
-        col("__vz") === col("bz") && col("order_key") === col("__keep"),
-      "left_semi").drop("__vx", "__vy", "__vz", "__cx", "__cy", "__cz", "__d2")
+    withC.join(best, sameVoxel && col("order_key") === col("__keep"), "left_semi")
+      .drop("__vx", "__vy", "__vz", "__cx", "__cy", "__cz", "__d2")
   }
 }
 

@@ -180,7 +180,7 @@ object InfoKernel {
   * difference metrics between two clouds — one kNN join each way. */
 object CloudMetrics {
   private def nnD2(a: DataFrame, b: DataFrame): DataFrame =
-    KnnJoin.knn(a.select("order_key", "x", "y", "z"), b, 1, valueCol = "order_key")
+    KnnJoin.knn(a.select("order_key", "x", "y", "z"), b, 1, valueCol = "order_key").rows
       .select(col("order_key"),
         try_element_at(col("knn"), lit(1)).getField("d2").as("nn_d2"))
 

@@ -4,7 +4,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{Fixtures, Synth}
-import graft.operators.{KnnJoin, NeighborClassifier, NNDistance}
+import graft.operators.{EigenFeatures, KnnJoin, NeighborClassifier, NNDistance}
 
 class KnnSpec extends AnyFunSuite {
   import TestSpark._
@@ -47,12 +47,49 @@ class KnnSpec extends AnyFunSuite {
     }
   }
 
+  /** Shuffle exchanges of `df`'s executed plan, adaptive stages included. */
+  private def shuffleExchanges(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def walk(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: QueryStageExec => walk(s.plan)
+      case e: ShuffleExchangeExec => e +: walk(e.child)
+      case o => o.children.flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan)
+  }
+
+  /** Spark jobs `body` launches, counted under its own job group. */
+  private def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"knn-jobs-${System.nanoTime()}"
+    sc.setJobGroup(group, "job count", interruptOnCancel = false)
+    try body finally sc.clearJobGroup()
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  /** `body` with spark.sql.autoBroadcastJoinThreshold set to `v`. */
+  private def withThreshold[T](v: String)(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, v)
+    try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** All rows of `df` as sorted JSON strings: an order-free canon. */
+  private def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select(to_json(struct(df.columns.sorted.map(col): _*))).collect()
+      .map(_.getString(0)).sorted.toSeq
+
   /** Self-kNN of `df` as qid -> (its (qx, qy, qz), its
     * (d2, cid, v, x, y, z) hits). */
   private def selfKnnHits(df: org.apache.spark.sql.DataFrame, k: Int,
       broadcastLimit: Int, cellSize: Double = 0.0) =
     KnnJoin.knn(df.select("order_key", "x", "y", "z"), df, k,
-        cellSize = cellSize, broadcastLimit = broadcastLimit)
+        cellSize = cellSize, broadcastLimit = broadcastLimit).rows
       .collect().map { r =>
         r.getLong(0) -> ((r.getDouble(2), r.getDouble(3), r.getDouble(4)),
           r.getSeq[org.apache.spark.sql.Row](1).map(h => (h.getDouble(0),
@@ -64,7 +101,7 @@ class KnnSpec extends AnyFunSuite {
     * estimated cell size ring 1 resolves every query. */
   private def selfKnnShuffle(docs: org.apache.spark.sql.DataFrame): Shuffled =
     shuffled {
-      KnnJoin.knn(docs, docs, 5, selfJoin = true, broadcastLimit = 0).collect()
+      KnnJoin.knn(docs, docs, 5, selfJoin = true, broadcastLimit = 0).rows.collect()
     }
 
   test("grid kNN == brute force on 800 synthetic docs (broadcast AND " +
@@ -128,7 +165,7 @@ class KnnSpec extends AnyFunSuite {
     val df = pts.toDF("order_key", "x", "y", "z")
       .withColumn("classification", lit(1))
     val got = KnnJoin.knn(df.select("order_key", "x", "y", "z"), df, 3,
-        cellSize = 0.001)
+        cellSize = 0.001).rows
       .collect().map(r => r.getLong(0) ->
         r.getSeq[org.apache.spark.sql.Row](1).map(_.getLong(1)).toVector).toMap
     pts.foreach { case (qid, qx, qy, qz) =>
@@ -147,7 +184,7 @@ class KnnSpec extends AnyFunSuite {
     // cell size far smaller than typical NN distance -> rings > 1 needed
     // (broadcastLimit = 0 pins the distributed multi-ring machinery)
     val got = KnnJoin.knn(docs.select("order_key", "x", "y", "z"), docs, k,
-        cellSize = 20.0, broadcastLimit = 0)
+        cellSize = 20.0, broadcastLimit = 0).rows
       .collect().map { r =>
         r.getLong(0) -> r.getSeq[org.apache.spark.sql.Row](1).map(_.getLong(1)).toVector
       }.toMap
@@ -234,7 +271,7 @@ class KnnSpec extends AnyFunSuite {
       (1000L + i, 500.0 + i, 500.0, 0.0)).toDF("order_key", "x", "y", "z")
     for (bl <- Seq(0, KnnJoin.defaultBroadcastLimit)) { // both paths
       val out = KnnJoin.knn(q, cand, k = 3, valueCol = "classification",
-          broadcastLimit = bl)
+          broadcastLimit = bl).rows
         .collect().map(r => r.getLong(0) ->
           r.getSeq[org.apache.spark.sql.Row](1).map(_.getLong(1)).toVector).toMap
       assert(out.size == 5)
@@ -244,9 +281,9 @@ class KnnSpec extends AnyFunSuite {
     }
     // no candidates at all: each query row keeps its coordinates, with an
     // empty knn of the same hit type as a non-empty result
-    val none = KnnJoin.knn(q, cand.filter(lit(false)), k = 3)
+    val none = KnnJoin.knn(q, cand.filter(lit(false)), k = 3).rows
     assert(none.schema("knn").dataType.simpleString ==
-      KnnJoin.knn(q, cand, k = 3).schema("knn").dataType.simpleString)
+      KnnJoin.knn(q, cand, k = 3).rows.schema("knn").dataType.simpleString)
     assert(none.collect().map(r => (r.getLong(0), r.getSeq[Any](1).size,
         r.getDouble(2), r.getDouble(3), r.getDouble(4))).sortBy(_._1).toSeq ==
       (0 until 5).map(i => (1000L + i, 0, 500.0 + i, 500.0, 0.0)))
@@ -260,7 +297,7 @@ class KnnSpec extends AnyFunSuite {
   }
 
   test("kNN shuffle: the supercell cogroup is the only data shuffle " +
-      "(records <= 5.5x candidates; halo stage <= 4.2x)") {
+      "(records <= 3.25x candidates; halo stage <= 2.25x)") {
     val docs = Synth.docs(spark, 20000).cache()
     val n = docs.count()
     val s = selfKnnShuffle(docs)
@@ -268,15 +305,71 @@ class KnnSpec extends AnyFunSuite {
       f"largest stage ${s.maxStageRecords.toDouble / n}%.3f, bytes ${s.bytes}")
     // The halo stage writes each candidate once per supercell its
     // one-cell shell touches: 1.5x per axis in the interior, (1+2/S)^3
-    // = 3.4x. Here z in [0, 400) spans two ~313 m cells, and cell 0's
-    // shell also reaches the empty supercell below, so z contributes
-    // ~1.78x and the stage measures 4.05x. Each query is written once
-    // more (~5.05x in all). A per-ring re-join of the query side onto
-    // the partials shuffles both sides again (~7.05x).
-    assert(s.records <= 5.5 * n, s"kNN shuffled ${s.records} records for $n candidates")
-    assert(s.maxStageRecords <= 4.2 * n,
+    // = 3.4x. The shell is clamped to the supercells of the data's
+    // bbox: here z in [0, 400) spans two ~313 m cells inside one
+    // supercell, so z adds nothing, and the x/y edges of the 4 x 6 km
+    // box drop their outward copies. The stage measures 2.17x (4.05x
+    // unclamped). Each query is written once more (~3.17x in all). A
+    // per-ring re-join of the query side onto the partials shuffles
+    // both sides again.
+    assert(s.records <= 3.25 * n, s"kNN shuffled ${s.records} records for $n candidates")
+    assert(s.maxStageRecords <= 2.25 * n,
       s"halo stage wrote ${s.maxStageRecords} records for $n candidates")
     docs.unpersist()
+  }
+
+  test("attach: below the broadcast threshold no shuffle exchange carries " +
+      "spans (NeighborClassifier, EigenFeatures, the cogroup path); past " +
+      "it the shuffle join gives the same rows; the gate runs no job") {
+    val docs = Synth.docs(spark, 800, seed = 13)
+    def spansShuffled(df: org.apache.spark.sql.DataFrame): Boolean = {
+      df.collect() // the adaptive plan is final once its own query ran
+      shuffleExchanges(df).exists(_.output.exists(_.name == "spans"))
+    }
+    // the cogroup path's count is its candidate extent's, with no job
+    val r = KnnJoin.knn(docs.select("order_key", "x", "y", "z"), docs, 5,
+      selfJoin = true, broadcastLimit = 0)
+    assert(r.queryRows.contains(800L))
+    val perQuery = r.rows.select(col("order_key"), size(col("knn")).as("n"))
+    assert(jobsOf(KnnJoin.attach(docs, perQuery, r.queryRows)) == 0,
+      "the attach's gate must not launch a job")
+    // a consumer launches exactly its kNN's jobs: the attach adds no count
+    assert(jobsOf(NeighborClassifier(docs, k = 5)) ==
+      jobsOf(KnnJoin.knn(docs.select("order_key", "x", "y", "z"), docs, 5,
+        selfJoin = true)))
+    val consumers = Seq(
+      "cogroup" -> (() => KnnJoin.attach(docs, perQuery, r.queryRows)),
+      "NeighborClassifier" -> (() => NeighborClassifier(docs, k = 5)),
+      "EigenFeatures" -> (() => EigenFeatures(docs)))
+    for ((name, run) <- consumers) {
+      val below = run()
+      assert(!spansShuffled(below), s"$name shuffled spans below the threshold")
+      // -1 = never broadcast: the shuffle join, with identical rows
+      val (past, pastShuffled) = withThreshold("-1") {
+        val df = run()
+        (canon(df), spansShuffled(df))
+      }
+      assert(pastShuffled, s"$name took no shuffle join past the threshold")
+      assert(past == canon(below), s"$name rows differ across the gate")
+    }
+  }
+
+  test("NeighborClassifier output does not depend on the input partition " +
+      "count (1, 7, 64), on both sides of the broadcast threshold") {
+    val runs = for {
+      t <- Seq(None, Some("-1")); p <- Seq(1, 7, 64)
+    } yield {
+      val run = () => {
+        val out = NeighborClassifier(Synth.docs(spark, 800, seed = 17,
+          numPartitions = p), k = 5)
+        // the broadcast attach keeps the input's partitioning
+        if (t.isEmpty) assert(out.rdd.getNumPartitions == p, s"partitions at p=$p")
+        canon(out)
+      }
+      t.fold(run())(withThreshold(_)(run()))
+    }
+    assert(runs.distinct.size == 1, "NeighborClassifier output moved with " +
+      "the input partition count or the attach side")
   }
 
   test("kNN shuffle bytes do not depend on the spans payload (1x vs 8x)") {

@@ -57,7 +57,8 @@ class SkewSpec extends AnyFunSuite {
     val pts = skewed.select("order_key", "x", "y", "z").cache()
     val h = 500.0 // dense blob spans 100m -> one 500m cell holds ~9000
     val cap = 1000
-    val hot = graft.operators.KnnJoin.detectHotSupercells(pts, h, cap)
+    val hot = graft.operators.KnnJoin.detectHotSupercells(pts, h, cap,
+      graft.operators.KnnJoin.extent(pts))
     assert(hot.nonEmpty, "dense supercell must be detected as hot")
     // salt factors bound each (cell, salt) cogroup group to ~cap: the
     // task-input bound AQE cannot provide for Dataset.cogroup
@@ -66,7 +67,7 @@ class SkewSpec extends AnyFunSuite {
     assert(maxGroup <= 2 * cap, s"salted group bound $maxGroup vs cap $cap")
     // exactness THROUGH the salted path (cap forces salting at this h)
     val knnSalted = graft.operators.KnnJoin.knn(pts, skewed, 3,
-      cellSize = h, maxCellCandidates = cap, broadcastLimit = 0)
+      cellSize = h, maxCellCandidates = cap, broadcastLimit = 0).rows
     val all = pts.collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
     // each row carries its query's coordinates and each hit its cid's
@@ -89,7 +90,7 @@ class SkewSpec extends AnyFunSuite {
   test("kNN on the skewed cloud stays correct (dense cell = bounded task)") {
     val pts = skewed.select("order_key", "x", "y", "z", "classification")
     val knn = graft.operators.KnnJoin.knn(
-      pts.select("order_key", "x", "y", "z"), pts, 3, broadcastLimit = 0)
+      pts.select("order_key", "x", "y", "z"), pts, 3, broadcastLimit = 0).rows
     assert(knn.count() == 10000)
     // spot-check 30 hot-cell points against brute force
     val all = pts.select("order_key", "x", "y", "z").collect()
