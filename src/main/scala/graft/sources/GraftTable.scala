@@ -1,7 +1,14 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.UUID
 import scala.jdk.CollectionConverters._
@@ -33,9 +40,11 @@ import scala.jdk.CollectionConverters._
   * its manifests, prune FILES by bbox/rows stats against the predicate,
   * and scan only survivors — manifest-level pruning one level below
   * CellStore's partition-value pruning (EptReader.cpp:200-269 page walk).
-  * Manifests are parquet: at 10^12-doc scale the file list is itself a
-  * distributed table; only surviving paths are collected (as Iceberg's
-  * planner does).
+  * Manifests are small parquet files (one row per data file) that the
+  * DRIVER reads and writes directly, as Iceberg plans scans from its
+  * manifest files: metadata questions (file lists, box prunes, counts,
+  * keep-manifests) are plain Scala over `FileEntry`s and launch no Spark
+  * job; only data files are scanned by Spark.
   */
 object GraftTable {
 
@@ -150,8 +159,7 @@ object GraftTable {
   private def mergeManifestFiles(spark: SparkSession, root: String,
       manifests: Seq[String], commitId: String): String = {
     val merged = s"$root/manifests/m-$commitId-merged.parquet"
-    readManifests(spark, manifests).repartition(1)
-      .write.mode("overwrite").parquet(merged)
+    writeManifest(spark, merged, entries(spark, manifests))
     merged
   }
 
@@ -207,10 +215,10 @@ object GraftTable {
 
     // 2. per-file stats come from the parquet FOOTERS of the staged
     //    files (row-group min/max/count cover exactly what the manifest
-    //    needs) — a distributed metadata-only pass, no second scan of
-    //    the data just written. This is what Iceberg's writer-side stat
-    //    collection reduces to after the fact.
-    import spark.implicits._
+    //    needs) — one distributed footer pass, no second scan of the
+    //    data just written, collected and written by the driver. This is
+    //    what Iceberg's writer-side stat collection reduces to after the
+    //    fact.
     // the session's Hadoop conf rides along as serializable (key, value)
     // pairs — a bare `new Configuration()` on the executor would miss
     // spark.hadoop.* filesystem settings (s3a credentials, endpoints)
@@ -222,13 +230,11 @@ object GraftTable {
       while (it.hasNext) { val e = it.next(); buf += ((e.getKey, e.getValue)) }
       buf.toArray
     }
-    val statsDf = spark.createDataset(spark.sparkContext
-        .parallelize(adopted, 1 max (adopted.size min 64))
-        .map(FooterStats(confProps)))
-      .toDF("path", "rows", "min_x", "max_x", "min_y", "max_y",
-        "min_key", "max_key", "nulls_xy")
+    val stats = spark.sparkContext
+      .parallelize(adopted, 1 max (adopted.size min 64))
+      .map(FooterStats(confProps)).collect()
     val manifest = s"$root/manifests/m-$commitId.parquet"
-    statsDf.repartition(1).write.mode("overwrite").parquet(manifest)
+    writeManifest(spark, manifest, stats.toIndexedSeq)
     // the committed schema rides in its own file (schema json contains
     // quotes; the snapshot json stays regex-parsable by referencing it)
     val schemaPath = s"$root/manifests/m-$commitId.schema.json"
@@ -305,20 +311,16 @@ object GraftTable {
     * ClosureCleaner cannot always load lambda class bytes
     * ("capturingClassReader is null"); named classes skip cleaning. */
   private case class FooterStats(confProps: Array[(String, String)])
-      extends (String =>
-      (String, Long, Option[Double], Option[Double], Option[Double],
-       Option[Double], Option[Long], Option[Long], Option[Long])) with Serializable {
+      extends (String => FileEntry) with Serializable {
     def apply(path: String) = footerStats(path, confProps)
   }
 
   private def footerStats(path: String, confProps: Array[(String, String)])
-      : (String, Long, Option[Double], Option[Double], Option[Double],
-         Option[Double], Option[Long], Option[Long], Option[Long]) = {
-    val conf = new org.apache.hadoop.conf.Configuration()
+      : FileEntry = {
+    // confProps already hold every default resource's keys: skip loading them
+    val conf = new org.apache.hadoop.conf.Configuration(false)
     confProps.foreach { case (k, v) => conf.set(k, v) }
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(path), conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val r = openParquet(new org.apache.hadoop.fs.Path(path), conf)
     try {
       val blocks = r.getFooter.getBlocks.asScala.toSeq
       val rows = blocks.map(_.getRowCount).sum
@@ -369,21 +371,51 @@ object GraftTable {
       }
       val (x, y, k) = (range("x"), range("y"), range("order_key"))
       val nxy = for (a <- nullsOf("x"); b <- nullsOf("y")) yield a + b
-      (path, rows,
+      FileEntry(path, rows,
         x.map(_._1.doubleValue), x.map(_._2.doubleValue),
         y.map(_._1.doubleValue), y.map(_._2.doubleValue),
         k.map(_._1.longValue), k.map(_._2.longValue), nxy)
     } finally r.close()
   }
 
-  /** The manifest file schema, pinned EXPLICITLY on every manifest read:
-    * the format grew a 9th column (nulls_xy), and tables written by the
-    * previous revision carry 8-column manifests forward in later
-    * snapshots. Schema inference over the mixed set resolves from an
-    * arbitrary file — 'nulls_xy' would nondeterministically fail
-    * analysis. With the pinned schema a missing column surfaces as null,
-    * which every consumer already routes to the exact scan path. */
-  private val manifestSchema = {
+  /** One data file of a snapshot, as its manifest row lists it. A stat is
+    * None where the manifest holds null: the commit had no such column
+    * (x/y/order_key), or, for `nullsXy`, the count is unknown (a legacy
+    * 8-column manifest). */
+  case class FileEntry(path: String, rows: Long,
+      minX: Option[Double], maxX: Option[Double],
+      minY: Option[Double], maxY: Option[Double],
+      minKey: Option[Long], maxKey: Option[Long], nullsXy: Option[Long]) {
+
+    /** The stats rectangle meets the closed box. Null stats never do: the
+      * commit had no x/y, so none of its rows can pass a bbox residual. */
+    def intersects(minx: Double, miny: Double, maxx: Double, maxy: Double)
+        : Boolean = bbox.exists { case (a, b, c, d) =>
+      le(a, maxx) && le(minx, b) && le(c, maxy) && le(miny, d) }
+
+    /** The stats rectangle lies inside the closed box and the file
+      * provably holds no null coordinate, so every row counts. */
+    def containedIn(minx: Double, miny: Double, maxx: Double, maxy: Double)
+        : Boolean = nullsXy.contains(0L) && bbox.exists { case (a, b, c, d) =>
+      le(minx, a) && le(b, maxx) && le(miny, c) && le(d, maxy) }
+
+    private def bbox = for (a <- minX; b <- maxX; c <- minY; d <- maxY)
+      yield (a, b, c, d)
+
+    def toRow: Row = Row.fromSeq(path +: rows +: Seq(minX, maxX, minY, maxY,
+      minKey, maxKey, nullsXy).map(_.getOrElse(null)))
+  }
+
+  /** Spark SQL's double order, which the manifest prunes have always used:
+    * NaN equals NaN and sorts above +Inf (IEEE comparisons with NaN are
+    * all false), and -0.0 equals 0.0. */
+  private def le(a: Double, b: Double): Boolean =
+    a == b || java.lang.Double.compare(a, b) <= 0
+
+  /** The manifest columns, as `manifests` returns them. Older manifests
+    * have 8 columns (no nulls_xy); their entries read it as None, which
+    * every consumer routes to the exact scan path. */
+  val manifestSchema = {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("path", StringType), StructField("rows", LongType),
@@ -393,87 +425,148 @@ object GraftTable {
       StructField("nulls_xy", LongType)))
   }
 
-  private def readManifests(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.schema(manifestSchema).parquet(paths: _*)
+  private val manifestType = org.apache.parquet.schema.MessageTypeParser
+    .parseMessageType("""message manifest {
+      optional binary path (STRING); required int64 rows;
+      optional double min_x; optional double max_x;
+      optional double min_y; optional double max_y;
+      optional int64 min_key; optional int64 max_key;
+      optional int64 nulls_xy; }""")
+
+  /** The entries of manifest files `paths`, read on the driver with
+    * parquet-mr: no Spark job. A path may be one parquet file (written by
+    * `writeManifest`) or a Spark-written directory of part files (tables
+    * committed before manifests moved to the driver). */
+  def entries(spark: SparkSession, paths: Seq[String]): IndexedSeq[FileEntry] = {
+    val conf = spark.sessionState.newHadoopConf()
+    paths.toIndexedSeq.flatMap { m =>
+      val p = new org.apache.hadoop.fs.Path(m)
+      val fs = p.getFileSystem(conf)
+      val files =
+        if (!fs.getFileStatus(p).isDirectory) Seq(p)
+        else fs.listStatus(p).toSeq.map(_.getPath).filterNot(f =>
+          f.getName.startsWith("_") || f.getName.startsWith(".")).sortBy(_.getName)
+      files.flatMap { f =>
+        val r = openParquet(f, conf)
+        try {
+          val schema = r.getFooter.getFileMetaData.getSchema
+          val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(schema)
+          Iterator.continually(r.readNextRowGroup()).takeWhile(_ != null).flatMap { rg =>
+            val rows = io.getRecordReader(rg, new GroupRecordConverter(schema))
+            Iterator.fill(rg.getRowCount.toInt)(entryOf(rows.read()))
+          }.toVector
+        } finally r.close()
+      }
+    }
+  }
+
+  /** Read options come from `conf`: without them parquet-mr builds a
+    * default Hadoop Configuration per file, which re-parses its XML
+    * resources (about 15 ms, more than reading a manifest). */
+  private def openParquet(f: org.apache.hadoop.fs.Path,
+      conf: org.apache.hadoop.conf.Configuration): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(f, conf),
+      HadoopReadOptions.builder(conf).build())
+
+  private def entryOf(g: Group): FileEntry = {
+    def has(n: String) = g.getType.containsField(n) && g.getFieldRepetitionCount(n) > 0
+    def d(n: String) = if (has(n)) Some(g.getDouble(n, 0)) else None
+    def l(n: String) = if (has(n)) Some(g.getLong(n, 0)) else None
+    FileEntry(g.getString("path", 0), g.getLong("rows", 0), d("min_x"),
+      d("max_x"), d("min_y"), d("max_y"), l("min_key"), l("max_key"), l("nulls_xy"))
+  }
+
+  /** Writes `es` from the driver as the single parquet file `path` (the
+    * session conf spares parquet-mr a default Configuration, as in
+    * `openParquet`). */
+  private def writeManifest(spark: SparkSession, path: String,
+      es: Seq[FileEntry]): Unit = {
+    val w = ExampleParquetWriter.builder(
+        new org.apache.parquet.io.LocalOutputFile(Paths.get(path)))
+      .withConf(spark.sessionState.newHadoopConf()).withType(manifestType)
+      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE).build()
+    val groups = new SimpleGroupFactory(manifestType)
+    try es.foreach { e =>
+      val g = groups.newGroup().append("path", e.path).append("rows", e.rows)
+      Seq("min_x" -> e.minX, "max_x" -> e.maxX, "min_y" -> e.minY,
+        "max_y" -> e.maxY).foreach { case (n, v) => v.foreach(g.append(n, _)) }
+      Seq("min_key" -> e.minKey, "max_key" -> e.maxKey, "nulls_xy" -> e.nullsXy)
+        .foreach { case (n, v) => v.foreach(g.append(n, _)) }
+      w.write(g)
+    } finally w.close()
+  }
+
+  /** `asOf`, or the head version; fails on an empty table. */
+  private def resolve(root: String, asOf: Option[Int]): Int = {
+    val v = asOf.getOrElse(currentVersion(root))
+    require(v > 0, s"graft table $root is empty (no committed snapshot)")
+    v
+  }
+
+  /** The data files of snapshot `asOf` (default: head). */
+  private[sources] def entriesAt(spark: SparkSession, root: String,
+      asOf: Option[Int]): IndexedSeq[FileEntry] =
+    entries(spark, snapshot(root, resolve(root, asOf)).manifests)
+
+  /** `es` as a local (LocalRelation) frame with `manifestSchema`:
+    * filtering and collecting it launches no job. */
+  private[sources] def manifestFrame(spark: SparkSession,
+      es: Seq[FileEntry]): DataFrame =
+    spark.createDataFrame(es.map(_.toRow).asJava, manifestSchema)
 
   /** The manifest table of a snapshot (default: head). */
   def manifests(spark: SparkSession, root: String,
-      asOf: Option[Int] = None): DataFrame = {
-    val v = asOf.getOrElse(currentVersion(root))
-    require(v > 0, s"graft table $root is empty (no committed snapshot)")
-    readManifests(spark, snapshot(root, v).manifests)
-  }
+      asOf: Option[Int] = None): DataFrame =
+    manifestFrame(spark, entriesAt(spark, root, asOf))
+
+  private def pinnedSchema(root: String, v: Int)
+      : Option[org.apache.spark.sql.types.StructType] =
+    snapshot(root, v).schema.filter(p => Files.exists(Paths.get(p))).map(p =>
+      org.apache.spark.sql.types.DataType
+        .fromJson(new String(Files.readAllBytes(Paths.get(p)), "UTF-8"))
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
 
   /** Reader with the snapshot's pinned schema applied (files predating
     * a column addition surface it as nulls; time travel reads with the
     * schema of its era). Pre-evolution snapshots fall back to parquet
     * schema inference. */
   private def readerFor(spark: SparkSession, root: String,
-      asOf: Option[Int]): org.apache.spark.sql.DataFrameReader = {
-    val v = asOf.getOrElse(currentVersion(root))
-    require(v > 0, s"graft table $root is empty (no committed snapshot)")
-    snapshot(root, v).schema match {
-      case Some(p) if Files.exists(Paths.get(p)) =>
-        spark.read.schema(org.apache.spark.sql.types.DataType
-          .fromJson(new String(Files.readAllBytes(Paths.get(p)), "UTF-8"))
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-      case _ => spark.read
-    }
-  }
-
-  /** Empty frame carrying the snapshot's pinned schema, or None for a
-    * pre-evolution snapshot (no schema json). */
-  private def pinnedEmpty(spark: SparkSession, root: String, v: Int)
-      : Option[DataFrame] =
-    snapshot(root, v).schema.filter(p => Files.exists(Paths.get(p))).map { p =>
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.DataType
-          .fromJson(new String(Files.readAllBytes(Paths.get(p)), "UTF-8"))
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-    }
+      asOf: Option[Int]): org.apache.spark.sql.DataFrameReader =
+    pinnedSchema(root, resolve(root, asOf)).fold(spark.read)(spark.read.schema)
 
   /** Snapshot schema as a StructType without building a DataFrame: the
     * pinned schema json when the snapshot carries one, otherwise parquet
     * inference over the snapshot's files (pre-evolution tables). Used by
     * the DataSource V2 surface's inferSchema. */
   def tableSchema(spark: SparkSession, root: String,
-      asOf: Option[Int] = None): org.apache.spark.sql.types.StructType = {
-    val v = asOf.getOrElse(currentVersion(root))
-    require(v > 0, s"graft table $root is empty (no committed snapshot)")
-    snapshot(root, v).schema match {
-      case Some(p) if Files.exists(Paths.get(p)) =>
-        org.apache.spark.sql.types.DataType
-          .fromJson(new String(Files.readAllBytes(Paths.get(p)), "UTF-8"))
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-      case _ => read(spark, root, asOf).schema
-    }
-  }
+      asOf: Option[Int] = None): org.apache.spark.sql.types.StructType =
+    pinnedSchema(root, resolve(root, asOf))
+      .getOrElse(read(spark, root, asOf).schema)
 
   /** Read an explicit file subset of a snapshot with the snapshot's
-    * pinned schema (the V2 scan path's entry: manifest pruning picks the
-    * files, this opens them). */
+    * pinned schema: every pruned read (readBox, countBox, deleteBox,
+    * upsert, readIncremental, the V2 scan) opens its files here. No files
+    * gives an empty local frame with the pinned schema; a pre-evolution
+    * snapshot (no schema json) infers it from a lazy full read. */
   private[sources] def readFiles(spark: SparkSession, root: String,
       asOf: Option[Int], files: Seq[String]): DataFrame = {
-    val v = asOf.getOrElse(currentVersion(root))
-    if (files.isEmpty)
-      pinnedEmpty(spark, root, v).getOrElse(
-        read(spark, root, asOf).filter(lit(false)))
-    else readerFor(spark, root, asOf).parquet(files: _*)
+    val v = resolve(root, asOf)
+    if (files.nonEmpty) readerFor(spark, root, Some(v)).parquet(files: _*)
+    else pinnedSchema(root, v).fold(read(spark, root, Some(v)).filter(lit(false)))(
+      s => spark.createDataFrame(java.util.List.of[Row](), s))
   }
 
   /** Full-table read of a snapshot. A snapshot referencing zero data
     * files (e.g. an empty first streaming microbatch was committed) is a
     * valid empty table, not a schema-inference error. */
   def read(spark: SparkSession, root: String, asOf: Option[Int] = None): DataFrame = {
-    val v = asOf.getOrElse(currentVersion(root))
-    val files = manifests(spark, root, asOf).select("path")
-      .collect().map(_.getString(0)).toIndexedSeq
-    if (files.isEmpty)
-      pinnedEmpty(spark, root, v).getOrElse(throw new IllegalStateException(
+    val v = resolve(root, asOf)
+    val files = entriesAt(spark, root, Some(v)).map(_.path)
+    if (files.isEmpty && pinnedSchema(root, v).isEmpty)
+      throw new IllegalStateException(
         s"graft table $root v$v references no data files and pins no " +
-        "schema (pre-evolution empty table) — nothing to infer a schema from"))
-    else readerFor(spark, root, asOf).parquet(files: _*)
+        "schema (pre-evolution empty table) — nothing to infer a schema from")
+    readFiles(spark, root, Some(v), files)
   }
 
   /** Incremental read: exactly the rows APPENDED after `fromVersion`, up
@@ -499,42 +592,29 @@ object GraftTable {
       if (fromVersion == 0) Set.empty
       else snapshot(root, fromVersion).manifests.toSet
     val toS = snapshot(root, to)
-    val missing = fromM -- toS.manifests.toSet
-    if (missing.nonEmpty) {
-      // the manifest-set identity broke — but a metadata-only manifest
-      // merge (rewriteManifests / commit auto-merge) carries every DATA
-      // file forward, so the append delta is still exactly the file-set
-      // difference. Only a history that DROPPED data files (overwrite,
-      // compaction, deleteBox, upsert — all rewrite rows between files)
-      // makes the incremental read undefined, and that stays loud.
-      val fromFiles = readManifests(spark, snapshot(root, fromVersion).manifests)
-        .select("path").collect().map(_.getString(0)).toSet
-      val toFiles = readManifests(spark, toS.manifests)
-        .select("path").collect().map(_.getString(0)).toSet
-      val dropped = fromFiles -- toFiles
-      if (dropped.nonEmpty) throw new IllegalStateException(
-        s"graft table $root: history v$fromVersion -> v$to is not append-only " +
-        s"(${dropped.size} data file(s) of v$fromVersion were dropped/rewritten " +
-        "by an overwrite, compaction, delete or upsert) — incremental read " +
-        "is undefined across that boundary; full-read the target snapshot")
-      val deltaFiles = (toFiles -- fromFiles).toIndexedSeq.sorted
-      return if (deltaFiles.isEmpty)
-        pinnedEmpty(spark, root, to)
-          .getOrElse(read(spark, root, Some(to)).filter(lit(false)))
-      else readerFor(spark, root, Some(to)).parquet(deltaFiles: _*)
-    }
-    val delta = toS.manifests.filterNot(fromM)
-    // same-version range (the steady-state "no new data" poll): build the
-    // empty frame from the pinned schema without collecting the live file
-    // list; pre-evolution tables fall back to a lazy filter(false) read
-    if (delta.isEmpty) return pinnedEmpty(spark, root, to)
-      .getOrElse(read(spark, root, Some(to)).filter(lit(false)))
-    val files = readManifests(spark, delta).select("path")
-      .collect().map(_.getString(0)).toIndexedSeq
-    if (files.isEmpty) // appended manifests may list zero files (empty commit)
-      return pinnedEmpty(spark, root, to)
-        .getOrElse(read(spark, root, Some(to)).filter(lit(false)))
-    readerFor(spark, root, Some(to)).parquet(files: _*)
+    val files =
+      if ((fromM -- toS.manifests).isEmpty)
+        entries(spark, toS.manifests.filterNot(fromM)).map(_.path)
+      else {
+        // the manifest-set identity broke — but a metadata-only manifest
+        // merge (rewriteManifests / commit auto-merge) carries every DATA
+        // file forward, so the append delta is still exactly the file-set
+        // difference. Only a history that DROPPED data files (overwrite,
+        // compaction, deleteBox, upsert — all rewrite rows between files)
+        // makes the incremental read undefined, and that stays loud.
+        val fromFiles = entries(spark, fromM.toSeq).map(_.path).toSet
+        val toFiles = entries(spark, toS.manifests).map(_.path).toSet
+        val dropped = fromFiles -- toFiles
+        if (dropped.nonEmpty) throw new IllegalStateException(
+          s"graft table $root: history v$fromVersion -> v$to is not append-only " +
+          s"(${dropped.size} data file(s) of v$fromVersion were dropped/rewritten " +
+          "by an overwrite, compaction, delete or upsert) — incremental read " +
+          "is undefined across that boundary; full-read the target snapshot")
+        (toFiles -- fromFiles).toIndexedSeq.sorted
+      }
+    // an empty delta (same-version range, or appended manifests listing
+    // zero files) is the pinned-schema empty frame
+    readFiles(spark, root, Some(to), files)
   }
 
   /** Checkpointed incremental consumption — the table-level resume loop a
@@ -632,24 +712,18 @@ object GraftTable {
     * nothing returns the head unchanged with filesRewritten = 0. */
   def deleteBox(spark: SparkSession, root: String, minx: Double,
       miny: Double, maxx: Double, maxy: Double): (Int, Long, Long) = {
-    val base = currentVersion(root)
-    require(base > 0, s"graft table $root is empty (no committed snapshot)")
-    val m = readManifests(spark, snapshot(root, base).manifests)
-    val total = m.count()
-    val touch = col("min_x") <= maxx && col("max_x") >= minx &&
-      col("min_y") <= maxy && col("max_y") >= miny
-    val touched = m.filter(touch).select("path")
-      .collect().map(_.getString(0)).toIndexedSeq
-    if (touched.isEmpty) return (base, 0L, total)
+    val base = resolve(root, None)
+    val es = entriesAt(spark, root, Some(base))
+    val (touched, kept) = es.partition(_.intersects(minx, miny, maxx, maxy))
+    if (touched.isEmpty) return (base, 0L, es.size.toLong)
     val commitId = UUID.randomUUID().toString.take(8)
     val keepManifest = s"$root/manifests/m-$commitId-keep.parquet"
-    m.filter(not(coalesce(touch, lit(false)))).repartition(1)
-      .write.mode("overwrite").parquet(keepManifest)
+    writeManifest(spark, keepManifest, kept)
     // survivors of the touched files; rows with null x/y cannot be
     // inside the box, so a null predicate keeps them (coalesce false)
     val inside = col("x") >= minx && col("x") <= maxx &&
       col("y") >= miny && col("y") <= maxy
-    val survivors = readerFor(spark, root, Some(base)).parquet(touched: _*)
+    val survivors = readFiles(spark, root, Some(base), touched.map(_.path))
       .filter(not(coalesce(inside, lit(false))))
     val (newManifest, schemaPath) = stageCommit(survivors, root, commitId)
     val v = allocate(root, commitId, schemaPath, None, parent => {
@@ -658,17 +732,17 @@ object GraftTable {
         "retry the delete on the new head")
       Seq(keepManifest, newManifest)
     })
-    (v, touched.size.toLong, total)
+    (v, touched.size.toLong, es.size.toLong)
   }
 
   /** Copy-on-write upsert by key — the CDC write path that completes the
     * DML triple (append / deleteBox / upsert): rows of `updates` REPLACE
     * existing rows with the same `keyCol` value; keys not present insert.
     * Only data files that provably may hold an updated key are rewritten:
-    * the manifest's (min_key, max_key) interval is range-joined against
-    * the DISTINCT update keys (manifests broadcast — the small side of a
-    * theta join), so on a key-banded layout the rewrite set is the files
-    * the delta actually touches, not the table. Manifest key stats exist
+    * each file's (min_key, max_key) interval is range-joined against the
+    * update keys (the driver's entries, broadcast as a local relation —
+    * the small side of a theta join), so on a key-banded layout the
+    * rewrite set is the files the delta actually touches, not the table. Manifest key stats exist
     * for order_key only, so the prune applies ONLY when keyCol is
     * order_key; any other key rewrites all files (degraded, never
     * wrong). Pruning is conservative and exact: a file is untouched only
@@ -694,8 +768,7 @@ object GraftTable {
       case Some(v) => return (v, 0L, 0L) // replayed: already committed
       case None =>
     }
-    val base = currentVersion(root)
-    require(base > 0, s"graft table $root is empty (no committed snapshot)")
+    val base = resolve(root, None)
     // type-conflict guard, same check the append path runs in
     // mergeSchema: the union below applies Spark's set-operation type
     // coercion, so a delta whose shared column differs in type (int vs
@@ -727,41 +800,36 @@ object GraftTable {
     require(nKeys == nDistinct,
       s"upsert updates carry duplicate $keyCol values ($nKeys rows, " +
       s"$nDistinct distinct) — resolve to one row per key first")
-    val m = readManifests(spark, snapshot(root, base).manifests)
-    val total = m.count()
-    // distributed file-level prune: one broadcast theta join of the tiny
-    // manifest table against the delta's keys, never a key collect.
+    val es = entriesAt(spark, root, Some(base))
+    // file-level prune: one broadcast theta join of the driver's entries
+    // against the delta's keys, never a key collect.
     // Manifest min_key/max_key are ORDER_KEY footer stats (footerStats
     // stats x/y/order_key only), so interval pruning is sound ONLY for
     // keyCol == order_key — any other key column falls back to rewriting
     // every file, because pruning on the wrong column's interval could
     // skip files holding stale versions of updated keys and silently
     // leave duplicate rows. Degraded, never wrong.
-    val touched =
+    val touchedPaths: Set[String] =
       if (keyCol == "order_key")
         keys.join(
-            broadcast(m.select(col("path"), col("min_key"), col("max_key"))),
+            broadcast(manifestFrame(spark, es)
+              .select(col("path"), col("min_key"), col("max_key"))),
             col(keyCol) >= col("min_key") && col(keyCol) <= col("max_key"))
-          .select("path").distinct().collect().map(_.getString(0)).toIndexedSeq
-      else m.select("path").collect().map(_.getString(0)).toIndexedSeq
+          .select("path").distinct().collect().map(_.getString(0)).toSet
+      else es.map(_.path).toSet
+    val (touched, kept) = es.partition(e => touchedPaths(e.path))
     val commitId = UUID.randomUUID().toString.take(8)
     val keepManifest = s"$root/manifests/m-$commitId-keep.parquet"
-    // anti-join, not an In-list literal: a wide delta can touch tens of
-    // thousands of files and O(literals) plan construction doesn't scale
-    import spark.implicits._
-    m.join(broadcast(touched.toDF("path")), Seq("path"), "left_anti")
-      .repartition(1).write.mode("overwrite").parquet(keepManifest)
+    writeManifest(spark, keepManifest, kept)
     // survivors always union against the BASE schema (via the touched
-    // files, or an empty base read when nothing is touched): the new
-    // snapshot's pinned schema must be base ∪ delta — a pure-insert
-    // delta missing a base column must not narrow the table's schema
-    // (columns evolve by addition, never silent drop)
-    val survivors =
-      (if (touched.isEmpty)
-         read(spark, root, Some(base)).filter(lit(false))
-       else readerFor(spark, root, Some(base)).parquet(touched: _*)
-         .join(keys, Seq(keyCol), "left_anti"))
-        .unionByName(updates, allowMissingColumns = true)
+    // files, or the pinned-schema empty frame when nothing is touched):
+    // the new snapshot's pinned schema must be base ∪ delta — a
+    // pure-insert delta missing a base column must not narrow the
+    // table's schema (columns evolve by addition, never silent drop)
+    val scan = readFiles(spark, root, Some(base), touched.map(_.path))
+    val survivors = (if (touched.isEmpty) scan
+       else scan.join(keys, Seq(keyCol), "left_anti"))
+      .unionByName(updates, allowMissingColumns = true)
     val (newManifest, schemaPath) = stageCommit(survivors, root, commitId)
     val v = allocate(root, commitId, schemaPath, tag, parent => {
       if (parent != base) throw new java.util.ConcurrentModificationException(
@@ -769,7 +837,7 @@ object GraftTable {
         "retry on the new head")
       Seq(keepManifest, newManifest)
     })
-    (v, touched.size.toLong, total)
+    (v, touched.size.toLong, es.size.toLong)
     } finally keys.unpersist(false)
   }
 
@@ -796,7 +864,7 @@ object GraftTable {
         p.getFileName.toString.stripPrefix("v").stripSuffix(".json").toInt))
       .toSeq).foreach(Files.delete(_))
     // live set = every manifest of every surviving snapshot + every data
-    // path those manifests list (one distributed read, not a driver loop)
+    // path those manifests list
     def canon(s: String): String = {
       // manifest `path` values are input_file_name() URIs; snapshot
       // manifest entries are plain paths — normalize both to one form
@@ -808,10 +876,7 @@ object GraftTable {
     // schema jsons live under manifests/ too — referenced ones are live
     val liveManifests =
       (liveManifestSeq ++ keptSnaps.flatMap(_.schema)).map(canon).toSet
-    val liveData: Set[String] =
-      if (liveManifestSeq.isEmpty) Set.empty
-      else readManifests(spark, liveManifestSeq)
-        .select("path").collect().map(r => canon(r.getString(0))).toSet
+    val liveData = entries(spark, liveManifestSeq.distinct).map(e => canon(e.path)).toSet
     var deleted = 0
     // orphanGraceMs: a file younger than the grace window is NEVER swept
     // even when unreferenced — it may belong to a commit that has staged
@@ -839,26 +904,20 @@ object GraftTable {
 
   /** Bbox read with manifest-level FILE pruning: only files whose stats
     * rectangle intersects the box are opened; the exact predicate stays
-    * as a residual. Returns (df, filesRead, filesTotal) so callers can
+    * as a residual. The prune runs on the driver's entries, so the call
+    * launches no job. Returns (df, filesRead, filesTotal) so callers can
     * assert the pruning actually happened. */
   def readBox(spark: SparkSession, root: String, minx: Double, miny: Double,
       maxx: Double, maxy: Double, asOf: Option[Int] = None)
       : (DataFrame, Long, Long) = {
-    val m = manifests(spark, root, asOf)
-    val total = m.count()
-    // NULL stats only arise when that commit HAD no x/y columns (stats
-    // are computed from the committed rows themselves), so none of its
-    // rows could pass the bbox residual — pruning them is exact, not a
-    // guess. A null-failing predicate is therefore the wanted behavior.
-    val hits = m.filter(col("min_x") <= maxx && col("max_x") >= minx &&
-        col("min_y") <= maxy && col("max_y") >= miny)
-      .select("path").collect().map(_.getString(0)).toIndexedSeq
-    val df =
-      if (hits.isEmpty) read(spark, root, asOf).filter(lit(false))
-      else readerFor(spark, root, asOf).parquet(hits: _*)
-        .filter(col("x") >= minx && col("x") <= maxx &&
-          col("y") >= miny && col("y") <= maxy)
-    (df, hits.length.toLong, total)
+    val v = resolve(root, asOf)
+    val es = entriesAt(spark, root, Some(v))
+    val hits = es.filter(_.intersects(minx, miny, maxx, maxy)).map(_.path)
+    val scan = readFiles(spark, root, Some(v), hits)
+    val df = if (hits.isEmpty) scan
+      else scan.filter(col("x") >= minx && col("x") <= maxx &&
+        col("y") >= miny && col("y") <= maxy)
+    (df, hits.length.toLong, es.size.toLong)
   }
 
   /** Metadata-only exact row count: the sum of manifest `rows` — O(manifest
@@ -868,8 +927,7 @@ object GraftTable {
     * metadata (Iceberg answers the same query from its manifest stats). */
   def countRows(spark: SparkSession, root: String,
       asOf: Option[Int] = None): Long =
-    manifests(spark, root, asOf)
-      .agg(coalesce(sum("rows"), lit(0L))).head.getLong(0)
+    entriesAt(spark, root, asOf).map(_.rows).sum
 
   /** Exact count of rows inside the closed box, scanning only the files
     * the manifest cannot decide: files fully CONTAINED in the box (and
@@ -886,25 +944,16 @@ object GraftTable {
   def countBox(spark: SparkSession, root: String, minx: Double, miny: Double,
       maxx: Double, maxy: Double, asOf: Option[Int] = None)
       : (Long, Long, Long) = {
-    val m = manifests(spark, root, asOf)
-    val total = m.count()
-    val intersects = col("min_x") <= maxx && col("max_x") >= minx &&
-      col("min_y") <= maxy && col("max_y") >= miny
-    val contained = col("min_x") >= minx && col("max_x") <= maxx &&
-      col("min_y") >= miny && col("max_y") <= maxy && col("nulls_xy") === 0L
-    // null-safe: unknown null counts or null stats make `contained` null,
-    // never true — coalesce routes those files to the (exact) scan path
-    val metaRows = m.filter(coalesce(contained, lit(false)))
-      .agg(coalesce(sum("rows"), lit(0L))).head.getLong(0)
-    val boundary = m.filter(coalesce(intersects, lit(false)) &&
-        not(coalesce(contained, lit(false))))
-      .select("path").collect().map(_.getString(0)).toIndexedSeq
+    val v = resolve(root, asOf)
+    val es = entriesAt(spark, root, Some(v))
+    val (contained, rest) = es.partition(_.containedIn(minx, miny, maxx, maxy))
+    val boundary = rest.filter(_.intersects(minx, miny, maxx, maxy)).map(_.path)
     val scanned =
       if (boundary.isEmpty) 0L
-      else readerFor(spark, root, asOf).parquet(boundary: _*)
+      else readFiles(spark, root, Some(v), boundary)
         .filter(col("x") >= minx && col("x") <= maxx &&
           col("y") >= miny && col("y") <= maxy).count()
-    (metaRows + scanned, boundary.length.toLong, total)
+    (contained.map(_.rows).sum + scanned, boundary.length.toLong, es.size.toLong)
   }
 
   /** Metadata-only exact spatial extent (min/max over non-null x/y — SQL
@@ -915,16 +964,17 @@ object GraftTable {
     * reporting an infinite bound as data. */
   def extent(spark: SparkSession, root: String,
       asOf: Option[Int] = None): (Double, Double, Double, Double) = {
-    val r = manifests(spark, root, asOf)
-      .agg(min("min_x"), max("max_x"), min("min_y"), max("max_y")).head
-    require(!r.anyNull,
-      s"graft table $root has no x/y stats in any file — no spatial extent")
+    val es = entriesAt(spark, root, asOf)
     // parquet-mr normalizes a zero double min to -0.0 (IEEE-safe ordering
     // sentinel); +0.0 is what SQL min/max over the data reports, and
     // -0.0 == 0.0 for every comparison, so fold the sign out
-    def z(v: Double): Double = v + 0.0
-    val (a, b, c, d) =
-      (z(r.getDouble(0)), z(r.getDouble(1)), z(r.getDouble(2)), z(r.getDouble(3)))
+    def fold(stat: FileEntry => Option[Double], pick: (Double, Double) => Double) =
+      es.flatMap(stat).reduceOption(pick).map(_ + 0.0)
+    val r = Seq(fold(_.minX, math.min), fold(_.maxX, math.max),
+      fold(_.minY, math.min), fold(_.maxY, math.max))
+    require(r.forall(_.isDefined),
+      s"graft table $root has no x/y stats in any file — no spatial extent")
+    val Seq(a, b, c, d) = r.flatten
     require(!a.isInfinite && !b.isInfinite && !c.isInfinite && !d.isInfinite,
       s"graft table $root carries NaN-suppressed footer stats — the exact " +
       "extent requires a data scan, refusing to report an infinite bound")

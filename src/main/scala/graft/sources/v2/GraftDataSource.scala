@@ -3,10 +3,11 @@ package graft.sources.v2
 import java.util.{Map => JMap}
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Row, SQLContext, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
+import org.apache.spark.sql.execution.RowDataSourceScanExec
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
@@ -79,9 +80,14 @@ object GraftDataSource {
     (root, asof)
   }
 
-  /** Last scan's (filesRead, filesTotal) — observability hook asserted
-    * by PlanSpec; volatile driver-side value, set at RDD build time. */
-  @volatile var lastPrune: (Long, Long) = (-1L, -1L)
+  /** (filesRead, filesTotal) of every graft scan in `df`'s physical
+    * plan. Each scan prunes once, on the driver, when the query is
+    * planned; the same counts show in the plan's text as
+    * `files=read/total`. */
+  def pruneOf(df: DataFrame): Seq[(Long, Long)] =
+    df.queryExecution.sparkPlan.collect {
+      case s: RowDataSourceScanExec => s.relation
+    }.collect { case g: GraftV1Relation => (g.files.size.toLong, g.filesTotal) }
 
   private[v2] def relaxNullability(dt: org.apache.spark.sql.types.DataType)
       : org.apache.spark.sql.types.DataType = {
@@ -149,15 +155,25 @@ private[v2] class GraftV1Relation(ctx: SQLContext, root: String,
   override def sqlContext: SQLContext = ctx
   override def schema: StructType = required
 
+  // the snapshot this scan reads: head is resolved once, so the prune and
+  // the file read cannot straddle a concurrent commit
+  private val version = Some(asof.getOrElse(GraftTable.currentVersion(root)))
+
+  /** Manifest pruning, planned on the driver once per scan: the data
+    * files no pushed filter rules out, and the snapshot's file count. */
+  lazy val (files, filesTotal): (IndexedSeq[String], Long) = {
+    val es = GraftTable.entriesAt(ctx.sparkSession, root, version)
+    (GraftTable.manifestFrame(ctx.sparkSession, es)
+      .filter(GraftFilterPush.manifestPredicate(pushed)).select("path")
+      .collect().map(_.getString(0)).toIndexedSeq, es.size.toLong)
+  }
+
+  override def toString: String =
+    s"GraftScan root=$root asof=${asof.getOrElse(-1)} " +
+      s"files=${files.size}/$filesTotal"
+
   override def buildScan(): RDD[Row] = {
-    val spark = ctx.sparkSession
-    val m = GraftTable.manifests(spark, root, asof)
-    val total = m.count()
-    val keep = GraftFilterPush.manifestPredicate(pushed)
-    val files = m.filter(keep).select("path")
-      .collect().map(_.getString(0)).toIndexedSeq
-    GraftDataSource.lastPrune = (files.length.toLong, total)
-    var df = GraftTable.readFiles(spark, root, asof, files)
+    var df = GraftTable.readFiles(ctx.sparkSession, root, version, files)
     // push the accepted filters into the inner parquet scan too (row
     // group / page pruning below the file-level manifest prune)
     for (f <- pushed; c <- GraftFilterPush.toColumn(f)) df = df.filter(c)

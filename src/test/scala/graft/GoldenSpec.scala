@@ -23,6 +23,19 @@ object TestSpark {
     assert(a.keySet.subsetOf(b.keySet), "output docs must come from input")
     a.foreach { case (id, sj) => assert(b(id) == sj, s"span sequence mutated for $id") }
   }
+
+  /** Spark jobs `body` launches, counted under its own job group. */
+  def jobsOf(body: => Any): Int = jobIdsOf(body).size
+
+  /** Ids of the Spark jobs `body` launches, in launch order. */
+  def jobIdsOf(body: => Any): Seq[Int] = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${System.nanoTime()}"
+    sc.setJobGroup(group, "job count", interruptOnCancel = false)
+    try body finally sc.clearJobGroup()
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.statusTracker.getJobIdsForGroup(group).toSeq.sorted
+  }
 }
 
 /** Reference golden numbers (BASELINE.md table; file:line into

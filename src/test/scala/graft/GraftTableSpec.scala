@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.GraftTable
+import graft.sources.v2.GraftDataSource
 
 /** Snapshot-table layer: commit/append/time-travel/pruning/CAS races. */
 class GraftTableSpec extends AnyFunSuite {
@@ -599,9 +600,14 @@ class GraftTableSpec extends AnyFunSuite {
       .filter(col("x") >= 0 && col("x") <= 99)
       .select("order_key", "x")
     assert(df.count() == 200)
-    val (read, total) = graft.sources.v2.GraftDataSource.lastPrune
+    val Seq((read, total)) = GraftDataSource.pruneOf(df)
     assert(total >= 4 && read < total,
       s"expected V2 file pruning: read $read of $total")
+    // the counts belong to this query: its own plan shows them
+    assert(df.queryExecution.executedPlan.toString.contains(s"files=$read/$total"))
+    // the prune is planned on the driver: planning a scan launches no job
+    val fresh = spark.read.format("graft").load(root).filter(col("x") <= 99)
+    assert(jobsOf(GraftDataSource.pruneOf(fresh)) == 0)
     // the V2 scan advertises the pushdown in the optimized plan
     val plan = df.queryExecution.optimizedPlan.toString
     assert(plan.contains("RelationV2") || plan.contains("graft"),
@@ -610,7 +616,7 @@ class GraftTableSpec extends AnyFunSuite {
     val miss = spark.read.format("graft").load(root)
       .filter(col("x") >= 5e6 && col("x") <= 6e6)
     assert(miss.count() == 0)
-    assert(graft.sources.v2.GraftDataSource.lastPrune._1 == 0L)
+    assert(GraftDataSource.pruneOf(miss).map(_._1) == Seq(0L))
     assert(miss.columns.contains("order_key"))
     // order_key interval pruning via min_key/max_key (disjoint per commit
     // band? keys repeat per commit -> no pruning guarantee; use a
@@ -622,7 +628,7 @@ class GraftTableSpec extends AnyFunSuite {
     val kdf = spark.read.format("graft").load(kroot)
       .filter(col("order_key") >= 3000L)
     assert(kdf.count() == 100)
-    val (kread, ktotal) = graft.sources.v2.GraftDataSource.lastPrune
+    val Seq((kread, ktotal)) = GraftDataSource.pruneOf(kdf)
     assert(ktotal >= 4 && kread < ktotal,
       s"expected key-interval pruning: read $kread of $ktotal")
     // equality between the pruned V2 read and an unpruned full filter
@@ -653,5 +659,116 @@ class GraftTableSpec extends AnyFunSuite {
       .collect().map(_.getString(0)).sorted.toSeq
     assert(obj.size == 300 && obj.head.startsWith("b"))
     assert(v2 == obj)
+  }
+
+  /** The Spark-side manifest read the driver reader replaced: the oracle
+    * `GraftTable.entries` is checked against. */
+  private def sparkManifestRows(paths: Seq[String]) =
+    spark.read.schema(GraftTable.manifestSchema).parquet(paths: _*)
+      .collect().toSeq.sortBy(_.getString(0))
+
+  /** Every snapshot's driver-read entries equal the Spark read of its
+    * manifests, field by field (Row equality compares doubles bitwise). */
+  private def assertEntriesMatchSpark(root: String): Unit =
+    for (v <- 1 to GraftTable.currentVersion(root)) {
+      val paths = GraftTable.snapshot(root, v).manifests
+      val got = GraftTable.entries(spark, paths).map(_.toRow).sortBy(_.getString(0))
+      val want = sparkManifestRows(paths)
+      assert(got.nonEmpty && got == want, s"v$v entries differ from the Spark read")
+    }
+
+  /** Rewrites every manifest of the head snapshot with Spark, as tables
+    * written before manifests moved to the driver have them: a directory
+    * of part files, 8 columns (no nulls_xy) when `legacy`. */
+  private def sparkRewriteManifests(root: String, legacy: Boolean): Unit =
+    GraftTable.snapshot(root, GraftTable.currentVersion(root)).manifests.foreach { mp =>
+      val m = spark.createDataFrame(
+        spark.sparkContext.parallelize(sparkManifestRows(Seq(mp))),
+        GraftTable.manifestSchema)
+      (if (legacy) m.drop("nulls_xy") else m).repartition(1)
+        .write.mode("overwrite").parquet(mp)
+    }
+
+  test("driver manifest reader equals the Spark manifest read: multi-file, " +
+      "null-stat, NaN-stat, legacy, Spark-written, merged and 2^53+1-key " +
+      "manifests; a Spark-written table reads the same") {
+    val root = freshRoot()
+    GraftTable.commit(cloud(3000).repartition(3), root) // several files
+    import spark.implicits._
+    GraftTable.commit(Seq((7L, "a")).toDF("order_key", "tag"), root) // no x/y
+    // a NaN x: parquet keeps no usable x stats, so the entry carries the
+    // always-read infinite interval
+    GraftTable.commit(Seq((8L, Double.NaN, 1.0), (9L, 2.0, 3.0))
+      .toDF("order_key", "x", "y").coalesce(1), root)
+    val big = (1L << 53) + 1
+    GraftTable.commit(Seq((big, 1.0, 1.0)).toDF("order_key", "x", "y"), root)
+    assertEntriesMatchSpark(root)
+    val es = GraftTable.entries(spark, GraftTable.snapshot(root, 4).manifests)
+    assert(es.count(_.minX.isEmpty) == 1 && es.exists(_.minKey.contains(7L)))
+    assert(es.exists(e => e.minX.contains(Double.NegativeInfinity) &&
+      e.maxX.contains(Double.PositiveInfinity)))
+    assert(es.exists(e => e.minKey.contains(big) && e.maxKey.contains(big)),
+      "order_key 2^53+1 must stay exact")
+    assert(GraftTable.manifests(spark, root).schema == GraftTable.manifestSchema)
+    // an auto-merged manifest, written by the driver from the entries
+    GraftTable.commit(cloud(10, offX = 500.0), root, mergeAbove = 2)
+    assert(GraftTable.snapshot(root, 5).manifests.size == 1)
+    assertEntriesMatchSpark(root)
+
+    // the same table with Spark-written manifests (9 columns, then the
+    // legacy 8) answers every read the same
+    def answers() = (
+      GraftTable.read(spark, root).orderBy("order_key", "x").collect().toSeq,
+      GraftTable.readBox(spark, root, 0, 0, 50, 20)._1.orderBy("order_key", "x")
+        .collect().toSeq,
+      GraftTable.countBox(spark, root, 0, 0, 50, 20)._1,
+      GraftTable.countRows(spark, root),
+      GraftTable.read(spark, root, asOf = Some(2)).count())
+    val before = answers()
+    sparkRewriteManifests(root, legacy = false)
+    assertEntriesMatchSpark(root)
+    assert(answers() == before)
+    sparkRewriteManifests(root, legacy = true)
+    assertEntriesMatchSpark(root)
+    assert(GraftTable.entries(spark, GraftTable.snapshot(root, 5).manifests)
+      .forall(_.nullsXy.isEmpty))
+    assert(answers() == before)
+    // an upsert over the legacy manifests keeps every other row
+    val (_, rewritten, total) = GraftTable.upsert(spark, root,
+      Seq((big, 5.0, 5.0)).toDF("order_key", "x", "y"))
+    assert(rewritten >= 1 && rewritten < total)
+    assert(GraftTable.countRows(spark, root) == before._4)
+    assert(GraftTable.read(spark, root).filter(col("order_key") === big)
+      .select("x").as[Double].collect().toSeq == Seq(5.0))
+    assertEntriesMatchSpark(root)
+  }
+
+  test("table metadata is planned on the driver: readBox, countBox, " +
+      "countRows, extent and manifest filters launch no job; a commit " +
+      "launches none after its footer pass") {
+    val root = freshRoot()
+    for (i <- 0 until 4)
+      GraftTable.commit(cloud(200).withColumn("x", col("x") + i * 1000), root)
+    assert(jobsOf(GraftTable.readBox(spark, root, 0, 0, 99, 100)) == 0)
+    assert(jobsOf(GraftTable.readBox(spark, root, 5e6, 5e6, 6e6, 6e6)) == 0)
+    var counted = (-1L, -1L, -1L)
+    // a box containing every file counts from metadata alone
+    assert(jobsOf { counted = GraftTable.countBox(spark, root, -1, -1, 1e4, 1e4) } == 0)
+    assert(counted._1 == 800 && counted._2 == 0)
+    assert(jobsOf { counted = GraftTable.countBox(spark, root, 5e6, 5e6, 6e6, 6e6) } == 0)
+    assert(counted._1 == 0 && counted._2 == 0)
+    assert(jobsOf(GraftTable.countRows(spark, root)) == 0)
+    assert(jobsOf(GraftTable.extent(spark, root)) == 0)
+    assert(jobsOf(GraftTable.manifests(spark, root)
+      .filter(col("min_x") >= 1000).select("path").collect()) == 0)
+    // the footer pass is the commit's last job: the manifest is written
+    // from the driver
+    val sc = spark.sparkContext
+    val ids = jobIdsOf(GraftTable.commit(cloud(100, offX = 5000.0), root))
+    val lastStages = sc.statusTracker.getJobInfo(ids.last).get.stageIds.toSeq
+      .map(sc.statusTracker.getStageInfo(_).get.name)
+    assert(lastStages.nonEmpty && lastStages.forall(_.startsWith("collect at GraftTable")),
+      s"last commit job: $lastStages")
+    assert(GraftTable.countRows(spark, root) == 900)
   }
 }

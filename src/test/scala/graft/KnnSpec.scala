@@ -61,16 +61,6 @@ class KnnSpec extends AnyFunSuite {
     walk(df.queryExecution.executedPlan)
   }
 
-  /** Spark jobs `body` launches, counted under its own job group. */
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"knn-jobs-${System.nanoTime()}"
-    sc.setJobGroup(group, "job count", interruptOnCancel = false)
-    try body finally sc.clearJobGroup()
-    org.apache.spark.TestListenerBus.drain(sc)
-    sc.statusTracker.getJobIdsForGroup(group).length
-  }
-
   /** `body` with spark.sql.autoBroadcastJoinThreshold set to `v`. */
   private def withThreshold[T](v: String)(body: => T): T = {
     val key = "spark.sql.autoBroadcastJoinThreshold"
