@@ -39,14 +39,8 @@ object Bench {
     // Mrows/s at 8 cores, ~1700+ at 32; floor set at ~2/3 of clean). The
     // committed number is min over clean samples, falling back to min
     // over all samples (flagged) only if no probe clears after maxRuns.
-    import org.apache.spark.sql.functions._
     val probeRows = 10_000_000L * cpus
-    def probeNow(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0, probeRows, 1, cpus * 4)
-        .select(bit_xor(xxhash64(xxhash64(xxhash64(col("id")))))).head()
-      probeRows / ((System.nanoTime() - t0) / 1e9) / 1e6 // Mrows/s
-    }
+    def probeNow(): Double = HostProbe.mrowsPerSec(spark, probeRows, cpus * 4)
     probeNow() // JIT/codegen warm so the first real probe isn't biased low
     val probeFloor = if (cpus >= 32) 1100.0 else if (cpus >= 8) 420.0 else 40.0 * cpus
     final case class Sample(secs: Double, probe: Double)
@@ -107,17 +101,25 @@ object Bench {
   * Firecracker host has multi-minute throttling phases where 32 pinned
   * vCPUs deliver the compute of ~10). Appends to BENCH/probe.tsv. */
 object HostProbe {
+  /** The probe kernel: Mrows/s of a triple-xxhash64 `bit_xor` over
+    * `rows` ids of spark.range in `parts` partitions (xor: no ANSI
+    * overflow). Bench brackets its samples with it. */
+  def mrowsPerSec(spark: SparkSession, rows: Long, parts: Int): Double = {
+    import org.apache.spark.sql.functions._
+    val t0 = System.nanoTime()
+    spark.range(0, rows, 1, parts)
+      .select(bit_xor(xxhash64(xxhash64(xxhash64(col("id")))))).head()
+    rows / ((System.nanoTime() - t0) / 1e9) / 1e6
+  }
+
   def main(args: Array[String]): Unit = {
     val cores = args.headOption.map(_.toInt).getOrElse(32)
     val n = args.lift(1).map(_.toLong).getOrElse(6_000_000_000L)
     val spark = graft.core.GraftSession.local(cores, 128)
-    import org.apache.spark.sql.functions._
-    spark.range(1000).select(bit_xor(xxhash64(col("id")))).head() // JIT warm
-    val t0 = System.nanoTime()
-    spark.range(0, n, 1, cores * 4)
-      .select(bit_xor(xxhash64(xxhash64(xxhash64(col("id")))))).head() // xor: no ANSI overflow
-    val secs = (System.nanoTime() - t0) / 1e9
-    println(f"[probe] cores=$cores rows=$n secs=$secs%.2f mrows/sec=${n / secs / 1e6}%.0f")
+    mrowsPerSec(spark, 1000, 1) // JIT warm
+    val mrows = mrowsPerSec(spark, n, cores * 4)
+    val secs = n / mrows / 1e6
+    println(f"[probe] cores=$cores rows=$n secs=$secs%.2f mrows/sec=$mrows%.0f")
     val dir = java.nio.file.Paths.get("BENCH")
     java.nio.file.Files.createDirectories(dir)
     java.nio.file.Files.writeString(dir.resolve("probe.tsv"),

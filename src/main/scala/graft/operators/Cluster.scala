@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * 3. GLOBAL: when the contracted edge list fits the driver (the common
   *    case — one node per (cell, local component)), a single driver
   *    union-find labels it and the map is broadcast back; past
-  *    [[Cluster.localEdgeLimit]] the scale path is distributed min-label
+  *    [[Components.localEdgeLimit]] the scale path is distributed min-label
   *    propagation with pointer jumping (path halving): each round a root
   *    takes the min label of its neighborhood, then labels chase their
   *    own parents one hop (lbl <- lbl(lbl)), so convergence is O(log
@@ -39,19 +39,17 @@ import org.apache.spark.sql.functions._
   * compute upstream with voxel downsampling at cell ~= tolerance.
   */
 object Cluster {
-  /** Contracted-edge count at or below which the global phase runs as a
-    * driver union-find over the collected root edges (~16 bytes/edge ->
-    * ~32 MB at the default) instead of the distributed label-propagation
-    * loop — the same honest local fast path as KnnJoin's broadcast
-    * index: the CONTRACTED graph is usually orders of magnitude smaller
-    * than the point set, and each propagation round is a fixed-cost
-    * Spark job, so small graphs are pure job overhead. Env
-    * GRAFT_CC_LOCAL_EDGES overrides; 0 pins the distributed loop. */
-  private[graft] val localEdgeLimit: Long = Components.localEdgeLimit
-
+  /** The global phase runs as a driver union-find over the collected root
+    * edges while they number at most [[Components.localEdgeLimit]]
+    * (~16 bytes/edge -> ~32 MB) instead of the distributed
+    * label-propagation loop — the same honest local fast path as
+    * KnnJoin's broadcast index: the CONTRACTED graph is usually orders of
+    * magnitude smaller than the point set, and each propagation round is
+    * a fixed-cost Spark job, so small graphs are pure job overhead.
+    * `edgeLimit` 0 pins the distributed loop. */
   def apply(df: DataFrame, tolerance: Double, minPoints: Long = 1,
       outCol: String = "cluster_id"): DataFrame =
-    apply(df, tolerance, minPoints, outCol, localEdgeLimit)
+    apply(df, tolerance, minPoints, outCol, Components.localEdgeLimit)
 
   private[graft] def apply(df: DataFrame, tolerance: Double, minPoints: Long,
       outCol: String, edgeLimit: Long): DataFrame = {

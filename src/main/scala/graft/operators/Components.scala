@@ -28,10 +28,9 @@ import org.apache.spark.sql.functions._
 object Components {
 
   /** Edge count at or below which the global phase runs as a driver
-    * union-find over the collected edges. Env GRAFT_CC_LOCAL_EDGES
-    * overrides; 0 pins the distributed loop. */
-  private[graft] val localEdgeLimit: Long =
-    sys.env.get("GRAFT_CC_LOCAL_EDGES").map(_.toLong).getOrElse(1L << 21)
+    * union-find over the collected edges; callers pass `edgeLimit` 0 to
+    * pin the distributed loop. */
+  private[graft] val localEdgeLimit: Long = 1L << 21
 
   /** Label every node of the (undirected) edge graph with the min node
     * id of its component. `edges`' first two columns are the endpoints

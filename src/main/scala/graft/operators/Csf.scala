@@ -162,7 +162,7 @@ object Csf {
       spark.createDataFrame(rows).toDF("gx", "gy", "hv", "pos", "old", "movable")
     } else {
       val settled = simulate(spark, grid, w, h, step, rigidness, iterations,
-        blockIters, tileSize, localCells)
+        blockIters, tileSize)
       if (smooth) movableFilter(spark, settled, w, h, tileSize) else settled
     }
 
@@ -212,30 +212,28 @@ object Csf {
     * pass). */
   private def simulate(spark: SparkSession, grid0: DataFrame, w: Int, h: Int,
       step: Double, rigid: Int, iterations: Int, blockIters: Int,
-      tileSize: Int, localCells: Long): DataFrame = {
+      tileSize: Int): DataFrame = {
     import spark.implicits._
-    locally {
-      var cur = Mat(grid0)
-      var used = 0; var stop = false
-      while (used < iterations && !stop) {
-        val k = math.min(blockIters, iterations - used)
-        val halo = 2 * k + 2
-        val res = tileRound(cur, w, h, tileSize, halo) { (st, pw, ph, gx0, gy0, cx0, cy0, cx1, cy1) =>
-          ClothSim.run(st, pw, ph, gx0, gy0, w, h, cx0 - gx0, cy0 - gy0, k,
-            rigid, step, cx1 - gx0, cy1 - gy0)
-        }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val diffs = res.filter(col("gx") === -1)
-          .groupBy("gy").agg(max("pos").as("d"))
-          .collect().map(r => r.getDouble(1))
-        if (diffs.exists(d => d != 0 && d < 0.005)) stop = true
-        val next = Mat(res.filter(col("gx") >= 0))
-        res.unpersist(false)
-        cur = next
-        used += k
-        if (cur.filter(col("movable")).limit(1).count() == 0) stop = true
-      }
-      cur
+    var cur = Mat(grid0)
+    var used = 0; var stop = false
+    while (used < iterations && !stop) {
+      val k = math.min(blockIters, iterations - used)
+      val halo = 2 * k + 2
+      val res = tileRound(cur, w, h, tileSize, halo) { (st, pw, ph, gx0, gy0, cx0, cy0, cx1, cy1) =>
+        ClothSim.run(st, pw, ph, gx0, gy0, w, h, cx0 - gx0, cy0 - gy0, k,
+          rigid, step, cx1 - gx0, cy1 - gy0)
+      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val diffs = res.filter(col("gx") === -1)
+        .groupBy("gy").agg(max("pos").as("d"))
+        .collect().map(r => r.getDouble(1))
+      if (diffs.exists(d => d != 0 && d < 0.005)) stop = true
+      val next = Mat(res.filter(col("gx") >= 0))
+      res.unpersist(false)
+      cur = next
+      used += k
+      if (cur.filter(col("movable")).limit(1).count() == 0) stop = true
     }
+    cur
   }
 
   /** One tile+halo mapGroups round over the grid state. The kernel

@@ -63,14 +63,16 @@ case class PoissonResult(vertices: DataFrame, faces: DataFrame)
   * indicator (grad of -indicator points outward), so the front face of
   * each triangle — toward chi > isovalue — is the OUTSIDE.
   *
-  * Scale: points are touched twice (splat groupBy, isovalue join);
-  * everything iterative runs on grid tiles. Shuffles per level are
-  * ceil(iters / blockIters) tile passes of the level's nodes; all
-  * levels with <= localNodes nodes (default 2^22) run as one driver
-  * patch instead — on a 1000-executor cluster only the finest 1-2
-  * levels are ever distributed. */
+  * Scale: one size decision, `lc`, the finest level whose grid has
+  * <= localNodes nodes (default 2^22: level 7, 129^3). Levels Lmin..lc
+  * run as one dense driver cascade; each finer level is ceil(iters /
+  * blockIters) tile passes of its nodes, and points are touched twice
+  * (splat groupBy, isovalue join). When the finest level fits, the whole
+  * pyramid runs driver-side. On a 1000-executor cluster only the finest
+  * 1-2 levels are ever distributed. */
 object Poisson extends Serializable {
   private val Omega = 2.0 / 3.0 // weighted-Jacobi smoothing factor
+  private val Lmin = 2 // coarsest multigrid level (5^3 nodes)
 
   def apply(df: DataFrame, depth: Int = 8, density: Boolean = false,
       iterations: Int = 120, smoothPasses: Int = 2, tileSize: Int = 48,
@@ -80,7 +82,6 @@ object Poisson extends Serializable {
     // a signed 64-bit long: (2^10+1)^3 squared ~ 1.2e18 < 2^63
     require(depth >= 2 && depth <= 10, "filters.poisson: depth must be in [2,10]")
     val spark = df.sparkSession
-    import spark.implicits._
 
     // ---- normals: shared acquisition (provided or estimated, unit) —
     // the reference's implicit NormalFilter run (PoissonFilter.cpp:262-268)
@@ -90,7 +91,6 @@ object Poisson extends Serializable {
     val bb = pts.agg(count(lit(1)), min("x"), max("x"), min("y"), max("y"),
       min("z"), max("z")).head()
     val n = bb.getLong(0)
-    val M3big = { val m = (1L << depth) + 1; m * m * m }
     if (n == 0) { pts.unpersist(false); return emptyResult(spark, density, outputNormals) }
     val ext = math.max(math.max(bb.getDouble(2) - bb.getDouble(1),
       bb.getDouble(4) - bb.getDouble(3)), bb.getDouble(6) - bb.getDouble(5))
@@ -118,117 +118,128 @@ object Poisson extends Serializable {
       .agg(sum("vx").as("vx"), sum("vy").as("vy"), sum("vz").as("vz"),
         sum("w").as("w"))
 
-    // ---- LOCAL FAST PATH: when the FINEST grid fits one driver patch
-    // (m^3 <= localNodes), the whole pyramid does — run the identical
-    // dense-array kernels (smoothPatch/divergencePatch/jacobiPatch/
-    // prolongInterp/march) driver-side without the per-stage
-    // collect/createDataFrame round trips: one splat job, one isovalue
-    // aggregate over the samples, one materialization per output.
-    // PoissonSpec's local==distributed differential pins the equivalence.
-    if (m.toLong * m * m <= localNodes) {
-      val out = localPipeline(spark, pts, splat, depth, m, side, ox, oy, oz,
-        hs, iterations, smoothPasses, density, outputNormals)
-      pts.unpersist(false)
-      return out
-    }
+    // ---- the one size decision: lc is the finest level whose grid fits
+    // one driver patch (Lmin - 1 when none does). Levels Lmin..lc run as
+    // one dense driver cascade, finer levels as tile passes; when the
+    // finest level fits, so does every stage. PoissonSpec pins all three
+    // regimes (whole pyramid, hybrid, fully tiled) to the same output.
+    val lc = (depth to Lmin by -1).find { l =>
+      val ml = (1L << l) + 1; ml * ml * ml <= localNodes }.getOrElse(Lmin - 1)
+    // persisted along the way, dropped once the outputs materialize
+    val held = scala.collection.mutable.ArrayBuffer(pts)
+    val (verts0, faces) =
+      if (lc == depth) localPipeline(spark, pts, splat, depth, m, side, ox,
+        oy, oz, hs, iterations, smoothPasses, density)
+      else {
+        // ---- 2. smooth + divergence (tile halo = smoothPasses + 1);
+        // emits (i,j,k,f,w): f = div of the smoothed field, w = smoothed
+        // splat weight (the kernel-density analog of the reference's
+        // Density dimension)
+        val fwFineP = stageSmoothDiv(spark, splat, m, hs, smoothPasses, tileSize)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val fFineP = fwFineP.select("i", "j", "k", "f").filter(col("f") =!= 0.0)
 
-    // ---- 2. smooth + divergence (tile halo = smoothPasses + 1);
-    // emits (i,j,k,f,w): f = div of the smoothed field, w = smoothed
-    // splat weight (the kernel-density analog of the reference's
-    // Density dimension)
-    val fwFine = stageSmoothDiv(spark, splat, m, hs, smoothPasses, tileSize,
-      localNodes)
-    val fwFineP = fwFine.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val fFineP = fwFineP.select("i", "j", "k", "f").filter(col("f") =!= 0.0)
-
-    // ---- 3. cascadic multigrid: coarse-to-fine, injection RHS,
-    // trilinear prolongation, weighted-Jacobi smoothing
-    val lmin = 2
-    var chi: DataFrame = null
-    var l = lmin
-    while (l <= depth) {
-      val s = 1 << (depth - l)
-      val ml = (1 << l) + 1
-      val hl = side / (1 << l)
-      val fl =
-        if (l == depth) fFineP
-        else fFineP.filter(col("i") % s === 0 && col("j") % s === 0 &&
-          col("k") % s === 0)
-          .select((col("i") / s).cast("int").as("i"),
-            (col("j") / s).cast("int").as("j"),
-            (col("k") / s).cast("int").as("k"), col("f"))
-      val init =
-        if (l == lmin) fl.select(col("i"), col("j"), col("k"),
-          lit(0.0).as("chi"), col("f"))
-        else {
-          val prev = chi // level l-1 solution (i,j,k,chi)
-          val pro = stageProlong(spark, prev, (1 << (l - 1)) + 1, ml, tileSize,
-            localNodes)
-          pro.join(fl, Seq("i", "j", "k"), "full_outer")
-            .select(col("i"), col("j"), col("k"),
-              coalesce(col("chi"), lit(0.0)).as("chi"),
-              coalesce(col("f"), lit(0.0)).as("f"))
+        // ---- 3. cascadic multigrid: levels Lmin..lc on the driver over
+        // f collected once at level lc's stride (one job); each finer
+        // level prolongs the coarser chi by tiles, adds its injected f
+        // and runs blocked weighted-Jacobi tile rounds
+        var chi: DataFrame = null
+        if (lc >= Lmin) {
+          val s = 1 << (depth - lc)
+          val mc = (1 << lc) + 1
+          val fc = new Array[Double](mc * mc * mc)
+          fFineP.filter(col("i") % s === 0 && col("j") % s === 0 &&
+              col("k") % s === 0).collect().foreach { r =>
+            fc(((r.getInt(2) / s) * mc + r.getInt(1) / s) * mc + r.getInt(0) / s) =
+              r.getDouble(3)
+          }
+          val chiC = cascade(fc, lc, depth, side, iterations)
+          chi = spark.createDataFrame(for (c <- chiC.indices if chiC(c) != 0.0)
+            yield (c % mc, (c / mc) % mc, c / (mc * mc), chiC(c)))
+            .toDF("i", "j", "k", "chi")
         }
-      val iters = math.min(4000, iterations * (1 << (depth - l)))
-      chi = stageJacobi(spark, init, ml, hl * hl, iters, tileSize, blockIters,
-        localNodes)
-      l += 1
-    }
-    val chiP = Mat(chi, eager = false)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        var l = lc + 1
+        while (l <= depth) {
+          val s = 1 << (depth - l)
+          val ml = (1 << l) + 1
+          val hl = side / (1 << l)
+          val fl =
+            if (l == depth) fFineP
+            else fFineP.filter(col("i") % s === 0 && col("j") % s === 0 &&
+              col("k") % s === 0)
+              .select((col("i") / s).cast("int").as("i"),
+                (col("j") / s).cast("int").as("j"),
+                (col("k") / s).cast("int").as("k"), col("f"))
+          val init =
+            if (l == Lmin) fl.select(col("i"), col("j"), col("k"),
+              lit(0.0).as("chi"), col("f"))
+            else stageProlong(spark, chi, (1 << (l - 1)) + 1, ml, tileSize)
+              .join(fl, Seq("i", "j", "k"), "full_outer")
+              .select(col("i"), col("j"), col("k"),
+                coalesce(col("chi"), lit(0.0)).as("chi"),
+                coalesce(col("f"), lit(0.0)).as("f"))
+          chi = stageJacobi(spark, init, ml, hl * hl,
+            sweeps(iterations, depth, l), tileSize, blockIters)
+          l += 1
+        }
+        val chiP = Mat(chi, eager = false)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    // ---- 4. isovalue: mean of chi interpolated at the samples
-    val iso = pts.withColumn("__c", corners8)
-      .select(col("order_key"), explode(col("__c")).as("c"))
-      .select(col("order_key"), col("c.i").as("i"), col("c.j").as("j"),
-        col("c.k").as("k"), col("c.w").as("w"))
-      .join(chiP.select(col("i"), col("j"), col("k"), col("chi")),
-        Seq("i", "j", "k"), "left")
-      .groupBy("order_key")
-      .agg(sum(col("w") * coalesce(col("chi"), lit(0.0))).as("v"))
-      .agg(avg("v")).head().getDouble(0)
+        // ---- 4. isovalue: mean of chi interpolated at the samples
+        val iso = pts.withColumn("__c", corners8)
+          .select(col("order_key"), explode(col("__c")).as("c"))
+          .select(col("order_key"), col("c.i").as("i"), col("c.j").as("j"),
+            col("c.k").as("k"), col("c.w").as("w"))
+          .join(chiP.select(col("i"), col("j"), col("k"), col("chi")),
+            Seq("i", "j", "k"), "left")
+          .groupBy("order_key")
+          .agg(sum(col("w") * coalesce(col("chi"), lit(0.0))).as("v"))
+          .agg(avg("v")).head().getDouble(0)
 
-    // ---- 5. marching tetrahedra over the Kuhn 6-tet decomposition;
-    // the smoothed weight field rides along for per-vertex density
-    val chiW = chiP.select("i", "j", "k", "chi")
-      .join(fwFineP.select(col("i"), col("j"), col("k"), col("w")),
-        Seq("i", "j", "k"), "full_outer")
-      .select(col("i"), col("j"), col("k"),
-        coalesce(col("chi"), lit(0.0)).as("chi"),
-        coalesce(col("w"), lit(0.0)).as("w"))
-    val tris = stageMarch(spark, chiW, m, ox, oy, oz, hs, iso, tileSize,
-      localNodes)
-    val trisP = tris.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // ---- 5. marching tetrahedra over the Kuhn 6-tet decomposition;
+        // the smoothed weight field rides along for per-vertex density
+        val chiW = chiP.select("i", "j", "k", "chi")
+          .join(fwFineP.select(col("i"), col("j"), col("k"), col("w")),
+            Seq("i", "j", "k"), "full_outer")
+          .select(col("i"), col("j"), col("k"),
+            coalesce(col("chi"), lit(0.0)).as("chi"),
+            coalesce(col("w"), lit(0.0)).as("w"))
+        val trisP = stageMarch(spark, chiW, m, ox, oy, oz, hs, iso, tileSize)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    // vertices: one row per distinct grid edge (emissions from different
-    // tiles are bit-identical — same node values, same arithmetic)
-    val slots = trisP.select(explode(array(
-      struct(col("k0").as("edge_key"), col("x0").as("x"), col("y0").as("y"),
-        col("z0").as("z"), col("d0").as("density")),
-      struct(col("k1").as("edge_key"), col("x1").as("x"), col("y1").as("y"),
-        col("z1").as("z"), col("d1").as("density")),
-      struct(col("k2").as("edge_key"), col("x2").as("x"), col("y2").as("y"),
-        col("z2").as("z"), col("d2").as("density")))).as("s"))
-      .select(col("s.edge_key"), col("s.x"), col("s.y"), col("s.z"),
-        col("s.density"))
-      .groupBy("edge_key")
-      .agg(min("x").as("x"), min("y").as("y"), min("z").as("z"),
-        min("density").as("density"))
-    val ranked = Order.globalRankBy(slots, Seq(col("edge_key")), "order_key")
-    val baseCols = Seq(col("order_key"), col("x"), col("y"), col("z")) ++
-      (if (density) Seq(col("density")) else Nil) :+ col("edge_key")
-    val verts0 = ranked.select(baseCols: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // vertices: one row per distinct grid edge (emissions from
+        // different tiles are bit-identical — same node values, same
+        // arithmetic)
+        val slots = trisP.select(explode(array(
+          struct(col("k0").as("edge_key"), col("x0").as("x"), col("y0").as("y"),
+            col("z0").as("z"), col("d0").as("density")),
+          struct(col("k1").as("edge_key"), col("x1").as("x"), col("y1").as("y"),
+            col("z1").as("z"), col("d1").as("density")),
+          struct(col("k2").as("edge_key"), col("x2").as("x"), col("y2").as("y"),
+            col("z2").as("z"), col("d2").as("density")))).as("s"))
+          .select(col("s.edge_key"), col("s.x"), col("s.y"), col("s.z"),
+            col("s.density"))
+          .groupBy("edge_key")
+          .agg(min("x").as("x"), min("y").as("y"), min("z").as("z"),
+            min("density").as("density"))
+        val ranked = Order.globalRankBy(slots, Seq(col("edge_key")), "order_key")
+        val baseCols = Seq(col("order_key"), col("x"), col("y"), col("z")) ++
+          (if (density) Seq(col("density")) else Nil) :+ col("edge_key")
+        val verts0 = ranked.select(baseCols: _*)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        held ++= Seq(fwFineP, chiP, trisP, verts0)
 
-    val vid = verts0.select(col("edge_key"), col("order_key"))
-    val faces = trisP
-      .join(vid.withColumnRenamed("edge_key", "k0")
-        .withColumnRenamed("order_key", "a"), Seq("k0"))
-      .join(vid.withColumnRenamed("edge_key", "k1")
-        .withColumnRenamed("order_key", "b"), Seq("k1"))
-      .join(vid.withColumnRenamed("edge_key", "k2")
-        .withColumnRenamed("order_key", "c"), Seq("k2"))
-      .select("a", "b", "c")
+        val vid = verts0.select(col("edge_key"), col("order_key"))
+        val faces = trisP
+          .join(vid.withColumnRenamed("edge_key", "k0")
+            .withColumnRenamed("order_key", "a"), Seq("k0"))
+          .join(vid.withColumnRenamed("edge_key", "k1")
+            .withColumnRenamed("order_key", "b"), Seq("k1"))
+          .join(vid.withColumnRenamed("edge_key", "k2")
+            .withColumnRenamed("order_key", "c"), Seq("k2"))
+          .select("a", "b", "c")
+        (verts0, faces)
+      }
 
     // ---- 6. reference parity: "Rerun normals as they may be expected"
     // (PoissonFilter.cpp:305-312)
@@ -244,22 +255,78 @@ object Poisson extends Serializable {
     // a lazy checkpoint here would re-run the march/smooth/splat chain
     // from scratch on the caller's first action
     val out = PoissonResult(Mat(verts), Mat(faces))
-    pts.unpersist(false); fwFineP.unpersist(false); chiP.unpersist(false)
-    trisP.unpersist(false); verts0.unpersist(false)
+    held.foreach(_.unpersist(false))
     out
   }
 
-  /** Whole-pyramid driver-side pipeline for grids with m^3 <= localNodes:
+  /** Weighted-Jacobi sweeps at level l: iteration counts double per
+    * coarser level (cascadic schedule), capped at 4000. */
+  private def sweeps(iterations: Int, depth: Int, l: Int): Int =
+    math.min(4000, iterations * (1 << (depth - l)))
+
+  /** Cascadic multigrid on dense driver arrays: restrict the level-`lTop`
+    * right-hand side `fTop` by injection to every level Lmin..lTop, then
+    * sweep coarse to fine — trilinear prolongation of the coarser
+    * solution, then `sweeps` weighted-Jacobi iterations. Returns chi at
+    * level lTop. The kernels and their arithmetic order are the tiled
+    * levels', so a level computes the same bits here as by tiles. */
+  private def cascade(fTop: Array[Double], lTop: Int, depth: Int,
+      side: Double, iterations: Int): Array[Double] = {
+    val mTop = (1 << lTop) + 1
+    var chi: Array[Double] = null
+    var l = Lmin
+    while (l <= lTop) {
+      val s = 1 << (lTop - l)
+      val ml = (1 << l) + 1
+      val hl = side / (1 << l)
+      val fl =
+        if (l == lTop) fTop
+        else {
+          val a = new Array[Double](ml * ml * ml)
+          var ck = 0
+          while (ck < ml) { var cj = 0
+            while (cj < ml) { var ci = 0
+              while (ci < ml) {
+                a((ck * ml + cj) * ml + ci) =
+                  fTop(((ck * s) * mTop + cj * s) * mTop + ci * s)
+                ci += 1 }
+              cj += 1 }
+            ck += 1 }
+          a
+        }
+      val chi0 =
+        if (l == Lmin) new Array[Double](ml * ml * ml)
+        else {
+          val mc = (1 << (l - 1)) + 1
+          val fine = new Array[Double](ml * ml * ml)
+          var gk = 0
+          while (gk < ml) { var gj = 0
+            while (gj < ml) { var gi = 0
+              while (gi < ml) {
+                fine((gk * ml + gj) * ml + gi) =
+                  prolongInterp(chi, mc, mc, mc, 0, 0, 0, gi, gj, gk)
+                gi += 1 }
+              gj += 1 }
+            gk += 1 }
+          fine
+        }
+      chi = jacobiPatch(chi0, fl, ml, ml, ml, 0, 0, 0, ml, hl * hl,
+        sweeps(iterations, depth, l))
+      l += 1
+    }
+    chi
+  }
+
+  /** Whole-pyramid driver-side pipeline, for when the finest level fits:
     * the SAME dense kernels as the tiled stages (smoothPatch /
-    * divergencePatch / jacobiPatch / prolongInterp / marcher) run once
-    * over the full grid, with exactly three Spark jobs — the splat
-    * collect, the isovalue aggregate over the samples (broadcast chi),
-    * and the output materialization. Equivalence to the distributed
-    * path is pinned by PoissonSpec's differential. */
+    * divergencePatch / `cascade` / marcher) run once over the full grid,
+    * with two Spark jobs before the caller materializes the outputs —
+    * the splat collect and the isovalue aggregate over the samples
+    * (broadcast chi). Returns (vertices, faces) without normals. */
   private def localPipeline(spark: SparkSession, pts: DataFrame,
       splat: DataFrame, depth: Int, m: Int, side: Double, ox: Double,
       oy: Double, oz: Double, hs: Double, iterations: Int, smoothPasses: Int,
-      density: Boolean, outputNormals: Boolean): PoissonResult = {
+      density: Boolean): (DataFrame, DataFrame) = {
     import spark.implicits._
     val m3 = m * m * m
 
@@ -275,51 +342,9 @@ object Poisson extends Serializable {
     val sy = smoothPatch(vy, m, m, m, smoothPasses)
     val sz = smoothPatch(vz, m, m, m, smoothPasses)
     val sw = smoothPatch(w, m, m, m, smoothPasses)
-    val fFine = divergencePatch(sx, sy, sz, m, m, m, 0, 0, 0, m, hs)
-
-    // ---- 3. cascadic multigrid, same schedule as the tiled path
-    val lmin = 2
-    var chi: Array[Double] = null
-    var l = lmin
-    while (l <= depth) {
-      val s = 1 << (depth - l)
-      val ml = (1 << l) + 1
-      val hl = side / (1 << l)
-      val fl =
-        if (l == depth) fFine
-        else {
-          val a = new Array[Double](ml * ml * ml)
-          var ck = 0
-          while (ck < ml) { var cj = 0
-            while (cj < ml) { var ci = 0
-              while (ci < ml) {
-                a((ck * ml + cj) * ml + ci) =
-                  fFine(((ck * s) * m + cj * s) * m + ci * s)
-                ci += 1 }
-              cj += 1 }
-            ck += 1 }
-          a
-        }
-      val chi0 =
-        if (l == lmin) new Array[Double](ml * ml * ml)
-        else {
-          val mc = (1 << (l - 1)) + 1
-          val fine = new Array[Double](ml * ml * ml)
-          var gk = 0
-          while (gk < ml) { var gj = 0
-            while (gj < ml) { var gi = 0
-              while (gi < ml) {
-                fine((gk * ml + gj) * ml + gi) =
-                  prolongInterp(chi, mc, mc, mc, 0, 0, 0, gi, gj, gk)
-                gi += 1 }
-              gj += 1 }
-            gk += 1 }
-          fine
-        }
-      val iters = math.min(4000, iterations * (1 << (depth - l)))
-      chi = jacobiPatch(chi0, fl, ml, ml, ml, 0, 0, 0, ml, hl * hl, iters)
-      l += 1
-    }
+    // ---- 3. cascadic multigrid over every level
+    val chi = cascade(divergencePatch(sx, sy, sz, m, m, m, 0, 0, 0, m, hs),
+      depth, depth, side, iterations)
 
     // ---- 4. isovalue: mean of trilinearly interpolated chi at the
     // samples — ONE aggregate job over pts with the grid broadcast
@@ -379,23 +404,12 @@ object Poisson extends Serializable {
       vrows += ((idx, x, y, z, d, e.getKey))
       idx += 1
     }
-    var verts0 = vrows.result()
+    val verts0 = vrows.result()
       .toDF("order_key", "x", "y", "z", "density", "edge_key")
-    if (!density) verts0 = verts0.drop("density")
     val faces = tris.toSeq
       .map(t => (ids(t._1), ids(t._2), ids(t._3)))
       .toDF("a", "b", "c")
-
-    // ---- 6. reference parity: re-estimate normals on the output
-    val verts =
-      if (!outputNormals) verts0
-      else {
-        val nf = EigenFeatures(verts0.select("order_key", "x", "y", "z"), k = 8)
-          .select(col("order_key"), col("normal_x"), col("normal_y"),
-            col("normal_z"))
-        verts0.join(nf, Seq("order_key"), "left")
-      }
-    PoissonResult(Mat(verts), Mat(faces))
+    (if (density) verts0 else verts0.drop("density"), faces)
   }
 
   private def emptyResult(spark: SparkSession, density: Boolean,
@@ -593,112 +607,75 @@ object Poisson extends Serializable {
   /** Smooth the splat field and emit sparse rows (i,j,k,f,w): f = div of
     * the smoothed normal field, w = the smoothed splat weight. */
   private def stageSmoothDiv(spark: SparkSession, splat: DataFrame, m: Int,
-      hs: Double, passes: Int, tileSize: Int, localNodes: Long): DataFrame = {
+      hs: Double, passes: Int, tileSize: Int): DataFrame = {
     import spark.implicits._
     val halo = passes + 1
-    if (m.toLong * m * m <= localNodes) {
-      val rows = splat.collect()
-      val vx = new Array[Double](m * m * m); val vy = new Array[Double](vx.length)
-      val vz = new Array[Double](vx.length); val w = new Array[Double](vx.length)
-      rows.foreach { r =>
-        val c = (r.getInt(2) * m + r.getInt(1)) * m + r.getInt(0)
-        vx(c) = r.getDouble(3); vy(c) = r.getDouble(4); vz(c) = r.getDouble(5)
-        w(c) = r.getDouble(6)
-      }
-      val sx = smoothPatch(vx, m, m, m, passes)
-      val sy = smoothPatch(vy, m, m, m, passes)
-      val sz = smoothPatch(vz, m, m, m, passes)
-      val sw = smoothPatch(w, m, m, m, passes)
-      val f = divergencePatch(sx, sy, sz, m, m, m, 0, 0, 0, m, hs)
-      val out = for {
-        c <- f.indices if f(c) != 0.0 || sw(c) != 0.0
-      } yield (c % m, (c / m) % m, c / (m * m), f(c), sw(c))
-      spark.createDataFrame(out).toDF("i", "j", "k", "f", "w")
-    } else {
-      val t = tileSize
-      withTiles(splat, m, t, halo)
-        .select(col("__tx"), col("__ty"), col("__tz"), col("i"), col("j"),
-          col("k"), col("vx"), col("vy"), col("vz"), col("w"))
-        .as[(Int, Int, Int, Int, Int, Int, Double, Double, Double, Double)]
-        .groupByKey(r => (r._1, r._2, r._3)).flatMapGroups { (tk, it) =>
-          val ((gx0, gy0, gz0), (pw, ph, pd), (cx0, cy0, cz0, cx1, cy1, cz1)) =
-            patchBox(tk._1, tk._2, tk._3, t, halo, m)
-          val vx = new Array[Double](pw * ph * pd)
-          val vy = new Array[Double](vx.length); val vz = new Array[Double](vx.length)
-          val w = new Array[Double](vx.length)
-          it.foreach { r =>
-            val c = ((r._6 - gz0) * ph + (r._5 - gy0)) * pw + (r._4 - gx0)
-            vx(c) = r._7; vy(c) = r._8; vz(c) = r._9; w(c) = r._10
-          }
-          val sx = smoothPatch(vx, pw, ph, pd, passes)
-          val sy = smoothPatch(vy, pw, ph, pd, passes)
-          val sz = smoothPatch(vz, pw, ph, pd, passes)
-          val sw = smoothPatch(w, pw, ph, pd, passes)
-          val f = divergencePatch(sx, sy, sz, pw, ph, pd, gx0, gy0, gz0, m, hs)
-          for {
-            gk <- (cz0 until cz1).iterator; gj <- (cy0 until cy1).iterator
-            gi <- (cx0 until cx1).iterator
-            c = ((gk - gz0) * ph + (gj - gy0)) * pw + (gi - gx0)
-            if f(c) != 0.0 || sw(c) != 0.0
-          } yield (gi, gj, gk, f(c), sw(c))
-        }.toDF("i", "j", "k", "f", "w")
-    }
+    val t = tileSize
+    withTiles(splat, m, t, halo)
+      .select(col("__tx"), col("__ty"), col("__tz"), col("i"), col("j"),
+        col("k"), col("vx"), col("vy"), col("vz"), col("w"))
+      .as[(Int, Int, Int, Int, Int, Int, Double, Double, Double, Double)]
+      .groupByKey(r => (r._1, r._2, r._3)).flatMapGroups { (tk, it) =>
+        val ((gx0, gy0, gz0), (pw, ph, pd), (cx0, cy0, cz0, cx1, cy1, cz1)) =
+          patchBox(tk._1, tk._2, tk._3, t, halo, m)
+        val vx = new Array[Double](pw * ph * pd)
+        val vy = new Array[Double](vx.length); val vz = new Array[Double](vx.length)
+        val w = new Array[Double](vx.length)
+        it.foreach { r =>
+          val c = ((r._6 - gz0) * ph + (r._5 - gy0)) * pw + (r._4 - gx0)
+          vx(c) = r._7; vy(c) = r._8; vz(c) = r._9; w(c) = r._10
+        }
+        val sx = smoothPatch(vx, pw, ph, pd, passes)
+        val sy = smoothPatch(vy, pw, ph, pd, passes)
+        val sz = smoothPatch(vz, pw, ph, pd, passes)
+        val sw = smoothPatch(w, pw, ph, pd, passes)
+        val f = divergencePatch(sx, sy, sz, pw, ph, pd, gx0, gy0, gz0, m, hs)
+        for {
+          gk <- (cz0 until cz1).iterator; gj <- (cy0 until cy1).iterator
+          gi <- (cx0 until cx1).iterator
+          c = ((gk - gz0) * ph + (gj - gy0)) * pw + (gi - gx0)
+          if f(c) != 0.0 || sw(c) != 0.0
+        } yield (gi, gj, gk, f(c), sw(c))
+      }.toDF("i", "j", "k", "f", "w")
   }
 
   /** Run `iters` Jacobi sweeps on state rows (i,j,k,chi,f) at grid m,
     * blocked `blockIters` per tile round; emits sparse state rows. */
   private def stageJacobi(spark: SparkSession, state0: DataFrame, m: Int,
-      h2: Double, iters: Int, tileSize: Int, blockIters: Int,
-      localNodes: Long): DataFrame = {
+      h2: Double, iters: Int, tileSize: Int, blockIters: Int): DataFrame = {
     import spark.implicits._
-    if (m.toLong * m * m <= localNodes) {
-      val rows = state0.collect()
-      val chi = new Array[Double](m * m * m); val f = new Array[Double](chi.length)
-      rows.foreach { r =>
-        val c = (r.getInt(2) * m + r.getInt(1)) * m + r.getInt(0)
-        chi(c) = r.getDouble(3); f(c) = r.getDouble(4)
-      }
-      val out = jacobiPatch(chi, f, m, m, m, 0, 0, 0, m, h2, iters)
-      val res = for {
-        c <- out.indices if out(c) != 0.0 || f(c) != 0.0
-      } yield (c % m, (c / m) % m, c / (m * m), out(c), f(c))
-      spark.createDataFrame(res).toDF("i", "j", "k", "chi", "f")
-    } else {
-      var cur = Mat(state0, eager = false)
-      var used = 0
-      val t = tileSize
-      while (used < iters) {
-        val k = math.min(blockIters, iters - used)
-        val next = withTiles(cur, m, t, k)
-          .select(col("__tx"), col("__ty"), col("__tz"), col("i"), col("j"),
-            col("k"), col("chi"), col("f"))
-          .as[(Int, Int, Int, Int, Int, Int, Double, Double)]
-          .groupByKey(r => (r._1, r._2, r._3)).flatMapGroups { (tk, it) =>
-            val ((gx0, gy0, gz0), (pw, ph, pd), (cx0, cy0, cz0, cx1, cy1, cz1)) =
-              patchBox(tk._1, tk._2, tk._3, t, k, m)
-            val chi = new Array[Double](pw * ph * pd)
-            val f = new Array[Double](chi.length)
-            it.foreach { r =>
-              val c = ((r._6 - gz0) * ph + (r._5 - gy0)) * pw + (r._4 - gx0)
-              chi(c) = r._7; f(c) = r._8
-            }
-            val out = jacobiPatch(chi, f, pw, ph, pd, gx0, gy0, gz0, m, h2, k)
-            for {
-              gk <- (cz0 until cz1).iterator; gj <- (cy0 until cy1).iterator
-              gi <- (cx0 until cx1).iterator
-              c = ((gk - gz0) * ph + (gj - gy0)) * pw + (gi - gx0)
-              if out(c) != 0.0 || f(c) != 0.0
-            } yield (gi, gj, gk, out(c), f(c))
-          }.toDF("i", "j", "k", "chi", "f")
-        cur = Mat(next)
-        used += k
-      }
-      cur
+    var cur = Mat(state0, eager = false)
+    var used = 0
+    val t = tileSize
+    while (used < iters) {
+      val k = math.min(blockIters, iters - used)
+      val next = withTiles(cur, m, t, k)
+        .select(col("__tx"), col("__ty"), col("__tz"), col("i"), col("j"),
+          col("k"), col("chi"), col("f"))
+        .as[(Int, Int, Int, Int, Int, Int, Double, Double)]
+        .groupByKey(r => (r._1, r._2, r._3)).flatMapGroups { (tk, it) =>
+          val ((gx0, gy0, gz0), (pw, ph, pd), (cx0, cy0, cz0, cx1, cy1, cz1)) =
+            patchBox(tk._1, tk._2, tk._3, t, k, m)
+          val chi = new Array[Double](pw * ph * pd)
+          val f = new Array[Double](chi.length)
+          it.foreach { r =>
+            val c = ((r._6 - gz0) * ph + (r._5 - gy0)) * pw + (r._4 - gx0)
+            chi(c) = r._7; f(c) = r._8
+          }
+          val out = jacobiPatch(chi, f, pw, ph, pd, gx0, gy0, gz0, m, h2, k)
+          for {
+            gk <- (cz0 until cz1).iterator; gj <- (cy0 until cy1).iterator
+            gi <- (cx0 until cx1).iterator
+            c = ((gk - gz0) * ph + (gj - gy0)) * pw + (gi - gx0)
+            if out(c) != 0.0 || f(c) != 0.0
+          } yield (gi, gj, gk, out(c), f(c))
+        }.toDF("i", "j", "k", "chi", "f")
+      cur = Mat(next)
+      used += k
     }
+    cur
   }
 
-  /** Trilinear prolongation of a coarse solution (grid mc) to the next
-    * finer grid (mf = 2*(mc-1)+1); emits sparse (i,j,k,chi) rows. */
   /** Trilinear interpolation of one fine node from a dense coarse patch;
     * fine node -> coarse coords gi/2 etc; odd coords average the two
     * flanking coarse nodes per axis (fixed fold order: z, y, x). */
@@ -725,55 +702,41 @@ object Poisson extends Serializable {
     s
   }
 
+  /** Trilinear prolongation of a coarse solution (grid mc) to the next
+    * finer grid (mf = 2*(mc-1)+1); emits sparse (i,j,k,chi) rows. */
   private def stageProlong(spark: SparkSession, coarse: DataFrame, mc: Int,
-      mf: Int, tileSize: Int, localNodes: Long): DataFrame = {
+      mf: Int, tileSize: Int): DataFrame = {
     import spark.implicits._
-    def interp(cc: Array[Double], pw: Int, ph: Int, pd: Int, gx0: Int,
-        gy0: Int, gz0: Int, gi: Int, gj: Int, gk: Int): Double =
-      prolongInterp(cc, pw, ph, pd, gx0, gy0, gz0, gi, gj, gk)
-    if (mf.toLong * mf * mf <= localNodes) {
-      val rows = coarse.select("i", "j", "k", "chi").collect()
-      val cc = new Array[Double](mc * mc * mc)
-      rows.foreach { r =>
-        cc((r.getInt(2) * mc + r.getInt(1)) * mc + r.getInt(0)) = r.getDouble(3)
-      }
-      val out = for {
-        gk <- 0 until mf; gj <- 0 until mf; gi <- 0 until mf
-        v = interp(cc, mc, mc, mc, 0, 0, 0, gi, gj, gk) if v != 0.0
-      } yield (gi, gj, gk, v)
-      spark.createDataFrame(out).toDF("i", "j", "k", "chi")
-    } else {
-      // key coarse rows by DOUBLED coords so fine tile halo-2 covers the
-      // coarse stencil of every fine core node
-      val t = tileSize
-      val doubled = coarse.select((col("i") * 2).as("i"), (col("j") * 2).as("j"),
-        (col("k") * 2).as("k"), col("chi"))
-      withTiles(doubled, mf, t, 2)
-        .select(col("__tx"), col("__ty"), col("__tz"), col("i"), col("j"),
-          col("k"), col("chi"))
-        .as[(Int, Int, Int, Int, Int, Int, Double)]
-        .groupByKey(r => (r._1, r._2, r._3)).flatMapGroups { (tk, it) =>
-          val ((gx0, gy0, gz0), (pw0, ph0, pd0), (cx0, cy0, cz0, cx1, cy1, cz1)) =
-            patchBox(tk._1, tk._2, tk._3, t, 2, mf)
-          // coarse patch covering [gx0,gx0+pw0) in fine coords
-          val px0 = gx0 >> 1; val py0 = gy0 >> 1; val pz0 = gz0 >> 1
-          val pw = ((gx0 + pw0 - 1) >> 1) - px0 + 2
-          val ph = ((gy0 + ph0 - 1) >> 1) - py0 + 2
-          val pd = ((gz0 + pd0 - 1) >> 1) - pz0 + 2
-          val cc = new Array[Double](pw * ph * pd)
-          it.foreach { r =>
-            val ci = (r._4 >> 1) - px0; val cj = (r._5 >> 1) - py0
-            val ck = (r._6 >> 1) - pz0
-            if (ci >= 0 && ci < pw && cj >= 0 && cj < ph && ck >= 0 && ck < pd)
-              cc((ck * ph + cj) * pw + ci) = r._7
-          }
-          for {
-            gk <- (cz0 until cz1).iterator; gj <- (cy0 until cy1).iterator
-            gi <- (cx0 until cx1).iterator
-            v = interp(cc, pw, ph, pd, px0, py0, pz0, gi, gj, gk) if v != 0.0
-          } yield (gi, gj, gk, v)
-        }.toDF("i", "j", "k", "chi")
-    }
+    // key coarse rows by DOUBLED coords so fine tile halo-2 covers the
+    // coarse stencil of every fine core node
+    val t = tileSize
+    val doubled = coarse.select((col("i") * 2).as("i"), (col("j") * 2).as("j"),
+      (col("k") * 2).as("k"), col("chi"))
+    withTiles(doubled, mf, t, 2)
+      .select(col("__tx"), col("__ty"), col("__tz"), col("i"), col("j"),
+        col("k"), col("chi"))
+      .as[(Int, Int, Int, Int, Int, Int, Double)]
+      .groupByKey(r => (r._1, r._2, r._3)).flatMapGroups { (tk, it) =>
+        val ((gx0, gy0, gz0), (pw0, ph0, pd0), (cx0, cy0, cz0, cx1, cy1, cz1)) =
+          patchBox(tk._1, tk._2, tk._3, t, 2, mf)
+        // coarse patch covering [gx0,gx0+pw0) in fine coords
+        val px0 = gx0 >> 1; val py0 = gy0 >> 1; val pz0 = gz0 >> 1
+        val pw = ((gx0 + pw0 - 1) >> 1) - px0 + 2
+        val ph = ((gy0 + ph0 - 1) >> 1) - py0 + 2
+        val pd = ((gz0 + pd0 - 1) >> 1) - pz0 + 2
+        val cc = new Array[Double](pw * ph * pd)
+        it.foreach { r =>
+          val ci = (r._4 >> 1) - px0; val cj = (r._5 >> 1) - py0
+          val ck = (r._6 >> 1) - pz0
+          if (ci >= 0 && ci < pw && cj >= 0 && cj < ph && ck >= 0 && ck < pd)
+            cc((ck * ph + cj) * pw + ci) = r._7
+        }
+        for {
+          gk <- (cz0 until cz1).iterator; gj <- (cy0 until cy1).iterator
+          gi <- (cx0 until cx1).iterator
+          v = prolongInterp(cc, pw, ph, pd, px0, py0, pz0, gi, gj, gk) if v != 0.0
+        } yield (gi, gj, gk, v)
+      }.toDF("i", "j", "k", "chi")
   }
 
   // Kuhn 6-tet decomposition: each tet is (0, p1, p1|p2, 7) for a
@@ -913,46 +876,32 @@ object Poisson extends Serializable {
   }
 
   /** March the isosurface: emit one row per triangle with canonical
-    * edge keys and bit-exact edge-vertex positions. */
+    * edge keys and bit-exact edge-vertex positions. `chiDf` carries
+    * (i,j,k,chi,w): w is the smoothed splat weight, the kernel-density
+    * analog — per-vertex density interpolates it along the crossing
+    * edge. */
   private def stageMarch(spark: SparkSession, chiDf: DataFrame, m: Int,
       ox: Double, oy: Double, oz: Double, hs: Double, iso: Double,
-      tileSize: Int, localNodes: Long): DataFrame = {
+      tileSize: Int): DataFrame = {
     import spark.implicits._
-    val m3 = m.toLong * m * m
     val marchPatch = marcher(m, ox, oy, oz, hs, iso)
-    val cols = Seq("k0", "k1", "k2", "x0", "y0", "z0", "d0", "x1", "y1", "z1",
-      "d1", "x2", "y2", "z2", "d2")
-    // chiDf carries (i,j,k,chi,w): w is the smoothed splat weight, the
-    // kernel-density analog — per-vertex density interpolates it along
-    // the crossing edge.
-    if (m3 <= localNodes) {
-      val rows = chiDf.select("i", "j", "k", "chi", "w").collect()
-      val chi = new Array[Double](m * m * m)
-      val dens = new Array[Double](chi.length)
-      rows.foreach { r =>
-        val c = (r.getInt(2) * m + r.getInt(1)) * m + r.getInt(0)
-        chi(c) = r.getDouble(3); dens(c) = r.getDouble(4)
-      }
-      marchPatch(chi, dens, m, m, m, 0, 0, 0, 0, 0, 0, m, m, m).toSeq
-        .toDF(cols: _*)
-    } else {
-      val t = tileSize
-      withTiles(chiDf, m, t, 1)
-        .select(col("__tx"), col("__ty"), col("__tz"), col("i"), col("j"),
-          col("k"), col("chi"), col("w"))
-        .as[(Int, Int, Int, Int, Int, Int, Double, Double)]
-        .groupByKey(r => (r._1, r._2, r._3)).flatMapGroups { (tk, it) =>
-          val ((gx0, gy0, gz0), (pw, ph, pd), (cx0, cy0, cz0, cx1, cy1, cz1)) =
-            patchBox(tk._1, tk._2, tk._3, t, 1, m)
-          val chi = new Array[Double](pw * ph * pd)
-          val dens = new Array[Double](chi.length)
-          it.foreach { r =>
-            val c = ((r._6 - gz0) * ph + (r._5 - gy0)) * pw + (r._4 - gx0)
-            chi(c) = r._7; dens(c) = r._8
-          }
-          marchPatch(chi, dens, pw, ph, pd, gx0, gy0, gz0, cx0, cy0, cz0,
-            cx1, cy1, cz1)
-        }.toDF(cols: _*)
-    }
+    val t = tileSize
+    withTiles(chiDf, m, t, 1)
+      .select(col("__tx"), col("__ty"), col("__tz"), col("i"), col("j"),
+        col("k"), col("chi"), col("w"))
+      .as[(Int, Int, Int, Int, Int, Int, Double, Double)]
+      .groupByKey(r => (r._1, r._2, r._3)).flatMapGroups { (tk, it) =>
+        val ((gx0, gy0, gz0), (pw, ph, pd), (cx0, cy0, cz0, cx1, cy1, cz1)) =
+          patchBox(tk._1, tk._2, tk._3, t, 1, m)
+        val chi = new Array[Double](pw * ph * pd)
+        val dens = new Array[Double](chi.length)
+        it.foreach { r =>
+          val c = ((r._6 - gz0) * ph + (r._5 - gy0)) * pw + (r._4 - gx0)
+          chi(c) = r._7; dens(c) = r._8
+        }
+        marchPatch(chi, dens, pw, ph, pd, gx0, gy0, gz0, cx0, cy0, cz0,
+          cx1, cy1, cz1)
+      }.toDF("k0", "k1", "k2", "x0", "y0", "z0", "d0", "x1", "y1", "z1",
+        "d1", "x2", "y2", "z2", "d2")
   }
 }

@@ -103,9 +103,9 @@ object Voxel {
   * O(log n) for shuffled order (dependency-chain depth).
   */
 object Sample {
-  /** GRAFT_SAMPLE_LOCAL_EDGES overrides; 0 pins the distributed loop. */
-  private[graft] val localEdgeLimit: Long =
-    sys.env.get("GRAFT_SAMPLE_LOCAL_EDGES").map(_.toLong).getOrElse(1L << 21)
+  /** Conflict-edge count at or below which the greedy runs on the
+    * driver; `localLimit` 0 pins the distributed fixpoint. */
+  private[graft] val localEdgeLimit: Long = 1L << 21
 
   def apply(df: DataFrame, radius: Double): DataFrame =
     apply(df, radius, localEdgeLimit)

@@ -77,7 +77,7 @@ class ExtrasSpec extends AnyFunSuite {
       Cluster(df, tolerance = 3.0, minPoints = 1, "cluster_id", limit)
         .select("order_key", "cluster_id").collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val fast = labelsOf(Cluster.localEdgeLimit) // edges << limit: fast path
+    val fast = labelsOf(Components.localEdgeLimit) // edges << limit: fast path
     val dist = labelsOf(0L)                     // pinned distributed loop
     assert(fast == dist, "fast-path labels must equal the distributed loop's")
     // each ~50-unit chain spans ~17 tolerance cells -> every component's

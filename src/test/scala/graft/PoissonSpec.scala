@@ -151,6 +151,44 @@ class PoissonSpec extends AnyFunSuite {
     assert(fa == fb, s"faces differ: ${fa.size} vs ${fb.size}")
   }
 
+  /** edge_key -> vertex coordinates, and faces as vertex-id triples. */
+  private def mesh(res: graft.operators.PoissonResult) = (
+    res.vertices.select("edge_key", "x", "y", "z").collect()
+      .map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap,
+    res.faces.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)
+
+  test("hybrid regime (coarse levels dense, finest tiled) == whole pyramid == fully tiled") {
+    // localNodes 9^3: levels 2-3 run as the dense driver cascade, level 4
+    // by tiles — the split filters.poisson's default depth 8 runs
+    // (129^3 <= 2^22 < 257^3)
+    val df = sphere(800, 10.0, 5.0, 5.0, 5.0)
+    def run(localNodes: Long) = mesh(Poisson(df, depth = 4, iterations = 24,
+      outputNormals = false, localNodes = localNodes, tileSize = 6, blockIters = 5))
+    val (vh, fh) = run(9L * 9 * 9)
+    for ((other, name) <- Seq(Long.MaxValue -> "whole pyramid", 0L -> "fully tiled")) {
+      val (vo, fo) = run(other)
+      assert(vh.keySet == vo.keySet, s"$name: edge sets differ: ${vh.size} vs ${vo.size}")
+      for ((k, (x, y, z)) <- vh; (x2, y2, z2) = vo(k)) {
+        assert(math.abs(x - x2) < 1e-9 && math.abs(y - y2) < 1e-9 &&
+          math.abs(z - z2) < 1e-9, s"$name: edge $k moved")
+      }
+      assert(fh == fo, s"$name: faces differ: ${fh.size} vs ${fo.size}")
+    }
+  }
+
+  test("whole-pyramid regime: 9 Spark jobs, 17 with output normals") {
+    // the driver path's job budget: a change that adds a Spark job to
+    // the whole-pyramid regime (or routes it through the tiled stages)
+    // fails here. A cached plan left by an earlier failed call would
+    // serve a job's input, so start from an empty cache.
+    spark.catalog.clearCache()
+    val df = sphere(800, 10.0, 5.0, 5.0, 5.0)
+    assert(jobsOf(Poisson(df, depth = 4, iterations = 24,
+      outputNormals = false, localNodes = Long.MaxValue)) == 9)
+    assert(jobsOf(Poisson(df, depth = 4, iterations = 24,
+      localNodes = Long.MaxValue)) == 17)
+  }
+
   test("q59 regime: 1000-point sphere invariants (euler 2, manifold, radius tolerance)") {
     // exactly the driver query's construction — proves the q59 oracle
     // constants (2, 0, 0, 0) hold at its sample count and depth
