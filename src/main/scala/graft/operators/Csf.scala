@@ -27,9 +27,7 @@ import graft.expr.DimRange
   * doubleMove1/singleMove1[rigidness]) over a per-iteration snapshot of
   * positions and movability. Every update is a convex combination, so
   * the pass is unconditionally stable, and the result is a pure
-  * function of the input at ANY parallelism — the local fast path and
-  * the tiled distributed path are bitwise identical (differential
-  * spec).
+  * function of the input at ANY parallelism and tiling.
   *
   * Scale design: points are touched exactly twice — one groupBy to
   * rasterize the inverted surface (argmin distance to the cell's
@@ -40,20 +38,18 @@ import graft.expr.DimRange
   * (ranged window functions per row/column), and the simulation runs
   * `blockIters` iterations per shuffle round on tile+halo patches
   * (constraints reach 2 cells/iteration, so halo = 2*blockIters + 2
-  * certifies tile cores exactly); grids under `localCells` run the
-  * same kernel in one driver pass instead. Early stop (maxDiff <
-  * 0.005, CSF.cpp:176-180) is evaluated at block granularity in both
-  * paths (bounded drift: < 0.005 * blockIters of cloth travel past the
+  * certifies tile cores exactly). Early stop (maxDiff < 0.005,
+  * CSF.cpp:176-180) is evaluated at block granularity (bounded
+  * drift: < 0.005 * blockIters of cloth travel past the
   * reference's stop point, well under the 0.5 classification
   * threshold). */
 object Csf {
   def apply(df: DataFrame, smooth: Boolean = true, step: Double = 0.65,
       threshold: Double = 0.5, resolution: Double = 1.0, rigidness: Int = 3,
       iterations: Int = 500, returns: Seq[String] = Seq(Returns.Last, Returns.Only),
-      ignore: Option[String] = None, tileSize: Int = 2048, blockIters: Int = 25,
-      localCells: Long = 1L << 21): DataFrame = {
+      ignore: Option[String] = None, tileSize: Int = 2048,
+      blockIters: Int = 25): DataFrame = {
     val spark = df.sparkSession
-    import spark.implicits._
     val (inliers0, passthrough) = GroundSeg.segment(df, returns, ignore)
     val inliersP = inliers0.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -138,33 +134,11 @@ object Csf {
       .withColumn("pos", lit(top)).withColumn("old", lit(top))
       .withColumn("movable", lit(true))
 
-    // ---- simulate (+ slope post-processing fused in the local path:
-    // one collect / one rebuild instead of two round trips)
-    val smoothed = if (w.toLong * h <= localCells) {
-      val st = ClothSim.GridState(w, h)
-      grid.select("gx", "gy", "hv", "pos", "old", "movable").collect().foreach { r =>
-        val i = r.getInt(1) * w + r.getInt(0)
-        st.hv(i) = r.getDouble(2); st.pos(i) = r.getDouble(3)
-        st.old(i) = r.getDouble(4); st.movable(i) = r.getBoolean(5)
-      }
-      var used = 0; var stop = false
-      while (used < iterations && !stop) {
-        val k = math.min(blockIters, iterations - used)
-        val diffs = ClothSim.run(st, w, h, 0, 0, w, h, 0, 0, k, rigidness, step)
-        if (diffs.exists(d => d != 0 && d < 0.005)) stop = true
-        if (!st.movable.exists(identity)) stop = true
-        used += k
-      }
-      if (smooth) ClothSim.movableFilterLocal(st, w, h)
-      val rows = (0 until w * h).map { i =>
-        (i % w, i / w, st.hv(i), st.pos(i), st.old(i), st.movable(i))
-      }
-      spark.createDataFrame(rows).toDF("gx", "gy", "hv", "pos", "old", "movable")
-    } else {
-      val settled = simulate(spark, grid, w, h, step, rigidness, iterations,
-        blockIters, tileSize)
+    // ---- simulate + slope post-processing
+    val settled = simulate(grid, w, h, step, rigidness, iterations,
+      blockIters, tileSize)
+    val smoothed =
       if (smooth) movableFilter(spark, settled, w, h, tileSize) else settled
-    }
 
     // ---- classify (c2cdist.cpp:21-60): bilinear cloth height at each
     // point (truncating corner cell, fractional weights), |fxy - ch| <
@@ -208,12 +182,10 @@ object Csf {
   }
 
   /** Run `iterations` cloth steps as tile+halo rounds of `blockIters`
-    * steps (the local fast path lives in apply, fused with the smooth
-    * pass). */
-  private def simulate(spark: SparkSession, grid0: DataFrame, w: Int, h: Int,
+    * steps. */
+  private def simulate(grid0: DataFrame, w: Int, h: Int,
       step: Double, rigid: Int, iterations: Int, blockIters: Int,
       tileSize: Int): DataFrame = {
-    import spark.implicits._
     var cur = Mat(grid0)
     var used = 0; var stop = false
     while (used < iterations && !stop) {
@@ -299,113 +271,111 @@ object Csf {
   private def movableFilter(spark: SparkSession, settled: DataFrame,
       w: Int, h: Int, tileSize: Int): DataFrame = {
     import spark.implicits._
-    locally {
-      // component sizes: per-tile union-find over the movable mask,
-      // border adjacencies merged on the driver (two-phase CC)
-      val t = tileSize
-      val cells = settled.select(col("gx"), col("gy"), col("movable"))
-        .filter(col("movable"))
-        .withColumn("__tx", (col("gx") / t).cast("int"))
-        .withColumn("__ty", (col("gy") / t).cast("int"))
-        .as[(Int, Int, Boolean, Int, Int)]
-      val perTile = cells.groupByKey(r => (r._4, r._5)).flatMapGroups { (tk, it) =>
-        val arr = it.map(r => (r._1, r._2)).toArray
-        val idx = arr.zipWithIndex.toMap
-        val uf = new ClothSim.UnionFind(arr.length)
-        for (((gx, gy), i) <- idx) {
-          idx.get((gx + 1, gy)).foreach(uf.union(i, _))
-          idx.get((gx, gy + 1)).foreach(uf.union(i, _))
-        }
-        // (cell key, tile-local root key); border cells additionally
-        // emit (rootKey, borderKey) pairs for the driver merge
-        arr.indices.iterator.map { i =>
-          val (gx, gy) = arr(i); val (rx, ry) = arr(uf.find(i))
-          (gx.toLong * h + gy, rx.toLong * h + ry,
-            gx % t == 0 || gx % t == t - 1 || gy % t == 0 || gy % t == t - 1)
-        }
-      }.toDF("cell", "root", "border").persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // driver merge of cross-tile adjacencies between border cells
-      val borders = perTile.filter(col("border"))
-        .select("cell", "root").as[(Long, Long)].collect().toMap
-      val bUf = new scala.collection.mutable.HashMap[Long, Long]
-      def bFind(x: Long): Long = {
-        val p = bUf.getOrElse(x, x)
-        if (p == x) x else { val r = bFind(p); bUf(x) = r; r }
+    // component sizes: per-tile union-find over the movable mask,
+    // border adjacencies merged on the driver (two-phase CC)
+    val t = tileSize
+    val cells = settled.select(col("gx"), col("gy"), col("movable"))
+      .filter(col("movable"))
+      .withColumn("__tx", (col("gx") / t).cast("int"))
+      .withColumn("__ty", (col("gy") / t).cast("int"))
+      .as[(Int, Int, Boolean, Int, Int)]
+    val perTile = cells.groupByKey(r => (r._4, r._5)).flatMapGroups { (tk, it) =>
+      val arr = it.map(r => (r._1, r._2)).toArray
+      val idx = arr.zipWithIndex.toMap
+      val uf = new ClothSim.UnionFind(arr.length)
+      for (((gx, gy), i) <- idx) {
+        idx.get((gx + 1, gy)).foreach(uf.union(i, _))
+        idx.get((gx, gy + 1)).foreach(uf.union(i, _))
       }
-      for ((cell, root) <- borders) {
-        val gx = (cell / h).toInt; val gy = (cell % h).toInt
-        for ((nx, ny) <- Seq((gx + 1, gy), (gx, gy + 1))
-             if nx / t != gx / t || ny / t != gy / t) {
-          borders.get(nx.toLong * h + ny).foreach { nroot =>
-            val (a, b) = (bFind(root), bFind(nroot))
-            if (a != b) bUf(math.max(a, b)) = math.min(a, b)
-          }
-        }
+      // (cell key, tile-local root key); border cells additionally
+      // emit (rootKey, borderKey) pairs for the driver merge
+      arr.indices.iterator.map { i =>
+        val (gx, gy) = arr(i); val (rx, ry) = arr(uf.find(i))
+        (gx.toLong * h + gy, rx.toLong * h + ry,
+          gx % t == 0 || gx % t == t - 1 || gy % t == 0 || gy % t == t - 1)
       }
-      val rootMap = borders.values.toSet.map((r: Long) => r -> bFind(r)).toMap
-      // driver-merged (root -> global label) relabeling as a broadcast
-      // join (codegen'd hash lookup) rather than a per-row UDF; roots
-      // absent from the border merge keep their tile-local label.
-      val rootMapDf = rootMap.toSeq.toDF("root", "mlabel")
-      val labeled = perTile
-        .join(broadcast(rootMapDf), Seq("root"), "left")
-        .withColumn("label", coalesce(col("mlabel"), col("root")))
-      val bigLabels = labeled.groupBy("label").agg(count(lit(1)).as("n"))
-        .filter(col("n") > 50).select("label")
-      val inBig = labeled
-        .join(broadcast(bigLabels), Seq("label"), "left_semi")
-        .select((col("cell") / h).cast("int").as("gx"),
-          (col("cell") % h).cast("int").as("gy"), lit(true).as("big"))
-      // iterate per-tile clamp fixpoints (frozen halo) until stable
-      var cur = Mat(settled.join(inBig, Seq("gx", "gy"), "left")
-        .withColumn("big", coalesce(col("big"), lit(false))))
-      var changedTotal = 1L
-      while (changedTotal > 0) {
-        val round = cur
-          .withColumn("__tx", explode(sequence(
-            greatest(lit(0), floor((col("gx") - 1).cast("double") / t).cast("int")),
-            least(lit((w - 1) / t), floor((col("gx") + 1).cast("double") / t).cast("int")))))
-          .withColumn("__ty", explode(sequence(
-            greatest(lit(0), floor((col("gy") - 1).cast("double") / t).cast("int")),
-            least(lit((h - 1) / t), floor((col("gy") + 1).cast("double") / t).cast("int")))))
-          .select(col("__tx"), col("__ty"), col("gx"), col("gy"), col("hv"),
-            col("pos"), col("old"), col("movable"), col("big"))
-          .as[(Int, Int, Int, Int, Double, Double, Double, Boolean, Boolean)]
-          .groupByKey(r => (r._1, r._2)).flatMapGroups { (tk, it) =>
-            val (tx, ty) = tk
-            val gx0 = math.max(0, tx * t - 1); val gx1 = math.min(w, (tx + 1) * t + 1)
-            val gy0 = math.max(0, ty * t - 1); val gy1 = math.min(h, (ty + 1) * t + 1)
-            val pw = gx1 - gx0; val ph = gy1 - gy0
-            val st = ClothSim.GridState(pw, ph)
-            val big = new Array[Boolean](pw * ph)
-            it.foreach { r =>
-              val i = (r._4 - gy0) * pw + (r._3 - gx0)
-              st.hv(i) = r._5; st.pos(i) = r._6; st.old(i) = r._7
-              st.movable(i) = r._8; big(i) = r._9
-            }
-            val changed = ClothSim.clampFixpoint(st, big, pw, ph)
-            val cx0 = tx * t; val cx1 = math.min(w, (tx + 1) * t)
-            val cy0 = ty * t; val cy1 = math.min(h, (ty + 1) * t)
-            for {
-              gy <- (cy0 until cy1).iterator; gx <- (cx0 until cx1).iterator
-            } yield {
-              val i = (gy - gy0) * pw + (gx - gx0)
-              (gx, gy, st.hv(i), st.pos(i), st.old(i), st.movable(i), big(i),
-                changed.contains(i))
-            }
-          }.toDF("gx", "gy", "hv", "pos", "old", "movable", "big", "changed")
-        val (mat, n) = Mat.withChangedCount(round, col("changed"))
-        changedTotal = n
-        cur = mat.drop("changed")
-      }
-      perTile.unpersist(false)
-      cur.drop("big")
+    }.toDF("cell", "root", "border").persist(
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // driver merge of cross-tile adjacencies between border cells
+    val borders = perTile.filter(col("border"))
+      .select("cell", "root").as[(Long, Long)].collect().toMap
+    val bUf = new scala.collection.mutable.HashMap[Long, Long]
+    def bFind(x: Long): Long = {
+      val p = bUf.getOrElse(x, x)
+      if (p == x) x else { val r = bFind(p); bUf(x) = r; r }
     }
+    for ((cell, root) <- borders) {
+      val gx = (cell / h).toInt; val gy = (cell % h).toInt
+      for ((nx, ny) <- Seq((gx + 1, gy), (gx, gy + 1))
+           if nx / t != gx / t || ny / t != gy / t) {
+        borders.get(nx.toLong * h + ny).foreach { nroot =>
+          val (a, b) = (bFind(root), bFind(nroot))
+          if (a != b) bUf(math.max(a, b)) = math.min(a, b)
+        }
+      }
+    }
+    val rootMap = borders.values.toSet.map((r: Long) => r -> bFind(r)).toMap
+    // driver-merged (root -> global label) relabeling as a broadcast
+    // join (codegen'd hash lookup) rather than a per-row UDF; roots
+    // absent from the border merge keep their tile-local label.
+    val rootMapDf = rootMap.toSeq.toDF("root", "mlabel")
+    val labeled = perTile
+      .join(broadcast(rootMapDf), Seq("root"), "left")
+      .withColumn("label", coalesce(col("mlabel"), col("root")))
+    val bigLabels = labeled.groupBy("label").agg(count(lit(1)).as("n"))
+      .filter(col("n") > 50).select("label")
+    val inBig = labeled
+      .join(broadcast(bigLabels), Seq("label"), "left_semi")
+      .select((col("cell") / h).cast("int").as("gx"),
+        (col("cell") % h).cast("int").as("gy"), lit(true).as("big"))
+    // iterate per-tile clamp fixpoints (frozen halo) until stable
+    var cur = Mat(settled.join(inBig, Seq("gx", "gy"), "left")
+      .withColumn("big", coalesce(col("big"), lit(false))))
+    var changedTotal = 1L
+    while (changedTotal > 0) {
+      val round = cur
+        .withColumn("__tx", explode(sequence(
+          greatest(lit(0), floor((col("gx") - 1).cast("double") / t).cast("int")),
+          least(lit((w - 1) / t), floor((col("gx") + 1).cast("double") / t).cast("int")))))
+        .withColumn("__ty", explode(sequence(
+          greatest(lit(0), floor((col("gy") - 1).cast("double") / t).cast("int")),
+          least(lit((h - 1) / t), floor((col("gy") + 1).cast("double") / t).cast("int")))))
+        .select(col("__tx"), col("__ty"), col("gx"), col("gy"), col("hv"),
+          col("pos"), col("old"), col("movable"), col("big"))
+        .as[(Int, Int, Int, Int, Double, Double, Double, Boolean, Boolean)]
+        .groupByKey(r => (r._1, r._2)).flatMapGroups { (tk, it) =>
+          val (tx, ty) = tk
+          val gx0 = math.max(0, tx * t - 1); val gx1 = math.min(w, (tx + 1) * t + 1)
+          val gy0 = math.max(0, ty * t - 1); val gy1 = math.min(h, (ty + 1) * t + 1)
+          val pw = gx1 - gx0; val ph = gy1 - gy0
+          val st = ClothSim.GridState(pw, ph)
+          val big = new Array[Boolean](pw * ph)
+          it.foreach { r =>
+            val i = (r._4 - gy0) * pw + (r._3 - gx0)
+            st.hv(i) = r._5; st.pos(i) = r._6; st.old(i) = r._7
+            st.movable(i) = r._8; big(i) = r._9
+          }
+          val changed = ClothSim.clampFixpoint(st, big, pw, ph)
+          val cx0 = tx * t; val cx1 = math.min(w, (tx + 1) * t)
+          val cy0 = ty * t; val cy1 = math.min(h, (ty + 1) * t)
+          for {
+            gy <- (cy0 until cy1).iterator; gx <- (cx0 until cx1).iterator
+          } yield {
+            val i = (gy - gy0) * pw + (gx - gx0)
+            (gx, gy, st.hv(i), st.pos(i), st.old(i), st.movable(i), big(i),
+              changed.contains(i))
+          }
+        }.toDF("gx", "gy", "hv", "pos", "old", "movable", "big", "changed")
+      val (mat, n) = Mat.withChangedCount(round, col("changed"))
+      changedTotal = n
+      cur = mat.drop("changed")
+    }
+    perTile.unpersist(false)
+    cur.drop("big")
   }
 }
 
-/** Dense-array cloth kernel shared by the local and tiled paths. */
+/** Dense-array cloth kernel of one tile+halo patch. */
 private[operators] object ClothSim {
   // Particle.h:29-30 correction tables, indexed by rigidness (<= 14)
   val doubleMove = Array(0.0, 0.3, 0.42, 0.468, 0.4872, 0.4949, 0.498,
@@ -430,12 +400,11 @@ private[operators] object ClothSim {
     * offset; neighbors outside the GLOBAL [0,W)x[0,H) grid do not exist
     * (true cloth boundary), neighbors outside the patch but inside the
     * global grid are treated as absent — only halo cells ever see that,
-    * and the halo width keeps the core exact. */
+    * and the halo width keeps the core [cx0, cx1) x [cy0, cy1) (patch
+    * coordinates) exact. */
   def run(st: GridState, pw: Int, ph: Int, gx0: Int, gy0: Int, w: Int, h: Int,
       cx0: Int, cy0: Int, k: Int, rigid: Int, step: Double,
-      cx1i: Int = -1, cy1i: Int = -1): Array[Double] = {
-    val cx1 = if (cx1i < 0) pw else cx1i
-    val cy1 = if (cy1i < 0) ph else cy1i
+      cx1: Int, cy1: Int): Array[Double] = {
     val g = -0.2 * step * step * step * step // addForce(dt^2) * dt^2
     // each constraint is stored on both endpoints (Cloth::makeConstraint),
     // so the reference pass applies every edge twice per sweep; the
@@ -582,42 +551,6 @@ private[operators] object ClothSim {
       }
     }
     changed
-  }
-
-  /** Local movableFilter: CC over the movable mask + clamp closure. */
-  def movableFilterLocal(st: GridState, w: Int, h: Int): Unit = {
-    val comp = new Array[Int](w * h)
-    java.util.Arrays.fill(comp, -1)
-    val sizes = scala.collection.mutable.ArrayBuffer[Int]()
-    var i = 0
-    while (i < w * h) {
-      if (st.movable(i) && comp(i) < 0) {
-        val id = sizes.length
-        var n = 0
-        val stack = new java.util.ArrayDeque[Integer]()
-        stack.push(i); comp(i) = id
-        while (!stack.isEmpty) {
-          val c = stack.pop().intValue(); n += 1
-          val x = c % w; val y = c / w
-          for ((nx, ny) <- Seq((x - 1, y), (x + 1, y), (x, y - 1), (x, y + 1))) {
-            if (nx >= 0 && nx < w && ny >= 0 && ny < h) {
-              val j = ny * w + nx
-              if (st.movable(j) && comp(j) < 0) { comp(j) = id; stack.push(j) }
-            }
-          }
-        }
-        sizes += n
-      }
-      i += 1
-    }
-    val big = new Array[Boolean](w * h)
-    i = 0
-    while (i < w * h) {
-      if (comp(i) >= 0 && sizes(comp(i)) > 50) big(i) = true
-      i += 1
-    }
-    clampFixpoint(st, big, w, h)
-    ()
   }
 
   final class UnionFind(n: Int) {

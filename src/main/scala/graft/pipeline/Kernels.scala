@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
 
@@ -184,23 +184,35 @@ object CloudMetrics {
       .select(col("order_key"),
         try_element_at(col("knn"), lit(1)).getField("d2").as("nn_d2"))
 
-  /** Per-point deltas of src vs candidate (kernels.delta). */
+  /** Per-point deltas of src vs candidate (kernels.delta). A source point
+    * with no candidate (an empty candidate cloud) has no row. */
   def delta(src: DataFrame, cand: DataFrame): DataFrame =
-    nnD2(src, cand).select(col("order_key"), sqrt(col("nn_d2")).as("nn_dist"))
+    nnD2(src, cand).filter(col("nn_d2").isNotNull)
+      .select(col("order_key"), sqrt(col("nn_d2")).as("nn_dist"))
+
+  /** `f` over the nearest-neighbor d2 of a -> b and of b -> a. Either
+    * cloud empty fails, naming it: a distance to nothing has no value. */
+  private def bothWays(kernel: String, a: DataFrame, b: DataFrame,
+      f: Column => Column): (Double, Double) = {
+    def directed(x: DataFrame, y: DataFrame) =
+      nnD2(x, y).agg(count(lit(1)), f(col("nn_d2"))).head()
+    val ab = directed(a, b)
+    require(ab.getLong(0) > 0, s"$kernel: cloud a is empty")
+    require(!ab.isNullAt(1), s"$kernel: cloud b is empty")
+    (ab.getDouble(1), directed(b, a).getDouble(1))
+  }
 
   /** Hausdorff = max over both directed nearest-neighbor distances.
     * sqrt is monotone, so max commutes with it exactly. */
   def hausdorff(a: DataFrame, b: DataFrame): Double = {
-    val d1 = nnD2(a, b).agg(max("nn_d2")).head().getDouble(0)
-    val d2 = nnD2(b, a).agg(max("nn_d2")).head().getDouble(0)
+    val (d1, d2) = bothWays("hausdorff", a, b, max(_))
     math.sqrt(math.max(d1, d2))
   }
 
   /** Chamfer = sum of mean squared NN distances both ways — averaged on
     * the raw squared distances (no sqrt-then-square rounding). */
   def chamfer(a: DataFrame, b: DataFrame): Double = {
-    val d1 = nnD2(a, b).agg(avg("nn_d2")).head().getDouble(0)
-    val d2 = nnD2(b, a).agg(avg("nn_d2")).head().getDouble(0)
+    val (d1, d2) = bothWays("chamfer", a, b, avg(_))
     d1 + d2
   }
 }

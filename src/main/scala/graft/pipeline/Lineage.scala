@@ -1,41 +1,40 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.sources.GraftTable
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** Per-stage checkpoint + per-partition lineage/metrics (north rule:
   * "every stage checkpoints per-partition lineage and row/byte metrics to
   * enable exact resume").
   *
-  * Each stage output is written to `<dir>/stage=<i>_<name>/data` with a
-  * `_SUCCESS`-gated commit; a sidecar `metrics` table records, per
-  * physical partition: row count, approximate bytes, min/max order_key
-  * (the lineage interval — which slice of the insertion order the
-  * partition holds). `run` resumes from the LAST completed stage: earlier
-  * stages are never recomputed, the exact parquet bytes are reloaded.
+  * Each stage output is written to `<dir>/stage=<i>_<name>/data`, one
+  * parquet file per non-empty task. The stage's lineage sidecar,
+  * `<dir>/stage=<i>_<name>/lineage.parquet`, is the manifest of those
+  * files in GraftTable's manifest format: per data file, its row count
+  * and min/max order_key (the lineage interval — which slice of the
+  * insertion order the file holds), read from the files' parquet footers
+  * on the driver. No Spark job re-reads a stage. `run` resumes from the
+  * LAST completed stage: earlier stages are never recomputed, the exact
+  * parquet bytes are reloaded.
+  *
+  * `dir` is a local filesystem path, as a GraftTable root is: the
+  * sidecar is written and renamed with java.nio.
   */
 class CheckpointRunner(spark: SparkSession, dir: String) {
 
   private def stagePath(i: Int, name: String) = s"$dir/stage=${i}_$name"
 
-  /** A stage is complete only once its metrics sidecar committed — the
-    * LAST write of the stage. Gating on data/_SUCCESS alone would let a
-    * crash between the data and metrics writes resume past a stage whose
-    * lineage sidecar never lands (the metrics would be missing forever);
-    * gating on metrics re-runs such a stage, overwriting both cleanly. */
-  private def completed(i: Int, name: String): Boolean =
-    new org.apache.hadoop.fs.Path(stagePath(i, name) + "/metrics/_SUCCESS")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(stagePath(i, name) + "/metrics/_SUCCESS"))
+  private def sidecar(i: Int, name: String): Path =
+    Paths.get(stagePath(i, name), "lineage.parquet")
 
-  /** Approximate serialized row width: fixed numeric core + string/span
-    * payload lengths. */
-  private def byteCol(df: DataFrame) = {
-    val strCols = df.schema.fields.filter(_.dataType ==
-      org.apache.spark.sql.types.StringType).map(f => length(col(f.name)))
-    val base = lit(8L * df.schema.fields.length)
-    if (strCols.isEmpty) base else strCols.foldLeft(base)(_ + coalesce(_, lit(0)).cast("long"))
-  }
+  /** A stage is complete only once its sidecar exists — the LAST write of
+    * the stage, landed by an atomic rename. A crash between the data and
+    * sidecar writes re-runs the stage, overwriting its data cleanly. */
+  private def completed(i: Int, name: String): Boolean =
+    Files.exists(sidecar(i, name))
 
   def run(input: DataFrame,
       stages: Seq[(String, DataFrame => DataFrame)]): DataFrame = {
@@ -48,27 +47,47 @@ class CheckpointRunner(spark: SparkSession, dir: String) {
       case None => input
     }
     val start = lastDone.map(_ + 1).getOrElse(0)
+    val conf = spark.sessionState.newHadoopConf()
     stages.zipWithIndex.drop(start).foreach { case ((name, fn), i) =>
       val out = fn(cur)
-      out.write.mode("overwrite").parquet(stagePath(i, name) + "/data")
-      val reread = spark.read.parquet(stagePath(i, name) + "/data")
-      val hasOrder = reread.columns.contains("order_key")
-      val metrics = reread
-        .groupBy(spark_partition_id().as("partition"))
-        .agg(count(lit(1)).as("rows"),
-          sum(byteCol(reread)).as("approx_bytes"),
-          (if (hasOrder) min("order_key")
-           else lit(null).cast("long")).as("min_order_key"), // typed null:
-          (if (hasOrder) max("order_key")                    // NullType cols
-           else lit(null).cast("long")).as("max_order_key")) // break parquet
-        .withColumn("stage", lit(i)).withColumn("stage_name", lit(name))
-        .withColumn("committed_at", current_timestamp())
-      metrics.write.mode("overwrite").parquet(stagePath(i, name) + "/metrics")
-      cur = reread
+      val data = stagePath(i, name) + "/data"
+      out.write.mode("overwrite").parquet(data)
+      val files = Using.resource(Files.list(Paths.get(data)))(_.iterator().asScala
+        .filter(_.getFileName.toString.startsWith("part-")).toVector.sortBy(_.toString))
+      val tmp = Paths.get(stagePath(i, name), s".lineage-${java.util.UUID.randomUUID()}")
+      GraftTable.writeManifest(spark, tmp.toString,
+        files.map(f => GraftTable.footerStats(f.toString, conf)))
+      Files.move(tmp, sidecar(i, name), StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+      cur = spark.read.schema(out.schema).parquet(data)
     }
     cur
   }
 
-  /** All recorded metrics across stages (the lineage sidecar). */
-  def metrics(): DataFrame = spark.read.parquet(s"$dir/stage=*/metrics")
+  /** All recorded metrics across stages (the lineage sidecars), one row
+    * per data file: `partition` is the file's index in its stage,
+    * `approx_bytes` its length on disk and `committed_at` the sidecar's
+    * modification time. Built on the driver: no Spark job. */
+  def metrics(): DataFrame = {
+    val stageDir = "stage=(\\d+)_(.*)".r
+    val done = Using.resource(Files.list(Paths.get(dir)))(_.iterator().asScala.toVector)
+      .flatMap(p => p.getFileName.toString match {
+        case stageDir(i, name) if completed(i.toInt, name) => Some((i.toInt, name))
+        case _ => None
+      }).sorted
+    val rows = done.flatMap { case (i, name) =>
+      val committed = new java.sql.Timestamp(
+        Files.getLastModifiedTime(sidecar(i, name)).toMillis)
+      GraftTable.entries(spark, Seq(sidecar(i, name).toString)).zipWithIndex.map {
+        case (e, part) => LineageRow(part, e.rows, Files.size(Paths.get(e.path)),
+          e.minKey, e.maxKey, i, name, committed)
+      }
+    }
+    spark.createDataFrame(rows)
+  }
 }
+
+/** One row of `CheckpointRunner.metrics`. */
+private[pipeline] case class LineageRow(partition: Int, rows: Long,
+    approx_bytes: Long, min_order_key: Option[Long], max_order_key: Option[Long],
+    stage: Int, stage_name: String, committed_at: java.sql.Timestamp)

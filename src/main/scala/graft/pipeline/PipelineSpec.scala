@@ -194,10 +194,11 @@ object PipelineBuilder {
         // contract surfaced — partition_column + lower/upper bounds +
         // num_partitions shard the table across executors (without
         // them a JDBC read is ONE task, wrong at any scale; requiring
-        // them together mirrors spark.read.jdbc's own contract). No
-        // JDBC driver jar ships in this sandbox, so executing the
-        // stage surfaces the driver's own loud error here; the option
-        // mapping itself is the complete production surface.
+        // them together mirrors spark.read.jdbc's own contract). Any
+        // JDBC driver on the classpath serves: Spark's jars include
+        // Derby's embedded driver, so `jdbc:derby:memory:` URLs run
+        // in-process; a URL with no driver fails with Spark's own
+        // CANNOT_FIND_JDBC_DRIVER error.
         val url = optStr(o, "connection").orElse(optStr(o, "url"))
           .getOrElse(throw new IllegalArgumentException(
             "readers.jdbc: 'connection' (or 'url') is required"))
@@ -224,7 +225,13 @@ object PipelineBuilder {
             "readers.jdbc: partition_column and num_partitions must be " +
               "set together (plus upper_bound) for a parallel read")
         }
-        readerOpts(r2.load())
+        // Derby, DB2 and Oracle fold unquoted identifiers to upper case;
+        // the engine's dims are lower case, and readerOpts (count,
+        // override_srs) looks them up by exact name
+        val df = r2.load()
+        readerOpts(df.toDF(df.columns.map(c =>
+          if (c == c.toUpperCase(java.util.Locale.ROOT)) c.toLowerCase(java.util.Locale.ROOT)
+          else c): _*))
       case "readers.stac" =>
         // io/StacReader.cpp:126-151 option surface; bounds uses the PDAL
         // 2D bounds grammar and prunes items before any data read

@@ -299,12 +299,8 @@ object GraftTable {
     committed
   }
 
-  /** Manifest stats for one data file, read from its parquet footer.
-    * Column absent -> None (a bbox can PRUNE such files exactly: the
-    * commit had no such column, so no row can match). Column present
-    * but a chunk lacks usable stats (e.g. doubles with NaNs — parquet
-    * omits min/max) -> the infinite interval, which intersects every
-    * box: such files are always read, never wrongly pruned.
+  /** `footerStats` as an executor-side function of the session's Hadoop
+    * conf pairs.
     *
     * A NAMED case class, not a lambda: streaming microbatch threads
     * (foreachBatch -> commit) run under a classloader where
@@ -312,14 +308,22 @@ object GraftTable {
     * ("capturingClassReader is null"); named classes skip cleaning. */
   private case class FooterStats(confProps: Array[(String, String)])
       extends (String => FileEntry) with Serializable {
-    def apply(path: String) = footerStats(path, confProps)
+    def apply(path: String) = {
+      // confProps already hold every default resource's keys: skip loading them
+      val conf = new org.apache.hadoop.conf.Configuration(false)
+      confProps.foreach { case (k, v) => conf.set(k, v) }
+      footerStats(path, conf)
+    }
   }
 
-  private def footerStats(path: String, confProps: Array[(String, String)])
-      : FileEntry = {
-    // confProps already hold every default resource's keys: skip loading them
-    val conf = new org.apache.hadoop.conf.Configuration(false)
-    confProps.foreach { case (k, v) => conf.set(k, v) }
+  /** Manifest stats for one data file, read from its parquet footer.
+    * Column absent -> None (a bbox can PRUNE such files exactly: the
+    * commit had no such column, so no row can match). Column present
+    * but a chunk lacks usable stats (e.g. doubles with NaNs — parquet
+    * omits min/max) -> the infinite interval, which intersects every
+    * box: such files are always read, never wrongly pruned. */
+  private[graft] def footerStats(path: String,
+      conf: org.apache.hadoop.conf.Configuration): FileEntry = {
     val r = openParquet(new org.apache.hadoop.fs.Path(path), conf)
     try {
       val blocks = r.getFooter.getBlocks.asScala.toSeq
@@ -479,7 +483,7 @@ object GraftTable {
   /** Writes `es` from the driver as the single parquet file `path` (the
     * session conf spares parquet-mr a default Configuration, as in
     * `openParquet`). */
-  private def writeManifest(spark: SparkSession, path: String,
+  private[graft] def writeManifest(spark: SparkSession, path: String,
       es: Seq[FileEntry]): Unit = {
     val w = ExampleParquetWriter.builder(
         new org.apache.parquet.io.LocalOutputFile(Paths.get(path)))

@@ -352,6 +352,70 @@ class PipelineSpecSuite extends AnyFunSuite {
       org.apache.spark.sql.types.LongType)
   }
 
+  test("checkpoint runner: the lineage sidecar is the data files' manifest, written " +
+      "for no job beyond the stage's own write; a lost sidecar re-runs only its stage") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    type Stage = (String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+    def partFiles(dir: String) = {
+      val ls = Files.list(Paths.get(dir))
+      try ls.iterator().asScala.filter(_.getFileName.toString.startsWith("part-")).toVector
+      finally ls.close()
+    }
+    val docs = Fixtures.autzen1065(spark)
+    var splitRuns = 0
+    val stages = Seq[Stage](
+      "crop" -> (d => graft.operators.Crop.box2d(d, 635619.0, 848899.0, 637500.0, 851000.0)),
+      "assign" -> (d => graft.operators.Assign(d, "classification", lit(9))),
+      "split" -> (d => { splitRuns += 1
+        graft.operators.Splitter(d, length = 500.0, origin = Some((635000.0, 848000.0))) }))
+    val dir = Files.createTempDirectory("graft-ckpt3").toString
+    val runner = new CheckpointRunner(spark, dir)
+    // the same stages with only a write and a schema-given read: the
+    // checkpoint's lineage must cost no job on top
+    val plain = Files.createTempDirectory("graft-plain").toString
+    val plainJobs = jobsOf(stages.zipWithIndex.foldLeft(docs) { case (cur, ((_, fn), i)) =>
+      val out = fn(cur)
+      out.write.parquet(s"$plain/$i")
+      spark.read.schema(out.schema).parquet(s"$plain/$i")
+    })
+    var out1: org.apache.spark.sql.DataFrame = null
+    val ckptJobs = jobsOf { out1 = runner.run(docs, stages) }
+    assert(ckptJobs <= plainJobs, s"checkpoint run $ckptJobs jobs > plain $plainJobs")
+    val n1 = out1.count()
+    assert(n1 > 0 && splitRuns == 2)
+    // per stage: one metrics row per data file, bytes as on disk, rows
+    // and order_key interval as the file holds them
+    val m = runner.metrics()
+    for (((name, _), i) <- stages.zipWithIndex) {
+      val files = partFiles(s"$dir/stage=${i}_$name/data")
+      val mi = m.filter(col("stage") === i).orderBy("partition").collect()
+      assert(mi.length == files.length && mi.forall(_.getAs[String]("stage_name") == name))
+      assert(mi.map(_.getAs[Long]("approx_bytes")).sum == files.map(Files.size(_)).sum,
+        s"stage $name: approx_bytes must be the part files' bytes on disk")
+      val perFile = spark.read.parquet(s"$dir/stage=${i}_$name/data")
+        .groupBy(input_file_name())
+        .agg(count(lit(1)), min("order_key"), max("order_key")).collect()
+        .map(r => r.getString(0).split('/').last -> (r.getLong(1), Option(r.get(2)),
+          Option(r.get(3)))).toMap
+      assert(mi.map(r => (r.getAs[Long]("rows"), Option(r.get(3)), Option(r.get(4))))
+        .toSeq == files.map(_.getFileName.toString).sorted.map(perFile))
+    }
+    assert(m.filter(col("stage") === 2).agg(sum("rows")).head().getLong(0) == n1)
+    // losing the last stage's sidecar re-runs that stage from the stage
+    // before it; the earlier stages are poisoned and must not run
+    Files.delete(Paths.get(s"$dir/stage=2_split/lineage.parquet"))
+    val poisoned = stages.map { case (n, _) =>
+      n -> ((_: org.apache.spark.sql.DataFrame) =>
+        throw new IllegalStateException(s"resume recomputed stage $n")): Stage
+    }
+    assert(runner.run(docs.limit(0), poisoned.take(2) :+ stages(2)).count() == n1)
+    assert(splitRuns == 3)
+    assert(Files.exists(Paths.get(s"$dir/stage=2_split/lineage.parquet")))
+    // every sidecar back: nothing re-runs
+    assert(runner.run(docs.limit(0), poisoned).count() == n1)
+  }
+
   test("cloud metrics: delta/hausdorff/chamfer between shifted clouds (DeltaKernel/HausdorffKernel)") {
     val a = Fixtures.autzen1065(spark).limit(200).cache()
     val b = a.withColumn("x", col("x") + 3.0)
@@ -362,6 +426,18 @@ class PipelineSpecSuite extends AnyFunSuite {
     val ch = CloudMetrics.chamfer(a, a)
     assert(ch == 0.0)
     assert(CloudMetrics.hausdorff(a, b) >= 3.0 - 1e-9)
+    // an empty side: delta has no row for a point with no candidate (as
+    // the SQL oracle's inner join), and the symmetric metrics name the
+    // empty cloud
+    val none = a.filter(lit(false))
+    assert(CloudMetrics.delta(a, none).count() == 0)
+    for ((x, y, side) <- Seq((a, none, "b"), (none, a, "a"), (none, none, "a"));
+         (kernel, f) <- Seq[(String, (org.apache.spark.sql.DataFrame,
+           org.apache.spark.sql.DataFrame) => Double)](
+           "hausdorff" -> CloudMetrics.hausdorff, "chamfer" -> CloudMetrics.chamfer)) {
+      val e = intercept[IllegalArgumentException](f(x, y))
+      assert(e.getMessage.contains(s"$kernel: cloud $side is empty"), s"got: ${e.getMessage}")
+    }
   }
 
   test("eval kernel: per-class recall (EvalKernel.cpp)") {
@@ -573,7 +649,7 @@ class PipelineSpecSuite extends AnyFunSuite {
       assert(e.getMessage.contains(option), s"got: ${e.getMessage}")
     }
     // fully-specified parallel read reaches Spark's JDBC source, which
-    // fails loudly here because no driver jar ships in this sandbox
+    // fails loudly because no PostgreSQL driver is on the classpath
     val e2 = intercept[Throwable](PipelineBuilder.run(spark,
       """{"pipeline":[
          {"type":"readers.jdbc","connection":"jdbc:postgresql://db/x",
@@ -585,5 +661,36 @@ class PipelineSpecSuite extends AnyFunSuite {
     assert(msg.toLowerCase.contains("driver") ||
       msg.contains("CANNOT_FIND_JDBC_DRIVER") ||
       e2.isInstanceOf[ClassNotFoundException], s"got: $e2")
+  }
+
+  test("readers.jdbc: a partitioned read of an in-memory Derby table; reader " +
+      "options find the upper-case-folded dims") {
+    import spark.implicits._
+    val url = "jdbc:derby:memory:graft_jdbc_pts;create=true"
+    val c = java.sql.DriverManager.getConnection(url)
+    try {
+      c.createStatement().execute(
+        "CREATE TABLE pts (order_key BIGINT, x DOUBLE, y DOUBLE, z DOUBLE)")
+      val ins = c.prepareStatement("INSERT INTO pts VALUES (?, ?, ?, ?)")
+      for (i <- 0 until 1000) {
+        ins.setLong(1, 999 - i); ins.setDouble(2, i * 0.5)
+        ins.setDouble(3, 1000.0 - i); ins.setDouble(4, i % 7); ins.addBatch()
+      }
+      ins.executeBatch()
+    } finally c.close()
+    def read(extra: String) = PipelineBuilder.run(spark,
+      s"""{"pipeline":[{"type":"readers.jdbc","connection":"$url","table":"pts",
+          "partition_column":"order_key","upper_bound":1000,"num_partitions":4$extra}]}""")
+    val df = read("")
+    assert(df.columns.toSeq == Seq("order_key", "x", "y", "z"))
+    assert(df.rdd.getNumPartitions == 4)
+    assert(df.groupBy(spark_partition_id()).count().select("count").as[Long]
+      .collect().toSeq == Seq(250L, 250L, 250L, 250L))
+    assert(df.select("order_key").distinct().count() == 1000)
+    // `count` keeps the first points in order_key order, and
+    // override_srs tags the x column
+    val capped = read(""","count":10,"override_srs":"EPSG:2992"""")
+    assert(capped.select("order_key").as[Long].collect().sorted.toSeq == (0L until 10L))
+    assert(graft.operators.Srs.of(capped).contains("EPSG:2992"))
   }
 }
