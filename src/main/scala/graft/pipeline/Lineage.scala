@@ -52,11 +52,9 @@ class CheckpointRunner(spark: SparkSession, dir: String) {
       val out = fn(cur)
       val data = stagePath(i, name) + "/data"
       out.write.mode("overwrite").parquet(data)
-      val files = Using.resource(Files.list(Paths.get(data)))(_.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("part-")).toVector.sortBy(_.toString))
       val tmp = Paths.get(stagePath(i, name), s".lineage-${java.util.UUID.randomUUID()}")
       GraftTable.writeManifest(spark, tmp.toString,
-        files.map(f => GraftTable.footerStats(f.toString, conf)))
+        GraftTable.partFiles(data).map(f => GraftTable.footerStats(f.toString, conf)))
       Files.move(tmp, sidecar(i, name), StandardCopyOption.ATOMIC_MOVE,
         StandardCopyOption.REPLACE_EXISTING)
       cur = spark.read.schema(out.schema).parquet(data)

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
@@ -27,8 +28,8 @@ import scala.jdk.CollectionConverters._
   *
   * Commit protocol (crash-safe, optimistic):
   *   1. stage data files, move them under data/ (new names, never reused)
-  *   2. write the manifest parquet (per-file stats read from the staged
-  *      files' parquet FOOTERS — metadata-only, no second data scan)
+  *   2. write the manifest parquet (per-file stats read on the driver
+  *      from the staged files' parquet FOOTERS — no job, no data scan)
   *   3. allocate the next version with an EXCLUSIVE create of
   *      snapshots/v<N>.json — two racing committers cannot both win N;
   *      the loser re-reads the head and retries on the parent it lost to
@@ -116,13 +117,9 @@ object GraftTable {
     allocate(root, commitId, schemaPath, tag, parent => {
       if (overwrite || parent == 0) Seq(manifest)
       else {
-        val snap = snapshot(root, parent)
-        snap.schema.filter(p => Files.exists(Paths.get(p))).foreach { pp =>
-          val merged = mergeSchema(
-            new String(Files.readAllBytes(Paths.get(pp)), "UTF-8"), df.schema)
-          Files.write(Paths.get(schemaPath), merged.json.getBytes("UTF-8"))
-        }
-        val all = snap.manifests :+ manifest
+        pinnedSchema(root, parent).foreach(ps => Files.write(Paths.get(schemaPath),
+          mergeSchema(ps, df.schema).json.getBytes("UTF-8")))
+        val all = snapshot(root, parent).manifests :+ manifest
         // parent-suffixed path: a CAS retry merges against a DIFFERENT
         // head's manifest list and must not overwrite the losing attempt
         // (which stays an invisible orphan until vacuum)
@@ -166,11 +163,7 @@ object GraftTable {
   /** Parent ∪ append schema: parent fields keep their positions, new
     * fields append in df order; a shared name whose type differs (up to
     * nullability) is a real conflict and fails loudly. */
-  private def mergeSchema(parentJson: String,
-      df: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType = {
-    val parent = org.apache.spark.sql.types.DataType.fromJson(parentJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+  private def mergeSchema(parent: StructType, df: StructType): StructType = {
     df.fields.foreach { f =>
       parent.fields.find(_.name == f.name).foreach { pf =>
         // simpleString renders the type without nullability flags, which
@@ -183,14 +176,16 @@ object GraftTable {
       }
     }
     val newFields = df.fields.filterNot(f => parent.fieldNames.contains(f.name))
-    org.apache.spark.sql.types.StructType(parent.fields ++ newFields)
+    StructType(parent.fields ++ newFields)
   }
 
   /** Steps 1+2 of the commit protocol: stage `df`'s rows as immutable
-    * data files, derive their manifest from parquet footers, and write
-    * the pinned-schema json. Returns (manifestPath, schemaPath). Until
-    * a snapshot references them, everything written here is invisible
-    * orphan data — crash-safe by construction. */
+    * data files, derive their manifest from their parquet footers on the
+    * driver (as CheckpointRunner derives a stage's lineage), and write
+    * the pinned-schema json. The write's own jobs are the only jobs.
+    * Returns (manifestPath, schemaPath). Until a snapshot references
+    * them, everything written here is invisible orphan data —
+    * crash-safe by construction. */
   private def stageCommit(df: DataFrame, root: String, commitId: String)
       : (String, String) = {
     val spark = df.sparkSession
@@ -201,10 +196,7 @@ object GraftTable {
     // 1. stage + adopt data files under never-reused names
     val staging = s"$root/.staging-$commitId"
     df.write.mode("overwrite").parquet(staging)
-    val parts = withStream(Files.list(Paths.get(staging)))(
-      _.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("part-")).toSeq.sortBy(_.toString))
-    val adopted = parts.zipWithIndex.map { case (p, i) =>
+    val adopted = partFiles(staging).zipWithIndex.map { case (p, i) =>
       val dst = Paths.get(root, "data", s"$commitId-$i.parquet")
       Files.move(p, dst, StandardCopyOption.ATOMIC_MOVE)
       dst.toString
@@ -213,28 +205,14 @@ object GraftTable {
       _.sorted(java.util.Comparator.reverseOrder())
         .forEach(p => Files.deleteIfExists(p)))
 
-    // 2. per-file stats come from the parquet FOOTERS of the staged
-    //    files (row-group min/max/count cover exactly what the manifest
-    //    needs) — one distributed footer pass, no second scan of the
-    //    data just written, collected and written by the driver. This is
-    //    what Iceberg's writer-side stat collection reduces to after the
-    //    fact.
-    // the session's Hadoop conf rides along as serializable (key, value)
-    // pairs — a bare `new Configuration()` on the executor would miss
-    // spark.hadoop.* filesystem settings (s3a credentials, endpoints)
-    // and break stats collection on any non-default filesystem
-    val confProps: Array[(String, String)] = {
-      val hc = spark.sessionState.newHadoopConf()
-      val it = hc.iterator()
-      val buf = scala.collection.mutable.ArrayBuffer[(String, String)]()
-      while (it.hasNext) { val e = it.next(); buf += ((e.getKey, e.getValue)) }
-      buf.toArray
-    }
-    val stats = spark.sparkContext
-      .parallelize(adopted, 1 max (adopted.size min 64))
-      .map(FooterStats(confProps)).collect()
+    // 2. per-file stats come from the adopted files' parquet FOOTERS,
+    //    read on the driver: row-group min/max/count cover exactly what
+    //    the manifest needs, so nothing rescans the data just written.
+    //    This is what Iceberg's writer-side stat collection reduces to
+    //    after the fact.
+    val conf = spark.sessionState.newHadoopConf()
     val manifest = s"$root/manifests/m-$commitId.parquet"
-    writeManifest(spark, manifest, stats.toIndexedSeq)
+    writeManifest(spark, manifest, adopted.map(footerStats(_, conf)))
     // the committed schema rides in its own file (schema json contains
     // quotes; the snapshot json stays regex-parsable by referencing it)
     val schemaPath = s"$root/manifests/m-$commitId.schema.json"
@@ -299,25 +277,18 @@ object GraftTable {
     committed
   }
 
-  /** `footerStats` as an executor-side function of the session's Hadoop
-    * conf pairs.
-    *
-    * A NAMED case class, not a lambda: streaming microbatch threads
-    * (foreachBatch -> commit) run under a classloader where
-    * ClosureCleaner cannot always load lambda class bytes
-    * ("capturingClassReader is null"); named classes skip cleaning. */
-  private case class FooterStats(confProps: Array[(String, String)])
-      extends (String => FileEntry) with Serializable {
-    def apply(path: String) = {
-      // confProps already hold every default resource's keys: skip loading them
-      val conf = new org.apache.hadoop.conf.Configuration(false)
-      confProps.foreach { case (k, v) => conf.set(k, v) }
-      footerStats(path, conf)
-    }
-  }
+  /** The `part-` files a Spark write left in directory `dir`, sorted by
+    * name: the data files of a commit's staging directory or of a
+    * checkpoint stage. */
+  private[graft] def partFiles(dir: String): IndexedSeq[Path] =
+    withStream(Files.list(Paths.get(dir)))(_.iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part-")).toVector.sortBy(_.toString))
 
-  /** Manifest stats for one data file, read from its parquet footer.
-    * Column absent -> None (a bbox can PRUNE such files exactly: the
+  /** Manifest stats for one data file, read on the driver from its
+    * parquet footer, with `conf` the session's Hadoop conf (so
+    * spark.hadoop.* filesystem settings apply); commits and checkpoint
+    * stages derive their manifests this way, and no job runs. Column
+    * absent -> None (a bbox can PRUNE such files exactly: the
     * commit had no such column, so no row can match). Column present
     * but a chunk lacks usable stats (e.g. doubles with NaNs — parquet
     * omits min/max) -> the infinite interval, which intersects every
@@ -523,12 +494,10 @@ object GraftTable {
       asOf: Option[Int] = None): DataFrame =
     manifestFrame(spark, entriesAt(spark, root, asOf))
 
-  private def pinnedSchema(root: String, v: Int)
-      : Option[org.apache.spark.sql.types.StructType] =
+  private def pinnedSchema(root: String, v: Int): Option[StructType] =
     snapshot(root, v).schema.filter(p => Files.exists(Paths.get(p))).map(p =>
-      org.apache.spark.sql.types.DataType
-        .fromJson(new String(Files.readAllBytes(Paths.get(p)), "UTF-8"))
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+      DataType.fromJson(new String(Files.readAllBytes(Paths.get(p)), "UTF-8"))
+        .asInstanceOf[StructType])
 
   /** Reader with the snapshot's pinned schema applied (files predating
     * a column addition surface it as nulls; time travel reads with the
@@ -543,7 +512,7 @@ object GraftTable {
     * inference over the snapshot's files (pre-evolution tables). Used by
     * the DataSource V2 surface's inferSchema. */
   def tableSchema(spark: SparkSession, root: String,
-      asOf: Option[Int] = None): org.apache.spark.sql.types.StructType =
+      asOf: Option[Int] = None): StructType =
     pinnedSchema(root, resolve(root, asOf))
       .getOrElse(read(spark, root, asOf).schema)
 
@@ -720,22 +689,14 @@ object GraftTable {
     val es = entriesAt(spark, root, Some(base))
     val (touched, kept) = es.partition(_.intersects(minx, miny, maxx, maxy))
     if (touched.isEmpty) return (base, 0L, es.size.toLong)
-    val commitId = UUID.randomUUID().toString.take(8)
-    val keepManifest = s"$root/manifests/m-$commitId-keep.parquet"
-    writeManifest(spark, keepManifest, kept)
     // survivors of the touched files; rows with null x/y cannot be
     // inside the box, so a null predicate keeps them (coalesce false)
     val inside = col("x") >= minx && col("x") <= maxx &&
       col("y") >= miny && col("y") <= maxy
     val survivors = readFiles(spark, root, Some(base), touched.map(_.path))
       .filter(not(coalesce(inside, lit(false))))
-    val (newManifest, schemaPath) = stageCommit(survivors, root, commitId)
-    val v = allocate(root, commitId, schemaPath, None, parent => {
-      if (parent != base) throw new java.util.ConcurrentModificationException(
-        s"graft table $root advanced v$base -> v$parent during deleteBox; " +
-        "retry the delete on the new head")
-      Seq(keepManifest, newManifest)
-    })
+    val v = commitRewrite(root, base, kept, survivors, None,
+      "deleteBox; retry the delete on the new head")
     (v, touched.size.toLong, es.size.toLong)
   }
 
@@ -778,11 +739,7 @@ object GraftTable {
     // coercion, so a delta whose shared column differs in type (int vs
     // double, numeric vs string) would otherwise silently widen and
     // re-pin the table's column type
-    val baseSchemaJson = snapshot(root, base).schema
-      .filter(p => Files.exists(Paths.get(p)))
-      .map(p => new String(Files.readAllBytes(Paths.get(p)), "UTF-8"))
-      .getOrElse(read(spark, root, Some(base)).schema.json)
-    mergeSchema(baseSchemaJson, updates.schema)
+    mergeSchema(tableSchema(spark, root, Some(base)), updates.schema)
     // three downstream actions read the key set (null/distinctness gate,
     // file prune join, survivor anti-join) — persist so an expensive
     // update source computes once; unpersisted before returning
@@ -822,9 +779,6 @@ object GraftTable {
           .select("path").distinct().collect().map(_.getString(0)).toSet
       else es.map(_.path).toSet
     val (touched, kept) = es.partition(e => touchedPaths(e.path))
-    val commitId = UUID.randomUUID().toString.take(8)
-    val keepManifest = s"$root/manifests/m-$commitId-keep.parquet"
-    writeManifest(spark, keepManifest, kept)
     // survivors always union against the BASE schema (via the touched
     // files, or the pinned-schema empty frame when nothing is touched):
     // the new snapshot's pinned schema must be base ∪ delta — a
@@ -834,15 +788,28 @@ object GraftTable {
     val survivors = (if (touched.isEmpty) scan
        else scan.join(keys, Seq(keyCol), "left_anti"))
       .unionByName(updates, allowMissingColumns = true)
-    val (newManifest, schemaPath) = stageCommit(survivors, root, commitId)
-    val v = allocate(root, commitId, schemaPath, tag, parent => {
-      if (parent != base) throw new java.util.ConcurrentModificationException(
-        s"graft table $root advanced v$base -> v$parent during upsert; " +
-        "retry on the new head")
-      Seq(keepManifest, newManifest)
-    })
+    val v = commitRewrite(root, base, kept, survivors, tag,
+      "upsert; retry on the new head")
     (v, touched.size.toLong, es.size.toLong)
     } finally keys.unpersist(false)
+  }
+
+  /** The copy-on-write tail of deleteBox and upsert: the snapshot after
+    * `base` keeps the `kept` files' manifest rows verbatim and stages
+    * `rewritten` beside them. Serializable isolation: a commit that moved
+    * the head since `base` aborts this one with a
+    * ConcurrentModificationException whose message ends "during $during". */
+  private def commitRewrite(root: String, base: Int, kept: Seq[FileEntry],
+      rewritten: DataFrame, tag: Option[String], during: String): Int = {
+    val commitId = UUID.randomUUID().toString.take(8)
+    val keepManifest = s"$root/manifests/m-$commitId-keep.parquet"
+    writeManifest(rewritten.sparkSession, keepManifest, kept)
+    val (newManifest, schemaPath) = stageCommit(rewritten, root, commitId)
+    allocate(root, commitId, schemaPath, tag, parent => {
+      if (parent != base) throw new java.util.ConcurrentModificationException(
+        s"graft table $root advanced v$base -> v$parent during $during")
+      Seq(keepManifest, newManifest)
+    })
   }
 
   /** Expire all snapshots older than the newest `keepLast`, then delete

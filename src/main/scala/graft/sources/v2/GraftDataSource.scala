@@ -221,23 +221,27 @@ private[v2] object GraftFilterPush {
     * predicate, which is exact (the commit lacked the column, so no row
     * of the file satisfies a comparison on it). Columns without footer
     * stats never prune. Values stay typed literals, so key stats compare
-    * as longs (a double would round keys above 2^53). */
+    * as longs (a double would round keys above 2^53). An upper stat of
+    * +Inf bounds nothing: it is also the sentinel of a file whose NaNs
+    * suppressed its stats, and Spark orders NaN above +Inf. */
   def manifestPredicate(pushed: Array[Filter])
       : org.apache.spark.sql.Column = {
+    def reaches(hi: String, v: Any) =
+      col(hi) >= lit(v) || col(hi) === Double.PositiveInfinity
     def pred(f: Filter): Option[org.apache.spark.sql.Column] = f match {
       case EqualTo(a, v: Number) => statCols.get(a).map { case (lo, hi) =>
-        col(lo) <= lit(v) && col(hi) >= lit(v) }
+        col(lo) <= lit(v) && reaches(hi, v) }
       case GreaterThan(a, v: Number) => statCols.get(a).map { case (_, hi) =>
-        col(hi) > lit(v) }
+        col(hi) > lit(v) || col(hi) === Double.PositiveInfinity }
       case GreaterThanOrEqual(a, v: Number) => statCols.get(a).map {
-        case (_, hi) => col(hi) >= lit(v) }
+        case (_, hi) => reaches(hi, v) }
       case LessThan(a, v: Number) => statCols.get(a).map { case (lo, _) =>
         col(lo) < lit(v) }
       case LessThanOrEqual(a, v: Number) => statCols.get(a).map {
         case (lo, _) => col(lo) <= lit(v) }
       case In(a, vs) if vs.forall(_.isInstanceOf[Number]) =>
         statCols.get(a).map { case (lo, hi) =>
-          vs.map(v => col(lo) <= lit(v) && col(hi) >= lit(v)).reduce(_ || _) }
+          vs.map(v => col(lo) <= lit(v) && reaches(hi, v)).reduce(_ || _) }
       case And(l, r) => (pred(l), pred(r)) match {
         case (Some(a), Some(b)) => Some(a && b)
         case (a, b) => a.orElse(b)

@@ -661,6 +661,76 @@ class GraftTableSpec extends AnyFunSuite {
     assert(v2 == obj)
   }
 
+  test("DataSource V2 property: a filtered format(\"graft\") read equals " +
+      "the filtered object read as a multiset of rows") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.rng.Seed
+    val root = freshRoot()
+    val top = 1L << 53
+    // x has nulls, and NaNs where `nan` (parquet then keeps no x stats,
+    // so the file's manifest carries the infinite sentinel)
+    def frame(keys: org.apache.spark.sql.Dataset[_], nan: Boolean = false) =
+      keys.select(col("id").as("order_key"),
+        when(col("id") % 11 === 0, lit(null))
+          .when(lit(nan) && col("id") % 3 === 0, lit(Double.NaN))
+          .otherwise((col("id") % 100).cast("double")).as("x"),
+        (col("id") % 37).cast("double").as("y"),
+        struct((col("id") % 7).as("a"), col("id").cast("string").as("b")).as("s"))
+    GraftTable.commit(frame(spark.range(200)).repartition(2), root)
+    GraftTable.commit(frame(spark.range(200, 300), nan = true).coalesce(1), root)
+    // keys straddling 2^53, where a double would round them together
+    GraftTable.commit(frame(spark.range(top - 12, top + 12)).repartition(2), root)
+    // no y and no s
+    GraftTable.commit(spark.range(1000, 1030).select(col("id").as("order_key"),
+      (col("id") - 1015.0).as("x")).coalesce(1), root)
+    assert(GraftTable.countRows(spark, root) == 354 &&
+      GraftTable.manifests(spark, root).count() == 6)
+
+    // literals hit stored values (halves of integers); x is drawn more
+    // often, half of its literals the doubles whose order the manifest
+    // stats must respect (Spark sorts NaN above +Inf)
+    val lits: Seq[(Int, (String, Gen[Any]))] = Seq(
+      1 -> ("order_key" -> Gen.oneOf(Gen.choose(-5L, 320L),
+        Gen.choose(top - 15, top + 15), Gen.choose(995L, 1035L))),
+      3 -> ("x" -> Gen.oneOf(Gen.choose(-40, 220).map(_ / 2.0), Gen.oneOf(0.0, -0.0,
+        Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity))),
+      1 -> ("y" -> Gen.choose(-4, 80).map(_ / 2.0)),
+      1 -> ("s.a" -> Gen.choose(-1L, 8L)))
+    val atom: Gen[org.apache.spark.sql.Column] = for {
+      (name, lit0) <- Gen.frequency(lits.map { case (w, l) => (w, Gen.const(l)) }: _*)
+      op <- Gen.choose(0, 6)
+      v <- lit0
+      vs <- Gen.choose(1, 4).flatMap(Gen.listOfN(_, lit0))
+    } yield {
+      val c = col(name)
+      op match {
+        case 0 => c === lit(v)
+        case 1 => c < lit(v)
+        case 2 => c <= lit(v)
+        case 3 => c > lit(v)
+        case 4 => c >= lit(v)
+        case 5 => c.isin(vs: _*)
+        case _ => c.isNotNull
+      }
+    }
+    val predicate = Gen.frequency(2 -> 1, 2 -> 2, 1 -> 3)
+      .flatMap(Gen.listOfN(_, atom)).map(_.reduce(_ && _))
+    def bag(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
+    def agrees(p: org.apache.spark.sql.Column) =
+      bag(spark.read.format("graft").load(root).filter(p)) ==
+        bag(GraftTable.read(spark, root).filter(p))
+    // the predicates a +Inf upper stat must not prune: only NaN rows match
+    for (p <- Seq(col("x") === Double.NaN, col("x") >= Double.NaN,
+        col("x") > Double.PositiveInfinity, col("x").isin(Double.NaN)))
+      assert(agrees(p), s"filter $p")
+    val result = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(100).withWorkers(1)
+        .withInitialSeed(Some(Seed(20261019L))),
+      Prop.forAllNoShrink(predicate)(p => Prop(agrees(p)) :| s"filter $p"))
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
+  }
+
   /** The Spark-side manifest read the driver reader replaced: the oracle
     * `GraftTable.entries` is checked against. */
   private def sparkManifestRows(paths: Seq[String]) =
@@ -744,8 +814,8 @@ class GraftTableSpec extends AnyFunSuite {
   }
 
   test("table metadata is planned on the driver: readBox, countBox, " +
-      "countRows, extent and manifest filters launch no job; a commit " +
-      "launches none after its footer pass") {
+      "countRows, extent and manifest filters launch no job; commits and " +
+      "deletes read their footers with no job") {
     val root = freshRoot()
     for (i <- 0 until 4)
       GraftTable.commit(cloud(200).withColumn("x", col("x") + i * 1000), root)
@@ -761,14 +831,20 @@ class GraftTableSpec extends AnyFunSuite {
     assert(jobsOf(GraftTable.extent(spark, root)) == 0)
     assert(jobsOf(GraftTable.manifests(spark, root)
       .filter(col("min_x") >= 1000).select("path").collect()) == 0)
-    // the footer pass is the commit's last job: the manifest is written
-    // from the driver
-    val sc = spark.sparkContext
-    val ids = jobIdsOf(GraftTable.commit(cloud(100, offX = 5000.0), root))
-    val lastStages = sc.statusTracker.getJobInfo(ids.last).get.stageIds.toSeq
-      .map(sc.statusTracker.getStageInfo(_).get.name)
-    assert(lastStages.nonEmpty && lastStages.forall(_.startsWith("collect at GraftTable")),
-      s"last commit job: $lastStages")
+    // a commit launches exactly the jobs of writing its frame: the
+    // manifest comes from footers read on the driver
+    val frame = cloud(100, offX = 5000.0)
+    val scratch = java.nio.file.Files.createTempDirectory("graft-write-").toString
+    val writeJobs = jobsOf(frame.write.mode("overwrite").parquet(scratch))
+    assert(writeJobs >= 1 && jobsOf(GraftTable.commit(frame, root)) == writeJobs)
     assert(GraftTable.countRows(spark, root) == 900)
+    // nor does a copy-on-write delete run a footer job
+    val sc = spark.sparkContext
+    val stages = jobIdsOf(GraftTable.deleteBox(spark, root, 0, 0, 49, 100))
+      .flatMap(sc.statusTracker.getJobInfo(_).get.stageIds.toSeq)
+      .map(sc.statusTracker.getStageInfo(_).get.name)
+    assert(stages.nonEmpty && !stages.exists(_.startsWith("collect at GraftTable")),
+      s"deleteBox stages: $stages")
+    assert(GraftTable.countRows(spark, root) == 800)
   }
 }
