@@ -195,22 +195,26 @@ object Csf {
         ClothSim.run(st, pw, ph, gx0, gy0, w, h, cx0 - gx0, cy0 - gy0, k,
           rigid, step, cx1 - gx0, cy1 - gy0)
       }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val diffs = res.filter(col("gx") === -1)
-        .groupBy("gy").agg(max("pos").as("d"))
-        .collect().map(r => r.getDouble(1))
-      if (diffs.exists(d => d != 0 && d < 0.005)) stop = true
+      // one collect answers both stop tests: the per-iteration maxDiff
+      // over all tiles, and whether any cell is still movable
+      val markers = res.filter(col("gx") === -1).select("gy", "pos", "movable")
+        .collect()
+      val diffs = markers.groupBy(_.getInt(0)).values
+        .map(_.map(_.getDouble(1)).reduce((a, b) => math.max(a, b)))
+      if (diffs.exists(d => d != 0 && d < 0.005) || !markers.exists(_.getBoolean(2)))
+        stop = true
       val next = Mat(res.filter(col("gx") >= 0))
       res.unpersist(false)
       cur = next
       used += k
-      if (cur.filter(col("movable")).limit(1).count() == 0) stop = true
     }
     cur
   }
 
   /** One tile+halo mapGroups round over the grid state. The kernel
     * mutates the dense patch and returns per-iteration core maxDiffs,
-    * emitted as marker rows (gx = -1, gy = iteration index). */
+    * emitted as marker rows (gx = -1, gy = iteration index, pos = the
+    * maxDiff, movable = any core cell still movable). */
   private def tileRound(cur: DataFrame, w: Int, h: Int, tileSize: Int,
       halo: Int)(kernel: (ClothSim.GridState, Int, Int, Int, Int, Int, Int,
         Int, Int) => Array[Double]): DataFrame = {
@@ -244,6 +248,8 @@ object Csf {
       val cx0 = tx * t; val cx1 = math.min(w, (tx + 1) * t)
       val cy0 = ty * t; val cy1 = math.min(h, (ty + 1) * t)
       val diffs = kernel(st, pw, ph, gx0, gy0, cx0, cy0, cx1, cy1)
+      val coreMovable = (cy0 until cy1).exists(gy =>
+        (cx0 until cx1).exists(gx => st.movable((gy - gy0) * pw + (gx - gx0))))
       val core = for {
         gy <- (cy0 until cy1).iterator; gx <- (cx0 until cx1).iterator
       } yield {
@@ -251,7 +257,7 @@ object Csf {
         (gx, gy, st.hv(i), st.pos(i), st.old(i), st.movable(i))
       }
       core ++ diffs.iterator.zipWithIndex.map { case (d, i) =>
-        (-1, i, 0.0, d, 0.0, false)
+        (-1, i, 0.0, d, 0.0, coreMovable)
       }
     }.toDF("gx", "gy", "hv", "pos", "old", "movable")
   }

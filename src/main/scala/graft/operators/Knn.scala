@@ -10,8 +10,12 @@ import graft.expr.DimRange
 case class Hit(d2: Double, cid: Long, v: Double, x: Double, y: Double, z: Double)
 
 /** A kNN result and its query-row count when the join already held one
-  * (see [[KnnJoin.knn]]): what [[KnnJoin.attach]] sizes its broadcast by. */
-final case class KnnResult(rows: DataFrame, queryRows: Option[Long])
+  * (see [[KnnJoin.knn]]): what [[KnnJoin.attach]] sizes its broadcast by.
+  * `openAfterRound` holds the queries still open after each distributed
+  * round (empty on the broadcast path) and `saltedSupercells` the hot
+  * supercells the first round salted: the counts of this call alone. */
+final case class KnnResult(rows: DataFrame, queryRows: Option[Long],
+    openAfterRound: Seq[Long] = Nil, saltedSupercells: Int = 0)
 
 /** The one insertion top-k of every kNN path: the k best candidates
   * offered so far, ascending by (d2, cid). (d2, cid) is a total order
@@ -183,11 +187,15 @@ private[operators] object CellIndex {
   * (SxSxS cells + a one-cell halo shell clamped to the union bbox —
   * at most ~3.4x candidate duplication instead of 27x per-cell
   * haloing) and answers each query's exact
-  * 3x3x3-cell cube from a task-local [[CellIndex]]; phase 2 re-joins
-  * ONLY the points whose kth-distance ball escapes the examined cube
-  * (sqrt(d2_k) <= R*h proves the local result final — the halo-exchange
-  * correctness property of SURVEY §7.4.3) against the next Chebyshev
-  * shell, iterating until resolved. The shuffled payload is only
+  * 3x3x3-cell cube from a task-local [[CellIndex]]. Every round has
+  * one finality rule: a query whose kth distance is within the cell
+  * size h is final (the cube covers every candidate within h — the
+  * halo-exchange correctness property of SURVEY §7.4.3). Phase 2 runs
+  * ONLY the open queries again, at a 3x coarser cell: each explodes
+  * into its 27-cell cube, the candidates of the probed cells stream
+  * past it, and the same rule decides. A coarser cube contains the
+  * finer one, so each round's top-k is exact on its own and nothing is
+  * carried between rounds. The shuffled payload is only
   * (qid, x, y, z[, hits]) — spans and other wide columns never move.
   * A candidate side at or below `broadcastLimit` skips all of this: one
   * driver-built [[CellIndex]] is broadcast and walks its shells until
@@ -216,7 +224,7 @@ object KnnJoin {
     * pass broadcastLimit = 0 to pin the distributed path (tests). */
   private[graft] val defaultBroadcastLimit: Int =
     sys.env.get("GRAFT_KNN_BROADCAST_LIMIT").map(_.toInt).getOrElse(1 << 18)
-  /** Cells per supercell edge: the first-binning cogroup keys on
+  /** Cells per supercell edge: the round-1 cogroup keys on
     * supercells (4x4x4 cells) with a one-cell halo shell, so the
     * candidate duplication factor is (1 + 2/S)^3 ~= 3.4x instead of the
     * 27x of per-cell haloing — an 8x shuffle-volume cut on the join's
@@ -237,13 +245,10 @@ object KnnJoin {
   private def superPack(sx: Column, sy: Column, sz: Column): Column =
     shiftleft(sx, 42).bitwiseOR(shiftleft(sy, 21)).bitwiseOR(sz)
 
-  /** Chebyshev shell-R offsets (R=0 -> just (0,0,0)). */
-  private def shellOffsets(r: Int): Seq[(Int, Int, Int)] =
-    if (r == 0) Seq((0, 0, 0))
-    else for {
-      dx <- -r to r; dy <- -r to r; dz <- -r to r
-      if math.max(math.abs(dx), math.max(math.abs(dy), math.abs(dz))) == r
-    } yield (dx, dy, dz)
+  /** The 27 cell offsets of a query's 3x3x3 cube. */
+  private val cubeOffsets: Column = array((for {
+    dx <- -1 to 1; dy <- -1 to 1; dz <- -1 to 1
+  } yield struct(lit(dx).as("dx"), lit(dy).as("dy"), lit(dz).as("dz"))): _*)
 
   /** Density-targeted cell size from an extent row — ONE implementation
     * shared by the broadcast and distributed paths: the two must stay
@@ -271,7 +276,7 @@ object KnnJoin {
       min("z"), max("z")).head()
 
   /** Supercell (incl. one-cell halo shell) candidate row set at cell
-    * size h — what one first-binning cogroup task receives. The halo is
+    * size h — what one round-1 cogroup task receives. The halo is
     * clamped to the supercells of `box`, the union [[extent]] row: every
     * query's supercell lies inside it, so a copy outside emits nothing. */
   private def superRows(cand: DataFrame, h: Double, valueCol: String,
@@ -334,7 +339,8 @@ object KnnJoin {
     *         reachable|), empty if none, each hit with its candidate's x,
     *         y, z; qx, qy, qz are the query's own coordinates. queryRows:
     *         the candidate count for self-kNN, the query extent's count on
-    *         the distributed path, else None (it would cost a job)
+    *         the distributed path, else None (it would cost a job);
+    *         openAfterRound and saltedSupercells as in [[KnnResult]]
     */
   def knn(queries: DataFrame, cand: DataFrame, k: Int,
       valueCol: String = "classification", cellSize: Double = 0.0,
@@ -343,14 +349,10 @@ object KnnJoin {
     require(k >= 1, s"knn: k must be >= 1, got k = $k")
     val spark = queries.sparkSession
     import spark.implicits._
-    val debug = sys.env.contains("GRAFT_KNN_DEBUG")
-    val tStart = System.nanoTime()
-    def dbg(msg: => String): Unit =
-      if (debug) println(f"[knn +${(System.nanoTime() - tStart) / 1e9}%.1fs] $msg")
 
-    // materialize both inputs ONCE: everything downstream (per-ring
-    // candidate scans, escalated binnings) would otherwise re-execute
-    // the caller's full upstream plan per job. persist + the extent
+    // materialize both inputs ONCE: everything downstream (each round's
+    // candidate scan) would otherwise re-execute the caller's full
+    // upstream plan per job. persist + the extent
     // aggregate as the materializing action = ONE job that both fills
     // the cache and returns the bbox (no separate probe job); lineage
     // stays intact so an executor loss recomputes instead of failing.
@@ -362,7 +364,6 @@ object KnnJoin {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     val ext = extent(candM)
-    dbg(s"candM materialized n=${ext.getLong(0)}")
     val selfRows = if (selfJoin) Some(ext.getLong(0)) else None
     if (ext.getLong(0) == 0L) { // no candidates at all
       candM.unpersist(false)
@@ -370,7 +371,7 @@ object KnnJoin {
         col("x").as("qx"), col("y").as("qy"), col("z").as("qz")), selfRows)
     }
     // NaN coordinates are malformed input and MUST fail loudly here: a
-    // NaN poisons maxExtent, so the ring loop's coverAll exit can never
+    // NaN poisons maxExtent, so the round loop's coverAll exit can never
     // fire and the distributed path loops forever, while the broadcast
     // path would silently emit different results — Spark's max() returns
     // NaN whenever one is present, so checking the three maxes of the
@@ -385,7 +386,7 @@ object KnnJoin {
     // ---- BROADCAST FAST PATH: a candidate side that fits one task's
     // memory is collected once, indexed on the driver, and broadcast —
     // the (arbitrarily large) query side answers exact top-k in a single
-    // shuffle-free mapPartitions pass: no cogroup, no ring-loop driver
+    // shuffle-free mapPartitions pass: no cogroup, no round-loop driver
     // barriers. This is the broadcast-hash-join analog for kNN, and the
     // common case at scale: ground-raster inpaint (area/cell^2 cells),
     // ICP/colorization reference sets, per-tile goldens. Results are
@@ -402,7 +403,6 @@ object KnnJoin {
         ex, ey, ez, math.max(1e-9, math.max(ex, math.max(ey, ez)))))
       val idx = spark.sparkContext.broadcast(
         new CellIndex(lcx, lcy, lcz, lcid, lcv, hB))
-      dbg(s"broadcast fast path: n=$n h=$hB")
       // self-kNN: rebuild the (small) query side from the collected rows
       // so the output has no lineage into the cached candM
       val qDs =
@@ -432,10 +432,10 @@ object KnnJoin {
       if (!selfJoin) queriesM.unpersist(false)
     }
     // coverAll must be query-aware: the examined cube is centered at the
-    // QUERY cell, so finality needs ring*h to cover the distance from any
+    // QUERY cell, so finality needs h to cover the distance from any
     // query to the farthest candidate — bounded by the UNION bbox extent
     // (a query offset from the candidate cloud otherwise gets truncated
-    // results once ring*h passes the candidate-only extent)
+    // results once h passes the candidate-only extent)
     val qe = if (selfJoin) ext else extent(queriesM)
     require(qe.getLong(0) == 0L || (!qe.getDouble(2).isNaN &&
       !qe.getDouble(4).isNaN && !qe.getDouble(6).isNaN),
@@ -459,14 +459,13 @@ object KnnJoin {
       pack3(cellCoord(col("x"), h), cellCoord(col("y"), h), cellCoord(col("z"), h)).as("cell"),
       col("x"), col("y"), col("z"), col("order_key").as("cid"),
       col(valueCol).cast("double").as("v"))
-      .withColumn("__salt", lit(0))
 
     def bin(q: DataFrame, h: Double): DataFrame = q.select(col("qid"),
       col("qx"), col("qy"), col("qz"),
       cellCoord(col("qx"), h).as("ccx"), cellCoord(col("qy"), h).as("ccy"),
       cellCoord(col("qz"), h).as("ccz"))
 
-    /** First-binning join: cogroup keyed on SUPERCELLS (SxSxS cells)
+    /** Round 1: cogroup keyed on SUPERCELLS (SxSxS cells)
       * with candidates duplicated only into the one-cell halo shell of
       * adjacent supercells (~(1+2/S)^3 = 3.4x fan-out instead of the 27x
       * of per-cell haloing — an 8x shuffle-volume cut on the dominant
@@ -477,7 +476,7 @@ object KnnJoin {
       * replicated across salt groups.
       * Every query row comes out once per salt group, with its
       * coordinates (an empty `hits` when the group holds no candidates),
-      * so the ring loop never re-joins the query side. */
+      * so the round loop never re-joins the query side. */
     def superPartials(q: DataFrame, h: Double, hotDf: Option[DataFrame]): DataFrame = {
       val q1 = q.select(col("qid"), col("qx"), col("qy"), col("qz"),
         superPack(superC(col("ccx"), 0), superC(col("ccy"), 0),
@@ -520,154 +519,105 @@ object KnnJoin {
       }.toDF("qid", "qx", "qy", "qz", "hits")
     }
 
-    def ringPartials(q: DataFrame, shell: Seq[(Int, Int, Int)],
-        candsDf: DataFrame, filterCells: Boolean): DataFrame = {
-      val offs = array(shell.map { case (dx, dy, dz) =>
-        struct(lit(dx).as("dx"), lit(dy).as("dy"), lit(dz).as("dz"))
-      }: _*)
-      val exploded = q.withColumn("__o", explode(offs))
+    /** A later round: each open query explodes into the 27 cells of its
+      * cube at cell size h, and the candidates shrink to the probed cells
+      * instead of re-shuffling the full corpus. Every query row comes out
+      * once per probed cell, with an empty `hits` when the cell holds no
+      * candidate, so a query whose whole cube is empty still reaches the
+      * merge. */
+    def cubePartials(q: DataFrame, h: Double): DataFrame = {
+      val exploded = q.withColumn("__o", explode(cubeOffsets))
         .select(col("qid"), col("qx"), col("qy"), col("qz"),
           pack3(col("ccx") + col("__o.dx"), col("ccy") + col("__o.dy"),
             col("ccz") + col("__o.dz")).as("cell"))
-        .withColumn("__salt", lit(0))
-        .select("qid", "qx", "qy", "qz", "cell", "__salt")
-        .as[(Long, Double, Double, Double, Long, Int)]
-      // late rings probe few cells: shrink the candidate shuffle to the
-      // cells actually probed instead of re-shuffling the full corpus
-      val cands0 = if (filterCells)
-        candsDf.join(exploded.toDF().select("cell").distinct(), Seq("cell"), "left_semi")
-      else candsDf
-      val cands = cands0.select("cell", "x", "y", "z", "cid", "v", "__salt")
-        .as[(Long, Double, Double, Double, Long, Double, Int)]
-      exploded.groupByKey(t => (t._5, t._6)).cogroup(cands.groupByKey(t => (t._1, t._7))) {
-        (_, qs, cs) =>
-          // STREAM the candidates (one pass, never materialized): ring
-          // cells have no salting, so a dense cell at a coarse escalated
-          // h could hold millions of candidates, past the
-          // maxCellCandidates bound. Buffer the QUERIES instead (pending-
-          // set fragments, O(queries*k) memory) and offer each streamed
-          // candidate to every query's TopK.
-          val qBuf = qs.toArray
-          if (qBuf.isEmpty || !cs.hasNext) Iterator.empty
-          else {
-            val tops = Array.fill(qBuf.length)(new TopK(k))
-            cs.foreach { c =>
-              var qi = 0
-              while (qi < qBuf.length) {
-                val q0 = qBuf(qi)
-                val dx = c._2 - q0._2; val dy = c._3 - q0._3; val dz = c._4 - q0._4
-                tops(qi).offer(dx * dx + dy * dy + dz * dz, c._5, c._6,
-                  c._2, c._3, c._4)
-                qi += 1
-              }
-            }
-            qBuf.iterator.zip(tops.iterator).map { case (q0, top) =>
-              (q0._1, q0._2, q0._3, q0._4, top.hits)
-            }
+        .as[(Long, Double, Double, Double, Long)]
+      val cands = candPrep(h)
+        .join(exploded.toDF().select("cell").distinct(), Seq("cell"), "left_semi")
+        .as[(Long, Double, Double, Double, Long, Double)]
+      exploded.groupByKey(_._5).cogroup(cands.groupByKey(_._1)) { (_, qs, cs) =>
+        // STREAM the candidates (one pass, never materialized): probed
+        // cells have no salting, so a dense cell at a coarse h could hold
+        // millions of candidates, past the maxCellCandidates bound.
+        // Buffer the QUERIES instead (O(queries*k) memory) and offer each
+        // streamed candidate to every query's TopK.
+        val qBuf = qs.toArray
+        val tops = Array.fill(qBuf.length)(new TopK(k))
+        cs.foreach { c =>
+          var qi = 0
+          while (qi < qBuf.length) {
+            val q0 = qBuf(qi)
+            val dx = c._2 - q0._2; val dy = c._3 - q0._3; val dz = c._4 - q0._4
+            tops(qi).offer(dx * dx + dy * dy + dz * dz, c._5, c._6, c._2, c._3, c._4)
+            qi += 1
           }
+        }
+        qBuf.iterator.zip(tops.iterator).map { case (q0, top) =>
+          (q0._1, q0._2, q0._3, q0._4, top.hits)
+        }
       }.toDF("qid", "qx", "qy", "qz", "hits")
     }
 
-    // across cell-size escalations the same candidate can be re-found, so
-    // merge dedups exact-equal hit structs before slicing top-k; the
-    // coordinates are a function of qid, so they ride along as group keys
+    // a candidate reaches a query through one salt group or one cube
+    // cell, so the partials are disjoint; the coordinates are a function
+    // of qid, so they ride along as group keys
     def mergeTopK(partials: DataFrame): DataFrame =
       partials.groupBy("qid", "qx", "qy", "qz").agg(
-        slice(array_distinct(array_sort(flatten(collect_list(col("hits"))))), 1, k)
-          .as("knn"))
+        slice(array_sort(flatten(collect_list(col("hits")))), 1, k).as("knn"))
 
-    val r1cube = shellOffsets(0) ++ shellOffsets(1)
-    val ringsPerBinning = 3
-    var resolvedParts = List.empty[DataFrame]
-    var pending = queriesM.select(col("order_key").as("qid"), col("x").as("qx"),
+    // round 1: halo-explode the CANDIDATES, query one supercell each —
+    // per-query cube top-k lands in a single cogroup, no merge shuffle.
+    // n <= cap means no supercell can exceed the cap — detection free
+    val hot =
+      if (ext.getLong(0) <= maxCellCandidates) Map.empty[Long, Int]
+      else detectHotSupercells(candM, h0, maxCellCandidates, uext)
+    val hotDf =
+      if (hot.isEmpty) None
+      else Some(broadcast(spark.createDataFrame(hot.toSeq).toDF("skey", "__s")))
+    val queriesQ = queriesM.select(col("order_key").as("qid"), col("x").as("qx"),
       col("y").as("qy"), col("z").as("qz"))
-    // (qid, qx, qy, qz, knn) partials from finer binnings; None while
-    // the first binning runs
-    var carried: Option[DataFrame] = None
+    val partials1 = superPartials(bin(queriesQ, h0), h0, hotDf)
+    // salted queries hold partials per salt group -> merge; the skew-free
+    // fast path keeps the single-cogroup result as-is
+    var roundKnn =
+      if (hotDf.isDefined) mergeTopK(partials1)
+      else partials1.withColumnRenamed("hits", "knn")
     var h = h0
+    var resolvedParts = List.empty[DataFrame]
+    var openAfterRound = Vector.empty[Long]
     var done = false
-
-    // each binning runs rings 1..3; unresolved points escalate to cells 8x
-    // coarser (geometric — total work is log(maxExtent/h0) bounded, the
-    // fix for badly-estimated cell sizes on degenerate inputs)
+    // each later round bins the open queries at a 3x coarser cell, so the
+    // round count is bounded by log3(maxExtent / h0) — the fix for badly
+    // estimated cell sizes on degenerate inputs
     while (!done) {
-      val cands = candPrep(h)
-      val q = bin(pending, h)
-      // first binning: halo-explode the CANDIDATES, query one cell each —
-      // per-query cube-1 top-k lands in a single cogroup, no merge
-      // shuffle. Later binnings: explode the (small) pending query set
-      // and shrink candidates to probed cells.
-      var accumulated = carried match {
-        case None =>
-          // n <= cap means no supercell can exceed the cap — detection free
-          val hot =
-            if (ext.getLong(0) <= maxCellCandidates) Map.empty[Long, Int]
-            else detectHotSupercells(candM, h, maxCellCandidates, uext)
-          dbg(s"hot detection done: ${hot.size} hot supercells at h=$h")
-          val hotDf =
-            if (hot.isEmpty) None
-            else Some(broadcast(
-              spark.createDataFrame(hot.toSeq).toDF("skey", "__s")))
-          val partials = superPartials(q, h, hotDf)
-          // salted queries hold partials per salt group -> merge; the
-          // skew-free fast path keeps the single-cogroup result as-is
-          if (hotDf.isDefined) mergeTopK(partials)
-          else partials.withColumnRenamed("hits", "knn")
-        case Some(c) => mergeTopK(ringPartials(q, r1cube, cands, filterCells = true)
-          .unionByName(c.withColumnRenamed("knn", "hits")))
-      }
-      var ring = 1
-      var escalate = false
-      while (!done && !escalate) {
-        val coverAll = ring * h >= maxExtent // examined cube covers every candidate
-        val kth = try_element_at(col("knn"), lit(k))
-        val isFinal = (size(col("knn")) === k &&
-          sqrt(kth.getField("d2")) <= lit(ring * h)) || lit(coverAll)
-        // one materialization per ring: LAZY localCheckpoint (cuts the
-        // logical plan immediately — the ring loop otherwise compounds
-        // plans exponentially) with the pending-count aggregate as the
-        // materializing action — a single job checkpoints the ring AND
-        // answers "is anything unresolved", replacing the old eager-
-        // checkpoint job + isEmpty probe pair (two driver barriers per
-        // ring -> one; the serial-floor item of BENCH/BASELINE.md).
-        // Every pending query is already a row of `accumulated`, with
-        // its coordinates, so the ring re-joins nothing: the cogroup (and
-        // the top-k merge of salted or later rings) is its only shuffle.
-        val joined = accumulated.withColumn("__final", isFinal)
-          .transform(d => graft.core.Mat(d, eager = false))
-        val pendingCount = joined.agg(
-          count(when(!col("__final"), lit(1)))).head().getLong(0)
-        dbg(s"ring=$ring h=$h pending=$pendingCount")
-        resolvedParts = joined.filter(col("__final"))
-          .select("qid", "knn", "qx", "qy", "qz") :: resolvedParts
-        val nextPending = joined.filter(!col("__final"))
-          .select("qid", "qx", "qy", "qz", "knn")
-        pending = nextPending.drop("knn")
-        if (pendingCount == 0L) done = true
-        else if (ring < ringsPerBinning) {
-          // jump both remaining shells in one round: pending is already the
-          // small boundary-escaping minority, one cogroup covers rings 2+3
-          val jump = ringsPerBinning
-          val shells = ((ring + 1) to jump).flatMap(shellOffsets)
-          ring = jump
-          val shellPart = ringPartials(bin(pending, h), shells, cands,
-            filterCells = true)
-          accumulated = mergeTopK(
-            nextPending.withColumnRenamed("knn", "hits").unionByName(shellPart))
-        } else {
-          carried = Some(nextPending)
-          h *= 8
-          escalate = true
-        }
+      val kth = try_element_at(col("knn"), lit(k))
+      val isFinal = (size(col("knn")) === k &&
+        sqrt(kth.getField("d2")) <= lit(h)) || lit(h >= maxExtent)
+      // one materialization per round: LAZY localCheckpoint (cuts the
+      // logical plan immediately — the loop otherwise compounds plans)
+      // with the open-count aggregate as the materializing action — a
+      // single job checkpoints the round AND answers "is anything open".
+      // Every open query is already a row of the round, with its
+      // coordinates, so the next round re-joins nothing.
+      val joined = roundKnn.withColumn("__final", isFinal)
+        .transform(d => graft.core.Mat(d, eager = false))
+      val open = joined.agg(count(when(!col("__final"), lit(1)))).head().getLong(0)
+      openAfterRound :+= open
+      resolvedParts = joined.filter(col("__final"))
+        .select("qid", "knn", "qx", "qy", "qz") :: resolvedParts
+      if (open == 0L) done = true
+      else {
+        h *= 3
+        roundKnn = mergeTopK(cubePartials(
+          bin(joined.filter(!col("__final")).select("qid", "qx", "qy", "qz"), h), h))
       }
     }
-    dbg("loop done")
     // every resolved part is a materialized (lazy-localCheckpoint, forced
-    // by its ring's pending-count action) frame — the result no longer
+    // by its round's open-count action) frame — the result no longer
     // reads the cached inputs, so their blocks can be dropped now
     release()
     KnnResult(resolvedParts.reduce(_.unionByName(_))
-      .withColumnRenamed("qid", "order_key"), Some(qe.getLong(0)))
+      .withColumnRenamed("qid", "order_key"), Some(qe.getLong(0)),
+      openAfterRound, hot.size)
   }
 
   /** Left-joins `perQuery`, a kNN consumer's result with at most one row

@@ -75,24 +75,33 @@ class KnnSpec extends AnyFunSuite {
       .map(_.getString(0)).sorted.toSeq
 
   /** Self-kNN of `df` as qid -> (its (qx, qy, qz), its
-    * (d2, cid, v, x, y, z) hits). */
-  private def selfKnnHits(df: org.apache.spark.sql.DataFrame, k: Int,
-      broadcastLimit: Int, cellSize: Double = 0.0) =
-    KnnJoin.knn(df.select("order_key", "x", "y", "z"), df, k,
-        cellSize = cellSize, broadcastLimit = broadcastLimit).rows
-      .collect().map { r =>
-        r.getLong(0) -> ((r.getDouble(2), r.getDouble(3), r.getDouble(4)),
-          r.getSeq[org.apache.spark.sql.Row](1).map(h => (h.getDouble(0),
-            h.getLong(1), h.getDouble(2), h.getDouble(3), h.getDouble(4),
-            h.getDouble(5))).toVector)
-      }.toMap
+    * (d2, cid, v, x, y, z) hits), with the queries open after each
+    * distributed round. */
+  private def selfKnn(df: org.apache.spark.sql.DataFrame, k: Int,
+      broadcastLimit: Int, cellSize: Double = 0.0) = {
+    val r = KnnJoin.knn(df.select("order_key", "x", "y", "z"), df, k,
+      cellSize = cellSize, broadcastLimit = broadcastLimit)
+    val hits = r.rows.collect().map { r =>
+      r.getLong(0) -> ((r.getDouble(2), r.getDouble(3), r.getDouble(4)),
+        r.getSeq[org.apache.spark.sql.Row](1).map(h => (h.getDouble(0),
+          h.getLong(1), h.getDouble(2), h.getDouble(3), h.getDouble(4),
+          h.getDouble(5))).toVector)
+    }.toMap
+    (hits, r.openAfterRound)
+  }
 
-  /** Self-kNN at k=5 over `docs` on the pinned distributed path; at the
-    * estimated cell size ring 1 resolves every query. */
-  private def selfKnnShuffle(docs: org.apache.spark.sql.DataFrame): Shuffled =
-    shuffled {
-      KnnJoin.knn(docs, docs, 5, selfJoin = true, broadcastLimit = 0).rows.collect()
+  /** Self-kNN at k=5 over `docs` on the pinned distributed path, with the
+    * queries open after each round; at the estimated cell size round 1
+    * resolves every query. */
+  private def selfKnnShuffle(docs: org.apache.spark.sql.DataFrame): (Shuffled, Seq[Long]) = {
+    var open = Seq.empty[Long]
+    val s = shuffled {
+      val r = KnnJoin.knn(docs, docs, 5, selfJoin = true, broadcastLimit = 0)
+      r.rows.collect()
+      open = r.openAfterRound
     }
+    (s, open)
+  }
 
   test("grid kNN == brute force on 800 synthetic docs (broadcast AND " +
       "distributed paths, full-struct differential)") {
@@ -101,7 +110,7 @@ class KnnSpec extends AnyFunSuite {
     val pts = docs.select("order_key", "x", "y", "z", "classification").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getInt(4)))
     val k = 5
-    def run(bl: Int) = selfKnnHits(docs, k, bl)
+    def run(bl: Int) = selfKnn(docs, k, bl)._1
     val gotB = run(KnnJoin.defaultBroadcastLimit) // 800 <= limit: fast path
     val gotD = run(0)                             // pinned distributed path
     assert(gotB == gotD, "broadcast fast path must be bit-identical to the cogroup path")
@@ -115,9 +124,9 @@ class KnnSpec extends AnyFunSuite {
     }
     // exact ties: on an integer lattice many candidates share each d2, so
     // the cid tie-break orders them. cids are a seeded permutation of the
-    // lattice positions. cellSize 0.3 leaves every query open after rings
-    // 1-3 and escalates the cell size once. Each hit carries its cid's
-    // lattice point and each row its query's.
+    // lattice positions. cellSize 0.3 leaves every query open after the
+    // rounds at h = 0.3 and 0.9; the kth distance (<= 2) is final at 2.7.
+    // Each hit carries its cid's lattice point and each row its query's.
     val ids = new scala.util.Random(5).shuffle((0 until 216).toVector)
     val lat = (for (x <- 0 until 6; y <- 0 until 6; z <- 0 until 6)
       yield (x.toDouble, y.toDouble, z.toDouble)).zip(ids).map {
@@ -131,12 +140,18 @@ class KnnSpec extends AnyFunSuite {
       }.sortBy(t => (t._1, t._2)).take(kL).toVector)
     }.toMap
     for ((bl, cs) <- Seq((KnnJoin.defaultBroadcastLimit, 0.0), (0, 0.0), (0, 0.3)))
-      assert(selfKnnHits(latDf, kL, bl, cs) == expL, s"broadcastLimit=$bl cellSize=$cs")
+      assert(selfKnn(latDf, kL, bl, cs)._1 == expL, s"broadcastLimit=$bl cellSize=$cs")
+    // the later rounds' answer does not depend on the input partition count
+    for (p <- Seq(1, 7, 64)) {
+      val (got, open) = selfKnn(latDf.repartition(p), kL, 0, 0.3)
+      assert(got == expL, s"partitions=$p")
+      assert(open == Seq(216L, 216L, 0L), s"partitions=$p open after each round")
+    }
     // k = 0 is rejected by name before any Spark job runs
     val sc = spark.sparkContext
     sc.setJobGroup("knn-k0", "k = 0", interruptOnCancel = false)
     try for (bl <- Seq(KnnJoin.defaultBroadcastLimit, 0)) {
-      val e = intercept[IllegalArgumentException](selfKnnHits(docs, 0, bl))
+      val e = intercept[IllegalArgumentException](selfKnn(docs, 0, bl))
       assert(e.getMessage.contains("k must be >= 1"), e.getMessage)
     } finally sc.clearJobGroup()
     org.apache.spark.TestListenerBus.drain(sc)
@@ -166,15 +181,17 @@ class KnnSpec extends AnyFunSuite {
     }
   }
 
-  test("kNN halo: small cells force multi-ring resolution, still exact") {
+  test("kNN halo: small cells force multi-round resolution, still exact") {
     val docs = Synth.docs(spark, 300, seed = 11).cache()
     val pts = docs.select("order_key", "x", "y", "z").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
     val k = 3
-    // cell size far smaller than typical NN distance -> rings > 1 needed
-    // (broadcastLimit = 0 pins the distributed multi-ring machinery)
-    val got = KnnJoin.knn(docs.select("order_key", "x", "y", "z"), docs, k,
-        cellSize = 20.0, broadcastLimit = 0).rows
+    // cell size far smaller than typical NN distance -> rounds > 1 needed
+    // (broadcastLimit = 0 pins the distributed multi-round machinery)
+    val r = KnnJoin.knn(docs.select("order_key", "x", "y", "z"), docs, k,
+      cellSize = 20.0, broadcastLimit = 0)
+    assert(r.openAfterRound == Seq(300L, 300L, 264L, 0L))
+    val got = r.rows
       .collect().map { r =>
         r.getLong(0) -> r.getSeq[org.apache.spark.sql.Row](1).map(_.getLong(1)).toVector
       }.toMap
@@ -260,8 +277,13 @@ class KnnSpec extends AnyFunSuite {
     val q = (0 until 5).map(i =>
       (1000L + i, 500.0 + i, 500.0, 0.0)).toDF("order_key", "x", "y", "z")
     for (bl <- Seq(0, KnnJoin.defaultBroadcastLimit)) { // both paths
-      val out = KnnJoin.knn(q, cand, k = 3, valueCol = "classification",
-          broadcastLimit = bl).rows
+      val res = KnnJoin.knn(q, cand, k = 3, valueCol = "classification",
+        broadcastLimit = bl)
+      // the distributed path widens each query's cube until it reaches
+      // the cloud; the broadcast path runs no rounds
+      assert(res.openAfterRound ==
+        (if (bl == 0) Seq(5L, 5L, 5L, 5L, 0L) else Nil), s"broadcastLimit=$bl")
+      val out = res.rows
         .collect().map(r => r.getLong(0) ->
           r.getSeq[org.apache.spark.sql.Row](1).map(_.getLong(1)).toVector).toMap
       assert(out.size == 5)
@@ -290,7 +312,8 @@ class KnnSpec extends AnyFunSuite {
       "(records <= 3.25x candidates; halo stage <= 2.25x)") {
     val docs = Synth.docs(spark, 20000).cache()
     val n = docs.count()
-    val s = selfKnnShuffle(docs)
+    val (s, open) = selfKnnShuffle(docs)
+    assert(open == Seq(0L), "round 1 resolves every query")
     info(f"records/cand ${s.records.toDouble / n}%.3f, " +
       f"largest stage ${s.maxStageRecords.toDouble / n}%.3f, bytes ${s.bytes}")
     // The halo stage writes each candidate once per supercell its
@@ -366,8 +389,8 @@ class KnnSpec extends AnyFunSuite {
     val docs = Synth.docs(spark, 20000).cache()
     val wide = docs.withColumn("spans", concat(Seq.fill(8)(col("spans")): _*)).cache()
     assert(docs.count() == wide.count())
-    val b1 = selfKnnShuffle(docs).bytes
-    val b8 = selfKnnShuffle(wide).bytes
+    val b1 = selfKnnShuffle(docs)._1.bytes
+    val b8 = selfKnnShuffle(wide)._1.bytes
     info(s"kNN shuffle bytes: 1x $b1, 8x $b8")
     assert(b1 > 0)
     assert(math.abs(b8 - b1) <= 0.05 * b1,

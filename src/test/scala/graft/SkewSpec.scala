@@ -66,8 +66,10 @@ class SkewSpec extends AnyFunSuite {
     val maxGroup = hot.map { case (_, s) => math.ceil(9000.0 / s) }.max
     assert(maxGroup <= 2 * cap, s"salted group bound $maxGroup vs cap $cap")
     // exactness THROUGH the salted path (cap forces salting at this h)
-    val knnSalted = graft.operators.KnnJoin.knn(pts, skewed, 3,
-      cellSize = h, maxCellCandidates = cap, broadcastLimit = 0).rows
+    val salted = graft.operators.KnnJoin.knn(pts, skewed, 3,
+      cellSize = h, maxCellCandidates = cap, broadcastLimit = 0)
+    assert(salted.saltedSupercells == hot.size, "the result counts its salted supercells")
+    val knnSalted = salted.rows
     val all = pts.collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
     // each row carries its query's coordinates and each hit its cid's
