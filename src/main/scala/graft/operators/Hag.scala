@@ -161,10 +161,10 @@ object Zsmooth {
   * Running skewness comes from prefix power sums S1..S3 of centered z
   * (skewness is shift-invariant; centering on (min+max)/2 keeps the
   * sums conditioned where the reference uses incremental M2/M3 —
-  * semantic, not bitwise, parity) via the range-partitioned prefix-sum
-  * helper — no single-partition window. The previous row's skewness is
-  * recovered by subtracting the row's own contribution from the
-  * inclusive sums, so no lag() pass is needed. Ties in z keep
+  * semantic, not bitwise, parity) via the range-partitioned running sums
+  * of `Order.runningSums` — no single-partition window. The previous
+  * row's skewness is recovered by subtracting the row's own contribution
+  * from the inclusive sums, so no lag() pass is needed. Ties in z keep
   * order_key order (the reference's stableSort). */
 object SkewnessBalancing {
   def apply(df: DataFrame): DataFrame = {
@@ -172,9 +172,9 @@ object SkewnessBalancing {
     if (e.getLong(2) == 0L) return df
     val center = (e.getDouble(0) + e.getDouble(1)) / 2.0
     val w = col("z") - center
-    val pre = Order.globalPrefixSumsD(df,
-      Seq(col("z").asc, col("order_key").asc),
-      Seq((lit(1.0), "__n"), (w, "__s1"), (w * w, "__s2"), (w * w * w, "__s3")))
+    val pre = Order.runningSums(df, Seq(col("z").asc, col("order_key").asc),
+      Seq((lit(1.0), "__n"), (w, "__s1"), (w * w, "__s2"), (w * w * w, "__s3"))
+        .map { case (v, name) => coalesce(v.cast("double"), lit(0.0)) -> name })
 
     def skewOf(n: Column, s1: Column, s2: Column, s3: Column): Column = {
       // division-free sign test: m2 > 0 iff s2*n - s1^2 > 0 (and the

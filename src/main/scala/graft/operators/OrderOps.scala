@@ -1,140 +1,94 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import scala.collection.immutable.ListMap
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /** Order-dependent operators. PDAL leans on insertion order everywhere
   * (PointView is an ordered selection vector, pdal/PointView.hpp:338);
-  * our analog is the explicit `order_key` column. Global ranks are
-  * computed scalably: range-repartition on the order column, rank within
-  * partitions, add per-partition offsets (collected counts are one row per
-  * partition — never point data). No single-partition windows at scale.
+  * our analog is the explicit `order_key` column. Every global rank and
+  * prefix sum is one scalable scan, `Order.runningSums`: range-repartition
+  * on the order, run the sums inside partitions, add a per-partition
+  * carry (collected totals are one row per partition and group — never
+  * point data). No single-partition windows at scale.
   */
 object Order {
-  /** Dense 0-based global rank by `sortCols` as column `outCol`. */
-  def globalRankBy(df: DataFrame, sortCols: Seq[Column], outCol: String): DataFrame = {
+  /** Inclusive running sums of the non-null `values` (expression, output
+    * column) in `sortCols` order, within each `groupCol` group (a null
+    * group is a group) or over the whole frame. Each sum keeps the type
+    * Spark's `sum` gives its value: long stays exact, and double sums are
+    * exact when the values are integer multiples of a power of two well
+    * inside the 53-bit mantissa. `values` name `df`'s columns by name.
+    *
+    * Range order keeps each group contiguous, so the only group of a
+    * physical partition with rows in lower partitions is its first one,
+    * and that group's carry (the totals of those lower rows) is one
+    * literal per partition: no join, no broadcast. */
+  def runningSums(df: DataFrame, sortCols: Seq[Column],
+      values: Seq[(Column, String)], groupCol: Option[String] = None): DataFrame = {
     val parts = math.max(df.sparkSession.sessionState.conf.numShufflePartitions, 1)
-    // eager checkpoint pins the physical partitions: the counts job and the
-    // rank job must see the SAME __pid mapping (AQE partition coalescing
+    val keys = groupCol.map(col).toSeq
+    // eager checkpoint pins the physical partitions: the totals job and the
+    // sums job must see the SAME __pid mapping (AQE partition coalescing
     // can otherwise re-map partition ids between the two jobs)
-    val ranged = graft.core.Mat(df.repartitionByRange(parts, sortCols: _*)
+    val ranged = graft.core.Mat(df.repartitionByRange(parts, (keys ++ sortCols): _*)
       .withColumn("__pid", spark_partition_id()))
-    val counts = ranged.groupBy("__pid").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val maxPid = if (counts.isEmpty) 0 else counts.keys.max
-    val offsets = (0 to maxPid).scanLeft(0L)((acc, pid) => acc + counts.getOrElse(pid, 0L))
-    val offCol = element_at(
-      array(offsets.take(maxPid + 1).map(lit): _*), col("__pid") + 1)
-    val w = Window.partitionBy("__pid").orderBy(sortCols: _*)
-    ranged.withColumn(outCol, row_number().over(w).cast("long") - 1 + offCol)
-      .drop("__pid")
+    val sums = values.map { case (v, _) => sum(v) }
+    val types = ranged.select(sums: _*).schema.map(_.dataType)
+    val zero: Seq[Any] = types.map {
+      case LongType => 0L
+      case DoubleType => 0.0
+      case t => throw new IllegalArgumentException(
+        s"runningSums: sums must be long or double, got $t")
+    }
+    def add(a: Seq[Any], b: Seq[Any]): Seq[Any] = a.zip(b).map {
+      case (x: Long, y: Long) => x + y
+      case (x: Double, y: Double) => x + y
+      case (x, null) => x
+    }
+    // (pid, group) -> that group's totals in that partition
+    val totals = ranged.groupBy((col("__pid") +: keys): _*)
+      .agg(sums.head, sums.tail: _*).collect()
+      .map(r => (r.getInt(0), if (keys.isEmpty) None else Option(r.get(1)),
+        values.indices.map(i => r.get(1 + keys.size + i))))
+      .groupBy(_._1)
+    val maxPid = if (totals.isEmpty) 0 else totals.keys.max
+    // walk the partitions in order: a group already seen below is carried
+    val seen = scala.collection.mutable.Map[Option[Any], Seq[Any]]()
+    val carry = (0 to maxPid).map { pid =>
+      val here = totals.get(pid).toSeq.flatten
+      val c = here.collectFirst { case (_, g, _) if seen.contains(g) => (g, seen(g)) }
+      here.foreach { case (_, g, t) => seen(g) = add(seen.getOrElse(g, zero), t) }
+      c
+    }
+    def perPid(xs: Seq[Any], t: DataType): Column =
+      element_at(array(xs.map(x => lit(x).cast(t)): _*), col("__pid") + 1)
+    // null-safe: a carried null group is matched; where nothing is carried
+    // the literal group is null and the carry 0, so a null group adds 0
+    val carried = groupCol.fold(lit(true)) { g =>
+      col(g) <=> perPid(carry.map(_.flatMap(_._1).orNull), df.schema(g).dataType)
+    }
+    val w = Window.partitionBy((col("__pid") +: keys): _*).orderBy(sortCols: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    ranged.withColumns(ListMap(values.indices.map { i =>
+      val off = perPid(carry.map(_.fold(zero(i))(_._2(i))), types(i))
+      values(i)._2 -> (coalesce(sum(values(i)._1).over(w), lit(zero(i))) +
+        when(carried, off).otherwise(lit(zero(i))))
+    }: _*)).drop("__pid")
   }
 
-  def globalRank(df: DataFrame, orderCol: String = "order_key",
-      outCol: String = "__rank", ascending: Boolean = true): DataFrame =
-    globalRankBy(df, Seq(if (ascending) col(orderCol).asc else col(orderCol).desc), outCol)
+  /** Dense 0-based rank by `sortCols` as column `outCol`, within each
+    * `groupCol` group or over the whole frame: a running count minus one. */
+  def globalRankBy(df: DataFrame, sortCols: Seq[Column], outCol: String,
+      groupCol: Option[String] = None): DataFrame =
+    runningSums(df, sortCols, Seq(lit(1L) -> outCol), groupCol)
+      .withColumn(outCol, col(outCol) - 1)
 
-  /** Dense 0-based rank by `sortCols` WITHIN each group of `groupCol`,
-    * scalable to any group size: range-repartition on (group, sort...),
-    * rank inside physical partitions (group runs are contiguous in range
-    * order), then add per-(partition, group) offsets. The collected
-    * offset table is one row per (partition, group-present-in-partition)
-    * — bounded by partitions + groups, never point data. */
-  def globalRankWithin(df: DataFrame, groupCol: String, sortCols: Seq[Column],
-      outCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val parts = math.max(spark.sessionState.conf.numShufflePartitions, 1)
-    val ranged = graft.core.Mat(
-      df.repartitionByRange(parts, (col(groupCol) +: sortCols): _*)
-        .withColumn("__pid", spark_partition_id()))
-    val counts = ranged.groupBy("__pid", groupCol).count().collect()
-      .map(r => (r.getInt(0), r.get(1)) -> r.getLong(2))
-    // offset of (pid, g) = total count of g in lower pids
-    val offsets = counts.groupBy(_._1._2).toSeq.flatMap { case (g, rows) =>
-      var acc = 0L
-      rows.sortBy(_._1._1).toSeq.map { case ((pid, _), n) =>
-        val o = acc; acc += n; (pid, g, o)
-      }
-    }
-    val offDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(offsets.map(o => Row(o._1, o._2, o._3)), 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__pid",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField(groupCol, df.schema(groupCol).dataType),
-        org.apache.spark.sql.types.StructField("__off",
-          org.apache.spark.sql.types.LongType))))
-    val w = Window.partitionBy(col("__pid"), col(groupCol)).orderBy(sortCols: _*)
-    // null-safe group equality: a plain equi-join would silently drop
-    // every row whose group value is null
-    val off2 = offDf.withColumnRenamed("__pid", "__opid")
-      .withColumnRenamed(groupCol, "__ogrp")
-    ranged.join(broadcast(off2),
-        col("__pid") === col("__opid") && col(groupCol) <=> col("__ogrp"))
-      .withColumn(outCol, row_number().over(w).cast("long") - 1 + col("__off"))
-      .drop("__pid", "__opid", "__ogrp", "__off")
-  }
-
-  /** Inclusive running sum of the INTEGRAL `valueCol` in global
-    * `order_key` order: range-repartition, per-partition running sum,
-    * plus per-partition total offsets (one collected row per partition).
-    * The value is cast to long (null -> 0) — a generic double running
-    * sum would need different offset typing. */
-  def globalPrefixSum(df: DataFrame, valueCol: Column, outCol: String): DataFrame = {
-    val parts = math.max(df.sparkSession.sessionState.conf.numShufflePartitions, 1)
-    val ranged = graft.core.Mat(
-      df.withColumn("__v", coalesce(valueCol.cast("long"), lit(0L)))
-        .repartitionByRange(parts, col("order_key"))
-        .withColumn("__pid", spark_partition_id()))
-    val sums = ranged.groupBy("__pid").agg(sum("__v").as("s")).collect()
-      .map(r => r.getInt(0) -> (if (r.isNullAt(1)) 0L else r.getLong(1))).toMap
-    val maxPid = if (sums.isEmpty) 0 else sums.keys.max
-    val offsets = (0 to maxPid).scanLeft(0L)((acc, pid) => acc + sums.getOrElse(pid, 0L))
-    val offCol = element_at(array(offsets.take(maxPid + 1).map(lit): _*), col("__pid") + 1)
-    val w = Window.partitionBy("__pid").orderBy("order_key")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    ranged.withColumn(outCol, coalesce(sum("__v").over(w), lit(0L)) + offCol)
-      .drop("__pid", "__v")
-  }
-
-  /** Inclusive running sums of several DOUBLE value columns in a global
-    * sort order, same range-partition + per-partition-offset shape as
-    * globalPrefixSum. Floating-point caveat: within a partition the sum
-    * is sequential in sort order; across partitions the per-partition
-    * totals are added as offsets — associativity differences vs a fully
-    * sequential scan are possible for ill-conditioned data (exact when
-    * the values are integer multiples of a power of two well inside the
-    * 53-bit mantissa, as the skewness-balancing driver query arranges). */
-  def globalPrefixSumsD(df: DataFrame, sortCols: Seq[Column],
-      values: Seq[(Column, String)]): DataFrame = {
-    val parts = math.max(df.sparkSession.sessionState.conf.numShufflePartitions, 1)
-    val withVals = values.zipWithIndex.foldLeft(df) { case (d, ((v, _), i)) =>
-      d.withColumn(s"__v$i", coalesce(v.cast("double"), lit(0.0)))
-    }
-    val ranged = graft.core.Mat(withVals.repartitionByRange(parts, sortCols: _*)
-      .withColumn("__pid", spark_partition_id()))
-    val sums = ranged.groupBy("__pid")
-      .agg(values.indices.map(i => sum(s"__v$i").as(s"s$i")).head,
-        values.indices.map(i => sum(s"__v$i").as(s"s$i")).tail: _*)
-      .collect()
-      .map(r => r.getInt(0) -> values.indices.map(i =>
-        if (r.isNullAt(i + 1)) 0.0 else r.getDouble(i + 1)).toArray).toMap
-    val maxPid = if (sums.isEmpty) 0 else sums.keys.max
-    val zero = Array.fill(values.size)(0.0)
-    val offsets = (0 to maxPid).scanLeft(zero) { (acc, pid) =>
-      val s = sums.getOrElse(pid, zero)
-      acc.zip(s).map { case (a, b) => a + b }
-    }
-    val w = Window.partitionBy("__pid").orderBy(sortCols: _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val out = values.zipWithIndex.foldLeft(ranged) { case (d, ((_, name), i)) =>
-      val offCol = element_at(
-        array(offsets.take(maxPid + 1).map(o => lit(o(i))): _*), col("__pid") + 1)
-      d.withColumn(name, coalesce(sum(s"__v$i").over(w), lit(0.0)) + offCol)
-    }
-    out.drop("__pid").drop(values.indices.map(i => s"__v$i"): _*)
-  }
+  /** 0-based rank by `order_key` as column `__rank`. */
+  def globalRank(df: DataFrame): DataFrame =
+    globalRankBy(df, Seq(col("order_key").asc), "__rank")
 }
 
 /** filters.sort analog (filters/SortFilter.cpp:42): stable sort by one
@@ -186,6 +140,7 @@ object Locate {
 object Decimation {
   def apply(df: DataFrame, step: Long, offset: Long = 0,
       limit: Long = Long.MaxValue): DataFrame = {
+    require(step >= 1, s"filters.decimation: step must be >= 1, got $step")
     val ranked = Order.globalRank(df)
     ranked.filter(col("__rank") >= offset && col("__rank") < limit &&
       pmod(col("__rank") - offset, lit(step)) === 0).drop("__rank")

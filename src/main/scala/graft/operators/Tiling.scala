@@ -239,14 +239,14 @@ object Chipper {
       }.toSeq
       val metaDf = spark.createDataFrame(splits.map(s => (s._1, s._2, s._3, s._4)))
         .toDF("__block", "__wideIsX", "__cut", "__rchild")
-      // rank ONLY the splitting blocks, each via range-repartitioned
-      // per-block rank (globalRankWithin) — the first levels are one or
-      // few whole-dataset blocks and must never funnel through a single
-      // window partition
+      // rank ONLY the splitting blocks, each via the range-partitioned
+      // rank within a group (Order.globalRankBy by __block) — the first
+      // levels are one or few whole-dataset blocks and must never funnel
+      // through a single window partition
       val toSplit = work.join(broadcast(metaDf), Seq("__block"))
         .withColumn("__pos", when(col("__wideIsX"), col("x")).otherwise(col("y")))
-      val ranked = Order.globalRankWithin(toSplit, "__block",
-        Seq(col("__pos"), col("order_key")), "__rn")
+      val ranked = Order.globalRankBy(toSplit,
+        Seq(col("__pos"), col("order_key")), "__rn", Some("__block"))
       val reassigned = ranked
         .withColumn("__block", when(col("__rn") >= col("__cut"),
           col("__rchild").cast("int")).otherwise(col("__block")))
@@ -457,10 +457,13 @@ object Divider {
   def apply(df: DataFrame, roundRobin: Boolean, count: Option[Int] = None,
       capacity: Option[Long] = None, partCol: String = "part_id"): DataFrame = {
     require(count.isDefined != capacity.isDefined, "exactly one of count/capacity")
+    require(count.forall(_ >= 1), s"filters.divider: count must be >= 1, got ${count.get}")
+    require(capacity.forall(_ >= 1),
+      s"filters.divider: capacity must be >= 1, got ${capacity.get}")
     val n = df.count()
     if (n == 0) return df.withColumn(partCol, lit(0))
     val size: Long = count.map(_.toLong).getOrElse((n - 1) / capacity.get + 1)
-    // global rank via range-repartition + per-partition offsets — never a
+    // global rank: one range-partitioned running count — never a
     // single-partition window
     val ranked = Order.globalRank(df)
     val rn = col("__rank")
@@ -518,10 +521,12 @@ object Returns {
 object SeparateScanLine {
   def apply(df: DataFrame, edgeCol: String = "edge_of_flight_line",
       groupsOf: Int = 1, viewCol: String = "view_id"): DataFrame = {
+    require(groupsOf >= 1,
+      s"filters.separatescanline: groupby must be >= 1, got $groupsOf")
     val edge = when(col(edgeCol) === 1, 1L).otherwise(0L)
-    // distributed prefix sum (range partitions + per-partition offsets);
-    // globalPrefixSum is inclusive -> subtract the row's own flag
-    Order.globalPrefixSum(df, edge, "__scan")
+    // distributed running sum in order_key order; it is inclusive ->
+    // subtract the row's own flag
+    Order.runningSums(df, Seq(col("order_key")), Seq(edge -> "__scan"))
       .withColumn(viewCol, ((col("__scan") - edge) / groupsOf).cast("long"))
       .drop("__scan")
   }

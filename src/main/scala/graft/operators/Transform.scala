@@ -169,9 +169,10 @@ object GpsTimeConvert {
     if (!wrapped) return df.withColumn("gps_time", base + col("gps_time"))
     // unwrap: every negative jump in week-seconds bumps the week count.
     // Distributed scan: range-partition on order_key, within-partition
-    // running bumps via a partitioned window, plus driver-computed
-    // per-partition offsets (bump totals + the one boundary comparison
-    // between consecutive partitions — one collected row per partition).
+    // running bumps, plus driver-computed per-partition offsets from one
+    // collected row per partition (bump total, first and last value). Not
+    // Order.runningSums: a bump compares with the previous row's value,
+    // which crosses partition boundaries, and a sum carry cannot carry it.
     val parts = math.max(df.sparkSession.sessionState.conf.numShufflePartitions, 1)
     val ranged = graft.core.Mat(df.repartitionByRange(parts, col("order_key"))
       .withColumn("__pid", spark_partition_id()))
@@ -180,20 +181,20 @@ object GpsTimeConvert {
     val bump = when(prev.isNotNull && col("gps_time") < prev, 1L).otherwise(0L)
     val withBump = ranged.withColumn("__wb",
       sum(bump).over(w.rowsBetween(Window.unboundedPreceding, 0)))
-    val stats = ranged.groupBy("__pid").agg(
+    val stats = withBump.groupBy("__pid").agg(
         min_by(col("gps_time"), col("order_key")).as("first"),
-        max_by(col("gps_time"), col("order_key")).as("last"))
-      .collect().map(r => r.getInt(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    val bumpTotals = withBump.groupBy("__pid").agg(max("__wb").as("tb"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+        max_by(col("gps_time"), col("order_key")).as("last"),
+        max("__wb").as("tb"))
+      .collect().map(r => r.getInt(0) -> (r.getDouble(1), r.getDouble(2), r.getLong(3)))
+      .toMap
     val maxPid = if (stats.isEmpty) 0 else stats.keys.max
     val offsetIncl = new Array[Long](maxPid + 1)
     var cum = 0L
     var prevLast: Option[Double] = None
-    for (pid <- 0 to maxPid) stats.get(pid).foreach { case (first, last) =>
+    for (pid <- 0 to maxPid) stats.get(pid).foreach { case (first, last, bumps) =>
       val boundary = if (prevLast.exists(first < _)) 1L else 0L
       offsetIncl(pid) = cum + boundary
-      cum = offsetIncl(pid) + bumpTotals.getOrElse(pid, 0L)
+      cum = offsetIncl(pid) + bumps
       prevLast = Some(last)
     }
     val offCol = element_at(array(offsetIncl.map(lit).toSeq: _*), col("__pid") + 1)

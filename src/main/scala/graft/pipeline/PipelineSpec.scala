@@ -295,7 +295,10 @@ object PipelineBuilder {
       case "filters.chipper" =>
         Chipper(in, optLong(o, "capacity").getOrElse(5000L))
       case "filters.divider" =>
-        Divider(in, optStr(o, "mode").getOrElse("partition") == "round_robin",
+        val mode = optStr(o, "mode").getOrElse("partition")
+        require(Seq("partition", "round_robin").exists(_.equalsIgnoreCase(mode)),
+          s"filters.divider: mode must be partition or round_robin, got '$mode'")
+        Divider(in, mode.equalsIgnoreCase("round_robin"),
           optLong(o, "count").map(_.toInt), optLong(o, "capacity"))
       case "filters.groupby" => GroupBy(in, optStr(o, "dimension").get)
       case "filters.separatescanline" =>
@@ -304,8 +307,10 @@ object PipelineBuilder {
       case "filters.returns" =>
         Returns(in, optStr(o, "groups").getOrElse("first,last").split(',').map(_.trim).toSeq)
       case "filters.sort" =>
-        Sort(in, optStr(o, "dimension").get,
-          optStr(o, "order").getOrElse("ASC").equalsIgnoreCase("ASC"))
+        val order = optStr(o, "order").getOrElse("ASC")
+        require(Seq("ASC", "DESC").exists(_.equalsIgnoreCase(order)),
+          s"filters.sort: order must be ASC or DESC, got '$order'")
+        Sort(in, optStr(o, "dimension").get, order.equalsIgnoreCase("ASC"))
       case "filters.head" => HeadTail.head(in, optLong(o, "count").getOrElse(10L))
       case "filters.tail" => HeadTail.tail(in, optLong(o, "count").getOrElse(10L))
       case "filters.decimation" =>

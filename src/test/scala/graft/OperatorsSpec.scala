@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{Fixtures, Synth}
@@ -415,5 +416,68 @@ class OperatorsSpec extends AnyFunSuite {
     val rep2 = HexBoundary.densityReport(empty)
     assert(rep2.occupiedHexes == 0L)
     assert(HexBin.densityInfo(empty, edge = 50.0) == (0L, 0.0))
+  }
+
+  test("Order.runningSums equals a single-partition window: exact long and " +
+      "dyadic double sums, ungrouped and grouped (a null group, one group " +
+      "across >= 3 partitions), at 1, 7 and 64 shuffle partitions") {
+    import org.apache.spark.sql.expressions.Window
+    // group 1 holds 70% of the rows, every 9th row has a null group, and
+    // every 11th a null value; the sort key is not order_key order
+    val base = spark.range(600).select(
+      col("id").as("order_key"),
+      when(col("id") % 9 === 4, lit(null))
+        .otherwise(when(col("id") % 10 < 7, 1L).otherwise(col("id") % 5))
+        .cast("int").as("g"),
+      when(col("id") % 11 === 0, lit(null))
+        .otherwise(col("id") * 7919 % 1000 - 500).as("lv"),
+      when(col("id") % 11 === 3, lit(null))
+        .otherwise((col("id") * 31 % 97 - 40) * 0.125).as("dv"),
+      (col("id") * 2654435761L % 1009).as("s"))
+    val sort = Seq(col("s").asc, col("order_key").asc)
+    def sums(df: DataFrame): Map[Long, (Long, Double)] =
+      df.select("order_key", "sl", "sd").collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    val prior = spark.conf.get("spark.sql.shuffle.partitions")
+    try for (parts <- Seq(1, 7, 64); group <- Seq(None, Some("g"))) {
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      val got = Order.runningSums(base, sort,
+        Seq(col("lv") -> "sl", col("dv") -> "sd"), group)
+      assert(got.schema("sl").dataType == org.apache.spark.sql.types.LongType)
+      val w = group.fold(Window.orderBy(sort: _*))(Window.partitionBy(_).orderBy(sort: _*))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val ref = base.withColumn("sl", coalesce(sum("lv").over(w), lit(0L)))
+        .withColumn("sd", coalesce(sum("dv").over(w), lit(0.0)))
+      assert(sums(got) == sums(ref), s"parts=$parts group=$group")
+      if (parts > 1) assert(base.repartitionByRange(parts, col("g") +: sort: _*)
+        .filter(col("g") === 1).select(spark_partition_id()).distinct().count() >= 3)
+      assert(Order.runningSums(base.filter(lit(false)), sort,
+        Seq(col("lv") -> "sl"), group).count() == 0)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prior)
+  }
+
+  test("order stages are hash-equal at 1, 7 and 64 input partitions") {
+    val pts = docs.withColumn("edge_of_flight_line",
+      when(col("order_key") % 7 === 3, 1).otherwise(0))
+    def canon(df: DataFrame): Seq[String] =
+      df.select(md5(to_json(struct(df.columns.sorted.map(col): _*))))
+        .collect().map(_.getString(0)).sorted.toSeq
+    val stages = Seq[(String, DataFrame => DataFrame)](
+      "sort" -> (Sort(_, "intensity", ascending = false)),
+      "randomize" -> (Randomize(_, seed = 7)),
+      "mortonorder" -> (MortonOrder(_)),
+      "mortonorder reverse" -> (MortonOrder(_, reverse = true)),
+      "decimation" -> (Decimation(_, step = 3, offset = 2, limit = 900)),
+      "divider round_robin" -> (Divider(_, roundRobin = true, count = Some(5))),
+      "divider partition" -> (Divider(_, roundRobin = false, capacity = Some(250L))),
+      "head invert" -> (HeadTail.head(_, 100, invert = true)),
+      "tail" -> (HeadTail.tail(_, 100)),
+      "tail invert" -> (HeadTail.tail(_, 100, invert = true)),
+      "separatescanline" -> (SeparateScanLine(_, groupsOf = 2)),
+      "chipper" -> (Chipper(_, capacity = 15, localThreshold = 64)))
+    for ((name, stage) <- stages) {
+      val Seq(one, seven, many) = Seq(1, 7, 64).map(p => canon(stage(pts.repartition(p))))
+      assert(one == seven && one == many, name)
+    }
   }
 }

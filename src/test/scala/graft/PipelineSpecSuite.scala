@@ -634,19 +634,32 @@ class PipelineSpecSuite extends AnyFunSuite {
     assert(e1.getMessage.contains("partition_column and num_partitions"),
       s"got: ${e1.getMessage}")
     // a missing connection, table or upper bound is named before load(),
-    // and so is a kNN stage's k below 1
+    // and so are a kNN stage's k below 1 and a malformed order-stage
+    // option; none of them runs a Spark job
+    val faux = """{"type":"readers.faux","mode":"uniform","count":60,"seed":13}"""
     for ((stages, option) <- Seq(
         """{"type":"readers.jdbc","table":"events"}""" -> "'connection'",
         """{"type":"readers.jdbc","url":"jdbc:postgresql://db/x"}""" -> "'table'",
         """{"type":"readers.jdbc","url":"jdbc:postgresql://db/x","table":"events",
           "partition_column":"event_id","num_partitions":8}""" ->
           "'upper_bound'",
-        """{"type":"readers.faux","mode":"uniform","count":60,"seed":13},
-          {"type":"filters.neighborclassifier","k":0}""" -> "k must be >= 1")) {
-      val e = intercept[IllegalArgumentException](PipelineBuilder.run(spark,
-        s"""{"pipeline":[$stages,
-           {"type":"filters.stats"}]}"""))
-      assert(e.getMessage.contains(option), s"got: ${e.getMessage}")
+        s"""$faux, {"type":"filters.neighborclassifier","k":0}""" -> "k must be >= 1",
+        s"""$faux, {"type":"filters.sort","dimension":"x","order":"ascending"}""" ->
+          "order must be ASC or DESC",
+        s"""$faux, {"type":"filters.divider","mode":"roundrobin","count":2}""" ->
+          "mode must be partition or round_robin",
+        s"""$faux, {"type":"filters.divider","count":0}""" -> "count must be >= 1",
+        s"""$faux, {"type":"filters.divider","capacity":0}""" -> "capacity must be >= 1",
+        s"""$faux, {"type":"filters.decimation","step":0}""" -> "step must be >= 1",
+        s"""$faux, {"type":"filters.separatescanline","groupby":0}""" ->
+          "groupby must be >= 1")) {
+      val jobs = jobIdsOf {
+        val e = intercept[IllegalArgumentException](PipelineBuilder.run(spark,
+          s"""{"pipeline":[$stages,
+             {"type":"filters.stats"}]}"""))
+        assert(e.getMessage.contains(option), s"got: ${e.getMessage}")
+      }
+      assert(jobs.isEmpty, s"$option: ${jobs.size} jobs before the error")
     }
     // fully-specified parallel read reaches Spark's JDBC source, which
     // fails loudly because no PostgreSQL driver is on the classpath
