@@ -60,7 +60,7 @@ private[operators] final class TopK(k: Int) {
 
 /** Per-cell chain index over a candidate set at cell size h, the one
   * index of every buffered kNN path: the driver-built broadcast index
-  * and each supercell cogroup task. Cell keys are rebased to the
+  * and each supercell task. Cell keys are rebased to the
   * candidates' per-axis minimum cell, so the packing is injective while
   * every axis spans fewer than 2^21 cells (the broadcast path coarsens
   * h to guarantee it; a supercell task spans S+2 cells). */
@@ -183,10 +183,12 @@ private[operators] object CellIndex {
   * per-view; here per grid cell, distributed).
   *
   * Two-phase cell-neighborhood shuffle (SURVEY §2.7 north-star):
-  * phase 1 cogroups queries with the candidates of SUPERCELL regions
-  * (SxSxS cells + a one-cell halo shell clamped to the union bbox —
-  * at most ~3.4x candidate duplication instead of 27x per-cell
-  * haloing) and answers each query's exact
+  * phase 1 groups ONE role-flagged row set by SUPERCELL region (SxSxS
+  * cells + a one-cell halo shell clamped to the union bbox — at most
+  * ~3.4x candidate duplication instead of 27x per-cell haloing): each
+  * row is a candidate copy, a query in its home supercell, or, for a
+  * self-kNN, both (a candidate's home copy is its query, so no query
+  * row ships beside it). Each group answers its queries' exact
   * 3x3x3-cell cube from a task-local [[CellIndex]]. Every round has
   * one finality rule: a query whose kth distance is within the cell
   * size h is final (the cube covers every candidate within h — the
@@ -213,23 +215,28 @@ private[operators] object CellIndex {
   *
   * Skew: cell size targets ~4k candidates per cell from the extent row;
   * supercells whose task input exceeds `maxCellCandidates` are salted —
-  * candidates hash-split, queries replicated, per-salt top-k merged —
-  * because AQE's skew splitting does not apply to Dataset.cogroup.
+  * candidates hash-split, query rows replicated, per-salt top-k merged,
+  * by one salting expression over the one row set — because AQE's skew
+  * splitting does not apply to a grouped Dataset shuffle.
   */
 object KnnJoin {
   private val B = 1L << 20 // per-axis cell-coordinate bias
   /** Candidate count at or below which the join broadcasts a driver-built
-    * index instead of running the cogroup machinery (~48 bytes/candidate
+    * index instead of running the supercell rounds (~48 bytes/candidate
     * -> ~12 MB at the default). Env GRAFT_KNN_BROADCAST_LIMIT overrides;
     * pass broadcastLimit = 0 to pin the distributed path (tests). */
   private[graft] val defaultBroadcastLimit: Int =
     sys.env.get("GRAFT_KNN_BROADCAST_LIMIT").map(_.toInt).getOrElse(1 << 18)
-  /** Cells per supercell edge: the round-1 cogroup keys on
+  /** Cells per supercell edge: the round-1 shuffle keys on
     * supercells (4x4x4 cells) with a one-cell halo shell, so the
     * candidate duplication factor is (1 + 2/S)^3 ~= 3.4x instead of the
     * 27x of per-cell haloing — an 8x shuffle-volume cut on the join's
     * dominant stage. */
   private val S = 4
+
+  /** One row of the round-1 supercell shuffle: (skey, salt, x, y, z, id,
+    * v, isQ, isC) — a query, a candidate, or (a self-kNN home copy) both. */
+  private type SuperRow = (Long, Int, Double, Double, Double, Long, Double, Boolean, Boolean)
 
   private def cellCoord(v: Column, h: Double): Column =
     floor(v / h).cast("long")
@@ -275,10 +282,16 @@ object KnnJoin {
     df.agg(count(lit(1)), min("x"), max("x"), min("y"), max("y"),
       min("z"), max("z")).head()
 
+  /** Home supercell key of the (x, y, z) point at cell size h. */
+  private def homeSuper(h: Double): Column = superPack(
+    superC(cellCoord(col("x"), h), 0), superC(cellCoord(col("y"), h), 0),
+    superC(cellCoord(col("z"), h), 0))
+
   /** Supercell (incl. one-cell halo shell) candidate row set at cell
-    * size h — what one round-1 cogroup task receives. The halo is
+    * size h — the candidates one round-1 task receives. The halo is
     * clamped to the supercells of `box`, the union [[extent]] row: every
-    * query's supercell lies inside it, so a copy outside emits nothing. */
+    * query's supercell lies inside it, so a copy outside emits nothing.
+    * `home` marks each candidate's one copy in its own supercell. */
   private def superRows(cand: DataFrame, h: Double, valueCol: String,
       box: Row): DataFrame = {
     val withCells = cand.select(col("x"), col("y"), col("z"),
@@ -293,13 +306,15 @@ object KnnJoin {
       .withColumn("sy", halo("ccy", 3))
       .withColumn("sz", halo("ccz", 5))
       .select(superPack(col("sx"), col("sy"), col("sz")).as("skey"),
-        col("x"), col("y"), col("z"), col("cid"), col("v"))
+        col("x"), col("y"), col("z"), col("cid"), col("v"),
+        (col("sx") === superC(col("ccx"), 0) && col("sy") === superC(col("ccy"), 0) &&
+          col("sz") === superC(col("ccz"), 0)).as("home"))
   }
 
   /** Hot supercells at cell size h: supercell tasks (shell included)
     * holding more than `cap` candidates, with their salt factor (capped
-    * at 64 groups) — the per-task input bound AQE cannot provide for
-    * Dataset.cogroup. Two stages: a task region (supercell + 1-cell
+    * at 64 groups) — the per-task input bound AQE cannot provide for a
+    * grouped Dataset shuffle. Two stages: a task region (supercell + 1-cell
     * shell, S+2 cells per axis) touches at most 3 base supercells per
     * axis (the aligned S-cell block plus one edge cell-row on each
     * side), i.e. 27 base supercells in 3D — so a task can exceed cap
@@ -311,9 +326,7 @@ object KnnJoin {
     * escaped detection entirely.) `box` clamps the halo as in [[superRows]]. */
   private[graft] def detectHotSupercells(cand: DataFrame, h: Double,
       cap: Int, box: Row): Map[Long, Int] = {
-    val basePre = cand.select(superPack(
-        superC(cellCoord(col("x"), h), 0), superC(cellCoord(col("y"), h), 0),
-        superC(cellCoord(col("z"), h), 0)).as("skey"))
+    val basePre = cand.select(homeSuper(h).as("skey"))
       .groupBy("skey").count().filter(col("count") > cap / 27)
       .limit(1).count()
     if (basePre == 0L) return Map.empty
@@ -331,9 +344,9 @@ object KnnJoin {
     * @param maxCellCandidates skew bound: halo-cells holding more
     *        candidates than this are salted — candidates split into
     *        ceil(n/cap) hash groups, queries replicated across them,
-    *        partial top-k merged — so no single cogroup task ever
+    *        partial top-k merged — so no single supercell task ever
     *        receives an unbounded dense cell (AQE skew splitting does
-    *        not apply to Dataset.cogroup)
+    *        not apply to a grouped Dataset shuffle)
     * @return rows (order_key, knn: array<struct<d2,cid,v,x,y,z>>, qx, qy,
     *         qz): `knn` sorted by (d2, cid), length min(k, |cand
     *         reachable|), empty if none, each hit with its candidate's x,
@@ -386,7 +399,7 @@ object KnnJoin {
     // ---- BROADCAST FAST PATH: a candidate side that fits one task's
     // memory is collected once, indexed on the driver, and broadcast —
     // the (arbitrarily large) query side answers exact top-k in a single
-    // shuffle-free mapPartitions pass: no cogroup, no round-loop driver
+    // shuffle-free mapPartitions pass: no supercell shuffle, no round-loop driver
     // barriers. This is the broadcast-hash-join analog for kNN, and the
     // common case at scale: ground-raster inpaint (area/cell^2 cells),
     // ICP/colorization reference sets, per-tile goldens. Results are
@@ -460,63 +473,60 @@ object KnnJoin {
       col("x"), col("y"), col("z"), col("order_key").as("cid"),
       col(valueCol).cast("double").as("v"))
 
-    def bin(q: DataFrame, h: Double): DataFrame = q.select(col("qid"),
-      col("qx"), col("qy"), col("qz"),
-      cellCoord(col("qx"), h).as("ccx"), cellCoord(col("qy"), h).as("ccy"),
-      cellCoord(col("qz"), h).as("ccz"))
-
-    /** Round 1: cogroup keyed on SUPERCELLS (SxSxS cells)
-      * with candidates duplicated only into the one-cell halo shell of
-      * adjacent supercells (~(1+2/S)^3 = 3.4x fan-out instead of the 27x
-      * of per-cell haloing — an 8x shuffle-volume cut on the dominant
-      * stage). Each task builds a [[CellIndex]] over its candidates and
-      * answers every query's exact 27-cell cube (shells 0..1), so
-      * per-query results are IDENTICAL to the per-cell design. Hot
-      * supercells are salted on the candidate side with queries
-      * replicated across salt groups.
+    /** Round 1: one grouped shuffle keyed on SUPERCELLS (SxSxS cells)
+      * over one role-flagged row set: each candidate duplicated only into
+      * the one-cell halo shell of adjacent supercells (~(1+2/S)^3 = 3.4x
+      * fan-out instead of the 27x of per-cell haloing — an 8x
+      * shuffle-volume cut on the dominant stage), each query in its home
+      * supercell. For a self-kNN a candidate's home copy IS its query, so
+      * no query row is added. Each group builds a [[CellIndex]] over its
+      * candidate rows and answers every query row's exact 27-cell cube
+      * (shells 0..1), so per-query results are IDENTICAL to the per-cell
+      * design. One salting expression serves both roles: on a hot
+      * supercell a query row is replicated over every salt group and a
+      * candidate goes to its own (`isC` holds only there).
       * Every query row comes out once per salt group, with its
       * coordinates (an empty `hits` when the group holds no candidates),
-      * so the round loop never re-joins the query side. */
-    def superPartials(q: DataFrame, h: Double, hotDf: Option[DataFrame]): DataFrame = {
-      val q1 = q.select(col("qid"), col("qx"), col("qy"), col("qz"),
-        superPack(superC(col("ccx"), 0), superC(col("ccy"), 0),
-          superC(col("ccz"), 0)).as("skey"))
-      val qS = (hotDf match {
-        case Some(hd) => q1.join(hd, Seq("skey"), "left")
-          .withColumn("__salt",
-            explode(sequence(lit(0), coalesce(col("__s"), lit(1)) - 1)))
-          .drop("__s")
-        case None => q1.withColumn("__salt", lit(0))
-      }).select("qid", "qx", "qy", "qz", "skey", "__salt")
-        .as[(Long, Double, Double, Double, Long, Int)]
-      val c1 = superRows(candM, h, valueCol, uext)
-      val cS = (hotDf match {
-        case Some(hd) => c1.join(hd, Seq("skey"), "left")
-          .withColumn("__salt", when(col("__s").isNotNull,
-            pmod(xxhash64(col("cid")), col("__s").cast("long")).cast("int"))
-            .otherwise(lit(0)))
-          .drop("__s")
-        case None => c1.withColumn("__salt", lit(0))
-      }).select("skey", "x", "y", "z", "cid", "v", "__salt")
-        .as[(Long, Double, Double, Double, Long, Double, Int)]
-      qS.groupByKey(t => (t._5, t._6)).cogroup(cS.groupByKey(t => (t._1, t._7))) {
-        (_, qs, cs) =>
-          val cBuf = cs.toArray
-          val n = cBuf.length
-          val cxA = new Array[Double](n); val cyA = new Array[Double](n)
-          val czA = new Array[Double](n); val cidA = new Array[Long](n)
-          val cvA = new Array[Double](n)
-          var j = 0
-          while (j < n) {
-            val c = cBuf(j)
-            cxA(j) = c._2; cyA(j) = c._3; czA(j) = c._4; cidA(j) = c._5; cvA(j) = c._6
-            j += 1
+      * so the round loop never re-joins the query side. The grouping
+      * keys are columns of the rows: nothing is appended to the shuffle. */
+    def superPartials(h: Double, hotDf: Option[DataFrame]): DataFrame = {
+      val cands = superRows(candM, h, valueCol, uext).select(col("skey"),
+        col("x"), col("y"), col("z"), col("cid").as("id"), col("v"),
+        (if (selfJoin) col("home") else lit(false)).as("isQ"), lit(true).as("isC"))
+      val rows =
+        if (selfJoin) cands
+        else cands.unionByName(queriesM.select(homeSuper(h).as("skey"),
+          col("x"), col("y"), col("z"), col("order_key").as("id"), lit(0.0).as("v"),
+          lit(true).as("isQ"), lit(false).as("isC")))
+      val withS = hotDf.fold(rows.withColumn("__s", lit(null).cast("int")))(
+        rows.join(_, Seq("skey"), "left"))
+      val own = when(col("__s").isNotNull,
+        pmod(xxhash64(col("id")), col("__s").cast("long")).cast("int")).otherwise(lit(0))
+      withS.withColumn("__own", own)
+        .withColumn("__salt", explode(when(col("isQ"),
+          sequence(lit(0), coalesce(col("__s"), lit(1)) - 1)).otherwise(array(col("__own")))))
+        .select(col("skey"), col("__salt"), col("x"), col("y"), col("z"), col("id"),
+          col("v"), col("isQ"), (col("isC") && col("__salt") === col("__own")).as("isC"))
+        .groupBy(col("skey"), col("__salt")).as[(Long, Int), SuperRow]
+        .flatMapGroups { (_, group) =>
+          val cx = Array.newBuilder[Double]; val cy = Array.newBuilder[Double]
+          val cz = Array.newBuilder[Double]; val cid = Array.newBuilder[Long]
+          val cv = Array.newBuilder[Double]
+          val qs = Array.newBuilder[SuperRow]
+          group.foreach { r =>
+            if (r._9) { cx += r._3; cy += r._4; cz += r._5; cid += r._6; cv += r._7 }
+            if (r._8) qs += r
           }
-          val ix = new CellIndex(cxA, cyA, czA, cidA, cvA, h)
-          qs.map { case (qid, qx, qy, qz, _, _) =>
-            (qid, qx, qy, qz, ix.query(qx, qy, qz, k, 1))
+          val qArr = qs.result()
+          if (qArr.isEmpty) Iterator.empty
+          else {
+            val ix = new CellIndex(cx.result(), cy.result(), cz.result(),
+              cid.result(), cv.result(), h)
+            qArr.iterator.map { case (_, _, qx, qy, qz, qid, _, _, _) =>
+              (qid, qx, qy, qz, ix.query(qx, qy, qz, k, 1))
+            }
           }
-      }.toDF("qid", "qx", "qy", "qz", "hits")
+        }.toDF("qid", "qx", "qy", "qz", "hits")
     }
 
     /** A later round: each open query explodes into the 27 cells of its
@@ -528,8 +538,9 @@ object KnnJoin {
     def cubePartials(q: DataFrame, h: Double): DataFrame = {
       val exploded = q.withColumn("__o", explode(cubeOffsets))
         .select(col("qid"), col("qx"), col("qy"), col("qz"),
-          pack3(col("ccx") + col("__o.dx"), col("ccy") + col("__o.dy"),
-            col("ccz") + col("__o.dz")).as("cell"))
+          pack3(cellCoord(col("qx"), h) + col("__o.dx"),
+            cellCoord(col("qy"), h) + col("__o.dy"),
+            cellCoord(col("qz"), h) + col("__o.dz")).as("cell"))
         .as[(Long, Double, Double, Double, Long)]
       val cands = candPrep(h)
         .join(exploded.toDF().select("cell").distinct(), Seq("cell"), "left_semi")
@@ -565,7 +576,7 @@ object KnnJoin {
         slice(array_sort(flatten(collect_list(col("hits")))), 1, k).as("knn"))
 
     // round 1: halo-explode the CANDIDATES, query one supercell each —
-    // per-query cube top-k lands in a single cogroup, no merge shuffle.
+    // per-query cube top-k lands in a single group, no merge shuffle.
     // n <= cap means no supercell can exceed the cap — detection free
     val hot =
       if (ext.getLong(0) <= maxCellCandidates) Map.empty[Long, Int]
@@ -573,11 +584,9 @@ object KnnJoin {
     val hotDf =
       if (hot.isEmpty) None
       else Some(broadcast(spark.createDataFrame(hot.toSeq).toDF("skey", "__s")))
-    val queriesQ = queriesM.select(col("order_key").as("qid"), col("x").as("qx"),
-      col("y").as("qy"), col("z").as("qz"))
-    val partials1 = superPartials(bin(queriesQ, h0), h0, hotDf)
+    val partials1 = superPartials(h0, hotDf)
     // salted queries hold partials per salt group -> merge; the skew-free
-    // fast path keeps the single-cogroup result as-is
+    // fast path keeps the single-group result as-is
     var roundKnn =
       if (hotDf.isDefined) mergeTopK(partials1)
       else partials1.withColumnRenamed("hits", "knn")
@@ -608,7 +617,7 @@ object KnnJoin {
       else {
         h *= 3
         roundKnn = mergeTopK(cubePartials(
-          bin(joined.filter(!col("__final")).select("qid", "qx", "qy", "qz"), h), h))
+          joined.filter(!col("__final")).select("qid", "qx", "qy", "qz"), h))
       }
     }
     // every resolved part is a materialized (lazy-localCheckpoint, forced

@@ -116,10 +116,11 @@ object HeadTail {
     val p = col("__rank") < count
     ranked.filter(if (invert) !p else p).drop("__rank")
   }
+  /** The last `count` points are the first `count` by descending
+    * order_key: no row count needed. */
   def tail(df: DataFrame, count: Long, invert: Boolean = false): DataFrame = {
-    val n = df.count()
-    val ranked = Order.globalRank(df)
-    val p = col("__rank") >= (n - count)
+    val ranked = Order.globalRankBy(df, Seq(col("order_key").desc), "__rank")
+    val p = col("__rank") < count
     ranked.filter(if (invert) !p else p).drop("__rank")
   }
 }

@@ -460,20 +460,21 @@ object Divider {
     require(count.forall(_ >= 1), s"filters.divider: count must be >= 1, got ${count.get}")
     require(capacity.forall(_ >= 1),
       s"filters.divider: capacity must be >= 1, got ${capacity.get}")
-    val n = df.count()
-    if (n == 0) return df.withColumn(partCol, lit(0))
-    val size: Long = count.map(_.toLong).getOrElse((n - 1) / capacity.get + 1)
     // global rank: one range-partitioned running count — never a
     // single-partition window
-    val ranked = Order.globalRank(df)
     val rn = col("__rank")
-    val out =
-      if (roundRobin) ranked.withColumn(partCol, (rn % size).cast("int"))
-      else {
-        val limit = (n - 1) / size + 1 // DividerFilter.cpp:134
-        ranked.withColumn(partCol, (rn / limit).cast("int"))
-      }
-    out.drop("__rank")
+    // round robin over `count` views needs no row count: an empty input
+    // ranks to no rows, with the same int part column
+    val part = (roundRobin, count) match {
+      case (true, Some(c)) => rn % c.toLong
+      case _ =>
+        val n = df.count()
+        if (n == 0) return df.withColumn(partCol, lit(0))
+        val size: Long = count.map(_.toLong).getOrElse((n - 1) / capacity.get + 1)
+        if (roundRobin) rn % size
+        else rn / ((n - 1) / size + 1) // DividerFilter.cpp:134
+    }
+    Order.globalRank(df).withColumn(partCol, part.cast("int")).drop("__rank")
   }
 }
 

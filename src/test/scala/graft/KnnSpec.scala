@@ -47,18 +47,40 @@ class KnnSpec extends AnyFunSuite {
     }
   }
 
-  /** Shuffle exchanges of `df`'s executed plan, adaptive stages included. */
-  private def shuffleExchanges(df: org.apache.spark.sql.DataFrame) = {
-    import org.apache.spark.sql.execution.SparkPlan
+  /** Every node of `p`, adaptive stages included. */
+  private def planNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    def walk(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case s: QueryStageExec => walk(s.plan)
-      case e: ShuffleExchangeExec => e +: walk(e.child)
-      case o => o.children.flatMap(walk)
+    p +: (p match {
+      case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+      case s: QueryStageExec => planNodes(s.plan)
+      case o => o.children.flatMap(planNodes)
+    })
+  }
+
+  /** Shuffle exchanges of `df`'s executed plan, adaptive stages included. */
+  private def shuffleExchanges(df: org.apache.spark.sql.DataFrame) =
+    planNodes(df.queryExecution.executedPlan).collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
     }
-    walk(df.queryExecution.executedPlan)
+
+  /** `body`'s value with the executed plans of the SQL actions it runs. */
+  private def withPlans[T](body: => T): (T, Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = collection.mutable.ArrayBuffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val out = try body
+    finally {
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    (out, plans.synchronized(plans.toSeq))
   }
 
   /** `body` with spark.sql.autoBroadcastJoinThreshold set to `v`. */
@@ -113,7 +135,7 @@ class KnnSpec extends AnyFunSuite {
     def run(bl: Int) = selfKnn(docs, k, bl)._1
     val gotB = run(KnnJoin.defaultBroadcastLimit) // 800 <= limit: fast path
     val gotD = run(0)                             // pinned distributed path
-    assert(gotB == gotD, "broadcast fast path must be bit-identical to the cogroup path")
+    assert(gotB == gotD, "broadcast fast path must be bit-identical to the distributed path")
     // brute force (unique distances wanted: synthetic uniform doubles — ties measure-zero)
     pts.foreach { case (qid, qx, qy, qz, _) =>
       val exp = pts.map { case (cid, x, y, z, _) =>
@@ -308,24 +330,30 @@ class KnnSpec extends AnyFunSuite {
     assert(math.abs(h - 1000.0) < 1e-9, s"hausdorff $h")
   }
 
-  test("kNN shuffle: the supercell cogroup is the only data shuffle " +
-      "(records <= 3.25x candidates; halo stage <= 2.25x)") {
+  test("kNN shuffle: the supercell shuffle is the only data shuffle " +
+      "(records <= 2.25x candidates; halo stage <= 2.25x)") {
+    import org.apache.spark.sql.execution.{CoGroupExec, MapGroupsExec}
     val docs = Synth.docs(spark, 20000).cache()
     val n = docs.count()
-    val (s, open) = selfKnnShuffle(docs)
+    val ((s, open), plans) = withPlans(selfKnnShuffle(docs))
     assert(open == Seq(0L), "round 1 resolves every query")
     info(f"records/cand ${s.records.toDouble / n}%.3f, " +
       f"largest stage ${s.maxStageRecords.toDouble / n}%.3f, bytes ${s.bytes}")
+    // round 1 is one grouped shuffle over one row set, not a cogroup
+    val nodes = plans.flatMap(planNodes)
+    assert(nodes.exists(_.isInstanceOf[MapGroupsExec]), "round 1 ran as one grouped shuffle")
+    assert(!nodes.exists(_.isInstanceOf[CoGroupExec]), "round 1 must not cogroup")
     // The halo stage writes each candidate once per supercell its
     // one-cell shell touches: 1.5x per axis in the interior, (1+2/S)^3
     // = 3.4x. The shell is clamped to the supercells of the data's
     // bbox: here z in [0, 400) spans two ~313 m cells inside one
     // supercell, so z adds nothing, and the x/y edges of the 4 x 6 km
     // box drop their outward copies. The stage measures 2.17x (4.05x
-    // unclamped). Each query is written once more (~3.17x in all). A
-    // per-ring re-join of the query side onto the partials shuffles
-    // both sides again.
-    assert(s.records <= 3.25 * n, s"kNN shuffled ${s.records} records for $n candidates")
+    // unclamped). A self-kNN's query is its candidate's home copy, so
+    // the halo stage is the whole shuffle (a separate query side would
+    // add ~1x). A per-ring re-join of the query side onto the partials
+    // shuffles both sides again.
+    assert(s.records <= 2.25 * n, s"kNN shuffled ${s.records} records for $n candidates")
     assert(s.maxStageRecords <= 2.25 * n,
       s"halo stage wrote ${s.maxStageRecords} records for $n candidates")
     docs.unpersist()
@@ -339,7 +367,7 @@ class KnnSpec extends AnyFunSuite {
       df.collect() // the adaptive plan is final once its own query ran
       shuffleExchanges(df).exists(_.output.exists(_.name == "spans"))
     }
-    // the cogroup path's count is its candidate extent's, with no job
+    // the distributed path's count is its candidate extent's, with no job
     val r = KnnJoin.knn(docs.select("order_key", "x", "y", "z"), docs, 5,
       selfJoin = true, broadcastLimit = 0)
     assert(r.queryRows.contains(800L))
@@ -351,7 +379,7 @@ class KnnSpec extends AnyFunSuite {
       jobsOf(KnnJoin.knn(docs.select("order_key", "x", "y", "z"), docs, 5,
         selfJoin = true)))
     val consumers = Seq(
-      "cogroup" -> (() => KnnJoin.attach(docs, perQuery, r.queryRows)),
+      "distributed" -> (() => KnnJoin.attach(docs, perQuery, r.queryRows)),
       "NeighborClassifier" -> (() => NeighborClassifier(docs, k = 5)),
       "EigenFeatures" -> (() => EigenFeatures(docs)))
     for ((name, run) <- consumers) {

@@ -130,6 +130,43 @@ class OperatorsSpec extends AnyFunSuite {
     assert(pc.sum == 1065 && pc.length == 4) // ceil(1065/300)=4 views
   }
 
+  /** Rows of `df` as sorted JSON strings: an order-free canon. */
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.select(to_json(struct(df.columns.sorted.map(col): _*))).collect()
+      .map(_.getString(0)).sorted.toSeq
+
+  test("tail keeps the last count points (and invert the rest) with no " +
+      "row-count job: as many jobs as sort") {
+    val keys = docs.select("order_key").collect().map(_.getLong(0)).sorted
+    val n = keys.length.toLong
+    for (c <- Seq(0L, 1L, n - 1, n, n + 5); invert <- Seq(false, true)) {
+      val last = keys.takeRight(math.min(c, n).toInt).toSet
+      val exp = docs.filter(col("order_key").isin(
+        keys.filter(k => last(k) != invert).toSeq: _*))
+      assert(rowsOf(HeadTail.tail(docs, c, invert)) == rowsOf(exp),
+        s"count=$c invert=$invert")
+    }
+    assert(jobsOf(HeadTail.tail(docs, 100)) == jobsOf(Sort(docs, "intensity")))
+  }
+
+  test("divider round_robin over count views runs no row count: the " +
+      "count's jobs fewer, same rows, an int part_id on empty input") {
+    val keys = docs.select("order_key").collect().map(_.getLong(0)).sorted
+    val exp = keys.zipWithIndex.map { case (k, i) => k -> i % 4 }.toMap
+    val rr = Divider(docs, roundRobin = true, count = Some(4))
+    assert(rr.select("order_key", "part_id").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap == exp)
+    // the row count the partition mode still needs (a map stage and a
+    // result job under AQE) is the whole difference; what is left is the rank
+    val rrJobs = jobsOf(Divider(docs, roundRobin = true, count = Some(4)))
+    assert(rrJobs + jobsOf(docs.count()) ==
+      jobsOf(Divider(docs, roundRobin = false, count = Some(4))))
+    assert(rrJobs == jobsOf(Sort(docs, "intensity")))
+    val empty = Divider(docs.filter(lit(false)), roundRobin = true, count = Some(4))
+    assert(empty.schema("part_id").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(empty.count() == 0)
+  }
+
   test("groupby/returns produce per-view keys (GroupByFilter/ReturnsFilter)") {
     val g = GroupBy(docs, "classification")
     assert(g.select("view_id").distinct().count() ==

@@ -60,8 +60,9 @@ class SkewSpec extends AnyFunSuite {
     val hot = graft.operators.KnnJoin.detectHotSupercells(pts, h, cap,
       graft.operators.KnnJoin.extent(pts))
     assert(hot.nonEmpty, "dense supercell must be detected as hot")
-    // salt factors bound each (cell, salt) cogroup group to ~cap: the
-    // task-input bound AQE cannot provide for Dataset.cogroup
+    // salt factors bound each (cell, salt) group of the supercell
+    // shuffle to ~cap: the task-input bound AQE's skew splitting cannot
+    // provide for a grouped Dataset shuffle
     hot.values.foreach(s => assert(s >= 9 && s <= 64, s"salt factor $s"))
     val maxGroup = hot.map { case (_, s) => math.ceil(9000.0 / s) }.max
     assert(maxGroup <= 2 * cap, s"salted group bound $maxGroup vs cap $cap")
@@ -87,6 +88,44 @@ class SkewSpec extends AnyFunSuite {
       }.sorted.take(3).map(t => (t._2, byId(t._2))).toVector
       assert(hits == exp, s"salted qid=$qid")
     }
+  }
+
+  test("salted self-kNN: a home copy is its query in every salt group; " +
+      "exact on every row and hash-equal at 1, 7 and 64 input partitions") {
+    val pts = skewed.select("order_key", "x", "y", "z", "classification").cache()
+    val k = 3
+    def run(df: org.apache.spark.sql.DataFrame) = graft.operators.KnnJoin.knn(df, df, k,
+      cellSize = 500.0, selfJoin = true, maxCellCandidates = 1000, broadcastLimit = 0)
+    val r = run(pts)
+    assert(r.saltedSupercells > 0, "the dense supercell must be salted")
+    val all = pts.collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
+    val got = r.rows.collect().map(r => r.getLong(0) ->
+      r.getSeq[org.apache.spark.sql.Row](1).map(h => (h.getDouble(0), h.getLong(1))).toVector)
+      .toMap
+    assert(got.size == all.length)
+    all.foreach { case (qid, qx, qy, qz) =>
+      // brute-force top-k by (d2, cid), the engine's total order
+      val best = Array.fill(k)((Double.MaxValue, Long.MaxValue))
+      all.foreach { case (cid, x, y, z) =>
+        val dx = x - qx; val dy = y - qy; val dz = z - qz
+        val c = (dx * dx + dy * dy + dz * dz, cid)
+        if (Ordering[(Double, Long)].lt(c, best(k - 1))) {
+          var p = k - 1
+          while (p > 0 && Ordering[(Double, Long)].lt(c, best(p - 1))) {
+            best(p) = best(p - 1); p -= 1
+          }
+          best(p) = c
+        }
+      }
+      assert(got(qid) == best.toVector, s"qid=$qid")
+    }
+    def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(md5(to_json(struct(df.columns.sorted.map(col): _*))))
+        .collect().map(_.getString(0)).sorted.toSeq
+    val Seq(one, seven, many) = Seq(1, 7, 64).map(p => canon(run(pts.repartition(p)).rows))
+    assert(one == seven && one == many)
+    pts.unpersist()
   }
 
   test("kNN on the skewed cloud stays correct (dense cell = bounded task)") {
