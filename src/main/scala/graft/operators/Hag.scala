@@ -100,12 +100,10 @@ object HagDem {
   * in the X/Y plane, stored in `outDim`; a point with no neighbors
   * keeps its own z.
   *
-  * Distributed as a 3x3-cell halo self-join at cell size = radius (the
-  * 2D analog of the kNN candidate halo: every within-radius pair shares
-  * a cell after the one-cell dilation), then one aggregation per point
-  * over its neighbor list. Shuffle volume is O(n * avg neighbors) —
-  * the same work the reference's kd-tree radius query does per point,
-  * here map-side parallel. The reference excludes only the query point
+  * Distributed as one 2-D RadiusJoin of the points with themselves,
+  * then one aggregation per point over its neighbor list. Shuffle
+  * volume is O(n * avg neighbors) — the same work the reference's
+  * kd-tree radius query does per point, here map-side parallel. The reference excludes only the query point
   * itself (ZsmoothFilter.cpp:103-105); coincident other points count,
   * which the order_key inequality reproduces exactly. */
 object Zsmooth {
@@ -114,21 +112,11 @@ object Zsmooth {
     require(medianPercent >= 0.0 && medianPercent <= 100.0,
       "'medianpercent' value must be in the range [0, 100]")
     val p = medianPercent / 100.0
-    val off = typedLit(Seq(-1, 0, 1))
     val cand = df.select(col("order_key").as("__cid"), col("x").as("__cx"),
-        col("y").as("__cy"), col("z").as("__cz"))
-      .withColumn("__dx", explode(off))
-      .withColumn("__dy", explode(off))
-      .withColumn("__kx", floor(col("__cx") / radius).cast("long") + col("__dx"))
-      .withColumn("__ky", floor(col("__cy") / radius).cast("long") + col("__dy"))
-      .drop("__dx", "__dy")
-    val q = df.select(col("order_key"), col("x"), col("y"),
-      floor(col("x") / radius).cast("long").as("__kx"),
-      floor(col("y") / radius).cast("long").as("__ky"))
-    val d2 = (col("x") - col("__cx")) * (col("x") - col("__cx")) +
-      (col("y") - col("__cy")) * (col("y") - col("__cy"))
-    val nbrs = q.join(cand, Seq("__kx", "__ky"))
-      .filter(col("__cid") =!= col("order_key") && d2 <= radius * radius)
+      col("y").as("__cy"), col("z").as("__cz"))
+    val nbrs = RadiusJoin(df.select("order_key", "x", "y"), Seq("x", "y"),
+        cand, Seq("__cx", "__cy"), radius)
+      .filter(col("__cid") =!= col("order_key"))
       .groupBy(col("order_key").as("__qid"))
       .agg(sort_array(collect_list(col("__cz"))).as("__zs"))
     val zs = col("__zs"); val cnt = size(zs)

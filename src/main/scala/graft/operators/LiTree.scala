@@ -24,8 +24,8 @@ import graft.core.Mat
   * NOW with the same outcome as in the reference's global
   * tallest-first order: every taller unprocessed seed is > 130 away,
   * and its eventual removals cannot intersect this seed's context.
-  * Each round processes all dominant seeds at once (two cell-grid
-  * joins + one cogroup per round); forests with mixed heights resolve
+  * Each round processes all dominant seeds at once (two RadiusJoins +
+  * one grouping per round); forests with mixed heights resolve
   * in a handful of rounds, a strict monotone height gradient degrades
   * to the reference's sequential order rather than to a wrong answer.
   *
@@ -50,27 +50,16 @@ object LiTree {
     val domR = contextR + math.sqrt(ClassifyR2)            // 130 at defaults
 
     // local-maximum flags, once, over the full view (radius 2.0,
-    // LiTreeFilter.cpp:120-149): 3x3 cell-grid self-join
+    // LiTreeFilter.cpp:120-149). Every neighbourhood below is a 2-D
+    // RadiusJoin of query points `pts` (x, y) with candidates renamed to
+    // (nx, ny); the query side is the one exploded over the cell grid.
     val base = df.select(col("order_key"), col("x"), col("y"),
       col("height_above_ground").as("hag"))
-    def cellJoin(pts: DataFrame, cell: Double, r2: Double,
-        candCols: DataFrame): DataFrame = {
-      val cand = candCols
-        .withColumn("__cx", floor(col("x") / cell).cast("long"))
-        .withColumn("__cy", floor(col("y") / cell).cast("long"))
-        .withColumn("__cx", explode(sequence(col("__cx") - 1, col("__cx") + 1)))
-        .withColumn("__cy", explode(sequence(col("__cy") - 1, col("__cy") + 1)))
-      pts
-        .withColumn("__cx", floor(col("x") / cell).cast("long"))
-        .withColumn("__cy", floor(col("y") / cell).cast("long"))
-        .join(cand.withColumnRenamed("x", "nx").withColumnRenamed("y", "ny"),
-          Seq("__cx", "__cy"))
-        .filter((col("x") - col("nx")) * (col("x") - col("nx")) +
-          (col("y") - col("ny")) * (col("y") - col("ny")) <= r2)
-        .drop("__cx", "__cy")
-    }
-    val lmax = cellJoin(base, 2.0, 4.0,
-        base.select(col("x"), col("y"), col("hag").as("nhag")))
+    def near(pts: DataFrame, r: Double, cand: DataFrame): DataFrame =
+      RadiusJoin(pts, Seq("x", "y"),
+        cand.withColumnRenamed("x", "nx").withColumnRenamed("y", "ny"),
+        Seq("nx", "ny"), r)
+    val lmax = near(base, 2.0, base.select(col("x"), col("y"), col("hag").as("nhag")))
       .groupBy("order_key")
       .agg((max(when(col("nhag") > col("hag"), 1).otherwise(0)) === 0).as("lmax"))
     var ui = Mat(base.join(lmax, Seq("order_key")))
@@ -83,7 +72,7 @@ object LiTree {
     while (!done && round < maxRounds) {
       round += 1
       // dominant seeds: strict (hag, -order_key) maximum within domR
-      val seeds = cellJoin(ui, domR, domR * domR,
+      val seeds = near(ui, domR,
           ui.select(col("x"), col("y"), col("hag").as("nhag"),
             col("order_key").as("nk")))
         .groupBy(col("order_key"), col("x"), col("y"), col("hag"))
@@ -94,8 +83,8 @@ object LiTree {
         .select(col("order_key").as("__sk"), col("x").as("__sx"),
           col("y").as("__sy"), col("hag").as("__shag"))
       // gather each seed's context disk and classify in-task
-      val ctx = cellJoin(seeds.withColumnRenamed("__sx", "x")
-            .withColumnRenamed("__sy", "y"), contextR, contextR * contextR,
+      val ctx = near(seeds.withColumnRenamed("__sx", "x")
+            .withColumnRenamed("__sy", "y"), contextR,
           ui.select(col("x"), col("y"), col("order_key").as("nk"),
             col("hag").as("nhag"), col("lmax").as("nlmax")))
         .select(col("__sk"), col("__shag"), col("x").as("__sx2"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -43,57 +43,61 @@ object Outlier {
   }
 }
 
-/** Count of points within `radius` of each point (self included) — a
-  * single 3x3x3 cell self-join with h = radius; the shared primitive for
-  * radius outlier, radialdensity and dbscan. */
-object RadiusCount {
-  def apply(df: DataFrame, radius: Double, outCol: String = "__rc"): DataFrame = {
-    val pts = df.select("order_key", "x", "y", "z")
-    def cellC(c: Column) = floor(c / radius).cast("long")
-    val offs = for (dx <- -1 to 1; dy <- -1 to 1; dz <- -1 to 1)
-      yield struct(lit(dx).as("dx"), lit(dy).as("dy"), lit(dz).as("dz"))
-    val a = pts.select(col("order_key").as("ak"), col("x").as("ax"),
-        col("y").as("ay"), col("z").as("az"),
-        cellC(col("x")).as("cx0"), cellC(col("y")).as("cy0"), cellC(col("z")).as("cz0"))
-      .withColumn("__o", explode(array(offs: _*)))
-      .select(col("ak"), col("ax"), col("ay"), col("az"),
-        (col("cx0") + col("__o.dx")).as("cx"),
-        (col("cy0") + col("__o.dy")).as("cy"),
-        (col("cz0") + col("__o.dz")).as("cz"))
-    val b = pts.select(col("order_key").as("bk"), col("x").as("bx"),
-      col("y").as("by"), col("z").as("bz"),
-      cellC(col("x")).as("cx"), cellC(col("y")).as("cy"), cellC(col("z")).as("cz"))
-    val d2 = (col("ax") - col("bx")) * (col("ax") - col("bx")) +
-      (col("ay") - col("by")) * (col("ay") - col("by")) +
-      (col("az") - col("bz")) * (col("az") - col("bz"))
-    a.join(b, Seq("cx", "cy", "cz")).filter(d2 <= radius * radius)
-      .groupBy(col("ak").as("order_key")).agg(count(lit(1)).as(outCol))
+/** The fixed-radius neighbour join: every (query, candidate) pair whose
+  * squared distance over the named coordinate columns, (x, y) or
+  * (x, y, z) and summed in that order, is <= radius^2. One cell join at
+  * cell side `radius`: each query row is exploded over its 3^d
+  * neighbour cells and meets the candidates binned in the cell it lands
+  * on, so every pair within radius meets exactly once. Returns the
+  * columns of both sides (their names must differ) plus the squared
+  * distance `__d2`; self-exclusion, strictness and aggregation stay with
+  * the caller. */
+object RadiusJoin {
+  def apply(query: DataFrame, queryCoords: Seq[String], cand: DataFrame,
+      candCoords: Seq[String], radius: Double): DataFrame = {
+    val dims = queryCoords.size
+    require((dims == 2 || dims == 3) && candCoords.size == dims,
+      s"RadiusJoin: need 2 or 3 coordinates per side, got $queryCoords / $candCoords")
+    val keys = (0 until dims).map(i => s"__rj$i")
+    def cell(c: String) = floor(col(c) / radius).cast("long")
+    val offs = (1 until dims).foldLeft((-1 to 1).map(Seq(_)))((acc, _) =>
+      for (o <- acc; d <- -1 to 1) yield o :+ d)
+    val q = query
+      .withColumn("__rjo", explode(array(offs.map(o => array(o.map(lit): _*)): _*)))
+      .select(col("*") +: keys.indices.map(i =>
+        (cell(queryCoords(i)) + col("__rjo")(i)).as(keys(i))): _*)
+      .drop("__rjo")
+    val c = cand.select(col("*") +: keys.indices.map(i =>
+      cell(candCoords(i)).as(keys(i))): _*)
+    val d2 = queryCoords.zip(candCoords)
+      .map { case (a, b) => (col(a) - col(b)) * (col(a) - col(b)) }
+      .reduce(_ + _)
+    q.join(c, keys).drop(keys: _*)
+      .withColumn("__d2", d2).filter(col("__d2") <= radius * radius)
   }
 
-  /** All (p, q) pairs within radius, p != q, with distance. */
-  def pairs(df: DataFrame, radius: Double): DataFrame = {
-    val pts = df.select("order_key", "x", "y", "z")
-    def cellC(c: Column) = floor(c / radius).cast("long")
-    val offs = for (dx <- -1 to 1; dy <- -1 to 1; dz <- -1 to 1)
-      yield struct(lit(dx).as("dx"), lit(dy).as("dy"), lit(dz).as("dz"))
-    val a = pts.select(col("order_key").as("pk"), col("x").as("ax"),
-        col("y").as("ay"), col("z").as("az"),
-        cellC(col("x")).as("cx0"), cellC(col("y")).as("cy0"), cellC(col("z")).as("cz0"))
-      .withColumn("__o", explode(array(offs: _*)))
-      .select(col("pk"), col("ax"), col("ay"), col("az"),
-        (col("cx0") + col("__o.dx")).as("cx"),
-        (col("cy0") + col("__o.dy")).as("cy"),
-        (col("cz0") + col("__o.dz")).as("cz"))
-    val b = pts.select(col("order_key").as("qk"), col("x").as("bx"),
-      col("y").as("by"), col("z").as("bz"),
-      cellC(col("x")).as("cx"), cellC(col("y")).as("cy"), cellC(col("z")).as("cz"))
-    val d2 = (col("ax") - col("bx")) * (col("ax") - col("bx")) +
-      (col("ay") - col("by")) * (col("ay") - col("by")) +
-      (col("az") - col("bz")) * (col("az") - col("bz"))
-    a.join(b, Seq("cx", "cy", "cz"))
-      .filter(d2 <= radius * radius && col("pk") =!= col("qk"))
-      .select(col("pk"), col("qk"), sqrt(d2).as("dist"))
+  /** The 3-D self join of `df`'s points: the query's order_key, x, y, z
+    * as ak, ax, ay, az and the candidate's as bk, bx, by, bz. */
+  def self(df: DataFrame, radius: Double): DataFrame = {
+    def side(p: String) = df.select(col("order_key").as(s"${p}k"),
+      col("x").as(s"${p}x"), col("y").as(s"${p}y"), col("z").as(s"${p}z"))
+    def xyz(p: String) = Seq("x", "y", "z").map(p + _)
+    apply(side("a"), xyz("a"), side("b"), xyz("b"), radius)
   }
+}
+
+/** Count of points within `radius` of each point (self included), over
+  * RadiusJoin; the shared primitive for radius outlier, radialdensity
+  * and dbscan. */
+object RadiusCount {
+  def apply(df: DataFrame, radius: Double, outCol: String = "__rc"): DataFrame =
+    RadiusJoin.self(df, radius)
+      .groupBy(col("ak").as("order_key")).agg(count(lit(1)).as(outCol))
+
+  /** All (p, q) pairs within radius, p != q, with distance. */
+  def pairs(df: DataFrame, radius: Double): DataFrame =
+    RadiusJoin.self(df, radius).filter(col("ak") =!= col("bk"))
+      .select(col("ak").as("pk"), col("bk").as("qk"), sqrt(col("__d2")).as("dist"))
 }
 
 /** filters.radialdensity (filters/RadialDensityFilter.cpp:48): neighbor

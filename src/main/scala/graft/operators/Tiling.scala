@@ -291,163 +291,6 @@ object Chipper {
     base.unpersist(false)
     df.join(assign, Seq("order_key"), "inner")
   }
-
-  /** Approximate chipper for beyond-driver-exact scales. The exact
-    * distributed phase pays one GLOBAL RANK SHUFFLE of the slim
-    * projection per split level (~log2(n/localThreshold) shuffles of the
-    * full table at 10^12 rows); this variant cuts each oversized block
-    * at a SAMPLED MEDIAN of the wide axis instead — per level: one
-    * per-block stats aggregate, one percentile aggregate over a
-    * deterministic 1/`sampleMod` hash sample, and a map-only reassignment.
-    * No data shuffle until the final per-block grouping.
-    *
-    * Once every block fits `localThreshold`, the EXACT equal-count
-    * recursion runs per block with a block-local partition array.
-    * Documented tolerance (logged loudly once per call in approximate
-    * regimes):
-    *   - no chip ever exceeds `capacity` rows (the per-block exact phase
-    *     guarantees it regardless of how the sampled cuts landed);
-    *   - chip count <= exact count + number of blocks (each block rounds
-    *     its own chip count up at most once);
-    *   - chip sizes run below capacity only to the extent the sampled
-    *     medians mis-split (~1/sqrt(sample size) relative error per cut).
-    * In the single-block regime (n <= localThreshold) the output is
-    * BIT-IDENTICAL to Chipper (differential-tested), because the local
-    * phase is the same recursion over the same partition array.
-    * Degenerate blocks (zero extent on the wide axis) split by an
-    * order_key hash instead of a value cut, so point-mass skew cannot
-    * stall the recursion. Chip ids are (block id << 32) | local chip. */
-  def sampled(df: DataFrame, capacity: Long = 5000L,
-      chipCol: String = "chip_id", localThreshold: Long = 1 << 20,
-      sampleMod: Int = 10): DataFrame = {
-    val spark = df.sparkSession
-    require(capacity > 0 && localThreshold >= capacity && sampleMod >= 1,
-      s"chipper.sampled: need capacity > 0 <= localThreshold, sampleMod >= 1")
-    val base = df.select(col("x"), col("y"), col("order_key"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = base.count()
-    if (n == 0) {
-      base.unpersist(false)
-      return df.withColumn(chipCol, lit(0L)).limit(0)
-    }
-    if (n > localThreshold)
-      System.err.println(s"[chipper.sampled] APPROXIMATE mode over $n rows: " +
-        s"chips stay capacity-bounded (<= $capacity) but sampled median " +
-        s"cuts (1/$sampleMod hash sample) make sizes and chip count " +
-        "approximate; use Chipper for bit-exact reference parity")
-    var work = base.withColumn("__block", lit(0))
-    var axis = Map(0 -> true) // block id -> prevAxisX
-    var nextId = 1
-    var done = false
-    var level = 0
-    while (!done) {
-      val stats = work.groupBy("__block").agg(count(lit(1)).as("cnt"),
-          min("x"), max("x"), min("y"), max("y")).collect()
-        .map(r => r.getInt(0) -> (r.getLong(1), r.getDouble(2),
-          r.getDouble(3), r.getDouble(4), r.getDouble(5))).toMap
-      val splitting = stats.filter(_._2._1 > localThreshold)
-      level += 1
-      // every split strictly shrinks a block (both sides provably
-      // non-empty below), so depth is bounded by ~log2(n/threshold) per
-      // mass + the degenerate hash-halving tail; a run past this cap
-      // means a cut stopped separating and must fail loudly, not spin
-      require(level <= 64 + 2 * (64 - java.lang.Long.numberOfLeadingZeros(n)),
-        s"chipper.sampled: split recursion did not converge after $level " +
-        s"levels (${splitting.size} blocks still oversized, largest " +
-        s"${if (splitting.isEmpty) 0L else splitting.values.map(_._1).max})")
-      if (splitting.nonEmpty && level % 8 == 0)
-        System.err.println(s"[chipper.sampled] level $level: " +
-          s"${splitting.size} oversized blocks, largest " +
-          s"${splitting.values.map(_._1).max} " +
-          splitting.toSeq.sortBy(_._1).take(4).map { case (id, s) =>
-            s"(b$id cnt=${s._1} x=[${s._2},${s._3}] y=[${s._4},${s._5}] " +
-            s"ax=${axis.get(id)})" }.mkString(" "))
-      if (splitting.isEmpty) done = true
-      else {
-        val metas = splitting.keys.toSeq.sorted.map { id =>
-          val (_, mnx, mxx, mny, mxy) = splitting(id)
-          val prevX = axis(id)
-          val wideIsX =
-            if (prevX) (mxx - mnx) > (mxy - mny) else !((mxy - mny) > (mxx - mnx))
-          (id, wideIsX)
-        }
-        val metaDf = spark.createDataFrame(metas).toDF("__block", "__wideIsX")
-        val posed = work.join(broadcast(metaDf), Seq("__block"))
-          .withColumn("__pos", when(col("__wideIsX"), col("x")).otherwise(col("y")))
-        // deterministic sample: hash residue, not .sample() (whose row
-        // set depends on partitioning)
-        val meds = posed.filter(
-            ((xxhash64(col("order_key")) % sampleMod) + sampleMod) % sampleMod === 0)
-          .groupBy("__block")
-          .agg(expr("percentile_approx(__pos, 0.5, 10000)").as("__cutv"))
-          .collect()
-          .map(r => r.getInt(0) ->
-            (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
-        val cuts = metas.map { case (id, wideIsX) =>
-          val (cnt, mnx, mxx, mny, mxy) = splitting(id)
-          val (mn, mx) = if (wideIsX) (mnx, mxx) else (mny, mxy)
-          val degenerate = !(mx > mn)
-          val c0 = meds.getOrElse(id, None).getOrElse(mn)
-          // a cut at/below the block min (the sampled median LANDS on a
-          // point mass sitting at the min) or past the max would leave a
-          // side empty and stall the recursion — clamp to nextUp(min),
-          // which peels the min-valued mass into its own block in ONE
-          // level (an interval-halving clamp took ~10 levels to converge
-          // on an 80% point mass)
-          val cut = if (c0 > mn && c0 <= mx) c0 else math.nextUp(mn)
-          // a zero-extent (point-mass) block cannot be value-split at
-          // all: scatter it straight to ceil(cnt/localThreshold) hash
-          // buckets in one level instead of halving level by level
-          val k = if (degenerate)
-            (((cnt - 1) / localThreshold).toInt + 1) max 2 else 1
-          val rid = nextId; nextId += (if (degenerate) k else 1)
-          axis += (id -> wideIsX)
-          (0 until (if (degenerate) k else 1)).foreach(j =>
-            axis += ((rid + j) -> wideIsX))
-          (id, cut, rid, degenerate, k)
-        }
-        val cutDf = spark.createDataFrame(cuts)
-          .toDF("__block", "__cut", "__rid", "__deg", "__k")
-        // the scatter hash is SALTED with the block id: an unsalted
-        // hash(key) % k cannot re-split a bucket that was itself formed
-        // by hash(key) % k' (the residue pins every smaller modulus of
-        // the same hash), which stalled the recursion on re-scattered
-        // point masses
-        val reassigned = posed.join(broadcast(cutDf), Seq("__block"))
-          .withColumn("__block", when(col("__deg"),
-              col("__rid") + ((xxhash64(col("__block"), col("order_key"))
-                % col("__k")) + col("__k")) % col("__k"))
-            .otherwise(when(col("__pos") >= col("__cut"), col("__rid"))
-              .otherwise(col("__block"))))
-          .select(col("x"), col("y"), col("order_key"),
-            col("__block").cast("int").as("__block"))
-        val untouched = work.join(broadcast(metaDf.select("__block")),
-          Seq("__block"), "left_anti")
-        work = graft.core.Mat(reassigned.unionByName(untouched), eager = false)
-      }
-    }
-    val axisMeta = axis
-    val cap = capacity
-    import spark.implicits._
-    val assignEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    val assign = graft.core.Mat(work.select("x", "y", "order_key", "__block")
-      .as[(Double, Double, Long, Int)]
-      .groupByKey(_._4)
-      .flatMapGroups { (blk: Int, it: Iterator[(Double, Double, Long, Int)]) =>
-        val rows = it.toArray
-        val parts = ChipperCore.partitions(rows.length.toLong, cap)
-        val chips = ChipperCore.chipBlock(
-          rows.map(_._1), rows.map(_._2), rows.map(_._3),
-          i => parts(i), 0, parts.length - 1,
-          axisMeta.getOrElse(blk, true))
-        chips.iterator.zipWithIndex.map { case (c, i) =>
-          (rows(i)._3, (blk.toLong << 32) | c.toLong)
-        }
-      }(assignEnc)
-      .toDF("order_key", chipCol))
-    base.unpersist(false)
-    df.join(assign, Seq("order_key"), "inner")
-  }
 }
 
 /** filters.divider analog (filters/DividerFilter.cpp:41): round-robin or

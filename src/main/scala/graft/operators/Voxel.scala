@@ -113,30 +113,9 @@ object Sample {
   def apply(df: DataFrame, radius: Double, localLimit: Long): DataFrame = {
     val spark = df.sparkSession
     val pts = df.select("order_key", "x", "y", "z")
-    // candidate conflict pairs (earlier -> later) via 3x3x3 cell join
-    val h = radius
-    def cellC(c: Column) = floor(c / h).cast("long")
-    val a = pts.select(col("order_key").as("ak"), col("x").as("ax"),
-      col("y").as("ay"), col("z").as("az"),
-      cellC(col("x")).as("acx"), cellC(col("y")).as("acy"), cellC(col("z")).as("acz"))
-    val offs = for (dx <- -1 to 1; dy <- -1 to 1; dz <- -1 to 1)
-      yield struct(lit(dx).as("dx"), lit(dy).as("dy"), lit(dz).as("dz"))
-    val b = pts.select(col("order_key").as("bk"), col("x").as("bx"),
-        col("y").as("by"), col("z").as("bz"),
-        cellC(col("x")).as("bcx0"), cellC(col("y")).as("bcy0"), cellC(col("z")).as("bcz0"))
-      .withColumn("__o", explode(array(offs: _*)))
-      .select(col("bk"), col("bx"), col("by"), col("bz"),
-        (col("bcx0") + col("__o.dx")).as("bcx"),
-        (col("bcy0") + col("__o.dy")).as("bcy"),
-        (col("bcz0") + col("__o.dz")).as("bcz"))
-    val d2 = (col("ax") - col("bx")) * (col("ax") - col("bx")) +
-      (col("ay") - col("by")) * (col("ay") - col("by")) +
-      (col("az") - col("bz")) * (col("az") - col("bz"))
-    // pairs: earlier bk conflicts with later ak
-    val pairs = a.join(b,
-        col("acx") === col("bcx") && col("acy") === col("bcy") &&
-          col("acz") === col("bcz") && col("bk") < col("ak"), "inner")
-      .filter(d2 < radius * radius)
+    // conflict pairs: earlier bk conflicts with later ak strictly inside radius
+    val pairs = RadiusJoin.self(df, radius)
+      .filter(col("bk") < col("ak") && col("__d2") < radius * radius)
       .select(col("ak"), col("bk"))
       .transform(d => graft.core.Mat(d))
 

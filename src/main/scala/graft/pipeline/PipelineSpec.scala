@@ -54,12 +54,27 @@ object PipelineSpec {
     o.get(k).collect { case JString(s) => s
                        case JInt(i) => i.toString
                        case JDouble(d) => d.toString }
+  /** A malformed option value, naming its key; applyStage adds the stage. */
+  final class BadOption(k: String, v: JValue, want: String)
+    extends IllegalArgumentException(
+      s"option '$k' must be $want, got ${JsonMethods.compact(JsonMethods.render(v))}")
+
   def optDouble(o: Map[String, JValue], k: String): Option[Double] =
-    o.get(k).collect { case JDouble(d) => d; case JInt(i) => i.toDouble
-                       case JString(s) => s.toDouble }
+    o.get(k).map {
+      case JDouble(d) => d
+      case JInt(i) => i.toDouble
+      case v @ JString(s) =>
+        scala.util.Try(s.toDouble).getOrElse(throw new BadOption(k, v, "a number"))
+      case v => throw new BadOption(k, v, "a number")
+    }
   def optLong(o: Map[String, JValue], k: String): Option[Long] =
-    o.get(k).collect { case JInt(i) => i.toLong; case JDouble(d) => d.toLong
-                       case JString(s) => s.toLong }
+    o.get(k).map {
+      case JInt(i) if i.isValidLong => i.toLong
+      case JDouble(d) if d.isWhole && d.abs < 9.0e18 => d.toLong
+      case v @ JString(s) =>
+        scala.util.Try(s.toLong).getOrElse(throw new BadOption(k, v, "an integer"))
+      case v => throw new BadOption(k, v, "an integer")
+    }
   /** PDAL list options accept a JSON array or a comma-joined string
     * (Options::getValues, pdal/Options.hpp); empty when absent. */
   def optStrList(o: Map[String, JValue], k: String): Seq[String] =
@@ -69,11 +84,12 @@ object PipelineSpec {
       case _ => Seq.empty
     }
   def optBool(o: Map[String, JValue], k: String): Option[Boolean] =
-    // non-boolean strings (PDAL's where_merge:"auto") fall through to
-    // the stage default instead of crashing toBoolean
-    o.get(k).collect { case JBool(b) => b
+    o.get(k).map {
+      case JBool(b) => b
       case JString(s) if s.equalsIgnoreCase("true") || s.equalsIgnoreCase("false") =>
-        s.toBoolean }
+        s.toBoolean
+      case v => throw new BadOption(k, v, "true or false")
+    }
 }
 
 /** Builds and executes the stage graph over DataFrames. Readers produce
@@ -102,7 +118,9 @@ object PipelineBuilder {
       val out = (optStr(spec.options, "where"), ins.headOption) match {
         case (Some(w), Some(_)) if spec.stageType.startsWith("filters.") ||
             spec.stageType.startsWith("writers.") =>
-          val merge = optBool(spec.options, "where_merge").getOrElse(true) ||
+          // PDAL's where_merge "auto" is the default: merge
+          val merge = spec.options.get("where_merge").contains(JString("auto")) ||
+            optBool(spec.options, "where_merge").getOrElse(true) ||
             spec.stageType.startsWith("writers.")
           graft.expr.Where(ins.head, w,
             d => applyStage(spark, spec.copy(options = spec.options - "where" - "where_merge"),
@@ -358,7 +376,7 @@ object PipelineBuilder {
           reverse = optBool(o, "reverse_transfo").getOrElse(false),
           outSrs = optStr(o, "out_srs"))
       case "filters.mortonorder" => MortonOrder(in,
-        optStr(o, "reverse").exists(_.toBoolean))
+        optBool(o, "reverse").getOrElse(false))
       case "filters.gpstimeconvert" =>
         // `conversion` = "gws2gt" legacy form, or in_time/out_time pair
         val (it, ot) = optStr(o, "conversion") match {
@@ -615,6 +633,8 @@ object PipelineBuilder {
         in
       case other => throw new IllegalArgumentException(s"unknown stage type: $other")
     } catch {
+      case e: BadOption =>
+        throw new IllegalArgumentException(s"${spec.stageType}: ${e.getMessage}", e)
       // the cause rides along: a NoSuchElementException thrown deep inside
       // an eager writer action (not by an optStr(...).get) keeps its real
       // stack trace instead of being masked as a missing option

@@ -143,63 +143,6 @@ class GoldenSpec extends AnyFunSuite {
     assert(Chipper(docs, capacity = 15).count() == 0)
   }
 
-  test("sampled chipper: bit-identical to exact in the single-block " +
-      "regime; capacity bound + count tolerance hold through sampled " +
-      "cuts on skewed data") {
-    // single-block regime (n <= localThreshold): the sampled path runs
-    // the same local recursion over the same partition array -> exact
-    val docs = Fixtures.autzen1065(spark)
-    val ex = Chipper(docs, capacity = 15)
-      .select("order_key", "chip_id").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val sm = Chipper.sampled(docs, capacity = 15, sampleMod = 1)
-      .select("order_key", "chip_id").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(ex == sm, "single-block sampled chipper must equal the exact one")
-    // approximate regime on SKEWED data: 80% of rows point-massed at one
-    // coordinate (degenerate blocks split by key hash), the rest spread.
-    // The documented tolerance: every chip <= capacity, count bounded by
-    // exact + blocks, nothing lost.
-    import spark.implicits._
-    val skew = spark.range(20000).select(col("id").as("order_key"),
-      when(col("id") % 5 =!= 0, lit(42.0))
-        .otherwise((col("id") % 97).cast("double")).as("x"),
-      when(col("id") % 5 =!= 0, lit(17.0))
-        .otherwise((col("id") % 89).cast("double")).as("y"))
-    val cap = 64L
-    val out = Chipper.sampled(skew, capacity = cap, localThreshold = 1024,
-      sampleMod = 3)
-    val sizes = out.groupBy("chip_id").count().select("count")
-      .as[Long].collect()
-    assert(sizes.sum == 20000, "sampled chipper must not lose rows")
-    assert(sizes.forall(_ <= cap),
-      s"capacity bound violated: max chip ${sizes.max} > $cap")
-    val exactChips = ChipperCore.numPartitions(20000, cap)
-    val blocks = math.ceil(20000.0 / 1024).toLong * 2 // <= 2x from halving
-    assert(sizes.length <= exactChips + blocks,
-      s"chip count ${sizes.length} beyond tolerance ($exactChips + $blocks)")
-    // mis-split slack stays moderate even under the point mass
-    assert(sizes.count(_ < cap / 2) <= sizes.length / 4,
-      s"too many underfilled chips: ${sizes.count(_ < cap / 2)} of ${sizes.length}")
-    // UNIFORM data through the distributed (sampled-cut) regime: cuts
-    // land near true medians, so chip sizes match the exact chipper's
-    // near-equal profile — every chip within [3/4*cap, cap] and the
-    // count within one block's rounding of exact
-    val uni = spark.range(16384).select(col("id").as("order_key"),
-      (col("id") % 128).cast("double").as("x"),
-      (col("id") / 128).cast("double").as("y"))
-    val u = Chipper.sampled(uni, capacity = cap, localThreshold = 2048,
-      sampleMod = 2)
-    val us = u.groupBy("chip_id").count().select("count").as[Long].collect()
-    assert(us.sum == 16384)
-    assert(us.forall(s => s <= cap && s >= cap * 3 / 4),
-      s"uniform-data chip sizes outside [${cap * 3 / 4}, $cap]: " +
-        s"min=${us.min} max=${us.max}")
-    val exactUni = ChipperCore.numPartitions(16384, cap)
-    assert(us.length <= exactUni + 16,
-      s"uniform chip count ${us.length} vs exact $exactUni")
-  }
-
   test("range grammar + filter (RangeFilterTest semantics)") {
     val r = DimRange.parse("Classification![2:2]")
     assert(r.name == "Classification" && r.negate && r.lower == 2 && r.upper == 2)

@@ -493,12 +493,14 @@ class OperatorsSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prior)
   }
 
+  /** Order-free row hashes: equal iff the two frames hold the same rows. */
+  private def canon(df: DataFrame): Seq[String] =
+    df.select(md5(to_json(struct(df.columns.sorted.map(col): _*))))
+      .collect().map(_.getString(0)).sorted.toSeq
+
   test("order stages are hash-equal at 1, 7 and 64 input partitions") {
     val pts = docs.withColumn("edge_of_flight_line",
       when(col("order_key") % 7 === 3, 1).otherwise(0))
-    def canon(df: DataFrame): Seq[String] =
-      df.select(md5(to_json(struct(df.columns.sorted.map(col): _*))))
-        .collect().map(_.getString(0)).sorted.toSeq
     val stages = Seq[(String, DataFrame => DataFrame)](
       "sort" -> (Sort(_, "intensity", ascending = false)),
       "randomize" -> (Randomize(_, seed = 7)),
@@ -514,6 +516,72 @@ class OperatorsSpec extends AnyFunSuite {
       "chipper" -> (Chipper(_, capacity = 15, localThreshold = 64)))
     for ((name, stage) <- stages) {
       val Seq(one, seven, many) = Seq(1, 7, 64).map(p => canon(stage(pts.repartition(p))))
+      assert(one == seven && one == many, name)
+    }
+  }
+
+  test("RadiusJoin == brute force on 2-D and 3-D clouds: negative, " +
+      "coincident, exactly-r-apart and cell-boundary points") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(17)
+    for ((dims, r) <- Seq(2 -> 3.0, 3 -> 2.0)) {
+      def rand() = Seq.fill(dims)(rnd.nextDouble() * 16 - 8)
+      // an integer lattice holds many pairs exactly r apart (r is
+      // integral) and puts points on cell boundaries at multiples of r
+      val lattice = (0 until math.pow(7, dims).toInt).map(i =>
+        Seq.tabulate(dims)(a => (i / math.pow(7, a).toInt % 7 - 3).toDouble))
+      val random = Seq.fill(200)(rand())
+      val coincident = random.take(30)
+      val onBoundary = Seq.fill(60)(rand()).zipWithIndex.map { case (p, i) =>
+        p.updated(i % dims, math.round(p(i % dims) / r) * r) }
+      val pts = (lattice ++ random ++ coincident ++ onBoundary).zipWithIndex
+        .map { case (p, k) => (k.toLong, p) }
+      def side(p: String, rows: Seq[(Long, Seq[Double])]) =
+        rows.map { case (k, c) => (k, c(0), c(1), c.lift(2).getOrElse(0.0)) }
+          .toDF(s"${p}k", s"${p}x", s"${p}y", s"${p}z")
+      def coords(p: String) = Seq("x", "y", "z").take(dims).map(p + _)
+      // query and candidate sides differ: two in three points query
+      val queries = pts.filter(_._1 % 3 != 0)
+      val got = RadiusJoin(side("q", queries), coords("q"), side("c", pts), coords("c"), r)
+        .select("qk", "ck", "__d2").as[(Long, Long, Double)].collect().toSeq.sortBy(t => (t._1, t._2))
+      val want = (for ((qk, q) <- queries; (ck, c) <- pts;
+          d2 = q.zip(c).map { case (a, b) => (a - b) * (a - b) }.reduce(_ + _)
+          if d2 <= r * r) yield (qk, ck, d2)).sortBy(t => (t._1, t._2))
+      assert(want.exists(_._3 == r * r), s"$dims-D: no pair exactly r apart")
+      assert(want.exists(t => t._3 == 0.0 && t._1 != t._2), s"$dims-D: no coincident pair")
+      assert(got == want, s"$dims-D: ${got.size} pairs vs brute force ${want.size}")
+    }
+  }
+
+  test("radius operators are hash-equal at 1, 7 and 64 input partitions") {
+    import spark.implicits._
+    // two crowns and low vegetation, the LiTree scene of LiTreeSpec
+    val rnd = new scala.util.Random(7)
+    def crown(cx: Double, hmax: Double, n: Int, keyBase: Long) =
+      (0 until n).map { i =>
+        val ang = rnd.nextDouble() * 2 * math.Pi
+        val r = rnd.nextDouble() * 4
+        (keyBase + i, cx + r * math.cos(ang), r * math.sin(ang),
+          math.max(0.5, hmax - 2 * r - rnd.nextDouble() * 0.3))
+      }
+    val veg = (0 until 20).map(i => (2000L + i, 100.0 + i * 3, 50.0, 0.5 + rnd.nextDouble()))
+    val forest = (crown(0, 18, 40, 0L) ++ crown(200, 12, 30, 1000L) ++ veg)
+      .toDF("order_key", "x", "y", "height_above_ground")
+    // the distributed fixpoint on every sixth point: 178 points, 231
+    // conflict edges at radius 300
+    val sixth = docs.filter(col("order_key") % 6 === 0)
+    val stages = Seq[(String, DataFrame, DataFrame => DataFrame)](
+      ("radiuscount", docs, RadiusCount(_, 60.0)),
+      ("outlier radius", docs, Outlier.radius(_, radius = 50.0, minK = 2)),
+      ("radialdensity", docs, RadialDensity(_, 100.0)),
+      ("cluster", docs, Cluster(_, 80.0)),
+      ("dbscan", docs, Dbscan(_, eps = 80.0, minPoints = 3)),
+      ("sample", docs, Sample(_, 150.0)),
+      ("sample localLimit 0", sixth, Sample(_, 300.0, localLimit = 0)),
+      ("zsmooth", docs, Zsmooth(_, radius = 60.0)),
+      ("litree", forest, LiTree(_)))
+    for ((name, in, stage) <- stages) {
+      val Seq(one, seven, many) = Seq(1, 7, 64).map(p => canon(stage(in.repartition(p))))
       assert(one == seven && one == many, name)
     }
   }

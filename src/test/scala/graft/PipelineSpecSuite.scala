@@ -65,6 +65,15 @@ class PipelineSpecSuite extends AnyFunSuite {
         ]}""")
     assert(out2.count() == 500) // x = 1000*i/999 >= 500 <=> i >= 500
     assert(out2.filter(col("classification") =!= 7).count() == 0)
+    // PDAL's where_merge "auto" merges, as the default does
+    val auto = PipelineBuilder.run(spark,
+      """{"pipeline":[
+         {"type":"readers.faux","mode":"ramp","count":1000,
+          "bounds":"([0,1000],[0,1000],[0,1000])"},
+         {"type":"filters.assign","value":"classification = 7",
+          "where":"x >= 500", "where_merge": "auto"}
+        ]}""")
+    assert(auto.count() == 1000)
   }
 
   test("reader count pushdown + srs bookkeeping (Reader.cpp:56-64)") {
@@ -634,8 +643,9 @@ class PipelineSpecSuite extends AnyFunSuite {
     assert(e1.getMessage.contains("partition_column and num_partitions"),
       s"got: ${e1.getMessage}")
     // a missing connection, table or upper bound is named before load(),
-    // and so are a kNN stage's k below 1 and a malformed order-stage
-    // option; none of them runs a Spark job
+    // and so are a kNN stage's k below 1, a malformed order-stage option
+    // and a number or boolean option of the wrong JSON type; none of them
+    // runs a Spark job
     val faux = """{"type":"readers.faux","mode":"uniform","count":60,"seed":13}"""
     for ((stages, option) <- Seq(
         """{"type":"readers.jdbc","table":"events"}""" -> "'connection'",
@@ -652,7 +662,20 @@ class PipelineSpecSuite extends AnyFunSuite {
         s"""$faux, {"type":"filters.divider","capacity":0}""" -> "capacity must be >= 1",
         s"""$faux, {"type":"filters.decimation","step":0}""" -> "step must be >= 1",
         s"""$faux, {"type":"filters.separatescanline","groupby":0}""" ->
-          "groupby must be >= 1")) {
+          "groupby must be >= 1",
+        s"""$faux, {"type":"filters.sample","radius":"abc"}""" ->
+          "filters.sample: option 'radius' must be a number, got \"abc\"",
+        s"""$faux, {"type":"filters.decimation","step":2.7}""" ->
+          "filters.decimation: option 'step' must be an integer, got 2.7",
+        s"""$faux, {"type":"filters.neighborclassifier","k":true}""" ->
+          "filters.neighborclassifier: option 'k' must be an integer, got true",
+        s"""$faux, {"type":"filters.sample","radius":[1,2]}""" ->
+          "filters.sample: option 'radius' must be a number, got [1,2]",
+        s"""$faux, {"type":"filters.mortonorder","reverse":"yes"}""" ->
+          "filters.mortonorder: option 'reverse' must be true or false, got \"yes\"",
+        s"""$faux, {"type":"filters.assign","value":"classification = 7",
+          "where":"x > 0","where_merge":"maybe"}""" ->
+          "option 'where_merge' must be true or false, got \"maybe\"")) {
       val jobs = jobIdsOf {
         val e = intercept[IllegalArgumentException](PipelineBuilder.run(spark,
           s"""{"pipeline":[$stages,
@@ -674,6 +697,16 @@ class PipelineSpecSuite extends AnyFunSuite {
     assert(msg.toLowerCase.contains("driver") ||
       msg.contains("CANNOT_FIND_JDBC_DRIVER") ||
       e2.isInstanceOf[ClassNotFoundException], s"got: $e2")
+  }
+
+  test("filters.mortonorder reads a JSON boolean reverse") {
+    val faux = """{"type":"readers.faux","mode":"uniform","count":200,"seed":5}"""
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("order_key").collect().toSeq
+    val in = PipelineBuilder.run(spark, s"""{"pipeline":[$faux]}""")
+    val reversed = rows(PipelineBuilder.run(spark, s"""{"pipeline":[$faux,
+       {"type":"filters.mortonorder","reverse":true}]}"""))
+    assert(reversed == rows(graft.operators.MortonOrder(in, reverse = true)))
+    assert(reversed != rows(graft.operators.MortonOrder(in)))
   }
 
   test("readers.jdbc: a partitioned read of an in-memory Derby table; reader " +

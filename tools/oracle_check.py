@@ -7,7 +7,9 @@ For each query in <verify_out_dir>/oracle_sql.json, runs the SQL in DuckDB
 over the parquet tables of <sf_dir> and compares with the Spark result
 parquet using the driver's canon: sort columns by name, cast to str,
 sort rows, md5. Queries without oracle SQL report rows-only. An oracle key
-without a Spark output directory (its gate failed) is a failure.
+without a Spark output directory (its gate failed) is a failure, and so is
+every gate named in <verify_out_dir>/failed_gates.txt (gates that threw,
+rows-only ones included).
 """
 import json
 import sys
@@ -39,7 +41,6 @@ def main(out_dir: str, sf_dir: str) -> int:
         if p.exists():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     results = {}
-    fails = 0
     for qdir in sorted(out.iterdir()):
         if not qdir.is_dir() or not qdir.name.startswith("q"):
             continue
@@ -52,7 +53,6 @@ def main(out_dir: str, sf_dir: str) -> int:
             odf = con.execute(oracle_sql[name]).fetchdf()
         except Exception as e:  # noqa: BLE001
             results[name] = {"err": f"oracle_error: {e}"}
-            fails += 1
             continue
         rows_match = len(spark_df) == len(odf)
         schema_match = sorted(spark_df.columns) == sorted(odf.columns)
@@ -60,17 +60,19 @@ def main(out_dir: str, sf_dir: str) -> int:
         results[name] = {"rows_match": rows_match, "schema_match": schema_match,
                          "hash_match": hash_match, "spark_rows": len(spark_df),
                          "oracle_rows": len(odf)}
-        if not (rows_match and schema_match and hash_match):
-            fails += 1
     for name in sorted(set(oracle_sql) - set(results)):
         results[name] = {"err": "no_output"}
-        fails += 1
+    failed_file = out / "failed_gates.txt"
+    for name in failed_file.read_text().split() if failed_file.exists() else []:
+        results[name] = {"err": "gate_failed"}
     green = sum(1 for v in results.values() if v.get("hash_match"))
     rows_only = sum(1 for v in results.values() if v.get("err") == "no_oracle")
+    fails = len(results) - green - rows_only
     for name, v in sorted(results.items()):
         status = ("PASS" if v.get("hash_match") else
                   "rows-only" if v.get("err") == "no_oracle" else
-                  "FAIL (no Spark output)" if v.get("err") == "no_output" else f"FAIL {v}")
+                  "FAIL (no Spark output)" if v.get("err") == "no_output" else
+                  "FAIL (gate threw)" if v.get("err") == "gate_failed" else f"FAIL {v}")
         print(f"{name}: {status}")
     print(f"\n{green} green / {rows_only} rows-only / {fails} FAILED "
           f"of {len(results)}")
