@@ -36,9 +36,11 @@ import graft.expr.DimRange
   * runs on the CLOTH GRID (area/resolution^2 rows, orders of magnitude
   * smaller): empty cells fill by the reference's 4-direction scanline
   * (ranged window functions per row/column), and the simulation runs
-  * `blockIters` iterations per shuffle round on tile+halo patches
-  * (constraints reach 2 cells/iteration, so halo = 2*blockIters + 2
-  * certifies tile cores exactly). Early stop (maxDiff < 0.005,
+  * `blockIters` iterations per shuffle round on [[GridTiles]] tile+halo
+  * patches (constraints reach 2 cells/iteration, so halo = 2*blockIters
+  * + 2 certifies tile cores exactly); the slope post-processing's clamp
+  * rounds (halo 1) and per-tile union-find (halo 0) tile the grid the
+  * same way. Early stop (maxDiff < 0.005,
   * CSF.cpp:176-180) is evaluated at block granularity (bounded
   * drift: < 0.005 * blockIters of cloth travel past the
   * reference's stop point, well under the 0.5 classification
@@ -191,9 +193,8 @@ object Csf {
     while (used < iterations && !stop) {
       val k = math.min(blockIters, iterations - used)
       val halo = 2 * k + 2
-      val res = tileRound(cur, w, h, tileSize, halo) { (st, pw, ph, gx0, gy0, cx0, cy0, cx1, cy1) =>
-        ClothSim.run(st, pw, ph, gx0, gy0, w, h, cx0 - gx0, cy0 - gy0, k,
-          rigid, step, cx1 - gx0, cy1 - gy0)
+      val res = tileRound(cur, w, h, tileSize, halo) { (st, p) =>
+        ClothSim.run(st, p, w, h, k, rigid, step)
       }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // one collect answers both stop tests: the per-iteration maxDiff
       // over all tiles, and whether any cell is still movable
@@ -216,44 +217,29 @@ object Csf {
     * emitted as marker rows (gx = -1, gy = iteration index, pos = the
     * maxDiff, movable = any core cell still movable). */
   private def tileRound(cur: DataFrame, w: Int, h: Int, tileSize: Int,
-      halo: Int)(kernel: (ClothSim.GridState, Int, Int, Int, Int, Int, Int,
-        Int, Int) => Array[Double]): DataFrame = {
+      halo: Int)(kernel: (ClothSim.GridState, GridTiles.Patch) => Array[Double])
+      : DataFrame = {
     val spark = cur.sparkSession
     import spark.implicits._
     val t = tileSize
-    val tiles = cur
-      .withColumn("__tx", explode(sequence(
-        greatest(lit(0), floor((col("gx") - halo).cast("double") / t).cast("int")),
-        least(lit((w - 1) / t), floor((col("gx") + halo).cast("double") / t).cast("int")))))
-      .withColumn("__ty", explode(sequence(
-        greatest(lit(0), floor((col("gy") - halo).cast("double") / t).cast("int")),
-        least(lit((h - 1) / t), floor((col("gy") + halo).cast("double") / t).cast("int")))))
-      .filter(col("gx") >= col("__tx") * t - halo &&
-        col("gx") < (col("__tx") + 1) * t + halo &&
-        col("gy") >= col("__ty") * t - halo &&
-        col("gy") < (col("__ty") + 1) * t + halo)
-      .select(col("__tx"), col("__ty"), col("gx"), col("gy"), col("hv"),
-        col("pos"), col("old"), col("movable"))
+    val tiles = GridTiles.explode(cur, Seq("gx" -> w, "gy" -> h), t, halo)
+      .select(GridTiles.tileCols(2) ++ Seq(col("gx"), col("gy"), col("hv"),
+        col("pos"), col("old"), col("movable")): _*)
       .as[(Int, Int, Int, Int, Double, Double, Double, Boolean)]
     tiles.groupByKey(r => (r._1, r._2)).flatMapGroups { (tk, it) =>
-      val (tx, ty) = tk
-      val gx0 = math.max(0, tx * t - halo); val gx1 = math.min(w, (tx + 1) * t + halo)
-      val gy0 = math.max(0, ty * t - halo); val gy1 = math.min(h, (ty + 1) * t + halo)
-      val pw = gx1 - gx0; val ph = gy1 - gy0
-      val st = ClothSim.GridState(pw, ph)
+      val p = GridTiles.Patch(Seq(tk._1, tk._2), Seq(w, h), t, halo)
+      val st = ClothSim.GridState(p.size(0), p.size(1))
       it.foreach { r =>
-        val i = (r._4 - gy0) * pw + (r._3 - gx0)
+        val i = p.index(r._3, r._4)
         st.hv(i) = r._5; st.pos(i) = r._6; st.old(i) = r._7; st.movable(i) = r._8
       }
-      val cx0 = tx * t; val cx1 = math.min(w, (tx + 1) * t)
-      val cy0 = ty * t; val cy1 = math.min(h, (ty + 1) * t)
-      val diffs = kernel(st, pw, ph, gx0, gy0, cx0, cy0, cx1, cy1)
-      val coreMovable = (cy0 until cy1).exists(gy =>
-        (cx0 until cx1).exists(gx => st.movable((gy - gy0) * pw + (gx - gx0))))
+      val diffs = kernel(st, p)
+      val coreMovable = (p.lo(1) until p.hi(1)).exists(gy =>
+        (p.lo(0) until p.hi(0)).exists(gx => st.movable(p.index(gx, gy))))
       val core = for {
-        gy <- (cy0 until cy1).iterator; gx <- (cx0 until cx1).iterator
+        gy <- (p.lo(1) until p.hi(1)).iterator; gx <- (p.lo(0) until p.hi(0)).iterator
       } yield {
-        val i = (gy - gy0) * pw + (gx - gx0)
+        val i = p.index(gx, gy)
         (gx, gy, st.hv(i), st.pos(i), st.old(i), st.movable(i))
       }
       core ++ diffs.iterator.zipWithIndex.map { case (d, i) =>
@@ -280,25 +266,25 @@ object Csf {
     // component sizes: per-tile union-find over the movable mask,
     // border adjacencies merged on the driver (two-phase CC)
     val t = tileSize
-    val cells = settled.select(col("gx"), col("gy"), col("movable"))
-      .filter(col("movable"))
-      .withColumn("__tx", (col("gx") / t).cast("int"))
-      .withColumn("__ty", (col("gy") / t).cast("int"))
-      .as[(Int, Int, Boolean, Int, Int)]
-    val perTile = cells.groupByKey(r => (r._4, r._5)).flatMapGroups { (tk, it) =>
-      val arr = it.map(r => (r._1, r._2)).toArray
+    val axes = Seq("gx" -> w, "gy" -> h)
+    val cells = GridTiles.explode(settled.filter(col("movable")), axes, t, 0)
+      .select(GridTiles.tileCols(2) ++ Seq(col("gx"), col("gy")): _*)
+      .as[(Int, Int, Int, Int)]
+    val perTile = cells.groupByKey(r => (r._1, r._2)).flatMapGroups { (tk, it) =>
+      val p = GridTiles.Patch(Seq(tk._1, tk._2), Seq(w, h), t, 0)
+      val arr = it.map(r => (r._3, r._4)).toArray
       val idx = arr.zipWithIndex.toMap
       val uf = new ClothSim.UnionFind(arr.length)
       for (((gx, gy), i) <- idx) {
         idx.get((gx + 1, gy)).foreach(uf.union(i, _))
         idx.get((gx, gy + 1)).foreach(uf.union(i, _))
       }
-      // (cell key, tile-local root key); border cells additionally
-      // emit (rootKey, borderKey) pairs for the driver merge
+      // (cell key, tile-local root key); cells on the tile's edge
+      // additionally emit (rootKey, borderKey) pairs for the driver merge
       arr.indices.iterator.map { i =>
         val (gx, gy) = arr(i); val (rx, ry) = arr(uf.find(i))
         (gx.toLong * h + gy, rx.toLong * h + ry,
-          gx % t == 0 || gx % t == t - 1 || gy % t == 0 || gy % t == t - 1)
+          gx == p.lo(0) || gx == p.hi(0) - 1 || gy == p.lo(1) || gy == p.hi(1) - 1)
       }
     }.toDF("cell", "root", "border").persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -339,35 +325,25 @@ object Csf {
       .withColumn("big", coalesce(col("big"), lit(false))))
     var changedTotal = 1L
     while (changedTotal > 0) {
-      val round = cur
-        .withColumn("__tx", explode(sequence(
-          greatest(lit(0), floor((col("gx") - 1).cast("double") / t).cast("int")),
-          least(lit((w - 1) / t), floor((col("gx") + 1).cast("double") / t).cast("int")))))
-        .withColumn("__ty", explode(sequence(
-          greatest(lit(0), floor((col("gy") - 1).cast("double") / t).cast("int")),
-          least(lit((h - 1) / t), floor((col("gy") + 1).cast("double") / t).cast("int")))))
-        .select(col("__tx"), col("__ty"), col("gx"), col("gy"), col("hv"),
-          col("pos"), col("old"), col("movable"), col("big"))
+      val round = GridTiles.explode(cur, axes, t, 1)
+        .select(GridTiles.tileCols(2) ++ Seq(col("gx"), col("gy"), col("hv"),
+          col("pos"), col("old"), col("movable"), col("big")): _*)
         .as[(Int, Int, Int, Int, Double, Double, Double, Boolean, Boolean)]
         .groupByKey(r => (r._1, r._2)).flatMapGroups { (tk, it) =>
-          val (tx, ty) = tk
-          val gx0 = math.max(0, tx * t - 1); val gx1 = math.min(w, (tx + 1) * t + 1)
-          val gy0 = math.max(0, ty * t - 1); val gy1 = math.min(h, (ty + 1) * t + 1)
-          val pw = gx1 - gx0; val ph = gy1 - gy0
+          val p = GridTiles.Patch(Seq(tk._1, tk._2), Seq(w, h), t, 1)
+          val (pw, ph) = (p.size(0), p.size(1))
           val st = ClothSim.GridState(pw, ph)
-          val big = new Array[Boolean](pw * ph)
+          val big = new Array[Boolean](p.length)
           it.foreach { r =>
-            val i = (r._4 - gy0) * pw + (r._3 - gx0)
+            val i = p.index(r._3, r._4)
             st.hv(i) = r._5; st.pos(i) = r._6; st.old(i) = r._7
             st.movable(i) = r._8; big(i) = r._9
           }
           val changed = ClothSim.clampFixpoint(st, big, pw, ph)
-          val cx0 = tx * t; val cx1 = math.min(w, (tx + 1) * t)
-          val cy0 = ty * t; val cy1 = math.min(h, (ty + 1) * t)
           for {
-            gy <- (cy0 until cy1).iterator; gx <- (cx0 until cx1).iterator
+            gy <- (p.lo(1) until p.hi(1)).iterator; gx <- (p.lo(0) until p.hi(0)).iterator
           } yield {
-            val i = (gy - gy0) * pw + (gx - gx0)
+            val i = p.index(gx, gy)
             (gx, gy, st.hv(i), st.pos(i), st.old(i), st.movable(i), big(i),
               changed.contains(i))
           }
@@ -400,17 +376,20 @@ private[operators] object ClothSim {
   }
 
   /** k iterations of verlet + frozen-neighbor constraints + collision
-    * over the patch; per-iteration max |pos change| over the core
+    * over the patch `p`; per-iteration max |pos change| over the core
     * movable cells (measured after the constraint pass, matching
-    * Cloth::timeStep's read point). (gx0, gy0) is the patch's absolute
-    * offset; neighbors outside the GLOBAL [0,W)x[0,H) grid do not exist
-    * (true cloth boundary), neighbors outside the patch but inside the
-    * global grid are treated as absent — only halo cells ever see that,
-    * and the halo width keeps the core [cx0, cx1) x [cy0, cy1) (patch
-    * coordinates) exact. */
-  def run(st: GridState, pw: Int, ph: Int, gx0: Int, gy0: Int, w: Int, h: Int,
-      cx0: Int, cy0: Int, k: Int, rigid: Int, step: Double,
-      cx1: Int, cy1: Int): Array[Double] = {
+    * Cloth::timeStep's read point). Neighbors outside the GLOBAL
+    * [0,W)x[0,H) grid do not exist (true cloth boundary), neighbors
+    * outside the patch but inside the global grid are treated as absent
+    * — only halo cells ever see that, and the halo width keeps the core
+    * exact. */
+  def run(st: GridState, p: GridTiles.Patch, w: Int, h: Int, k: Int,
+      rigid: Int, step: Double): Array[Double] = {
+    val pw = p.size(0); val ph = p.size(1)
+    val gx0 = p.origin(0); val gy0 = p.origin(1)
+    // the core box in patch coordinates
+    val cx0 = p.lo(0) - gx0; val cx1 = p.hi(0) - gx0
+    val cy0 = p.lo(1) - gy0; val cy1 = p.hi(1) - gy0
     val g = -0.2 * step * step * step * step // addForce(dt^2) * dt^2
     // each constraint is stored on both endpoints (Cloth::makeConstraint),
     // so the reference pass applies every edge twice per sweep; the

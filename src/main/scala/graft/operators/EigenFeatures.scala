@@ -282,7 +282,7 @@ object PlaneFit {
     // centred on the query point for numerical stability (shift-
     // invariant; plane distances computed in the same frame)
     val mom = nn.rows.select(col("order_key"), col("qx"), col("qy"), col("qz"),
-        slice(col("knn"), lit(2), greatest(size(col("knn")) - 1, lit(0))).as("nbrs"))
+        KnnJoin.selfExcluded.as("nbrs"))
       .filter(size(col("nbrs")) > 0)
       .select(Seq("order_key", "qx", "qy", "qz", "nbrs").map(col) ++
         NbrMoments(col("nbrs")): _*)

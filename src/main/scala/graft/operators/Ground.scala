@@ -32,11 +32,12 @@ case class GroundGrid(minX: Double, minY: Double, cell: Double,
 }
 
 /** Distributed raster surface operators over (c:int, r:int, z:double)
-  * DataFrames. Morphology runs as tile+halo cogroups: each task gets a
-  * TILE x TILE core plus an `iters`-cell halo and runs the iteration
-  * sequence on a task-local dense array — one grid-sized shuffle per
-  * morphology call instead of one per erosion step, and the grid is
-  * orders of magnitude smaller than the point cloud (area / cell^2). */
+  * DataFrames. Morphology runs as [[GridTiles]] rounds: each task gets a
+  * TILE x TILE core plus an `iters`-cell halo, clamped to the grid, and
+  * runs the iteration sequence on a task-local dense array — one
+  * grid-sized shuffle per morphology call instead of one per erosion
+  * step, and the grid is orders of magnitude smaller than the point
+  * cloud (area / cell^2). */
 object GridSurface {
   private val TILE = 256
 
@@ -114,81 +115,59 @@ object GridSurface {
 
   /** `iters` steps of 4-neighbor (diamond) erosion (min) or dilation
     * (max) — pdal::math::erodeDiamond/dilateDiamond
-    * (pdal/private/MathUtils.cpp:258-329), distributed: cells shuffle
-    * once to every tile whose `iters`-halo contains them, each task
-    * iterates its local dense array, and only core cells are emitted.
-    * A core result after k steps depends on initial values within
-    * Manhattan distance k <= iters — entirely inside the halo — so the
-    * boundary corruption of halo cells never reaches a core cell.
-    * Cells absent locally but outside the [0,cols)x[0,rows) grid are
-    * simply not considered (the reference's edge clamping). */
+    * (pdal/private/MathUtils.cpp:258-329), distributed as one GridTiles
+    * round: cells shuffle once to every tile whose `iters`-halo patch
+    * holds them, each task iterates its local dense patch, and only core
+    * cells are emitted. A core result after k steps depends on initial
+    * values within Manhattan distance k <= iters — entirely inside the
+    * halo — so the boundary corruption of halo cells never reaches a
+    * core cell. Patches are clamped to the [0,cols)x[0,rows) grid, whose
+    * outside is simply not considered (the reference's edge clamping). */
   def morphDiamond(dense: DataFrame, g: GroundGrid, iters: Int,
       erode: Boolean, tile: Int = TILE): DataFrame = {
     if (iters <= 0) return dense
     val spark = dense.sparkSession
     import spark.implicits._
-    val tiles = dense.select(col("c"), col("r"), col("z").cast("double"),
-        explode(sequence(floor((col("c") - iters).cast("double") / tile).cast("int"),
-          floor((col("c") + iters).cast("double") / tile).cast("int"))).as("tc"))
-      .select(col("c"), col("r"), col("z"), col("tc"),
-        explode(sequence(floor((col("r") - iters).cast("double") / tile).cast("int"),
-          floor((col("r") + iters).cast("double") / tile).cast("int"))).as("tr"))
-      .as[(Int, Int, Double, Int, Int)]
-    val cols = g.cols; val rows = g.rows
-    tiles.groupByKey(t => (t._4, t._5)).flatMapGroups { (tk, it) =>
-      val (tc, tr) = tk
-      val TILE = tile
-      val c0 = tc * TILE - iters; val r0 = tr * TILE - iters
-      val w = TILE + 2 * iters
-      val cur = Array.fill(w * w)(Double.NaN)
-      it.foreach { t =>
-        val lc = t._1 - c0; val lr = t._2 - r0
-        if (lc >= 0 && lc < w && lr >= 0 && lr < w) cur(lc * w + lr) = t._3
-      }
-      val next = new Array[Double](w * w)
+    val extents = Seq(g.cols, g.rows)
+    val tiles = GridTiles.explode(dense, Seq("c" -> g.cols, "r" -> g.rows), tile, iters)
+      .select(GridTiles.tileCols(2) ++ Seq(col("c"), col("r"),
+        col("z").cast("double")): _*)
+      .as[(Int, Int, Int, Int, Double)]
+    tiles.groupByKey(t => (t._1, t._2)).flatMapGroups { (tk, it) =>
+      val p = GridTiles.Patch(Seq(tk._1, tk._2), extents, tile, iters)
+      val pw = p.size(0); val ph = p.size(1)
+      val cur = Array.fill(p.length)(Double.NaN)
+      it.foreach(t => cur(p.index(t._3, t._4)) = t._5)
+      val next = new Array[Double](p.length)
       var step = 0
       while (step < iters) {
-        var lc = 0
-        while (lc < w) {
-          var lr = 0
-          while (lr < w) {
-            val i = lc * w + lr
+        var lr = 0
+        while (lr < ph) {
+          var lc = 0
+          while (lc < pw) {
+            val i = lr * pw + lc
             var best = cur(i)
             @inline def consider(j: Int): Unit = {
               val v = cur(j)
               if (!v.isNaN && (best.isNaN ||
                 (if (erode) v < best else v > best))) best = v
             }
-            if (lr > 0) consider(i - 1)
-            if (lr < w - 1) consider(i + 1)
-            if (lc > 0) consider(i - w)
-            if (lc < w - 1) consider(i + w)
+            if (lr > 0) consider(i - pw)
+            if (lr < ph - 1) consider(i + pw)
+            if (lc > 0) consider(i - 1)
+            if (lc < pw - 1) consider(i + 1)
             next(i) = best
-            lr += 1
+            lc += 1
           }
-          lc += 1
+          lr += 1
         }
-        System.arraycopy(next, 0, cur, 0, w * w)
+        System.arraycopy(next, 0, cur, 0, p.length)
         step += 1
       }
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Double)]
-      var lc = iters
-      while (lc < iters + TILE) {
-        val c = c0 + lc
-        if (c >= 0 && c < cols && c >= tc * TILE && c < (tc + 1) * TILE) {
-          var lr = iters
-          while (lr < iters + TILE) {
-            val r = r0 + lr
-            if (r >= 0 && r < rows && r >= tr * TILE && r < (tr + 1) * TILE) {
-              val v = cur(lc * w + lr)
-              if (!v.isNaN) out += ((c, r, v))
-            }
-            lr += 1
-          }
-        }
-        lc += 1
-      }
-      out.iterator
+      for {
+        r <- (p.lo(1) until p.hi(1)).iterator; c <- (p.lo(0) until p.hi(0)).iterator
+        v = cur(p.index(c, r)) if !v.isNaN
+      } yield (c, r, v)
     }.toDF("c", "r", "z")
   }
 

@@ -629,6 +629,14 @@ object KnnJoin {
       openAfterRound, hot.size)
   }
 
+  /** A self-kNN row's neighbours without the query: its `knn` hits from
+    * the second on. A self-join asks for k + 1 hits, and the first one
+    * is at distance 0 (the query itself, or a coincident point whose id
+    * ties ahead of it), so the rest are the k nearest others. A row with
+    * fewer hits keeps what it has: a lone point gets an empty array. */
+  def selfExcluded: Column =
+    slice(col("knn"), lit(2), greatest(size(col("knn")) - 1, lit(0)))
+
   /** Left-joins `perQuery`, a kNN consumer's result with at most one row
     * per query, to `df` on order_key. It is broadcast (so `df`, spans and
     * all, never shuffles) when `queryRows` rows of its schema fit Spark's
@@ -691,8 +699,7 @@ object NNDistance {
       s"nndistance: mode must be kth or avg, got mode = $mode")
     val knn = KnnJoin.knn(df.select("order_key", "x", "y", "z"), df, k + 1,
       valueCol = "order_key", cellSize = cellSize, selfJoin = true)
-    val dists = knn.rows.select(col("order_key"),
-      slice(col("knn"), lit(2), greatest(size(col("knn")) - 1, lit(0))).as("nbrs"))
+    val dists = knn.rows.select(col("order_key"), KnnJoin.selfExcluded.as("nbrs"))
     val v = mode match {
       // greatest(..., 1): ordinal 0 makes (try_)element_at THROW
       // INVALID_INDEX_OF_ZERO, so a point with no neighbors (single-row

@@ -115,7 +115,7 @@ object MiniballFilter {
       valueCol = "order_key", cellSize = cellSize, selfJoin = true)
     import spark.implicits._
     val out = nn.rows.select(col("order_key"), col("qx"), col("qy"), col("qz"),
-        slice(col("knn"), lit(2), greatest(size(col("knn")) - 1, lit(0))).as("nbrs"))
+        KnnJoin.selfExcluded.as("nbrs"))
       .filter(size(col("nbrs")) > 0)
       .as[(Long, Double, Double, Double, Seq[Hit])]
       .map { case (k, x, y, z, nbrs) =>

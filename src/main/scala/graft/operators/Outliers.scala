@@ -16,7 +16,7 @@ object Outlier {
       noiseClass: Int = 7, remove: Boolean = false, cellSize: Double = 0.0): DataFrame = {
     val knn = KnnJoin.knn(df.select("order_key", "x", "y", "z"), df, meanK + 1,
       valueCol = "order_key", cellSize = cellSize, selfJoin = true)
-    val nbrs = slice(col("knn"), lit(2), greatest(size(col("knn")) - 1, lit(0)))
+    val nbrs = KnnJoin.selfExcluded
     val meanDist = knn.rows.select(col("order_key"),
       (aggregate(nbrs, lit(0.0), (acc, h) => acc + sqrt(h.getField("d2"))) /
         greatest(size(nbrs), lit(1))).as("__md"))
@@ -141,8 +141,7 @@ object Lof {
   def apply(df: DataFrame, minPts: Int = 10, cellSize: Double = 0.0): DataFrame = {
     val knn = KnnJoin.knn(df.select("order_key", "x", "y", "z"), df, minPts + 1,
       valueCol = "order_key", cellSize = cellSize, selfJoin = true)
-    val nbrs = knn.rows.select(col("order_key"),
-      slice(col("knn"), lit(2), greatest(size(col("knn")) - 1, lit(0))).as("nbrs"))
+    val nbrs = knn.rows.select(col("order_key"), KnnJoin.selfExcluded.as("nbrs"))
       // greatest(..., 1): a point with no neighbors (single-row input)
       // probes index 1 for a null k-distance — index 0 throws
       .withColumn("kdist", sqrt(try_element_at(col("nbrs"),
@@ -175,7 +174,7 @@ object Reciprocity {
     val knn = KnnJoin.knn(df.select("order_key", "x", "y", "z"), df, k + 1,
       valueCol = "order_key", cellSize = cellSize, selfJoin = true)
     val edges = knn.rows.select(col("order_key").as("src"),
-        explode(slice(col("knn"), lit(2), greatest(size(col("knn")) - 1, lit(0)))).as("h"))
+        explode(KnnJoin.selfExcluded).as("h"))
       .select(col("src"), col("h.cid").as("dst"))
     val back = edges.select(col("dst").as("src"), col("src").as("dst"))
       .withColumn("__rec", lit(1))

@@ -69,7 +69,8 @@ case class PoissonResult(vertices: DataFrame, faces: DataFrame)
   * blockIters) tile passes of its nodes, and points are touched twice
   * (splat groupBy, isovalue join). When the finest level fits, the whole
   * pyramid runs driver-side. On a 1000-executor cluster only the finest
-  * 1-2 levels are ever distributed. */
+  * 1-2 levels are ever distributed. Every tiled stage is one
+  * [[GridTiles]] round over the node cube. */
 object Poisson extends Serializable {
   private val Omega = 2.0 / 3.0 // weighted-Jacobi smoothing factor
   private val Lmin = 2 // coarsest multigrid level (5^3 nodes)
@@ -576,33 +577,8 @@ object Poisson extends Serializable {
 
   // ===================== tiled stage drivers =====================
 
-  /** Explode sparse node rows (i,j,k + values) into the 3D tiles whose
-    * halo region contains them. */
-  private def withTiles(df: DataFrame, m: Int, t: Int, halo: Int): DataFrame = {
-    def axis(c: String) = sequence(
-      greatest(lit(0), floor((col(c) - halo).cast("double") / t).cast("int")),
-      least(lit((m - 1) / t), floor((col(c) + halo).cast("double") / t).cast("int")))
-    df.withColumn("__tx", explode(axis("i")))
-      .withColumn("__ty", explode(axis("j")))
-      .withColumn("__tz", explode(axis("k")))
-      .filter(col("i") >= col("__tx") * t - halo &&
-        col("i") < (col("__tx") + 1) * t + halo &&
-        col("j") >= col("__ty") * t - halo &&
-        col("j") < (col("__ty") + 1) * t + halo &&
-        col("k") >= col("__tz") * t - halo &&
-        col("k") < (col("__tz") + 1) * t + halo)
-  }
-
-  /** Patch bounds of tile (tx,ty,tz): ((gx0,gy0,gz0), (pw,ph,pd),
-    * core box in global coords). */
-  private def patchBox(tx: Int, ty: Int, tz: Int, t: Int, halo: Int, m: Int) = {
-    val gx0 = math.max(0, tx * t - halo); val gx1 = math.min(m, (tx + 1) * t + halo)
-    val gy0 = math.max(0, ty * t - halo); val gy1 = math.min(m, (ty + 1) * t + halo)
-    val gz0 = math.max(0, tz * t - halo); val gz1 = math.min(m, (tz + 1) * t + halo)
-    ((gx0, gy0, gz0), (gx1 - gx0, gy1 - gy0, gz1 - gz0),
-      (tx * t, ty * t, tz * t, math.min(m, (tx + 1) * t),
-        math.min(m, (ty + 1) * t), math.min(m, (tz + 1) * t)))
-  }
+  /** The node axes of the cube grid with m nodes per axis. */
+  private def nodeAxes(m: Int): Seq[(String, Int)] = Seq("i" -> m, "j" -> m, "k" -> m)
 
   /** Smooth the splat field and emit sparse rows (i,j,k,f,w): f = div of
     * the smoothed normal field, w = the smoothed splat weight. */
@@ -611,29 +587,30 @@ object Poisson extends Serializable {
     import spark.implicits._
     val halo = passes + 1
     val t = tileSize
-    withTiles(splat, m, t, halo)
-      .select(col("__tx"), col("__ty"), col("__tz"), col("i"), col("j"),
-        col("k"), col("vx"), col("vy"), col("vz"), col("w"))
+    GridTiles.explode(splat, nodeAxes(m), t, halo)
+      .select(GridTiles.tileCols(3) ++ Seq(col("i"), col("j"), col("k"),
+        col("vx"), col("vy"), col("vz"), col("w")): _*)
       .as[(Int, Int, Int, Int, Int, Int, Double, Double, Double, Double)]
       .groupByKey(r => (r._1, r._2, r._3)).flatMapGroups { (tk, it) =>
-        val ((gx0, gy0, gz0), (pw, ph, pd), (cx0, cy0, cz0, cx1, cy1, cz1)) =
-          patchBox(tk._1, tk._2, tk._3, t, halo, m)
-        val vx = new Array[Double](pw * ph * pd)
+        val p = GridTiles.Patch(Seq(tk._1, tk._2, tk._3), Seq(m, m, m), t, halo)
+        val (pw, ph, pd) = (p.size(0), p.size(1), p.size(2))
+        val vx = new Array[Double](p.length)
         val vy = new Array[Double](vx.length); val vz = new Array[Double](vx.length)
         val w = new Array[Double](vx.length)
         it.foreach { r =>
-          val c = ((r._6 - gz0) * ph + (r._5 - gy0)) * pw + (r._4 - gx0)
+          val c = p.index(r._4, r._5, r._6)
           vx(c) = r._7; vy(c) = r._8; vz(c) = r._9; w(c) = r._10
         }
         val sx = smoothPatch(vx, pw, ph, pd, passes)
         val sy = smoothPatch(vy, pw, ph, pd, passes)
         val sz = smoothPatch(vz, pw, ph, pd, passes)
         val sw = smoothPatch(w, pw, ph, pd, passes)
-        val f = divergencePatch(sx, sy, sz, pw, ph, pd, gx0, gy0, gz0, m, hs)
+        val f = divergencePatch(sx, sy, sz, pw, ph, pd, p.origin(0), p.origin(1),
+          p.origin(2), m, hs)
         for {
-          gk <- (cz0 until cz1).iterator; gj <- (cy0 until cy1).iterator
-          gi <- (cx0 until cx1).iterator
-          c = ((gk - gz0) * ph + (gj - gy0)) * pw + (gi - gx0)
+          gk <- (p.lo(2) until p.hi(2)).iterator; gj <- (p.lo(1) until p.hi(1)).iterator
+          gi <- (p.lo(0) until p.hi(0)).iterator
+          c = p.index(gi, gj, gk)
           if f(c) != 0.0 || sw(c) != 0.0
         } yield (gi, gj, gk, f(c), sw(c))
       }.toDF("i", "j", "k", "f", "w")
@@ -649,24 +626,24 @@ object Poisson extends Serializable {
     val t = tileSize
     while (used < iters) {
       val k = math.min(blockIters, iters - used)
-      val next = withTiles(cur, m, t, k)
-        .select(col("__tx"), col("__ty"), col("__tz"), col("i"), col("j"),
-          col("k"), col("chi"), col("f"))
+      val next = GridTiles.explode(cur, nodeAxes(m), t, k)
+        .select(GridTiles.tileCols(3) ++ Seq(col("i"), col("j"), col("k"),
+          col("chi"), col("f")): _*)
         .as[(Int, Int, Int, Int, Int, Int, Double, Double)]
         .groupByKey(r => (r._1, r._2, r._3)).flatMapGroups { (tk, it) =>
-          val ((gx0, gy0, gz0), (pw, ph, pd), (cx0, cy0, cz0, cx1, cy1, cz1)) =
-            patchBox(tk._1, tk._2, tk._3, t, k, m)
-          val chi = new Array[Double](pw * ph * pd)
+          val p = GridTiles.Patch(Seq(tk._1, tk._2, tk._3), Seq(m, m, m), t, k)
+          val chi = new Array[Double](p.length)
           val f = new Array[Double](chi.length)
           it.foreach { r =>
-            val c = ((r._6 - gz0) * ph + (r._5 - gy0)) * pw + (r._4 - gx0)
+            val c = p.index(r._4, r._5, r._6)
             chi(c) = r._7; f(c) = r._8
           }
-          val out = jacobiPatch(chi, f, pw, ph, pd, gx0, gy0, gz0, m, h2, k)
+          val out = jacobiPatch(chi, f, p.size(0), p.size(1), p.size(2),
+            p.origin(0), p.origin(1), p.origin(2), m, h2, k)
           for {
-            gk <- (cz0 until cz1).iterator; gj <- (cy0 until cy1).iterator
-            gi <- (cx0 until cx1).iterator
-            c = ((gk - gz0) * ph + (gj - gy0)) * pw + (gi - gx0)
+            gk <- (p.lo(2) until p.hi(2)).iterator; gj <- (p.lo(1) until p.hi(1)).iterator
+            gi <- (p.lo(0) until p.hi(0)).iterator
+            c = p.index(gi, gj, gk)
             if out(c) != 0.0 || f(c) != 0.0
           } yield (gi, gj, gk, out(c), f(c))
         }.toDF("i", "j", "k", "chi", "f")
@@ -712,18 +689,18 @@ object Poisson extends Serializable {
     val t = tileSize
     val doubled = coarse.select((col("i") * 2).as("i"), (col("j") * 2).as("j"),
       (col("k") * 2).as("k"), col("chi"))
-    withTiles(doubled, mf, t, 2)
-      .select(col("__tx"), col("__ty"), col("__tz"), col("i"), col("j"),
-        col("k"), col("chi"))
+    GridTiles.explode(doubled, nodeAxes(mf), t, 2)
+      .select(GridTiles.tileCols(3) ++ Seq(col("i"), col("j"), col("k"),
+        col("chi")): _*)
       .as[(Int, Int, Int, Int, Int, Int, Double)]
       .groupByKey(r => (r._1, r._2, r._3)).flatMapGroups { (tk, it) =>
-        val ((gx0, gy0, gz0), (pw0, ph0, pd0), (cx0, cy0, cz0, cx1, cy1, cz1)) =
-          patchBox(tk._1, tk._2, tk._3, t, 2, mf)
-        // coarse patch covering [gx0,gx0+pw0) in fine coords
-        val px0 = gx0 >> 1; val py0 = gy0 >> 1; val pz0 = gz0 >> 1
-        val pw = ((gx0 + pw0 - 1) >> 1) - px0 + 2
-        val ph = ((gy0 + ph0 - 1) >> 1) - py0 + 2
-        val pd = ((gz0 + pd0 - 1) >> 1) - pz0 + 2
+        val fp = GridTiles.Patch(Seq(tk._1, tk._2, tk._3), Seq(mf, mf, mf), t, 2)
+        // coarse patch covering the fine patch
+        val px0 = fp.origin(0) >> 1; val py0 = fp.origin(1) >> 1
+        val pz0 = fp.origin(2) >> 1
+        val pw = ((fp.origin(0) + fp.size(0) - 1) >> 1) - px0 + 2
+        val ph = ((fp.origin(1) + fp.size(1) - 1) >> 1) - py0 + 2
+        val pd = ((fp.origin(2) + fp.size(2) - 1) >> 1) - pz0 + 2
         val cc = new Array[Double](pw * ph * pd)
         it.foreach { r =>
           val ci = (r._4 >> 1) - px0; val cj = (r._5 >> 1) - py0
@@ -732,8 +709,8 @@ object Poisson extends Serializable {
             cc((ck * ph + cj) * pw + ci) = r._7
         }
         for {
-          gk <- (cz0 until cz1).iterator; gj <- (cy0 until cy1).iterator
-          gi <- (cx0 until cx1).iterator
+          gk <- (fp.lo(2) until fp.hi(2)).iterator; gj <- (fp.lo(1) until fp.hi(1)).iterator
+          gi <- (fp.lo(0) until fp.hi(0)).iterator
           v = prolongInterp(cc, pw, ph, pd, px0, py0, pz0, gi, gj, gk) if v != 0.0
         } yield (gi, gj, gk, v)
       }.toDF("i", "j", "k", "chi")
@@ -886,21 +863,21 @@ object Poisson extends Serializable {
     import spark.implicits._
     val marchPatch = marcher(m, ox, oy, oz, hs, iso)
     val t = tileSize
-    withTiles(chiDf, m, t, 1)
-      .select(col("__tx"), col("__ty"), col("__tz"), col("i"), col("j"),
-        col("k"), col("chi"), col("w"))
+    GridTiles.explode(chiDf, nodeAxes(m), t, 1)
+      .select(GridTiles.tileCols(3) ++ Seq(col("i"), col("j"), col("k"),
+        col("chi"), col("w")): _*)
       .as[(Int, Int, Int, Int, Int, Int, Double, Double)]
       .groupByKey(r => (r._1, r._2, r._3)).flatMapGroups { (tk, it) =>
-        val ((gx0, gy0, gz0), (pw, ph, pd), (cx0, cy0, cz0, cx1, cy1, cz1)) =
-          patchBox(tk._1, tk._2, tk._3, t, 1, m)
-        val chi = new Array[Double](pw * ph * pd)
+        val p = GridTiles.Patch(Seq(tk._1, tk._2, tk._3), Seq(m, m, m), t, 1)
+        val chi = new Array[Double](p.length)
         val dens = new Array[Double](chi.length)
         it.foreach { r =>
-          val c = ((r._6 - gz0) * ph + (r._5 - gy0)) * pw + (r._4 - gx0)
+          val c = p.index(r._4, r._5, r._6)
           chi(c) = r._7; dens(c) = r._8
         }
-        marchPatch(chi, dens, pw, ph, pd, gx0, gy0, gz0, cx0, cy0, cz0,
-          cx1, cy1, cz1)
+        marchPatch(chi, dens, p.size(0), p.size(1), p.size(2), p.origin(0),
+          p.origin(1), p.origin(2), p.lo(0), p.lo(1), p.lo(2), p.hi(0),
+          p.hi(1), p.hi(2))
       }.toDF("k0", "k1", "k2", "x0", "y0", "z0", "d0", "x1", "y1", "z1",
         "d1", "x2", "y2", "z2", "d2")
   }

@@ -54,10 +54,26 @@ object PipelineSpec {
     o.get(k).collect { case JString(s) => s
                        case JInt(i) => i.toString
                        case JDouble(d) => d.toString }
-  /** A malformed option value, naming its key; applyStage adds the stage. */
-  final class BadOption(k: String, v: JValue, want: String)
-    extends IllegalArgumentException(
+  /** A malformed or missing option, naming its key; applyStage adds the
+    * stage. */
+  final class BadOption(message: String) extends IllegalArgumentException(message) {
+    def this(k: String, v: JValue, want: String) = this(
       s"option '$k' must be $want, got ${JsonMethods.compact(JsonMethods.render(v))}")
+  }
+
+  /** A required string option: the first of `keys` that is set (the
+    * alternatives a stage accepts, e.g. "view" or "table"). Fails with a
+    * [[BadOption]] naming the option when none is set, or when the one
+    * set is not a JSON string or number. */
+  def reqStr(o: Map[String, JValue], keys: String*): String =
+    keys.find(o.contains).map(k => optStr(o, k).getOrElse(
+      throw new BadOption(k, o(k), "a string"))).getOrElse(throw missing(o, keys))
+  /** A required number option; as [[reqStr]]. */
+  def reqDouble(o: Map[String, JValue], k: String): Double =
+    optDouble(o, k).getOrElse(throw missing(o, Seq(k)))
+  private def missing(o: Map[String, JValue], keys: Seq[String]) = new BadOption(
+    s"required option ${keys.map(k => s"'$k'").mkString(" or ")} is missing " +
+      s"(options given: ${if (o.isEmpty) "none" else o.keys.toSeq.sorted.mkString(", ")})")
 
   def optDouble(o: Map[String, JValue], k: String): Option[Double] =
     o.get(k).map {
@@ -154,13 +170,12 @@ object PipelineBuilder {
           optStr(o, "default_srs"))
       else capped
     }
-    // a bare Option.get on a required option throws an anonymous
-    // NoSuchElementException — rewrap it with the stage type and the
-    // options that WERE provided (PDAL names the option in its error)
+    // a malformed or missing option throws a BadOption naming it;
+    // rethrown with the stage type (PDAL names both in its error)
     try spec.stageType match {
       // ---- readers ----
       case "readers.auto" | "readers.parquet" | "readers.las" =>
-        readerOpts(spark.read.parquet(optStr(o, "filename").get))
+        readerOpts(spark.read.parquet(reqStr(o, "filename")))
       case "readers.faux" =>
         val count = optLong(o, "count").getOrElse(1000L)
         val mode = optStr(o, "mode").getOrElse("ramp")
@@ -174,11 +189,11 @@ object PipelineBuilder {
         Srs.applyReaderOptions(df, optStr(o, "override_srs"), optStr(o, "default_srs"))
       case "readers.text" =>
         readerOpts(spark.read.option("header", "true").option("inferSchema", "true")
-          .csv(optStr(o, "filename").get))
+          .csv(reqStr(o, "filename")))
       case "readers.view" | "readers.table" =>
         // readers.memoryview analog (io/MemoryViewReader.cpp:50): read a
         // registered temp view / catalog table by name
-        readerOpts(spark.table(optStr(o, "view").orElse(optStr(o, "table")).get))
+        readerOpts(spark.table(reqStr(o, "view", "table")))
       case "readers.graft" =>
         // snapshot-table read (the Iceberg-style GraftTable layer):
         // `asof` time-travels to a version; `bounds` (PDAL 2D grammar)
@@ -187,7 +202,7 @@ object PipelineBuilder {
         // `since_version` reads the incremental APPEND delta
         // (since, asof] instead of a full snapshot — with `bounds` then
         // applied as a plain residual over the delta
-        val root = optStr(o, "root").orElse(optStr(o, "filename")).get
+        val root = reqStr(o, "root", "filename")
         val asOf = optLong(o, "asof").map(_.toInt)
         val since = optLong(o, "since_version").map(_.toInt)
         val df = (since, optStr(o, "bounds")) match {
@@ -263,7 +278,7 @@ object PipelineBuilder {
           case _ => Map.empty[String, String]
         }
         readerOpts(graft.sources.StacReader.read(spark,
-          optStr(o, "filename").get, b,
+          reqStr(o, "filename"), b,
           itemIds = optStrList(o, "item_ids"),
           catalogIds = optStrList(o, "catalog_ids"),
           assetNames = {
@@ -286,14 +301,14 @@ object PipelineBuilder {
               nums(1), nums(3), nums(5), outside)
           case _ => throw new IllegalArgumentException("crop needs bounds|polygon")
         }
-      case "filters.range" => graft.expr.RangeFilter(in, optStr(o, "limits").get)
+      case "filters.range" => graft.expr.RangeFilter(in, reqStr(o, "limits"))
       case "filters.expression" =>
-        graft.expr.ExpressionFilter(in, optStr(o, "expression").get)
+        graft.expr.ExpressionFilter(in, reqStr(o, "expression"))
       case "filters.mongo" =>
-        graft.expr.MongoFilter(in, optStr(o, "expression").get)
+        graft.expr.MongoFilter(in, reqStr(o, "expression"))
       case "filters.assign" =>
         // "Dim = value [WHERE expr]" statement form
-        val stmt = optStr(o, "value").getOrElse(optStr(o, "assignment").get)
+        val stmt = reqStr(o, "value", "assignment")
         val (lhs, rest) = stmt.span(_ != '=')
         val whereIdx = rest.toUpperCase.indexOf("WHERE")
         val (valueS, cond) =
@@ -302,7 +317,7 @@ object PipelineBuilder {
           else (rest.drop(1).trim, None)
         Assign(in, lhs.trim, lit(valueS.toDouble), cond)
       case "filters.ferry" =>
-        val copies = optStr(o, "dimensions").get.split(',').map { spec =>
+        val copies = reqStr(o, "dimensions").split(',').map { spec =>
           val Array(a, b) = spec.split("=>").map(_.trim); (a, b)
         }
         Ferry(in, copies.toSeq)
@@ -318,7 +333,7 @@ object PipelineBuilder {
           s"filters.divider: mode must be partition or round_robin, got '$mode'")
         Divider(in, mode.equalsIgnoreCase("round_robin"),
           optLong(o, "count").map(_.toInt), optLong(o, "capacity"))
-      case "filters.groupby" => GroupBy(in, optStr(o, "dimension").get)
+      case "filters.groupby" => GroupBy(in, reqStr(o, "dimension"))
       case "filters.separatescanline" =>
         SeparateScanLine(in, groupsOf = optLong(o, "groupby").getOrElse(1L).toInt)
       case "filters.merge" => Merge(ins)
@@ -328,7 +343,7 @@ object PipelineBuilder {
         val order = optStr(o, "order").getOrElse("ASC")
         require(Seq("ASC", "DESC").exists(_.equalsIgnoreCase(order)),
           s"filters.sort: order must be ASC or DESC, got '$order'")
-        Sort(in, optStr(o, "dimension").get, order.equalsIgnoreCase("ASC"))
+        Sort(in, reqStr(o, "dimension"), order.equalsIgnoreCase("ASC"))
       case "filters.head" => HeadTail.head(in, optLong(o, "count").getOrElse(10L))
       case "filters.tail" => HeadTail.tail(in, optLong(o, "count").getOrElse(10L))
       case "filters.decimation" =>
@@ -353,9 +368,9 @@ object PipelineBuilder {
             optLong(o, "min_k").getOrElse(2L).toInt)
         else Outlier.statistical(in, optLong(o, "mean_k").getOrElse(8L).toInt,
           optDouble(o, "multiplier").getOrElse(2.0))
-      case "filters.iqr" => Iqr(in, optStr(o, "dimension").get,
+      case "filters.iqr" => Iqr(in, reqStr(o, "dimension"),
         optDouble(o, "k").getOrElse(1.5))
-      case "filters.mad" => Mad(in, optStr(o, "dimension").get,
+      case "filters.mad" => Mad(in, reqStr(o, "dimension"),
         optDouble(o, "k").getOrElse(2.0))
       case "filters.cluster" => Cluster(in, optDouble(o, "tolerance").getOrElse(1.0))
       case "filters.dbscan" => Dbscan(in, optDouble(o, "eps").getOrElse(1.0),
@@ -363,16 +378,16 @@ object PipelineBuilder {
       case "filters.lloydkmeans" => KMeans(in, optLong(o, "k").getOrElse(10L).toInt,
         optLong(o, "maxiters").getOrElse(10L).toInt)
       case "filters.transformation" =>
-        Transformation(in, optStr(o, "matrix").get.trim.split("\\s+").map(_.toDouble).toSeq)
+        Transformation(in, reqStr(o, "matrix").trim.split("\\s+").map(_.toDouble).toSeq)
       case "filters.reprojection" =>
         // in_srs falls back to the view's CRS tag (ReprojectionFilter.cpp:
         // srsFoundOrThrow — the reader's SRS when the option is absent)
         val inSrs = optStr(o, "in_srs").orElse(Srs.of(in)).getOrElse(
           throw new IllegalArgumentException(
             "reprojection: no in_srs option and the input carries no CRS tag"))
-        Reprojection.convert(in, inSrs, optStr(o, "out_srs").get)
+        Reprojection.convert(in, inSrs, reqStr(o, "out_srs"))
       case "filters.projpipeline" =>
-        ProjPipeline(in, optStr(o, "coord_op").get,
+        ProjPipeline(in, reqStr(o, "coord_op"),
           reverse = optBool(o, "reverse_transfo").getOrElse(false),
           outSrs = optStr(o, "out_srs"))
       case "filters.mortonorder" => MortonOrder(in,
@@ -381,7 +396,7 @@ object PipelineBuilder {
         // `conversion` = "gws2gt" legacy form, or in_time/out_time pair
         val (it, ot) = optStr(o, "conversion") match {
           case Some(c) => val Array(a, b) = c.split("2"); (a, b)
-          case None => (optStr(o, "in_time").get, optStr(o, "out_time").get)
+          case None => (reqStr(o, "in_time"), reqStr(o, "out_time"))
         }
         GpsTimeConvert.convert(in, it, ot,
           optDouble(o, "start_date_ws").getOrElse(0.0),
@@ -395,10 +410,10 @@ object PipelineBuilder {
       case "filters.colorinterp" => ColorInterp(in,
         optStr(o, "dimension").getOrElse("z"),
         minValue = optDouble(o, "minimum"), maxValue = optDouble(o, "maximum"))
-      case "filters.geomdistance" => GeomDistance(in, optStr(o, "geometry").get)
+      case "filters.geomdistance" => GeomDistance(in, reqStr(o, "geometry"))
       case "filters.overlay" =>
-        Overlay(in, Seq((optStr(o, "polygon").get,
-          optDouble(o, "value").getOrElse(1.0))), optStr(o, "dimension").get)
+        Overlay(in, Seq((reqStr(o, "polygon"),
+          optDouble(o, "value").getOrElse(1.0))), reqStr(o, "dimension"))
       case "filters.pmf" => Pmf(in,
         cellSize = optDouble(o, "cell_size").getOrElse(1.0),
         exponential = optBool(o, "exponential").getOrElse(true),
@@ -484,8 +499,8 @@ object PipelineBuilder {
       case "filters.greedyprojection" =>
         // like filters.delaunay, the mesh is the stage output here
         GreedyProjection(in,
-          radius = optDouble(o, "radius").get,
-          multiplier = optDouble(o, "multiplier").get,
+          radius = reqDouble(o, "radius"),
+          multiplier = reqDouble(o, "multiplier"),
           numNeighbors = optLong(o, "num_neighbors").getOrElse(100L).toInt,
           minAngle = optDouble(o, "min_angle").getOrElse(math.Pi / 18),
           maxAngle = optDouble(o, "max_angle").getOrElse(2 * math.Pi / 3),
@@ -500,9 +515,9 @@ object PipelineBuilder {
           density = optBool(o, "density").getOrElse(false))
         if (optStr(o, "emit").contains("faces")) pr.faces else pr.vertices
       case "filters.streamcallback" =>
-        CallbackRegistry(optStr(o, "name").get)(in)
+        CallbackRegistry(reqStr(o, "name"))(in)
       case "filters.shell" =>
-        ShellStage.run(in, optStr(o, "command").get)
+        ShellStage.run(in, reqStr(o, "command"))
       // ---- writers ----
       case "writers.ply" | "writers.gltf" =>
         // the reference writes the mesh ATTACHED to the incoming view
@@ -513,7 +528,7 @@ object PipelineBuilder {
         val (verts, faces) =
           if (ins.size == 2) (ins(0), ins(1))
           else (in, DelaunayMesh(in))
-        val fname = optStr(o, "filename").get
+        val fname = reqStr(o, "filename")
         if (spec.stageType == "writers.gltf")
           graft.sources.MeshWriters.writeGlb(verts, faces, fname)
         else {
@@ -540,7 +555,7 @@ object PipelineBuilder {
         }
         in
       case "writers.ogr" =>
-        graft.sources.OgrWriter.writeGeoJson(in, optStr(o, "filename").get,
+        graft.sources.OgrWriter.writeGeoJson(in, reqStr(o, "filename"),
           optStr(o, "attr_dims").map(_.split(',').map(_.trim).toSeq).getOrElse(Nil),
           optStr(o, "measure_dim"),
           optLong(o, "multicount").getOrElse(1L).toInt)
@@ -554,7 +569,7 @@ object PipelineBuilder {
         val lim = if (in.columns.contains("__edge"))
           Some(in.select("__edge", "__ox", "__oy").head()) else None
         graft.sources.AscWriter.writeAsc(
-          in.drop("__edge", "__ox", "__oy"), optStr(o, "filename").get,
+          in.drop("__edge", "__ox", "__oy"), reqStr(o, "filename"),
           optStr(o, "band").getOrElse("band1"),
           optDouble(o, "nodata").getOrElse(-9999.0),
           optDouble(o, "resolution")
@@ -582,7 +597,7 @@ object PipelineBuilder {
         }
         val grid = Rasterize(in, res, optStr(o, "dimension").getOrElse("z"),
           optDouble(o, "radius").getOrElse(0.0), Some(origin))
-        val fn = optStr(o, "filename").get
+        val fn = reqStr(o, "filename")
         if (bands.length == 1)
           graft.sources.AscWriter.writeAsc(grid, fn, bands.head, nodata, res, origin)
         else {
@@ -596,7 +611,7 @@ object PipelineBuilder {
         }
         in
       case "writers.auto" | "writers.parquet" | "writers.las" =>
-        val path = optStr(o, "filename").get
+        val path = reqStr(o, "filename")
         val w = in.write.mode("overwrite")
         val parted = optStr(o, "partition_by")
         parted.fold(w)(p => w.partitionBy(p)).parquet(path)
@@ -604,7 +619,7 @@ object PipelineBuilder {
       case "writers.null" => in.count(); in
       case "writers.text" =>
         in.write.mode("overwrite").option("header", "true")
-          .csv(optStr(o, "filename").get); in
+          .csv(reqStr(o, "filename")); in
       case "writers.graft" =>
         // snapshot-table commit: append (default) stacks a new version,
         // mode=overwrite starts history over, mode=upsert merges by
@@ -613,7 +628,7 @@ object PipelineBuilder {
         // rerun with the same tag commits nothing). Named commit_tag
         // because bare `tag` is PDAL's stage-tag option and is consumed
         // by the pipeline parser before stages see it.
-        val root = optStr(o, "root").orElse(optStr(o, "filename")).get
+        val root = reqStr(o, "root", "filename")
         val mode = optStr(o, "mode").getOrElse("append")
         val tg = optStr(o, "commit_tag")
         mode match {
@@ -635,13 +650,6 @@ object PipelineBuilder {
     } catch {
       case e: BadOption =>
         throw new IllegalArgumentException(s"${spec.stageType}: ${e.getMessage}", e)
-      // the cause rides along: a NoSuchElementException thrown deep inside
-      // an eager writer action (not by an optStr(...).get) keeps its real
-      // stack trace instead of being masked as a missing option
-      case e: NoSuchElementException => throw new IllegalArgumentException(
-        s"${spec.stageType}: a required option is missing or has the wrong " +
-        s"JSON type (options provided: ${
-          if (o.isEmpty) "none" else o.keys.toSeq.sorted.mkString(", ")})", e)
     }
   }
 

@@ -24,6 +24,11 @@ object TestSpark {
     a.foreach { case (id, sj) => assert(b(id) == sj, s"span sequence mutated for $id") }
   }
 
+  /** Order-free row hashes: equal iff the two frames hold the same rows. */
+  def canon(df: DataFrame): Seq[String] =
+    df.select(md5(to_json(struct(df.columns.sorted.map(col): _*))))
+      .collect().map(_.getString(0)).sorted.toSeq
+
   /** Spark jobs `body` launches, counted under its own job group. */
   def jobsOf(body: => Any): Int = jobIdsOf(body).size
 

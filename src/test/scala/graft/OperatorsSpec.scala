@@ -493,11 +493,6 @@ class OperatorsSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prior)
   }
 
-  /** Order-free row hashes: equal iff the two frames hold the same rows. */
-  private def canon(df: DataFrame): Seq[String] =
-    df.select(md5(to_json(struct(df.columns.sorted.map(col): _*))))
-      .collect().map(_.getString(0)).sorted.toSeq
-
   test("order stages are hash-equal at 1, 7 and 64 input partitions") {
     val pts = docs.withColumn("edge_of_flight_line",
       when(col("order_key") % 7 === 3, 1).otherwise(0))

@@ -644,8 +644,8 @@ class PipelineSpecSuite extends AnyFunSuite {
       s"got: ${e1.getMessage}")
     // a missing connection, table or upper bound is named before load(),
     // and so are a kNN stage's k below 1, a malformed order-stage option
-    // and a number or boolean option of the wrong JSON type; none of them
-    // runs a Spark job
+    // a number or boolean option of the wrong JSON type, and a missing
+    // required option; none of them runs a Spark job
     val faux = """{"type":"readers.faux","mode":"uniform","count":60,"seed":13}"""
     for ((stages, option) <- Seq(
         """{"type":"readers.jdbc","table":"events"}""" -> "'connection'",
@@ -675,7 +675,17 @@ class PipelineSpecSuite extends AnyFunSuite {
           "filters.mortonorder: option 'reverse' must be true or false, got \"yes\"",
         s"""$faux, {"type":"filters.assign","value":"classification = 7",
           "where":"x > 0","where_merge":"maybe"}""" ->
-          "option 'where_merge' must be true or false, got \"maybe\"")) {
+          "option 'where_merge' must be true or false, got \"maybe\"",
+        s"""$faux, {"type":"filters.range"}""" ->
+          "filters.range: required option 'limits' is missing",
+        s"""$faux, {"type":"filters.groupby"}""" ->
+          "filters.groupby: required option 'dimension' is missing",
+        s"""$faux, {"type":"writers.text"}""" ->
+          "writers.text: required option 'filename' is missing",
+        s"""$faux, {"type":"filters.gpstimeconvert","in_time":"gws"}""" ->
+          "filters.gpstimeconvert: required option 'out_time' is missing",
+        """{"type":"readers.view"}""" ->
+          "readers.view: required option 'view' or 'table' is missing")) {
       val jobs = jobIdsOf {
         val e = intercept[IllegalArgumentException](PipelineBuilder.run(spark,
           s"""{"pipeline":[$stages,
